@@ -20,18 +20,24 @@ def pack(values: np.ndarray, width: int) -> bytes:
     n = values.size
     if n == 0 or width == 0:
         return b""
+    if width in (8, 16, 32, 64):
+        # the cast to a big-endian unit of exactly ``width`` bits keeps
+        # the low bits
+        return values.astype(f">u{width // 8}").tobytes()
     if width % 8 == 0:
         # byte-aligned fast path: take the low width/8 bytes of each
         # big-endian 8-byte representation
         nbytes = width // 8
         be = values.astype(">u8").view(np.uint8).reshape(n, 8)
         return be[:, 8 - nbytes :].tobytes()
-    # shift-free path (64-bit shifts are ~100x slow on this host): view each
-    # value as 8 big-endian bytes, unpack to a (n, 64) bit matrix, keep the
-    # low ``width`` bit columns, re-pack the ravel
-    be = values.astype(">u8").view(np.uint8).reshape(n, 8)
-    bits = np.unpackbits(be, axis=1)[:, 64 - width :]
-    return np.packbits(bits.reshape(-1)).tobytes()
+    # shift-free path (64-bit shifts are ~100x slow on this host): scale
+    # the low ``width`` bits to the top of the narrowest big-endian unit
+    # that holds them (the cast truncates the rest), unpack just those
+    # ``width`` bit columns and re-pack the ravel
+    nb = 1 if width < 8 else 2 if width < 16 else 4 if width < 32 else 8
+    top = (values * U64(1 << (8 * nb - width))).astype(f">u{nb}")
+    bits = np.unpackbits(top.view(np.uint8).reshape(n, nb), axis=1, count=width)
+    return np.packbits(bits).tobytes()
 
 
 def unpack(data: bytes | memoryview, n: int, width: int) -> np.ndarray:

@@ -24,15 +24,15 @@ import numpy as np
 
 from . import bitpack
 from .util import (
+    _POW2,
     _WIDTH_TO_CODE,
+    CLOSEST_ALIGNED_BITS,
     CLOSEST_FIXED_BITS,
     I64,
     U64,
     bits_required,
     closest_fixed_bits,
     decode_bit_width,
-    encode_bit_width,
-    percentile_bits,
     read_vslong,
     read_vulong,
     to_signed64,
@@ -153,254 +153,301 @@ def _write_fixed_delta(
     write_vslong(out, delta)
 
 
-def _percentiles_from_hist(hist: np.ndarray, n: int, ps: tuple[float, ...]) -> list[int]:
-    """Width (decoded) at each percentile, from a 32-bucket width-code hist."""
-    results = []
-    for p in ps:
-        discard = int(n * (1.0 - p))
-        width = 0
-        for code in range(31, -1, -1):
-            discard -= int(hist[code])
-            if discard < 0:
-                width = decode_bit_width(code)
-                break
-        results.append(width)
-    return results
+# Size given to a sub-encoding that does not apply to a chunk.
+_NOT_APPLICABLE = np.iinfo(np.int64).max
+# Chunk plans.  The first three are rows of the candidate-size matrix, so
+# argmin's first-minimum rule breaks ties as direct, then delta, then patched.
+_PLAN_DIRECT, _PLAN_DELTA, _PLAN_PATCHED, _PLAN_FIXED_DELTA, _PLAN_CONST = range(5)
+_PLAN_SUB = (_DIRECT, _DELTA, _PATCHED_BASE)  # header sub-encoding per plan
+# 1 - p for the percentiles the planner reads: 100p (DIRECT width, patch
+# width), 90p (DIRECT vs patched gap) and 95p (PATCHED_BASE data width),
+# computed like the reference's ``1.0 - p``
+_DISCARD_FRACTION = 1.0 - np.array([1.0, 0.9, 0.95])
+# DELTA payload width for a widest |delta| of b bits: width 1 is
+# unrepresentable (width code 0 means fixed delta), so it packs at 2
+_DELTA_FIXED_BITS = np.maximum(CLOSEST_FIXED_BITS, 2)
+_DELTA_ALIGNED_BITS = np.maximum(CLOSEST_ALIGNED_BITS, 2)
+_CODE = _WIDTH_TO_CODE.tolist()
+
+
+def _chunk_percentile_widths(bits: np.ndarray, cn: np.ndarray) -> np.ndarray:
+    """``percentile_bits`` of every chunk at 100p, 90p and 95p, shape (3, nch).
+
+    ``bits`` holds each value's significant bits; chunk ``k`` is the next
+    ``cn[k]`` values.  One bincount over ``chunk*65 + bits`` gives every
+    chunk's histogram and a reverse cumsum its tail counts.
+    ``percentile_bits`` discards the ``int(n*(1-p))`` widest values, so it
+    lands on the closest fixed width of the most bits whose tail count
+    exceeds that allowance (bucketing by width code first picks the same
+    width: the code is monotonic in bits).
+    """
+    nch = cn.size
+    key = bits + np.repeat(np.arange(0, 65 * nch, 65), cn)
+    hist = np.bincount(key, minlength=65 * nch).reshape(nch, 65)
+    tails = hist[:, ::-1].cumsum(axis=1)[:, ::-1]
+    discard = (_DISCARD_FRACTION[:, None] * cn).astype(np.int64)
+    return CLOSEST_FIXED_BITS[(tails > discard[:, :, None]).sum(axis=2) - 1]
 
 
 def _encode_variable(
     out: bytearray, seg: np.ndarray, signed: bool, aligned: bool
 ) -> None:
-    """Encode a segment with no long fixed-delta runs: chunk at 512, choose
+    """Encode a segment with no long fixed-delta runs: chunk at 512 and pick
     DIRECT / PATCHED_BASE / (monotonic) DELTA per chunk by computed size.
 
-    Per-chunk decisions reuse segment-wide precomputed arrays (zigzag,
-    bit-width codes, monotonicity prefix counts) so Python-level work per
-    chunk is O(1) numpy calls.
+    One batched plan covers every chunk, the short tail included: each
+    derived array (zigzag, bit widths, per-chunk min/max, base-reduced
+    values, width histograms) is computed once per segment and every
+    candidate size is a vector op over chunks.  Payloads are bit-packed
+    with one ``bitpack.pack`` call per width (:func:`_pack_pieces`); the
+    Python loop per chunk only writes header bytes and a slice of that
+    output.
     """
     n = seg.size
     if n == 0:
         return
-    zz = zigzag_encode(seg) if signed else seg.view(U64)
-    wcodes = _WIDTH_TO_CODE[CLOSEST_FIXED_BITS[bits_required(zz)]]
-    d = np.diff(seg)
-    # prefix counts for O(1) per-chunk monotonicity checks
-    cneg = np.zeros(d.size + 1, dtype=np.int64)
-    cpos = np.zeros(d.size + 1, dtype=np.int64)
-    if d.size:
-        np.cumsum(d < 0, out=cneg[1:])
-        np.cumsum(d > 0, out=cpos[1:])
-        dcodes = _WIDTH_TO_CODE[CLOSEST_FIXED_BITS[bits_required(np.abs(d).view(U64))]]
+    fit = CLOSEST_ALIGNED_BITS if aligned else CLOSEST_FIXED_BITS
+    starts = np.arange(0, n, MAX_SCOPE)
+    nch = starts.size
+    tail = n - (nch - 1) * MAX_SCOPE
+    cn = np.full(nch, MAX_SCOPE)
+    cn[-1] = tail
+    last = starts + (cn - 1)
+    u = seg.view(U64)
+    zz = zigzag_encode(seg) if signed else u
+    # d[i] = v[i+1] - v[i], wrapping like the reference's long; chunk k
+    # owns d[start_k .. last_k - 1], d[last_k] leads into the next chunk
+    d = np.empty(n, dtype=I64)
+    np.subtract(seg[1:], seg[:-1], out=d[:-1])
+    d[-1] = 0
+    d0 = d[starts]
+    absd = np.abs(d).view(U64)
+    vmin = np.minimum.reduceat(seg, starts)
+    vmax = np.maximum.reduceat(seg, starts)
+    br = u - np.repeat(vmin.view(U64), cn)  # base-reduced, for PATCHED_BASE
+
+    # a DELTA payload holds |d| from the chunk's second delta to its
+    # second-to-last, so the widest of those sets its width
+    absd[starts] = 0  # the first delta is a varint in the header
+    absd[last] = 0
+    # every bit length in one call: values, base-reduced values, then per
+    # chunk the varint payloads of the first value and the first delta,
+    # the widest payload delta, the frame-of-reference span and the base
+    # magnitude
+    bits = bits_required(
+        np.concatenate(
+            (
+                zz,
+                br,
+                zz[starts],
+                zigzag_encode(d0),
+                np.maximum.reduceat(absd, starts),
+                vmax.view(U64) - vmin.view(U64),
+                np.abs(vmin).view(U64),
+            )
+        )
+    )
+    need = bits[n : 2 * n]
+    varint_bits = bits[2 * n : 2 * n + 2 * nch]
+    dmax_bits, span_bits, base_bits = bits[2 * n + 2 * nch :].reshape(3, nch)
+
+    widths = _chunk_percentile_widths(bits[: 2 * n], np.concatenate((cn, cn)))
+    bits100, bits90 = widths[0, :nch], widths[1, :nch]
+    br100, br95 = widths[0, nch:], widths[2, nch:]
+    direct_w = fit[bits100]
+    sizes = np.empty((3, nch), dtype=np.int64)
+    sizes[_PLAN_DIRECT] = (cn * direct_w + 7) // 8 + 2
+
+    # DELTA needs a monotonic chunk.  Wire format stores |delta| after the
+    # first delta and the decoder takes the common sign from the first
+    # delta, so require a nonzero, sign-consistent first delta.  Min and
+    # max of the owned deltas (d[last] replaced by d0, also owned) tell
+    # constant, monotonic and fixed-delta chunks apart.
+    owned = d.copy()
+    owned[last] = d0
+    dmin = np.minimum.reduceat(owned, starts)
+    dmax = np.maximum.reduceat(owned, starts)
+    fixed = dmin == dmax
+    flat = d0 == 0
+    const = fixed & flat
+    mono = ((dmin >= 0) | (dmax <= 0)) & ~flat
+    if tail < MIN_REPEAT:
+        const[-1] = mono[-1] = False
+    delta_w = (_DELTA_ALIGNED_BITS if aligned else _DELTA_FIXED_BITS)[dmax_bits]
+    head = np.maximum((varint_bits + 6) // 7, 1).reshape(2, nch)
+    size_delta = head.sum(axis=0) + 2 + ~fixed * (((cn - 2) * delta_w + 7) // 8)
+    size_delta[~mono] = _NOT_APPLICABLE
+    sizes[_PLAN_DELTA] = size_delta
+
+    # PATCHED_BASE doubles as plain frame-of-reference when a chunk has no
+    # outliers (zero patch entries): base = min, data = value - min.  The
+    # reference only tries PATCHED on a 90p/100p gap; we also try it
+    # whenever the FoR span is narrower than the direct width, which
+    # strictly improves on the reference's size for clustered data
+    # (e.g. time-ordered warc_ts with jitter).  Mirrors preparePatchedBlob
+    # (RunLengthIntegerWriterV2.java:571-668); the base must be below
+    # 2^56 in magnitude.
+    try_patched = ((bits100 - bits90 > 1) | (fit[span_bits] < direct_w)) & (
+        base_bits <= 56
+    )
+    data_w = fit[br95]
+    ppos = np.flatnonzero(need > np.repeat(data_w, cn))
+    if ppos.size == 0:
+        # pure FoR everywhere: every value fits the full width.  The spec
+        # (and the reference decoder) require pl >= 1, so the chunk carries
+        # one no-op patch entry (gap 0, patch 0: one byte at entry width 2)
+        # that ORs nothing into data[0]; this keeps the stream decodable by
+        # ANY conformant ORC reader (verified via the orcfile cross-read).
+        data_w = fit[br100]
+        patch_w = gap_w = n_entries = np.ones(nch, dtype=np.int64)
+        entry_w = patch_w + 1
     else:
-        dcodes = cneg[:0]
+        pc = ppos // MAX_SCOPE
+        npatch = np.bincount(pc, minlength=nch)
+        pure = npatch == 0
+        patch_w = CLOSEST_FIXED_BITS[np.maximum(br100 - data_w, 0)]
+        patch_w[pure] = 1
+        try_patched &= pure | (
+            (npatch <= 0.06 * cn + 1) & (data_w + patch_w <= 64) & (patch_w <= 56)
+        )
+        data_w[pure] = fit[br100[pure]]
+        # patch entries (gap, bits above data_w); the first gap counts from
+        # the chunk start, a gap over 255 is split with (255, 0) fillers
+        keep = try_patched[pc]
+        ppos, pc = ppos[keep], pc[keep]
+        lp = ppos - starts[pc]
+        first = np.ones(pc.size, dtype=bool)
+        first[1:] = pc[1:] != pc[:-1]
+        gap = lp.copy()
+        gap[1:] -= lp[:-1]
+        gap[first] = lp[first]
+        fillers = np.maximum(gap - 1, 0) // 255
+        gap -= 255 * fillers
+        groups = np.flatnonzero(first)
+        n_entries = np.ones(nch, dtype=np.int64)
+        gap_w = np.ones(nch, dtype=np.int64)
+        if groups.size:
+            n_entries[pc[groups]] = np.add.reduceat(fillers + 1, groups)
+            max_gap = np.maximum.reduceat(np.where(fillers > 0, 255, gap), groups)
+            gap_w[pc[groups]] = CLOSEST_FIXED_BITS[bits_required(max_gap)]
+        try_patched &= n_entries <= 31
+        # reference quirk: the combined entry width is a closest fixed
+        # width (gap_w <= 8 and patch_w <= 56 keep it <= 64)
+        entry_w = CLOSEST_FIXED_BITS[gap_w + patch_w]
+    size_patched = (
+        4 + (base_bits + 8) // 8 + (cn * data_w + 7) // 8 + (n_entries * entry_w + 7) // 8
+    )
+    sizes[_PLAN_PATCHED] = np.where(try_patched, size_patched, _NOT_APPLICABLE)
 
-    for start in range(0, n, MAX_SCOPE):
-        end = min(start + MAX_SCOPE, n)
-        cn = end - start
-        v = seg[start:end]
-        zzc = zz[start:end]
+    plan = sizes.argmin(axis=0)
+    width = np.choose(plan, (direct_w, delta_w, data_w)).tolist()
+    plan[(plan == _PLAN_DELTA) & fixed] = _PLAN_FIXED_DELTA
+    plan[const] = _PLAN_CONST
+    plans = plan.tolist()
 
-        hist = np.bincount(wcodes[start:end], minlength=32)
-        bits100, bits90 = _percentiles_from_hist(hist, cn, (1.0, 0.9))
-        direct_width = closest_fixed_bits(bits100, aligned)
-        best_size = 2 + bitpack.packed_size(cn, direct_width)
-        best_mode = "direct"
+    # --- payloads: one bit-pack per width --------------------------------
+    cns = [MAX_SCOPE] * (nch - 1) + [tail]
+    pieces = []  # (source, start, count, width)
+    for k, p in enumerate(plans):
+        if p == _PLAN_DIRECT:
+            pieces.append((zz, k * MAX_SCOPE, cns[k], width[k]))
+        elif p == _PLAN_DELTA:  # |delta| from the chunk's second delta
+            pieces.append((absd, k * MAX_SCOPE + 1, cns[k] - 2, width[k]))
+        elif p == _PLAN_PATCHED:  # pack keeps the low data_w bits
+            pieces.append((br, k * MAX_SCOPE, cns[k], width[k]))
+    ndata = len(pieces)
+    with_entries: list[int] = []
+    if ppos.size and (sel := plan[pc] == _PLAN_PATCHED).any():
+        # entry = (gap << patch_w) | patch, each patch's own entry after its
+        # fillers; a multiply stands in for the (slow) 64-bit shift
+        e_pc, reps = pc[sel], fillers[sel] + 1
+        own = np.cumsum(reps) - 1
+        egap = np.full(int(own[-1]) + 1, 255, dtype=U64)
+        egap[own] = gap[sel]
+        epv = np.zeros(egap.size, dtype=U64)
+        epv[own] = br[ppos[sel]] // _POW2[data_w[e_pc]]
+        ent = egap * _POW2[np.repeat(patch_w[e_pc], reps)] + epv
+        kp = np.unique(e_pc)
+        ne = n_entries[kp]
+        with_entries = kp.tolist()
+        pieces += zip(
+            [ent] * kp.size,
+            (np.cumsum(ne) - ne).tolist(),
+            ne.tolist(),
+            entry_w[kp].tolist(),
+        )
+    packed = _pack_pieces(pieces)
+    data = iter(packed[:ndata])
+    entries = dict(zip(with_entries, packed[ndata:]))
 
-        # monotonic -> DELTA.  Wire format stores |delta| after the first
-        # delta and the decoder takes the common sign from the first delta,
-        # so require a nonzero, sign-consistent first delta.
-        delta_payload = None
-        if cn >= MIN_REPEAT:
-            nneg = int(cneg[end - 1] - cneg[start])
-            npos = int(cpos[end - 1] - cpos[start])
-            d0 = int(d[start])
-            dchunk = d[start : end - 1]
-            if nneg == 0 and npos == 0:
-                # all deltas zero inside a variable segment (short const run
-                # covering the whole chunk)
-                if cn <= MAX_SHORT_REPEAT_LENGTH:
-                    _write_short_repeat(out, int(v[0]), cn, signed)
-                else:
-                    _write_fixed_delta(out, int(v[0]), 0, cn, signed)
-                continue
-            if (d0 > 0 and nneg == 0) or (d0 < 0 and npos == 0):
-                if npos + nneg == cn - 1 and np.all(dchunk == d0):
-                    # constant nonzero delta
-                    dsize = (
-                        2 + _varint_len(int(v[0]), signed) + _varint_len_signed(d0)
-                    )
-                    if dsize < best_size:
-                        best_mode, best_size = "fixed_delta", dsize
-                else:
-                    dhist = np.bincount(dcodes[start + 1 : end - 1], minlength=32)
-                    (dbits,) = _percentiles_from_hist(dhist, cn - 2, (1.0,))
-                    dw = closest_fixed_bits(dbits, aligned) if cn > 2 else 0
-                    if dw == 1:  # width 1 unrepresentable (code 0 = fixed)
-                        dw = 2
-                    dsize = (
-                        2
-                        + _varint_len(int(v[0]), signed)
-                        + _varint_len_signed(d0)
-                        + bitpack.packed_size(max(0, cn - 2), dw)
-                    )
-                    if dsize < best_size:
-                        best_mode, best_size = "delta", dsize
-                        delta_payload = (int(v[0]), dchunk, dw)
-
-        # PATCHED_BASE doubles as plain frame-of-reference when the chunk has
-        # no outliers (zero patch entries): base = min, data = value - min.
-        # The reference only tries PATCHED on a 90p/100p gap; we also try it
-        # whenever the FoR span is narrower than the direct width, which
-        # strictly improves on the reference's size for clustered data
-        # (e.g. time-ordered warc_ts with jitter).
-        patched = None
-        vmin, vmax = int(v.min()), int(v.max())
-        span = (vmax - vmin) & ((1 << 64) - 1)
-        span_bits = closest_fixed_bits(min(64, max(1, span.bit_length())), aligned)
-        if bits100 - bits90 > 1 or span_bits < direct_width:
-            patched = _prepare_patched(v, vmin, aligned)
-            if patched is not None and patched["size"] < best_size:
-                best_mode, best_size = "patched", patched["size"]
-
-        if best_mode == "direct":
-            _write_direct(out, zzc, cn, direct_width)
-        elif best_mode == "fixed_delta":
-            _write_fixed_delta(out, int(v[0]), int(d[start]), cn, signed)
-        elif best_mode == "delta":
-            first, dchunk, dw = delta_payload
-            _write_var_delta(out, first, dchunk, dw, cn, signed)
+    # --- headers and payload slices ----------------------------------------
+    if _PLAN_PATCHED in plans:
+        base_bytes = ((base_bits + 8) // 8).tolist()
+        patch_wl, gap_wl, n_entl = patch_w.tolist(), gap_w.tolist(), n_entries.tolist()
+        vmins = vmin.tolist()
+    for k, (p, c, v0, dv) in enumerate(
+        zip(plans, cns, seg[starts].tolist(), d0.tolist())
+    ):
+        if p <= _PLAN_PATCHED:
+            h = _PLAN_SUB[p] << 6 | _CODE[width[k]] << 1 | (c - 1) >> 8
+            out += bytes((h, (c - 1) & 0xFF))
+        if p == _PLAN_DIRECT:
+            out += next(data)
+        elif p == _PLAN_PATCHED:
+            nbase, base = base_bytes[k], vmins[k]
+            out.append((nbase - 1) << 5 | _CODE[patch_wl[k]])
+            out.append((gap_wl[k] - 1) << 5 | n_entl[k])
+            # base: magnitude with sign in the MSB of the big-endian field
+            field = -base | (1 << (8 * nbase - 1)) if base < 0 else base
+            out += field.to_bytes(nbase, "big")
+            out += next(data)
+            # a pure FoR chunk's single no-op entry packs to one zero byte
+            out += entries.get(k, b"\x00")
+        elif p == _PLAN_DELTA:
+            if signed:
+                write_vslong(out, v0)
+            else:
+                write_vulong(out, v0)
+            write_vslong(out, dv)
+            out += next(data)
+        elif p == _PLAN_FIXED_DELTA:
+            _write_fixed_delta(out, v0, dv, c, signed)
+        elif c <= MAX_SHORT_REPEAT_LENGTH:
+            _write_short_repeat(out, v0, c, signed)
         else:
-            _write_patched(out, patched, cn)
+            _write_fixed_delta(out, v0, 0, c, signed)
 
 
-def _varint_len(value: int, signed: bool) -> int:
-    u = ((value << 1) ^ (value >> 63)) & ((1 << 64) - 1) if signed else value & (
-        (1 << 64) - 1
-    )
-    return max(1, (u.bit_length() + 6) // 7)
+def _pack_pieces(pieces: list) -> list:
+    """Bit-pack every ``(source, start, count, width)`` piece, with one
+    ``bitpack.pack`` call per distinct width.
 
-
-def _varint_len_signed(value: int) -> int:
-    return _varint_len(value, True)
-
-
-def _write_direct(out: bytearray, zz: np.ndarray, n: int, width: int) -> None:
-    out.append((_DIRECT << 6) | (encode_bit_width(width) << 1) | ((n - 1) >> 8))
-    out.append((n - 1) & 0xFF)
-    out.extend(bitpack.pack(zz, width))
-
-
-def _write_var_delta(
-    out: bytearray, first: int, d: np.ndarray, dw: int, n: int, signed: bool
-) -> None:
-    width_code = encode_bit_width(dw) if dw else 0
-    out.append((_DELTA << 6) | (width_code << 1) | ((n - 1) >> 8))
-    out.append((n - 1) & 0xFF)
-    if signed:
-        write_vslong(out, first)
-    else:
-        write_vulong(out, first)
-    write_vslong(out, int(d[0]))
-    if n > 2 and dw:
-        out.extend(bitpack.pack(np.abs(d[1:]).view(U64), dw))
-
-
-def _prepare_patched(v: np.ndarray, vmin: int, aligned: bool) -> dict | None:
-    """Mirror of preparePatchedBlob (RunLengthIntegerWriterV2.java:571-668),
-    extended with a zero-patch mode (pure frame-of-reference)."""
-    if abs(vmin) >= BASE_VALUE_LIMIT:
-        return None
-    br = (v.view(U64) - np.uint64(vmin & ((1 << 64) - 1))).astype(U64)
-    bits95 = percentile_bits(br, 0.95)
-    bits100 = percentile_bits(br, 1.0)
-    data_width = closest_fixed_bits(bits95, aligned)
-
-    need = bits_required(br)
-    patch_pos = np.flatnonzero(need > data_width)
-    if patch_pos.size == 0:
-        # pure FoR: all values fit data_width at bits100.  The spec (and
-        # the reference decoder) require pl >= 1, so emit one no-op patch
-        # entry (gap 0, patch 0 — ORs nothing into data[0]); this keeps
-        # the stream decodable by ANY conformant ORC reader (verified via
-        # the orcfile cross-read) at a one-byte cost.
-        data_width = closest_fixed_bits(bits100, aligned)
-        entries: list[tuple[int, int]] = [(0, 0)]
-        patch_width = 1
-        gap_width = 1
-        entry_width = closest_fixed_bits(2)
-    else:
-        if patch_pos.size > 0.06 * v.size + 1:
-            return None
-        patch_width = closest_fixed_bits(bits100 - data_width)
-        if data_width + patch_width > 64 or patch_width > 56:
-            return None
-        patch_vals = (br[patch_pos] >> U64(data_width)).astype(U64)
-
-        # gaps between patches; split gaps > 255 with (255, 0) filler entries
-        gaps = np.diff(np.concatenate(([0], patch_pos))).astype(np.int64)
-        gaps[0] = int(patch_pos[0])
-        entries = []
-        for g, pv in zip(gaps.tolist(), patch_vals.tolist()):
-            while g > 255:
-                entries.append((255, 0))
-                g -= 255
-            entries.append((g, pv))
-        if len(entries) > 31:
-            return None
-
-        max_gap = max(e[0] for e in entries)
-        gap_width = closest_fixed_bits(max(1, int(max_gap).bit_length()))
-        if gap_width > 8:
-            return None
-        # reference quirk: combined entry width uses closest fixed bits
-        entry_width = closest_fixed_bits(gap_width + patch_width)
-        if entry_width > 64:
-            return None
-
-    base_mag = abs(vmin)
-    base_bits = base_mag.bit_length() + 1  # +1 sign bit
-    base_bytes = min(8, max(1, (base_bits + 7) // 8))
-
-    size = (
-        4
-        + base_bytes
-        + bitpack.packed_size(v.size, data_width)
-        + bitpack.packed_size(len(entries), entry_width)
-    )
-    return {
-        "size": size,
-        "vmin": vmin,
-        "br": br,
-        "data_width": data_width,
-        "patch_width": patch_width,
-        "gap_width": gap_width,
-        "entry_width": entry_width,
-        "entries": entries,
-        "base_bytes": base_bytes,
-    }
-
-
-def _write_patched(out: bytearray, p: dict, n: int) -> None:
-    dw_code = encode_bit_width(p["data_width"])
-    out.append((_PATCHED_BASE << 6) | (dw_code << 1) | ((n - 1) >> 8))
-    out.append((n - 1) & 0xFF)
-    out.append(((p["base_bytes"] - 1) << 5) | encode_bit_width(p["patch_width"]))
-    out.append(((p["gap_width"] - 1) << 5) | len(p["entries"]))
-    # base: magnitude with sign in the MSB of the big-endian field
-    vmin = p["vmin"]
-    base_field = abs(vmin)
-    if vmin < 0:
-        base_field |= 1 << (8 * p["base_bytes"] - 1)
-    out.extend(base_field.to_bytes(p["base_bytes"], "big"))
-    # data: base-reduced values, truncated to data_width (patches hold the rest)
-    mask = U64((1 << p["data_width"]) - 1) if p["data_width"] < 64 else U64(
-        0xFFFFFFFFFFFFFFFF
-    )
-    out.extend(bitpack.pack(p["br"] & mask, p["data_width"]))
-    entries = np.array(
-        [(g << p["patch_width"]) | pv for g, pv in p["entries"]], dtype=U64
-    )
-    out.extend(bitpack.pack(entries, p["entry_width"]))
+    Pieces of one width are laid out back to back, each zero-padded to a
+    multiple of 8 values (8*w bits is whole bytes at any width w), so a
+    piece starts on a byte boundary of its group's output and its first
+    ``ceil(count*w/8)`` bytes are exactly what packing it alone gives: its
+    bits, then zero bits.  A full 512-value chunk packs to 64*w bytes.
+    """
+    groups: dict[int, list[int]] = {}
+    for i, piece in enumerate(pieces):
+        groups.setdefault(piece[3], []).append(i)
+    out: list = [None] * len(pieces)
+    for w, idx in groups.items():
+        if len(idx) == 1:
+            src, s, c, _ = pieces[idx[0]]
+            out[idx[0]] = bitpack.pack(src[s : s + c], w)
+            continue
+        offs = [0]
+        for i in idx:
+            offs.append(offs[-1] + (pieces[i][2] + 7) // 8 * 8)
+        buf = np.zeros(offs[-1], dtype=U64)
+        for i, o in zip(idx, offs):
+            src, s, c, _ = pieces[i]
+            buf[o : o + c] = src[s : s + c]
+        blob = memoryview(bitpack.pack(buf, w))
+        for i, o in zip(idx, offs):
+            out[i] = blob[o * w // 8 : o * w // 8 + (pieces[i][2] * w + 7) // 8]
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -45,25 +45,27 @@ def zigzag_decode(z: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 _POW2 = (U64(1) << np.arange(64, dtype=U64)).astype(U64)  # 1,2,4,...,2^63
+# _BIT_FLOOR[b]: smallest value with b significant bits (0 for b = 0)
+_BIT_FLOOR = np.concatenate(([U64(0)], _POW2))
+_FLOAT_EXACT = U64(1 << 53)  # every integer below this is exact in float64
 
 
 def bits_required(u: np.ndarray) -> np.ndarray:
     """Per-value number of significant bits of a uint64 array (0 for 0).
 
-    frexp on the float64 image gives the exponent in one vector op;
-    float rounding can overshoot by 1 near power-of-2 boundaries (and for
-    values near 2^64), so correct with an exact table compare.  Avoids
+    frexp on the float64 image gives the exponent in one vector op.  The
+    image is exact below 2^53; above, rounding can overshoot by 1 near
+    power-of-2 boundaries (values near 2^64 round to 2^64), so those few
+    values are corrected with an exact table compare.  Avoids
     ``searchsorted``, which runs at ~1µs/element on this host.
     """
     u = np.ascontiguousarray(u, dtype=U64)
-    if u.size == 0:
-        return np.zeros(0, dtype=np.int64)
     _, e = np.frexp(u.astype(np.float64))
     bits = e.astype(np.int64)
-    np.clip(bits, 0, 64, out=bits)
-    # exact correction: if u < 2^(bits-1) the float image rounded up
-    over = u < _POW2[np.maximum(bits, 1) - 1]
-    bits[over & (bits > 0)] -= 1
+    if u.size and u.max() >= _FLOAT_EXACT:
+        big = np.flatnonzero(u >= _FLOAT_EXACT)
+        b = np.minimum(bits[big], 64)
+        bits[big] = b - (u[big] < _BIT_FLOOR[b])
     return bits
 
 
