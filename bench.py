@@ -2,7 +2,8 @@
 
 Runs the headline workload at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
-line: {"metric", "value", "unit", "queries", "sf", ...extras}.
+line: {"metric", "value", "unit", "sf", ...headline extras} (the full
+record, per-query timings included, goes to BENCH_RESULT.json).
 
 Headline = the north-rule metric: encode throughput (GB/s of raw input
 bytes) over a >=1 GiB synthetic Common-Crawl-style pages table, plus
@@ -377,6 +378,8 @@ _WINDOW_FIELDS = [
     "ref_gbps_xl",
     "decode_neardata_gbps_xl",
     "ref_decode_gbps_xl",
+    "decode_neardata_gbps_xxl",
+    "ref_decode_gbps_xxl",
     "decode_pool_gbps",
     "encode_pool_gbps",
 ]
@@ -591,6 +594,51 @@ def window_medians(current: dict, bench_dir: str = "BENCH") -> dict:
             out[f"{field}_range"] = [round(min(vals), 4), round(max(vals), 4)]
             out[f"{field}_windows"] = len(vals)
     return out
+
+
+# Keys of the compact stdout line, most important first: when the line
+# would outgrow COMPACT_LINE_MAX, keys drop from the end of this list.
+_COMPACT_KEYS = [
+    "metric", "value", "unit", "sf", "ratio_protocol",
+    "headline_strategy", "headline_vs_reference_wall",
+    "headline_vs_reference_cpu",
+    "pyscan_vs_reference_wall_xl_median",
+    "pyscan_vs_reference_wall_xl_range",
+    "pyscan_vs_reference_user_cpu_xl_median",
+    "pyscan_vs_reference_user_cpu_xl_range",
+    "decode_vs_reference_wall_xl_median",
+    "decode_vs_reference_wall_xl_range",
+    "decode_vs_reference_wall_xxl_median",
+    "decode_vs_reference_wall_xxl_range",
+    "size_vs_reference_median",
+    "size_vs_reference", "size_vs_reference_xl",
+    "decode_vs_reference_wall_xl", "decode_vs_reference_wall_xxl",
+    "decode_vs_reference_wall_sf", "encode_gbps_pyscan_xl",
+    "ref_gbps_xl", "decode_neardata_gbps_xl", "ref_decode_gbps_xl",
+    "decode_pool_gbps", "encode_pool_gbps", "host_canary_s",
+    "windows_considered", "windows_clean",
+]
+# The driver parses the LAST stdout line from a finite tail capture
+# (2000 bytes): round 3 recorded parsed:null from a mid-record cut, rounds
+# 4 and 5 because the line (per-query timings included) outgrew it.
+COMPACT_LINE_MAX = 1500
+
+
+def compact_line(result: dict) -> str:
+    """The final stdout line: headline medians and ranges, size, decode,
+    canaries and a pointer to the full record in BENCH_RESULT.json.
+
+    Per-query timings never ride along, and the line stays within
+    COMPACT_LINE_MAX characters by dropping the least important keys.
+    """
+    compact = {k: result[k] for k in _COMPACT_KEYS if k in result}
+    compact["full_record"] = "BENCH_RESULT.json"
+    droppable = [k for k in reversed(_COMPACT_KEYS) if k in compact]
+    line = json.dumps(compact)
+    while len(line) > COMPACT_LINE_MAX and droppable:
+        del compact[droppable.pop(0)]
+        line = json.dumps(compact)
+    return line
 
 
 def main() -> None:
@@ -1262,42 +1310,13 @@ def main() -> None:
     )
     result.update(window_medians(result))
     line = json.dumps(result)
-    # The driver parses the LAST stdout line AND its tail-capture window
-    # is finite: round 3 recorded parsed:null from a mid-record cut,
-    # round 4 again because the full record outgrew the capture.  So the
-    # FULL record goes to BENCH_RESULT.json, and the final stdout line is
-    # a COMPACT (<=2 KB) summary: headline medians + ranges, size,
-    # decode, canaries, and a pointer to the full record — preceded by a
-    # newline so a progress-bar \r remnant can't prepend garbage.
+    # The FULL record goes to BENCH_RESULT.json; the final stdout line is
+    # the compact summary (compact_line), preceded by a newline so a
+    # progress-bar \r remnant can't prepend garbage.
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "BENCH_RESULT.json"), "w") as f:
         f.write(line + "\n")
-    compact_keys = [
-        "metric", "value", "unit", "sf", "ratio_protocol",
-        "headline_strategy", "headline_vs_reference_wall",
-        "headline_vs_reference_cpu", "size_vs_reference",
-        "size_vs_reference_xl", "decode_vs_reference_wall_xl",
-        "decode_vs_reference_wall_xxl", "decode_vs_reference_wall_xxl_median",
-        "decode_vs_reference_wall_xxl_range",
-        "decode_vs_reference_wall_sf", "encode_gbps_pyscan_xl",
-        "ref_gbps_xl", "decode_neardata_gbps_xl", "ref_decode_gbps_xl",
-        "decode_pool_gbps", "encode_pool_gbps", "host_canary_s",
-        "windows_considered", "windows_clean",
-        "pyscan_vs_reference_wall_xl_median",
-        "pyscan_vs_reference_wall_xl_range",
-        "pyscan_vs_reference_user_cpu_xl_median",
-        "pyscan_vs_reference_user_cpu_xl_range",
-        "decode_vs_reference_wall_xl_median",
-        "decode_vs_reference_wall_xl_range",
-        "size_vs_reference_median",
-    ]
-    compact = {k: result[k] for k in compact_keys if k in result}
-    compact["queries"] = result["queries"]
-    compact["full_record"] = "BENCH_RESULT.json"
-    cline = json.dumps(compact)
-    if len(cline) > 2000:  # hard cap: drop per-query timings first
-        compact["queries"] = "see BENCH_RESULT.json"
-        cline = json.dumps(compact)
+    cline = compact_line(result)
     sys.stdout.write("\n" + cline + "\n")
     sys.stdout.flush()
 

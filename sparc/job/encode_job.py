@@ -721,7 +721,11 @@ def run_encode_units(
                     units_df["idx"] == groups["__sparc_done_group"],
                     "left_anti",
                 )
-                n_units = None  # anti-join changed the todo count
+                # the anti-join changed the todo count, and the units left
+                # sit in the LocalRelation slices of the tasks that died:
+                # only the round-robin exchange spreads them over the cores
+                n_units = None
+                balanced = False
     sink_dir = out_dir
 
     def encode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -811,10 +815,7 @@ def run_encode_units(
     # measured ~0.4 s at bench scale.  The unit plan itself never lands
     # on the driver either way.
     n_units_todo = units_df.count() if n_units is None else n_units
-    if balanced and not (
-        n_partitions
-        and n_partitions != spark.sparkContext.defaultParallelism
-    ):
+    if balanced and not n_partitions:
         # caller guarantees the unit rows are interleaved so that the
         # LocalRelation's contiguous slices balance (run_encode_paths
         # does this for driver-side plans, same trick as the files-sink

@@ -209,3 +209,49 @@ def test_pool_reps_keeps_measuring_while_walls_improve():
     # a storm-decay series (each rep faster) must not stop at 3 reps
     assert len(walls) >= 5
     assert min(walls) < 0.08
+
+
+def _full_record() -> dict:
+    """A record with every compact key at realistic widths, a long canary
+    list and the per-query timings that used to overflow the line."""
+    rec = {k: 1.234567 for k in bench._COMPACT_KEYS}
+    for k in bench._COMPACT_KEYS:
+        if k.endswith("_range"):
+            rec[k] = [0.987654, 1.234567]
+    rec.update(
+        metric="pages_encode_gbps", unit="GB/s", headline_strategy="pyscan",
+        ratio_protocol="interleaved-a-b-min-of-3-xl-3x-xxl-9x",
+        host_canary_s=[1.234567] * 40,
+        queries={f"query_{i:02d}_with_a_long_name_s": 12.345678 for i in range(42)},
+    )
+    return rec
+
+
+def test_compact_line_fits_the_driver_tail():
+    """The driver keeps the last 2000 bytes of stdout; the compact line and
+    its two newlines must fit with room to spare, and still parse."""
+    import json
+
+    line = bench.compact_line(_full_record())
+    assert len("\n" + line + "\n") <= 1900
+    parsed = json.loads(line)
+    assert "queries" not in parsed
+    assert parsed["metric"] == "pages_encode_gbps"
+    assert parsed["full_record"] == "BENCH_RESULT.json"
+    # the headline medians outrank the long tail that gets dropped
+    assert "pyscan_vs_reference_wall_xl_median" in parsed
+
+
+def test_compact_line_keeps_every_key_when_short():
+    import json
+
+    rec = {"metric": "m", "value": 1.0, "unit": "GB/s", "queries": {"q": 1.0}}
+    assert json.loads(bench.compact_line(rec)) == {
+        "metric": "m", "value": 1.0, "unit": "GB/s",
+        "full_record": "BENCH_RESULT.json",
+    }
+
+
+def test_xxl_decode_throughputs_have_window_medians():
+    assert "decode_neardata_gbps_xxl" in bench._WINDOW_FIELDS
+    assert "ref_decode_gbps_xxl" in bench._WINDOW_FIELDS

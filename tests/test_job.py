@@ -428,6 +428,69 @@ def test_pyscan_resume_is_plan_side(spark, pages_path, tmp_path, monkeypatch):
     assert len(glob.glob(os.path.join(out, "stripes", "*.sparc"))) == n_stripes
 
 
+def _spy_encode_plans(spark, monkeypatch) -> list[str]:
+    """Record the physical plan of every DataFrame handed to mapInArrow
+    (the encode's unit plan)."""
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+    plans: list[str] = []
+    real = DataFrame.mapInArrow
+
+    def spy(self, *a, **k):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(DataFrame, "mapInArrow", spy)
+    return plans
+
+
+def test_pyscan_resume_after_partial_failure_rebalances(
+    spark, tmp_path, monkeypatch
+):
+    """A resumed pyscan plan must leave the balanced (exchange-free) path:
+    the units still to do sit in the LocalRelation slices of the tasks
+    that died, so without the round-robin exchange they would run on a
+    few cores.  The resumed run still completes every stripe."""
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "pages.parquet")
+    pq.write_table(pages.generate(N_ROWS, seed=42), src, row_group_size=1000)
+    out = str(tmp_path / "streams")
+    plans = _spy_encode_plans(spark, monkeypatch)
+    encode_job.run_encode_paths(
+        spark, src, out, target_rows_per_stripe=1500, fingerprint="pages@42",
+    )
+    all_stripes = set(encode_job.completed_stripes(spark, out))
+    part_files = sorted(glob.glob(os.path.join(out, "part-*")), key=os.path.getsize)
+    os.remove(part_files[-1])  # a lost task: its footers never committed
+    done_before = set(encode_job.completed_stripes(spark, out))
+    assert set() < done_before < all_stripes
+    res = encode_job.run_encode_paths(
+        spark, src, out, target_rows_per_stripe=1500, fingerprint="pages@42",
+    )
+    assert res["skipped"] == len(done_before)
+    assert set(encode_job.completed_stripes(spark, out)) == all_stripes
+    # the resumed plan also broadcasts the done groups; the rebalancing
+    # exchange is the repartition(n) one
+    assert len(plans) == 2
+    assert "REPARTITION_BY_NUM" not in plans[0]  # fresh run: balanced
+    assert "REPARTITION_BY_NUM" in plans[1]
+
+
+def test_pyscan_explicit_n_partitions_uses_exchange(
+    spark, pages_path, tmp_path, monkeypatch
+):
+    """Any explicit n_partitions opts out of the balanced path, even one
+    equal to the default parallelism: the caller asked for that many
+    tasks, which only the exchange guarantees."""
+    plans = _spy_encode_plans(spark, monkeypatch)
+    encode_job.run_encode_paths(
+        spark, pages_path, str(tmp_path / "streams"),
+        target_rows_per_stripe=1500, fingerprint="pages@42", resume=False,
+        n_partitions=spark.sparkContext.defaultParallelism,
+    )
+    assert len(plans) == 1 and "REPARTITION_BY_NUM" in plans[0]
+
+
 def test_distributed_unit_planning_many_files(spark, tmp_path, monkeypatch):
     """Round-3 item #5: unit planning distributes the footer-metadata
     reads.  With 10^3 files the driver opens ZERO parquet files (poisoned

@@ -106,7 +106,8 @@ def _chunk_crossing(kind: str, n: int) -> np.ndarray:
         k = int(rng.integers(0, 4))
         m = int(rng.integers(2, 300))
         if k == 0:
-            parts.append(int(rng.integers(-1000, 1000)) + np.arange(m) * int(rng.integers(-3, 4)))
+            base, step = int(rng.integers(-1000, 1000)), int(rng.integers(-3, 4))
+            parts.append(base + np.arange(m) * step)
         elif k == 1:
             parts.append(np.full(m, int(rng.integers(-5, 5))))
         elif k == 2:
@@ -128,7 +129,8 @@ def _cases():
         for n in CHUNK_LENGTHS:
             v = _chunk_crossing(kind, n)
             for signed, aligned in FLAGS:
-                yield f"chunks/{kind}/{n}/{int(signed)}{int(aligned)}", v, signed, aligned
+                name = f"chunks/{kind}/{n}/{int(signed)}{int(aligned)}"
+                yield name, v, signed, aligned
 
 
 def _lineitem_cases():
