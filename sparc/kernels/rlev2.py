@@ -307,12 +307,16 @@ def _encode_variable(
         pure = npatch == 0
         patch_w = CLOSEST_FIXED_BITS[np.maximum(br100 - data_w, 0)]
         patch_w[pure] = 1
-        try_patched &= pure | (
-            (npatch <= 0.06 * cn + 1) & (data_w + patch_w <= 64) & (patch_w <= 56)
-        )
+        # The reference also caps patches at 6% + 1 of the values and the
+        # patch width at 56 bits; both always hold here: the 95p width
+        # leaves at most int(0.05*n) values above it, and the only width
+        # over 56 is 64, which fails this test.
+        try_patched &= pure | (data_w + patch_w <= 64)
         data_w[pure] = fit[br100[pure]]
         # patch entries (gap, bits above data_w); the first gap counts from
-        # the chunk start, a gap over 255 is split with (255, 0) fillers
+        # the chunk start, a gap over 255 is split with (255, 0) fillers.
+        # At most 25 patches and 2 fillers fit a 512-value chunk, so the
+        # header's 5-bit entry count (<= 31) always suffices.
         keep = try_patched[pc]
         ppos, pc = ppos[keep], pc[keep]
         lp = ppos - starts[pc]
@@ -330,10 +334,10 @@ def _encode_variable(
             n_entries[pc[groups]] = np.add.reduceat(fillers + 1, groups)
             max_gap = np.maximum.reduceat(np.where(fillers > 0, 255, gap), groups)
             gap_w[pc[groups]] = CLOSEST_FIXED_BITS[bits_required(max_gap)]
-        try_patched &= n_entries <= 31
         # reference quirk: the combined entry width is a closest fixed
-        # width (gap_w <= 8 and patch_w <= 56 keep it <= 64)
-        entry_w = CLOSEST_FIXED_BITS[gap_w + patch_w]
+        # width (gap_w <= 8 and patch_w <= 56 keep it <= 64 wherever
+        # patching is allowed; the clip only guards the other chunks)
+        entry_w = CLOSEST_FIXED_BITS[np.minimum(gap_w + patch_w, 64)]
     size_patched = (
         4 + (base_bits + 8) // 8 + (cn * data_w + 7) // 8 + (n_entries * entry_w + 7) // 8
     )

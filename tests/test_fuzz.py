@@ -46,6 +46,46 @@ def test_rlev2_runs_and_ramps(xs, rep):
         )
 
 
+_piece = st.tuples(
+    st.sampled_from(["ramp", "const", "noise", "outliers"]),
+    st.integers(min_value=1, max_value=700),  # length
+    st.one_of(small_ints, int64s),  # base / outlier value
+    st.integers(min_value=-64, max_value=64),  # step / noise width
+)
+
+
+@_FAST
+@given(
+    st.lists(_piece, min_size=1, max_size=12),
+    st.integers(min_value=513, max_value=5000),
+    st.booleans(),
+    st.booleans(),
+    st.integers(min_value=0, max_value=2**32 - 1),
+)
+def test_rlev2_multichunk_mixed(pieces, n, signed, aligned, seed):
+    """Inputs spanning several 512-value chunks that mix ramps, constant
+    runs, narrow noise and sparse outliers (every sub-encoding, chunk
+    boundaries inside and between runs) round-trip, and encoding is
+    deterministic."""
+    rng = np.random.default_rng(seed)
+    parts = []
+    for kind, m, base, k in pieces:
+        if kind == "ramp":
+            parts.append(base + k * np.arange(m))
+        elif kind == "const":
+            parts.append(np.full(m, base))
+        elif kind == "noise":
+            parts.append(base + rng.integers(0, 2 ** (abs(k) % 40 + 1), m))
+        else:
+            v = rng.integers(0, 64, m)
+            v[rng.random(m) < 0.03] = base
+            parts.append(v)
+    v = np.resize(np.concatenate(parts).astype(np.int64), n)
+    enc = rlev2.encode(v, signed=signed, aligned=aligned)
+    assert rlev2.encode(v.copy(), signed=signed, aligned=aligned) == enc
+    assert np.array_equal(rlev2.decode(enc, n, signed=signed), v)
+
+
 @_FAST
 @given(st.lists(int64s, max_size=800))
 def test_rlev1_roundtrip(xs):

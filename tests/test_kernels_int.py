@@ -68,6 +68,28 @@ def test_percentile_bits():
     assert percentile_bits(np.array([], dtype=U64), 1.0) == 0
 
 
+@pytest.mark.parametrize("n", [1, 9, 511, 512, 513, 1500, 5000])
+@pytest.mark.parametrize("shape", ["mixed_widths", "sparse_outliers"])
+def test_chunk_percentile_widths_match_percentile_bits(n, shape):
+    """The RLEv2 planner's batched per-chunk percentiles equal the scalar
+    percentile_bits on every 512-value chunk, the short tail included."""
+    rng = np.random.default_rng(n)
+    if shape == "mixed_widths":
+        u = rng.integers(0, 2**63, n, dtype=U64) >> rng.integers(0, 64, n).astype(U64)
+    else:
+        u = rng.integers(0, 2**9, n).astype(U64)
+        hit = rng.random(n) < 0.07
+        u[hit] = rng.integers(2**20, 2**50, int(hit.sum())).astype(U64)
+    starts = range(0, n, rlev2.MAX_SCOPE)
+    cn = np.array([min(rlev2.MAX_SCOPE, n - s) for s in starts])
+    got = rlev2._chunk_percentile_widths(bits_required(u), cn)
+    assert got.shape == (3, cn.size)
+    for k, s in enumerate(starts):
+        chunk = u[s : s + rlev2.MAX_SCOPE]
+        for row, p in enumerate((1.0, 0.9, 0.95)):
+            assert got[row, k] == percentile_bits(chunk, p), (k, p)
+
+
 # ---------------------------------------------------------------------------
 # bitpack
 # ---------------------------------------------------------------------------

@@ -62,6 +62,9 @@ def _f2_tables() -> dict[str, np.ndarray]:
         "decreasing_zero_first_delta": [10, 10, 8, 5, 1, 0, -4, -9] * 40,
         "null_dense": rng.integers(0, 100, 50),
     }
+    for m in range(3, 16):  # fixed-delta runs too short to extract
+        t[f"short_ramp{m}"] = list(range(5, 5 + 2 * m, 2))
+        t[f"short_ramp_desc{m}"] = list(range(5, 5 - 3 * m, -3))
     for w in (1, 2, 4, 7, 24, 33, 56, 63):
         t[f"direct_w{w}"] = rng.integers(0, 2**w, 5000, dtype=I64)
     v = rng.integers(0, 2**10, 512, dtype=I64)
@@ -77,6 +80,23 @@ def _f2_tables() -> dict[str, np.ndarray]:
     v = np.ones(512, dtype=I64)
     v[0] = v[500] = 2**30
     t["patch_gap_over_255"] = v
+    # patch candidates at the edge of the try-patched rule: a 90p/100p gap
+    # of exactly 2 bits, and a 1-bit gap whose frame-of-reference span is
+    # the full direct width (not tried, although patching would be smaller)
+    for name, lo, hi in (("gap2", 2**11, 2**12), ("gap1", 2**10, 2**11)):
+        v = rng.integers(0, 2**10, 2048)
+        v[::512] = 0
+        hit = rng.random(2048) < 0.035
+        v[hit] = rng.integers(lo, hi, int(hit.sum()))
+        t[f"patch_edge_{name}"] = v
+    v = rng.integers(0, 2, 1024)  # 1-bit data, 63-bit outliers: too wide to patch
+    v[::97] = 2**63 - 1
+    t["patch_too_wide"] = v
+    for sign in (1, -1):  # bases at and just past BASE_VALUE_LIMIT
+        for base in (2**56 - 1000, 2**56 - 400):
+            v = sign * (base + rng.integers(0, 300, 700))
+            v[::50] += sign * 2**20
+            t[f"base_limit_{sign}_{base}"] = v
     steps = rng.integers(0, 5, 20000)
     jitter = np.where(rng.random(20000) < 0.3, rng.integers(-3, 4, 20000), 0)
     t["mostly_sorted_timestampish"] = 1_700_000_000 + np.cumsum(steps) + jitter
@@ -100,6 +120,9 @@ def _chunk_crossing(kind: str, n: int) -> np.ndarray:
         v = rng.integers(-3000, 3000, n, dtype=I64)
         v[rng.random(n) < 0.01] = -(2**33)
         return v
+    if kind == "sawtooth":  # every chunk ascends, every boundary drops
+        c = np.cumsum(rng.integers(0, 6, n))
+        return 1000 + c - c[np.arange(n) // 512 * 512]
     # "mixed": ramps, constant runs, jittered ranges and sparse outliers
     parts = []
     while sum(p.size for p in parts) < n:
@@ -117,7 +140,9 @@ def _chunk_crossing(kind: str, n: int) -> np.ndarray:
     return np.concatenate(parts)[:n].astype(I64)
 
 
-CHUNK_KINDS = ("sorted", "constant", "random", "outliers", "negative_min", "mixed")
+CHUNK_KINDS = (
+    "sorted", "constant", "random", "outliers", "negative_min", "sawtooth", "mixed"
+)
 CHUNK_LENGTHS = (511, 512, 513, 1024, 10_000, 10_272)
 
 
@@ -249,6 +274,110 @@ GOLDEN = {
     "f2/null_dense/00": "1501ecedf1be887ccccdb0c7e92366e1541cc907fefccda1b10b33f43e27bcf1",
     "f2/null_dense/11": "a1c118e7d708da141f542c037fd4b838f5a9e9e3ea526cb476e9eea4c32ae622",
     "f2/null_dense/01": "ed2863ef221dbe946a46a538896f23bb4c344fcc98131f598937292345787896",
+    "f2/short_ramp3/10": "98c031f9ff6fda4d4e3dc49ec1670b4ff8503edaa94daf228aeb60b67f698bc5",
+    "f2/short_ramp3/00": "9e6dc6568c88144a8a27a8e0947c54cae1ab01f4e1233a62107f36709d9d2c80",
+    "f2/short_ramp3/11": "72a6ef099bfe9e9fd48844705361bdae5d6d834bd7c476e3f087e9763dd61ddc",
+    "f2/short_ramp3/01": "9e6dc6568c88144a8a27a8e0947c54cae1ab01f4e1233a62107f36709d9d2c80",
+    "f2/short_ramp_desc3/10": "3fabd72fa2bc9e3fe6b3a1d3d3a2f2c6954bfed2494d3ebc32ad5f34a3e3e6e1",
+    "f2/short_ramp_desc3/00": "360881dba0f1649f4469cb5373317d100bf9e3116b536cbba8724eee7626420d",
+    "f2/short_ramp_desc3/11": "3fabd72fa2bc9e3fe6b3a1d3d3a2f2c6954bfed2494d3ebc32ad5f34a3e3e6e1",
+    "f2/short_ramp_desc3/01": "360881dba0f1649f4469cb5373317d100bf9e3116b536cbba8724eee7626420d",
+    "f2/short_ramp4/10": "db6b08afba8da4f1279201631833d3f91d0610040668b84850ed22f5f828d971",
+    "f2/short_ramp4/00": "53eb84fb13c3f3a1ca22cc885aea5f9b6e37a7dee7ce609ac9a4edf61cc8dfd0",
+    "f2/short_ramp4/11": "db6b08afba8da4f1279201631833d3f91d0610040668b84850ed22f5f828d971",
+    "f2/short_ramp4/01": "53eb84fb13c3f3a1ca22cc885aea5f9b6e37a7dee7ce609ac9a4edf61cc8dfd0",
+    "f2/short_ramp_desc4/10": "22f82f2a9f6301f7aaa48ee2c347370997add313cd4689e144052b5bcd5b2328",
+    "f2/short_ramp_desc4/00": "2ea133ae536ccfea7ae25315b3bd4b8cd7bb37d303982981540e9fc26f497e11",
+    "f2/short_ramp_desc4/11": "22f82f2a9f6301f7aaa48ee2c347370997add313cd4689e144052b5bcd5b2328",
+    "f2/short_ramp_desc4/01": "2ea133ae536ccfea7ae25315b3bd4b8cd7bb37d303982981540e9fc26f497e11",
+    "f2/short_ramp5/10": "76d039b2f5a180a25c131ac6826365d901fa4c457fbec7c07605ef727df24a85",
+    "f2/short_ramp5/00": "8edfae357a20a2dbbee33411a42480c2df8760f3ab2c37e592c7da8fa5096b14",
+    "f2/short_ramp5/11": "76d039b2f5a180a25c131ac6826365d901fa4c457fbec7c07605ef727df24a85",
+    "f2/short_ramp5/01": "8edfae357a20a2dbbee33411a42480c2df8760f3ab2c37e592c7da8fa5096b14",
+    "f2/short_ramp_desc5/10": "50406d984ecda7ea44dca8cd2bd67935a804ab361338dc55246e1cd726d1162f",
+    "f2/short_ramp_desc5/00": "70b86c43349512a3b5d22ac0b3292aeecb171cea11b491cbe2962bb61ab73c08",
+    "f2/short_ramp_desc5/11": "50406d984ecda7ea44dca8cd2bd67935a804ab361338dc55246e1cd726d1162f",
+    "f2/short_ramp_desc5/01": "70b86c43349512a3b5d22ac0b3292aeecb171cea11b491cbe2962bb61ab73c08",
+    "f2/short_ramp6/10": "1b6e913eae2da6fdfc235635fb98e8ffcf4a214cc639fa89f604384ab343d4c7",
+    "f2/short_ramp6/00": "3de6cb83ecb3ed36c39a2a2660968592d4714865096806366af4c5e71354608f",
+    "f2/short_ramp6/11": "1b6e913eae2da6fdfc235635fb98e8ffcf4a214cc639fa89f604384ab343d4c7",
+    "f2/short_ramp6/01": "3de6cb83ecb3ed36c39a2a2660968592d4714865096806366af4c5e71354608f",
+    "f2/short_ramp_desc6/10": "47259a945887e90df486480cf6deef2ecb90b6adfb8260d0c6325ee8780b117f",
+    "f2/short_ramp_desc6/00": "ae8138c70a2bed5a8ca0408f204f4823b8d6fdf352ce055c6e06d572a3cb249f",
+    "f2/short_ramp_desc6/11": "47259a945887e90df486480cf6deef2ecb90b6adfb8260d0c6325ee8780b117f",
+    "f2/short_ramp_desc6/01": "ae8138c70a2bed5a8ca0408f204f4823b8d6fdf352ce055c6e06d572a3cb249f",
+    "f2/short_ramp7/10": "238ec2affbd4e096eec597207772075f128fb994c561dc75f6866419d503d7f7",
+    "f2/short_ramp7/00": "0ac0d082b9c99586c6a65a6ebfe40399dc786b47765511fb2e88a9776467c18c",
+    "f2/short_ramp7/11": "238ec2affbd4e096eec597207772075f128fb994c561dc75f6866419d503d7f7",
+    "f2/short_ramp7/01": "0ac0d082b9c99586c6a65a6ebfe40399dc786b47765511fb2e88a9776467c18c",
+    "f2/short_ramp_desc7/10": "af2c6d3185a6ba01d442bd424f2d91658abf0eec6476853ded7be3210e01f566",
+    "f2/short_ramp_desc7/00": "892f2ed8fc2147165f88b4e91e38435cbcf7ac514cbc59ca4dd245f2f166895f",
+    "f2/short_ramp_desc7/11": "af2c6d3185a6ba01d442bd424f2d91658abf0eec6476853ded7be3210e01f566",
+    "f2/short_ramp_desc7/01": "892f2ed8fc2147165f88b4e91e38435cbcf7ac514cbc59ca4dd245f2f166895f",
+    "f2/short_ramp8/10": "6dbff8f6282ee7bfd091ef616210fa4bc584d8a0296f845d6325cd9a1cdcbd82",
+    "f2/short_ramp8/00": "fd098c69d0edb6d56487e3b9afb0cf987136f9199eea522c298cd630c154543e",
+    "f2/short_ramp8/11": "6dbff8f6282ee7bfd091ef616210fa4bc584d8a0296f845d6325cd9a1cdcbd82",
+    "f2/short_ramp8/01": "fd098c69d0edb6d56487e3b9afb0cf987136f9199eea522c298cd630c154543e",
+    "f2/short_ramp_desc8/10": "09d0ce36b3328cd6296b606177a48ad34ce414c12eb59e706ab6ed3d439821fe",
+    "f2/short_ramp_desc8/00": "7e716640c5b463272688c4137031884324ed6dca7ad2e2b1565f99678b5440a8",
+    "f2/short_ramp_desc8/11": "09d0ce36b3328cd6296b606177a48ad34ce414c12eb59e706ab6ed3d439821fe",
+    "f2/short_ramp_desc8/01": "7e716640c5b463272688c4137031884324ed6dca7ad2e2b1565f99678b5440a8",
+    "f2/short_ramp9/10": "f81ba9d6a6ac6a4bc7deedc22f73fc0d8f9e135e11b881a41b7636e797b69257",
+    "f2/short_ramp9/00": "c68a9d531c23f8194db4aeab267155a301a6ce284db4a0b7d888b824771efa0d",
+    "f2/short_ramp9/11": "f81ba9d6a6ac6a4bc7deedc22f73fc0d8f9e135e11b881a41b7636e797b69257",
+    "f2/short_ramp9/01": "c68a9d531c23f8194db4aeab267155a301a6ce284db4a0b7d888b824771efa0d",
+    "f2/short_ramp_desc9/10": "a3d17a8047c696cca7b884d4c87389b18f8c45c061b2d590d9db490890cf9b08",
+    "f2/short_ramp_desc9/00": "205fd5cb84ce89869699cb7e2d3d6ba222093cf58f1107e6bfb5bd7cdb555301",
+    "f2/short_ramp_desc9/11": "a3d17a8047c696cca7b884d4c87389b18f8c45c061b2d590d9db490890cf9b08",
+    "f2/short_ramp_desc9/01": "205fd5cb84ce89869699cb7e2d3d6ba222093cf58f1107e6bfb5bd7cdb555301",
+    "f2/short_ramp10/10": "09c9531bcb469a340571e41e1239dc129cdb38e8277a7d240eb724563a288cda",
+    "f2/short_ramp10/00": "d42eeec468583e316ef6cf6af56d28dfa59cb9fee87f23dd18d858b39ae70dbc",
+    "f2/short_ramp10/11": "09c9531bcb469a340571e41e1239dc129cdb38e8277a7d240eb724563a288cda",
+    "f2/short_ramp10/01": "d42eeec468583e316ef6cf6af56d28dfa59cb9fee87f23dd18d858b39ae70dbc",
+    "f2/short_ramp_desc10/10": "3873ab01872e2c1d1313a0c70116474c0e64027abb9b18ca11dc450f66c81ac7",
+    "f2/short_ramp_desc10/00": "3b47190f66906fbc16fc3f1874f84ab800b7d489ddbe1e8a3de632e9b8aa0fd4",
+    "f2/short_ramp_desc10/11": "3873ab01872e2c1d1313a0c70116474c0e64027abb9b18ca11dc450f66c81ac7",
+    "f2/short_ramp_desc10/01": "3b47190f66906fbc16fc3f1874f84ab800b7d489ddbe1e8a3de632e9b8aa0fd4",
+    "f2/short_ramp11/10": "1f66a5ae421a1f1702fd1b58c33c9eeb71da3b171356f6aa1d97e5a0c60a73fd",
+    "f2/short_ramp11/00": "2b380f630f4ffea08be9488ca895e22eff56b2f59a2c549a5c7c13dc394aeef8",
+    "f2/short_ramp11/11": "1f66a5ae421a1f1702fd1b58c33c9eeb71da3b171356f6aa1d97e5a0c60a73fd",
+    "f2/short_ramp11/01": "2b380f630f4ffea08be9488ca895e22eff56b2f59a2c549a5c7c13dc394aeef8",
+    "f2/short_ramp_desc11/10": "59d29a46285f2f2e7ca30eb17673a7d8c54a5b7ec6ea7da5a6d5809e4faad3b0",
+    "f2/short_ramp_desc11/00": "b8b53159611447069d2c4b55502a79286e224b53254508e1dcc18b5f2fc24baf",
+    "f2/short_ramp_desc11/11": "59d29a46285f2f2e7ca30eb17673a7d8c54a5b7ec6ea7da5a6d5809e4faad3b0",
+    "f2/short_ramp_desc11/01": "b8b53159611447069d2c4b55502a79286e224b53254508e1dcc18b5f2fc24baf",
+    "f2/short_ramp12/10": "9d822fb75cf8f9610178120f34f6e63c5ea376cf6be9bc31282afaa6660cf640",
+    "f2/short_ramp12/00": "33c76e2f3bb787c16189cbaba6512273bbaf0f4be521b950b37d1c196bea028d",
+    "f2/short_ramp12/11": "9d822fb75cf8f9610178120f34f6e63c5ea376cf6be9bc31282afaa6660cf640",
+    "f2/short_ramp12/01": "33c76e2f3bb787c16189cbaba6512273bbaf0f4be521b950b37d1c196bea028d",
+    "f2/short_ramp_desc12/10": "5f09c4cee2044a02bbf392603fbcce26d77148e8f2d167adf7dc67dce62c68a5",
+    "f2/short_ramp_desc12/00": "30b4655ad58e0b4ed37530f18cbd9658f052873dd221024bdb4f29436f40c6fd",
+    "f2/short_ramp_desc12/11": "5f09c4cee2044a02bbf392603fbcce26d77148e8f2d167adf7dc67dce62c68a5",
+    "f2/short_ramp_desc12/01": "30b4655ad58e0b4ed37530f18cbd9658f052873dd221024bdb4f29436f40c6fd",
+    "f2/short_ramp13/10": "346ee784d7d16d47aaa0bfa9bfeb8304ec4890b6b2186b5bf55086b522e7f41b",
+    "f2/short_ramp13/00": "f326cbecdcbaa8c24d49bae1d0f0556c47a00690449093a27bef49b06f9348e8",
+    "f2/short_ramp13/11": "346ee784d7d16d47aaa0bfa9bfeb8304ec4890b6b2186b5bf55086b522e7f41b",
+    "f2/short_ramp13/01": "f326cbecdcbaa8c24d49bae1d0f0556c47a00690449093a27bef49b06f9348e8",
+    "f2/short_ramp_desc13/10": "f5d724b78b4fb88c8d56869d4c43fbadb96da0f04d9f36fad08ba4f9d844363e",
+    "f2/short_ramp_desc13/00": "9e2253ce5ebe0c49c8e25b835593fe42affeae8b3d7a0bb2d1286afd63354c3a",
+    "f2/short_ramp_desc13/11": "f5d724b78b4fb88c8d56869d4c43fbadb96da0f04d9f36fad08ba4f9d844363e",
+    "f2/short_ramp_desc13/01": "9e2253ce5ebe0c49c8e25b835593fe42affeae8b3d7a0bb2d1286afd63354c3a",
+    "f2/short_ramp14/10": "8fd86030339026b2476c2f6902f4d2db17f604650e748f2fa9b213801edcea65",
+    "f2/short_ramp14/00": "a291fbb3c0b2924cc5939b38f6afddc01de73fae428a050ca2351c2b171f4270",
+    "f2/short_ramp14/11": "8fd86030339026b2476c2f6902f4d2db17f604650e748f2fa9b213801edcea65",
+    "f2/short_ramp14/01": "a291fbb3c0b2924cc5939b38f6afddc01de73fae428a050ca2351c2b171f4270",
+    "f2/short_ramp_desc14/10": "60aebe51875e0012d7de31bcf7257bd3f3df71e6e78ec677233af5243131ecf7",
+    "f2/short_ramp_desc14/00": "48a07c3008155c3da278aa7963c6bcbde309062d15507beb669495014fd7c200",
+    "f2/short_ramp_desc14/11": "60aebe51875e0012d7de31bcf7257bd3f3df71e6e78ec677233af5243131ecf7",
+    "f2/short_ramp_desc14/01": "48a07c3008155c3da278aa7963c6bcbde309062d15507beb669495014fd7c200",
+    "f2/short_ramp15/10": "cb95b490fd6ff4469f21166abc8908878720c2a1f61e2a44536e11faccc626e1",
+    "f2/short_ramp15/00": "ff87e2977f48b3cfb540ba13558a49a336228678ed9d020b6ca8ff0e1aef3abd",
+    "f2/short_ramp15/11": "cb95b490fd6ff4469f21166abc8908878720c2a1f61e2a44536e11faccc626e1",
+    "f2/short_ramp15/01": "ff87e2977f48b3cfb540ba13558a49a336228678ed9d020b6ca8ff0e1aef3abd",
+    "f2/short_ramp_desc15/10": "09cbb393f38034d9db4e234dda822f7b5ecbc983018e317d16c6890108ba4ee1",
+    "f2/short_ramp_desc15/00": "b3a4b0e0974477b2440e243c137e4798747909b89d0f23eedb0f48b12f13face",
+    "f2/short_ramp_desc15/11": "09cbb393f38034d9db4e234dda822f7b5ecbc983018e317d16c6890108ba4ee1",
+    "f2/short_ramp_desc15/01": "b3a4b0e0974477b2440e243c137e4798747909b89d0f23eedb0f48b12f13face",
     "f2/direct_w1/10": "6449df856fcf6844aa1926f97968376f24036cda801e9699f71394c6a3e4d1e1",
     "f2/direct_w1/00": "95d4a95199a64814eca0f55aa55779637ff1197dc30d382200c4f4fff6a13609",
     "f2/direct_w1/11": "6449df856fcf6844aa1926f97968376f24036cda801e9699f71394c6a3e4d1e1",
@@ -301,10 +430,38 @@ GOLDEN = {
     "f2/patch_gap_over_255/00": "e07fc3144b6b44ef98c5adb32a20f8b3a7398da7e682973fe9acebb7fe9d427b",
     "f2/patch_gap_over_255/11": "eba0134360bcf413c0f13002380ac609179c380a295d0bd4118ef96a42f55bb8",
     "f2/patch_gap_over_255/01": "e07fc3144b6b44ef98c5adb32a20f8b3a7398da7e682973fe9acebb7fe9d427b",
-    "f2/mostly_sorted_timestampish/10": "4667810f34d36fbd614de77bf2fe1eabddafed9e2e7b80f51109e266b0678fc3",
-    "f2/mostly_sorted_timestampish/00": "4667810f34d36fbd614de77bf2fe1eabddafed9e2e7b80f51109e266b0678fc3",
-    "f2/mostly_sorted_timestampish/11": "c1d764b7555018aaa5fc8681758fedf00fe4f0d08557db7c19c6129037a7ef8f",
-    "f2/mostly_sorted_timestampish/01": "c1d764b7555018aaa5fc8681758fedf00fe4f0d08557db7c19c6129037a7ef8f",
+    "f2/patch_edge_gap2/10": "b76f751ed3407f06439807c3a2f1b960e20b79abc1bbc031ab48ee9478403aa4",
+    "f2/patch_edge_gap2/00": "b76f751ed3407f06439807c3a2f1b960e20b79abc1bbc031ab48ee9478403aa4",
+    "f2/patch_edge_gap2/11": "c83a021ba284bb106e8ae3c17e08a098e5e8d5ba032ecb2b776fa6d54d61df22",
+    "f2/patch_edge_gap2/01": "ad993b0e93e2d119756c2da97cbbc540ab5ad4b6af3e26c377b17fee8748ea5e",
+    "f2/patch_edge_gap1/10": "76cd6146df238be4d2481a8fcbdbc44e2fda62771ddc1787c2c0046762bbebcc",
+    "f2/patch_edge_gap1/00": "04a868d80d511dc01d3d8cdb9b75d3c2925ad20f83f3638671ac3152693522e3",
+    "f2/patch_edge_gap1/11": "840e1865be4e53b3b30a1b6dd75b3c1442d33efc8f5fde9cca73c0dec9ed6eed",
+    "f2/patch_edge_gap1/01": "fd0f7cb4938842b65a7af5c86a40ec46debe740eaee9537cece87f9868c55814",
+    "f2/patch_too_wide/10": "a3d693abca6d714d94a1d8d521cc5702bc3e4575455fca5258470c58e90b8f9b",
+    "f2/patch_too_wide/00": "4314482265c459ea553c697d7029d9b7424f0f790defe9232da7134a1bc9faa8",
+    "f2/patch_too_wide/11": "a3d693abca6d714d94a1d8d521cc5702bc3e4575455fca5258470c58e90b8f9b",
+    "f2/patch_too_wide/01": "4314482265c459ea553c697d7029d9b7424f0f790defe9232da7134a1bc9faa8",
+    "f2/base_limit_1_72057594037926936/10": "0100f0f6e12b56b64c0df39b8f92ef0e3798d02a75f71d657992f5b5e10a6825",
+    "f2/base_limit_1_72057594037926936/00": "0100f0f6e12b56b64c0df39b8f92ef0e3798d02a75f71d657992f5b5e10a6825",
+    "f2/base_limit_1_72057594037926936/11": "9761dd5997496829e2cde530b66ecfb99ab465cc47f039be6f912b72b8a586eb",
+    "f2/base_limit_1_72057594037926936/01": "9761dd5997496829e2cde530b66ecfb99ab465cc47f039be6f912b72b8a586eb",
+    "f2/base_limit_1_72057594037927536/10": "5550311c3670604bbddc8094b6b09641e809ca091317c4a1cb0220356d2f9fd8",
+    "f2/base_limit_1_72057594037927536/00": "5550311c3670604bbddc8094b6b09641e809ca091317c4a1cb0220356d2f9fd8",
+    "f2/base_limit_1_72057594037927536/11": "c49e6bab49b4492f957bb9350904b77911d275633792b36705c2e11706f0ec50",
+    "f2/base_limit_1_72057594037927536/01": "c49e6bab49b4492f957bb9350904b77911d275633792b36705c2e11706f0ec50",
+    "f2/base_limit_-1_72057594037926936/10": "2e443733cd07c21ac045ed32f98c558f90138c9a81f328ce4c6e8cfef7787b8c",
+    "f2/base_limit_-1_72057594037926936/00": "90e32ea4d08caea76ff6b2a4270c7d3c69dddbbd67ef47a15c9ee6d46f613d46",
+    "f2/base_limit_-1_72057594037926936/11": "2e443733cd07c21ac045ed32f98c558f90138c9a81f328ce4c6e8cfef7787b8c",
+    "f2/base_limit_-1_72057594037926936/01": "90e32ea4d08caea76ff6b2a4270c7d3c69dddbbd67ef47a15c9ee6d46f613d46",
+    "f2/base_limit_-1_72057594037927536/10": "105d29f35e8a2e53a46d7543de9066abcdce8fee60b3bbc7059d867370ddfc59",
+    "f2/base_limit_-1_72057594037927536/00": "db9af2e78aaf647c9a29cbb1c1d4a74250d1c68ee1a3fc5cc1d670aee93bcf99",
+    "f2/base_limit_-1_72057594037927536/11": "105d29f35e8a2e53a46d7543de9066abcdce8fee60b3bbc7059d867370ddfc59",
+    "f2/base_limit_-1_72057594037927536/01": "db9af2e78aaf647c9a29cbb1c1d4a74250d1c68ee1a3fc5cc1d670aee93bcf99",
+    "f2/mostly_sorted_timestampish/10": "68633df15dafe658ccd7ce6af2f067133603937ea253311e16d30ba3bc364079",
+    "f2/mostly_sorted_timestampish/00": "68633df15dafe658ccd7ce6af2f067133603937ea253311e16d30ba3bc364079",
+    "f2/mostly_sorted_timestampish/11": "05843114930428d30c37c626760ed7fae3577b57b2047c20ec533eda0181a4d8",
+    "f2/mostly_sorted_timestampish/01": "05843114930428d30c37c626760ed7fae3577b57b2047c20ec533eda0181a4d8",
     "chunks/sorted/511/10": "5b13ef1d5630b2b7164dc3aa3ab324922e8da4a5a3b6493a71bce51f23455e3e",
     "chunks/sorted/511/00": "9ae5da8d4996e0890a307e490a12c27bd378c2010205814d61d74af4f8920cb0",
     "chunks/sorted/511/11": "6a30f0019b010d281e1f0f11d56425dc0bcb43f1c74427f62f4c9eb8b0134beb",
@@ -425,6 +582,30 @@ GOLDEN = {
     "chunks/negative_min/10272/00": "09c0c945375d88be46e2bdb61bef6c7870a8c2db30495b3518b1568cc05f6bd7",
     "chunks/negative_min/10272/11": "5e609c6c4d200e8ec75fab8658658fff0d29d2a987d745d5bdb3d81c5b6d94d6",
     "chunks/negative_min/10272/01": "0f2a87071a09bb6d6b3511e8cdeb5f9b35cd9f03495a1b0825c24b8159e3d1b8",
+    "chunks/sawtooth/511/10": "c36e19b1b43b1c56551280897945bf292cfc47fdc94ae5960b42bcaa31df1997",
+    "chunks/sawtooth/511/00": "7f7938b43c957510e70dfa3cb2673671e070f2e06e773715829bc85e394f0469",
+    "chunks/sawtooth/511/11": "81386d9ced8f9fd74857668694817ec6ed9481f97ee964d6787265ff03dc8a3a",
+    "chunks/sawtooth/511/01": "516b606fe7522ab2dfec9a0c61b4d52353de424bb34fc67cb3f36fd38acc1eea",
+    "chunks/sawtooth/512/10": "3c1f266e1551d2bf3395fb8ac055707f74d8c170310325c7c861cb9a5c392b10",
+    "chunks/sawtooth/512/00": "17f7af05bceadf5a25a4b76c4b38b8a01fc72fff46df3e07bc4d912080e29f35",
+    "chunks/sawtooth/512/11": "e46249030b5c11bd85e7b3600df55ec669a165c68be901583073d14db2b4f346",
+    "chunks/sawtooth/512/01": "c94a254a3f6ff504d0ba79e722edfc5daecbb067b2bd2187bc58d65bf33d6378",
+    "chunks/sawtooth/513/10": "d789ed259c21ba14b12254f2fd69dfbca6bda0defba8813ce02d86ea9cb3d1aa",
+    "chunks/sawtooth/513/00": "508f0b16440cabab6d00b9ed32440edf5211db80d8efd766054f3144c2552c15",
+    "chunks/sawtooth/513/11": "534c80824374693d884dbf66efb76504225a1391b65482158a3a7369a5ade514",
+    "chunks/sawtooth/513/01": "be37fb4685989dc4c867da36fbf3a274abb1458294450759534a4d54e7701b2a",
+    "chunks/sawtooth/1024/10": "52f0e25c91a96afad232008cd950ccfd3a1736d92c43637a2e680f836b8ca35e",
+    "chunks/sawtooth/1024/00": "6107cc033ba586714671ff2cf0d964ef09c948fb44b4638f4a451ce445249f09",
+    "chunks/sawtooth/1024/11": "a6c90b8f58a4a6a13edcd829c611939bcae49f0ec6ffba7b12f093e82250c9c9",
+    "chunks/sawtooth/1024/01": "2bcf62c5b747bf3d73336ac88bb12eb1fb5159c3fc4acef739911e3adbc0cd7a",
+    "chunks/sawtooth/10000/10": "c6dc42d5f8b97dfa19be1a686a61dd048620f23c306d72a3070c379605117205",
+    "chunks/sawtooth/10000/00": "727b1bd6f52da5b92dbaa9273b1f559a1f7eb94ae2665269f9aa5516e970a91e",
+    "chunks/sawtooth/10000/11": "9c93b8694f5aa56a1b71d1aa85b5266ba1571a354040813eaaf6c3b56855f3e7",
+    "chunks/sawtooth/10000/01": "46a1ca132a5cdc83b5ca1107f2fd93b3d44d7add530fae009a3c12d3286fb5fa",
+    "chunks/sawtooth/10272/10": "ed3b404efb16c21bad7608ee8125d256cb4db3ee69ecce3cb911e5e943f7bb09",
+    "chunks/sawtooth/10272/00": "71b9244bdcb24a3372552ec076ddc0cf34114e5affddc598b77da22a5baee99e",
+    "chunks/sawtooth/10272/11": "05a58311d300e556466449663aac107eabf3b983cb886ce5ca42c9c27e8b4920",
+    "chunks/sawtooth/10272/01": "ce258a87cfe431182b14fd76cdfbb722d46dd346e60dcfd01e1c0f9b56c2752b",
     "chunks/mixed/511/10": "595b6fbe3ed8219585b705ae96a3b4337a9c185d25e2c13ac519d37860159d22",
     "chunks/mixed/511/00": "0727b44add14f80a73f3623437b0a4a94ad9c47c680e14d3eba5ead9b8f13212",
     "chunks/mixed/511/11": "394c243b82916b60fc2c7754494a6b694f5ae469269e416205b600db52616bc2",
