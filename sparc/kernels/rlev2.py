@@ -10,8 +10,16 @@ and the same header layouts, so sizes track the reference closely.
 The *encoder structure* is deliberately different (SURVEY.md §7: semantics-
 equal, structure-different): instead of a per-value state machine we segment
 the whole array with vectorized delta-run detection, then choose the cheapest
-sub-encoding per segment by *computed size* (which can only tie or beat the
-reference's heuristic).  Python-level work is O(#segments), never O(n).
+sub-encoding per 512-value chunk by *computed size* (which can only tie or
+beat the reference's heuristic).
+
+Cost model: the vector work is per segment.  One batched plan computes every
+derived array once per segment (zigzag, bit widths, per-chunk min/max,
+base-reduced values, per-chunk width histograms) and decides all chunks with
+vector ops; payloads are bit-packed with one ``bitpack.pack`` call per
+distinct width.  Python-level work per chunk is limited to its header bytes
+and a slice of that packed output, so numpy calls scale with segments, not
+chunks or values.
 
 All values are treated as two's-complement int64 (like the reference's
 ``long``); ``signed`` controls zigzag in SHORT_REPEAT/DIRECT and the base
@@ -163,10 +171,6 @@ _PLAN_SUB = (_DIRECT, _DELTA, _PATCHED_BASE)  # header sub-encoding per plan
 # width), 90p (DIRECT vs patched gap) and 95p (PATCHED_BASE data width),
 # computed like the reference's ``1.0 - p``
 _DISCARD_FRACTION = 1.0 - np.array([1.0, 0.9, 0.95])
-# DELTA payload width for a widest |delta| of b bits: width 1 is
-# unrepresentable (width code 0 means fixed delta), so it packs at 2
-_DELTA_FIXED_BITS = np.maximum(CLOSEST_FIXED_BITS, 2)
-_DELTA_ALIGNED_BITS = np.maximum(CLOSEST_ALIGNED_BITS, 2)
 _CODE = _WIDTH_TO_CODE.tolist()
 
 
@@ -183,10 +187,11 @@ def _chunk_percentile_widths(bits: np.ndarray, cn: np.ndarray) -> np.ndarray:
     """
     nch = cn.size
     key = bits + np.repeat(np.arange(0, 65 * nch, 65), cn)
-    hist = np.bincount(key, minlength=65 * nch).reshape(nch, 65)
-    tails = hist[:, ::-1].cumsum(axis=1)[:, ::-1]
-    discard = (_DISCARD_FRACTION[:, None] * cn).astype(np.int64)
-    return CLOSEST_FIXED_BITS[(tails > discard[:, :, None]).sum(axis=2) - 1]
+    below = np.bincount(key, minlength=65 * nch).reshape(nch, 65).cumsum(axis=1)
+    # tail count at b+1 bits = n - below[b]; it exceeds the allowance
+    # while below[b] < n - allowance, for every b under the answer
+    keep = cn - (_DISCARD_FRACTION[:, None] * cn).astype(np.int64)
+    return CLOSEST_FIXED_BITS[(below < keep[:, :, None]).sum(axis=2)]
 
 
 def _encode_variable(
@@ -273,7 +278,7 @@ def _encode_variable(
     mono = ((dmin >= 0) | (dmax <= 0)) & ~flat
     if tail < MIN_REPEAT:
         const[-1] = mono[-1] = False
-    delta_w = (_DELTA_ALIGNED_BITS if aligned else _DELTA_FIXED_BITS)[dmax_bits]
+    delta_w = np.maximum(fit[dmax_bits], 2)  # width 1: code 0 means fixed delta
     head = np.maximum((varint_bits + 6) // 7, 1).reshape(2, nch)
     size_delta = head.sum(axis=0) + 2 + ~fixed * (((cn - 2) * delta_w + 7) // 8)
     size_delta[~mono] = _NOT_APPLICABLE
@@ -290,22 +295,21 @@ def _encode_variable(
     try_patched = ((bits100 - bits90 > 1) | (fit[span_bits] < direct_w)) & (
         base_bits <= 56
     )
-    data_w = fit[br95]
-    ppos = np.flatnonzero(need > np.repeat(data_w, cn))
-    if ppos.size == 0:
-        # pure FoR everywhere: every value fits the full width.  The spec
-        # (and the reference decoder) require pl >= 1, so the chunk carries
-        # one no-op patch entry (gap 0, patch 0: one byte at entry width 2)
-        # that ORs nothing into data[0]; this keeps the stream decodable by
-        # ANY conformant ORC reader (verified via the orcfile cross-read).
-        data_w = fit[br100]
-        patch_w = gap_w = n_entries = np.ones(nch, dtype=np.int64)
-        entry_w = patch_w + 1
-    else:
+    sizes[_PLAN_PATCHED] = _NOT_APPLICABLE
+    data_w = direct_w  # placeholder width for chunks never patched
+    if try_patched.any():
+        data_w = fit[br95]
+        ppos = np.flatnonzero(need > np.repeat(data_w, cn))
         pc = ppos // MAX_SCOPE
         npatch = np.bincount(pc, minlength=nch)
         pure = npatch == 0
         patch_w = CLOSEST_FIXED_BITS[np.maximum(br100 - data_w, 0)]
+        # A chunk without outliers is pure frame-of-reference: every value
+        # at the full width.  The spec (and the reference decoder) require
+        # pl >= 1, so it carries one no-op patch entry (gap 0, patch 0 at
+        # widths 1 and 1: one byte at entry width 2) that ORs nothing into
+        # data[0]; this keeps the stream decodable by ANY conformant ORC
+        # reader (verified via the orcfile cross-read).
         patch_w[pure] = 1
         # The reference also caps patches at 6% + 1 of the values and the
         # patch width at 56 bits; both always hold here: the 95p width
@@ -317,20 +321,20 @@ def _encode_variable(
         # the chunk start, a gap over 255 is split with (255, 0) fillers.
         # At most 25 patches and 2 fillers fit a 512-value chunk, so the
         # header's 5-bit entry count (<= 31) always suffices.
-        keep = try_patched[pc]
-        ppos, pc = ppos[keep], pc[keep]
-        lp = ppos - starts[pc]
-        first = np.ones(pc.size, dtype=bool)
-        first[1:] = pc[1:] != pc[:-1]
-        gap = lp.copy()
-        gap[1:] -= lp[:-1]
-        gap[first] = lp[first]
-        fillers = np.maximum(gap - 1, 0) // 255
-        gap -= 255 * fillers
-        groups = np.flatnonzero(first)
         n_entries = np.ones(nch, dtype=np.int64)
         gap_w = np.ones(nch, dtype=np.int64)
-        if groups.size:
+        keep = try_patched[pc]
+        ppos, pc = ppos[keep], pc[keep]
+        if ppos.size:
+            lp = ppos - starts[pc]
+            first = np.ones(pc.size, dtype=bool)
+            first[1:] = pc[1:] != pc[:-1]
+            gap = lp.copy()
+            gap[1:] -= lp[:-1]
+            gap[first] = lp[first]
+            fillers = np.maximum(gap - 1, 0) // 255
+            gap -= 255 * fillers
+            groups = np.flatnonzero(first)
             n_entries[pc[groups]] = np.add.reduceat(fillers + 1, groups)
             max_gap = np.maximum.reduceat(np.where(fillers > 0, 255, gap), groups)
             gap_w[pc[groups]] = CLOSEST_FIXED_BITS[bits_required(max_gap)]
@@ -338,10 +342,9 @@ def _encode_variable(
         # width (gap_w <= 8 and patch_w <= 56 keep it <= 64 wherever
         # patching is allowed; the clip only guards the other chunks)
         entry_w = CLOSEST_FIXED_BITS[np.minimum(gap_w + patch_w, 64)]
-    size_patched = (
-        4 + (base_bits + 8) // 8 + (cn * data_w + 7) // 8 + (n_entries * entry_w + 7) // 8
-    )
-    sizes[_PLAN_PATCHED] = np.where(try_patched, size_patched, _NOT_APPLICABLE)
+        size_patched = (base_bits + 8) // 8 + (cn * data_w + 7) // 8
+        size_patched += 4 + (n_entries * entry_w + 7) // 8
+        sizes[_PLAN_PATCHED, try_patched] = size_patched[try_patched]
 
     plan = sizes.argmin(axis=0)
     width = np.choose(plan, (direct_w, delta_w, data_w)).tolist()
@@ -361,7 +364,7 @@ def _encode_variable(
             pieces.append((br, k * MAX_SCOPE, cns[k], width[k]))
     ndata = len(pieces)
     with_entries: list[int] = []
-    if ppos.size and (sel := plan[pc] == _PLAN_PATCHED).any():
+    if _PLAN_PATCHED in plans and (sel := plan[pc] == _PLAN_PATCHED).any():
         # entry = (gap << patch_w) | patch, each patch's own entry after its
         # fillers; a multiply stands in for the (slow) 64-bit shift
         e_pc, reps = pc[sel], fillers[sel] + 1
@@ -437,10 +440,6 @@ def _pack_pieces(pieces: list) -> list:
         groups.setdefault(piece[3], []).append(i)
     out: list = [None] * len(pieces)
     for w, idx in groups.items():
-        if len(idx) == 1:
-            src, s, c, _ = pieces[idx[0]]
-            out[idx[0]] = bitpack.pack(src[s : s + c], w)
-            continue
         offs = [0]
         for i in idx:
             offs.append(offs[-1] + (pieces[i][2] + 7) // 8 * 8)
