@@ -618,9 +618,10 @@ _COMPACT_KEYS = [
     "decode_pool_gbps", "encode_pool_gbps", "host_canary_s",
     "windows_considered", "windows_clean",
 ]
-# The driver parses the LAST stdout line from a finite tail capture
-# (2000 bytes): round 3 recorded parsed:null from a mid-record cut, rounds
-# 4 and 5 because the line (per-query timings included) outgrew it.
+# Whatever runs the bench parses the LAST stdout line from a finite tail
+# capture (2000 bytes): round 3 recorded parsed:null from a mid-record
+# cut, rounds 4 and 5 because the line (per-query timings included)
+# outgrew it.
 COMPACT_LINE_MAX = 1500
 
 

@@ -57,7 +57,7 @@ def bits_required(u: np.ndarray) -> np.ndarray:
     image is exact below 2^53; above, rounding can overshoot by 1 near
     power-of-2 boundaries (values near 2^64 round to 2^64), so those few
     values are corrected with an exact table compare.  Avoids
-    ``searchsorted``, which runs at ~1µs/element on this host.
+    ``searchsorted``, which measured ~1µs/element (numpy 1.26, x86-64).
     """
     u = np.ascontiguousarray(u, dtype=U64)
     _, e = np.frexp(u.astype(np.float64))

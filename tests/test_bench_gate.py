@@ -227,9 +227,9 @@ def _full_record() -> dict:
     return rec
 
 
-def test_compact_line_fits_the_driver_tail():
-    """The driver keeps the last 2000 bytes of stdout; the compact line and
-    its two newlines must fit with room to spare, and still parse."""
+def test_compact_line_fits_the_stdout_tail():
+    """The bench's runner keeps the last 2000 bytes of stdout; the compact
+    line and its two newlines must fit with room to spare, and parse."""
     import json
 
     line = bench.compact_line(_full_record())
