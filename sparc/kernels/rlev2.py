@@ -179,7 +179,7 @@ def _chunk_percentile_widths(bits: np.ndarray, cn: np.ndarray) -> np.ndarray:
 
     ``bits`` holds each value's significant bits; chunk ``k`` is the next
     ``cn[k]`` values.  One bincount over ``chunk*65 + bits`` gives every
-    chunk's histogram and a reverse cumsum its tail counts.
+    chunk's histogram and a cumsum the count at or below each bit length.
     ``percentile_bits`` discards the ``int(n*(1-p))`` widest values, so it
     lands on the closest fixed width of the most bits whose tail count
     exceeds that allowance (bucketing by width code first picks the same
