@@ -21,3 +21,86 @@ def spark():
     )
     yield s
     s.stop()
+
+
+def mixed_orc_table(n: int = 5_500, seed: int = 11):
+    """Seeded table covering every column kind ``write_orc`` row-indexes:
+    nulls at every level, direct strings and binary, timestamps (pre-1970
+    and sub-second), dates, decimals, booleans, floats and
+    struct/list/map/union columns."""
+    import numpy as np
+    import pyarrow as pa
+
+    rng = np.random.default_rng(seed)
+
+    def nulls(p: float) -> np.ndarray:
+        return rng.random(n) < p
+
+    ints = rng.integers(-(10**9), 10**9, n)
+    strs = [
+        "s%d-%s" % (i, "x" * int(rng.integers(0, 40))) for i in range(n)
+    ]
+    ts_us = rng.integers(-(10**15), 2 * 10**15, n)
+    ts_us[::7] -= ts_us[::7] % 1_000_000  # whole seconds: trailing-zero nanos
+    dec = [
+        None if z else f"{int(u)}.{int(f):04d}"
+        for z, u, f in zip(
+            nulls(0.1), rng.integers(-(10**12), 10**12, n), rng.integers(0, 10**4, n)
+        )
+    ]
+    lens = rng.integers(0, 5, n)
+    flat = rng.integers(0, 1000, int(lens.sum()))
+    offs = np.concatenate(([0], np.cumsum(lens)))
+    lists = [
+        None if z else flat[offs[i] : offs[i + 1]].tolist()
+        for i, z in enumerate(nulls(0.15))
+    ]
+    maps = [
+        None if z else [(f"m{j % 5}", float(j) / 4) for j in range(i % 3)]
+        for i, z in enumerate(nulls(0.1))
+    ]
+    structs = [
+        None if z else {"a": int(a), "b": None if i % 6 == 0 else f"v{i}"}
+        for i, (z, a) in enumerate(zip(nulls(0.12), rng.integers(0, 99, n)))
+    ]
+    tags = rng.integers(0, 2, n).astype(np.int8)
+    u_offs = np.zeros(n, np.int32)
+    for v in (0, 1):
+        m = tags == v
+        u_offs[m] = np.arange(int(m.sum()), dtype=np.int32)
+    union = pa.UnionArray.from_dense(
+        pa.array(tags, pa.int8()),
+        pa.array(u_offs, pa.int32()),
+        [
+            pa.array(rng.integers(-500, 500, int((tags == 0).sum())), pa.int64()),
+            pa.array([f"u{i % 13}" for i in range(int((tags == 1).sum()))]),
+        ],
+        ["i", "s"],
+    )
+    import decimal
+
+    return pa.table(
+        {
+            "k": pa.array(np.arange(n), pa.int64()),
+            "i": pa.array(ints.astype(np.int32) // 3, pa.int32(), mask=nulls(0.2)),
+            "d": pa.array(rng.normal(size=n), pa.float64(), mask=nulls(0.1)),
+            "f": pa.array(rng.normal(size=n).astype(np.float32), pa.float32()),
+            "b": pa.array(rng.random(n) < 0.3, pa.bool_(), mask=nulls(0.25)),
+            "s": pa.array(strs, pa.string(), mask=nulls(0.1)),
+            "bin": pa.array([s.encode()[:9] for s in strs], pa.binary()),
+            "ts": pa.array(ts_us, pa.timestamp("us"), mask=nulls(0.1)),
+            "dt": pa.array(
+                (ts_us // 86_400_000_000).astype(np.int32), pa.date32()
+            ),
+            "dec": pa.array(
+                [None if v is None else decimal.Decimal(v) for v in dec],
+                pa.decimal128(20, 4),
+            ),
+            "st": pa.array(
+                structs, pa.struct([("a", pa.int64()), ("b", pa.string())])
+            ),
+            "lst": pa.array(lists, pa.list_(pa.int64())),
+            "mp": pa.array(maps, pa.map_(pa.string(), pa.float64())),
+            "u": union,
+        }
+    )

@@ -1,0 +1,90 @@
+"""Golden digests of ``write_orc``'s output bytes.
+
+The row-indexed writer encodes each stream per row group; any change to how
+it batches those encodes must keep every file byte-identical (stream bytes,
+row-index positions, statistics and the tail all follow from them).  Each
+case writes a file and compares its sha256 against the digest recorded
+before the writer was batched.
+
+Cases: the first 75,000 rows of the sf0.1 ``lineitem`` table (ZSTD, stride
+10,000: the ``orc-lineitem`` benchmark shape), and the seeded mixed table of
+``conftest.mixed_orc_table`` (nulls, direct strings, timestamps, decimals,
+nested columns) under NONE and ZSTD, with and without a row index.  To
+regenerate after an *intended* format change::
+
+    PYTHONPATH=.:tests python tests/test_orcfile_golden.py
+"""
+
+from __future__ import annotations
+
+import hashlib
+import os
+import tempfile
+
+import pytest
+
+import bench
+from conftest import mixed_orc_table
+from sparc.engine import orcfile
+
+LINEITEM = os.path.join(
+    os.path.dirname(os.path.normpath(bench.SF_DIR)), "sf0.1", "lineitem.parquet"
+)
+
+
+def _lineitem_case():
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(LINEITEM).slice(0, 75_000)
+    return "lineitem/75000/ZSTD/10000", t, {
+        "compression": "ZSTD", "row_index_stride": 10_000,
+    }
+
+
+def _mixed_cases():
+    t = mixed_orc_table()
+    for comp in ("NONE", "ZSTD"):
+        for stride in (0, 1000):
+            yield f"mixed/{comp}/{stride}", t, {
+                "compression": comp, "row_index_stride": stride,
+                "rows_per_stripe": 3000,
+            }
+
+
+def _digest(table, kwargs: dict) -> str:
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "golden.orc")
+        orcfile.write_orc(table, path, **kwargs)
+        with open(path, "rb") as f:
+            return hashlib.sha256(f.read()).hexdigest()
+
+
+GOLDEN = {
+    "mixed/NONE/0": "86ca7c3422f3d8a27dae4277de0bb9056f243c1181332fcfb846caec97483489",
+    "mixed/NONE/1000": "7f8ead6f822e947df86287f916b0fea564d80d81fcdc0218f7a3c3803ac69049",
+    "mixed/ZSTD/0": "45725619b0c905b9be6dd5aed89fd219879177e357e56797c446d7f3e4bc7f00",
+    "mixed/ZSTD/1000": "6983c3f0df7d91d73df8ed8f12ad9fafe314b557628b2dc9fdb48d0f8b80237c",
+    "lineitem/75000/ZSTD/10000": "e387a1da80fb09f691070d8cd49d3502dba27db4bcf57dca9986b135cdc1be38",
+}
+
+
+@pytest.mark.parametrize("case", [c[0] for c in _mixed_cases()])
+def test_write_orc_mixed_bytes_match_golden(case):
+    (table, kwargs), = [(t, kw) for name, t, kw in _mixed_cases() if name == case]
+    assert _digest(table, kwargs) == GOLDEN[case]
+
+
+@pytest.mark.skipif(not os.path.exists(LINEITEM), reason="sf0.1 testdata absent")
+def test_write_orc_lineitem_bytes_match_golden():
+    name, table, kwargs = _lineitem_case()
+    assert _digest(table, kwargs) == GOLDEN[name]
+
+
+if __name__ == "__main__":
+    cases = list(_mixed_cases())
+    if os.path.exists(LINEITEM):
+        cases.append(_lineitem_case())
+    print("GOLDEN = {")
+    for name, table, kwargs in cases:
+        print(f'    "{name}": "{_digest(table, kwargs)}",')
+    print("}")
