@@ -737,48 +737,79 @@ def _tree_stats_pbs(node: dict, arr: pa.Array, out: list[bytes]) -> None:
         _tree_stats_pbs(child_node, child, out)
 
 
-def _encode_column_grouped(
-    arr: pa.Array, bounds: list[tuple[int, int]], v11: bool
-) -> tuple[list[tuple[int, list[bytes], int]], bytes, list[bytes]]:
-    """Per-row-group encoding for indexed files.
+def _rle_groups(vals: np.ndarray, voffs: list[int], signed: bool, v11: bool) -> list:
+    """One integer-RLE stream per group ``vals[voffs[g]:voffs[g + 1]]``,
+    each restarting its runs: a single batched RLEv2 encode, or one RLEv1
+    encode per group."""
+    cuts = voffs[1:-1]
+    if v11:
+        return [rlev1.encode(v, signed=signed) for v in np.split(vals, cuts)]
+    return rlev2.encode(vals, signed, cuts=cuts)
 
-    -> (streams, encoding_pb, per-group ColumnStatistics blobs) where
-    streams = [(stream_kind, [blob per group], extras)] in position-
-    recording order.  Strings always use DIRECT here (the reference
+
+def _bits_by_stripe(
+    flags: np.ndarray, offs: list[int], stripes: list[tuple[int, int]]
+) -> tuple[list[bytes], list[list[tuple[int, int, int]]]]:
+    """One continuous bitfield per stripe, with the seek mark of each of
+    its groups: ``offs[g]`` is group g's first flag, stripe s holds groups
+    ``stripes[s]``.  Restart-per-group byte flushes would inject padding
+    bits when a group boundary is not a multiple of 8, which is the normal
+    case for nested children's value spaces."""
+    blobs, marks = [], []
+    for g_lo, g_hi in stripes:
+        lo = offs[g_lo]
+        blob, m = bitfield.encode_with_marks(
+            flags[lo : offs[g_hi]], [o - lo for o in offs[g_lo:g_hi]]
+        )
+        blobs.append(blob)
+        marks.append(m)
+    return blobs, marks
+
+
+def _encode_column_grouped(
+    arr: pa.Array,
+    bounds: list[tuple[int, int]],
+    stripes: list[tuple[int, int]],
+    v11: bool,
+) -> tuple[list[tuple], bytes, list[bytes]]:
+    """Per-row-group encoding of a leaf column for indexed files.
+
+    ``bounds`` are the row groups of every stripe, as windows of ``arr``;
+    stripe s holds groups ``stripes[s]``.  -> (streams, encoding_pb,
+    per-group ColumnStatistics blobs) where streams = [(stream_kind,
+    blobs, extras, marks)] in position-recording order: one blob per
+    group (marks None), or one continuous bitfield per stripe with its
+    groups' seek marks.  Strings always use DIRECT here (the reference
     rewrites dictionary row-index positions on flush; restart-per-group
     direct streams sidestep that statefulness while staying legal ORC)."""
-    rle = (lambda v, s: rlev1.encode(v, signed=s)) if v11 else (
-        lambda v, s: rlev2.encode(v, signed=s)
-    )
     t = arr.type
-    streams: list[tuple[int, list[bytes], int]] = []
+    streams: list[tuple] = []
     valid = arr.is_valid().to_numpy(zero_copy_only=False) if arr.null_count else None
+    row_offs = [lo for lo, _ in bounds] + [len(arr)]
     if valid is not None:
-        # one continuous bit stream + real mid-stream seek positions:
-        # restart-per-group byte flushes would inject padding bits when a
-        # group boundary is not a multiple of 8, which is the normal case
-        # for nested children's value spaces
-        blob, marks = bitfield.encode_with_marks(valid, [lo for lo, _ in bounds])
-        streams.append((_STREAM_PRESENT, [blob], _EXTRAS_BITS, marks))
+        streams.append(
+            (_STREAM_PRESENT, _EXTRAS_BITS, *_bits_by_stripe(valid, row_offs, stripes))
+        )
     # value offsets of each group into the non-null space
     if valid is None:
-        voffs = [lo for lo, _ in bounds] + [len(arr)]
+        voffs = row_offs
     else:
         cum = np.concatenate(([0], np.cumsum(valid.astype(np.int64))))
-        voffs = [int(cum[lo]) for lo, _ in bounds] + [int(cum[-1])]
+        voffs = cum[row_offs].tolist()
     nn = arr.drop_null() if arr.null_count else arr
 
     def vs(g: int) -> slice:
         return slice(voffs[g], voffs[g + 1])
+
+    def rle(vals: np.ndarray, signed: bool) -> list:
+        return _rle_groups(vals, voffs, signed, v11)
 
     enc = _f_varint(1, _ENC_DIRECT if v11 else _ENC_DIRECT_V2)
     stats: list[bytes] = []
     n_groups = len(bounds)
     if pa.types.is_integer(t) or pa.types.is_date32(t):
         vals = stripe_mod._arrow_nonnull_int64(arr)
-        streams.append(
-            (_STREAM_DATA, [rle(vals[vs(g)], True) for g in range(n_groups)], _EXTRAS_RLE)
-        )
+        streams.append((_STREAM_DATA, _EXTRAS_RLE, rle(vals, True), None))
         if pa.types.is_date32(t):
             stats = [
                 _rg_date_stats(
@@ -800,16 +831,8 @@ def _encode_column_grouped(
         nanos = stripe_mod.format_nanos(
             np.mod(vals, unit_scale) * (1_000_000_000 // unit_scale)
         )
-        streams.append(
-            (_STREAM_DATA, [rle(seconds[vs(g)], True) for g in range(n_groups)], _EXTRAS_RLE)
-        )
-        streams.append(
-            (
-                _STREAM_SECONDARY,
-                [rle(nanos[vs(g)], False) for g in range(n_groups)],
-                _EXTRAS_RLE,
-            )
-        )
+        streams.append((_STREAM_DATA, _EXTRAS_RLE, rle(seconds, True), None))
+        streams.append((_STREAM_SECONDARY, _EXTRAS_RLE, rle(nanos, False), None))
         stats = [
             _rg_timestamp_stats(
                 vals[vs(g)], unit_scale, valid is not None and not valid[lo:hi].all()
@@ -824,17 +847,12 @@ def _encode_column_grouped(
         streams.append(
             (
                 _STREAM_DATA,
-                [bigdec.encode(lo[vs(g)], hi[vs(g)]) for g in range(n_groups)],
                 _EXTRAS_RAW,  # varint stream: position is the byte offset
+                [bigdec.encode(lo[vs(g)], hi[vs(g)]) for g in range(n_groups)],
+                None,
             )
         )
-        streams.append(
-            (
-                _STREAM_SECONDARY,
-                [rle(scales[vs(g)], True) for g in range(n_groups)],
-                _EXTRAS_RLE,
-            )
-        )
+        streams.append((_STREAM_SECONDARY, _EXTRAS_RLE, rle(scales, True), None))
         stats = [
             _rg_decimal_stats(
                 nn.slice(voffs[g], voffs[g + 1] - voffs[g]),
@@ -846,7 +864,12 @@ def _encode_column_grouped(
         np_t = np.float32 if pa.types.is_float32(t) else np.float64
         vals = nn.to_numpy(zero_copy_only=False).astype(np.dtype(np_t).newbyteorder("<"))
         streams.append(
-            (_STREAM_DATA, [vals[vs(g)].tobytes() for g in range(n_groups)], _EXTRAS_RAW)
+            (
+                _STREAM_DATA,
+                _EXTRAS_RAW,
+                [vals[vs(g)].tobytes() for g in range(n_groups)],
+                None,
+            )
         )
         enc = _f_varint(1, _ENC_DIRECT)
         stats = [
@@ -858,8 +881,9 @@ def _encode_column_grouped(
         ]
     elif pa.types.is_boolean(t):
         vals = nn.to_numpy(zero_copy_only=False)
-        blob, marks = bitfield.encode_with_marks(vals, voffs[:-1])
-        streams.append((_STREAM_DATA, [blob], _EXTRAS_BITS, marks))
+        streams.append(
+            (_STREAM_DATA, _EXTRAS_BITS, *_bits_by_stripe(vals, voffs, stripes))
+        )
         enc = _f_varint(1, _ENC_DIRECT)
     elif stripe_mod._is_binary_like(t):
         bin_arr = nn.cast(pa.large_binary())
@@ -873,20 +897,15 @@ def _encode_column_grouped(
         streams.append(
             (
                 _STREAM_DATA,
+                _EXTRAS_RAW,
                 [
                     bytes(blob[boffs[voffs[g]] : boffs[voffs[g + 1]]])
                     for g in range(n_groups)
                 ],
-                _EXTRAS_RAW,
+                None,
             )
         )
-        streams.append(
-            (
-                _STREAM_LENGTH,
-                [rle(lengths[vs(g)], False) for g in range(n_groups)],
-                _EXTRAS_RLE,
-            )
-        )
+        streams.append((_STREAM_LENGTH, _EXTRAS_RLE, rle(lengths, False), None))
         if pa.types.is_string(t) or pa.types.is_large_string(t):
             stats = []
             for g, (lo, hi) in enumerate(bounds):
@@ -920,9 +939,10 @@ def _encode_tree_grouped(
     node: dict,
     arr: pa.Array,
     bounds: list[tuple[int, int]],
+    stripes: list[tuple[int, int]],
     v11: bool,
     counts: dict[int, list],
-    out: list[tuple[int, list[tuple[int, list[bytes], int]], bytes, list[bytes]]],
+    out: list[tuple[int, list[tuple], bytes, list[bytes]]],
 ) -> None:
     """Row-group-segmented recursive encode: the indexed-file analog of
     ``_encode_tree``.  Every stream of every node in the subtree is a
@@ -932,9 +952,10 @@ def _encode_tree_grouped(
     exactly like flat ones (``TreeWriterBase.createRowIndexEntry``
     recurses childrenWriters, TreeWriterBase.java:323-330).
 
-    ``bounds`` are windows in THIS node's own value space: row-group row
-    windows at the root; for children, the windows induced by the parent
-    (present-slot prefix sums for struct children, element-offset
+    ``bounds`` are windows in THIS node's own value space, over every
+    stripe of the file (stripe s holds groups ``stripes[s]``): row-group
+    row windows at the root; for children, the windows induced by the
+    parent (present-slot prefix sums for struct children, element-offset
     windows for list/map children, per-variant tag counts for unions)."""
     t = node["t"]
     arr = _combined(arr)
@@ -942,25 +963,22 @@ def _encode_tree_grouped(
     c[0] += len(arr) - arr.null_count
     c[1] = c[1] or arr.null_count > 0
     if not _is_nested(t):
-        streams, enc, stats = _encode_column_grouped(arr, bounds, v11)
+        streams, enc, stats = _encode_column_grouped(arr, bounds, stripes, v11)
         out.append((node["id"], streams, enc, stats))
         return
-    rle = (lambda v: rlev1.encode(v, signed=False)) if v11 else (
-        lambda v: rlev2.encode(v, signed=False)
-    )
     n_groups = len(bounds)
-    streams: list[tuple[int, list[bytes], int]] = []
+    streams: list[tuple] = []
     valid_arr = arr.is_valid() if arr.null_count else None
     valid = (
         valid_arr.to_numpy(zero_copy_only=False) if valid_arr is not None else None
     )
+    voffs = [lo for lo, _ in bounds] + [len(arr)]
     if valid is not None:
-        blob, marks = bitfield.encode_with_marks(valid, [lo for lo, _ in bounds])
-        streams.append((_STREAM_PRESENT, [blob], _EXTRAS_BITS, marks))
+        streams.append(
+            (_STREAM_PRESENT, _EXTRAS_BITS, *_bits_by_stripe(valid, voffs, stripes))
+        )
         cum = np.concatenate(([0], np.cumsum(valid.astype(np.int64))))
-        voffs = [int(cum[lo]) for lo, _ in bounds] + [int(cum[-1])]
-    else:
-        voffs = [lo for lo, _ in bounds] + [len(arr)]
+        voffs = cum[voffs].tolist()
     stats = [
         _min_stats(
             voffs[g + 1] - voffs[g],
@@ -976,7 +994,7 @@ def _encode_tree_grouped(
             if valid_arr is not None:
                 child = child.filter(valid_arr)
             _encode_tree_grouped(
-                child_node, child, present_bounds, v11, counts, out
+                child_node, child, present_bounds, stripes, v11, counts, out
             )
         return
     if pa.types.is_union(t):
@@ -992,8 +1010,9 @@ def _encode_tree_grouped(
         streams.append(
             (
                 _STREAM_DATA,
-                [byterle.encode(tags[lo:hi]) for lo, hi in bounds],
                 _EXTRAS_RLE,
+                [byterle.encode(tags[lo:hi]) for lo, hi in bounds],
+                None,
             )
         )
         out.append((node["id"], streams, _f_varint(1, _ENC_DIRECT), stats))
@@ -1006,7 +1025,9 @@ def _encode_tree_grouped(
             rows = np.flatnonzero(mask)
             take = offs_u[rows] if dense else rows
             child = _combined(arr.field(i)).take(pa.array(take, pa.int64()))
-            _encode_tree_grouped(child_node, child, child_bounds, v11, counts, out)
+            _encode_tree_grouped(
+                child_node, child, child_bounds, stripes, v11, counts, out
+            )
         return
     # list / map: LENGTH of present slots per group; child windows are
     # the element-offset spans of each group's present slots
@@ -1031,11 +1052,7 @@ def _encode_tree_grouped(
         )
         children = [nn.flatten()]
     streams.append(
-        (
-            _STREAM_LENGTH,
-            [rle(lengths[voffs[g] : voffs[g + 1]]) for g in range(n_groups)],
-            _EXTRAS_RLE,
-        )
+        (_STREAM_LENGTH, _EXTRAS_RLE, _rle_groups(lengths, voffs, False, v11), None)
     )
     out.append(
         (
@@ -1050,7 +1067,9 @@ def _encode_tree_grouped(
         (int(e_cum[voffs[g]]), int(e_cum[voffs[g + 1]])) for g in range(n_groups)
     ]
     for child, (_, child_node) in zip(children, node["children"]):
-        _encode_tree_grouped(child_node, child, elem_bounds, v11, counts, out)
+        _encode_tree_grouped(
+            child_node, child, elem_bounds, stripes, v11, counts, out
+        )
 
 
 def _row_index_pb(entries: list[tuple[list[int], bytes]]) -> bytes:
@@ -1124,8 +1143,44 @@ def write_orc(
     total_rows = table.num_rows
     counts: dict[int, list] = {}  # id -> [n_values, has_null], via encode walk
     stripe_stats_pbs: list[list[bytes]] = []  # per stripe: ColumnStatistics per id
+    stripe_los = range(0, max(total_rows, 1), max(rows_per_stripe, 1))
+    if row_index_stride:
+        # every column is encoded once over the whole table: streams
+        # restart at each row group, so the row groups of all stripes
+        # (``bounds``; stripe s holds ``stripes[s]``) batch into one
+        # kernel call per stream
+        bounds: list[tuple[int, int]] = []
+        stripes: list[tuple[int, int]] = []
+        for lo in stripe_los:
+            n_s = max(min(rows_per_stripe, total_rows - lo), 0)
+            rb = stripe_mod._row_bounds(n_s, row_index_stride)
+            stripes.append((len(bounds), len(bounds) + len(rb)))
+            bounds += [(lo + a, lo + b) for a, b in rb]
+        grouped: list[tuple[int, list[tuple], bytes, list[bytes]]] = []
+        bloom_filters: dict[int, list] = {}
+        for i in range(n_cols):
+            col = _combined(table.column(i))
+            # pre-order emission == column-id order, nested included
+            node = root_node["children"][i][1]
+            _encode_tree_grouped(node, col, bounds, stripes, v11, counts, grouped)
+            if bloom_columns and root_node["children"][i][0] in bloom_columns:
+                if _is_nested(node["t"]):
+                    raise NotImplementedError("orcfile: bloom on nested column")
+                filters = []
+                for lo, hi in bounds:
+                    sub = col.slice(lo, hi - lo)
+                    nn_sub = sub.drop_null() if sub.null_count else sub
+                    hashes = _orc_bloom_hashes(nn_sub)
+                    if hashes is None:
+                        raise NotImplementedError(
+                            f"orcfile: bloom on type {node['t']}"
+                        )
+                    filters.append(
+                        _orc_bloom_build(hashes, row_index_stride, bloom_fpp)
+                    )
+                bloom_filters[node["id"]] = filters
 
-    for lo in range(0, max(total_rows, 1), max(rows_per_stripe, 1)):
+    for s_i, lo in enumerate(stripe_los):
         chunk = table.slice(lo, rows_per_stripe)
         if chunk.num_rows == 0 and total_rows > 0:
             break
@@ -1135,43 +1190,14 @@ def write_orc(
         data = bytearray()
         index = bytearray()
         if row_index_stride:
-            bounds = stripe_mod._row_bounds(chunk.num_rows, row_index_stride)
+            g_lo, g_hi = stripes[s_i]
             # root struct (column 0) index: position-less entries with counts
             root_ri = _row_index_pb(
-                [([], _min_stats(hi - g_lo, False)) for g_lo, hi in bounds]
+                [([], _min_stats(hi - b_lo, False)) for b_lo, hi in bounds[g_lo:g_hi]]
             )
             wrapped = _orc_compress(root_ri, compression)
             stream_meta.append((_STREAM_ROW_INDEX, 0, len(wrapped)))
             index += wrapped
-            grouped: list[
-                tuple[int, list[tuple[int, list[bytes], int]], bytes, list[bytes]]
-            ] = []
-            bloom_streams: dict[int, bytes] = {}
-            for i in range(n_cols):
-                col = chunk.column(i)
-                if isinstance(col, pa.ChunkedArray):
-                    col = col.combine_chunks()
-                # pre-order emission == column-id order, nested included
-                node = root_node["children"][i][1]
-                _encode_tree_grouped(node, col, bounds, v11, counts, grouped)
-                if bloom_columns and root_node["children"][i][0] in bloom_columns:
-                    if _is_nested(node["t"]):
-                        raise NotImplementedError("orcfile: bloom on nested column")
-                    filters = []
-                    for lo, hi in bounds:
-                        sub = col.slice(lo, hi - lo)
-                        nn_sub = sub.drop_null() if sub.null_count else sub
-                        hashes = _orc_bloom_hashes(nn_sub)
-                        if hashes is None:
-                            raise NotImplementedError(
-                                f"orcfile: bloom on type {node['t']}"
-                            )
-                        filters.append(
-                            _orc_bloom_build(hashes, row_index_stride, bloom_fpp)
-                        )
-                    bloom_streams[node["id"]] = _orc_compress(
-                        _bloom_index_pb(filters), compression
-                    )
             col_payloads = []
             for cid, streams, enc, stats in grouped:
                 encodings.append(enc)
@@ -1179,32 +1205,32 @@ def write_orc(
                 # - per-group pieces (marks is None): coder + compression
                 #   chunk restart at each group, positions are exact piece
                 #   offsets with zero coder state;
-                # - whole stream + marks (bit-packed PRESENT / BOOLEAN
+                # - one bitfield per stripe + marks (PRESENT / BOOLEAN
                 #   DATA): one continuous stream, positions carry the real
                 #   (chunk offset, used-in-run, bits) coder state.
-                built = []  # (kind, bytes, offsets-or-chunkmaps, extras, marks)
-                for st in streams:
-                    kind, blobs, extras = st[0], st[1], st[2]
-                    marks = st[3] if len(st) > 3 else None
+                built = []  # (kind, bytes, offsets-or-chunkmaps, marks)
+                for kind, _extras, blobs, marks in streams:
                     if marks is None:
-                        pieces = [_orc_compress(b, compression) for b in blobs]
+                        pieces = [
+                            _orc_compress(b, compression) for b in blobs[g_lo:g_hi]
+                        ]
                         offs = np.concatenate(
                             ([0], np.cumsum([len(p) for p in pieces]))
                         )
-                        built.append((kind, b"".join(pieces), offs[:-1], None, None))
+                        built.append((kind, b"".join(pieces), offs[:-1], None))
                     else:
                         wrapped, u_starts, c_starts = _compress_chunked(
-                            blobs[0], compression
+                            blobs[s_i], compression
                         )
                         built.append(
-                            (kind, wrapped, (u_starts, c_starts), None, marks)
+                            (kind, wrapped, (u_starts, c_starts), marks[s_i])
                         )
                 entries = []
-                for g in range(len(bounds)):
+                for g in range(g_hi - g_lo):
                     positions: list[int] = []
                     for st, b in zip(streams, built):
-                        extras = st[2]
-                        _, _, offs, _, marks = b
+                        extras = st[1]
+                        _, _, offs, marks = b
                         if marks is None:
                             positions.append(int(offs[g]))
                             if compression != "NONE":
@@ -1228,17 +1254,19 @@ def write_orc(
                                         bits,
                                     ]
                                 )
-                    entries.append((positions, stats[g]))
+                    entries.append((positions, stats[g_lo + g]))
                 ri = _orc_compress(_row_index_pb(entries), compression)
                 stream_meta.append((_STREAM_ROW_INDEX, cid, len(ri)))
                 index += ri
-                if cid in bloom_streams:
-                    bs = bloom_streams[cid]
+                if cid in bloom_filters:
+                    bs = _orc_compress(
+                        _bloom_index_pb(bloom_filters[cid][g_lo:g_hi]), compression
+                    )
                     stream_meta.append((8, cid, len(bs)))  # BLOOM_FILTER_UTF8
                     index += bs
                 col_payloads.append((cid, built))
             for cid, built in col_payloads:
-                for kind, payload, _, _, _ in built:
+                for kind, payload, _, _ in built:
                     stream_meta.append((kind, cid, len(payload)))
                     data += payload
         else:

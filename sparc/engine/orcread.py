@@ -14,8 +14,22 @@ TreeReaderFactory's reader-version dispatch), binary, timestamp
 reader: per-file 2015-base shift + vectorized per-value writer-zone
 conversion, verified against spark.read.orc under a UTC session),
 decimal (unbounded varint mantissa + signed per-value scale with
-rescale-to-declared-scale, ``DecimalTreeReader`` semantics);
-row-index streams are skipped (we read whole stripes).
+rescale-to-declared-scale, ``DecimalTreeReader`` semantics).
+
+Decoding is two steps, shared by whole-stripe and row-group reads:
+
+- *stream → values*: a source hands each stream out from a start
+  position (a buffer plus the coder state already consumed there) and
+  the kernels decode exactly the values asked for: PRESENT flags, RLE
+  and byte-RLE values, raw byte ranges (``_flags`` / ``_ints`` /
+  ``_tags`` / ``_raw``);
+- *values → Arrow*: :func:`_decode_tree` and the leaf builders, which
+  re-expand nested children through their parents' PRESENT bits.
+
+:func:`read_orc` reads every stream whole from the stripe start.
+:func:`read_orc_row_groups` seeks every stream of every node to its
+row-index position and inflates only the compression chunks those values
+live in, so each kept value is decoded once and nothing is re-encoded.
 
 Tail layout per ``ReaderImpl.extractPostScript/extractFileTail``
 (ReaderImpl.java:649-667, 454-501); stream directory per
@@ -28,7 +42,7 @@ import zlib as _zlib
 import numpy as np
 import pyarrow as pa
 
-from ..kernels import bitfield, rlev1, rlev2
+from ..kernels import bitfield, byterle, rlev1, rlev2
 from . import stripe as stripe_mod
 
 # --- minimal protobuf parser ------------------------------------------------
@@ -96,26 +110,31 @@ def _inflate(data: bytes | memoryview, kind: str) -> bytes:
     out = bytearray()
     pos = 0
     while pos < len(mv):
-        head = int.from_bytes(mv[pos : pos + 3], "little")
-        pos += 3
-        clen, original = head >> 1, head & 1
-        chunk = mv[pos : pos + clen]
-        pos += clen
-        if original:
-            out += chunk
-        elif kind == "ZLIB":
-            out += _zlib.decompress(bytes(chunk), -15)  # raw deflate
-        elif kind == "SNAPPY":
-            # raw snappy embeds the uncompressed length as a leading varint
-            size, _ = _varint(chunk, 0)
-            out += pa.Codec("snappy").decompress(bytes(chunk), size)
-        elif kind == "ZSTD":
-            out += pa.Codec("zstd").decompress(
-                bytes(chunk), _zstd_content_size(chunk)
-            )
-        else:
-            raise NotImplementedError(f"orcread: codec {kind}")
+        chunk, pos = _inflate_chunk(mv, pos, kind)
+        out += chunk
     return bytes(out)
+
+
+def _inflate_chunk(mv: memoryview, pos: int, kind: str) -> tuple:
+    """The uncompressed bytes of the chunk whose 3-byte header is at
+    ``pos``, and the next chunk's start."""
+    head = int.from_bytes(mv[pos : pos + 3], "little")
+    clen, original = head >> 1, head & 1
+    chunk = mv[pos + 3 : pos + 3 + clen]
+    end = pos + 3 + clen
+    if original:
+        return chunk, end
+    if kind == "ZLIB":
+        return _zlib.decompress(bytes(chunk), -15), end  # raw deflate
+    if kind == "SNAPPY":
+        # raw snappy embeds the uncompressed length as a leading varint
+        size, _ = _varint(chunk, 0)
+        return pa.Codec("snappy").decompress(bytes(chunk), size), end
+    if kind == "ZSTD":
+        return pa.Codec("zstd").decompress(
+            bytes(chunk), _zstd_content_size(chunk)
+        ), end
+    raise NotImplementedError(f"orcread: codec {kind}")
 
 
 def _zstd_content_size(chunk) -> int:
@@ -154,22 +173,20 @@ _INT_WIDTH = {"byte": pa.int8(), "short": pa.int16(), "int": pa.int32(),
               "long": pa.int64()}
 
 
-def read_orc(path: str) -> pa.Table:
-    """Parse + decode an ORC file with this engine's kernels."""
-    with open(path, "rb") as f:
-        data = f.read()
+_INDEX_KINDS = ("ROW_INDEX", "BLOOM_FILTER", "BLOOM_FILTER_UTF8", "?")
+
+
+def _tail(data: bytes) -> tuple[dict, str, dict]:
+    """(PostScript, compression kind, Footer) of a whole file's bytes."""
     ps_len = data[-1]
     ps = _parse_pb(data[-1 - ps_len : -1])
     footer_len = ps[1][0]
     kind = _KINDS[ps.get(2, [0])[0]]
     footer = _parse_pb(_inflate(data[-1 - ps_len - footer_len : -1 - ps_len], kind))
+    return ps, kind, footer
 
-    types = [_parse_pb(t) for t in footer[4]]
-    root = types[0]
-    assert _TYPE_KINDS[root.get(1, [0])[0]] == "struct"
-    subtypes = _packed_varints(root[2][0]) if 2 in root else []
-    names = [bytes(b).decode() for b in root.get(3, [])]
 
+def _stripes(footer: dict) -> list[dict]:
     stripes = []
     for s in footer.get(3, []):
         sp = _parse_pb(s)
@@ -182,39 +199,65 @@ def read_orc(path: str) -> pa.Table:
                 "n_rows": sp[5][0],
             }
         )
+    return stripes
+
+
+def _stripe_directory(
+    data: bytes, st: dict, kind: str
+) -> tuple[dict, list[tuple[str, int, memoryview]]]:
+    """(parsed StripeFooter, [(stream kind, column id, stored bytes)] in
+    file order): stream payloads are laid out sequentially from the
+    stripe start."""
+    foot = st["offset"] + st["index_len"] + st["data_len"]
+    sf = _parse_pb(_inflate(data[foot : foot + st["footer_len"]], kind))
+    mv = memoryview(data)
+    pos = st["offset"]
+    streams = []
+    for x in sf.get(1, []):
+        stream = _parse_pb(x)
+        ln = stream.get(3, [0])[0]
+        streams.append(
+            (
+                _STREAM_KIND.get(stream.get(1, [0])[0], "?"),
+                stream.get(2, [0])[0],
+                mv[pos : pos + ln],
+            )
+        )
+        pos += ln
+    return sf, streams
+
+
+def _writer_tz(sf: dict) -> str:
+    # StripeFooter.writerTimezone (field 3): timestamp seconds are
+    # wall-clock in this zone; only UTC decodes without per-value
+    # DST adjustment, so anything else must fail loudly, not drift
+    return bytes(sf[3][0]).decode() if 3 in sf else "UTC"
+
+
+def read_orc(path: str) -> pa.Table:
+    """Parse + decode an ORC file with this engine's kernels."""
+    with open(path, "rb") as f:
+        data = f.read()
+    _ps, kind, footer = _tail(data)
+    types = [_parse_pb(t) for t in footer[4]]
+    root = types[0]
+    assert _TYPE_KINDS[root.get(1, [0])[0]] == "struct"
+    subtypes = _packed_varints(root[2][0]) if 2 in root else []
+    names = [bytes(b).decode() for b in root.get(3, [])]
+    stripes = _stripes(footer)
 
     col_chunks: dict[int, list[pa.Array]] = {i: [] for i in range(len(names))}
     for st in stripes:
-        base = st["offset"]
-        sf_raw = _inflate(
-            data[base + st["index_len"] + st["data_len"] :
-                 base + st["index_len"] + st["data_len"] + st["footer_len"]],
-            kind,
-        )
-        sf = _parse_pb(sf_raw)
-        streams = [_parse_pb(x) for x in sf.get(1, [])]
-        encodings = [_parse_pb(x) for x in sf.get(2, [])]
-        # StripeFooter.writerTimezone (field 3): timestamp seconds are
-        # wall-clock in this zone; only UTC decodes without per-value
-        # DST adjustment, so anything else must fail loudly, not drift
-        writer_tz = bytes(sf[3][0]).decode() if 3 in sf else "UTC"
-        # stream payloads laid out sequentially from the stripe start
-        pos = base
+        sf, streams = _stripe_directory(data, st, kind)
         per_col: dict[int, dict[str, bytes]] = {}
-        for stream in streams:
-            skind = _STREAM_KIND.get(stream.get(1, [0])[0], "?")
-            col = stream.get(2, [0])[0]
-            ln = stream.get(3, [0])[0]
-            if skind not in ("ROW_INDEX", "BLOOM_FILTER", "BLOOM_FILTER_UTF8", "?"):
-                per_col.setdefault(col, {})[skind] = _inflate(
-                    data[pos : pos + ln], kind
-                )
-            pos += ln
+        for skind, col, stored in streams:
+            if skind not in _INDEX_KINDS:
+                per_col.setdefault(col, {})[skind] = _inflate(stored, kind)
+        src = _StripeStreams(
+            types, [_parse_pb(x) for x in sf.get(2, [])], _writer_tz(sf), per_col
+        )
         for i, type_id in enumerate(subtypes):
-            arr = _decode_tree(
-                type_id, types, per_col, encodings, st["n_rows"], writer_tz
-            )
-            col_chunks[i].append(arr)
+            col_chunks[i].append(_decode_tree(type_id, st["n_rows"], src))
 
     if not stripes:
         # zero-stripe file (Spark writes these for empty partitions):
@@ -264,10 +307,77 @@ def _arrow_type_of(types: list[dict], idx: int) -> pa.DataType:
     raise NotImplementedError(f"empty-file type {tk}")
 
 
-def _decode_tree(
-    type_id: int, types: list[dict], per_col: dict, encodings: list[dict],
-    n_rows: int, writer_tz: str,
-) -> pa.Array:
+# --- stream -> values ---------------------------------------------------------
+#
+# A source hands out each stream of a type-tree node from a start position:
+# ``(buffer, used, bits)`` — the bytes from the position on, plus the coder
+# state already consumed there (values of the current run; bits of the
+# current byte for bitfields).  A whole-stripe read starts every stream at
+# byte 0 with nothing used; a row-group read starts it at the row-index
+# entry.  The helpers below decode exactly the values asked for.
+
+
+class _StripeStreams:
+    """Every stream of one stripe, inflated whole and read from its start."""
+
+    def __init__(self, types, encodings, writer_tz, per_col):
+        self.types, self.encodings, self.writer_tz = types, encodings, writer_tz
+        self.per_col = per_col
+
+    def has(self, tid: int, skind: str) -> bool:
+        return skind in self.per_col.get(tid, ())
+
+    def stream(self, tid: int, skind: str, nbytes: int | None = None):
+        """``(buffer, used, bits)`` of a stream; ``nbytes`` is how many
+        bytes a raw read needs (a whole stream holds them all)."""
+        return self.per_col[tid][skind], 0, 0
+
+
+def _enc_kind(src, tid: int) -> int:
+    return src.encodings[tid].get(1, [0])[0]  # 0 DIRECT, 1 DICT, 2/3 *_V2
+
+
+def _int_coder(enc_kind: int):
+    # ColumnEncoding selects the integer coder: DIRECT/DICTIONARY carry
+    # RLEv1 streams (0.11-era), *_V2 carry RLEv2 (RunLengthIntegerReader
+    # vs RunLengthIntegerReaderV2 dispatch, TreeReaderFactory)
+    return rlev1 if enc_kind in (0, 1) else rlev2
+
+
+def _flags(src, tid: int, skind: str, n: int) -> np.ndarray:
+    buf, used, bits = src.stream(tid, skind)
+    skip = 8 * used + bits
+    return bitfield.decode(buf, skip + n)[skip:]
+
+
+def _ints(src, tid: int, skind: str, n: int, signed: bool) -> np.ndarray:
+    buf, used, _ = src.stream(tid, skind)
+    rle = _int_coder(_enc_kind(src, tid))
+    return rle.decode(buf, used + n, signed=signed)[used:]
+
+
+def _tags(src, tid: int, n: int) -> np.ndarray:
+    buf, used, _ = src.stream(tid, "DATA")
+    return byterle.decode(buf, used + n)[used:]
+
+
+def _raw(src, tid: int, skind: str, nbytes: int | None = None):
+    return src.stream(tid, skind, nbytes)[0]
+
+
+def _present(src, tid: int, n_rows: int) -> tuple[np.ndarray | None, int]:
+    """(validity or None when every slot is set, non-null value count)."""
+    if not src.has(tid, "PRESENT"):
+        return None, n_rows
+    valid = _flags(src, tid, "PRESENT", n_rows)
+    n_vals = int(valid.sum())
+    return (None if n_vals == n_rows else valid), n_vals
+
+
+# --- values -> Arrow ----------------------------------------------------------
+
+
+def _decode_tree(type_id: int, n_rows: int, src) -> pa.Array:
     """Recursive column decode over the pre-order type tree.  Nested
     nulls per the ORC model (TreeReaderFactory's StructTreeReader
     :2569-2661, ListTreeReader :2792-2878, MapTreeReader :2884-2979,
@@ -275,27 +385,12 @@ def _decode_tree(
     orc-core 2.2.2 jar line tables per SURVEY §0): a child
     stream holds entries only for slots where the parent is present, so
     each level re-expands its children through its own PRESENT bits."""
-    type_pb = types[type_id]
+    type_pb = src.types[type_id]
     tk = _TYPE_KINDS[type_pb.get(1, [0])[0]]
     if tk not in ("struct", "list", "map", "union"):
-        return _decode_orc_column(
-            type_pb, per_col.get(type_id, {}), encodings[type_id], n_rows,
-            writer_tz,
-        )
-    streams = per_col.get(type_id, {})
-    enc_kind = encodings[type_id].get(1, [0])[0]
-    rle = rlev1 if enc_kind in (0, 1) else rlev2
-    valid = None
-    n_vals = n_rows
-    if "PRESENT" in streams:
-        valid = bitfield.decode(streams["PRESENT"], n_rows)
-        n_vals = int(valid.sum())
-        if n_vals == n_rows:
-            valid = None
+        return _decode_orc_column(type_id, n_rows, src)
+    valid, n_vals = _present(src, type_id, n_rows)
     subtypes = _packed_varints(type_pb[2][0]) if 2 in type_pb else []
-
-    def child(sid: int, n: int) -> pa.Array:
-        return _decode_tree(sid, types, per_col, encodings, n, writer_tz)
 
     if tk == "union":
         # UnionTreeReader: DATA = byte-RLE tags; variant values follow in
@@ -304,22 +399,20 @@ def _decode_tree(
         # Arrow image — refuse rather than guess.
         if valid is not None:
             raise NotImplementedError("orcread: union with nulls")
-        from ..kernels import byterle
-
-        tags = byterle.decode(streams["DATA"], n_rows).astype(np.int8)
+        tags = _tags(src, type_id, n_rows).astype(np.int8)
         offsets = np.zeros(n_rows, np.int32)
         kids = []
         for i, sid in enumerate(subtypes):
             mask = tags == i
             cnt = int(mask.sum())
-            kids.append(child(sid, cnt))
+            kids.append(_decode_tree(sid, cnt, src))
             offsets[mask] = np.arange(cnt, dtype=np.int32)
         return pa.UnionArray.from_dense(
             pa.array(tags, pa.int8()), pa.array(offsets, pa.int32()), kids
         )
     if tk == "struct":
         names = [bytes(b).decode() for b in type_pb.get(3, [])]
-        kids = [child(sid, n_vals) for sid in subtypes]
+        kids = [_decode_tree(sid, n_vals, src) for sid in subtypes]
         if valid is not None:
             # inflate to n_rows: parent-null slots become null children
             idx = np.zeros(n_rows, np.int64)
@@ -328,7 +421,7 @@ def _decode_tree(
             kids = [k.take(take_idx) for k in kids]
             return pa.StructArray.from_arrays(kids, names, mask=pa.array(~valid))
         return pa.StructArray.from_arrays(kids, names)
-    lengths = rle.decode(streams["LENGTH"], n_vals, signed=False)
+    lengths = _ints(src, type_id, "LENGTH", n_vals, signed=False)
     total = int(lengths.sum())
     if total > 2**31 - 1:
         raise NotImplementedError(
@@ -347,9 +440,11 @@ def _decode_tree(
             offs, pa.int32(), mask=np.concatenate((~valid, [False]))
         )
     if tk == "list":
-        return pa.ListArray.from_arrays(off_arr, child(subtypes[0], total))
+        return pa.ListArray.from_arrays(off_arr, _decode_tree(subtypes[0], total, src))
     return pa.MapArray.from_arrays(
-        off_arr, child(subtypes[0], total), child(subtypes[1], total)
+        off_arr,
+        _decode_tree(subtypes[0], total, src),
+        _decode_tree(subtypes[1], total, src),
     )
 
 
@@ -366,11 +461,9 @@ def _catalyst_type(type_pb: dict) -> str | None:
     return None
 
 
-def _decode_orc_column(
-    type_pb: dict, streams: dict[str, bytes], enc_pb: dict, n_rows: int,
-    writer_tz: str = "UTC",
-) -> pa.Array:
-    arr = _decode_orc_column_raw(type_pb, streams, enc_pb, n_rows, writer_tz)
+def _decode_orc_column(tid: int, n_rows: int, src) -> pa.Array:
+    type_pb = src.types[tid]
+    arr = _decode_orc_column_raw(tid, n_rows, src)
     # honor Spark's logical-type annotation the way spark.read.orc does:
     # an attributed NTZ long column comes back as timestamp[us], not int64
     if _catalyst_type(type_pb) == "timestamp_ntz" and arr.type == pa.int64():
@@ -378,39 +471,32 @@ def _decode_orc_column(
     return arr
 
 
-def _decode_orc_column_raw(
-    type_pb: dict, streams: dict[str, bytes], enc_pb: dict, n_rows: int,
-    writer_tz: str = "UTC",
-) -> pa.Array:
+def _decode_orc_column_raw(tid: int, n_rows: int, src) -> pa.Array:
+    type_pb = src.types[tid]
+    enc_pb = src.encodings[tid]
     tk = _TYPE_KINDS[type_pb.get(1, [0])[0]]
-    enc_kind = enc_pb.get(1, [0])[0]  # 0 DIRECT, 1 DICT, 2 DIRECT_V2, 3 DICT_V2
-    # ColumnEncoding selects the integer coder: DIRECT/DICTIONARY carry
-    # RLEv1 streams (0.11-era), *_V2 carry RLEv2 (RunLengthIntegerReader
-    # vs RunLengthIntegerReaderV2 dispatch, TreeReaderFactory)
-    rle = rlev1 if enc_kind in (0, 1) else rlev2
-    valid = None
-    n_vals = n_rows
-    if "PRESENT" in streams:
-        valid = bitfield.decode(streams["PRESENT"], n_rows)
-        n_vals = int(valid.sum())
-        if n_vals == n_rows:
-            valid = None
+    enc_kind = _enc_kind(src, tid)
+    valid, n_vals = _present(src, tid, n_rows)
 
     def scatter(vals: np.ndarray, t: pa.DataType) -> pa.Array:
         return stripe_mod._scatter_numeric(vals, valid, n_rows, t)
 
     if tk in _INT_WIDTH:
-        vals = rle.decode(streams["DATA"], n_vals, signed=True)
+        vals = _ints(src, tid, "DATA", n_vals, signed=True)
         return scatter(vals.astype(_INT_WIDTH[tk].to_pandas_dtype()), _INT_WIDTH[tk])
     if tk == "date":
-        vals = rle.decode(streams["DATA"], n_vals, signed=True)
+        vals = _ints(src, tid, "DATA", n_vals, signed=True)
         return scatter(vals.astype(np.int32), pa.date32())
     if tk in ("double", "float"):
-        np_t = np.float64 if tk == "double" else np.float32
-        vals = np.frombuffer(streams["DATA"], dtype=np.dtype(np_t).newbyteorder("<"))
+        np_t = np.dtype(np.float64 if tk == "double" else np.float32)
+        vals = np.frombuffer(
+            _raw(src, tid, "DATA", n_vals * np_t.itemsize),
+            dtype=np_t.newbyteorder("<"),
+            count=n_vals,
+        )
         return scatter(vals.astype(np_t), pa.float64() if tk == "double" else pa.float32())
     if tk == "boolean":
-        vals = bitfield.decode(streams["DATA"], n_vals)
+        vals = _flags(src, tid, "DATA", n_vals)
         return scatter(vals, pa.bool_())
     if tk == "timestamp_instant":
         # TIMESTAMP_INSTANT ("timestamp with local time zone"): the wire
@@ -418,13 +504,14 @@ def _decode_orc_column_raw(
         # writerTimezone is irrelevant by definition, no wall-clock
         # re-expression on either side (TimestampTreeReader's instantly-
         # typed variant skips the zone adjustment)
-        seconds = rle.decode(streams["DATA"], n_vals, signed=True)
+        seconds = _ints(src, tid, "DATA", n_vals, signed=True)
         nanos = stripe_mod.parse_nanos(
-            rle.decode(streams["SECONDARY"], n_vals, signed=False)
+            _ints(src, tid, "SECONDARY", n_vals, signed=False)
         )
         us = (seconds + stripe_mod.TS_BASE_SECONDS) * 1_000_000 + nanos // 1_000
         return scatter(us, pa.timestamp("us", tz="UTC"))
     if tk == "timestamp":
+        writer_tz = src.writer_tz
         utc = writer_tz in ("UTC", "GMT", "Etc/UTC", "Etc/GMT")
         if utc:
             base = stripe_mod.TS_BASE_SECONDS
@@ -443,9 +530,9 @@ def _decode_orc_column_raw(
                     f"orcread: unknown writerTimezone {writer_tz!r}"
                 ) from exc
             base = int(datetime(2015, 1, 1, tzinfo=zone).timestamp())
-        seconds = rle.decode(streams["DATA"], n_vals, signed=True)
+        seconds = _ints(src, tid, "DATA", n_vals, signed=True)
         nanos = stripe_mod.parse_nanos(
-            rle.decode(streams["SECONDARY"], n_vals, signed=False)
+            _ints(src, tid, "SECONDARY", n_vals, signed=False)
         )
         us = (seconds + base) * 1_000_000 + nanos // 1_000
         if not utc:
@@ -470,16 +557,17 @@ def _decode_orc_column_raw(
         t = pa.binary() if tk == "binary" else pa.string()
         if enc_kind in (1, 3):  # DICTIONARY / DICTIONARY_V2
             nd = enc_pb.get(2, [0])[0]
-            dlens = rle.decode(streams["LENGTH"], nd, signed=False)
-            dblob = np.frombuffer(streams["DICTIONARY_DATA"], np.uint8)
-            codes = rle.decode(streams["DATA"], n_vals, signed=False)
+            dlens = _ints(src, tid, "LENGTH", nd, signed=False)
+            dblob = np.frombuffer(_raw(src, tid, "DICTIONARY_DATA"), np.uint8)
+            codes = _ints(src, tid, "DATA", n_vals, signed=False)
             doffs = np.concatenate(([0], np.cumsum(dlens)))
             row_lens = dlens[codes] if n_vals else np.zeros(0, dtype=np.int64)
             buf = stripe_mod._ragged_gather(dblob, doffs[codes], row_lens)
             return stripe_mod._build_binary(buf, row_lens, valid, n_rows, t)
-        row_lens = rle.decode(streams["LENGTH"], n_vals, signed=False)
+        row_lens = _ints(src, tid, "LENGTH", n_vals, signed=False)
+        blob = _raw(src, tid, "DATA", int(row_lens.sum()))
         return stripe_mod._build_binary(
-            np.frombuffer(streams["DATA"], np.uint8), row_lens, valid, n_rows, t
+            np.frombuffer(blob, np.uint8), row_lens, valid, n_rows, t
         )
     if tk == "decimal":
         # DecimalTreeReader: DATA = unbounded zigzag-varint mantissa,
@@ -490,8 +578,8 @@ def _decode_orc_column_raw(
 
         prec = type_pb.get(5, [38])[0]
         scale = type_pb.get(6, [0])[0]
-        lo, hi = bigdec.decode(streams["DATA"], n_vals)
-        val_scales = rle.decode(streams["SECONDARY"], n_vals, signed=True)
+        lo, hi = bigdec.decode(_raw(src, tid, "DATA"), n_vals)
+        val_scales = _ints(src, tid, "SECONDARY", n_vals, signed=True)
         if n_vals and not (val_scales == scale).all():
             # rare path: exact Python-int rescale (oracle read, not hot)
             out_lo = np.empty(n_vals, np.uint64)
@@ -510,56 +598,76 @@ def _decode_orc_column_raw(
 
 # --- row-group seek (consumer side of the row index) -------------------------
 #
-# ``RecordReaderImpl.seekToRowEntry`` analog over reference-written
-# indexed files: parse each column's ROW_INDEX stream, consume the
-# per-entry position list in the reader's order (per stream: [compressed
-# block start, offset in block] when compressed else [stream offset],
-# then coder state — RLE: values used in run; bitfield: bytes used in
-# run + bits in byte), and decode ONLY the requested row groups.  Flat
-# leaf columns (the shapes the reference writer indexes per column kind
-# above); dictionary streams are stripe-level and therefore carry no
-# positions (StringDictionaryTreeReader.seek skips them).
+# ``RecordReaderImpl.seekToRowEntry`` analog over row-indexed files: parse
+# each column's ROW_INDEX stream, consume the per-entry position list in
+# the reader's order (per stream: [compressed block start, offset in
+# block] when compressed else [stream offset], then coder state — RLE:
+# values used in run; bitfield: bytes used in run + bits in byte), and
+# decode ONLY the requested row groups.  Dictionary streams are
+# stripe-level and therefore carry no positions
+# (StringDictionaryTreeReader.seek skips them).
+#
+# Inflate bound (the ``StripePlanner.planPartialDataReading`` analog): a
+# stream is inflated from the chunk of the first kept group's position
+# through the chunk holding the next group's position.  When the coder is
+# mid-run there (used or bits non-zero) this group's last values sit in
+# that run, so the read extends by the longest run the coder can emit;
+# raw byte ranges are exact.  After the stripe's last group a stream is
+# read to its end.  Every decoder raises ValueError on data that ends
+# early, so a bound that were too tight could only fail loudly.
+
+_RUN_BYTES = {
+    "rle_v1": rlev1.MAX_RUN_BYTES,
+    "rle_v2": rlev2.MAX_RUN_BYTES,
+    "byte": byterle.MAX_RUN_BYTES,
+    "bits": byterle.MAX_RUN_BYTES,  # a bitfield is byte-RLE of packed bits
+    "raw": 0,
+}
 
 
-def _inflate_with_map(
-    data: bytes | memoryview, kind: str
-) -> tuple[bytes, "np.ndarray", "np.ndarray"]:
-    """_inflate, also returning (compressed, uncompressed) chunk start
-    offsets so a (block, in-block) position maps to an uncompressed
-    stream offset."""
-    if kind == "NONE":
-        b = bytes(data)
-        return b, np.array([0], np.int64), np.array([0], np.int64)
-    mv = memoryview(data)
-    out = bytearray()
-    pos = 0
-    c_starts: list[int] = []
-    u_starts: list[int] = []
-    while pos < len(mv):
-        c_starts.append(pos)
-        u_starts.append(len(out))
-        head = int.from_bytes(mv[pos : pos + 3], "little")
-        pos += 3
-        clen, original = head >> 1, head & 1
-        chunk = mv[pos : pos + clen]
-        pos += clen
-        if original:
-            out += chunk
-        elif kind == "ZLIB":
-            out += _zlib.decompress(bytes(chunk), -15)
-        elif kind == "SNAPPY":
-            size, _ = _varint(chunk, 0)
-            out += pa.Codec("snappy").decompress(bytes(chunk), size)
-        elif kind == "ZSTD":
-            out += pa.Codec("zstd").decompress(bytes(chunk), _zstd_content_size(chunk))
-        else:
-            raise NotImplementedError(f"orcread: codec {kind}")
-    return bytes(out), np.array(c_starts, np.int64), np.array(u_starts, np.int64)
+class _Stream:
+    """A stream's stored bytes, inflated chunk by chunk on demand and
+    cached, so row groups that share a chunk inflate it once.  A position
+    is (chunk start in the stored stream, offset into that chunk's
+    uncompressed bytes); an uncompressed stream is one chunk at 0."""
+
+    def __init__(self, stored: memoryview, kind: str):
+        self.stored, self.kind = stored, kind
+        self._chunks: dict[int, tuple] = {}
+
+    def _chunk(self, c: int) -> tuple:
+        if self.kind == "NONE":
+            return self.stored, len(self.stored)
+        if c not in self._chunks:
+            self._chunks[c] = _inflate_chunk(self.stored, c, self.kind)
+        return self._chunks[c]
+
+    def read(self, start: tuple[int, int], end=None, extra: int = 0) -> memoryview:
+        """Uncompressed bytes from position ``start`` up to ``extra`` bytes
+        past position ``end`` (clipped at the stream's end), or through the
+        stream's end when ``end`` is None."""
+        c, skip = start
+        size = len(self.stored)
+        parts = []
+        while c < size and (end is None or c < end[0]):
+            chunk, c = self._chunk(c)
+            parts.append(chunk)
+        stop = None
+        if end is not None:
+            stop = sum(len(p) for p in parts) + end[1] + extra
+            got = 0
+            while got < end[1] + extra and c < size:
+                chunk, c = self._chunk(c)
+                parts.append(chunk)
+                got += len(chunk)
+        buf = parts[0] if len(parts) == 1 else b"".join(parts)  # b"" if none
+        return memoryview(buf).cast("B")[skip:stop]
 
 
 def _stream_coder(tk: str, skind: str, enc_kind: int) -> str:
-    """'bits' | 'rle' | 'byte' | 'raw' — what seek state the stream's
-    coder consumes (BitFieldReader / RunLength*Reader / InStream)."""
+    """'bits' | 'rle_v1' | 'rle_v2' | 'byte' | 'raw' — what seek state the
+    stream's coder consumes (BitFieldReader / RunLength*Reader /
+    InStream)."""
     if skind == "PRESENT" or (tk == "boolean" and skind == "DATA"):
         return "bits"
     if tk == "union" and skind == "DATA":
@@ -569,116 +677,69 @@ def _stream_coder(tk: str, skind: str, enc_kind: int) -> str:
         or (tk in ("string", "binary", "varchar", "char") and enc_kind in (0, 2))
     ):
         return "raw"
-    return "rle"
+    return "rle_v1" if enc_kind in (0, 1) else "rle_v2"
 
 
-def _rle_signed(tk: str, skind: str) -> bool:
-    if skind == "DATA" and tk in (
-        "byte", "short", "int", "long", "date", "timestamp", "timestamp_instant"
-    ):
-        return True
-    return skind == "SECONDARY" and tk == "decimal"
+def _stripe_level(skind: str, enc_kind: int) -> bool:
+    """Dictionary streams: read whole, no row-index positions."""
+    return skind == "DICTIONARY_DATA" or (skind == "LENGTH" and enc_kind in (1, 3))
 
 
-def _seek_mini_subtree(
-    type_id: int,
-    types: list[dict],
-    encodings: list[dict],
-    inflated_streams,
-    row_index: dict[int, list[list[int]]],
-    g: int,
-    n_node: int,
-    kind: str,
-    out: dict[int, dict[str, bytes]],
-) -> None:
-    """Build group-``g``-local mini streams for ``type_id``'s subtree by
-    seeking each node's streams via ITS OWN row-index positions, then
-    recursing with each child's group value count (present count for
-    struct children, summed lengths for list/map elements, per-variant
-    tag counts for unions) — the TreeReader seek recursion.  ``n_node``
-    is this node's value count in its own value space for the group.
-    The minis feed :func:`_decode_tree` unchanged."""
-    from ..kernels import byterle
+class _GroupStreams(_StripeStreams):
+    """The streams of the consecutive row groups ``g0..g1`` of one stripe,
+    each read from its node's row-index entry ``g0`` (see the inflate
+    bound above)."""
 
-    type_pb = types[type_id]
-    tk = _TYPE_KINDS[type_pb.get(1, [0])[0]]
-    enc_kind = encodings[type_id].get(1, [0])[0]
-    entries = row_index.get(type_id, [])
-    positions = list(entries[g]) if g < len(entries) else []
-    mini: dict[str, bytes] = {}
+    def __init__(self, types, encodings, writer_tz, stored, row_index, g0, g1, kind):
+        super().__init__(types, encodings, writer_tz, stored)
+        self.row_index, self.g0, self.g1, self.kind = row_index, g0, g1, kind
+        self._positions: dict[tuple[int, int], dict] = {}
 
-    def take(count: int) -> list[int]:
-        got, positions[:count] = positions[:count], []
-        return got
+    def _entry(self, tid: int, g: int) -> dict[str, tuple[int, int, int, int]]:
+        """Stream kind -> (chunk, offset in chunk, used, bits) of row group
+        ``g``, consuming the entry's positions in stream order."""
+        if (tid, g) not in self._positions:
+            tk = _TYPE_KINDS[self.types[tid].get(1, [0])[0]]
+            enc_kind = self.encodings[tid].get(1, [0])[0]
+            entries = self.row_index.get(tid, [])
+            pos = entries[g] if g < len(entries) else []
+            at = 0
+            out = {}
+            for skind in self.per_col.get(tid, {}):
+                if _stripe_level(skind, enc_kind):
+                    continue
+                coder = _stream_coder(tk, skind, enc_kind)
+                width = (1 if self.kind == "NONE" else 2) + (
+                    2 if coder == "bits" else 0 if coder == "raw" else 1
+                )
+                p = pos[at : at + width]
+                at += width
+                if len(p) < width:
+                    raise ValueError(
+                        f"orcread: row-index entry {g} of column {tid} is short"
+                    )
+                if self.kind == "NONE":
+                    p = [0, *p]  # the offset is into the stream's one chunk
+                used = p[2] if len(p) > 2 else 0
+                bits = p[3] if len(p) > 3 else 0
+                out[skind] = (p[0], p[1], used, bits)
+            self._positions[tid, g] = out
+        return self._positions[tid, g]
 
-    n_present = n_node
-    lengths_g = None
-    for skind, (whole, c_starts, u_starts) in inflated_streams(type_id):
-        # dictionary streams are stripe-level: no positions recorded
-        if skind == "DICTIONARY_DATA" or (skind == "LENGTH" and enc_kind in (1, 3)):
-            mini[skind] = whole
-            continue
-        if kind == "NONE":
-            (off,) = take(1)
-        else:
-            c_off, in_block = take(2)
-            ci = int(np.searchsorted(c_starts, c_off, "right")) - 1
-            off = int(u_starts[ci]) + in_block
-        coder = _stream_coder(tk, skind, enc_kind)
-        if skind == "PRESENT" or (tk == "union" and skind == "DATA"):
-            n_need = n_node  # row space of this node
-        else:
-            n_need = n_present  # non-null value space
-        if coder == "bits":
-            (used, bits) = take(2)
-            nbits = used * 8 + bits + n_need
-            flags = bitfield.decode(memoryview(whole)[off:], nbits)[
-                used * 8 + bits :
-            ]
-            mini[skind] = bitfield.encode(flags)
-            if skind == "PRESENT":
-                n_present = int(flags.sum())
-        elif coder == "byte":
-            (used,) = take(1)
-            vals = byterle.decode(memoryview(whole)[off:], used + n_need)[used:]
-            mini[skind] = byterle.encode(vals)
-        elif coder == "rle":
-            (used,) = take(1)
-            rle = rlev1 if enc_kind in (0, 1) else rlev2
-            signed = _rle_signed(tk, skind)
-            vals = rle.decode(
-                memoryview(whole)[off:], used + n_need, signed=signed
-            )[used:]
-            if skind == "LENGTH":
-                lengths_g = vals
-            mini[skind] = rle.encode(vals, signed=signed)
-        else:  # raw
-            if tk in ("float", "double") and skind == "DATA":
-                w = 8 if tk == "double" else 4
-                mini[skind] = whole[off : off + n_need * w]
-            elif skind == "DATA" and lengths_g is not None:
-                mini[skind] = whole[off : off + int(lengths_g.sum())]
-            else:
-                # decimal varint DATA (self-delimiting) or string DATA
-                # before LENGTH: slice to end, the decoder consumes what
-                # it needs
-                mini[skind] = whole[off:]
-    out[type_id] = mini
-    if tk not in ("struct", "list", "map", "union"):
-        return
-    subtypes = _packed_varints(type_pb[2][0]) if 2 in type_pb else []
-    if tk == "struct":
-        child_counts = [n_present] * len(subtypes)
-    elif tk == "union":
-        tags = byterle.decode(mini["DATA"], n_node) if n_node else np.zeros(0, np.uint8)
-        child_counts = [int((tags == i).sum()) for i in range(len(subtypes))]
-    else:  # list / map
-        total = int(lengths_g.sum()) if lengths_g is not None else 0
-        child_counts = [total] * len(subtypes)
-    for sid, cn in zip(subtypes, child_counts):
-        _seek_mini_subtree(
-            sid, types, encodings, inflated_streams, row_index, g, cn, kind, out
-        )
+    def stream(self, tid: int, skind: str, nbytes: int | None = None):
+        st = self.per_col[tid][skind]
+        enc_kind = self.encodings[tid].get(1, [0])[0]
+        if _stripe_level(skind, enc_kind):
+            return st.read((0, 0)), 0, 0
+        c, off, used, bits = self._entry(tid, self.g0)[skind]
+        if nbytes is not None:  # a raw range of known length
+            return st.read((c, off), (c, off + nbytes)), used, bits
+        if self.g1 + 1 >= len(self.row_index.get(tid, [])):
+            return st.read((c, off)), used, bits  # the stripe's last group
+        nc, noff, nused, nbits = self._entry(tid, self.g1 + 1)[skind]
+        tk = _TYPE_KINDS[self.types[tid].get(1, [0])[0]]
+        extra = _RUN_BYTES[_stream_coder(tk, skind, enc_kind)] if nused or nbits else 0
+        return st.read((c, off), (nc, noff), extra), used, bits
 
 
 def read_orc_row_groups(
@@ -686,15 +747,21 @@ def read_orc_row_groups(
 ) -> pa.Table:
     """Decode only the requested row groups (global, file-order indices
     of ``rowIndexStride`` spans) of a row-indexed ORC file, seeking into
-    every stream via the file's own ROW_INDEX positions.  The selective
-    analog of :func:`read_orc`; flat leaf columns only."""
+    every stream of every node via the file's own ROW_INDEX positions.
+    The selective analog of :func:`read_orc`: each run of consecutive kept
+    groups is decoded once, straight from its seek positions to Arrow,
+    and only the compression chunks its values live in are inflated (the
+    bound is described above ``_Stream``)."""
     with open(path, "rb") as f:
         data = f.read()
-    ps_len = data[-1]
-    ps = _parse_pb(data[-1 - ps_len : -1])
-    footer_len = ps[1][0]
-    kind = _KINDS[ps.get(2, [0])[0]]
-    footer = _parse_pb(_inflate(data[-1 - ps_len - footer_len : -1 - ps_len], kind))
+    _ps, kind, footer = _tail(data)
+    return _read_row_groups(data, kind, footer, groups, columns)
+
+
+def _read_row_groups(
+    data: bytes, kind: str, footer: dict, groups: list[int],
+    columns: list[str] | None,
+) -> pa.Table:
     stride = footer.get(8, [0])[0]
     if not stride:
         raise ValueError("read_orc_row_groups: file has no row index")
@@ -704,49 +771,20 @@ def read_orc_row_groups(
     names = [bytes(b).decode() for b in root.get(3, [])]
     sel_names = names if columns is None else list(columns)
     sel = [(i, names[i]) for i in range(len(names)) if names[i] in sel_names]
-    stripes = []
-    for s in footer.get(3, []):
-        sp = _parse_pb(s)
-        stripes.append(
-            {
-                "offset": sp[1][0],
-                "index_len": sp.get(2, [0])[0],
-                "data_len": sp[3][0],
-                "footer_len": sp[4][0],
-                "n_rows": sp[5][0],
-            }
-        )
     want = set(groups)
     col_chunks: dict[int, list[pa.Array]] = {i: [] for i, _ in sel}
     g_base = 0
-    for st in stripes:
+    for st in _stripes(footer):
         n_rows = st["n_rows"]
         n_gr = (n_rows + stride - 1) // stride
-        local = [g - g_base for g in want if g_base <= g < g_base + n_gr]
+        local = sorted(g - g_base for g in want if g_base <= g < g_base + n_gr)
         g_base += n_gr
         if not local:
             continue
-        base = st["offset"]
-        sf = _parse_pb(
-            _inflate(
-                data[base + st["index_len"] + st["data_len"] :
-                     base + st["index_len"] + st["data_len"] + st["footer_len"]],
-                kind,
-            )
-        )
-        stream_pbs = [_parse_pb(x) for x in sf.get(1, [])]
-        encodings = [_parse_pb(x) for x in sf.get(2, [])]
-        writer_tz = bytes(sf[3][0]).decode() if 3 in sf else "UTC"
-        # stream payload spans + ROW_INDEX blobs, in file order
-        pos = base
-        per_col_raw: dict[int, list[tuple[str, bytes]]] = {}
+        sf, streams = _stripe_directory(data, st, kind)
+        stored: dict[int, dict[str, _Stream]] = {}
         row_index: dict[int, list[list[int]]] = {}
-        for stream in stream_pbs:
-            skind = _STREAM_KIND.get(stream.get(1, [0])[0], "?")
-            col = stream.get(2, [0])[0]
-            ln = stream.get(3, [0])[0]
-            blob = data[pos : pos + ln]
-            pos += ln
+        for skind, col, blob in streams:
             if skind == "ROW_INDEX":
                 ri = _parse_pb(_inflate(blob, kind))
                 entries = []
@@ -756,33 +794,23 @@ def read_orc_row_groups(
                         _packed_varints(epb[1][0]) if 1 in epb else []
                     )
                 row_index[col] = entries
-            elif skind in ("BLOOM_FILTER", "BLOOM_FILTER_UTF8", "?"):
-                continue
+            elif skind not in _INDEX_KINDS:
+                stored.setdefault(col, {})[skind] = _Stream(blob, kind)
+        encodings = [_parse_pb(x) for x in sf.get(2, [])]
+        # runs of consecutive kept groups, each decoded as one span
+        runs = []
+        for g in local:
+            if runs and runs[-1][1] == g - 1:
+                runs[-1][1] = g
             else:
-                per_col_raw.setdefault(col, []).append((skind, blob))
-        inflate_cache: dict[int, list[tuple[str, tuple]]] = {}
-
-        def inflated_streams(col: int) -> list[tuple[str, tuple]]:
-            if col not in inflate_cache:
-                inflate_cache[col] = [
-                    (skind, _inflate_with_map(blob, kind))
-                    for skind, blob in per_col_raw.get(col, [])
-                ]
-            return inflate_cache[col]
-
-        for i, _name in sel:
-            tid = subtypes[i]
-            for g in sorted(local):
-                rows_g = min(stride, n_rows - g * stride)
-                mini_per_col: dict[int, dict[str, bytes]] = {}
-                _seek_mini_subtree(
-                    tid, types, encodings, inflated_streams, row_index,
-                    g, rows_g, kind, mini_per_col,
-                )
-                arr = _decode_tree(
-                    tid, types, mini_per_col, encodings, rows_g, writer_tz
-                )
-                col_chunks[i].append(arr)
+                runs.append([g, g])
+        for g0, g1 in runs:
+            src = _GroupStreams(
+                types, encodings, _writer_tz(sf), stored, row_index, g0, g1, kind
+            )
+            rows = min((g1 + 1) * stride, n_rows) - g0 * stride
+            for i, _name in sel:
+                col_chunks[i].append(_decode_tree(subtypes[i], rows, src))
     out_cols = []
     out_names = []
     for i, name in sel:
@@ -851,11 +879,7 @@ def read_orc_statistics(
     read — no stripe bytes are touched."""
     with open(path, "rb") as f:
         data = f.read()
-    ps_len = data[-1]
-    ps = _parse_pb(data[-1 - ps_len : -1])
-    footer_len = ps[1][0]
-    kind = _KINDS[ps.get(2, [0])[0]]
-    footer = _parse_pb(_inflate(data[-1 - ps_len - footer_len : -1 - ps_len], kind))
+    ps, kind, footer = _tail(data)
     file_stats = [_stats_from_pb(_parse_pb(s)) for s in footer.get(7, [])]
     user_meta: dict[str, bytes] = {}
     for item in footer.get(5, []):
@@ -864,7 +888,7 @@ def read_orc_statistics(
     stripe_stats: list[list[dict]] = []
     meta_len = ps.get(5, [0])[0]
     if meta_len:
-        meta_end = len(data) - 1 - ps_len - footer_len
+        meta_end = len(data) - 1 - data[-1] - ps[1][0]
         meta = _parse_pb(_inflate(data[meta_end - meta_len : meta_end], kind))
         for ss in meta.get(1, []):
             stripe_stats.append(
@@ -890,11 +914,7 @@ def read_orc_filtered(
 
     with open(path, "rb") as f:
         data = f.read()
-    ps_len = data[-1]
-    ps = _parse_pb(data[-1 - ps_len : -1])
-    footer_len = ps[1][0]
-    kind = _KINDS[ps.get(2, [0])[0]]
-    footer = _parse_pb(_inflate(data[-1 - ps_len - footer_len : -1 - ps_len], kind))
+    ps, kind, footer = _tail(data)
     stride = footer.get(8, [0])[0]
     if not stride:
         raise ValueError("read_orc_filtered: file has no row index")
@@ -906,7 +926,7 @@ def read_orc_filtered(
     meta_len = ps.get(5, [0])[0]
     stripe_level_stats: list[list[dict]] = []
     if meta_len:
-        meta_end = len(data) - 1 - ps_len - footer_len
+        meta_end = len(data) - 1 - data[-1] - ps[1][0]
         meta = _parse_pb(_inflate(data[meta_end - meta_len : meta_end], kind))
         for ss in meta.get(1, []):
             cols_pb = _parse_pb(ss).get(1, [])
@@ -924,12 +944,8 @@ def read_orc_filtered(
     keep_groups: list[int] = []
     g_base = 0
     n_total = 0
-    for s_i, s in enumerate(footer.get(3, [])):
-        sp = _parse_pb(s)
-        st_off, st_idx = sp[1][0], sp.get(2, [0])[0]
-        st_data, st_foot = sp[3][0], sp[4][0]
-        st_rows = sp[5][0]
-        n_gr = (st_rows + stride - 1) // stride
+    for s_i, st in enumerate(_stripes(footer)):
+        n_gr = (st["n_rows"] + stride - 1) // stride
         n_total += n_gr
         if s_i < len(stripe_level_stats):
             ss = stripe_level_stats[s_i]
@@ -943,22 +959,13 @@ def read_orc_filtered(
                 # index bytes are never read
                 g_base += n_gr
                 continue
-        sf = _parse_pb(
-            _inflate(
-                data[st_off + st_idx + st_data : st_off + st_idx + st_data + st_foot],
-                kind,
-            )
-        )
+        _sf, streams = _stripe_directory(data, st, kind)
         # per-column row-index entry stats for the predicate's columns
         entry_stats: dict[str, list[dict]] = {}
         entry_blooms: dict[str, list] = {}
-        pos = st_off
-        for stream in (_parse_pb(x) for x in sf.get(1, [])):
-            skind = _STREAM_KIND.get(stream.get(1, [0])[0], "?")
-            col = stream.get(2, [0])[0]
-            ln = stream.get(3, [0])[0]
+        for skind, col, blob in streams:
             if skind == "ROW_INDEX" and col in pred_cols.values():
-                ri = _parse_pb(_inflate(data[pos : pos + ln], kind))
+                ri = _parse_pb(_inflate(blob, kind))
                 name = names[subtypes.index(col)]
                 stats = []
                 for e in ri.get(1, []):
@@ -971,10 +978,7 @@ def read_orc_filtered(
                 # the reference writer's own per-row-group bloom filters
                 # refute =/IN probes the min/max stats cannot
                 name = names[subtypes.index(col)]
-                entry_blooms[name] = _parse_bloom_index(
-                    _inflate(data[pos : pos + ln], kind)
-                )
-            pos += ln
+                entry_blooms[name] = _parse_bloom_index(_inflate(blob, kind))
         for g in range(n_gr):
             col_stats = {
                 name: st[g]
@@ -994,12 +998,12 @@ def read_orc_filtered(
                 keep_groups.append(g_base + g)
         g_base += n_gr
     if keep_groups:
-        table = read_orc_row_groups(path, keep_groups, columns=columns)
+        table = _read_row_groups(data, kind, footer, keep_groups, columns)
     elif n_total:
         # typed empty result: decode one group for the schema, keep 0 rows
-        table = read_orc_row_groups(path, [0], columns=columns).slice(0, 0)
+        table = _read_row_groups(data, kind, footer, [0], columns).slice(0, 0)
     else:
-        table = read_orc_row_groups(path, [], columns=columns)
+        table = _read_row_groups(data, kind, footer, [], columns)
     return table, n_total, len(keep_groups)
 
 

@@ -20,6 +20,7 @@ import numpy as np
 MIN_REPEAT = 3
 MAX_REPEAT = 130
 MAX_LITERAL = 128
+MAX_RUN_BYTES = 1 + MAX_LITERAL  # a literal run: control byte + 128 bytes
 
 
 def encode(values: np.ndarray) -> bytes:
@@ -107,16 +108,22 @@ def _emit_literals(out: bytearray, chunk: bytes) -> None:
 
 
 def decode(data: bytes | memoryview, n: int) -> np.ndarray:
+    """Decode ``n`` bytes; data that ends before them raises ``ValueError``."""
     out = np.empty(n, dtype=np.uint8)
     pos = 0
     filled = 0
     # cast('B'): pa.Buffer exports a SIGNED 'b' memoryview — indexing
     # would yield negative ints for bytes >= 0x80 and misparse headers
     data = memoryview(data).cast("B")
+    end = len(data)
     while filled < n:
+        if pos >= end:
+            break
         c = data[pos]
         pos += 1
         if c < 128:
+            if pos >= end:
+                break
             # clamp: a seek-based decode may need fewer values than the
             # final run/literal chunk holds
             run = min(c + MIN_REPEAT, n - filled)
@@ -125,7 +132,13 @@ def decode(data: bytes | memoryview, n: int) -> np.ndarray:
             filled += run
         else:
             lit = min(256 - c, n - filled)
+            if pos + lit > end:
+                break
             out[filled : filled + lit] = np.frombuffer(data[pos : pos + lit], np.uint8)
             pos += lit
             filled += lit
+    if filled < n:
+        raise ValueError(
+            f"byte-RLE stream truncated: data ends after {filled} of {n} values"
+        )
     return out

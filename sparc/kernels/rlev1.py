@@ -23,6 +23,8 @@ from .util import read_vulong, write_vslong, write_vulong
 MIN_REPEAT = 3
 MAX_REPEAT = 130
 MAX_LITERAL = 128
+# Most bytes one run can take: a literal run of 128 ten-byte varints.
+MAX_RUN_BYTES = 1 + MAX_LITERAL * 10
 
 
 def encode(values: np.ndarray, signed: bool = True) -> bytes:
@@ -81,30 +83,37 @@ def encode(values: np.ndarray, signed: bool = True) -> bytes:
 
 
 def decode(data: bytes | memoryview, n: int, signed: bool = True) -> np.ndarray:
+    """Decode ``n`` values.  ``n`` may stop inside the last run (a seek
+    reads only a row group's values); data that ends before ``n`` values
+    raises ``ValueError``."""
     out = np.empty(n, dtype=np.int64)
     data = memoryview(data).cast("B")  # unsigned: pa.Buffer views are 'b'
     pos = 0
     filled = 0
-    while filled < n:
-        c = data[pos]
-        pos += 1
-        if c < 128:
-            run = c + MIN_REPEAT
-            delta = data[pos]
-            if delta >= 128:
-                delta -= 256
+    try:
+        while filled < n:
+            c = data[pos]
             pos += 1
-            base, pos = read_vulong(data, pos)
-            if signed:
-                base = (base >> 1) ^ -(base & 1)
-            out[filled : filled + run] = base + delta * np.arange(run, dtype=np.int64)
-            filled += run
-        else:
-            k = 256 - c
-            for j in range(k):
-                val, pos = read_vulong(data, pos)
+            if c < 128:
+                run = min(c + MIN_REPEAT, n - filled)
+                delta = data[pos]
+                if delta >= 128:
+                    delta -= 256
+                pos += 1
+                base, pos = read_vulong(data, pos)
                 if signed:
-                    val = (val >> 1) ^ -(val & 1)
-                out[filled + j] = val
-            filled += k
+                    base = (base >> 1) ^ -(base & 1)
+                out[filled : filled + run] = base + delta * np.arange(run, dtype=np.int64)
+                filled += run
+            else:
+                for _ in range(min(256 - c, n - filled)):
+                    val, pos = read_vulong(data, pos)
+                    if signed:
+                        val = (val >> 1) ^ -(val & 1)
+                    out[filled] = val
+                    filled += 1
+    except IndexError as exc:  # a read past the end
+        raise ValueError(
+            f"RLEv1 stream truncated: data ends after {filled} of {n} values"
+        ) from exc
     return out

@@ -28,6 +28,8 @@ varint in DELTA.
 
 from __future__ import annotations
 
+from bisect import bisect_right
+
 import numpy as np
 
 from . import bitpack
@@ -54,6 +56,14 @@ MAX_SCOPE = 512
 MIN_REPEAT = 3
 MAX_SHORT_REPEAT_LENGTH = 10
 BASE_VALUE_LIMIT = 1 << 56
+# Values per batched plan when encoding with cuts.  Larger batches pay the
+# planner's fixed cost less often, but their temporaries outgrow what the
+# allocator keeps mapped: on a 4-vCPU Xeon VM a 75,000-value plan took
+# ~1,800 page faults per call and ran slower than 8 per-group calls.
+BATCH_VALUES = 40_000
+# Most bytes one run can take: a PATCHED_BASE header (4), an 8-byte base,
+# 512 values at 64 bits and 31 patch entries at 64 bits.
+MAX_RUN_BYTES = 4 + 8 + MAX_SCOPE * 8 + 31 * 8
 
 # Minimum fixed-delta run length worth breaking a variable segment for.
 # The reference extracts runs at MIN_REPEAT=3 because its per-value state
@@ -71,13 +81,44 @@ _SHORT_REPEAT, _DIRECT, _PATCHED_BASE, _DELTA = 0, 1, 2, 3
 # ---------------------------------------------------------------------------
 
 
-def encode(values: np.ndarray, signed: bool, aligned: bool = False) -> bytes:
-    """Encode an int64 array to an RLEv2 byte stream."""
+def encode(
+    values: np.ndarray, signed: bool, aligned: bool = False, cuts=None
+) -> bytes | list[bytes]:
+    """Encode an int64 array to an RLEv2 byte stream.
+
+    With ``cuts`` (ascending value offsets, as for ``np.split``) the array is
+    cut into ``len(cuts) + 1`` groups and one stream per group is returned,
+    each byte-identical to encoding that group alone: runs and 512-value
+    chunks restart at every cut.  This is what a row-indexed writer needs,
+    whose streams restart at every row group.  Consecutive groups are
+    planned together in batches of up to ``BATCH_VALUES`` values, so the
+    planner's fixed cost is paid once per batch, not once per group.
+    """
     v = np.ascontiguousarray(values, dtype=I64)
+    if cuts is None:
+        return _encode_groups(v, [0, v.size], signed, aligned)[0]
+    bounds = [0, *(int(c) for c in cuts), v.size]
+    blobs: list[bytes] = []
+    g = 0
+    while g < len(bounds) - 1:
+        end = g + 1
+        while end < len(bounds) - 1 and bounds[end + 1] - bounds[g] <= BATCH_VALUES:
+            end += 1
+        base = bounds[g]
+        blobs += _encode_groups(
+            v[base : bounds[end]], [b - base for b in bounds[g : end + 1]],
+            signed, aligned,
+        )
+        g = end
+    return blobs
+
+
+def _encode_groups(
+    v: np.ndarray, bounds: list[int], signed: bool, aligned: bool
+) -> list[bytes]:
+    """One stream per group ``v[bounds[k]:bounds[k + 1]]``, from one
+    segmentation and one batched plan of every group's variable segments."""
     n = v.size
-    out = bytearray()
-    if n == 0:
-        return b""
 
     # --- vectorized segmentation ------------------------------------------
     # deltas in wrap-safe uint64; a delta run of length L covers L+1 values
@@ -89,9 +130,15 @@ def encode(values: np.ndarray, signed: bool, aligned: bool = False) -> bytes:
     d_i = d.view(I64)
     safe = ((v[1:] >= v[:-1]) & (d_i >= 0)) | ((v[1:] < v[:-1]) & (d_i < 0))
 
-    # maximal runs of equal delta
+    # maximal runs of equal delta; the delta across a cut (index c-1) is a
+    # run of its own, too short to extract, so no run spans two groups
     if d.size:
-        change = np.flatnonzero(d[1:] != d[:-1]) + 1
+        differs = d[1:] != d[:-1]  # differs[i]: a run starts at d[i + 1]
+        if len(bounds) > 2:
+            at_cuts = np.array(bounds[1:-1], dtype=np.int64)
+            at_cuts = np.concatenate((at_cuts - 2, at_cuts - 1))
+            differs[at_cuts[(at_cuts >= 0) & (at_cuts < differs.size)]] = True
+        change = np.flatnonzero(differs) + 1
         rstarts = np.concatenate(([0], change))  # index into d
         rends = np.concatenate((change, [d.size]))
         rlens = rends - rstarts  # in deltas; values covered = rlens + 1
@@ -100,43 +147,62 @@ def encode(values: np.ndarray, signed: bool, aligned: bool = False) -> bytes:
         rstarts = rends = rlens = np.empty(0, dtype=np.int64)
         good = np.empty(0, dtype=bool)
 
-    good_idx = np.flatnonzero(good)
+    # the stream as ops in value order: variable segments (split at cuts)
+    # and extracted fixed-delta runs
+    ops: list[tuple[int, int, int | None]] = []  # (lo, hi, run delta)
+
+    def variable(lo: int, hi: int) -> None:
+        while lo < hi:
+            end = min(hi, bounds[bisect_right(bounds, lo)])
+            ops.append((lo, end, None))
+            lo = end
+
     pos = 0
-    for gi in good_idx.tolist():
+    for gi in np.flatnonzero(good).tolist():
         s = int(rstarts[gi])  # first value index of the run
         e = int(rends[gi])  # last value index is e (d indices s..e-1)
         start = max(pos, s)
         if e - start + 1 < MIN_EXTRACT_RUN:
             continue
-        if start > pos:
-            _encode_variable(out, v[pos:start], signed, aligned)
-        _encode_fixed_delta_run(out, v[start : e + 1], int(d_i[s]), signed)
+        variable(pos, start)
+        ops.append((start, e + 1, int(d_i[s])))
         pos = e + 1
-    if pos < n:
-        _encode_variable(out, v[pos:n], signed, aligned)
-    return bytes(out)
+    variable(pos, n)
+
+    spans = [(lo, hi) for lo, hi, delta in ops if delta is None]
+    var_blobs = iter(_encode_variable(v, spans, signed, aligned))
+    out = bytearray()
+    ends = [0]  # group k's stream is out[ends[k]:ends[k + 1]]
+    for lo, hi, delta in ops:
+        while lo >= bounds[len(ends)]:
+            ends.append(len(out))
+        if delta is None:
+            out += next(var_blobs)
+        else:
+            _encode_fixed_delta_run(out, v[lo:hi], delta, signed)
+    ends += [len(out)] * (len(bounds) - len(ends))
+    if len(ends) == 2:
+        return [bytes(out)]
+    return [bytes(out[a:b]) for a, b in zip(ends, ends[1:])]
 
 
 def _encode_fixed_delta_run(
     out: bytearray, run: np.ndarray, delta: int, signed: bool
 ) -> None:
-    """Emit a fixed-delta run (len>=3) as SHORT_REPEAT/DELTA, split at 512."""
+    """Emit a fixed-delta run (len >= MIN_EXTRACT_RUN) as SHORT_REPEAT/DELTA,
+    split at 512 without stranding a tail shorter than MIN_REPEAT."""
     n = run.size
     pos = 0
     while pos < n:
         chunk = min(n - pos, MAX_SCOPE)
-        if n - pos - chunk in (1, 2):  # avoid stranding a <3 tail
-            chunk = n - pos - MIN_REPEAT if n - pos - MIN_REPEAT >= MIN_REPEAT else chunk
-            chunk = max(chunk, MIN_REPEAT)
+        if n - pos - chunk in (1, 2):  # leave MIN_REPEAT for the tail
+            chunk = n - pos - MIN_REPEAT
         sub = run[pos : pos + chunk]
-        if chunk < MIN_REPEAT:
-            _encode_variable(out, sub, signed, False)
-        elif delta == 0 and chunk <= MAX_SHORT_REPEAT_LENGTH:
+        if delta == 0 and chunk <= MAX_SHORT_REPEAT_LENGTH:
             _write_short_repeat(out, int(sub[0]), chunk, signed)
         else:
             _write_fixed_delta(out, int(sub[0]), delta, chunk, signed)
         pos += chunk
-    return
 
 
 def _write_short_repeat(out: bytearray, value: int, count: int, signed: bool) -> None:
@@ -195,36 +261,55 @@ def _chunk_percentile_widths(bits: np.ndarray, cn: np.ndarray) -> np.ndarray:
 
 
 def _encode_variable(
-    out: bytearray, seg: np.ndarray, signed: bool, aligned: bool
-) -> None:
-    """Encode a segment with no long fixed-delta runs: chunk at 512 and pick
-    DIRECT / PATCHED_BASE / (monotonic) DELTA per chunk by computed size.
+    v: np.ndarray, spans: list[tuple[int, int]], signed: bool, aligned: bool
+) -> list[bytes]:
+    """Encode segments with no long fixed-delta runs, one stream per
+    ``(lo, hi)`` span of ``v``: chunk each span at 512 and pick DIRECT /
+    PATCHED_BASE / (monotonic) DELTA per chunk by computed size.
 
-    One batched plan covers every chunk, the short tail included: each
-    derived array (zigzag, bit widths, per-chunk min/max, base-reduced
-    values, width histograms) is computed once per segment and every
-    candidate size is a vector op over chunks.  Payloads are bit-packed
-    with one ``bitpack.pack`` call per width (:func:`_pack_pieces`); the
-    Python loop per chunk only writes header bytes and a slice of that
-    output.
+    One batched plan covers every chunk of every span, short tails
+    included: each derived array (zigzag, bit widths, per-chunk min/max,
+    base-reduced values, width histograms) is computed once per call and
+    every candidate size is a vector op over chunks.  Payloads are
+    bit-packed with one ``bitpack.pack`` call per width
+    (:func:`_pack_pieces`); the Python loop per chunk only writes header
+    bytes and a slice of that output.
     """
+    if not spans:
+        return []
+    if len(spans) == 1:
+        seg = v[spans[0][0] : spans[0][1]]
+    else:
+        seg = np.concatenate([v[lo:hi] for lo, hi in spans])
     n = seg.size
-    if n == 0:
-        return
     fit = CLOSEST_ALIGNED_BITS if aligned else CLOSEST_FIXED_BITS
-    starts = np.arange(0, n, MAX_SCOPE)
-    nch = starts.size
-    tail = n - (nch - 1) * MAX_SCOPE
-    cn = np.full(nch, MAX_SCOPE)
-    cn[-1] = tail
+    # chunk k starts at starts[k] of the concatenation and holds cn[k]
+    # values; every span is chunked from its own start.  Laid out in
+    # Python: spans are few, and each small numpy call costs microseconds
+    starts_l: list[int] = []
+    cns: list[int] = []
+    span_chunks: list[int] = []  # per span, the end of its chunk range
+    end = 0
+    for lo, hi in spans:
+        first = len(starts_l)
+        starts_l += range(end, end + hi - lo, MAX_SCOPE)
+        cns += [MAX_SCOPE] * (len(starts_l) - first)
+        end += hi - lo
+        cns[-1] = end - starts_l[-1]
+        span_chunks.append(len(starts_l))
+    nch = len(starts_l)
+    starts = np.array(starts_l)
+    cn = np.array(cns)
     last = starts + (cn - 1)
     u = seg.view(U64)
     zz = zigzag_encode(seg) if signed else u
     # d[i] = v[i+1] - v[i], wrapping like the reference's long; chunk k
     # owns d[start_k .. last_k - 1], d[last_k] leads into the next chunk
+    # (zero after a span's last value)
     d = np.empty(n, dtype=I64)
     np.subtract(seg[1:], seg[:-1], out=d[:-1])
-    d[-1] = 0
+    for k in span_chunks:
+        d[starts_l[k - 1] + cns[k - 1] - 1] = 0
     d0 = d[starts]
     absd = np.abs(d).view(U64)
     vmin = np.minimum.reduceat(seg, starts)
@@ -276,8 +361,9 @@ def _encode_variable(
     flat = d0 == 0
     const = fixed & flat
     mono = ((dmin >= 0) | (dmax <= 0)) & ~flat
-    if tail < MIN_REPEAT:
-        const[-1] = mono[-1] = False
+    for k in span_chunks:  # only a span's tail chunk can be that short
+        if cns[k - 1] < MIN_REPEAT:
+            const[k - 1] = mono[k - 1] = False
     delta_w = np.maximum(fit[dmax_bits], 2)  # width 1: code 0 means fixed delta
     head = np.maximum((varint_bits + 6) // 7, 1).reshape(2, nch)
     size_delta = head.sum(axis=0) + 2 + ~fixed * (((cn - 2) * delta_w + 7) // 8)
@@ -300,7 +386,7 @@ def _encode_variable(
     if try_patched.any():
         data_w = fit[br95]
         ppos = np.flatnonzero(need > np.repeat(data_w, cn))
-        pc = ppos // MAX_SCOPE
+        pc = np.searchsorted(starts, ppos, "right") - 1
         npatch = np.bincount(pc, minlength=nch)
         pure = npatch == 0
         patch_w = CLOSEST_FIXED_BITS[np.maximum(br100 - data_w, 0)]
@@ -353,15 +439,14 @@ def _encode_variable(
     plans = plan.tolist()
 
     # --- payloads: one bit-pack per width --------------------------------
-    cns = [MAX_SCOPE] * (nch - 1) + [tail]
     pieces = []  # (source, start, count, width)
     for k, p in enumerate(plans):
         if p == _PLAN_DIRECT:
-            pieces.append((zz, k * MAX_SCOPE, cns[k], width[k]))
+            pieces.append((zz, starts_l[k], cns[k], width[k]))
         elif p == _PLAN_DELTA:  # |delta| from the chunk's second delta
-            pieces.append((absd, k * MAX_SCOPE + 1, cns[k] - 2, width[k]))
+            pieces.append((absd, starts_l[k] + 1, cns[k] - 2, width[k]))
         elif p == _PLAN_PATCHED:  # pack keeps the low data_w bits
-            pieces.append((br, k * MAX_SCOPE, cns[k], width[k]))
+            pieces.append((br, starts_l[k], cns[k], width[k]))
     ndata = len(pieces)
     with_entries: list[int] = []
     if _PLAN_PATCHED in plans and (sel := plan[pc] == _PLAN_PATCHED).any():
@@ -388,6 +473,8 @@ def _encode_variable(
     entries = dict(zip(with_entries, packed[ndata:]))
 
     # --- headers and payload slices ----------------------------------------
+    out = bytearray()
+    chunk_end = []
     if _PLAN_PATCHED in plans:
         base_bytes = ((base_bits + 8) // 8).tolist()
         patch_wl, gap_wl, n_entl = patch_w.tolist(), gap_w.tolist(), n_entries.tolist()
@@ -423,6 +510,10 @@ def _encode_variable(
             _write_short_repeat(out, v0, c, signed)
         else:
             _write_fixed_delta(out, v0, 0, c, signed)
+        chunk_end.append(len(out))
+    mv = memoryview(out)
+    bounds = [0] + [chunk_end[k - 1] for k in span_chunks]
+    return [mv[a:b] for a, b in zip(bounds, bounds[1:])]
 
 
 def _pack_pieces(pieces: list) -> list:
@@ -464,97 +555,107 @@ def decode(data: bytes | memoryview, n: int, signed: bool) -> np.ndarray:
     ``n`` may be smaller than the encoded count (partial read): the final
     run is truncated, mirroring the reference reader's ability to stop
     mid-run (RunLengthIntegerReaderV2.nextVector honors the batch size).
+    Data that ends before ``n`` values raises ``ValueError``.
     """
     out = np.empty(n, dtype=I64)
     data = bytes(data)
     pos = 0
     filled = 0
-    while filled < n:
-        header = data[pos]
-        mode = header >> 6
-        if mode == _SHORT_REPEAT:
-            nbytes = ((header >> 3) & 0x7) + 1
-            count = min((header & 0x7) + MIN_REPEAT, n - filled)
-            u = int.from_bytes(data[pos + 1 : pos + 1 + nbytes], "big")
-            val = ((u >> 1) ^ -(u & 1)) if signed else to_signed64(u)
-            out[filled : filled + count] = val
-            pos += 1 + nbytes
-            filled += count
-        elif mode == _DIRECT:
-            width = decode_bit_width((header >> 1) & 0x1F)
-            count = (((header & 1) << 8) | data[pos + 1]) + 1
-            pos += 2
-            nb = bitpack.packed_size(count, width)
-            zz = bitpack.unpack(data[pos : pos + nb], count, width)
-            take = min(count, n - filled)
-            out[filled : filled + take] = (
-                zigzag_decode(zz) if signed else zz.view(I64)
-            )[:take]
-            pos += nb
-            filled += take
-        elif mode == _PATCHED_BASE:
-            width = decode_bit_width((header >> 1) & 0x1F)
-            count = (((header & 1) << 8) | data[pos + 1]) + 1
-            b3, b4 = data[pos + 2], data[pos + 3]
-            base_bytes = (b3 >> 5) + 1
-            patch_width = decode_bit_width(b3 & 0x1F)
-            gap_width = (b4 >> 5) + 1
-            pll = b4 & 0x1F
-            pos += 4
-            base_field = int.from_bytes(data[pos : pos + base_bytes], "big")
-            sign_mask = 1 << (8 * base_bytes - 1)
-            base = -(base_field & ~sign_mask) if base_field & sign_mask else base_field
-            pos += base_bytes
-            nb = bitpack.packed_size(count, width)
-            br = bitpack.unpack(data[pos : pos + nb], count, width)
-            pos += nb
-            entry_width = closest_fixed_bits(gap_width + patch_width)
-            nb = bitpack.packed_size(pll, entry_width)
-            entries = bitpack.unpack(data[pos : pos + nb], pll, entry_width)
-            pos += nb
-            idx = 0
-            pmask = (1 << patch_width) - 1
-            for e in entries.tolist():
-                gap = e >> patch_width
-                pv = e & pmask
-                idx += gap
-                if pv:
-                    br[idx] |= U64(pv << width)
-            take = min(count, n - filled)
-            out[filled : filled + take] = (
-                br + np.uint64(base & ((1 << 64) - 1))
-            ).view(I64)[:take]
-            filled += take
-        else:  # _DELTA
-            width_code = (header >> 1) & 0x1F
-            count = (((header & 1) << 8) | data[pos + 1]) + 1
-            pos += 2
-            if signed:
-                base, pos = read_vslong(data, pos)
-            else:
-                u, pos = read_vulong(data, pos)
-                base = to_signed64(u)
-            delta0, pos = read_vslong(data, pos)
-            seg = np.empty(count, dtype=I64)
-            seg[0] = base
-            if count > 1:
-                if width_code == 0:  # fixed delta (wrap-safe two's complement)
-                    steps = np.arange(count, dtype=I64).view(U64)
-                    seg[:] = (
-                        np.uint64(base & ((1 << 64) - 1))
-                        + steps * np.uint64(delta0 & ((1 << 64) - 1))
-                    ).view(I64)
+    try:
+        while filled < n:
+            header = data[pos]
+            mode = header >> 6
+            if mode == _SHORT_REPEAT:
+                nbytes = ((header >> 3) & 0x7) + 1
+                count = min((header & 0x7) + MIN_REPEAT, n - filled)
+                u = int.from_bytes(data[pos + 1 : pos + 1 + nbytes], "big")
+                val = ((u >> 1) ^ -(u & 1)) if signed else to_signed64(u)
+                out[filled : filled + count] = val
+                pos += 1 + nbytes
+                filled += count
+            elif mode == _DIRECT:
+                width = decode_bit_width((header >> 1) & 0x1F)
+                count = (((header & 1) << 8) | data[pos + 1]) + 1
+                pos += 2
+                nb = bitpack.packed_size(count, width)
+                zz = bitpack.unpack(data[pos : pos + nb], count, width)
+                take = min(count, n - filled)
+                out[filled : filled + take] = (
+                    zigzag_decode(zz) if signed else zz.view(I64)
+                )[:take]
+                pos += nb
+                filled += take
+            elif mode == _PATCHED_BASE:
+                width = decode_bit_width((header >> 1) & 0x1F)
+                count = (((header & 1) << 8) | data[pos + 1]) + 1
+                b3, b4 = data[pos + 2], data[pos + 3]
+                base_bytes = (b3 >> 5) + 1
+                patch_width = decode_bit_width(b3 & 0x1F)
+                gap_width = (b4 >> 5) + 1
+                pll = b4 & 0x1F
+                pos += 4
+                base_field = int.from_bytes(data[pos : pos + base_bytes], "big")
+                sign_mask = 1 << (8 * base_bytes - 1)
+                base = -(base_field & ~sign_mask) if base_field & sign_mask else base_field
+                pos += base_bytes
+                nb = bitpack.packed_size(count, width)
+                br = bitpack.unpack(data[pos : pos + nb], count, width)
+                pos += nb
+                entry_width = closest_fixed_bits(gap_width + patch_width)
+                nb = bitpack.packed_size(pll, entry_width)
+                entries = bitpack.unpack(data[pos : pos + nb], pll, entry_width)
+                pos += nb
+                idx = 0
+                pmask = (1 << patch_width) - 1
+                for e in entries.tolist():
+                    gap = e >> patch_width
+                    pv = e & pmask
+                    idx += gap
+                    if pv:
+                        br[idx] |= U64(pv << width)
+                take = min(count, n - filled)
+                out[filled : filled + take] = (
+                    br + np.uint64(base & ((1 << 64) - 1))
+                ).view(I64)[:take]
+                filled += take
+            else:  # _DELTA
+                width_code = (header >> 1) & 0x1F
+                count = (((header & 1) << 8) | data[pos + 1]) + 1
+                pos += 2
+                if signed:
+                    base, pos = read_vslong(data, pos)
                 else:
-                    width = decode_bit_width(width_code)
-                    nb = bitpack.packed_size(count - 2, width)
-                    rest = bitpack.unpack(data[pos : pos + nb], count - 2, width)
-                    pos += nb
-                    deltas = np.empty(count - 1, dtype=I64)
-                    deltas[0] = delta0
-                    sign = -1 if delta0 < 0 else 1
-                    deltas[1:] = sign * rest.view(I64)
-                    seg[1:] = np.int64(base) + np.cumsum(deltas, dtype=I64)
-            take = min(count, n - filled)
-            out[filled : filled + take] = seg[:take]
-            filled += take
+                    u, pos = read_vulong(data, pos)
+                    base = to_signed64(u)
+                delta0, pos = read_vslong(data, pos)
+                seg = np.empty(count, dtype=I64)
+                seg[0] = base
+                if count > 1:
+                    if width_code == 0:  # fixed delta (wrap-safe two's complement)
+                        steps = np.arange(count, dtype=I64).view(U64)
+                        seg[:] = (
+                            np.uint64(base & ((1 << 64) - 1))
+                            + steps * np.uint64(delta0 & ((1 << 64) - 1))
+                        ).view(I64)
+                    else:
+                        width = decode_bit_width(width_code)
+                        nb = bitpack.packed_size(count - 2, width)
+                        rest = bitpack.unpack(data[pos : pos + nb], count - 2, width)
+                        pos += nb
+                        deltas = np.empty(count - 1, dtype=I64)
+                        deltas[0] = delta0
+                        sign = -1 if delta0 < 0 else 1
+                        deltas[1:] = sign * rest.view(I64)
+                        seg[1:] = np.int64(base) + np.cumsum(deltas, dtype=I64)
+                take = min(count, n - filled)
+                out[filled : filled + take] = seg[:take]
+                filled += take
+    except (IndexError, ValueError) as exc:  # a read past the end
+        raise _truncated(filled, n) from exc
+    if pos > len(data):  # a SHORT_REPEAT value cut short
+        raise _truncated(filled, n)
     return out
+
+
+def _truncated(filled: int, n: int) -> ValueError:
+    return ValueError(f"RLEv2 stream truncated: data ends after {filled} of {n} values")

@@ -10,7 +10,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from sparc.kernels import bitfield, bitpack, byterle, rlev2
+from sparc.kernels import bitfield, bitpack, byterle, rlev1, rlev2
 from sparc.kernels.util import (
     bits_required,
     closest_fixed_bits,
@@ -305,3 +305,60 @@ def test_bitfield_encode_with_marks_bit_offsets():
         packed_tail = byterle.decode(memoryview(blob)[off:], nbytes_left)
         got = np.unpackbits(packed_tail[used:])[bits : bits + (n - m)]
         assert np.array_equal(got.astype(bool), flags[m:]), m
+
+
+# ---------------------------------------------------------------------------
+# truncated streams: data that ends before n values raises ValueError
+# ---------------------------------------------------------------------------
+
+_TRUNC_RNG = np.random.default_rng(7)
+_OUTLIERS = _TRUNC_RNG.integers(0, 100, 512)
+_OUTLIERS[[17, 300]] = 1 << 40
+# (coder, stream, first run's header byte mode or None, values)
+_TRUNCATED_STREAMS = {
+    "rlev2/short_repeat": (
+        rlev2, 0, np.full(5, -7, dtype=I64)
+    ),
+    "rlev2/direct": (rlev2, 1, _TRUNC_RNG.integers(-(1 << 20), 1 << 20, 200)),
+    "rlev2/patched_base": (rlev2, 2, _OUTLIERS),
+    "rlev2/delta": (rlev2, 3, np.cumsum(_TRUNC_RNG.integers(1, 50, 300))),
+    "rlev1/run": (rlev1, None, np.full(50, 5, dtype=I64)),
+    "rlev1/literals": (rlev1, None, _TRUNC_RNG.integers(-(10**12), 10**12, 100)),
+    "rlev1/delta_run": (rlev1, None, np.arange(0, 300, 2)),
+    "rlev1/mixed": (
+        rlev1, None, np.concatenate((np.full(40, 9), _TRUNC_RNG.integers(0, 9, 60)))
+    ),
+    "byterle/run": (byterle, None, np.full(100, 3)),
+    "byterle/literals": (byterle, None, _TRUNC_RNG.integers(0, 256, 100)),
+    "byterle/mixed": (
+        byterle, None, np.concatenate((np.full(10, 1), _TRUNC_RNG.integers(0, 256, 20)))
+    ),
+    "byterle/long": (byterle, None, _TRUNC_RNG.integers(0, 4, 1000)),
+}
+
+
+def _encode_for(coder, vals):
+    if coder is byterle:
+        return byterle.encode(np.asarray(vals, dtype=np.uint8))
+    return coder.encode(np.asarray(vals, dtype=I64), signed=True)
+
+
+def _decode_for(coder, data, n):
+    if coder is byterle:
+        return byterle.decode(data, n)
+    return coder.decode(data, n, signed=True)
+
+
+@pytest.mark.parametrize("cut", ["header", "mid_payload", "last_byte"])
+@pytest.mark.parametrize("name", sorted(_TRUNCATED_STREAMS))
+def test_truncated_stream_raises_value_error(name, cut):
+    coder, mode, vals = _TRUNCATED_STREAMS[name]
+    data = _encode_for(coder, vals)
+    # the stream is what its name says, and decodes whole
+    if mode is not None:
+        assert data[0] >> 6 == mode
+    expect = np.asarray(vals).astype(_decode_for(coder, data, 0).dtype)
+    assert np.array_equal(_decode_for(coder, data, len(vals)), expect)
+    end = {"header": 1, "mid_payload": len(data) // 2, "last_byte": len(data) - 1}[cut]
+    with pytest.raises(ValueError, match="truncated"):
+        _decode_for(coder, data[:end], len(vals))

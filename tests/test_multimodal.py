@@ -66,6 +66,39 @@ def test_fingerprint_deterministic(spark):
     ))
 
 
+def _ref_fingerprint(feat) -> int:
+    """The feature fingerprint recomputed per row: each component rounded to
+    6 decimals as an integer of millionths, mixed with ``_FP_WEIGHTS`` in
+    wrapping 64-bit arithmetic, read back as a signed int64."""
+    total = 0
+    for x, w in zip(feat, multimodal._FP_WEIGHTS.tolist()):
+        scaled = int(np.float64(round(float(x), 6)) * 1e6) & (2**64 - 1)
+        total = (total + scaled * w) & (2**64 - 1)
+    return total - 2**64 if total >= 2**63 else total
+
+
+def test_multimodal_feature_fp_query_matches_reference(spark):
+    """Value gate of the ``multimodal_feature_fp`` driver query (no SQL
+    oracle expresses it): every document's fingerprint equals an
+    independent per-row recomputation from the raw parquet text."""
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry_mod
+
+    sf_dir = "/root/testdata/sf0.001"
+    got = {
+        r["id"]: r["feat_fp"]
+        for r in entry_mod.queries()["multimodal_feature_fp"](spark, sf_dir).collect()
+    }
+    docs = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
+    want = {
+        i: _ref_fingerprint(_ref_stub(None if t is None else t.encode("utf-8"))[3])
+        for i, t in zip(docs["doc_id"].to_pylist(), docs["text"].to_pylist())
+    }
+    assert len(want) > 0
+    assert got == want
+
+
 def test_metadata_surface_schema(spark):
     df = spark.createDataFrame([(1, b"abc")], "doc_id long, payload binary")
     out = multimodal.extract_metadata(df)

@@ -140,10 +140,11 @@ def test_unknown_writer_timezone_refused():
     """An unresolvable writerTimezone must raise, not silently drift."""
     import sparc.engine.orcread as orv
 
+    src = orv._StripeStreams(
+        [{1: [9]}], [{}], "Not/AZone", {0: {"DATA": b"", "SECONDARY": b""}}
+    )
     with pytest.raises(NotImplementedError, match="writerTimezone"):
-        orv._decode_orc_column(
-            {1: [9]}, {"DATA": b"", "SECONDARY": b""}, {}, 0, "Not/AZone"
-        )
+        orv._decode_orc_column(0, 0, src)
 
 
 def test_non_utc_writer_timezone_instants(spark, tmp_path):

@@ -11,6 +11,7 @@ wrong, mid-stripe groups would decode shifted or crash.
 from __future__ import annotations
 
 import glob
+import os
 import shutil
 
 import numpy as np
@@ -18,6 +19,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+import bench
 from sparc.engine import orcread
 
 
@@ -309,3 +311,161 @@ def test_stripe_level_prune_from_metadata_never_touches_refuted_stripes(
     assert kept_j == 1 and total_j == 30
     assert all(123_000 <= k <= 123_500 for k in ks if 123_000 <= k <= 123_500)
     assert {k for k in range(123_000, 123_501)} <= set(ks)
+
+
+# --- seek coverage: every group, every codec, no re-encode, bounded inflate --
+
+
+def _assert_groups_match_full(path: str, rows_per_group: int, n_groups: int, subset):
+    """Every single row group, and one multi-group subset, decoded by seek
+    equals the same slices of the whole-file decode (groups laid out every
+    ``rows_per_group`` rows)."""
+    full = orcread.read_orc(path)
+    for gsel in [[g] for g in range(n_groups)] + [list(subset)]:
+        got = orcread.read_orc_row_groups(path, gsel)
+        exp = pa.concat_tables(
+            [full.slice(g * rows_per_group, rows_per_group) for g in gsel]
+        )
+        assert got.num_rows == exp.num_rows, gsel
+        for c in exp.column_names:
+            a = got.column(c).combine_chunks()
+            b = exp.column(c).combine_chunks()
+            assert a.equals(b), (path, gsel, c)
+
+
+@pytest.mark.parametrize("compression", ["NONE", "ZLIB", "SNAPPY", "ZSTD"])
+def test_seek_every_group_sparc_written(tmp_path, compression):
+    """Our writer's indexed files (nulls at every level, direct strings,
+    timestamps, decimals, struct/list/map/union), two stripes with a
+    partial last group: 3,000-row stripes, 1,000-row groups, 5,500 rows."""
+    from conftest import mixed_orc_table
+
+    from sparc.engine import orcfile
+
+    path = str(tmp_path / f"mixed_{compression}.orc")
+    orcfile.write_orc(
+        mixed_orc_table(), path, rows_per_stripe=3000, row_index_stride=1000,
+        compression=compression,
+    )
+    _assert_groups_match_full(path, 1000, 6, [1, 2, 4, 5])
+
+
+def test_seek_every_group_java_zstd(spark, tmp_path):
+    path = _write_java_orc(spark, tmp_path, "zstd")
+    _assert_groups_match_full(path, 10_000, 6, [0, 2, 3])
+
+
+def _chunk_count(stored: memoryview) -> int:
+    pos = n = 0
+    while pos < len(stored):
+        pos += 3 + (int.from_bytes(stored[pos : pos + 3], "little") >> 1)
+        n += 1
+    return n
+
+
+def test_seek_every_group_java_small_chunks(spark, tmp_path):
+    """A reference-written file with 4 KiB compression chunks: RLE runs and
+    row groups straddle chunk boundaries, so a group's values end in a
+    chunk past the one its position names."""
+    n = 60_000
+    df = (
+        spark.range(n).withColumnRenamed("id", "k")
+        .withColumn("h", F.pmod(F.col("k") * 7919, F.lit(100_003)))
+        .withColumn(
+            "nul",
+            F.when(F.pmod("k", F.lit(5)) == 0, None).otherwise(
+                F.pmod(F.col("k") * 31, F.lit(977))
+            ),
+        )
+        .withColumn(
+            "s", F.format_string("u%08d", F.pmod(F.col("k") * 13, F.lit(50_000)))
+        )
+        .withColumn("f", F.col("k") * 0.25)
+        .orderBy("k").coalesce(1)
+    )
+    d = str(tmp_path / "small_chunks")
+    (
+        df.write.mode("overwrite").option("compression", "zlib")
+        .option("orc.compress.size", "4096").orc(d)
+    )
+    path = glob.glob(d + "/*.orc")[0]
+    with open(path, "rb") as f:
+        data = f.read()
+    _ps, kind, footer = orcread._tail(data)
+    (st,) = orcread._stripes(footer)
+    _sf, streams = orcread._stripe_directory(data, st, kind)
+    n_groups = (st["n_rows"] + 9_999) // 10_000
+    (h_data,) = [b for skind, col, b in streams if skind == "DATA" and col == 2]
+    assert _chunk_count(h_data) > n_groups
+    _assert_groups_match_full(path, 10_000, n_groups, [1, 2, 5])
+
+
+def test_selective_read_calls_no_encoder(tmp_path, monkeypatch):
+    """A row-group read decodes each kept value once: no kernel encoder
+    runs on the read path."""
+    from conftest import mixed_orc_table
+
+    from sparc.engine import orcfile
+    from sparc.kernels import bitfield, byterle, rlev1, rlev2
+
+    path = str(tmp_path / "no_encode.orc")
+    orcfile.write_orc(
+        mixed_orc_table(), path, rows_per_stripe=3000, row_index_stride=1000,
+        compression="ZSTD",
+    )
+    full = orcread.read_orc(path)
+
+    def forbidden(*args, **kwargs):
+        raise AssertionError("encoder called on the read path")
+
+    for mod in (rlev2, rlev1, bitfield, byterle):
+        monkeypatch.setattr(mod, "encode", forbidden)
+    monkeypatch.setattr(bitfield, "encode_with_marks", forbidden)
+    monkeypatch.setattr(byterle, "encode_with_marks", forbidden)
+    got = orcread.read_orc_row_groups(path, [2, 3])
+    exp = full.slice(2000, 2000)
+    for c in exp.column_names:
+        assert got.column(c).combine_chunks().equals(exp.column(c).combine_chunks()), c
+    table, total, kept = orcread.read_orc_filtered(path, ("between", "k", 4100, 4200))
+    assert (total, kept) == (6, 1)
+    assert table.column("k").to_pylist() == list(range(4000, 5000))
+
+
+# the sf0.1 table, whichever scale factor the bench directory points at
+LINEITEM = os.path.join(
+    os.path.dirname(os.path.normpath(bench.SF_DIR)), "sf0.1", "lineitem.parquet"
+)
+
+
+@pytest.mark.skipif(not os.path.exists(LINEITEM), reason="sf0.1 testdata absent")
+def test_one_group_read_inflates_a_fraction(tmp_path, monkeypatch):
+    """A 1-of-8-group read of a 75,000-row lineitem file (ZSTD, 10,000-row
+    stride) inflates at most a quarter of the file's compressed stream
+    bytes: only the chunks its values live in."""
+    import pyarrow.parquet as pq
+
+    from sparc.engine import orcfile
+
+    path = str(tmp_path / "lineitem.orc")
+    orcfile.write_orc(
+        pq.read_table(LINEITEM).slice(0, 75_000), path, compression="ZSTD",
+        row_index_stride=10_000,
+    )
+    with open(path, "rb") as f:
+        data = f.read()
+    _ps, kind, footer = orcread._tail(data)
+    stream_bytes = 0
+    for st in orcread._stripes(footer):
+        _sf, streams = orcread._stripe_directory(data, st, kind)
+        stream_bytes += sum(len(b) for _k, _c, b in streams)
+    inflated = []
+    real = orcread._inflate_chunk
+
+    def counting(mv, pos, kind):
+        inflated.append(3 + (int.from_bytes(mv[pos : pos + 3], "little") >> 1))
+        return real(mv, pos, kind)
+
+    monkeypatch.setattr(orcread, "_inflate_chunk", counting)
+    got = orcread.read_orc_row_groups(path, [3])
+    assert got.num_rows == 10_000
+    assert sum(inflated) <= 0.25 * stream_bytes, (sum(inflated), stream_bytes)

@@ -666,6 +666,25 @@ def test_rlev2_lineitem_bytes_match_golden():
     assert not bad, f"streams changed: {bad}"
 
 
+@pytest.mark.skipif(not os.path.exists(LINEITEM), reason="sf0.1 testdata absent")
+@pytest.mark.parametrize("batch", [rlev2.BATCH_VALUES, 25_000, 1])
+def test_rlev2_cuts_match_per_group_golden(monkeypatch, batch):
+    """One ``encode`` call with row-group cuts returns, per group, the
+    bytes of encoding that group alone, whatever the planner's batch size."""
+    import pyarrow.parquet as pq
+
+    monkeypatch.setattr(rlev2, "BATCH_VALUES", batch)
+    t = pq.read_table(LINEITEM, columns=list(LINEITEM_INT_COLUMNS))
+    for col in LINEITEM_INT_COLUMNS:
+        v = t.column(col).to_numpy().astype(I64)
+        blobs = rlev2.encode(v, signed=True, cuts=range(10_000, v.size, 10_000))
+        assert len(blobs) == (v.size + 9_999) // 10_000
+        h = hashlib.sha256()
+        for blob in blobs:
+            h.update(blob)
+        assert h.hexdigest() == GOLDEN[f"lineitem/{col}/rowgroups"], col
+
+
 if __name__ == "__main__":
     cases = list(_cases())
     if os.path.exists(LINEITEM):
