@@ -288,7 +288,7 @@ def _encode_variable(
     # Python: spans are few, and each small numpy call costs microseconds
     starts_l: list[int] = []
     cns: list[int] = []
-    span_chunks: list[int] = []  # per span, the end of its chunk range
+    tails: list[int] = []  # per span, the index of its last chunk
     end = 0
     for lo, hi in spans:
         first = len(starts_l)
@@ -296,7 +296,7 @@ def _encode_variable(
         cns += [MAX_SCOPE] * (len(starts_l) - first)
         end += hi - lo
         cns[-1] = end - starts_l[-1]
-        span_chunks.append(len(starts_l))
+        tails.append(len(starts_l) - 1)
     nch = len(starts_l)
     starts = np.array(starts_l)
     cn = np.array(cns)
@@ -308,8 +308,8 @@ def _encode_variable(
     # (zero after a span's last value)
     d = np.empty(n, dtype=I64)
     np.subtract(seg[1:], seg[:-1], out=d[:-1])
-    for k in span_chunks:
-        d[starts_l[k - 1] + cns[k - 1] - 1] = 0
+    for k in tails:
+        d[starts_l[k] + cns[k] - 1] = 0
     d0 = d[starts]
     absd = np.abs(d).view(U64)
     vmin = np.minimum.reduceat(seg, starts)
@@ -361,9 +361,9 @@ def _encode_variable(
     flat = d0 == 0
     const = fixed & flat
     mono = ((dmin >= 0) | (dmax <= 0)) & ~flat
-    for k in span_chunks:  # only a span's tail chunk can be that short
-        if cns[k - 1] < MIN_REPEAT:
-            const[k - 1] = mono[k - 1] = False
+    for k in tails:  # only a span's tail chunk can be that short
+        if cns[k] < MIN_REPEAT:
+            const[k] = mono[k] = False
     delta_w = np.maximum(fit[dmax_bits], 2)  # width 1: code 0 means fixed delta
     head = np.maximum((varint_bits + 6) // 7, 1).reshape(2, nch)
     size_delta = head.sum(axis=0) + 2 + ~fixed * (((cn - 2) * delta_w + 7) // 8)
@@ -512,7 +512,7 @@ def _encode_variable(
             _write_fixed_delta(out, v0, 0, c, signed)
         chunk_end.append(len(out))
     mv = memoryview(out)
-    bounds = [0] + [chunk_end[k - 1] for k in span_chunks]
+    bounds = [0] + [chunk_end[k] for k in tails]
     return [mv[a:b] for a, b in zip(bounds, bounds[1:])]
 
 

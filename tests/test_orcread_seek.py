@@ -469,3 +469,26 @@ def test_one_group_read_inflates_a_fraction(tmp_path, monkeypatch):
     got = orcread.read_orc_row_groups(path, [3])
     assert got.num_rows == 10_000
     assert sum(inflated) <= 0.25 * stream_bytes, (sum(inflated), stream_bytes)
+
+
+def test_filtered_read_reads_the_file_once(tmp_path, monkeypatch):
+    """read_orc_filtered hands its file bytes and parsed tail to the
+    row-group reader: one open of the file per filtered read."""
+    import builtins
+
+    from sparc.engine import orcfile
+
+    t = pa.table({"k": pa.array(np.arange(5000), pa.int64())})
+    path = str(tmp_path / "once.orc")
+    orcfile.write_orc(t, path, row_index_stride=1000, compression="ZLIB")
+    opened = []
+
+    def counting_open(file, *args, **kwargs):
+        opened.append(file)
+        return builtins.open(file, *args, **kwargs)
+
+    monkeypatch.setattr(orcread, "open", counting_open, raising=False)
+    got, total, kept = orcread.read_orc_filtered(path, ("=", "k", 2500))
+    assert (total, kept) == (5, 1)
+    assert got.column("k").to_pylist() == list(range(2000, 3000))
+    assert opened == [path]
