@@ -78,14 +78,19 @@ def _ref_fingerprint(feat) -> int:
 
 
 def test_multimodal_feature_fp_query_matches_reference(spark):
-    """Value gate of the ``multimodal_feature_fp`` driver query (no SQL
-    oracle expresses it): every document's fingerprint equals an
-    independent per-row recomputation from the raw parquet text."""
+    """Value gate of the ``multimodal_feature_fp`` query of
+    ``__spark_entry__`` (no SQL oracle expresses it): every document's
+    fingerprint equals an independent per-row recomputation from the raw
+    parquet text."""
+    import os
+
     import pyarrow.parquet as pq
 
     import __spark_entry__ as entry_mod
+    import bench
 
-    sf_dir = "/root/testdata/sf0.001"
+    # the sf0.001 tables, whichever scale factor the bench directory points at
+    sf_dir = os.path.join(os.path.dirname(os.path.normpath(bench.SF_DIR)), "sf0.001")
     got = {
         r["id"]: r["feat_fp"]
         for r in entry_mod.queries()["multimodal_feature_fp"](spark, sf_dir).collect()
