@@ -350,6 +350,21 @@ def test_seek_every_group_sparc_written(tmp_path, compression):
     _assert_groups_match_full(path, 1000, 6, [1, 2, 4, 5])
 
 
+def test_seek_every_group_sparc_written_rlev1(tmp_path):
+    """The same over the 0.11 layout: RLEv1 streams read from seek
+    positions."""
+    from conftest import mixed_orc_table
+
+    from sparc.engine import orcfile
+
+    path = str(tmp_path / "mixed_v11.orc")
+    orcfile.write_orc(
+        mixed_orc_table(), path, rows_per_stripe=3000, row_index_stride=1000,
+        compression="ZLIB", version="0.11",
+    )
+    _assert_groups_match_full(path, 1000, 6, [0, 3, 4])
+
+
 def test_seek_every_group_java_zstd(spark, tmp_path):
     path = _write_java_orc(spark, tmp_path, "zstd")
     _assert_groups_match_full(path, 10_000, 6, [0, 2, 3])
