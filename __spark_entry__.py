@@ -658,8 +658,8 @@ FROM documents
 
 def _prune_decode_documents(spark, sf_dir):
     """End-to-end three-level filtering with a VALUE oracle: encode the
-    documents table into stripes via the files sink (direct stripe-file
-    writes + footer manifest), then decode with one sarg tree driving
+    documents table into stripes (direct stripe-file writes + footer
+    manifest), then decode with one sarg tree driving
     stripe pruning, row-group pruning, and the compiled Catalyst row
     filter.  The decoded result must be exactly the matching rows — a
     stronger check than the stripe-count surface in
@@ -672,7 +672,7 @@ def _prune_decode_documents(spark, sf_dir):
     out = tempfile.mkdtemp(prefix="sparc_pdx_") + "/streams"
     encode_job.run_encode(
         docs, out, key="doc_id", strategy="hash", n_stripes=4,
-        resume=False, sink="files",
+        resume=False,
     )
     pred = ("and", ("between", "doc_id", 100, 199), ("not", ("is_null", "lang")))
     dec = decode_job.run_decode(
@@ -690,8 +690,8 @@ ORDER BY doc_id
 
 
 def _neardata_agg_documents(spark, sf_dir):
-    """Compute-near-data decode (run_decode_map): encode documents to the
-    files sink, decode every stripe and run a vectorized per-lang
+    """Compute-near-data decode (run_decode_map): encode documents into
+    stripes, decode every stripe and run a vectorized per-lang
     aggregate INSIDE the scan task — only per-stripe partials cross the
     Python->JVM boundary, never the decoded corpus.  Full SQL value
     oracle (per-lang text byte totals and counts)."""
@@ -706,7 +706,7 @@ def _neardata_agg_documents(spark, sf_dir):
     out = tempfile.mkdtemp(prefix="sparc_nd_") + "/streams"
     encode_job.run_encode(
         docs, out, key="doc_id", strategy="hash", n_stripes=4,
-        resume=False, sink="files",
+        resume=False,
     )
 
     def per_lang(t: pa.Table) -> pa.Table:

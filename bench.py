@@ -173,7 +173,7 @@ def gen_pages_parquet(spark, n_rows: int, path: str, chunk: int = 20_000) -> Non
 
 
 def _pool_decode_unit(args):
-    """One files-sink scan unit (manifest, shard), the exact work a Spark
+    """One decode scan unit (manifest, shard), the exact work a Spark
     decode task does — manifest read, footer parse, byte-range stream
     slices, decode_stripe, octet aggregate — minus Spark.  Used by the
     engine-ceiling probe."""
@@ -689,15 +689,14 @@ def main() -> None:
 
     def run_ours(tag: str) -> str:
         # hash strategy (content-addressed stripes, one full shuffle) —
-        # the sink choice is orthogonal: files sink here too, so the
-        # hash-vs-input delta isolates the shuffle cost
+        # same stripe-file output as the input leg, so the hash-vs-input
+        # delta isolates the shuffle cost
         out_dir = os.path.join(CACHE, f"streams_{CPUS}_{n_rows}_{tag}")
         shutil.rmtree(out_dir, ignore_errors=True)
         encode_job.run_encode(
             df,
             out_dir,
             strategy="hash",
-            sink="files",
             n_stripes=n_stripes,
             fingerprint=f"bench-{n_rows}",
             resume=False,
@@ -705,8 +704,8 @@ def main() -> None:
         return out_dir
 
     def run_input(tag: str) -> str:
-        # shuffle-free "input" strategy (stripe = input split) + "files"
-        # sink (direct stripe-file writes, footer-only manifest): the
+        # shuffle-free "input" strategy (stripe = input split), direct
+        # stripe-file writes + footer-only manifest: the
         # 100 TB fast path — no shuffle materialization, no double-
         # handling of encoded bytes through Arrow + parquet; also the
         # robust shape in this host's bad memory windows (bounded
@@ -714,7 +713,7 @@ def main() -> None:
         inp_dir = os.path.join(CACHE, f"streams_in_{CPUS}_{n_rows}_{tag}")
         shutil.rmtree(inp_dir, ignore_errors=True)
         encode_job.run_encode(
-            df, inp_dir, strategy="input", sink="files",
+            df, inp_dir, strategy="input",
             target_rows_per_stripe=max(n_rows // n_stripes, 1),
             fingerprint=f"bench-in-{n_rows}", resume=False,
         )
@@ -860,7 +859,7 @@ def main() -> None:
     timings["decode_pages_cold"] = round(dec_walls[0], 3)
     timings["decode_pages"] = round(dec_wall, 3)
     extras["decode_gbps"] = round(raw / dec_wall / 1e9, 4)
-    # files-sink decode: byte-range reads from stripe files via the manifest
+    # decode: byte-range reads from stripe files via the manifest
     t0 = time.perf_counter()
     n_dec = decode_job.run_decode(spark, inp_dir).count()
     files_wall = time.perf_counter() - t0
@@ -1066,7 +1065,7 @@ def main() -> None:
             u0, s0 = proc_tree_cpu_split()
             t0 = time.perf_counter()
             encode_job.run_encode(
-                xl_df, inp_dir_xl, strategy="input", sink="files",
+                xl_df, inp_dir_xl, strategy="input",
                 target_rows_per_stripe=max(xl_rows // (n_stripes * 3), 1),
                 fingerprint=f"bench-xl-{xl_rows}", resume=False,
             )

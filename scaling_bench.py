@@ -8,7 +8,7 @@ parallelism levels and report throughput at both plus the efficiency
 
 Three numbers per pair, because this VM is a hostile measurement bench:
 
-- ``job``: the full pipeline (scan -> stripe shuffle -> encode -> sink).
+- ``job``: the full pipeline (scan -> stripe shuffle -> encode -> stripe files).
 - ``stage``: the encode stage alone, over pre-staged stripe-partitioned
   parquet (no shuffle) — the engine-scaling signal.  On a real cluster
   the shuffle scales horizontally with executors; local-mode shuffle on
@@ -278,7 +278,8 @@ def measure(cpus: int, n_stripes: int, n_rows: int, staged_path: str,
     job_walls, stage_walls, floor_walls = [], [], []
     inp_walls, pys_walls, hash_floor_walls = [], [], []
     stage_users, stage_syss = [], []
-    fn = encode_job._encode_partition_factory("zstd", None, "scale")
+    stage_dir = os.path.join(CACHE, f"scale_stage_{cpus}")
+    fn = encode_job._encode_partition_factory(stage_dir, "zstd", None, "scale")
     for r in range(RUNS + 1):  # first run warms workers, untimed
         # full job, hash strategy (one full shuffle — local-mode shuffle
         # anti-scales beyond ~8 threads, reported for honesty)
@@ -302,13 +303,13 @@ def measure(cpus: int, n_stripes: int, n_rows: int, staged_path: str,
         ).mapInArrow(floor_fn, schema="n long").select(F.sum("n")).collect()
         w_hash_floor = time.perf_counter() - t0
         # full job, input strategy (the headline: shuffle-free,
-        # stripe = input split, files sink) — the shape a cluster run
+        # stripe = input split) — the shape a cluster run
         # uses, and the one the north rule's efficiency target is about
         inp_dir = os.path.join(CACHE, f"scale_inp_{cpus}_{r}")
         shutil.rmtree(inp_dir, ignore_errors=True)
         t0 = time.perf_counter()
         encode_job.run_encode(
-            df, inp_dir, strategy="input", sink="files",
+            df, inp_dir, strategy="input",
             target_rows_per_stripe=max(n_rows // n_stripes, 1),
             fingerprint="scale-in", resume=False,
         )
@@ -326,7 +327,8 @@ def measure(cpus: int, n_stripes: int, n_rows: int, staged_path: str,
         )
         w_pys = time.perf_counter() - t0
         shutil.rmtree(pys_dir, ignore_errors=True)
-        # encode stage only: pre-staged input, no shuffle, count-only sink
+        # encode stage only: pre-staged input, no shuffle; stripe files go
+        # to a scratch dir and the footers are summed, not committed
         pre = spark.read.parquet(staged_path)
         cpu0 = _tree_cpu()
         t0 = time.perf_counter()
@@ -336,6 +338,7 @@ def measure(cpus: int, n_stripes: int, n_rows: int, staged_path: str,
         w_stage = time.perf_counter() - t0
         cpu1 = _tree_cpu()
         stage_u, stage_s = cpu1[0] - cpu0[0], cpu1[1] - cpu0[1]
+        shutil.rmtree(stage_dir, ignore_errors=True)
         # no-op floor: identical scan + Arrow transfer + Python round
         # trip, kernel replaced by a count
         t0 = time.perf_counter()
@@ -421,7 +424,7 @@ def main() -> None:
                 round((j_n - hf_n) / (j_4n - hf_4n) / speedup, 4)
                 if j_n > hf_n and j_4n > hf_4n else None
             ),
-            # headline (input strategy, shuffle-free, files sink) as a
+            # headline (input strategy, shuffle-free) as a
             # full job — the configuration the efficiency target is about
             "job_input_wall_n": round(ji_n, 2),
             "job_input_wall_4n": round(ji_4n, 2),

@@ -29,10 +29,6 @@ def main() -> None:
     ap.add_argument("--sort", default="",
                     help="comma-separated in-stripe sort columns ('' disables)")
     ap.add_argument("--rows-per-stripe", type=int, default=100_000)
-    ap.add_argument("--sink", default="files", choices=["files", "parquet"],
-                    help="files = direct stripe-file writes + footer-only "
-                         "manifest (the cluster default); parquet = "
-                         "self-contained single table")
     ap.add_argument("--row-index-stride", type=int, default=10_000,
                     help="row-group index stride (0 disables; multiple of 8)")
     ap.add_argument("--fingerprint", default="", help="input snapshot id for lineage")
@@ -46,7 +42,7 @@ def main() -> None:
     spark = SparkSession.builder.appName("sparc-encode").getOrCreate()
     if args.strategy == "pyscan":
         # direct-scan: workers pyarrow-read row-group units; JVM only
-        # schedules (files sink implied)
+        # schedules
         summary = encode_job.run_encode_paths(
             spark, args.input, args.output,
             codec=args.codec,
@@ -78,7 +74,6 @@ def main() -> None:
         resume=not args.no_resume,
         target_rows_per_stripe=args.rows_per_stripe,
         row_index_stride=args.row_index_stride or None,
-        sink=args.sink,
     )
     print(summary)
     spark.stop()

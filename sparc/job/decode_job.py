@@ -1,156 +1,40 @@
-"""The distributed decode job: streams table → original DataFrame.
+"""The distributed decode job: stripe files + footer manifest → DataFrame.
 
-Inverse of encode_job.  Files sink (the production shape): a SINGLE
-Spark stage over the manifest-file list — each task pyarrow-reads its
-manifest files (footer rows only), prunes stripes/row groups against
-the predicate, byte-range-fetches surviving stream spans from the
-stripe files, and decodes inside ``mapInArrow``.  No JVM parquet scan,
-no shuffle, no stage barrier.  Parquet sink (blobs inline in the
-manifest): co-locate each stripe's stream rows (repartition on
-stripe_id — the only shuffle) and decode.  Selected-column decode
-("projection pushdown" over our own format) only fetches the needed
-streams: span selection at the mmap (files) or a DataFrame filter on
-the ``column`` field before the shuffle (parquet).
+Inverse of encode_job.  A SINGLE Spark stage over the manifest-file list:
+each task pyarrow-reads its manifest files (one FOOTER row per stripe),
+prunes stripes/row groups against the predicate, byte-range-fetches the
+surviving stream spans from the stripe files, and decodes inside
+``mapInArrow``.  No JVM parquet scan, no shuffle, no stage barrier.
+Selected-column decode ("projection pushdown" over our own format) only
+fetches the needed streams: span selection at the mmap.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import zlib
 from collections.abc import Iterator
 
-import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..engine import sarg as sarg_mod
 from ..engine import stripe as stripe_mod
 from .encode_job import STREAMS_SCHEMA
 
 
-def _decode_partition_factory(
-    columns: list[str] | None,
-    verify_crc: bool,
-    predicate: tuple | None = None,
-    streams_dir: str | None = None,
-    stripe_predicate: tuple | None = None,
-    map_fn=None,
-):
-    def _streams_from_file(footer: dict) -> dict[tuple[str, str], memoryview]:
-        """Files-sink fetch: mmap the stripe file and slice the needed
-        spans — projection and predicate decide which byte ranges are
-        ever touched (the IO planner's selective stream fetch, now as
-        true byte-range reads)."""
-        import mmap
-        import os
-
-        path = footer["stripe_file"]
-        if not os.path.isabs(path):
-            path = os.path.join(streams_dir, path)
-        need_cols = set(columns) if columns else None
-        pred_cols: set[str] = set()
-        if predicate is not None:
-            from ..engine import sarg as sarg_mod
-
-            pred_cols = sarg_mod.columns_of(predicate)
-        with open(path, "rb") as f:
-            mm = mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
-        mv = memoryview(mm)
-        streams: dict[tuple[str, str], memoryview] = {}
-        for cname, kind, off, ln in footer["stream_spans"]:
-            if kind == "BLOOM_FILTER_UTF8":
-                if cname not in pred_cols:
-                    continue
-            elif need_cols is not None and cname not in need_cols:
-                continue
-            streams[(cname, kind)] = mv[off : off + ln]
-        return streams
-
-    def decode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .. import runtime
-
-        runtime.init_worker()
-        collected = list(batches)
-        if not collected:  # empty shuffle partition
-            return
-        table = pa.Table.from_batches(collected)
-        if table.num_rows == 0:
-            return
-        sids = table["stripe_id"]
-        for sid in pa.compute.unique(sids).to_pylist():
-            sub = table.filter(pa.compute.equal(sids, sid))
-            # zero-copy stream access: blobs stay in the Arrow buffer as
-            # memoryview slices instead of being materialized as Python
-            # bytes (a full extra copy of every stream per stripe)
-            data_arr = sub["data"].combine_chunks().cast(pa.large_binary())
-            bufs = data_arr.buffers()
-            offs = np.frombuffer(
-                bufs[1], dtype=np.int64, count=len(data_arr) + 1,
-                offset=data_arr.offset * 8,
-            )
-            data_mv = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
-            streams: dict[tuple[str, str], memoryview] = {}
-            footer = None
-            for i, (col, kind) in enumerate(
-                zip(sub["column"].to_pylist(), sub["kind"].to_pylist())
-            ):
-                blob = data_mv[offs[i] : offs[i + 1]]
-                if kind == "FOOTER":
-                    footer = json.loads(bytes(blob).decode())
-                else:
-                    streams[(col, kind)] = blob
-            if footer is None:
-                raise ValueError(f"stripe {sid}: FOOTER row missing (incomplete)")
-            if stripe_predicate is not None:
-                # stripe-level stats pruning IN the scan task (paths mode
-                # has no pre-shuffle semi-join to do it in): same tri-state
-                # evaluation as prune_stripes_df, refuted stripes never
-                # open their stripe file
-                from ..engine import sarg as sarg_mod
-
-                col_stats = {
-                    c["name"]: c.get("stats")
-                    for c in footer["columns"]
-                    if c.get("stats") is not None
-                }
-                if not sarg_mod.keep(stripe_predicate, col_stats):
-                    continue
-            if footer.get("stripe_file"):
-                streams = _streams_from_file(footer)
-            if verify_crc:
-                for (c, k), v in streams.items():
-                    expect = footer.get("crc32", {}).get(f"{c}/{k}")
-                    if expect is not None and zlib.crc32(v) != expect:
-                        raise ValueError(f"stripe {sid}: crc mismatch on {c}/{k}")
-            # row-group pruning over the FULL footer (the predicate may
-            # reference columns outside the projection) — the engine's
-            # pickRowGroups analog; only surviving groups are decompressed
-            row_groups = (
-                stripe_mod.pick_row_groups(footer, predicate, streams=streams)
-                if predicate is not None
-                else None
-            )
-            if row_groups == []:
-                continue  # every group refuted: stripe contributes nothing
-            if columns:
-                footer = dict(footer)
-                footer["columns"] = [c for c in footer["columns"] if c["name"] in columns]
-            out = stripe_mod.decode_stripe(streams, footer, row_groups=row_groups)
-            if map_fn is not None:
-                # compute-near-data: the caller's vectorized transform
-                # runs HERE, on the decoded Arrow table, before anything
-                # crosses the Python->JVM boundary — only its (usually
-                # tiny) result ships back.  At 100 TB this is the shape
-                # that matters: the decoded corpus never moves.
-                out = map_fn(out)
-                if isinstance(out, pa.RecordBatch):
-                    out = pa.Table.from_batches([out])
-            # one output batch per stripe: the decode already holds the
-            # whole stripe resident (the writer's memory budget bounds
-            # stripe size), and fewer/larger IPC frames measurably cut
-            # the Python->JVM return-transfer wall (~20% at 3 GiB)
-            yield from out.to_batches()
-
-    return decode_partition
+def _stripe_path(footer: dict, streams_dir: str) -> str:
+    """Path of a footer's stripe file.  Footers without one come from the
+    removed inline-blob manifest layout (stream bytes in manifest rows),
+    which no reader handles any more."""
+    rel = footer.get("stripe_file")
+    if rel is None:
+        raise ValueError(
+            f"{streams_dir}: stripe {footer.get('stripe_id')} has no stripe_file "
+            "(inline-blob manifest layout, no longer readable); re-encode it"
+        )
+    return os.path.join(streams_dir, rel)  # an absolute rel wins (compact)
 
 
 def _decode_paths_factory(
@@ -161,20 +45,82 @@ def _decode_paths_factory(
     stripe_predicate: tuple | None = None,
     map_fn=None,
 ):
-    """mapInArrow function over a DataFrame of manifest-file *paths*
-    (files sink only): each task pyarrow-reads its manifest files —
-    footer rows only, the stream bytes stay in stripe files — and
-    decodes the stripes they commit.  One Spark stage, no JVM parquet
-    scan, no shuffle: on this host the two-stage scan+repartition shape
-    alone cost ~0.6 s per decode (measured with a noop UDF), more than
-    the reference reader's entire warm read of 3 GiB."""
-    inner = _decode_partition_factory(
-        columns, verify_crc, predicate=predicate, streams_dir=streams_dir,
-        stripe_predicate=stripe_predicate, map_fn=map_fn,
-    )
+    """mapInArrow function over a DataFrame of manifest-file units
+    (path, shard, n_shards): each task pyarrow-reads its manifest files —
+    footer rows only, the stream bytes stay in stripe files — and decodes
+    the stripes they commit.  One Spark stage, no JVM parquet scan, no
+    shuffle: a two-stage scan+repartition shape alone measured ~0.6 s per
+    decode with a noop UDF, more than the reference reader's entire warm
+    read of 3 GiB."""
+    need_cols = set(columns) if columns else None
+    # bloom streams only for predicate columns (row-group pruning probes
+    # them, including predicate columns outside the projection)
+    pred_cols = sarg_mod.columns_of(predicate) if predicate is not None else set()
+
+    def decode_footer(footer: dict) -> Iterator[pa.RecordBatch]:
+        sid = footer["stripe_id"]
+        if stripe_predicate is not None:
+            # stripe-level stats pruning IN the scan task: same tri-state
+            # evaluation as prune_stripes_df, refuted stripes never open
+            # their stripe file
+            col_stats = {
+                c["name"]: c.get("stats")
+                for c in footer["columns"]
+                if c.get("stats") is not None
+            }
+            if not sarg_mod.keep(stripe_predicate, col_stats):
+                return
+        # mmap the stripe file and slice the needed spans — projection and
+        # predicate decide which byte ranges are ever touched (the IO
+        # planner's selective stream fetch, as true byte-range reads)
+        import mmap
+
+        with open(_stripe_path(footer, streams_dir), "rb") as f:
+            mm = mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
+        mv = memoryview(mm)
+        streams: dict[tuple[str, str], memoryview] = {}
+        for cname, kind, off, ln in footer["stream_spans"]:
+            if kind == "BLOOM_FILTER_UTF8":
+                if cname not in pred_cols:
+                    continue
+            elif need_cols is not None and cname not in need_cols:
+                continue
+            streams[(cname, kind)] = mv[off : off + ln]
+        if verify_crc:
+            for (c, k), v in streams.items():
+                expect = footer.get("crc32", {}).get(f"{c}/{k}")
+                if expect is not None and zlib.crc32(v) != expect:
+                    raise ValueError(f"stripe {sid}: crc mismatch on {c}/{k}")
+        # row-group pruning over the FULL footer (the predicate may
+        # reference columns outside the projection) — the engine's
+        # pickRowGroups analog; only surviving groups are decompressed
+        row_groups = (
+            stripe_mod.pick_row_groups(footer, predicate, streams=streams)
+            if predicate is not None
+            else None
+        )
+        if row_groups == []:
+            return  # every group refuted: stripe contributes nothing
+        if columns:
+            footer = dict(footer)
+            footer["columns"] = [c for c in footer["columns"] if c["name"] in columns]
+        out = stripe_mod.decode_stripe(streams, footer, row_groups=row_groups)
+        if map_fn is not None:
+            # compute-near-data: the caller's vectorized transform runs
+            # HERE, on the decoded Arrow table, before anything crosses
+            # the Python->JVM boundary — only its (usually tiny) result
+            # ships back.  At 100 TB this is the shape that matters: the
+            # decoded corpus never moves.
+            out = map_fn(out)
+            if isinstance(out, pa.RecordBatch):
+                out = pa.Table.from_batches([out])
+        # one output batch per stripe: the decode already holds the whole
+        # stripe resident (the writer's memory budget bounds stripe
+        # size), and fewer/larger IPC frames measurably cut the
+        # Python->JVM return-transfer wall (~20% at 3 GiB)
+        yield from out.to_batches()
 
     def decode_paths(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         from .. import runtime
@@ -186,42 +132,31 @@ def _decode_paths_factory(
                 b.column("shard").to_pylist(),
                 b.column("n_shards").to_pylist(),
             ):
-                tbl = pq.read_table(path, use_threads=False)
-                if n_shards > 1 and tbl.num_rows:
-                    # sub-manifest shard: this task decodes every
-                    # n_shards-th FOOTER row (one footer per stripe, so
-                    # the shard's unit is the stripe); any non-footer
-                    # rows ride with their stripe's footer.  Re-reading a
-                    # small footer-only manifest n_shards times costs
-                    # ~ms; leaving cores idle because manifests < cores
-                    # costs a full extra stripe-decode of wall (measured
-                    # 20 manifests / 32 stripes / 32 cores: worst task
-                    # carried 2 stripes).
-                    is_footer = pc.equal(tbl["kind"], "FOOTER").to_numpy(
-                        zero_copy_only=False
-                    )
-                    ordinals = np.cumsum(is_footer) - 1
-                    keep = is_footer & (ordinals % n_shards == shard)
-                    if not is_footer.all():
-                        sids = np.asarray(tbl["stripe_id"].to_numpy(
-                            zero_copy_only=False
-                        ))
-                        own = np.isin(sids, sids[keep])
-                        keep = keep | own
-                    tbl = tbl.filter(pa.array(keep))
-                if tbl.num_rows:
-                    yield from inner(tbl.to_batches())
+                tbl = pq.read_table(path, columns=["kind", "data"], use_threads=False)
+                footers = [
+                    blob
+                    for kind, blob in zip(tbl["kind"].to_pylist(), tbl["data"].to_pylist())
+                    if kind == "FOOTER"
+                ]
+                # sub-manifest shard: this task decodes every n_shards-th
+                # footer (stripe).  Re-reading a small footer-only manifest
+                # n_shards times costs ~ms; leaving cores idle because
+                # manifests < cores costs a full extra stripe-decode of
+                # wall (measured 20 manifests / 32 stripes / 32 cores:
+                # worst task carried 2 stripes).
+                for blob in footers[shard::n_shards]:
+                    yield from decode_footer(json.loads(blob))
 
     return decode_paths
 
 
 def _manifest_paths(streams_dir: str) -> list[str]:
-    """Manifest part-file paths of a files-sink streams dir (sorted for
-    determinism).  Planner-scale metadata: one file per completed encode
-    task, NOT one per stripe — at Iceberg scale this list comes from the
-    table manifest instead of a directory listing."""
-    import os
-
+    """Manifest part-file paths of a streams dir (sorted for determinism).
+    Planner-scale metadata: one file per completed encode task, NOT one
+    per stripe — at Iceberg scale this list comes from the table manifest
+    instead of a directory listing."""
+    if not os.path.isdir(streams_dir):
+        raise ValueError(f"streams dir {streams_dir!r} is not a directory")
     return sorted(
         os.path.join(streams_dir, f)
         for f in os.listdir(streams_dir)
@@ -247,29 +182,27 @@ def run_decode(
     map_fn=None,
     map_schema: str | None = None,
 ) -> DataFrame:
-    """Decode the streams table back to a DataFrame of the original schema.
+    """Decode a streams dir back to a DataFrame of the original schema.
 
     ``map_fn`` (with ``map_schema``, a DDL string describing its output)
     runs a vectorized compute-near-data transform ``pa.Table -> pa.Table``
     on each decoded stripe INSIDE the scan task, so only its result ever
     crosses the Python->JVM boundary — see :func:`run_decode_map`.
 
-    ``stripe_filter`` prunes whole stripes BEFORE the shuffle — the
-    engine-side analog of the reference's stripe-level SearchArgument
-    pruning (SURVEY.md §2.7; ``RecordReaderImpl.evaluatePredicateProto``).
-    It accepts either the legacy ``(column, lo, hi)`` range tuple or a
-    full composite predicate tree (see ``sparc.engine.sarg``):
+    ``stripe_filter`` prunes whole stripes before their stripe file is
+    opened — the engine-side analog of the reference's stripe-level
+    SearchArgument pruning (SURVEY.md §2.7;
+    ``RecordReaderImpl.evaluatePredicateProto``).  It accepts either the
+    legacy ``(column, lo, hi)`` range tuple or a full composite predicate
+    tree (see ``sparc.engine.sarg``):
     ``("and", ("between", "ts", a, b), ("not", ("is_null", "url")))``.
-    Evaluation runs in executors: inside the scan task itself on the
-    files sink (tri-state stats check before the stripe file is ever
-    opened), or over the footer metadata rows with the kept-stripe set
-    reaching the scan via a broadcast semi-join on the parquet sink —
-    no driver-side collect anywhere on the read path.  Pruning alone
-    returns a superset of matching rows; ``row_filter=True`` additionally
-    compiles the SAME tree to a Catalyst row filter on the decoded
-    output (the reference's three filter levels from one SearchArgument
-    — requires every predicate column in the decoded schema and
-    literals comparable to the decoded types).
+    Evaluation runs inside the scan task (tri-state stats check on each
+    footer) — no driver-side collect anywhere on the read path.  Pruning
+    alone returns a superset of matching rows; ``row_filter=True``
+    additionally compiles the SAME tree to a Catalyst row filter on the
+    decoded output (the reference's three filter levels from one
+    SearchArgument — requires every predicate column in the decoded
+    schema and literals comparable to the decoded types).
 
     ``cast_to={column: spark_type_ddl}`` is the per-column conversion
     surface (SURVEY.md §2.8): reader-schema conversions are Catalyst
@@ -297,21 +230,8 @@ def run_decode(
                 "row_filter (those operate on the decoded DataFrame)"
             )
         schema_ddl = map_schema
-    import os as _os
-
-    sample = _sample_footer(spark, streams_dir)
-    # files sink on a listable store: single-stage paths mode (see
-    # _decode_paths_factory).  Stripe pruning moves into the scan task.
-    paths_mode = bool(sample.get("stripe_file")) and _os.path.isdir(streams_dir)
-    raw = None if paths_mode else read_streams(spark, streams_dir)
-    pred = None
-    if stripe_filter is not None:
-        pred = _as_predicate(stripe_filter)
-        if not paths_mode:
-            keep = prune_stripes_df(spark, streams_dir, pred)
-            # broadcast semi-join: the kept-stripe set is planner-scale
-            # metadata, so pruning never shuffles the streams table itself
-            raw = raw.join(F.broadcast(keep), "stripe_id", "left_semi")
+    sample = _sample_footer(streams_dir)
+    pred = _as_predicate(stripe_filter) if stripe_filter is not None else None
     evolution = None  # [(reader StructField, file column name | None), ...]
     if reader_schema is not None:
         from pyspark.sql.types import StructType
@@ -332,104 +252,58 @@ def run_decode(
             evolution = [(rf, fmap.get(norm(rf.name))) for rf in rfields]
         # only matched file columns are decoded (schema-mapped projection)
         columns = [fn for _, fn in evolution if fn is not None]
-    # stream fetch policy: FOOTER rows always; data streams of selected
-    # columns (all, if no projection); bloom streams ONLY for predicate
-    # columns when row-group pruning will consult them (including
-    # predicate columns outside the projection) — everything else never
-    # leaves the parquet scan
     if schema_ddl is None:
         schema_ddl = _schema_ddl_from_footer(sample, columns)
-    if paths_mode:
-        # files sink: ONE self-contained footer row per stripe (blobs live
-        # in stripe files), so the decode is a single stage over the
-        # manifest-file list — no JVM parquet scan, no repartition
-        # shuffle, no stage barrier.  Round-robin interleave of the
-        # sorted path list balances tasks (manifest files ~ uniform
-        # stripes/task); parallelize slices it contiguously.
-        paths = _manifest_paths(streams_dir)
-        # no max(cores, 8) floor here: LocalTableScanExec caps parallelism
-        # at defaultParallelism, so a higher floor can only be honored by
-        # adding an exchange — and the single-stage shape is worth more
-        # than extra sub-core tasks on a <8-core host (each exchange
-        # measured ~0.6 s of pure orchestration).  Callers that want more
-        # tasks pass n_partitions explicitly and pay the one metadata-only
-        # exchange below.
-        target = n_partitions or spark.sparkContext.defaultParallelism
-        # one scan unit per (manifest, shard): when manifests are few,
-        # shard BELOW manifest granularity — each shard decodes every
-        # n_shards-th footer (stripe) of its manifest, so task count
-        # tracks cores instead of the encoder's task count.  Aim for
-        # >=2 units per task slot: with units ~= tasks, the +-1-unit
-        # remainder makes some tasks carry 2x the work (45 units on 32
-        # cores: 13 straggler tasks, measured ~15% of the decode wall at
-        # 3 GiB); at >=2x the same remainder costs <=1/2 a unit.  When
-        # manifests already exceed 2x target, n_shards=1 and unit count
-        # scales with the data — the 100 TB shape.
-        n_shards = max(1, -(-(2 * target) // max(len(paths), 1)))
-        units = [(p, s, n_shards) for p in paths for s in range(n_shards)]
-        n_parts = max(1, min(target, len(units)))
-        fn = _decode_paths_factory(
-            columns, verify_crc, predicate=pred if rowgroup_prune else None,
-            streams_dir=streams_dir, stripe_predicate=pred, map_fn=map_fn,
-        )
-        # JVM-only unit distribution via a LocalRelation.  The old
-        # parallelize() route made the unit list a *Python* RDD, so every
-        # decode ran a hidden extra Python stage (one deserializer task
-        # per partition through a second worker pool) before the scan —
-        # measured ~0.2 core-s and ~10 ms of wall PER TASK of pure
-        # orchestration on this host, about half the whole job's fixed
-        # cost at bench scale.  A LocalRelation scan parallelizes to
-        # defaultParallelism with near-even contiguous slices and NO
-        # exchange, keeping the decode a single stage; the interleaved
-        # ordering reproduces the old round-robin unit placement under
-        # contiguous slicing (manifest diversity per task, shards of one
-        # manifest spread across tasks).
-        rr = [u for j in range(n_parts) for u in units[j::n_parts]]
-        paths_df = spark.createDataFrame(
-            rr, "path string, shard int, n_shards int"
-        )
-        if n_partitions and n_partitions != spark.sparkContext.defaultParallelism:
-            # explicit caller override: worth one (tiny, metadata-only)
-            # round-robin exchange to honor the requested task count
-            # (LocalTableScanExec alone caps at defaultParallelism)
-            paths_df = paths_df.repartition(n_parts)
-        out = paths_df.mapInArrow(fn, schema=schema_ddl)
-    elif sample.get("stripe_file"):
-        # files sink on a non-listable store: manifest scan + round-robin
-        # repartition (perfectly balanced; hashing 32 stripes into 32
-        # partitions leaves ~1/e of the cores idle), one Python task per
-        # core
-        is_footer = F.col("kind") == "FOOTER"
-        raw = raw.filter(is_footer)
-        fn = _decode_partition_factory(
-            columns, verify_crc, predicate=pred if rowgroup_prune else None,
-            streams_dir=streams_dir, map_fn=map_fn,
-        )
-        n_parts = n_partitions or max(spark.sparkContext.defaultParallelism, 8)
-        out = raw.repartition(n_parts).mapInArrow(fn, schema=schema_ddl)
-    else:
-        is_footer = F.col("kind") == "FOOTER"
-        is_bloom = F.col("kind") == "BLOOM_FILTER_UTF8"
-        data_keep = ~is_bloom
-        if columns:
-            data_keep = data_keep & F.col("column").isin(list(columns))
-        if pred is not None and rowgroup_prune:
-            from ..engine import sarg as sarg_mod
-
-            pred_cols = sorted(sarg_mod.columns_of(pred))
-            bloom_keep = is_bloom & F.col("column").isin(pred_cols)
-        else:
-            bloom_keep = F.lit(False)
-        raw = raw.filter(is_footer | data_keep | bloom_keep)
-        fn = _decode_partition_factory(
-            columns, verify_crc, predicate=pred if rowgroup_prune else None,
-            streams_dir=streams_dir, map_fn=map_fn,
-        )
-        # parquet sink: a stripe's stream rows must co-locate -> hash on
-        # stripe_id; 2x cores halves collision imbalance (worth the extra
-        # task launches because hash skew costs more than they do)
-        n_parts = n_partitions or max(2 * spark.sparkContext.defaultParallelism, 8)
-        out = raw.repartition(n_parts, "stripe_id").mapInArrow(fn, schema=schema_ddl)
+    # ONE self-contained footer row per stripe (blobs live in stripe
+    # files), so the decode is a single stage over the manifest-file list
+    # — no JVM parquet scan, no repartition shuffle, no stage barrier.
+    # Round-robin interleave of the sorted path list balances tasks
+    # (manifest files ~ uniform stripes/task); the LocalRelation slices
+    # it contiguously.
+    paths = _manifest_paths(streams_dir)
+    # no max(cores, 8) floor here: LocalTableScanExec caps parallelism at
+    # defaultParallelism, so a higher floor can only be honored by adding
+    # an exchange — and the single-stage shape is worth more than extra
+    # sub-core tasks on a <8-core host (each exchange measured ~0.6 s of
+    # pure orchestration).  Callers that want more tasks pass
+    # n_partitions explicitly and pay the one metadata-only exchange
+    # below.
+    target = n_partitions or spark.sparkContext.defaultParallelism
+    # one scan unit per (manifest, shard): when manifests are few, shard
+    # BELOW manifest granularity — each shard decodes every n_shards-th
+    # footer (stripe) of its manifest, so task count tracks cores instead
+    # of the encoder's task count.  Aim for >=2 units per task slot: with
+    # units ~= tasks, the +-1-unit remainder makes some tasks carry 2x the
+    # work (45 units on 32 cores: 13 straggler tasks, measured ~15% of the
+    # decode wall at 3 GiB); at >=2x the same remainder costs <=1/2 a
+    # unit.  When manifests already exceed 2x target, n_shards=1 and unit
+    # count scales with the data — the 100 TB shape.
+    n_shards = max(1, -(-(2 * target) // max(len(paths), 1)))
+    units = [(p, s, n_shards) for p in paths for s in range(n_shards)]
+    n_parts = max(1, min(target, len(units)))
+    fn = _decode_paths_factory(
+        columns, verify_crc, predicate=pred if rowgroup_prune else None,
+        streams_dir=streams_dir, stripe_predicate=pred, map_fn=map_fn,
+    )
+    # JVM-only unit distribution via a LocalRelation.  A parallelize()
+    # route would make the unit list a *Python* RDD, so every decode would
+    # run a hidden extra Python stage (one deserializer task per partition
+    # through a second worker pool) before the scan — measured ~0.2 core-s
+    # and ~10 ms of wall PER TASK of pure orchestration, about half the
+    # whole job's fixed cost at bench scale.  A LocalRelation scan
+    # parallelizes to defaultParallelism with near-even contiguous slices
+    # and NO exchange, keeping the decode a single stage; the interleaved
+    # ordering gives round-robin unit placement under contiguous slicing
+    # (manifest diversity per task, shards of one manifest spread across
+    # tasks).
+    rr = [u for j in range(n_parts) for u in units[j::n_parts]]
+    paths_df = spark.createDataFrame(rr, "path string, shard int, n_shards int")
+    if n_partitions and n_partitions != spark.sparkContext.defaultParallelism:
+        # explicit caller override: worth one (tiny, metadata-only)
+        # round-robin exchange to honor the requested task count
+        # (LocalTableScanExec alone caps at defaultParallelism)
+        paths_df = paths_df.repartition(n_parts)
+    out = paths_df.mapInArrow(fn, schema=schema_ddl)
     if cast_to:
         out = out.select(
             *[
@@ -440,8 +314,6 @@ def run_decode(
             ]
         )
     if row_filter and pred is not None:
-        from ..engine import sarg as sarg_mod
-
         out = out.filter(sarg_mod.to_spark_column(pred))
     if evolution is not None:
         out = out.select(
@@ -498,29 +370,11 @@ def run_decode_map(
 def file_schema_fields(spark: SparkSession, streams_dir: str) -> list[tuple[str, str]]:
     """[(column name, spark DDL type), ...] in file order, from one footer
     (planner-scale metadata read, like the reference's file-tail parse)."""
-    row = (
-        read_streams(spark, streams_dir)
-        .filter(F.col("kind") == "FOOTER")
-        .select("data")
-        .limit(1)
-        .collect()
-    )
-    if not row:
-        raise ValueError(f"no FOOTER rows in {streams_dir}")
-    footer = json.loads(bytes(row[0][0]).decode())
-    return [(c["name"], _ddl_type(c)) for c in footer["columns"]]
-
-
-def read_streams(spark: SparkSession, streams_dir: str) -> DataFrame:
-    """Read the streams table with its static schema (no inference job:
-    plan construction stays fully lazy)."""
-    return spark.read.schema(STREAMS_SCHEMA).parquet(streams_dir)
+    return [(c["name"], _ddl_type(c)) for c in _sample_footer(streams_dir)["columns"]]
 
 
 def _as_predicate(stripe_filter) -> tuple:
     """Accept a sarg tree or the legacy (column, lo, hi) range tuple."""
-    from ..engine import sarg as sarg_mod
-
     ops = {"and", "or", "not", "=", "<", "<=", ">", ">=", "in", "between", "is_null"}
     if stripe_filter and stripe_filter[0] in ops:
         return tuple(stripe_filter)
@@ -534,9 +388,10 @@ def footers_df(spark: SparkSession, streams_dir: str) -> DataFrame:
     This is the engine's stripe directory (what ``ReaderImpl`` reads from
     the file tail) as a first-class DataFrame — every planning operation
     (stats pruning, bloom probing, schema inference, resume) joins
-    against it instead of collecting footers to the driver."""
+    against it instead of collecting footers to the driver.  The static
+    manifest schema means no inference job: plan construction stays lazy."""
     return (
-        read_streams(spark, streams_dir)
+        spark.read.schema(STREAMS_SCHEMA).parquet(streams_dir)
         .filter(F.col("kind") == "FOOTER")
         .select("stripe_id", F.col("data").cast("string").alias("footer"))
     )
@@ -552,8 +407,6 @@ def prune_stripes_df(
     footers = footers_df(spark, streams_dir)
 
     def eval_part(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from ..engine import sarg as sarg_mod
-
         for pdf in pdfs:
             keeps = []
             # one JSON parse + tree walk per stripe: planner-scale metadata
@@ -576,62 +429,36 @@ def prune_stripes_bloom_df(
 ) -> DataFrame:
     """Stripe ids that *might* contain ``value`` in ``column``, probed
     against the per-stripe bloom streams IN EXECUTORS (bloom blobs never
-    reach the driver).  Stripes without a bloom stream are kept."""
-    blooms = (
-        read_streams(spark, streams_dir)
-        .filter((F.col("kind") == "BLOOM_FILTER_UTF8") & (F.col("column") == column))
-        .select("stripe_id", "data")
-    )
+    reach the driver): a byte-range read of just the bloom span per
+    footer.  Stripes without a bloom stream are kept."""
 
     def probe(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from ..engine import bloom as bloom_mod
-
-        for pdf in pdfs:
-            miss = [
-                not bloom_mod.might_contain_any(bytes(b), value) for b in pdf["data"]
-            ]
-            yield pdf.loc[miss, ["stripe_id"]]
-
-    misses = blooms.mapInPandas(probe, "stripe_id long")
-
-    # files sink: bloom blobs live in the stripe files — byte-range read
-    # of just the bloom span per footer, probed executor-side
-    def probe_files(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import os
-
         from ..engine import bloom as bloom_mod
 
         for pdf in pdfs:
             miss = []
             for blob in pdf["footer"]:
                 footer = json.loads(blob)
-                rel = footer.get("stripe_file")
                 span = next(
                     (
                         (off, ln)
-                        for c, k, off, ln in footer.get("stream_spans", [])
+                        for c, k, off, ln in footer["stream_spans"]
                         if c == column and k == "BLOOM_FILTER_UTF8"
                     ),
                     None,
                 )
-                if rel is None or span is None:
+                if span is None:
                     miss.append(False)  # no bloom: cannot skip
                     continue
-                path = rel if os.path.isabs(rel) else os.path.join(streams_dir, rel)
-                with open(path, "rb") as f:
+                with open(_stripe_path(footer, streams_dir), "rb") as f:
                     f.seek(span[0])
                     blob_bytes = f.read(span[1])
                 miss.append(not bloom_mod.might_contain_any(blob_bytes, value))
             yield pdf.loc[miss, ["stripe_id"]]
 
-    file_misses = footers_df(spark, streams_dir).mapInPandas(
-        probe_files, "stripe_id long"
-    )
-    all_ids = footers_df(spark, streams_dir).select("stripe_id")
-    return (
-        all_ids.join(F.broadcast(misses), "stripe_id", "left_anti")
-        .join(F.broadcast(file_misses), "stripe_id", "left_anti")
-    )
+    footers = footers_df(spark, streams_dir)
+    misses = footers.mapInPandas(probe, "stripe_id long")
+    return footers.select("stripe_id").join(F.broadcast(misses), "stripe_id", "left_anti")
 
 
 def stripe_stats_df(spark: SparkSession, streams_dir: str) -> DataFrame:
@@ -665,8 +492,6 @@ def prune_stripes(
 ) -> list[int]:
     """Stripe ids whose [min, max] for ``column`` intersects [lo, hi]
     (driver-side list wrapper over :func:`prune_stripes_df`)."""
-    from ..engine import sarg as sarg_mod
-
     df = prune_stripes_df(spark, streams_dir, sarg_mod.from_range(column, lo, hi))
     return sorted(r[0] for r in df.collect())
 
@@ -713,59 +538,21 @@ def _ddl_type(col_meta: dict) -> str:
     raise NotImplementedError(t)
 
 
-_FOOTER_CACHE: dict[str, dict] = {}
+def _sample_footer(streams_dir: str) -> dict:
+    """One parsed FOOTER row, pyarrow-read from the first manifest part
+    that has one (planner-scale metadata: schema inference reads only
+    this).  Uncached: a dir rewritten with another schema is seen at once,
+    and the read costs well under a millisecond."""
+    import pyarrow.parquet as pq
 
-
-def _sample_footer(spark: SparkSession, streams_dir: str) -> dict:
-    """One parsed FOOTER row (planner-scale metadata: schema inference +
-    sink-type detection share this single lookup).  Cached per directory
-    for the session: the schema and sink type of a streams dir are fixed
-    at creation, and the lookup is otherwise a full (tiny) Spark job on
-    every decode call."""
-    cached = _FOOTER_CACHE.get(streams_dir)
-    if cached is not None:
-        return cached
-    # listable store: read one manifest part directly (planner-scale
-    # metadata — on the files sink the manifest holds ONLY footer rows),
-    # skipping a whole Spark job on the first decode of a directory
-    import os as _os
-
-    if _os.path.isdir(streams_dir):
-        import pyarrow.parquet as _pq
-
-        for p in _manifest_paths(streams_dir):
-            try:
-                pf = _pq.ParquetFile(p)
-                for rg in range(pf.num_row_groups):
-                    # probe the tiny "kind" column first so a parquet-sink
-                    # manifest's stream blobs are only fetched for the one
-                    # row group that holds a FOOTER row
-                    kinds = pf.read_row_group(rg, columns=["kind"]).column(
-                        "kind"
-                    ).to_pylist()
-                    if "FOOTER" not in kinds:
-                        continue
-                    blob = pf.read_row_group(rg, columns=["data"]).column(
-                        "data"
-                    )[kinds.index("FOOTER")].as_py()
-                    footer = json.loads(bytes(blob).decode())
-                    _FOOTER_CACHE[streams_dir] = footer
-                    return footer
-            except Exception:
-                continue
-        raise ValueError(f"no FOOTER rows in {streams_dir}")
-    row = (
-        read_streams(spark, streams_dir)
-        .filter(F.col("kind") == "FOOTER")
-        .select("data")
-        .limit(1)
-        .collect()
-    )
-    if not row:
-        raise ValueError(f"no FOOTER rows in {streams_dir}")
-    footer = json.loads(bytes(row[0][0]).decode())
-    _FOOTER_CACHE[streams_dir] = footer
-    return footer
+    for p in _manifest_paths(streams_dir):
+        t = pq.read_table(p, columns=["kind", "data"], use_threads=False)
+        kinds = t["kind"].to_pylist()
+        if "FOOTER" in kinds:
+            footer = json.loads(t["data"][kinds.index("FOOTER")].as_py())
+            _stripe_path(footer, streams_dir)  # refuse inline-blob manifests
+            return footer
+    raise ValueError(f"no FOOTER rows in {streams_dir}")
 
 
 def _schema_ddl_from_footer(footer: dict, columns: list[str] | None = None) -> str:
@@ -781,4 +568,4 @@ def infer_schema_ddl(
     spark: SparkSession, streams_dir: str, columns: list[str] | None = None
 ) -> str:
     """Read one FOOTER row and derive the Spark DDL schema."""
-    return _schema_ddl_from_footer(_sample_footer(spark, streams_dir), columns)
+    return _schema_ddl_from_footer(_sample_footer(streams_dir), columns)

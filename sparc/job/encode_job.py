@@ -1,4 +1,4 @@
-"""The distributed encode job: scan → stripe partition → mapInArrow → sink.
+"""The distributed encode job: scan → stripe partition → mapInArrow → stripes.
 
 Lifecycle (SURVEY.md §3.4):
 
@@ -6,25 +6,32 @@ Lifecycle (SURVEY.md §3.4):
       → stripe assignment (partition.py — explicit, deterministic, salted)
       → repartition(n, stripe_col)                 [the only shuffle]
       → mapInArrow(encode): per stripe — optional locality sort, stats,
-        codec auto-selection, kernel encode → stream rows + footer row
-      → append to the streams table (parquet dir; one atomic task commit
-        per partition, so a stripe's streams+footer land together)
+        codec auto-selection, kernel encode → ``<out>/stripes/<sid>.sparc``
+        (temp file + atomic rename) + one FOOTER row
+      → append the FOOTER rows to the footer manifest (parquet part files
+        in ``<out>``; one atomic task commit per partition)
 
 Resume: a stripe is complete iff its FOOTER row exists.  Re-running the
 job anti-joins planned stripes against completed footers and encodes only
 the remainder — per-partition lineage lives in the footer (input
-fingerprint, row count, per-stream sizes + crc32 checksums).
+fingerprint, row count, per-stream sizes + crc32 checksums).  A stripe
+file without a committed FOOTER row is invisible garbage, and a retried
+task atomically overwrites it with identical bytes.
 
-Output schema (the "streams table"):
+Manifest schema (one row per stripe):
     stripe_id:long, column:string, kind:string, data:binary
-FOOTER rows use column='', kind='FOOTER', data=UTF-8 JSON.
+with column='', kind='FOOTER', data=UTF-8 JSON footer.  The footer names
+the stripe file and each stream's (column, kind, offset, length) span in
+it, so readers byte-range-fetch only the streams they need.
 """
 
 from __future__ import annotations
 
+import functools
 import json
+import os
 import zlib
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from typing import Callable
 
 import pyarrow as pa
@@ -37,6 +44,7 @@ from . import partition as part_mod
 STREAMS_SCHEMA = "stripe_id long, column string, kind string, data binary"
 
 # "input" strategy: stripe_id = partition_id * SPACE + local chunk index
+# (pyscan: unit index * SPACE + local chunk index)
 INPUT_SPLIT_SPACE = 1 << 16
 
 _PA_OUT = pa.schema(
@@ -49,148 +57,141 @@ _PA_OUT = pa.schema(
 )
 
 
+def write_stripe(
+    table: pa.Table,
+    sid: int,
+    out_dir: str,
+    *,
+    codec: str = "zstd",
+    sort_within: list[str] | None = None,
+    bloom_columns: list[str] | None = None,
+    fsst: bool | None = None,
+    row_index_stride: int | None = ROW_INDEX_STRIDE,
+    fingerprint: str = "",
+) -> pa.RecordBatch:
+    """Encode ``table`` as stripe ``sid`` into ``<out_dir>/stripes/<sid>.sparc``
+    and return its one-row FOOTER manifest batch.
+
+    The stream bytes go straight from the worker to the stripe file; only
+    the footer — with the file path and per-stream (offset, length) spans —
+    flows back through Arrow into the manifest.  ``out_dir`` must be a
+    filesystem every executor can reach (an object-store mount / fsspec
+    path at cluster scale)."""
+    if sort_within:
+        table = table.sort_by([(c, "ascending") for c in sort_within])
+    streams, footer = stripe_mod.encode_stripe(
+        table, codec=codec, bloom_columns=bloom_columns, fsst=fsst,
+        row_index_stride=row_index_stride,
+    )
+    footer["crc32"] = {f"{c}/{k}": zlib.crc32(v) for (c, k), v in streams.items()}
+    footer["stripe_id"] = sid
+    footer["input_fingerprint"] = fingerprint
+    footer["sorted_by"] = sort_within or []
+    rel = f"stripes/{sid}.sparc"
+    path = os.path.join(out_dir, rel)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.tmp-{os.getpid()}"
+    # span list (not a "col/kind" keyed dict): column names may
+    # themselves contain the separator
+    spans = []
+    off = 0
+    with open(tmp, "wb") as f:
+        for (cname, kind), blob in streams.items():
+            f.write(blob)
+            spans.append([cname, kind, off, len(blob)])
+            off += len(blob)
+    os.replace(tmp, path)  # atomic: readers never see a partial file
+    footer["stripe_file"] = rel
+    footer["stream_spans"] = spans
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([sid], pa.int64()),
+            pa.array([""], pa.string()),
+            pa.array(["FOOTER"], pa.string()),
+            pa.array([json.dumps(footer).encode()], pa.large_binary()),
+        ],
+        schema=_PA_OUT,
+    )
+
+
+def _cut_stripes(
+    batches: Iterable[pa.RecordBatch], per: int, group: int
+) -> Iterator[tuple[pa.Table, int]]:
+    """Cut a batch stream into stripes of ``per`` rows, yielding
+    ``(table, stripe_id)`` with ids ``group * INPUT_SPLIT_SPACE + local``.
+
+    Incremental: a stripe is cut as soon as its rows have arrived, so the
+    worker's resident set stays bounded at <= 2 stripe targets, not one
+    whole input partition (large per-worker footprints are
+    first-touch-fault poison on fault-slow hosts, and at real scale an
+    input split can exceed executor memory anyway).  Mid-stream cuts only
+    at >= 2*per buffered rows: a group of ~per rows becomes ONE full
+    stripe instead of a full stripe plus a runt (runts compress worse and
+    add per-stripe overhead); the final stripe of a long group lands in
+    [per, 2*per).  A group that would need more than INPUT_SPLIT_SPACE
+    stripes raises instead of running into the next group's ids."""
+    base = group * INPUT_SPLIT_SPACE
+    local = 0
+    buf: list[pa.RecordBatch] = []
+    buffered = 0
+
+    def sid() -> int:
+        if local >= INPUT_SPLIT_SPACE:
+            raise ValueError(
+                f"stripe group {group} exceeds {INPUT_SPLIT_SPACE} stripes; "
+                "raise target_rows_per_stripe or split the input"
+            )
+        return base + local
+
+    for b in batches:
+        buf.append(b)
+        buffered += b.num_rows
+        while buffered >= 2 * per:
+            table = pa.Table.from_batches(buf)
+            yield table.slice(0, per), sid()
+            local += 1
+            rest = table.slice(per)
+            buf = rest.to_batches(max_chunksize=1 << 20) if rest.num_rows else []
+            buffered = rest.num_rows
+    if buffered:
+        yield pa.Table.from_batches(buf), sid()
+
+
 def _encode_partition_factory(
+    out_dir: str,
     codec: str,
     sort_within: list[str] | None,
     fingerprint: str,
     bloom_columns: list[str] | None = None,
     fsst: bool | None = None,
     input_split_mode: bool = False,
-    done_stripes=frozenset(),  # frozenset[int] | Broadcast[frozenset[int]]
     rows_per_stripe: int = 0,
     row_index_stride: int | None = ROW_INDEX_STRIDE,
-    sink_dir: str | None = None,
 ) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
-    """Build the mapInArrow function (no per-row Python anywhere inside).
+    """Build the mapInArrow function over a DataFrame's rows (no per-row
+    Python anywhere inside): each stripe goes through :func:`write_stripe`
+    into ``out_dir``.
 
     ``input_split_mode``: stripes are derived from the input partition id
     instead of a stripe column — the shuffle-free path (see run_encode).
-
-    ``sink_dir`` switches on the "files" sink: each stripe's streams are
-    written directly from the worker to ``<sink_dir>/stripes/<sid>.sparc``
-    (temp file + atomic rename) and only the FOOTER row — now carrying
-    the stripe file path and per-stream (offset, length) spans — flows
-    back through Arrow into the manifest parquet.  This removes the
-    encoded bytes from the Python→JVM transfer AND from the parquet
-    encoder (both pure double-handling: the blobs are already
-    block-codec compressed), and is the object-store PUT + manifest
-    commit shape a 100 TB run uses.  Visibility is still footer-commit:
-    a stripe file without a committed FOOTER row is invisible garbage,
-    and a retried task atomically overwrites it with identical bytes.
     """
-
-    def _emit(sub: pa.Table, sid: int) -> pa.RecordBatch:
-        if sort_within:
-            sub = sub.sort_by([(c, "ascending") for c in sort_within])
-        streams, footer = stripe_mod.encode_stripe(
-            sub, codec=codec, bloom_columns=bloom_columns, fsst=fsst,
-            row_index_stride=row_index_stride,
-        )
-        return _to_batch(streams, footer, sid)
-
-    def _to_batch(streams, footer, sid) -> pa.RecordBatch:
-        crcs = {f"{c}/{k}": zlib.crc32(v) for (c, k), v in streams.items()}
-        footer["crc32"] = crcs
-        footer["stripe_id"] = sid
-        footer["input_fingerprint"] = fingerprint
-        footer["sorted_by"] = sort_within or []
-        if sink_dir is not None:
-            _write_stripe_file(streams, footer, sid)
-            cols, kinds, blobs = [], [], []
-        else:
-            cols, kinds, blobs = [], [], []
-            for (cname, kind), data in streams.items():
-                cols.append(cname)
-                kinds.append(kind)
-                blobs.append(data)
-        cols.append("")
-        kinds.append("FOOTER")
-        blobs.append(json.dumps(footer).encode())
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array([sid] * len(cols), pa.int64()),
-                pa.array(cols, pa.string()),
-                pa.array(kinds, pa.string()),
-                pa.array(blobs, pa.large_binary()),
-            ],
-            schema=_PA_OUT,
-        )
-
-    def _write_stripe_file(streams, footer, sid) -> None:
-        import os
-
-        rel = f"stripes/{sid}.sparc"
-        path = os.path.join(sink_dir, rel)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp-{os.getpid()}"
-        # span list (not a "col/kind" keyed dict): column names may
-        # themselves contain the separator
-        spans = []
-        off = 0
-        with open(tmp, "wb") as f:
-            for (cname, kind), blob in streams.items():
-                f.write(blob)
-                spans.append([cname, kind, off, len(blob)])
-                off += len(blob)
-        os.replace(tmp, path)  # atomic: readers never see a partial file
-        footer["stripe_file"] = rel
-        footer["stream_spans"] = spans
+    write = functools.partial(
+        write_stripe, out_dir=out_dir, codec=codec, sort_within=sort_within,
+        bloom_columns=bloom_columns, fsst=fsst,
+        row_index_stride=row_index_stride, fingerprint=fingerprint,
+    )
 
     def encode_input_partition(
         batches: Iterator[pa.RecordBatch],
     ) -> Iterator[pa.RecordBatch]:
-        # Incremental: emit each stripe as soon as rows_per_stripe rows
-        # have arrived — the worker's resident set stays one stripe, not
-        # one whole input partition (large per-worker footprints are
-        # first-touch-fault poison on fault-slow hosts, and at real scale
-        # an input split can exceed executor memory anyway).
         from pyspark import TaskContext
 
         from .. import runtime
 
         runtime.init_worker()
         pid = TaskContext.get().partitionId()
-        base = pid * INPUT_SPLIT_SPACE
-        per = rows_per_stripe or (1 << 62)
-        local = 0
-        buf: list[pa.RecordBatch] = []
-        buffered = 0
-
-        # the done set arrives as a Spark Broadcast (one copy per executor,
-        # not per task closure) when run_encode drives the job
-        done = done_stripes.value if hasattr(done_stripes, "value") else done_stripes
-
-        def flush(table: pa.Table, sid: int):
-            if sid in done:
-                return None
-            return _emit(table, sid)
-
-        # mid-stream cuts only at >= 2*per buffered rows: a partition of
-        # ~per rows becomes ONE full stripe instead of a full stripe plus
-        # a runt (runts compress worse and add per-stripe overhead); the
-        # final stripe of a long partition lands in [per, 2*per).  Worker
-        # residency stays bounded at <= 2 stripe targets.
-        for b in batches:
-            buf.append(b)
-            buffered += b.num_rows
-            while buffered >= 2 * per:
-                if local >= INPUT_SPLIT_SPACE:
-                    raise ValueError(
-                        f"input partition {pid} exceeds {INPUT_SPLIT_SPACE} stripes; "
-                        "raise target_rows_per_stripe or split the input"
-                    )
-                table = pa.Table.from_batches(buf)
-                out = flush(table.slice(0, per), base + local)
-                local += 1
-                rest = table.slice(per)
-                buf = rest.to_batches(max_chunksize=1 << 20) if rest.num_rows else []
-                buffered = rest.num_rows
-                if out is not None:
-                    yield out
-        if buffered:
-            out = flush(pa.Table.from_batches(buf), base + local)
-            if out is not None:
-                yield out
+        for table, sid in _cut_stripes(batches, rows_per_stripe or (1 << 62), pid):
+            yield write(table, sid)
 
     def encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from .. import runtime
@@ -207,14 +208,19 @@ def _encode_partition_factory(
             # common case (partitions == stripes): no filter copy — the
             # partition IS the stripe (halves peak allocation, which the
             # host's fault pathology otherwise amplifies)
-            yield _emit(table.drop_columns([part_mod.STRIPE_COL]), uniq[0])
+            yield write(table.drop_columns([part_mod.STRIPE_COL]), uniq[0])
             return
         for sid in uniq:
             sub = table.filter(pa.compute.equal(stripe_ids, sid))
-            sub = sub.drop_columns([part_mod.STRIPE_COL])
-            yield _emit(sub, sid)
+            yield write(sub.drop_columns([part_mod.STRIPE_COL]), sid)
 
     return encode_input_partition if input_split_mode else encode_partition
+
+
+def append_footers(footers: DataFrame, out_dir: str) -> None:
+    """Commit FOOTER rows to the manifest: one parquet part file per task,
+    so a task's footers land together or not at all."""
+    footers.write.mode("append").option("compression", "uncompressed").parquet(out_dir)
 
 
 def completed_stripes_df(
@@ -273,7 +279,7 @@ def completed_groups_df(
 
     Why group granularity is exact, not approximate: one input partition
     (or one batch of scan units) is processed by exactly one task, and
-    that task's manifest rows — every stripe's streams/FOOTER it produced
+    that task's manifest rows — every stripe FOOTER it produced
     — commit atomically through the parquet task-commit protocol.  So a
     group with ANY committed footer has ALL its footers committed, and a
     broadcast anti-join on the group id skips exactly the work that is
@@ -304,7 +310,6 @@ def run_encode(
     bloom_columns: list[str] | None = None,
     fsst: bool | None = None,
     row_index_stride: int | None = ROW_INDEX_STRIDE,
-    sink: str = "parquet",
 ) -> dict:
     """Run (or resume) the encode job.  Returns a summary dict.
 
@@ -317,18 +322,9 @@ def run_encode(
       conf.  The fast path when stripe/content affinity is not required:
       at cluster scale it removes the full-table shuffle entirely.
 
-    Sinks:
-    - ``parquet``: stream blobs ride inside the manifest parquet rows
-      (self-contained single table; best for small outputs).
-    - ``files``: workers write each stripe to its own raw file and only
-      footers enter the manifest — no double-handling of encoded bytes
-      (see _encode_partition_factory).  ``out_dir`` must be a filesystem
-      all executors can reach (local dir here; an object-store mount /
-      fsspec path at cluster scale).
+    Workers write each stripe to its own file under ``out_dir`` and only
+    footers enter the manifest (see :func:`write_stripe`).
     """
-    if sink not in ("parquet", "files"):
-        raise ValueError(f"unknown sink {sink!r}")
-    sink_dir = out_dir if sink == "files" else None
     spark = df.sparkSession
 
     if strategy == "input":
@@ -359,18 +355,12 @@ def run_encode(
                         .drop("__sparc_pid")
                     )
         fn = _encode_partition_factory(
-            codec, sort_within, fingerprint, bloom_columns, fsst,
+            out_dir, codec, sort_within, fingerprint, bloom_columns, fsst,
             input_split_mode=True,
             rows_per_stripe=target_rows_per_stripe,
             row_index_stride=row_index_stride,
-            sink_dir=sink_dir,
         )
-        (
-            src.mapInArrow(fn, schema=STREAMS_SCHEMA)
-            .write.mode("append")
-            .option("compression", "uncompressed")  # blobs are already zstd
-            .parquet(out_dir)
-        )
+        append_footers(src.mapInArrow(fn, schema=STREAMS_SCHEMA), out_dir)
         return {"n_stripes": None, "skipped": skipped, "out_dir": out_dir}
 
     if strategy == "lang_salted":
@@ -397,16 +387,14 @@ def run_encode(
 
     parts = n_partitions or n_stripes
     fn = _encode_partition_factory(
-        codec, sort_within, fingerprint, bloom_columns, fsst,
-        row_index_stride=row_index_stride, sink_dir=sink_dir,
+        out_dir, codec, sort_within, fingerprint, bloom_columns, fsst,
+        row_index_stride=row_index_stride,
     )
-    out = (
+    append_footers(
         staged.repartition(parts, F.col(part_mod.STRIPE_COL))
-        .mapInArrow(fn, schema=STREAMS_SCHEMA)
+        .mapInArrow(fn, schema=STREAMS_SCHEMA),
+        out_dir,
     )
-    # stream blobs are already block-codec compressed; parquet-snappy on
-    # top is pure CPU on incompressible data (both writing and reading)
-    out.write.mode("append").option("compression", "uncompressed").parquet(out_dir)
     return {"n_stripes": n_stripes, "skipped": skipped, "out_dir": out_dir}
 
 
@@ -592,6 +580,40 @@ def plan_units_from_manifest(
     )
 
 
+def _encode_units_factory(
+    out_dir: str, per: int, columns: list[str] | None, **stripe_kw
+) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    """Build the mapInArrow function over scan-unit rows [idx, path,
+    rg_lo, rg_hi]: each worker streams its units' row groups with pyarrow
+    and cuts stripes with the same 2*per rule as the input strategy (a
+    unit packed to ~per rows encodes as ONE full stripe, no runt).
+    ``stripe_kw`` goes to :func:`write_stripe`."""
+
+    def encode_units(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.parquet as pq
+
+        from .. import runtime
+
+        runtime.init_worker()
+        for b in batches:
+            for uidx, path, rg_lo, rg_hi in zip(
+                b.column("idx").to_pylist(),
+                b.column("path").to_pylist(),
+                b.column("rg_lo").to_pylist(),
+                b.column("rg_hi").to_pylist(),
+            ):
+                rbs = pq.ParquetFile(path).iter_batches(
+                    batch_size=1 << 16,
+                    row_groups=range(rg_lo, rg_hi),
+                    columns=columns,
+                    use_threads=False,  # 1 task = 1 core (see init_worker)
+                )
+                for table, sid in _cut_stripes(rbs, per, uidx):
+                    yield write_stripe(table, sid, out_dir, **stripe_kw)
+
+    return encode_units
+
+
 def run_encode_paths(
     spark: SparkSession,
     input_dir: str,
@@ -611,7 +633,7 @@ def run_encode_paths(
     """Direct-scan encode: distribute parquet SCAN UNITS (file + row-group
     range) to workers; each worker reads its ranges with pyarrow
     (streamed row-group-at-a-time) and encodes stripes incrementally to
-    the files sink.
+    stripe files.
 
     This removes the JVM from the data path entirely — no JVM parquet
     scan, no JVM->Python Arrow transfer: Spark only schedules.  At
@@ -648,7 +670,7 @@ def run_encode_paths(
         balanced = False
     else:
         # driver-side plan: interleave the unit rows round-robin across
-        # the LocalRelation's contiguous slices (the files-sink decode
+        # the LocalRelation's contiguous slices (the paths decode
         # trick) so the encode is a SINGLE STAGE — no count() job, no
         # repartition exchange; units of one file spread across tasks
         rows = _plan_units_rows(files, per)
@@ -700,7 +722,7 @@ def run_encode_units(
     any filesystem listing or footer reads.  ``idx`` must be unique and
     deterministic for resume (see _plan_units for the fidx*UNIT_SPACE
     convention).  Everything else — streamed row-group reads in workers,
-    incremental stripe cuts, files sink, group-level plan-side resume —
+    incremental stripe cuts, stripe-file writes, group-level plan-side resume —
     is shared with run_encode_paths."""
     per = max(target_rows_per_stripe, 1)
     skipped = 0
@@ -726,88 +748,11 @@ def run_encode_units(
                 # only the round-robin exchange spreads them over the cores
                 n_units = None
                 balanced = False
-    sink_dir = out_dir
-
-    def encode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import os as _os
-
-        import pyarrow.parquet as pq
-
-        from .. import runtime
-
-        runtime.init_worker()
-
-        def write_stripe(table: pa.Table, sid: int):
-            if sort_within:
-                table = table.sort_by([(c, "ascending") for c in sort_within])
-            streams, footer = stripe_mod.encode_stripe(
-                table, codec=codec, bloom_columns=bloom_columns, fsst=fsst,
-                row_index_stride=row_index_stride,
-            )
-            crcs = {f"{c}/{k}": zlib.crc32(v) for (c, k), v in streams.items()}
-            footer["crc32"] = crcs
-            footer["stripe_id"] = sid
-            footer["input_fingerprint"] = fingerprint
-            footer["sorted_by"] = sort_within or []
-            rel = f"stripes/{sid}.sparc"
-            path = _os.path.join(sink_dir, rel)
-            _os.makedirs(_os.path.dirname(path), exist_ok=True)
-            tmp = f"{path}.tmp-{_os.getpid()}"
-            spans = []
-            off = 0
-            with open(tmp, "wb") as f:
-                for (cname, kind), blob in streams.items():
-                    f.write(blob)
-                    spans.append([cname, kind, off, len(blob)])
-                    off += len(blob)
-            _os.replace(tmp, path)
-            footer["stripe_file"] = rel
-            footer["stream_spans"] = spans
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array([sid], pa.int64()),
-                    pa.array([""], pa.string()),
-                    pa.array(["FOOTER"], pa.string()),
-                    pa.array([json.dumps(footer).encode()], pa.large_binary()),
-                ],
-                schema=_PA_OUT,
-            )
-
-        for b in batches:
-            for uidx, path, rg_lo, rg_hi in zip(
-                b.column("idx").to_pylist(),
-                b.column("path").to_pylist(),
-                b.column("rg_lo").to_pylist(),
-                b.column("rg_hi").to_pylist(),
-            ):
-                base = uidx * INPUT_SPLIT_SPACE
-                local = 0
-                buf: list[pa.RecordBatch] = []
-                buffered = 0
-                pf = pq.ParquetFile(path)
-                # same 2*per cut rule as the input strategy: a unit packed
-                # to ~per rows encodes as ONE full stripe, no runt
-                for rb in pf.iter_batches(
-                    batch_size=1 << 16,
-                    row_groups=range(rg_lo, rg_hi),
-                    columns=columns,
-                    use_threads=False,  # 1 task = 1 core (see init_worker)
-                ):
-                    buf.append(rb)
-                    buffered += rb.num_rows
-                    while buffered >= 2 * per:
-                        table = pa.Table.from_batches(buf)
-                        out = write_stripe(table.slice(0, per), base + local)
-                        local += 1
-                        rest = table.slice(per)
-                        buf = rest.to_batches(max_chunksize=1 << 20) if rest.num_rows else []
-                        buffered = rest.num_rows
-                        if out is not None:
-                            yield out
-                if buffered:
-                    out = write_stripe(pa.Table.from_batches(buf), base + local)
-                    if out is not None:
-                        yield out
+    encode_units = _encode_units_factory(
+        out_dir, per, columns, codec=codec, sort_within=sort_within,
+        bloom_columns=bloom_columns, fsst=fsst,
+        row_index_stride=row_index_stride, fingerprint=fingerprint,
+    )
 
     # task fan-out sizing needs the todo-unit count; a caller-supplied
     # n_units (driver-side planning knows it for free) skips the count()
@@ -818,7 +763,7 @@ def run_encode_units(
     if balanced and not n_partitions:
         # caller guarantees the unit rows are interleaved so that the
         # LocalRelation's contiguous slices balance (run_encode_paths
-        # does this for driver-side plans, same trick as the files-sink
+        # does this for driver-side plans, same trick as the
         # decode): single stage, NO exchange, no extra job — each task
         # carries ~n_units/cores uniform units, which balances BETTER
         # than 2x-cores round-robin when units don't divide evenly
@@ -838,14 +783,9 @@ def run_encode_units(
         # index (not the partition), so co-location is irrelevant — and
         # hashing ~N units into N partitions idles ~1/e of the cores
         # while stragglers carry 2-3 units (the same balls-in-bins fix
-        # as the files-sink decode)
+        # as the paths decode)
         paths_df = units_df.repartition(parts)
-    (
-        paths_df.mapInArrow(encode_files, schema=STREAMS_SCHEMA)
-        .write.mode("append")
-        .option("compression", "uncompressed")
-        .parquet(out_dir)
-    )
+    append_footers(paths_df.mapInArrow(encode_units, schema=STREAMS_SCHEMA), out_dir)
     return {
         "n_units": n_units_todo,
         "skipped": skipped,

@@ -11,14 +11,15 @@ kernels, metrics) with batch-scoped stripe ids, so:
 
 - effectively-once per micro-batch: Spark's streaming checkpoint tracks
   which input files were consumed (no input replayed across committed
-  batches), and within a batch each stripe's FOOTER row commits
-  atomically with its streams (one parquet task commit).  foreachBatch
+  batches), and within a batch a stripe becomes visible only when its
+  FOOTER row commits (one manifest task commit after the stripe file's
+  atomic rename).  foreachBatch
   itself is at-least-once on failure, so ``encode_batch`` anti-joins the
   batch's planned stripes against already-committed FOOTERs for the same
   batch id before encoding — a retried batch re-encodes only the stripes
   whose commit did not land, and never appends duplicates of those that
   did;
-- the streams table stays decodable at any time — decode/pruning/compact
+- the streams dir stays decodable at any time — decode/pruning/compact
   work on it unchanged.
 
 Stripe ids are namespaced per batch: stripe_id = batch_id * STRIPE_SPACE
@@ -73,12 +74,14 @@ def make_encode_batch(
             )
             staged = staged.join(done_df, part_mod.STRIPE_COL, "left_anti")
         fn = encode_job._encode_partition_factory(
-            codec, None, f"stream-batch-{batch_id}", bloom_columns
+            out_dir, codec, None, f"stream-batch-{batch_id}", bloom_columns
         )
-        out = staged.repartition(n_stripes, F.col(part_mod.STRIPE_COL)).mapInArrow(
-            fn, schema=encode_job.STREAMS_SCHEMA
+        encode_job.append_footers(
+            staged.repartition(n_stripes, F.col(part_mod.STRIPE_COL)).mapInArrow(
+                fn, schema=encode_job.STREAMS_SCHEMA
+            ),
+            out_dir,
         )
-        out.write.mode("append").option("compression", "uncompressed").parquet(out_dir)
 
     return encode_batch
 

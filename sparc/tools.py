@@ -1,5 +1,5 @@
 """orc-tools analog: file inspection CLI over real ORC files and this
-engine's stream sinks, with no Spark session required.
+engine's stream dirs, with no Spark session required.
 
 The reference ships orc-tools alongside orc-core (same 2.2.2 release)
 with `meta` (org/apache/orc/tools/FileDump.java), `data` (PrintData.java
@@ -13,9 +13,10 @@ that surface:
     python -m sparc.tools sizes <file.orc | streams-dir>
 
 ORC files are parsed with the engine's own tail/stream kernels
-(sparc.engine.orcread); engine stream dirs (files or parquet sink) are
-decoded manifest-first with pyarrow + sparc.engine.stripe — both paths
-run driver-less, so the CLI works on any machine that can see the bytes.
+(sparc.engine.orcread); engine stream dirs (stripe files + footer
+manifest) are decoded manifest-first with pyarrow + sparc.engine.stripe —
+both paths run driver-less, so the CLI works on any machine that can see
+the bytes.
 """
 
 from __future__ import annotations
@@ -144,12 +145,12 @@ def _orc_tail(path: str) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# engine stream-dir inspection (files or parquet sink), Spark-less
+# engine stream-dir inspection (stripe files + footer manifest), Spark-less
 # ---------------------------------------------------------------------------
 
 def _dir_footers(streams_dir: str):
-    """Yield (footer dict, manifest path) for every stripe in an engine
-    sink dir, manifest-first (no Spark)."""
+    """Yield the footer dict of every stripe in an engine streams dir,
+    manifest-first (no Spark)."""
     import pyarrow.parquet as pq
 
     files = sorted(
@@ -158,18 +159,17 @@ def _dir_footers(streams_dir: str):
         if f.endswith(".parquet") and not f.startswith(("_", "."))
     )
     for p in files:
-        t = pq.read_table(p, columns=["stripe_id", "column", "kind", "data"])
-        kinds = t["kind"].to_pylist()
-        for i, k in enumerate(kinds):
-            if k == "FOOTER":
-                yield json.loads(t["data"][i].as_py().decode()), p, t, i
+        t = pq.read_table(p, columns=["kind", "data"])
+        for kind, blob in zip(t["kind"].to_pylist(), t["data"].to_pylist()):
+            if kind == "FOOTER":
+                yield json.loads(blob)
 
 
 def _dir_meta(streams_dir: str) -> dict:
     stripes = []
     columns = None
     total_rows = 0
-    for footer, _, _, _ in _dir_footers(streams_dir):
+    for footer in _dir_footers(streams_dir):
         total_rows += footer["n_rows"]
         stripes.append(
             {
@@ -191,7 +191,6 @@ def _dir_meta(streams_dir: str) -> dict:
             ]
     return {
         "path": streams_dir,
-        "sink": "files" if stripes and stripes[0]["stripe_file"] else "parquet",
         "rows": total_rows,
         "stripe_count": len(stripes),
         "columns": columns or [],
@@ -199,30 +198,16 @@ def _dir_meta(streams_dir: str) -> dict:
     }
 
 
-def _dir_stripe_streams(footer: dict, manifest_table, row_idx: int, streams_dir: str):
-    """Stream blobs for one stripe, from its stripe file (files sink) or
-    the manifest rows themselves (parquet sink)."""
-    if footer.get("stripe_file"):
-        spath = footer["stripe_file"]
-        if not os.path.isabs(spath):
-            spath = os.path.join(streams_dir, spath)
-        with open(spath, "rb") as f:
-            blob = f.read()
-        mv = memoryview(blob)
-        return {
-            (c, k): mv[off : off + ln]
-            for c, k, off, ln in footer["stream_spans"]
-            if k != "BLOOM_FILTER_UTF8"
-        }
-    sid = footer["stripe_id"]
-    streams = {}
-    sids = manifest_table["stripe_id"].to_pylist()
-    kinds = manifest_table["kind"].to_pylist()
-    cols = manifest_table["column"].to_pylist()
-    for i, (s, k, c) in enumerate(zip(sids, kinds, cols)):
-        if s == sid and k not in ("FOOTER", "BLOOM_FILTER_UTF8"):
-            streams[(c, k)] = manifest_table["data"][i].as_py()
-    return streams
+def _dir_stripe_streams(footer: dict, streams_dir: str):
+    """Stream blobs for one stripe, from its stripe file (bloom filters
+    skipped: a full decode never probes them)."""
+    with open(os.path.join(streams_dir, footer["stripe_file"]), "rb") as f:
+        mv = memoryview(f.read())
+    return {
+        (c, k): mv[off : off + ln]
+        for c, k, off, ln in footer["stream_spans"]
+        if k != "BLOOM_FILTER_UTF8"
+    }
 
 
 def _iter_tables(path: str):
@@ -230,10 +215,8 @@ def _iter_tables(path: str):
     if os.path.isdir(path):
         from .engine import stripe as stripe_mod
 
-        for footer, _p, t, i in _dir_footers(path):
-            yield stripe_mod.decode_stripe(
-                _dir_stripe_streams(footer, t, i, path), footer
-            )
+        for footer in _dir_footers(path):
+            yield stripe_mod.decode_stripe(_dir_stripe_streams(footer, path), footer)
     else:
         from .engine.orcread import read_orc
 
@@ -302,7 +285,7 @@ def sizes(path: str) -> dict:
     by_col: dict[str, int] = {}
     by_kind: dict[str, int] = {}
     total = 0
-    for footer, _p, _t, _i in _dir_footers(path):
+    for footer in _dir_footers(path):
         for c, meta_c in ((c["name"], c) for c in footer["columns"]):
             for kind, info in meta_c.get("streams", {}).items():
                 nbytes = info.get("compressed", 0)

@@ -163,7 +163,7 @@ def test_files_sink_roundtrip(spark, pages_path, tmp_path):
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
     res = encode_job.run_encode(
-        df, out, strategy="hash", n_stripes=4, sink="files",
+        df, out, strategy="hash", n_stripes=4,
         bloom_columns=["url"],
     )
     assert res["n_stripes"] == 4
@@ -182,14 +182,14 @@ def test_files_sink_input_strategy_and_resume(spark, pages_path, tmp_path):
     out = str(tmp_path / "streams")
     encode_job.run_encode(
         df, out, strategy="input", target_rows_per_stripe=1500,
-        fingerprint="pages@42", sink="files",
+        fingerprint="pages@42",
     )
     n_files_1 = len(glob.glob(os.path.join(out, "stripes", "*.sparc")))
     assert n_files_1 >= 4
     # resume: nothing re-encoded, no new files
     res2 = encode_job.run_encode(
         df, out, strategy="input", target_rows_per_stripe=1500,
-        fingerprint="pages@42", sink="files",
+        fingerprint="pages@42",
     )
     assert res2["skipped"] == n_files_1
     assert len(glob.glob(os.path.join(out, "stripes", "*.sparc"))) == n_files_1
@@ -204,7 +204,7 @@ def test_files_sink_orphan_stripe_file_resume(spark, pages_path, tmp_path):
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
     encode_job.run_encode(df, out, strategy="hash", n_stripes=6,
-                          n_partitions=6, sink="files")
+                          n_partitions=6)
     # simulate the dead task: drop a committed footer part file while its
     # stripe files stay on disk (rename happened, manifest commit did not)
     part_files = sorted(glob.glob(os.path.join(out, "part-*")), key=os.path.getsize)
@@ -218,7 +218,7 @@ def test_files_sink_orphan_stripe_file_resume(spark, pages_path, tmp_path):
     }
     assert orphans  # the crash really left invisible stripe files behind
     res = encode_job.run_encode(df, out, strategy="hash", n_stripes=6,
-                                n_partitions=6, sink="files")
+                                n_partitions=6)
     assert res["skipped"] == len(done_before)
     assert set(encode_job.completed_stripes(spark, out)) == set(range(6))
     # the orphans were overwritten in place with identical content sizes
@@ -232,7 +232,7 @@ def test_files_sink_projection_and_prune(spark, pages_path, tmp_path):
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
     encode_job.run_encode(
-        df, out, strategy="hash", n_stripes=4, sink="files",
+        df, out, strategy="hash", n_stripes=4,
         bloom_columns=["url"],
     )
     dec = decode_job.run_decode(spark, out, columns=["url", "lang"])
@@ -258,8 +258,8 @@ def test_files_sink_compact_zero_copy(spark, pages_path, tmp_path):
 
     df = spark.read.parquet(pages_path)
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    encode_job.run_encode(df.limit(3000), a, strategy="hash", n_stripes=2, sink="files")
-    encode_job.run_encode(df.limit(3000), b, strategy="hash", n_stripes=2, sink="files")
+    encode_job.run_encode(df.limit(3000), a, strategy="hash", n_stripes=2)
+    encode_job.run_encode(df.limit(3000), b, strategy="hash", n_stripes=2)
     out = str(tmp_path / "merged")
     res = compact_job.compact(spark, [a, b], out)
     assert res["n_stripes"] == 4
@@ -278,7 +278,7 @@ def test_encode_from_catalog_table(spark, pages_path, tmp_path):
     df = spark.read.table("pages_v")
     out = str(tmp_path / "streams")
     encode_job.run_encode(
-        df, out, strategy="input", sink="files",
+        df, out, strategy="input",
         target_rows_per_stripe=2000, resume=False,
     )
     assert decode_job.run_decode(spark, out).count() == N_ROWS
@@ -683,7 +683,7 @@ def test_input_strategy_partial_failure_group_resume(spark, pages_path, tmp_path
     out = str(tmp_path / "streams")
     encode_job.run_encode(
         df, out, strategy="input", target_rows_per_stripe=1500,
-        fingerprint="pages@42", sink="files",
+        fingerprint="pages@42",
     )
     all_stripes = set(encode_job.completed_stripes(spark, out))
     sizes = {
@@ -698,7 +698,7 @@ def test_input_strategy_partial_failure_group_resume(spark, pages_path, tmp_path
     assert lost, "removing a part file must lose at least one footer"
     res = encode_job.run_encode(
         df, out, strategy="input", target_rows_per_stripe=1500,
-        fingerprint="pages@42", sink="files",
+        fingerprint="pages@42",
     )
     assert res["skipped"] == len(done_before)
     assert set(encode_job.completed_stripes(spark, out)) == all_stripes
@@ -712,20 +712,20 @@ def test_decode_map_compute_near_data(spark, pages_path, tmp_path):
     """run_decode_map: a vectorized transform runs on each decoded stripe
     inside the scan task; only its result crosses the Python->JVM
     boundary.  Checked against the same aggregate computed JVM-side over
-    the fully-materialized decode, on both sinks."""
+    the fully-materialized decode, on two strategies (input and hash)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
     df = spark.read.parquet(pages_path)
-    out_files = str(tmp_path / "streams_files")
+    out_input = str(tmp_path / "streams_input")
     encode_job.run_encode(
-        df, out_files, strategy="input", target_rows_per_stripe=1500,
-        fingerprint="pages@42", sink="files",
+        df, out_input, strategy="input", target_rows_per_stripe=1500,
+        fingerprint="pages@42",
     )
-    out_parquet = str(tmp_path / "streams_parquet")
+    out_hash = str(tmp_path / "streams_hash")
     encode_job.run_encode(
-        df, out_parquet, strategy="hash", n_stripes=4, fingerprint="pages@42",
+        df, out_hash, strategy="hash", n_stripes=4, fingerprint="pages@42",
     )
 
     def octets(t: pa.Table) -> pa.Table:
@@ -749,7 +749,7 @@ def test_decode_map_compute_near_data(spark, pages_path, tmp_path):
             )
         )
     ).collect()[0][0]
-    for out in (out_files, out_parquet):
+    for out in (out_input, out_hash):
         got = (
             decode_job.run_decode_map(
                 spark, out, octets, "octets long, rows long"
@@ -771,7 +771,7 @@ def test_decode_map_composes_with_pruning(spark, pages_path, tmp_path):
     out = str(tmp_path / "streams")
     encode_job.run_encode(
         df, out, strategy="hash", n_stripes=4,
-        sort_within=["lang", "warc_ts"], fingerprint="pages@42", sink="files",
+        sort_within=["lang", "warc_ts"], fingerprint="pages@42",
     )
     pred = ("eq", "lang", "en")
 
@@ -818,7 +818,7 @@ def test_decode_shards_below_manifest_granularity(spark, pages_path, tmp_path):
     out = str(tmp_path / "streams")
     # few encode tasks -> few manifests, several stripes per manifest
     encode_job.run_encode(
-        df, out, strategy="hash", n_stripes=8, n_partitions=2, sink="files",
+        df, out, strategy="hash", n_stripes=8, n_partitions=2,
     )
     manifests = glob.glob(os.path.join(out, "part-*"))
     assert 0 < len(manifests) <= 2
@@ -828,3 +828,107 @@ def test_decode_shards_below_manifest_granularity(spark, pages_path, tmp_path):
     _compare_roundtrip(spark, df, out, n_partitions=16)
     # shard edge: more shards than stripes in a manifest (empty shards)
     _compare_roundtrip(spark, df, out, n_partitions=64)
+
+
+def test_schema_follows_a_rewritten_dir(spark, tmp_path):
+    """Schema inference reads the dir as it is now: rewriting a streams dir
+    with another schema changes the inferred schema and the decode."""
+    import shutil
+
+    out = str(tmp_path / "streams")
+    ab = spark.createDataFrame([(1, 2)], "a long, b long")
+    encode_job.run_encode(ab, out, strategy="input", resume=False)
+    assert decode_job.infer_schema_ddl(spark, out) == "`a` long, `b` long"
+    assert [tuple(r) for r in decode_job.run_decode(spark, out).collect()] == [(1, 2)]
+    shutil.rmtree(out)
+    x = spark.createDataFrame([(3,)], "x long")
+    encode_job.run_encode(x, out, strategy="input", resume=False)
+    assert decode_job.infer_schema_ddl(spark, out) == "`x` long"
+    assert [tuple(r) for r in decode_job.run_decode(spark, out).collect()] == [(3,)]
+
+
+def test_inline_blob_manifest_refused(spark, tmp_path):
+    """A manifest whose footers name no stripe file (stream bytes inline in
+    manifest rows, a layout no reader handles) is refused with a
+    ValueError naming the dir and the stripe, not a worker KeyError."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "inline")
+    os.makedirs(out)
+    footer = {"stripe_id": 7, "n_rows": 1, "columns": []}
+    pq.write_table(
+        pa.table({
+            "stripe_id": pa.array([7, 7], pa.int64()),
+            "column": ["url", ""],
+            "kind": ["DATA", "FOOTER"],
+            "data": pa.array([b"\x00", json.dumps(footer).encode()], pa.binary()),
+        }),
+        os.path.join(out, "part-00000.parquet"),
+    )
+    with pytest.raises(ValueError, match=f"{out}.*stripe 7 has no stripe_file"):
+        decode_job.run_decode(spark, out)
+    with pytest.raises(ValueError, match="stripe 7"):
+        decode_job.infer_schema_ddl(spark, out)
+
+
+def test_non_directory_streams_dir_refused(spark, tmp_path):
+    missing = str(tmp_path / "missing")
+    with pytest.raises(ValueError, match="missing.*not a directory"):
+        decode_job.run_decode(spark, missing)
+    a_file = tmp_path / "file.parquet"
+    a_file.write_bytes(b"")
+    with pytest.raises(ValueError, match="file.parquet.*not a directory"):
+        decode_job.run_decode(spark, str(a_file))
+
+
+def _batches(n_rows: int, size: int = 10):
+    import pyarrow as pa
+
+    return [
+        pa.record_batch({"v": pa.array(range(i, min(i + size, n_rows)), pa.int64())})
+        for i in range(0, n_rows, size)
+    ]
+
+
+def test_cut_stripes_ids_sizes_and_id_space(monkeypatch):
+    """The shared stripe cut: mid-stream cuts only at >= 2*per buffered
+    rows (the last stripe lands in [per, 2*per)), ids group*SPACE+local,
+    and a group needing more than SPACE stripes raises — including on
+    the final stripe, which would otherwise take the next group's first
+    id."""
+    cut = list(encode_job._cut_stripes(_batches(35), 10, 2))
+    assert [t.num_rows for t, _ in cut] == [10, 10, 15]
+    assert [sid for _, sid in cut] == [2 * encode_job.INPUT_SPLIT_SPACE + i for i in range(3)]
+    assert [v for t, _ in cut for v in t["v"].to_pylist()] == list(range(35))
+    monkeypatch.setattr(encode_job, "INPUT_SPLIT_SPACE", 4)
+    cut = list(encode_job._cut_stripes(_batches(45), 10, 3))
+    assert [sid for _, sid in cut] == [12, 13, 14, 15]  # exactly SPACE stripes
+    with pytest.raises(ValueError, match="stripe group 3 exceeds 4 stripes"):
+        list(encode_job._cut_stripes(_batches(50), 10, 3))
+
+
+def test_pyscan_unit_overflow_raises(tmp_path, monkeypatch):
+    """A pyscan unit cut into more stripes than the id space raises
+    instead of writing stripe files under the next unit's ids."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sparc import runtime
+
+    src = str(tmp_path / "p.parquet")
+    pq.write_table(pages.generate(50, seed=3), src, row_group_size=10)
+    out = str(tmp_path / "streams")
+    monkeypatch.setattr(encode_job, "INPUT_SPLIT_SPACE", 4)
+    monkeypatch.setattr(runtime, "init_worker", lambda: None)
+    fn = encode_job._encode_units_factory(out, 10, None, codec="zstd")
+    unit = pa.record_batch({
+        "idx": pa.array([0], pa.int64()), "path": [src],
+        "rg_lo": pa.array([0], pa.int32()), "rg_hi": pa.array([5], pa.int32()),
+    })
+    with pytest.raises(ValueError, match="stripe group 0 exceeds 4 stripes"):
+        list(fn(iter([unit])))
+    written = sorted(os.listdir(os.path.join(out, "stripes")))
+    assert written == [f"{i}.sparc" for i in range(4)]  # unit 1's id 4 untouched

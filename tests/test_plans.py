@@ -17,7 +17,10 @@ def streams_dir(spark, tmp_path_factory):
     pages.write_parquet(str(src), 3000, seed=11)
     out = str(tmp_path_factory.mktemp("plan") / "streams")
     df = spark.read.parquet(str(src))
-    encode_job.run_encode(df, out, strategy="hash", n_stripes=4, resume=False)
+    encode_job.run_encode(
+        df, out, strategy="hash", n_stripes=4, resume=False,
+        bloom_columns=["url", "lang"],
+    )
     return out
 
 
@@ -25,29 +28,55 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_decode_projection_filter_pushed_to_scan(spark, streams_dir):
-    """Column-projected decode must push the stream-name filter into the
-    parquet scan of the streams table (PushedFilters), not post-filter."""
-    decoded = decode_job.run_decode(spark, streams_dir, columns=["url", "lang"])
-    plan = _plan(decoded)
-    assert "PushedFilters" in plan
-    assert "In(column" in plan.replace(" ", "")  # In(column, [url,lang,""])
+def test_projected_predicated_decode_fetches_only_needed_spans(
+    spark, streams_dir, monkeypatch
+):
+    """A projected, predicated decode slices only the projected columns'
+    stream spans plus the predicate columns' bloom spans out of each
+    stripe file: no other column's data and no other bloom is touched.
+    Runs the scan task's function in-process over every manifest."""
+    import pyarrow as pa
 
+    from sparc import runtime
+    from sparc.engine import stripe as stripe_mod
 
-def test_decode_reads_only_needed_stream_columns(spark, streams_dir):
-    decoded = decode_job.run_decode(spark, streams_dir, columns=["lang"])
-    plan = _plan(decoded)
-    # the streams-table scan must read its 4 physical columns, never less
-    # pruned than the mapInArrow contract needs, and the row filter must
-    # not surface as a separate Filter node after the scan for `column`
-    assert plan.count("FileScan parquet") == 1
+    url = decode_job.run_decode(spark, streams_dir, columns=["url"]).first()["url"]
+    fetched = []
+    real_pick = stripe_mod.pick_row_groups
+
+    def spy(footer, predicate, streams=None):
+        want = {
+            (c, k)
+            for c, k, _, _ in footer["stream_spans"]
+            if (c == "lang" and k != "BLOOM_FILTER_UTF8")
+            or (c == "url" and k == "BLOOM_FILTER_UTF8")
+        }
+        fetched.append((set(streams), want))
+        return real_pick(footer, predicate, streams=streams)
+
+    monkeypatch.setattr(stripe_mod, "pick_row_groups", spy)
+    monkeypatch.setattr(runtime, "init_worker", lambda: None)
+    fn = decode_job._decode_paths_factory(
+        ["lang"], False, predicate=("=", "url", url), streams_dir=streams_dir
+    )
+    paths = decode_job._manifest_paths(streams_dir)
+    units = pa.RecordBatch.from_pydict(
+        {"path": paths, "shard": [0] * len(paths), "n_shards": [1] * len(paths)}
+    )
+    out = list(fn(iter([units])))
+    assert sum(b.num_rows for b in out) >= 1
+    assert all(b.schema.names == ["lang"] for b in out)
+    assert len(fetched) == 4  # every stripe, none refuted before the fetch
+    for got, want in fetched:
+        assert ("url", "BLOOM_FILTER_UTF8") in want
+        assert got == want
 
 
 def test_pruned_decode_is_fully_lazy_no_driver_collect(spark, streams_dir):
-    """Building a pruned decode plan must not run any Spark job: the
-    kept-stripe set flows through a broadcast semi-join evaluated at
-    execution time, never via a driver-side collect of footers/blooms."""
-    schema = decode_job.infer_schema_ddl(spark, streams_dir)  # one job, ok
+    """Building a pruned decode plan must not run any Spark job: stripe
+    pruning runs inside the scan task at execution time, never via a
+    driver-side collect of footers/blooms."""
+    schema = decode_job.infer_schema_ddl(spark, streams_dir)
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None) or [])
     decoded = decode_job.run_decode(
@@ -58,9 +87,6 @@ def test_pruned_decode_is_fully_lazy_no_driver_collect(spark, streams_dir):
     )
     after = set(tracker.getJobIdsForGroup(None) or [])
     assert after == before, "plan construction launched a job (driver collect?)"
-    plan = _plan(decoded)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert "LeftSemi" in plan
 
 
 def test_bloom_prune_plan_is_join_shaped(spark, streams_dir):
@@ -92,7 +118,7 @@ def test_files_sink_decode_plan_is_single_stage(spark, streams_dir, tmp_path_fac
     out = str(tmp_path_factory.mktemp("plan3") / "streams")
     df = spark.read.parquet(str(src))
     encode_job.run_encode(
-        df, out, strategy="hash", n_stripes=4, sink="files", resume=False
+        df, out, strategy="hash", n_stripes=4, resume=False
     )
     decoded = decode_job.run_decode(spark, out)
     plan = _plan(decoded)
@@ -114,19 +140,19 @@ def test_files_sink_decode_plan_is_single_stage(spark, streams_dir, tmp_path_fac
     # pruning returns a superset; row-level equality is checked elsewhere
 
 
-def test_files_sink_pruned_decode_matches_parquet_sink(spark, streams_dir, tmp_path_factory):
-    """In-task stripe pruning (paths mode) returns the same rows as the
-    parquet-sink semi-join pruning for the same predicate."""
+def test_pruned_decode_matches_source_filter(spark, tmp_path_factory):
+    """In-task stripe pruning plus the compiled row filter returns exactly
+    the rows a Spark filter over the source parquet returns for the same
+    predicate."""
     src = tmp_path_factory.mktemp("plan4") / "pages.parquet"
     pages.write_parquet(str(src), 3000, seed=14)
     df = spark.read.parquet(str(src))
-    a = str(tmp_path_factory.mktemp("plan4") / "files")
-    b = str(tmp_path_factory.mktemp("plan4") / "parquet")
-    encode_job.run_encode(df, a, strategy="hash", n_stripes=4, sink="files", resume=False)
-    encode_job.run_encode(df, b, strategy="hash", n_stripes=4, resume=False)
+    out = str(tmp_path_factory.mktemp("plan4") / "streams")
+    encode_job.run_encode(df, out, strategy="hash", n_stripes=4, resume=False)
     pred = ("and", (">=", "url", "https://m"), ("not", ("is_null", "lang")))
-    fa = decode_job.run_decode(spark, a, stripe_filter=pred, row_filter=True)
-    fb = decode_job.run_decode(spark, b, stripe_filter=pred, row_filter=True)
-    assert sorted(r.url for r in fa.select("url").collect()) == sorted(
-        r.url for r in fb.select("url").collect()
+    got = decode_job.run_decode(spark, out, stripe_filter=pred, row_filter=True)
+    expect = df.filter((F.col("url") >= "https://m") & F.col("lang").isNotNull())
+    assert expect.count() > 0
+    assert sorted(r.url for r in got.select("url").collect()) == sorted(
+        r.url for r in expect.select("url").collect()
     )

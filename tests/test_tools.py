@@ -66,14 +66,14 @@ def streams_dir_files(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("tools2") / "streams")
     encode_job.run_encode(
         spark.read.parquet(str(src)), out, strategy="hash", n_stripes=4,
-        sink="files", resume=False,
+        resume=False,
     )
     return out
 
 
 def test_meta_data_scan_sizes_dir(streams_dir_files):
     m = tools.meta(streams_dir_files)
-    assert m["sink"] == "files"
+    assert all(s["stripe_file"] for s in m["stripes"])
     assert m["rows"] == 2000
     assert [c["name"] for c in m["columns"]] == [
         "url", "warc_ts", "html", "text", "lang"
@@ -101,20 +101,3 @@ def test_cli_subprocess(orc_path):
     )
     lines = [json.loads(ln) for ln in out.stdout.strip().splitlines()]
     assert len(lines) == 2 and lines[0]["a"] == 0
-
-
-def test_tools_parquet_sink_dir(spark, tmp_path_factory):
-    from sparc.fixtures import pages
-    from sparc.job import encode_job
-
-    src = tmp_path_factory.mktemp("tools3") / "pages.parquet"
-    pages.write_parquet(str(src), 1000, seed=6)
-    out = str(tmp_path_factory.mktemp("tools3") / "streams")
-    encode_job.run_encode(
-        spark.read.parquet(str(src)), out, strategy="hash", n_stripes=2,
-        sink="parquet", resume=False,
-    )
-    m = tools.meta(out)
-    assert m["sink"] == "parquet" and m["rows"] == 1000
-    assert tools.scan(out)["rows"] == 1000
-    assert len(list(tools.data(out, 4))) == 4
