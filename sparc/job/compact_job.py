@@ -69,6 +69,6 @@ def compact(
     for p in parts[1:]:
         out = out.unionAll(p)
     if n_output_files:
-        out = out.repartition(n_output_files)
+        out = out.repartition(n_output_files, "stripe_id")
     out.write.mode("overwrite").option("compression", "uncompressed").parquet(out_dir)
     return {"n_stripes": offset, "sources": dict(zip(src_dirs, counts))}

@@ -40,8 +40,8 @@ def _stripe_path(footer: dict, streams_dir: str) -> str:
 def _decode_paths_factory(
     columns: list[str] | None,
     verify_crc: bool,
+    streams_dir: str,
     predicate: tuple | None = None,
-    streams_dir: str | None = None,
     stripe_predicate: tuple | None = None,
     map_fn=None,
 ):
@@ -282,8 +282,9 @@ def run_decode(
     units = [(p, s, n_shards) for p in paths for s in range(n_shards)]
     n_parts = max(1, min(target, len(units)))
     fn = _decode_paths_factory(
-        columns, verify_crc, predicate=pred if rowgroup_prune else None,
-        streams_dir=streams_dir, stripe_predicate=pred, map_fn=map_fn,
+        columns, verify_crc, streams_dir,
+        predicate=pred if rowgroup_prune else None,
+        stripe_predicate=pred, map_fn=map_fn,
     )
     # JVM-only unit distribution via a LocalRelation.  A parallelize()
     # route would make the unit list a *Python* RDD, so every decode would

@@ -57,7 +57,7 @@ def test_projected_predicated_decode_fetches_only_needed_spans(
     monkeypatch.setattr(stripe_mod, "pick_row_groups", spy)
     monkeypatch.setattr(runtime, "init_worker", lambda: None)
     fn = decode_job._decode_paths_factory(
-        ["lang"], False, predicate=("=", "url", url), streams_dir=streams_dir
+        ["lang"], False, streams_dir, predicate=("=", "url", url)
     )
     paths = decode_job._manifest_paths(streams_dir)
     units = pa.RecordBatch.from_pydict(
