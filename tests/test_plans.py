@@ -28,15 +28,26 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_projected_predicated_decode_fetches_only_needed_spans(
-    spark, streams_dir, monkeypatch
-):
-    """A projected, predicated decode slices only the projected columns'
-    stream spans plus the predicate columns' bloom spans out of each
-    stripe file: no other column's data and no other bloom is touched.
-    Runs the scan task's function in-process over every manifest."""
+def _run_scan_task(streams_dir, columns, predicate=None):
+    """Run the decode scan task's function in-process over every manifest
+    of ``streams_dir``; return its output batches."""
     import pyarrow as pa
 
+    fn = decode_job._decode_paths_factory(
+        columns, False, streams_dir, predicate=predicate
+    )
+    paths = decode_job._manifest_paths(streams_dir)
+    units = pa.RecordBatch.from_pydict(
+        {"path": paths, "shard": [0] * len(paths), "n_shards": [1] * len(paths)}
+    )
+    return list(fn(iter([units])))
+
+
+def test_decode_projection_filter_pushed_to_scan(spark, streams_dir, monkeypatch):
+    """A projected, predicated decode pushes the projection and the
+    predicate into the scan task: each stripe file is sliced for only the
+    projected columns' stream spans plus the predicate columns' bloom
+    spans — no other column's data and no other bloom is touched."""
     from sparc import runtime
     from sparc.engine import stripe as stripe_mod
 
@@ -56,20 +67,46 @@ def test_projected_predicated_decode_fetches_only_needed_spans(
 
     monkeypatch.setattr(stripe_mod, "pick_row_groups", spy)
     monkeypatch.setattr(runtime, "init_worker", lambda: None)
-    fn = decode_job._decode_paths_factory(
-        ["lang"], False, streams_dir, predicate=("=", "url", url)
-    )
-    paths = decode_job._manifest_paths(streams_dir)
-    units = pa.RecordBatch.from_pydict(
-        {"path": paths, "shard": [0] * len(paths), "n_shards": [1] * len(paths)}
-    )
-    out = list(fn(iter([units])))
+    out = _run_scan_task(streams_dir, ["lang"], predicate=("=", "url", url))
     assert sum(b.num_rows for b in out) >= 1
     assert all(b.schema.names == ["lang"] for b in out)
     assert len(fetched) == 4  # every stripe, none refuted before the fetch
     for got, want in fetched:
         assert ("url", "BLOOM_FILTER_UTF8") in want
         assert got == want
+
+
+def test_decode_reads_only_needed_stream_columns(spark, streams_dir, monkeypatch):
+    """A projected decode without a predicate reads no parquet table of
+    stream rows and slices only the projected column's data spans out of
+    each stripe file: no bloom span (no predicate to probe it) and no
+    other column's spans."""
+    from sparc import runtime
+    from sparc.engine import stripe as stripe_mod
+
+    decoded = decode_job.run_decode(spark, streams_dir, columns=["lang"])
+    assert "FileScan parquet" not in _plan(decoded)
+    assert decoded.columns == ["lang"]
+    fetched = []
+    real_decode = stripe_mod.decode_stripe
+
+    def spy(streams, footer, row_groups=None):
+        fetched.append((set(streams), footer))
+        return real_decode(streams, footer, row_groups=row_groups)
+
+    monkeypatch.setattr(stripe_mod, "decode_stripe", spy)
+    monkeypatch.setattr(runtime, "init_worker", lambda: None)
+    out = _run_scan_task(streams_dir, ["lang"])
+    assert sum(b.num_rows for b in out) == 3000
+    assert len(fetched) == 4
+    for got, footer in fetched:
+        assert [c["name"] for c in footer["columns"]] == ["lang"]
+        want = {
+            (c, k)
+            for c, k, _, _ in footer["stream_spans"]
+            if c == "lang" and k != "BLOOM_FILTER_UTF8"
+        }
+        assert want and got == want
 
 
 def test_pruned_decode_is_fully_lazy_no_driver_collect(spark, streams_dir):
