@@ -9,8 +9,12 @@ before the writer was batched.
 Cases: the first 75,000 rows of the sf0.1 ``lineitem`` table (ZSTD, stride
 10,000: the ``orc-lineitem`` benchmark shape), and the seeded mixed table of
 ``conftest.mixed_orc_table`` (nulls, direct strings, timestamps, decimals,
-nested columns) under NONE and ZSTD, with and without a row index.  To
-regenerate after an *intended* format change::
+nested columns) under NONE and ZSTD, with and without a row index; and an
+unindexed two-stripe table (``_two_stripe_table``) whose string columns,
+flat and inside a list, are dictionary-encoded in stripe 0 and direct in
+stripe 1 and whose nullable columns have nulls only in stripe 0, under
+NONE and ZSTD and once as a 0.11 file.  To regenerate after an *intended*
+format change::
 
     PYTHONPATH=.:tests python tests/test_orcfile_golden.py
 """
@@ -51,6 +55,41 @@ def _mixed_cases():
             }
 
 
+def _two_stripe_table(n: int = 3_500, rows_per_stripe: int = 2_000):
+    """Stripe 0 (rows < ``rows_per_stripe``) holds repeating strings and
+    every null; stripe 1 holds unique strings and no nulls."""
+    import pyarrow as pa
+
+    s0 = range(rows_per_stripe)
+    s1 = range(rows_per_stripe, n)
+    return pa.table(
+        {
+            "s": pa.array([f"c{i % 7}" for i in s0] + [f"u{i}" for i in s1]),
+            "n": pa.array(
+                [None if i % 5 == 0 else i * 3 for i in s0] + [-i for i in s1],
+                pa.int64(),
+            ),
+            "b": pa.array(
+                [None if i % 3 == 0 else i % 2 == 0 for i in s0]
+                + [i % 4 == 0 for i in s1]
+            ),
+            "ls": pa.array(
+                [None if i % 9 == 0 else [f"a{j % 4}" for j in range(i % 4)] for i in s0]
+                + [[f"e{i}-{j}" for j in range(i % 3)] for i in s1],
+                pa.list_(pa.string()),
+            ),
+        }
+    )
+
+
+def _two_stripe_cases():
+    t = _two_stripe_table()
+    for version, comp in (("0.12", "NONE"), ("0.12", "ZSTD"), ("0.11", "NONE")):
+        yield f"two_stripe/{version}/{comp}", t, {
+            "compression": comp, "version": version, "rows_per_stripe": 2_000,
+        }
+
+
 def _digest(table, kwargs: dict) -> str:
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "golden.orc")
@@ -64,6 +103,9 @@ GOLDEN = {
     "mixed/NONE/1000": "7f8ead6f822e947df86287f916b0fea564d80d81fcdc0218f7a3c3803ac69049",
     "mixed/ZSTD/0": "45725619b0c905b9be6dd5aed89fd219879177e357e56797c446d7f3e4bc7f00",
     "mixed/ZSTD/1000": "6983c3f0df7d91d73df8ed8f12ad9fafe314b557628b2dc9fdb48d0f8b80237c",
+    "two_stripe/0.12/NONE": "5d46b0d73ce47b60485d36e8c4c35c701ddd5f0d533992809ab8f861440c12c4",
+    "two_stripe/0.12/ZSTD": "27aa2348b2f970214673658a8cb13f2464aa9730c7c7d1d212286cf4c47e225e",
+    "two_stripe/0.11/NONE": "9d179fbe8bf8d328be6d7d87cb954fe15b4da5a88494bca14f5446ccf2512db1",
     "lineitem/75000/ZSTD/10000": "e387a1da80fb09f691070d8cd49d3502dba27db4bcf57dca9986b135cdc1be38",
 }
 
@@ -74,6 +116,12 @@ def test_write_orc_mixed_bytes_match_golden(case):
     assert _digest(table, kwargs) == GOLDEN[case]
 
 
+@pytest.mark.parametrize("case", [c[0] for c in _two_stripe_cases()])
+def test_write_orc_two_stripe_bytes_match_golden(case):
+    (table, kwargs), = [(t, kw) for name, t, kw in _two_stripe_cases() if name == case]
+    assert _digest(table, kwargs) == GOLDEN[case]
+
+
 @pytest.mark.skipif(not os.path.exists(LINEITEM), reason="sf0.1 testdata absent")
 def test_write_orc_lineitem_bytes_match_golden():
     name, table, kwargs = _lineitem_case()
@@ -81,7 +129,7 @@ def test_write_orc_lineitem_bytes_match_golden():
 
 
 if __name__ == "__main__":
-    cases = list(_mixed_cases())
+    cases = list(_mixed_cases()) + list(_two_stripe_cases())
     if os.path.exists(LINEITEM):
         cases.append(_lineitem_case())
     print("GOLDEN = {")
