@@ -20,14 +20,27 @@ Scope (deliberately minimal — an oracle, not the product sink):
   signed RLE scale stream, ``DecimalTreeWriter`` semantics
 - nested types: list / map / struct / dense+sparse union to any depth —
   pre-order column-id tree with per-level PRESENT + LENGTH / byte-RLE
-  TAG streams (Struct/List/Map/UnionTreeWriter semantics), in both the
-  plain and the row-indexed layout (child row-group windows derived from
-  the parent's present/length prefix sums)
+  TAG streams (Struct/List/Map/UnionTreeWriter semantics)
 - nullable columns via PRESENT streams
 - optional ROW_INDEX streams (``row_index_stride > 0``): per-group seek
-  positions + IntegerStatistics; the reference Java reader demonstrably
+  positions + typed statistics, and BLOOM_FILTER_UTF8 for
+  ``bloom_columns``; the reference Java reader demonstrably
   row-group-SKIPS inside our files (tests prove wrong positions break
   the filtered read, so the pass is meaningful)
+
+One recursive walk (``_walk``) emits every column's streams, encodings
+and statistics at all three levels (row group, stripe, file), each taken
+over a window of the same parent-masked array the streams encode.  The
+walk always works in row groups: without a row index each stripe is one
+group and no ROW_INDEX stream is written.  Per stripe, as the reference's
+tree writers decide it:
+
+- a string column is DICTIONARY_V2 (DICTIONARY in 0.11) when its
+  distinct/non-null ratio is at most ``DICT_THRESHOLD``, else DIRECT —
+  in indexed files always DIRECT;
+- a column's PRESENT stream is left out of every stripe whose slice of
+  the column has no nulls, its row-index positions with it
+  (``TreeWriterBase.writeStripe`` TreeWriterBase.java:251-256).
 
 The protobuf tail is hand-encoded (varint/length-delimited primitives
 only — field numbers from the public orc_proto.proto)."""
@@ -70,10 +83,10 @@ def _compress_one(chunk: bytes, kind: str) -> bytes:
 def _compress_chunked(
     data: bytes, kind: str
 ) -> tuple[bytes, np.ndarray, np.ndarray]:
-    """_orc_compress, also returning the (uncompressed, compressed) start
-    offsets of every chunk — needed to translate an uncompressed stream
-    offset into the (block start, offset in block) pair a compressed
-    InStream.seek consumes."""
+    """``data`` in the chunk framing of ``kind``, with the (uncompressed,
+    compressed) start offsets of every chunk — needed to translate an
+    uncompressed stream offset into the (block start, offset in block)
+    pair a compressed InStream.seek consumes."""
     if kind == "NONE" or not data:
         return data, np.array([0], np.int64), np.array([0], np.int64)
     out = bytearray()
@@ -95,21 +108,7 @@ def _compress_chunked(
 
 
 def _orc_compress(data: bytes, kind: str) -> bytes:
-    if kind == "NONE":
-        return data
-    out = bytearray()
-    for pos in range(0, len(data), _ORC_CHUNK):
-        chunk = bytes(data[pos : pos + _ORC_CHUNK])
-        comp = _compress_one(chunk, kind)
-        if len(comp) < len(chunk):
-            head = len(comp) << 1
-            body = comp
-        else:
-            head = (len(chunk) << 1) | 1  # stored original
-            body = chunk
-        out += head.to_bytes(3, "little")
-        out += body
-    return bytes(out)
+    return _compress_chunked(data, kind)[0]
 
 
 # --- protobuf primitives ----------------------------------------------------
@@ -257,186 +256,6 @@ def _combined(arr) -> pa.Array:
     return arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
 
 
-def _encode_tree(
-    node: dict, arr: pa.Array, v11: bool,
-    out: list[tuple[int, list[tuple[int, bytes]], bytes]],
-    counts: dict[int, list],
-) -> None:
-    """Recursively encode ``arr`` under ``node``, appending
-    (column_id, streams, encoding_pb) in pre-order and accumulating
-    per-id footer stats into ``counts`` ({id: [n_values, has_null]}) —
-    one walk produces both streams and statistics, so they cannot
-    drift apart.  ORC nested nulls: a child column holds entries only
-    for slots where the parent is present (StructTreeWriter.writeBatch
-    StructTreeWriter.java:71-100, ListTreeWriter.writeBatch
-    ListTreeWriter.java:73-126, MapTreeWriter.writeBatch
-    MapTreeWriter.java:77-136 — coordinates recovered from the
-    orc-core 2.2.2 jar's line tables per SURVEY §0)."""
-    t = node["t"]
-    arr = _combined(arr)
-    c = counts.setdefault(node["id"], [0, False])
-    c[0] += len(arr) - arr.null_count
-    c[1] = c[1] or arr.null_count > 0
-    if not _is_nested(t):
-        streams, enc = _encode_column(arr, v11)
-        out.append((node["id"], streams, enc))
-        return
-    rle = (lambda v: rlev1.encode(v, signed=False)) if v11 else (
-        lambda v: rlev2.encode(v, signed=False)
-    )
-    streams: list[tuple[int, bytes]] = []
-    if arr.null_count:
-        valid = arr.is_valid()
-        streams.append(
-            (_STREAM_PRESENT, bitfield.encode(valid.to_numpy(zero_copy_only=False)))
-        )
-    if pa.types.is_struct(t):
-        out.append((node["id"], streams, _f_varint(1, _ENC_DIRECT)))
-        for i, (_, child_node) in enumerate(node["children"]):
-            child = _combined(arr.field(i))
-            if arr.null_count:
-                child = child.filter(valid)
-            _encode_tree(child_node, child, v11, out, counts)
-        return
-    if pa.types.is_union(t):
-        # UnionTreeWriter.writeBatch UnionTreeWriter.java:59-115: DATA =
-        # byte-RLE tags; each variant's values follow in row order.
-        # Arrow unions carry no top-level validity, so there is never a
-        # PRESENT stream here.
-        from ..kernels import byterle
-
-        codes = arr.type_codes.to_numpy(zero_copy_only=False)
-        lut = np.zeros(128, np.uint8)
-        for i, c in enumerate(t.type_codes):
-            lut[c] = i
-        tags = lut[codes]
-        streams.append((_STREAM_DATA, byterle.encode(tags)))
-        out.append((node["id"], streams, _f_varint(1, _ENC_DIRECT)))
-        dense = t.mode == "dense"
-        offs = arr.offsets.to_numpy(zero_copy_only=False) if dense else None
-        for i, (_, child_node) in enumerate(node["children"]):
-            rows = np.flatnonzero(tags == i)
-            take = offs[rows] if dense else rows
-            child = _combined(arr.field(i)).take(pa.array(take, pa.int64()))
-            _encode_tree(child_node, child, v11, out, counts)
-        return
-    # list / map: LENGTH stream of present slots, children flattened
-    nn = arr.drop_null() if arr.null_count else arr
-    if pa.types.is_map(t):
-        # MapArray.keys/.items ignore the slice window; .offsets is
-        # windowed — slice the children explicitly
-        offs = (
-            nn.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            if len(nn)
-            else np.zeros(1, np.int64)
-        )
-        lengths = np.diff(offs)
-        lo_e, hi_e = int(offs[0]), int(offs[-1])
-        children = [
-            nn.keys.slice(lo_e, hi_e - lo_e),
-            nn.items.slice(lo_e, hi_e - lo_e),
-        ]
-    else:
-        lengths = (
-            nn.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
-            if len(nn)
-            else np.zeros(0, np.int64)
-        )
-        children = [nn.flatten()]
-    streams.append((_STREAM_LENGTH, rle(lengths)))
-    out.append(
-        (node["id"], streams, _f_varint(1, _ENC_DIRECT if v11 else _ENC_DIRECT_V2))
-    )
-    for child, (_, child_node) in zip(children, node["children"]):
-        _encode_tree(child_node, child, v11, out, counts)
-
-
-def _encode_column(
-    arr: pa.Array, v11: bool = False
-) -> tuple[list[tuple[int, bytes]], bytes]:
-    """-> ([(stream_kind, bytes)...], ColumnEncoding protobuf).
-
-    ``v11`` emits the 0.11 legacy layout: RLEv1 integer/length streams
-    and DIRECT/DICTIONARY (v1) encodings — the cross-read oracle for the
-    rlev1 kernel."""
-    rle = (lambda v, signed: rlev1.encode(v, signed=signed)) if v11 else (
-        lambda v, signed: rlev2.encode(v, signed=signed)
-    )
-    t = arr.type
-    streams: list[tuple[int, bytes]] = []
-    if arr.null_count:
-        valid = arr.is_valid().to_numpy(zero_copy_only=False)
-        streams.append((_STREAM_PRESENT, bitfield.encode(valid)))
-    nn = arr.drop_null() if arr.null_count else arr
-
-    enc = _f_varint(1, _ENC_DIRECT if v11 else _ENC_DIRECT_V2)
-    if pa.types.is_integer(t) or pa.types.is_date32(t):
-        vals = stripe_mod._arrow_nonnull_int64(arr)
-        streams.append((_STREAM_DATA, rle(vals, True)))
-    elif pa.types.is_timestamp(t):
-        # same 2015-epoch split in every file version; only the integer
-        # coder changes (RLEv1 in 0.11, RLEv2 in 0.12)
-        unit_scale = stripe_mod._TS_UNITS[t.unit]
-        vals = stripe_mod._arrow_nonnull_int64(arr)
-        seconds = np.floor_divide(vals, unit_scale) - stripe_mod.TS_BASE_SECONDS
-        frac = np.mod(vals, unit_scale)
-        nanos = stripe_mod.format_nanos(frac * (1_000_000_000 // unit_scale))
-        streams.append((_STREAM_DATA, rle(seconds, True)))
-        streams.append((_STREAM_SECONDARY, rle(nanos, False)))
-    elif pa.types.is_decimal(t):
-        # DecimalTreeWriter: DATA = unbounded zigzag-varint mantissa
-        # (SerializationUtils.writeBigInteger SerializationUtils.java:
-        # 195-217), SECONDARY = *signed* RLE scale, one per value
-        # (DecimalTreeWriter.writeBatch DecimalTreeWriter.java:159-165)
-        from ..kernels import bigdec
-
-        lo, hi = _decimal_words(nn)
-        streams.append((_STREAM_DATA, bigdec.encode(lo, hi)))
-        streams.append(
-            (_STREAM_SECONDARY, rle(np.full(len(nn), t.scale, np.int64), True))
-        )
-    elif pa.types.is_floating(t):
-        np_t = np.float32 if pa.types.is_float32(t) else np.float64
-        vals = nn.to_numpy(zero_copy_only=False).astype(np_t)
-        streams.append((_STREAM_DATA, vals.astype(np.dtype(np_t).newbyteorder("<")).tobytes()))
-        enc = _f_varint(1, _ENC_DIRECT)
-    elif pa.types.is_boolean(t):
-        vals = nn.to_numpy(zero_copy_only=False)
-        streams.append((_STREAM_DATA, bitfield.encode(vals)))
-        enc = _f_varint(1, _ENC_DIRECT)
-    elif stripe_mod._is_binary_like(t):
-        bin_arr = nn.cast(pa.large_binary())
-        lengths = (
-            pa.compute.binary_length(bin_arr)
-            .to_numpy(zero_copy_only=False)
-            .astype(np.int64)
-        )
-        is_str = pa.types.is_string(t) or pa.types.is_large_string(t)
-        n_unique = len(bin_arr.unique()) if len(bin_arr) else 0
-        if is_str and len(bin_arr) and n_unique / len(bin_arr) <= DICT_THRESHOLD:
-            codes, uniques = dictionary.encode_sorted(bin_arr)
-            streams.append((_STREAM_DATA, rle(codes, False)))
-            streams.append((_STREAM_DICT, b"".join(uniques)))
-            streams.append(
-                (
-                    _STREAM_LENGTH,
-                    rle(
-                        np.fromiter((len(u) for u in uniques), np.int64, len(uniques)),
-                        False,
-                    ),
-                )
-            )
-            enc = _f_varint(1, _ENC_DICT if v11 else _ENC_DICT_V2) + _f_varint(
-                2, len(uniques)
-            )
-        else:
-            streams.append((_STREAM_DATA, bytes(stripe_mod._concat_binary(bin_arr))))
-            streams.append((_STREAM_LENGTH, rle(lengths, False)))
-    else:
-        raise NotImplementedError(f"orcfile: unsupported type {t}")
-    return streams, enc
-
-
 def _min_stats(n_values: int, has_null: bool) -> bytes:
     out = _f_varint(1, n_values)
     out += _varint((10 << 3)) + (b"\x01" if has_null else b"\x00")
@@ -463,7 +282,7 @@ def _zz(v: int) -> int:
     return (v << 1) ^ (v >> 63) if v < 0 else v << 1
 
 
-def _rg_int_stats(vals: np.ndarray, n_rows: int, has_null: bool) -> bytes:
+def _rg_int_stats(vals: np.ndarray, has_null: bool) -> bytes:
     """ColumnStatistics proto with IntegerStatistics (sint64 min/max/sum)
     — what lets the reference's SearchArgument prune row groups."""
     out = _f_varint(1, int(vals.size))
@@ -623,118 +442,65 @@ def _rg_binary_stats(total_bytes: int, n_values: int, has_null: bool) -> bytes:
     return out
 
 
-def _uvarint_prefix(pb: bytes) -> tuple[int, int]:
-    """(numberOfValues, bytes consumed) from the front of a
-    ColumnStatistics blob — every builder above emits field 1 first."""
-    assert pb[0] == 0x08, "ColumnStatistics must lead with numberOfValues"
-    v = 0
-    shift = 0
-    i = 1
-    while True:
-        b = pb[i]
-        v |= (b & 0x7F) << shift
-        i += 1
-        if not b & 0x80:
-            return v, i
-        shift += 7
-
-
-def _node_stats_pb(arr: pa.Array) -> bytes:
-    """One ColumnStatistics over a whole (already parent-masked) leaf
-    value array — the per-STRIPE twin of the per-row-group builders
-    above, feeding the file Metadata section (StripeStatistics) and the
-    file-footer statistics list."""
+def _window_stats(arr: pa.Array):
+    """-> ``stats(lo, hi, row_group=False)``: one ColumnStatistics over
+    ``arr[lo:hi]`` of a parent-masked column node — typed for leaves,
+    value count and hasNull for nested nodes — for a row-index entry, a
+    stripe (the Metadata section's StripeStatistics) or the file footer.
+    Per-value work is done once over the whole array; a window is a
+    slice.  ``row_group`` gives the row-index form, which carries no
+    boolean or binary statistics."""
     t = arr.type
-    has_null = arr.null_count > 0
-    nn = arr.drop_null() if has_null else arr
-    if pa.types.is_date32(t):
-        return _rg_date_stats(stripe_mod._arrow_nonnull_int64(arr), has_null)
-    if pa.types.is_integer(t):
-        vals = stripe_mod._arrow_nonnull_int64(arr)
-        return _rg_int_stats(vals, len(arr), has_null)
-    if pa.types.is_timestamp(t):
-        return _rg_timestamp_stats(
-            stripe_mod._arrow_nonnull_int64(arr),
-            stripe_mod._TS_UNITS[t.unit],
-            has_null,
-        )
-    if pa.types.is_floating(t):
-        vals = nn.to_numpy(zero_copy_only=False).astype(np.float64)
-        return _rg_double_stats(vals, has_null)
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        b = nn.cast(pa.large_binary())
-        if len(b):
-            mm = pa.compute.min_max(b)
-            mn, mx = mm["min"].as_py(), mm["max"].as_py()
-            total = int(pa.compute.sum(pa.compute.binary_length(b)).as_py() or 0)
-        else:
-            mn = mx = None
-            total = 0
-        return _rg_string_stats(mn, mx, total, len(b), has_null)
-    if stripe_mod._is_binary_like(t):
-        b = nn.cast(pa.large_binary())
-        total = int(pa.compute.sum(pa.compute.binary_length(b)).as_py() or 0) if len(b) else 0
-        return _rg_binary_stats(total, len(b), has_null)
-    if pa.types.is_boolean(t):
-        n_true = int(pa.compute.sum(nn).as_py() or 0) if len(nn) else 0
-        return _rg_bool_stats(n_true, len(nn), has_null)
-    if pa.types.is_decimal(t):
-        return _rg_decimal_stats(nn, has_null)
-    return _min_stats(len(nn), has_null)
-
-
-def _tree_stats_pbs(node: dict, arr: pa.Array, out: list[bytes]) -> None:
-    """Pre-order ColumnStatistics for a column subtree, masking children
-    exactly as the encode walks do (struct children filtered by parent
-    validity, list/map children sliced to present parents' elements,
-    union variants gathered by tag) so the recorded statistics describe
-    precisely the values the streams contain."""
-    arr = _combined(arr)
-    t = node["t"]
-    if not _is_nested(t):
-        out.append(_node_stats_pb(arr))
-        return
-    has_null = arr.null_count > 0
-    out.append(_min_stats(len(arr) - arr.null_count, has_null))
-    if pa.types.is_struct(t):
-        valid_arr = arr.is_valid() if arr.null_count else None
-        for i, (_, child_node) in enumerate(node["children"]):
-            child = _combined(arr.field(i))
-            if valid_arr is not None:
-                child = child.filter(valid_arr)
-            _tree_stats_pbs(child_node, child, out)
-        return
-    if pa.types.is_union(t):
-        codes = arr.type_codes.to_numpy(zero_copy_only=False)
-        lut = np.zeros(128, np.uint8)
-        for i, tc in enumerate(t.type_codes):
-            lut[tc] = i
-        tags = lut[codes]
-        dense = t.mode == "dense"
-        offs_u = arr.offsets.to_numpy(zero_copy_only=False) if dense else None
-        for i, (_, child_node) in enumerate(node["children"]):
-            rows = np.flatnonzero(tags == i)
-            take = offs_u[rows] if dense else rows
-            child = _combined(arr.field(i)).take(pa.array(take, pa.int64()))
-            _tree_stats_pbs(child_node, child, out)
-        return
-    # list / map
-    nn = arr.drop_null() if arr.null_count else arr
-    if pa.types.is_map(t):
-        offs = (
-            nn.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            if len(nn)
-            else np.zeros(1, np.int64)
-        )
-        lo_e, hi_e = int(offs[0]), int(offs[-1])
-        children = [
-            nn.keys.slice(lo_e, hi_e - lo_e),
-            nn.items.slice(lo_e, hi_e - lo_e),
-        ]
+    if arr.null_count:
+        valid = arr.is_valid().to_numpy(zero_copy_only=False)
+        vcum = np.concatenate(([0], np.cumsum(valid, dtype=np.int64)))
+        nn = arr.drop_null()
     else:
-        children = [nn.flatten()]
-    for child, (_, child_node) in zip(children, node["children"]):
-        _tree_stats_pbs(child_node, child, out)
+        vcum, nn = None, arr
+    is_str = pa.types.is_string(t) or pa.types.is_large_string(t)
+    if pa.types.is_integer(t) or pa.types.is_date32(t) or pa.types.is_timestamp(t):
+        vals = stripe_mod._arrow_nonnull_int64(arr)
+    elif pa.types.is_floating(t):
+        vals = nn.to_numpy(zero_copy_only=False).astype(np.float64)
+    elif stripe_mod._is_binary_like(t):
+        b = nn.cast(pa.large_binary())
+        lens = pa.compute.binary_length(b).to_numpy(zero_copy_only=False)
+        lcum = np.concatenate(([0], np.cumsum(lens, dtype=np.int64)))
+    elif pa.types.is_boolean(t):
+        tcum = np.concatenate(
+            ([0], np.cumsum(nn.to_numpy(zero_copy_only=False), dtype=np.int64))
+        )
+
+    def stats(lo: int, hi: int, row_group: bool = False) -> bytes:
+        a, z = (lo, hi) if vcum is None else (int(vcum[lo]), int(vcum[hi]))
+        has_null = z - a < hi - lo
+        if _is_nested(t) or row_group and (
+            pa.types.is_boolean(t) or (stripe_mod._is_binary_like(t) and not is_str)
+        ):
+            return _min_stats(z - a, has_null)
+        if pa.types.is_date32(t):
+            return _rg_date_stats(vals[a:z], has_null)
+        if pa.types.is_integer(t):
+            return _rg_int_stats(vals[a:z], has_null)
+        if pa.types.is_timestamp(t):
+            return _rg_timestamp_stats(vals[a:z], stripe_mod._TS_UNITS[t.unit], has_null)
+        if pa.types.is_floating(t):
+            return _rg_double_stats(vals[a:z], has_null)
+        if is_str:
+            mn = mx = None
+            if z > a:
+                mm = pa.compute.min_max(b.slice(a, z - a))
+                mn, mx = mm["min"].as_py(), mm["max"].as_py()
+            return _rg_string_stats(mn, mx, int(lcum[z] - lcum[a]), z - a, has_null)
+        if stripe_mod._is_binary_like(t):
+            return _rg_binary_stats(int(lcum[z] - lcum[a]), z - a, has_null)
+        if pa.types.is_boolean(t):
+            return _rg_bool_stats(int(tcum[z] - tcum[a]), z - a, has_null)
+        if pa.types.is_decimal(t):
+            return _rg_decimal_stats(nn.slice(a, z - a), has_null)
+        raise NotImplementedError(f"orcfile: unsupported type {t}")
+
+    return stats
 
 
 def _rle_groups(vals: np.ndarray, voffs: list[int], signed: bool, v11: bool) -> list:
@@ -766,30 +532,49 @@ def _bits_by_stripe(
     return blobs, marks
 
 
-def _encode_column_grouped(
+def _present_stream(
+    valid: np.ndarray, offs: list[int], stripes: list[tuple[int, int]]
+) -> tuple:
+    """The PRESENT stream of a node with nulls, left out (None) of every
+    stripe whose slice has none — ``TreeWriterBase.writeStripe``
+    (TreeWriterBase.java:251-256) suppresses it there and drops its
+    row-index positions (``removeIsPresentPositions`` :223)."""
+    blobs, marks = _bits_by_stripe(valid, offs, stripes)
+    for s, (g_lo, g_hi) in enumerate(stripes):
+        if valid[offs[g_lo] : offs[g_hi]].all():
+            blobs[s] = None
+    return _STREAM_PRESENT, _EXTRAS_BITS, blobs, marks
+
+
+def _encode_leaf(
     arr: pa.Array,
     bounds: list[tuple[int, int]],
     stripes: list[tuple[int, int]],
     v11: bool,
-) -> tuple[list[tuple], bytes, list[bytes]]:
-    """Per-row-group encoding of a leaf column for indexed files.
+    indexed: bool,
+) -> tuple[list[tuple], list[bytes]]:
+    """-> (streams, ColumnEncoding per stripe) of a leaf column.
 
     ``bounds`` are the row groups of every stripe, as windows of ``arr``;
-    stripe s holds groups ``stripes[s]``.  -> (streams, encoding_pb,
-    per-group ColumnStatistics blobs) where streams = [(stream_kind,
-    blobs, extras, marks)] in position-recording order: one blob per
-    group (marks None), or one continuous bitfield per stripe with its
-    groups' seek marks.  Strings always use DIRECT here (the reference
-    rewrites dictionary row-index positions on flush; restart-per-group
-    direct streams sidestep that statefulness while staying legal ORC)."""
+    stripe s holds groups ``stripes[s]`` (one group per stripe without a
+    row index).  Streams are [(stream_kind, extras, blobs, marks)] in
+    position-recording order: one blob per group (marks None), or one
+    continuous bitfield per stripe with its groups' seek marks; a None
+    blob leaves the stream out of that stripe.  ``v11`` emits the 0.11
+    layout: RLEv1 integer streams and DIRECT/DICTIONARY (v1) encodings.
+
+    Strings are DIRECT in an indexed file (the reference rewrites
+    dictionary row-index positions on flush; restart-per-group direct
+    streams sidestep that statefulness while staying legal ORC).  Without
+    a row index each stripe picks DICTIONARY_V2 or DIRECT by
+    ``DICT_THRESHOLD``, so DICTIONARY_DATA exists only in dictionary
+    stripes."""
     t = arr.type
     streams: list[tuple] = []
     valid = arr.is_valid().to_numpy(zero_copy_only=False) if arr.null_count else None
     row_offs = [lo for lo, _ in bounds] + [len(arr)]
     if valid is not None:
-        streams.append(
-            (_STREAM_PRESENT, _EXTRAS_BITS, *_bits_by_stripe(valid, row_offs, stripes))
-        )
+        streams.append(_present_stream(valid, row_offs, stripes))
     # value offsets of each group into the non-null space
     if valid is None:
         voffs = row_offs
@@ -805,26 +590,14 @@ def _encode_column_grouped(
         return _rle_groups(vals, voffs, signed, v11)
 
     enc = _f_varint(1, _ENC_DIRECT if v11 else _ENC_DIRECT_V2)
-    stats: list[bytes] = []
+    encs = None
     n_groups = len(bounds)
     if pa.types.is_integer(t) or pa.types.is_date32(t):
         vals = stripe_mod._arrow_nonnull_int64(arr)
         streams.append((_STREAM_DATA, _EXTRAS_RLE, rle(vals, True), None))
-        if pa.types.is_date32(t):
-            stats = [
-                _rg_date_stats(
-                    vals[vs(g)], valid is not None and not valid[lo:hi].all()
-                )
-                for g, (lo, hi) in enumerate(bounds)
-            ]
-        else:
-            stats = [
-                _rg_int_stats(
-                    vals[vs(g)], hi - lo, valid is not None and not valid[lo:hi].all()
-                )
-                for g, (lo, hi) in enumerate(bounds)
-            ]
     elif pa.types.is_timestamp(t):
+        # same 2015-epoch split in every file version; only the integer
+        # coder changes (RLEv1 in 0.11, RLEv2 in 0.12)
         unit_scale = stripe_mod._TS_UNITS[t.unit]
         vals = stripe_mod._arrow_nonnull_int64(arr)
         seconds = np.floor_divide(vals, unit_scale) - stripe_mod.TS_BASE_SECONDS
@@ -833,13 +606,11 @@ def _encode_column_grouped(
         )
         streams.append((_STREAM_DATA, _EXTRAS_RLE, rle(seconds, True), None))
         streams.append((_STREAM_SECONDARY, _EXTRAS_RLE, rle(nanos, False), None))
-        stats = [
-            _rg_timestamp_stats(
-                vals[vs(g)], unit_scale, valid is not None and not valid[lo:hi].all()
-            )
-            for g, (lo, hi) in enumerate(bounds)
-        ]
     elif pa.types.is_decimal(t):
+        # DecimalTreeWriter: DATA = unbounded zigzag-varint mantissa
+        # (SerializationUtils.writeBigInteger SerializationUtils.java:
+        # 195-217), SECONDARY = *signed* RLE scale, one per value
+        # (DecimalTreeWriter.writeBatch DecimalTreeWriter.java:159-165)
         from ..kernels import bigdec
 
         lo, hi = _decimal_words(nn)
@@ -853,13 +624,6 @@ def _encode_column_grouped(
             )
         )
         streams.append((_STREAM_SECONDARY, _EXTRAS_RLE, rle(scales, True), None))
-        stats = [
-            _rg_decimal_stats(
-                nn.slice(voffs[g], voffs[g + 1] - voffs[g]),
-                valid is not None and not valid[lo:hi].all(),
-            )
-            for g, (lo, hi) in enumerate(bounds)
-        ]
     elif pa.types.is_floating(t):
         np_t = np.float32 if pa.types.is_float32(t) else np.float64
         vals = nn.to_numpy(zero_copy_only=False).astype(np.dtype(np_t).newbyteorder("<"))
@@ -872,13 +636,6 @@ def _encode_column_grouped(
             )
         )
         enc = _f_varint(1, _ENC_DIRECT)
-        stats = [
-            _rg_double_stats(
-                vals[vs(g)].astype(np.float64),
-                valid is not None and not valid[lo:hi].all(),
-            )
-            for g, (lo, hi) in enumerate(bounds)
-        ]
     elif pa.types.is_boolean(t):
         vals = nn.to_numpy(zero_copy_only=False)
         streams.append(
@@ -894,110 +651,101 @@ def _encode_column_grouped(
         )
         blob = stripe_mod._concat_binary(bin_arr)
         boffs = np.concatenate(([0], np.cumsum(lengths)))
-        streams.append(
-            (
-                _STREAM_DATA,
-                _EXTRAS_RAW,
-                [
-                    bytes(blob[boffs[voffs[g]] : boffs[voffs[g + 1]]])
-                    for g in range(n_groups)
-                ],
-                None,
-            )
-        )
-        streams.append((_STREAM_LENGTH, _EXTRAS_RLE, rle(lengths, False), None))
-        if pa.types.is_string(t) or pa.types.is_large_string(t):
-            stats = []
-            for g, (lo, hi) in enumerate(bounds):
-                sub = bin_arr.slice(voffs[g], voffs[g + 1] - voffs[g])
-                if len(sub):
-                    mm = pa.compute.min_max(sub)
-                    mn, mx = mm["min"].as_py(), mm["max"].as_py()
-                else:
-                    mn = mx = None
-                stats.append(
-                    _rg_string_stats(
-                        mn, mx, int(lengths[vs(g)].sum()),
-                        voffs[g + 1] - voffs[g],
-                        valid is not None and not valid[lo:hi].all(),
-                    )
+        dict_ok = not indexed and (pa.types.is_string(t) or pa.types.is_large_string(t))
+        data, dicts, lens, encs = [], [], [None] * n_groups, [enc] * n_groups
+        for g in range(n_groups):
+            sub = bin_arr.slice(voffs[g], voffs[g + 1] - voffs[g])
+            if dict_ok and len(sub) and len(sub.unique()) / len(sub) <= DICT_THRESHOLD:
+                codes, uniques = dictionary.encode_sorted(sub)
+                u_lens = np.fromiter(map(len, uniques), np.int64, len(uniques))
+                data.append(_rle_groups(codes, [0, len(codes)], False, v11)[0])
+                dicts.append(b"".join(uniques))
+                lens[g] = _rle_groups(u_lens, [0, len(u_lens)], False, v11)[0]
+                encs[g] = _f_varint(1, _ENC_DICT if v11 else _ENC_DICT_V2) + _f_varint(
+                    2, len(uniques)
                 )
+            else:
+                data.append(bytes(blob[boffs[voffs[g]] : boffs[voffs[g + 1]]]))
+                dicts.append(None)
+        if None in lens:  # a DIRECT group's LENGTH holds its value lengths
+            direct = rle(lengths, False)
+            lens = [d if d is not None else direct[g] for g, d in enumerate(lens)]
+        streams.append((_STREAM_DATA, _EXTRAS_RAW, data, None))
+        streams.append((_STREAM_DICT, _EXTRAS_RAW, dicts, None))
+        streams.append((_STREAM_LENGTH, _EXTRAS_RLE, lens, None))
     else:
-        raise NotImplementedError(f"orcfile row-index: unsupported type {t}")
-    if not stats:
-        stats = [
-            _min_stats(
-                voffs[g + 1] - voffs[g],
-                valid is not None and not valid[lo:hi].all(),
-            )
-            for g, (lo, hi) in enumerate(bounds)
-        ]
-    return streams, enc, stats
+        raise NotImplementedError(f"orcfile: unsupported type {t}")
+    # per-group encodings differ only without a row index (a group per stripe)
+    return streams, [(encs or [enc] * n_groups)[g_lo] for g_lo, _ in stripes]
 
 
-def _encode_tree_grouped(
+def _walk(
     node: dict,
     arr: pa.Array,
     bounds: list[tuple[int, int]],
     stripes: list[tuple[int, int]],
     v11: bool,
-    counts: dict[int, list],
-    out: list[tuple[int, list[tuple], bytes, list[bytes]]],
+    indexed: bool,
+    out: list[tuple],
 ) -> None:
-    """Row-group-segmented recursive encode: the indexed-file analog of
-    ``_encode_tree``.  Every stream of every node in the subtree is a
-    per-group blob list (coder + compression chunk restart at each group,
-    so recorded positions are exact piece starts), and every node gets
-    per-group ColumnStatistics — ORC row indexes cover nested columns
-    exactly like flat ones (``TreeWriterBase.createRowIndexEntry``
-    recurses childrenWriters, TreeWriterBase.java:323-330).
+    """Encode the column subtree under ``node`` and take its statistics,
+    appending per node, in pre-order (== column-id order): (column_id,
+    streams, ColumnEncoding per stripe, ColumnStatistics per row group
+    (``indexed`` only), per stripe, and for the file).  ORC row indexes
+    cover nested columns exactly like flat ones
+    (``TreeWriterBase.createRowIndexEntry`` recurses childrenWriters,
+    TreeWriterBase.java:323-330).
 
     ``bounds`` are windows in THIS node's own value space, over every
     stripe of the file (stripe s holds groups ``stripes[s]``): row-group
     row windows at the root; for children, the windows induced by the
-    parent (present-slot prefix sums for struct children, element-offset
-    windows for list/map children, per-variant tag counts for unions)."""
+    parent.  ORC nested nulls: a child column holds entries only for
+    slots where the parent is present — struct children are filtered by
+    parent validity (present-slot prefix sums), list/map children are the
+    present parents' elements (element-offset windows), union variants
+    are gathered by tag (per-variant tag counts) — StructTreeWriter.
+    writeBatch StructTreeWriter.java:71-100, ListTreeWriter.writeBatch
+    ListTreeWriter.java:73-126, MapTreeWriter.writeBatch
+    MapTreeWriter.java:77-136, UnionTreeWriter.writeBatch
+    UnionTreeWriter.java:59-115 (coordinates recovered from the orc-core
+    2.2.2 jar's line tables per SURVEY §0).  Every statistic is taken
+    over a window of the same masked array the streams encode, so the
+    two cannot drift apart."""
     t = node["t"]
     arr = _combined(arr)
-    c = counts.setdefault(node["id"], [0, False])
-    c[0] += len(arr) - arr.null_count
-    c[1] = c[1] or arr.null_count > 0
+    stats = _window_stats(arr)
+    node_stats = (
+        [stats(lo, hi, True) for lo, hi in bounds] if indexed else None,
+        [stats(bounds[a][0], bounds[b - 1][1]) for a, b in stripes],
+        stats(0, len(arr)),
+    )
     if not _is_nested(t):
-        streams, enc, stats = _encode_column_grouped(arr, bounds, stripes, v11)
-        out.append((node["id"], streams, enc, stats))
+        streams, encs = _encode_leaf(arr, bounds, stripes, v11, indexed)
+        out.append((node["id"], streams, encs, *node_stats))
         return
     n_groups = len(bounds)
     streams: list[tuple] = []
     valid_arr = arr.is_valid() if arr.null_count else None
-    valid = (
-        valid_arr.to_numpy(zero_copy_only=False) if valid_arr is not None else None
-    )
     voffs = [lo for lo, _ in bounds] + [len(arr)]
-    if valid is not None:
-        streams.append(
-            (_STREAM_PRESENT, _EXTRAS_BITS, *_bits_by_stripe(valid, voffs, stripes))
-        )
+    if valid_arr is not None:
+        valid = valid_arr.to_numpy(zero_copy_only=False)
+        streams.append(_present_stream(valid, voffs, stripes))
         cum = np.concatenate(([0], np.cumsum(valid.astype(np.int64))))
         voffs = cum[voffs].tolist()
-    stats = [
-        _min_stats(
-            voffs[g + 1] - voffs[g],
-            valid is not None and not valid[lo:hi].all(),
-        )
-        for g, (lo, hi) in enumerate(bounds)
-    ]
-    present_bounds = [(voffs[g], voffs[g + 1]) for g in range(n_groups)]
+    direct = [_f_varint(1, _ENC_DIRECT)] * len(stripes)
     if pa.types.is_struct(t):
-        out.append((node["id"], streams, _f_varint(1, _ENC_DIRECT), stats))
+        out.append((node["id"], streams, direct, *node_stats))
+        present_bounds = [(voffs[g], voffs[g + 1]) for g in range(n_groups)]
         for i, (_, child_node) in enumerate(node["children"]):
             child = _combined(arr.field(i))
             if valid_arr is not None:
                 child = child.filter(valid_arr)
-            _encode_tree_grouped(
-                child_node, child, present_bounds, stripes, v11, counts, out
-            )
+            _walk(child_node, child, present_bounds, stripes, v11, indexed, out)
         return
     if pa.types.is_union(t):
+        # DATA = byte-RLE tags; each variant's values follow in row order.
+        # Arrow unions carry no top-level validity, so there is never a
+        # PRESENT stream here.
         from ..kernels import byterle
 
         codes = arr.type_codes.to_numpy(zero_copy_only=False)
@@ -1015,7 +763,7 @@ def _encode_tree_grouped(
                 None,
             )
         )
-        out.append((node["id"], streams, _f_varint(1, _ENC_DIRECT), stats))
+        out.append((node["id"], streams, direct, *node_stats))
         dense = t.mode == "dense"
         offs_u = arr.offsets.to_numpy(zero_copy_only=False) if dense else None
         for i, (_, child_node) in enumerate(node["children"]):
@@ -1025,14 +773,14 @@ def _encode_tree_grouped(
             rows = np.flatnonzero(mask)
             take = offs_u[rows] if dense else rows
             child = _combined(arr.field(i)).take(pa.array(take, pa.int64()))
-            _encode_tree_grouped(
-                child_node, child, child_bounds, stripes, v11, counts, out
-            )
+            _walk(child_node, child, child_bounds, stripes, v11, indexed, out)
         return
     # list / map: LENGTH of present slots per group; child windows are
     # the element-offset spans of each group's present slots
     nn = arr.drop_null() if arr.null_count else arr
     if pa.types.is_map(t):
+        # MapArray.keys/.items ignore the slice window; .offsets is
+        # windowed — slice the children explicitly
         offs = (
             nn.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
             if len(nn)
@@ -1054,22 +802,14 @@ def _encode_tree_grouped(
     streams.append(
         (_STREAM_LENGTH, _EXTRAS_RLE, _rle_groups(lengths, voffs, False, v11), None)
     )
-    out.append(
-        (
-            node["id"],
-            streams,
-            _f_varint(1, _ENC_DIRECT if v11 else _ENC_DIRECT_V2),
-            stats,
-        )
-    )
+    encs = [_f_varint(1, _ENC_DIRECT if v11 else _ENC_DIRECT_V2)] * len(stripes)
+    out.append((node["id"], streams, encs, *node_stats))
     e_cum = np.concatenate(([0], np.cumsum(lengths))).astype(np.int64)
     elem_bounds = [
         (int(e_cum[voffs[g]]), int(e_cum[voffs[g + 1]])) for g in range(n_groups)
     ]
     for child, (_, child_node) in zip(children, node["children"]):
-        _encode_tree_grouped(
-            child_node, child, elem_bounds, stripes, v11, counts, out
-        )
+        _walk(child_node, child, elem_bounds, stripes, v11, indexed, out)
 
 
 def _row_index_pb(entries: list[tuple[list[int], bytes]]) -> bytes:
@@ -1102,12 +842,15 @@ def write_orc(
     contract).  ``row_index_stride > 0`` (multiple of 8) emits real
     ROW_INDEX streams with per-group seek positions + IntegerStatistics,
     so the reference reader can *skip row groups* inside our file —
-    verified by reading back with a pushed-down filter."""
+    verified by reading back with a pushed-down filter.  ``bloom_columns``
+    need a row index: ORC bloom filters are per-row-group index entries."""
     v11 = version == "0.11"
     if compression not in ("NONE", "ZLIB", "SNAPPY", "ZSTD"):
         raise NotImplementedError(f"orcfile: compression {compression}")
     if row_index_stride and row_index_stride % 8:
         raise ValueError("row_index_stride must be a multiple of 8")
+    if rows_per_stripe < 1:
+        raise ValueError("rows_per_stripe must be positive")
     n_cols = table.num_columns
     root_node = _build_tree(
         pa.struct([table.schema.field(i) for i in range(n_cols)]), [0]
@@ -1137,188 +880,154 @@ def write_orc(
                 f"{table.schema.names} — a typo here would silently emit "
                 "a file with no bloom streams"
             )
+        if not row_index_stride:
+            raise ValueError(
+                f"bloom_columns: {sorted(bloom_columns)} need row_index_stride "
+                "> 0 — ORC bloom filters are row-index entries, so a file "
+                "without a row index would have no bloom streams"
+            )
+    total_rows = table.num_rows
+    # every column is encoded once over the whole table: streams restart
+    # at each row group, so the row groups of all stripes (``bounds``;
+    # stripe s holds ``stripes[s]``, one group per stripe without a row
+    # index) batch into one kernel call per stream
+    bounds: list[tuple[int, int]] = []
+    stripes: list[tuple[int, int]] = []
+    for lo in range(0, max(total_rows, 1), rows_per_stripe):
+        rb = stripe_mod._row_bounds(
+            max(min(rows_per_stripe, total_rows - lo), 0), row_index_stride
+        )
+        stripes.append((len(bounds), len(bounds) + len(rb)))
+        bounds += [(lo + a, lo + b) for a, b in rb]
+    walked: list[tuple] = []
+    bloom_filters: dict[int, list] = {}
+    for i in range(n_cols):
+        col = _combined(table.column(i))
+        node = root_node["children"][i][1]
+        _walk(node, col, bounds, stripes, v11, bool(row_index_stride), walked)
+        if bloom_columns and root_node["children"][i][0] in bloom_columns:
+            if _is_nested(node["t"]):
+                raise NotImplementedError("orcfile: bloom on nested column")
+            filters = []
+            for lo, hi in bounds:
+                sub = col.slice(lo, hi - lo)
+                nn_sub = sub.drop_null() if sub.null_count else sub
+                hashes = _orc_bloom_hashes(nn_sub)
+                if hashes is None:
+                    raise NotImplementedError(
+                        f"orcfile: bloom on type {node['t']}"
+                    )
+                filters.append(
+                    _orc_bloom_build(hashes, row_index_stride, bloom_fpp)
+                )
+            bloom_filters[node["id"]] = filters
+
     out = bytearray(b"ORC")
     header_len = 3
     stripe_infos = []
-    total_rows = table.num_rows
-    counts: dict[int, list] = {}  # id -> [n_values, has_null], via encode walk
-    stripe_stats_pbs: list[list[bytes]] = []  # per stripe: ColumnStatistics per id
-    stripe_los = range(0, max(total_rows, 1), max(rows_per_stripe, 1))
-    if row_index_stride:
-        # every column is encoded once over the whole table: streams
-        # restart at each row group, so the row groups of all stripes
-        # (``bounds``; stripe s holds ``stripes[s]``) batch into one
-        # kernel call per stream
-        bounds: list[tuple[int, int]] = []
-        stripes: list[tuple[int, int]] = []
-        for lo in stripe_los:
-            n_s = max(min(rows_per_stripe, total_rows - lo), 0)
-            rb = stripe_mod._row_bounds(n_s, row_index_stride)
-            stripes.append((len(bounds), len(bounds) + len(rb)))
-            bounds += [(lo + a, lo + b) for a, b in rb]
-        grouped: list[tuple[int, list[tuple], bytes, list[bytes]]] = []
-        bloom_filters: dict[int, list] = {}
-        for i in range(n_cols):
-            col = _combined(table.column(i))
-            # pre-order emission == column-id order, nested included
-            node = root_node["children"][i][1]
-            _encode_tree_grouped(node, col, bounds, stripes, v11, counts, grouped)
-            if bloom_columns and root_node["children"][i][0] in bloom_columns:
-                if _is_nested(node["t"]):
-                    raise NotImplementedError("orcfile: bloom on nested column")
-                filters = []
-                for lo, hi in bounds:
-                    sub = col.slice(lo, hi - lo)
-                    nn_sub = sub.drop_null() if sub.null_count else sub
-                    hashes = _orc_bloom_hashes(nn_sub)
-                    if hashes is None:
-                        raise NotImplementedError(
-                            f"orcfile: bloom on type {node['t']}"
-                        )
-                    filters.append(
-                        _orc_bloom_build(hashes, row_index_stride, bloom_fpp)
-                    )
-                bloom_filters[node["id"]] = filters
-
-    for s_i, lo in enumerate(stripe_los):
-        chunk = table.slice(lo, rows_per_stripe)
-        if chunk.num_rows == 0 and total_rows > 0:
-            break
+    for s_i, (g_lo, g_hi) in enumerate(stripes):
         stripe_offset = len(out)
-        stream_meta: list[tuple[int, int, int]] = []  # (kind, column_id, length)
-        encodings = [_f_varint(1, _ENC_DIRECT)]  # root struct
-        data = bytearray()
+        n_rows = bounds[g_hi - 1][1] - bounds[g_lo][0]
+        index_meta: list[tuple[int, int, int]] = []  # (kind, column_id, length)
+        data_meta: list[tuple[int, int, int]] = []
         index = bytearray()
+        data = bytearray()
         if row_index_stride:
-            g_lo, g_hi = stripes[s_i]
             # root struct (column 0) index: position-less entries with counts
             root_ri = _row_index_pb(
                 [([], _min_stats(hi - b_lo, False)) for b_lo, hi in bounds[g_lo:g_hi]]
             )
             wrapped = _orc_compress(root_ri, compression)
-            stream_meta.append((_STREAM_ROW_INDEX, 0, len(wrapped)))
+            index_meta.append((_STREAM_ROW_INDEX, 0, len(wrapped)))
             index += wrapped
-            col_payloads = []
-            for cid, streams, enc, stats in grouped:
-                encodings.append(enc)
-                # build each stream.  Two layouts:
-                # - per-group pieces (marks is None): coder + compression
-                #   chunk restart at each group, positions are exact piece
-                #   offsets with zero coder state;
-                # - one bitfield per stripe + marks (PRESENT / BOOLEAN
-                #   DATA): one continuous stream, positions carry the real
-                #   (chunk offset, used-in-run, bits) coder state.
-                built = []  # (kind, bytes, offsets-or-chunkmaps, marks)
-                for kind, _extras, blobs, marks in streams:
-                    if marks is None:
-                        pieces = [
-                            _orc_compress(b, compression) for b in blobs[g_lo:g_hi]
-                        ]
-                        offs = np.concatenate(
-                            ([0], np.cumsum([len(p) for p in pieces]))
-                        )
-                        built.append((kind, b"".join(pieces), offs[:-1], None))
-                    else:
-                        wrapped, u_starts, c_starts = _compress_chunked(
-                            blobs[s_i], compression
-                        )
-                        built.append(
-                            (kind, wrapped, (u_starts, c_starts), marks[s_i])
-                        )
-                entries = []
-                for g in range(g_hi - g_lo):
-                    positions: list[int] = []
-                    for st, b in zip(streams, built):
-                        extras = st[1]
-                        _, _, offs, marks = b
-                        if marks is None:
-                            positions.append(int(offs[g]))
-                            if compression != "NONE":
-                                positions.append(0)  # offset inside the chunk
-                            positions.extend([0] * extras)  # coder state
-                        else:
-                            off, used, bits = marks[g]
-                            if compression == "NONE":
-                                positions.extend([off, used, bits])
-                            else:
-                                u_starts, c_starts = offs
-                                ci = (
-                                    int(np.searchsorted(u_starts, off, "right"))
-                                    - 1
-                                )
-                                positions.extend(
-                                    [
-                                        int(c_starts[ci]),
-                                        off - int(u_starts[ci]),
-                                        used,
-                                        bits,
-                                    ]
-                                )
-                    entries.append((positions, stats[g_lo + g]))
-                ri = _orc_compress(_row_index_pb(entries), compression)
-                stream_meta.append((_STREAM_ROW_INDEX, cid, len(ri)))
-                index += ri
-                if cid in bloom_filters:
-                    bs = _orc_compress(
-                        _bloom_index_pb(bloom_filters[cid][g_lo:g_hi]), compression
+        for cid, streams, _, group_stats, _, _ in walked:
+            # build each stream present in this stripe.  Two layouts:
+            # - per-group pieces (marks is None): coder + compression
+            #   chunk restart at each group, positions are exact piece
+            #   offsets with zero coder state;
+            # - one bitfield per stripe + marks (PRESENT / BOOLEAN
+            #   DATA): one continuous stream, positions carry the real
+            #   (chunk offset, used-in-run, bits) coder state.
+            built = []  # (kind, extras, bytes, offsets-or-chunkmaps, marks)
+            for kind, extras, blobs, marks in streams:
+                if marks is None and blobs[g_lo] is not None:
+                    pieces = [
+                        _orc_compress(b, compression) for b in blobs[g_lo:g_hi]
+                    ]
+                    offs = np.concatenate(([0], np.cumsum([len(p) for p in pieces])))
+                    built.append((kind, extras, b"".join(pieces), offs[:-1], None))
+                elif marks is not None and blobs[s_i] is not None:
+                    wrapped, u_starts, c_starts = _compress_chunked(
+                        blobs[s_i], compression
                     )
-                    stream_meta.append((8, cid, len(bs)))  # BLOOM_FILTER_UTF8
-                    index += bs
-                col_payloads.append((cid, built))
-            for cid, built in col_payloads:
-                for kind, payload, _, _ in built:
-                    stream_meta.append((kind, cid, len(payload)))
-                    data += payload
-        else:
-            flat: list[tuple[int, list[tuple[int, bytes]], bytes]] = []
-            for i in range(n_cols):
-                _encode_tree(
-                    root_node["children"][i][1], chunk.column(i), v11, flat,
-                    counts,
+                    built.append(
+                        (kind, extras, wrapped, (u_starts, c_starts), marks[s_i])
+                    )
+            for kind, _, payload, _, _ in built:
+                data_meta.append((kind, cid, len(payload)))
+                data += payload
+            if not row_index_stride:
+                continue
+            entries = []
+            for g in range(g_hi - g_lo):
+                positions: list[int] = []
+                for _, extras, _, offs, marks in built:
+                    if marks is None:
+                        positions.append(int(offs[g]))
+                        if compression != "NONE":
+                            positions.append(0)  # offset inside the chunk
+                        positions.extend([0] * extras)  # coder state
+                        continue
+                    off, used, bits = marks[g]
+                    if compression == "NONE":
+                        positions.extend([off, used, bits])
+                        continue
+                    u_starts, c_starts = offs
+                    ci = int(np.searchsorted(u_starts, off, "right")) - 1
+                    positions.extend(
+                        [int(c_starts[ci]), off - int(u_starts[ci]), used, bits]
+                    )
+                entries.append((positions, group_stats[g_lo + g]))
+            ri = _orc_compress(_row_index_pb(entries), compression)
+            index_meta.append((_STREAM_ROW_INDEX, cid, len(ri)))
+            index += ri
+            if cid in bloom_filters:
+                bs = _orc_compress(
+                    _bloom_index_pb(bloom_filters[cid][g_lo:g_hi]), compression
                 )
-            # _encode_tree appends pre-order, which IS column-id order
-            for cid, streams, _ in flat:
-                for kind, blob in streams:
-                    wrapped = _orc_compress(blob, compression)
-                    stream_meta.append((kind, cid, len(wrapped)))
-                    data += wrapped
-            encodings += [enc for _, _, enc in flat]
-        # per-stripe column statistics for the Metadata section — what
-        # lets the reference reader's sargApp.pickStripes skip WHOLE
-        # stripes before touching their indexes (RecordReaderImpl
-        # consults Reader.getStripeStatistics; granularity above the
-        # ROW_INDEX streams emitted per group below)
-        st_stats: list[bytes] = [_min_stats(chunk.num_rows, False)]
-        for i in range(n_cols):
-            col = chunk.column(i)
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            _tree_stats_pbs(root_node["children"][i][1], col, st_stats)
-        stripe_stats_pbs.append(st_stats)
+                index_meta.append((8, cid, len(bs)))  # BLOOM_FILTER_UTF8
+                index += bs
         out += index
         out += data
         # StripeFooter: streams=1, columns(encodings)=2, writerTimezone=3
         sf = bytearray()
-        for kind, col_id, length in stream_meta:
+        for kind, col_id, length in index_meta + data_meta:
             body = _f_varint(1, kind) + _f_varint(2, col_id) + _f_varint(3, length)
             sf += _f_bytes(1, bytes(body))
-        for e in encodings:
-            sf += _f_bytes(2, e)
+        sf += _f_bytes(2, _f_varint(1, _ENC_DIRECT))  # root struct
+        for _cid, _streams, encs, *_ in walked:
+            sf += _f_bytes(2, encs[s_i])
         sf += _f_bytes(3, b"UTC")
         sf_wrapped = _orc_compress(bytes(sf), compression)
         out += sf_wrapped
         stripe_infos.append(
-            (stripe_offset, len(index), len(data), len(sf_wrapped), chunk.num_rows)
+            (stripe_offset, len(index), len(data), len(sf_wrapped), n_rows)
         )
 
     content_length = len(out)
 
     # Metadata section (between stripes and footer): one StripeStatistics
     # per stripe, one ColumnStatistics per column id — typed min/max so a
-    # SearchArgument can refute entire stripes from the tail alone
+    # SearchArgument can refute entire stripes from the tail alone (the
+    # reference reader's sargApp.pickStripes skips WHOLE stripes before
+    # touching their indexes)
     meta_pb = b"".join(
-        _f_bytes(1, b"".join(_f_bytes(1, cs) for cs in st))
-        for st in stripe_stats_pbs
+        _f_bytes(
+            1,
+            _f_bytes(1, _min_stats(info[4], False))
+            + b"".join(_f_bytes(1, st[s_i]) for *_, st, _file_st in walked),
+        )
+        for s_i, info in enumerate(stripe_infos)
     )
     metadata_wrapped = _orc_compress(meta_pb, compression)
     out += metadata_wrapped
@@ -1346,24 +1055,11 @@ def write_orc(
     for k, v in (user_metadata or {}).items():
         footer += _f_bytes(5, _f_bytes(1, k.encode()) + _f_bytes(2, bytes(v)))
     footer += _f_varint(6, total_rows)
-    # file-level per-id stats: typed min/max over the whole table (same
-    # masked walk as the stripe stats — lets the reader skip the entire
-    # file from the footer), cross-checked against the value counts the
-    # encode walk accumulated so the two traversals cannot drift apart
-    file_stats: list[bytes] = [_min_stats(total_rows, False)]
-    for i in range(n_cols):
-        col = table.column(i)
-        if isinstance(col, pa.ChunkedArray):
-            col = col.combine_chunks()
-        _tree_stats_pbs(root_node["children"][i][1], col, file_stats)
-    counts[0] = [total_rows, False]
-    for cid, st in enumerate(file_stats):
-        walk_n = counts.get(cid, [0, False])[0]
-        stat_n, _rest = _uvarint_prefix(st)
-        assert stat_n == walk_n, (
-            f"orcfile: column id {cid} stats count {stat_n} != encode walk {walk_n}"
-        )
-        footer += _f_bytes(7, st)
+    # file-level per-id stats: typed min/max over the whole table — lets
+    # the reader skip the entire file from the footer
+    footer += _f_bytes(7, _min_stats(total_rows, False))
+    for *_, file_st in walked:
+        footer += _f_bytes(7, file_st)
     footer += _f_varint(8, row_index_stride)
     footer_wrapped = _orc_compress(bytes(footer), compression)
     out += footer_wrapped

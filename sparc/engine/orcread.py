@@ -176,13 +176,31 @@ _INT_WIDTH = {"byte": pa.int8(), "short": pa.int16(), "int": pa.int32(),
 _INDEX_KINDS = ("ROW_INDEX", "BLOOM_FILTER", "BLOOM_FILTER_UTF8", "?")
 
 
-def _tail(data: bytes) -> tuple[dict, str, dict]:
-    """(PostScript, compression kind, Footer) of a whole file's bytes."""
-    ps_len = data[-1]
-    ps = _parse_pb(data[-1 - ps_len : -1])
-    footer_len = ps[1][0]
-    kind = _KINDS[ps.get(2, [0])[0]]
-    footer = _parse_pb(_inflate(data[-1 - ps_len - footer_len : -1 - ps_len], kind))
+def _tail(data: bytes, path: str) -> tuple[dict, str, dict]:
+    """(PostScript, compression kind, Footer) of a whole file's bytes.
+
+    A damaged tail raises one ``ValueError`` naming ``path`` and the
+    section; the PostScript must carry the ``ORC`` magic in field 8000
+    (``ReaderImpl.ensureOrcFooter``), so a truncated file cannot parse as
+    a shorter one."""
+    section = "postscript"
+    try:
+        ps_len = data[-1]
+        ps = _parse_pb(data[-1 - ps_len : -1])
+        if [bytes(m) for m in ps.get(8000, [])] != [b"ORC"]:
+            raise ValueError("no ORC magic in field 8000")
+        footer_len = ps[1][0]
+        kind = _KINDS[ps.get(2, [0])[0]]
+        section = "footer"
+        if 1 + ps_len + footer_len > len(data):
+            raise ValueError(f"{footer_len} bytes run past the file start")
+        footer = _parse_pb(_inflate(data[-1 - ps_len - footer_len : -1 - ps_len], kind))
+        if 4 not in footer:
+            raise ValueError("no types")
+    except NotImplementedError:
+        raise
+    except Exception as e:
+        raise ValueError(f"orcread: {path}: corrupt ORC {section}: {e}") from e
     return ps, kind, footer
 
 
@@ -238,7 +256,7 @@ def read_orc(path: str) -> pa.Table:
     """Parse + decode an ORC file with this engine's kernels."""
     with open(path, "rb") as f:
         data = f.read()
-    _ps, kind, footer = _tail(data)
+    _ps, kind, footer = _tail(data, path)
     types = [_parse_pb(t) for t in footer[4]]
     root = types[0]
     assert _TYPE_KINDS[root.get(1, [0])[0]] == "struct"
@@ -754,7 +772,7 @@ def read_orc_row_groups(
     bound is described above ``_Stream``)."""
     with open(path, "rb") as f:
         data = f.read()
-    _ps, kind, footer = _tail(data)
+    _ps, kind, footer = _tail(data, path)
     return _read_row_groups(data, kind, footer, groups, columns)
 
 
@@ -879,7 +897,7 @@ def read_orc_statistics(
     read — no stripe bytes are touched."""
     with open(path, "rb") as f:
         data = f.read()
-    ps, kind, footer = _tail(data)
+    ps, kind, footer = _tail(data, path)
     file_stats = [_stats_from_pb(_parse_pb(s)) for s in footer.get(7, [])]
     user_meta: dict[str, bytes] = {}
     for item in footer.get(5, []):
@@ -914,7 +932,7 @@ def read_orc_filtered(
 
     with open(path, "rb") as f:
         data = f.read()
-    ps, kind, footer = _tail(data)
+    ps, kind, footer = _tail(data, path)
     stride = footer.get(8, [0])[0]
     if not stride:
         raise ValueError("read_orc_filtered: file has no row index")

@@ -895,6 +895,10 @@ def test_bloom_columns_typo_raises(tmp_path):
             t, str(tmp_path / "x.orc"), bloom_columns=["s", "vv"],
             row_index_stride=8,
         )
+    # blooms are row-index entries: without a stride there is nowhere
+    # to put them, so the request must fail rather than be dropped
+    with pytest.raises(ValueError, match="bloom_columns.*row_index_stride"):
+        orcfile.write_orc(t, str(tmp_path / "y.orc"), bloom_columns=["s"])
 
 
 def test_bloom_double_bitsets_word_identical_to_java(spark, tmp_path):
@@ -1255,3 +1259,84 @@ def test_timestamp_instant_non_utc_display_zone(tmp_path):
         got["ts"].cast(pa.timestamp("us", tz="UTC")).combine_chunks()
         .equals(arr.cast(pa.timestamp("us", tz="UTC")))
     )
+
+
+def _null_free_stripe_table(n: int = 60_000) -> pa.Table:
+    """Nullable columns, flat and nested, whose nulls all fall in stripe 0
+    (rows < 30,000) of a 30,000-row-stripe file."""
+    s0 = n // 2
+    return pa.table(
+        {
+            "k": pa.array(np.arange(n), pa.int64()),
+            "nul": pa.array(
+                [None if i < s0 and i % 5 == 0 else i * 2 for i in range(n)],
+                pa.int64(),
+            ),
+            "s": pa.array([None if i < s0 and i % 7 == 0 else f"v{i}" for i in range(n)]),
+            "b": pa.array([None if i < s0 and i % 3 == 0 else i % 2 == 0 for i in range(n)]),
+            "st": pa.array(
+                [None if i < s0 and i % 11 == 0 else {"a": i % 97} for i in range(n)],
+                pa.struct([("a", pa.int64())]),
+            ),
+        }
+    )
+
+
+def _present_columns_by_stripe(path: str) -> list[set[int]]:
+    from sparc.engine import orcread
+
+    with open(path, "rb") as f:
+        data = f.read()
+    _ps, kind, footer = orcread._tail(data, path)
+    return [
+        {c for k, c, _b in orcread._stripe_directory(data, st, kind)[1] if k == "PRESENT"}
+        for st in orcread._stripes(footer)
+    ]
+
+
+@pytest.mark.parametrize("comp", ["NONE", "ZSTD"])
+def test_null_free_stripe_has_no_present_in_indexed_file(tmp_path, comp):
+    """A row-indexed stripe whose slice of a nullable column has no nulls
+    writes no PRESENT stream for it, and its row-index entries carry no
+    PRESENT positions: pyarrow reads the file value-exact and a seek to
+    every row group returns exactly that group's rows."""
+    from sparc.engine import orcread
+
+    t = _null_free_stripe_table()
+    path = str(tmp_path / f"nf_{comp}.orc")
+    orcfile.write_orc(
+        t, path, rows_per_stripe=30_000, row_index_stride=1000, compression=comp
+    )
+    # column ids: k=1, nul=2, s=3, b=4, st=5, st.a=6
+    assert _present_columns_by_stripe(path) == [{2, 3, 4, 5}, set()]
+    got = pa.orc.ORCFile(path).read()
+    assert got.equals(t)
+    for g in range(60):
+        assert orcread.read_orc_row_groups(path, [g]).equals(
+            t.slice(g * 1000, 1000)
+        ), g
+
+
+def test_null_free_stripe_java_reader_skips(spark, tmp_path):
+    """The Java reader reads the null-free-stripe file value-exact and a
+    pushed-down point filter still seeks into row groups of both stripes
+    through positions that omit PRESENT in stripe 1 (as in
+    ``test_row_index_java_reader_skips``)."""
+    t = _null_free_stripe_table()
+    path = str(tmp_path / "nf.orc")
+    orcfile.write_orc(
+        t, path, rows_per_stripe=30_000, row_index_stride=1000,
+        compression="ZLIB",
+    )
+    assert _present_columns_by_stripe(path) == [{2, 3, 4, 5}, set()]
+    spark.conf.set("spark.sql.orc.filterPushdown", "true")
+    try:
+        df = spark.read.orc(path)
+        want = t.to_pylist()
+        for lo in (11_000, 41_000):
+            rows = df.filter(f"k >= {lo} and k < {lo + 10}").orderBy("k").collect()
+            assert [r.asDict(recursive=True) for r in rows] == want[lo : lo + 10]
+        full = df.orderBy("k").collect()
+        assert [r.asDict(recursive=True) for r in full] == want
+    finally:
+        spark.conf.unset("spark.sql.orc.filterPushdown")

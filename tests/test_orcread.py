@@ -387,3 +387,33 @@ def test_spark_timestamp_ntz_attribute(spark, tmp_path_factory):
         assert t.schema.field(0).type == pa.timestamp("us")
         got.extend(t["ts"].to_pylist())
     assert sorted(got) == sorted(r[0] for r in rows)
+
+
+@pytest.mark.parametrize("compression", ["NONE", "ZSTD"])
+def test_damaged_tail_raises_value_error_naming_the_file(tmp_path, compression):
+    """A file cut anywhere inside its footer or postscript, or whose
+    postscript lacks the ``ORC`` magic, raises one ValueError naming the
+    path — never a KeyError/IndexError, and never a shorter table."""
+    import re
+
+    from conftest import mixed_orc_table
+    from sparc.engine import orcfile
+
+    src = str(tmp_path / "whole.orc")
+    orcfile.write_orc(
+        mixed_orc_table(), src, rows_per_stripe=3000, row_index_stride=1000,
+        compression=compression,
+    )
+    with open(src, "rb") as f:
+        data = f.read()
+    ps, _kind, _footer = orcread._tail(data, src)
+    footer_start = len(data) - 1 - data[-1] - ps[1][0]
+    path = str(tmp_path / "damaged.orc")
+    assert data[-4:-1] == b"ORC"
+    damaged = [data[:cut] for cut in range(footer_start, len(data))]
+    damaged.append(data[:-4] + b"ORK" + data[-1:])
+    for blob in damaged:
+        with open(path, "wb") as f:
+            f.write(blob)
+        with pytest.raises(ValueError, match=re.escape(path)):
+            orcread.read_orc(path)

@@ -406,7 +406,7 @@ def test_seek_every_group_java_small_chunks(spark, tmp_path):
     path = glob.glob(d + "/*.orc")[0]
     with open(path, "rb") as f:
         data = f.read()
-    _ps, kind, footer = orcread._tail(data)
+    _ps, kind, footer = orcread._tail(data, path)
     (st,) = orcread._stripes(footer)
     _sf, streams = orcread._stripe_directory(data, st, kind)
     n_groups = (st["n_rows"] + 9_999) // 10_000
@@ -468,7 +468,7 @@ def test_one_group_read_inflates_a_fraction(tmp_path, monkeypatch):
     )
     with open(path, "rb") as f:
         data = f.read()
-    _ps, kind, footer = orcread._tail(data)
+    _ps, kind, footer = orcread._tail(data, path)
     stream_bytes = 0
     for st in orcread._stripes(footer):
         _sf, streams = orcread._stripe_directory(data, st, kind)
