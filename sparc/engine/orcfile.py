@@ -894,9 +894,8 @@ def write_orc(
     bounds: list[tuple[int, int]] = []
     stripes: list[tuple[int, int]] = []
     for lo in range(0, max(total_rows, 1), rows_per_stripe):
-        rb = stripe_mod._row_bounds(
-            max(min(rows_per_stripe, total_rows - lo), 0), row_index_stride
-        )
+        n_s = min(rows_per_stripe, total_rows - lo)
+        rb = stripe_mod._row_bounds(n_s, row_index_stride)
         stripes.append((len(bounds), len(bounds) + len(rb)))
         bounds += [(lo + a, lo + b) for a, b in rb]
     walked: list[tuple] = []

@@ -4,7 +4,8 @@ The row-indexed writer encodes each stream per row group; any change to how
 it batches those encodes must keep every file byte-identical (stream bytes,
 row-index positions, statistics and the tail all follow from them).  Each
 case writes a file and compares its sha256 against the digest recorded
-before the writer was batched.
+before the writer was batched (the two-stripe cases: before the unindexed
+and row-indexed writer walks became one).
 
 Cases: the first 75,000 rows of the sf0.1 ``lineitem`` table (ZSTD, stride
 10,000: the ``orc-lineitem`` benchmark shape), and the seeded mixed table of
