@@ -21,6 +21,17 @@ distinct width.  Python-level work per chunk is limited to its header bytes
 and a slice of that packed output, so numpy calls scale with segments, not
 chunks or values.
 
+Decode cost model, the mirror image: one Python pass reads the run headers
+(a few microseconds per run, the only per-run Python) and queues each
+payload under its bit width.  Each width's payloads are unpacked with one
+``bitpack.unpack`` call, and each sub-encoding present is assembled with
+vector ops over all of its runs: zigzag for DIRECT; for PATCHED_BASE, the
+patches ORed in at their summed gaps and the bases added; ``first + j*step``
+for SHORT_REPEAT and fixed DELTA; one cumulative sum that restarts at every
+run for variable DELTA.  So numpy calls scale with the widths and
+sub-encodings a stream holds, not with its runs or values, and a
+sub-encoding the stream lacks costs nothing.
+
 All values are treated as two's-complement int64 (like the reference's
 ``long``); ``signed`` controls zigzag in SHORT_REPEAT/DIRECT and the base
 varint in DELTA.
@@ -548,6 +559,12 @@ def _pack_pieces(pieces: list) -> list:
 # decode
 # ---------------------------------------------------------------------------
 
+_WIDTH = tuple(decode_bit_width(code) for code in range(32))
+_CLOSEST = tuple(CLOSEST_FIXED_BITS.tolist())
+_ZERO_BYTES = bytes(64)
+_MASK64 = (1 << 64) - 1
+_NO_START = np.zeros(65, dtype=np.int64)  # one pool: every width starts at 0
+
 
 def decode(data: bytes | memoryview, n: int, signed: bool) -> np.ndarray:
     """Decode an RLEv2 stream back to int64.
@@ -555,107 +572,281 @@ def decode(data: bytes | memoryview, n: int, signed: bool) -> np.ndarray:
     ``n`` may be smaller than the encoded count (partial read): the final
     run is truncated, mirroring the reference reader's ability to stop
     mid-run (RunLengthIntegerReaderV2.nextVector honors the batch size).
-    Data that ends before ``n`` values raises ``ValueError``.
+    Data that ends before ``n`` values raises ``ValueError``, and so does a
+    PATCHED_BASE patch that points past its run.
+
+    The header pass (:func:`_scan`) comes first, and the output is only
+    allocated once it has covered ``n`` values, so memory is bounded by
+    the runs the data holds, not by ``n``.  Then every width's payloads are
+    unpacked with one ``bitpack.unpack`` and each sub-encoding is assembled
+    by vector ops over all of its runs.
     """
+    pools, repeat, direct, patched, patches, delta = _scan(bytes(data), n, signed)
+    if not n:
+        return np.empty(0, dtype=I64)
+    # each width's values, one unpack per width, laid end to end;
+    # start[w] is where width w's values begin
+    values = [bitpack.unpack(b"".join(p), size, w) for w, (p, size, _) in pools.items()]
+    if len(values) > 1:
+        start = np.zeros(65, dtype=np.int64)
+        start[list(pools)] = np.cumsum([0] + [v.size for v in values[:-1]])
+        pool = np.concatenate(values)
+    else:
+        start = _NO_START
+        pool = values[0] if values else None
+    parts = []  # (runs, values in run order)
+    if direct:
+        z = _payloads(pool, start, direct)
+        parts.append((direct, zigzag_decode(z) if signed else z.view(I64)))
+    if patched:
+        parts.append((patched, _patched(pool, start, patched, patches)))
+    if repeat:
+        parts.append((repeat, _repeated(repeat)))
+    if delta:
+        parts.append((delta, _delta(pool, start, delta)))
+    if len(parts) == 1:
+        return parts[0][1]
     out = np.empty(n, dtype=I64)
-    data = bytes(data)
-    pos = 0
-    filled = 0
+    for runs, vals in parts:
+        if len(runs) == 1:
+            out[runs[0][0] : runs[0][0] + runs[0][1]] = vals
+        else:
+            offsets, takes = list(zip(*runs))[:2]
+            out[_ranges(offsets, takes)] = vals
+    return out
+
+
+def _scan(data: bytes, n: int, signed: bool) -> tuple:
+    """The header pass: read run headers until ``n`` values are covered and
+    queue every payload for its width's unpack, without decoding a value.
+    This is the only Python loop over runs; it reads the headers that
+    ``RunLengthIntegerReaderV2.java:87-316`` reads.
+
+    Returns ``pools`` (width -> [queued payloads, values, bytes]) and,
+    per kind, one row per run that starts with the run's offset in the
+    output and the number of values taken from it:
+
+    - ``repeat``: SHORT_REPEAT and fixed DELTA, ``(.., first value, step)``
+    - ``direct``: ``(.., width, slot)``
+    - ``patched``: PATCHED_BASE, ``(.., width, slot, base)``
+    - ``patches``: PATCHED_BASE runs with a nonzero patch entry, ``(row in
+      patched, run length, patch width, entry width, entry slot, entries)``
+    - ``delta``: variable DELTA, ``(.., width, slot, first value, first
+      delta)``
+
+    A slot is the index of a run's first value in its width's unpack.  Each
+    run is zero-padded to whole 8-value groups (8 values at ``w`` bits are
+    ``w`` bytes), so every run starts on a byte boundary of its pool.  A
+    pool that a DELTA run opens starts with one group of 8 zero values, so
+    every DELTA slot is at least 8 (:func:`_delta` reads two places early).
+    """
+    pools: dict[int, list] = {}
+    repeat, direct, patched, patches, delta = [], [], [], [], []
+
+    def queue(start: int, count: int, width: int, lead: bool = False) -> tuple[int, int]:
+        """(slot, end byte) of ``count`` values at ``width`` bits from
+        ``data[start:]``."""
+        end = start + (count * width + 7) // 8
+        pool = pools.get(width)
+        if pool is None:
+            pool = pools[width] = [[_ZERO_BYTES[:width]], 8, width] if lead else [[], 0, 0]
+        pieces, queued, nbytes = pool
+        slot = (queued + 7) & ~7
+        if slot > queued:  # pad the previous run to a whole group
+            pieces.append(_ZERO_BYTES[: slot * width // 8 - nbytes])
+        pieces.append(data[start:end])
+        pool[1] = slot + count
+        pool[2] = slot * width // 8 + end - start
+        return slot, end
+
+    size = len(data)
+    pos = filled = 0
     try:
         while filled < n:
             header = data[pos]
             mode = header >> 6
             if mode == _SHORT_REPEAT:
                 nbytes = ((header >> 3) & 0x7) + 1
-                count = min((header & 0x7) + MIN_REPEAT, n - filled)
+                take = min((header & 0x7) + MIN_REPEAT, n - filled)
                 u = int.from_bytes(data[pos + 1 : pos + 1 + nbytes], "big")
-                val = ((u >> 1) ^ -(u & 1)) if signed else to_signed64(u)
-                out[filled : filled + count] = val
                 pos += 1 + nbytes
-                filled += count
-            elif mode == _DIRECT:
-                width = decode_bit_width((header >> 1) & 0x1F)
+                value = ((u >> 1) ^ -(u & 1)) if signed else to_signed64(u)
+                rows, row = repeat, (filled, take, value, 0)
+            else:
                 count = (((header & 1) << 8) | data[pos + 1]) + 1
-                pos += 2
-                nb = bitpack.packed_size(count, width)
-                zz = bitpack.unpack(data[pos : pos + nb], count, width)
                 take = min(count, n - filled)
-                out[filled : filled + take] = (
-                    zigzag_decode(zz) if signed else zz.view(I64)
-                )[:take]
-                pos += nb
-                filled += take
-            elif mode == _PATCHED_BASE:
-                width = decode_bit_width((header >> 1) & 0x1F)
-                count = (((header & 1) << 8) | data[pos + 1]) + 1
-                b3, b4 = data[pos + 2], data[pos + 3]
-                base_bytes = (b3 >> 5) + 1
-                patch_width = decode_bit_width(b3 & 0x1F)
-                gap_width = (b4 >> 5) + 1
-                pll = b4 & 0x1F
-                pos += 4
-                base_field = int.from_bytes(data[pos : pos + base_bytes], "big")
-                sign_mask = 1 << (8 * base_bytes - 1)
-                base = -(base_field & ~sign_mask) if base_field & sign_mask else base_field
-                pos += base_bytes
-                nb = bitpack.packed_size(count, width)
-                br = bitpack.unpack(data[pos : pos + nb], count, width)
-                pos += nb
-                entry_width = closest_fixed_bits(gap_width + patch_width)
-                nb = bitpack.packed_size(pll, entry_width)
-                entries = bitpack.unpack(data[pos : pos + nb], pll, entry_width)
-                pos += nb
-                idx = 0
-                pmask = (1 << patch_width) - 1
-                for e in entries.tolist():
-                    gap = e >> patch_width
-                    pv = e & pmask
-                    idx += gap
-                    if pv:
-                        br[idx] |= U64(pv << width)
-                take = min(count, n - filled)
-                out[filled : filled + take] = (
-                    br + np.uint64(base & ((1 << 64) - 1))
-                ).view(I64)[:take]
-                filled += take
-            else:  # _DELTA
-                width_code = (header >> 1) & 0x1F
-                count = (((header & 1) << 8) | data[pos + 1]) + 1
-                pos += 2
-                if signed:
-                    base, pos = read_vslong(data, pos)
-                else:
-                    u, pos = read_vulong(data, pos)
-                    base = to_signed64(u)
-                delta0, pos = read_vslong(data, pos)
-                seg = np.empty(count, dtype=I64)
-                seg[0] = base
-                if count > 1:
-                    if width_code == 0:  # fixed delta (wrap-safe two's complement)
-                        steps = np.arange(count, dtype=I64).view(U64)
-                        seg[:] = (
-                            np.uint64(base & ((1 << 64) - 1))
-                            + steps * np.uint64(delta0 & ((1 << 64) - 1))
-                        ).view(I64)
+                code = (header >> 1) & 0x1F
+                width = _WIDTH[code]
+                if mode == _DIRECT:
+                    slot, pos = queue(pos + 2, count, width)
+                    rows, row = direct, (filled, take, width, slot)
+                elif mode == _PATCHED_BASE:
+                    b3, b4 = data[pos + 2], data[pos + 3]
+                    base_bytes = (b3 >> 5) + 1
+                    field = int.from_bytes(data[pos + 4 : pos + 4 + base_bytes], "big")
+                    sign = 1 << (8 * base_bytes - 1)
+                    base = -(field ^ sign) if field & sign else field
+                    slot, pos = queue(pos + 4 + base_bytes, count, width)
+                    patch_width = _WIDTH[b3 & 0x1F]
+                    gap_width = (b4 >> 5) + 1
+                    entries = b4 & 0x1F
+                    entry_width = _CLOSEST[min(gap_width + patch_width, 64)]
+                    end = pos + (entries * entry_width + 7) // 8
+                    # all-zero entries patch nothing (a pure frame-of-reference
+                    # run carries one), so only the others are queued
+                    if data[pos:end].count(0) < end - pos:
+                        if width + patch_width > 64 or gap_width + patch_width > 64:
+                            raise ValueError(
+                                f"RLEv2 PATCHED_BASE run at value {filled}: data "
+                                f"width {width}, patch width {patch_width} and gap "
+                                f"width {gap_width} overflow a 64-bit value"
+                            )
+                        entry_slot, _ = queue(pos, entries, entry_width)
+                        patches.append(
+                            (len(patched), count, patch_width, entry_width,
+                             entry_slot, entries)
+                        )
+                    pos = end
+                    rows, row = patched, (filled, take, width, slot, base)
+                else:  # _DELTA; width code 0 is a fixed delta
+                    if signed:
+                        base, pos = read_vslong(data, pos + 2)
                     else:
-                        width = decode_bit_width(width_code)
-                        nb = bitpack.packed_size(count - 2, width)
-                        rest = bitpack.unpack(data[pos : pos + nb], count - 2, width)
-                        pos += nb
-                        deltas = np.empty(count - 1, dtype=I64)
-                        deltas[0] = delta0
-                        sign = -1 if delta0 < 0 else 1
-                        deltas[1:] = sign * rest.view(I64)
-                        seg[1:] = np.int64(base) + np.cumsum(deltas, dtype=I64)
-                take = min(count, n - filled)
-                out[filled : filled + take] = seg[:take]
-                filled += take
-    except (IndexError, ValueError) as exc:  # a read past the end
-        raise _truncated(filled, n) from exc
-    if pos > len(data):  # a SHORT_REPEAT value cut short
+                        u, pos = read_vulong(data, pos + 2)
+                        base = to_signed64(u)
+                    delta0, pos = read_vslong(data, pos)
+                    if code and count > 2:
+                        slot, pos = queue(pos, count - 2, width, lead=True)
+                        rows, row = delta, (filled, take, width, slot, base, delta0)
+                    else:
+                        rows, row = repeat, (filled, take, base, delta0)
+            if pos > size:
+                break
+            rows.append(row)
+            filled += take
+    except IndexError:  # a header read past the end
+        pass
+    if filled < n:
         raise _truncated(filled, n)
-    return out
+    return pools, repeat, direct, patched, patches, delta
 
 
 def _truncated(filled: int, n: int) -> ValueError:
     return ValueError(f"RLEv2 stream truncated: data ends after {filled} of {n} values")
+
+
+def _ranges(starts, lens) -> np.ndarray:
+    """Indices of the ranges ``[starts[k], starts[k] + lens[k])``, concatenated."""
+    lens = np.asarray(lens)
+    ends = np.cumsum(lens)
+    return np.arange(ends[-1]) + np.repeat(np.asarray(starts) - (ends - lens), lens)
+
+
+def _payloads(pool: np.ndarray, start: np.ndarray, runs: list, lead: int = 0) -> np.ndarray:
+    """The values taken from each run's payload, in run order, starting
+    ``lead`` places before its slot: a view of ``pool`` when they lie back
+    to back in it (one run; or runs queued one after another in one width's
+    pool, each but the last a whole number of 8-value groups), else a
+    gathered copy."""
+    if len(runs) == 1:
+        _, take, width, slot = runs[0][:4]
+        s = int(start[width]) + slot - lead
+        return pool[s : s + take]
+    _, takes, widths, slots = list(zip(*runs))[:4]
+    lens = np.array(takes)
+    ends = np.cumsum(lens)
+    shift = np.array(slots) + start[list(widths)] - (ends - lens + lead)
+    if (shift == shift[0]).all():
+        return pool[shift[0] : shift[0] + ends[-1]]
+    return pool[np.arange(ends[-1]) + np.repeat(shift, lens)]
+
+
+def _repeated(runs: list) -> np.ndarray:
+    """SHORT_REPEAT and fixed-DELTA runs: ``first + j * step`` for the j-th
+    value of a run."""
+    if len(runs) == 1:
+        _, take, first, step = runs[0]
+        if step:
+            return np.arange(take, dtype=I64) * step + first
+        return np.full(take, first, dtype=I64)
+    _, takes, firsts, steps = zip(*runs)
+    vals = np.repeat(np.array(firsts, dtype=I64), takes)
+    if any(steps):
+        lens = np.asarray(takes)
+        j = np.arange(vals.size) - np.repeat(np.cumsum(lens) - lens, lens)
+        j *= np.repeat(np.array(steps, dtype=I64), lens)
+        vals += j
+    return vals
+
+
+def _patched(pool: np.ndarray, start: np.ndarray, runs: list, patches: list) -> np.ndarray:
+    """PATCHED_BASE runs: the data values with each run's patches ORed in
+    above its data width, plus the run's base."""
+    br = _payloads(pool, start, runs)
+    if patches:
+        br = br.copy()  # the patches must not land in the pool
+        which, count, patch_w, entry_w, entry_slot, entries = zip(*patches)
+        ne = np.asarray(entries)
+        ent = pool[_ranges(np.array(entry_slot) + start[list(entry_w)], ne)]
+        pw = np.repeat(np.array(patch_w, dtype=U64), ne)
+        gap = ent >> pw
+        patch = ent & ((U64(1) << pw) - U64(1))
+        # an entry's value index in its run: the run's gaps summed up to it
+        first = np.cumsum(ne) - ne
+        at = np.cumsum(gap.view(I64))
+        at -= np.repeat(at[first] - gap[first].view(I64), ne)
+        live = patch != 0
+        beyond = live & (at >= np.repeat(np.asarray(count), ne))
+        if beyond.any():
+            e = int(np.flatnonzero(beyond)[0])
+            k = int(np.searchsorted(first, e, "right")) - 1
+            raise ValueError(
+                f"RLEv2 PATCHED_BASE patch at value {int(at[e])} past its run of "
+                f"{count[k]} (the run at value {runs[which[k]][0]})"
+            )
+        # a partial read keeps only the patches inside the values taken
+        _, takes, widths = list(zip(*runs))[:3]
+        takes = np.asarray(takes)
+        which = np.asarray(which)
+        keep = live & (at < np.repeat(takes[which], ne))
+        run = np.repeat(which, ne)[keep]
+        shift = np.array(widths, dtype=U64)[run]
+        at = at[keep] + (np.cumsum(takes) - takes)[run]
+        np.bitwise_or.at(br, at, patch[keep] << shift)
+    if len(runs) == 1:
+        return (br + U64(runs[0][4] & _MASK64)).view(I64)
+    _, takes, _, _, bases = zip(*runs)
+    return (br + np.repeat(np.array(bases, dtype=I64).view(U64), takes)).view(I64)
+
+
+def _delta(pool: np.ndarray, start: np.ndarray, runs: list) -> np.ndarray:
+    """Variable-DELTA runs: one cumulative sum over every run's steps that
+    restarts at each run's first value.
+
+    The payload holds |delta| from a run's third value on, so the gather
+    starts two places before each slot (every DELTA slot is at least 8,
+    see :func:`_scan`); those two places get the first value and the first
+    delta, whose sign is every delta's sign."""
+    steps = _payloads(pool, start, runs, lead=2).view(I64)
+    if len(runs) == 1:
+        first, delta0 = runs[0][4:]
+        steps = -steps if delta0 < 0 else steps.copy()
+        steps[0] = first
+        if steps.size > 1:
+            steps[1] = delta0
+        return np.cumsum(steps, out=steps)
+    _, takes, _, _, firsts, deltas = zip(*runs)
+    lens = np.asarray(takes)
+    at = np.cumsum(lens) - lens
+    d0 = np.array(deltas, dtype=I64)
+    if (d0 < 0).any():
+        steps = steps * np.repeat(np.where(d0 < 0, -1, 1), lens)
+    else:
+        steps = steps.copy()  # may be a view of the pool
+    base = np.array(firsts, dtype=I64)
+    steps[at] = base
+    two = lens > 1
+    steps[at[two] + 1] = d0[two]
+    np.cumsum(steps, out=steps)
+    steps -= np.repeat(steps[at] - base, lens)
+    return steps

@@ -67,6 +67,13 @@ def test_rlev2_multichunk_mixed(pieces, n, signed, aligned, seed):
     runs, narrow noise and sparse outliers (every sub-encoding, chunk
     boundaries inside and between runs) round-trip, and encoding is
     deterministic."""
+    v = _mixed_values(pieces, n, seed)
+    enc = rlev2.encode(v, signed=signed, aligned=aligned)
+    assert rlev2.encode(v.copy(), signed=signed, aligned=aligned) == enc
+    assert np.array_equal(rlev2.decode(enc, n, signed=signed), v)
+
+
+def _mixed_values(pieces, n: int, seed: int) -> np.ndarray:
     rng = np.random.default_rng(seed)
     parts = []
     for kind, m, base, k in pieces:
@@ -80,10 +87,25 @@ def test_rlev2_multichunk_mixed(pieces, n, signed, aligned, seed):
             v = rng.integers(0, 64, m)
             v[rng.random(m) < 0.03] = base
             parts.append(v)
-    v = np.resize(np.concatenate(parts).astype(np.int64), n)
+    return np.resize(np.concatenate(parts).astype(np.int64), n)
+
+
+@_FAST
+@given(
+    st.lists(_piece, min_size=1, max_size=12),
+    st.integers(min_value=513, max_value=5000),
+    st.booleans(),
+    st.booleans(),
+    st.integers(min_value=0, max_value=2**32 - 1),
+    st.floats(min_value=0.0, max_value=1.0),
+)
+def test_rlev2_multichunk_prefix_decode(pieces, n, signed, aligned, seed, frac):
+    """Decoding the first ``k`` values of a mixed multi-chunk stream, for a
+    random ``k`` that may end inside any run, returns exactly ``v[:k]``."""
+    v = _mixed_values(pieces, n, seed)
+    k = int(frac * n)
     enc = rlev2.encode(v, signed=signed, aligned=aligned)
-    assert rlev2.encode(v.copy(), signed=signed, aligned=aligned) == enc
-    assert np.array_equal(rlev2.decode(enc, n, signed=signed), v)
+    assert np.array_equal(rlev2.decode(enc, k, signed=signed), v[:k])
 
 
 @_FAST

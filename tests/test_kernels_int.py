@@ -117,6 +117,25 @@ def test_bitpack_empty_and_single():
     assert np.array_equal(bitpack.unpack(bitpack.pack(one, 3), 1, 3), one)
 
 
+@pytest.mark.parametrize("width", range(1, 65))
+def test_bitpack_unpack_sizes_at_every_width(width):
+    """Every size around the 8-value group and both sides of
+    ``WORD_UNPACK_MIN``, unpacked from bytes and from a memoryview that
+    ends exactly at the packed size (with 0xFF bytes after it that a read
+    past the view would pick up)."""
+    rng = np.random.default_rng(width)
+    for n in (1, 7, 8, 9, 512, 75_000):
+        vals = rng.integers(0, 2**63, n, dtype=np.uint64) * U64(2) + rng.integers(
+            0, 2, n, dtype=np.uint64
+        )
+        vals >>= U64(64 - width)
+        packed = bitpack.pack(vals, width)
+        assert len(packed) == bitpack.packed_size(n, width)
+        assert np.array_equal(bitpack.unpack(packed, n, width), vals), n
+        view = memoryview(packed + b"\xff" * 16)[: len(packed)]
+        assert np.array_equal(bitpack.unpack(view, n, width), vals), n
+
+
 # ---------------------------------------------------------------------------
 # byterle / bitfield
 # ---------------------------------------------------------------------------
@@ -247,6 +266,53 @@ def test_rlev2_patch_gap_over_255():
     vals[0] = 2**30
     vals[500] = 2**30  # gap 500 needs a 255-filler patch entry
     _rt(vals)
+
+
+def _patched_base_run(data: np.ndarray, base: int, entries: list) -> bytes:
+    """A PATCHED_BASE run written by hand: ``data`` at 4 bits, a one-byte
+    base, 4-bit patches and 8-bit gaps (12-bit entries)."""
+    count = data.size
+    header = bytes(
+        (
+            2 << 6 | encode_bit_width(4) << 1 | (count - 1) >> 8,
+            (count - 1) & 0xFF,
+            0 << 5 | encode_bit_width(4),  # 1 base byte, patch width 4
+            (8 - 1) << 5 | len(entries),  # gap width 8
+            base,
+        )
+    )
+    ent = np.array([gap << 4 | patch for gap, patch in entries], dtype=U64)
+    return header + bitpack.pack(data.astype(U64), 4) + bitpack.pack(ent, 12)
+
+
+def test_rlev2_patch_past_its_run_raises():
+    """A patch gap that points past its PATCHED_BASE run raises a
+    ``ValueError`` naming the position and the run length, instead of
+    ORing the patch into a later run's value."""
+    data = np.arange(100) % 16
+    second = rlev2.encode(np.arange(50, dtype=I64), signed=False)
+    good = _patched_base_run(data, 7, [(10, 5), (40, 3)]) + second
+    expect = data + 7
+    expect[10] += 5 << 4
+    expect[50] += 3 << 4
+    expect = np.concatenate((expect, np.arange(50)))
+    assert np.array_equal(rlev2.decode(good, 150, signed=False), expect)
+    # a partial read drops the patches beyond the values taken
+    assert np.array_equal(rlev2.decode(good, 30, signed=False), expect[:30])
+    # bump the last gap: that patch now sits at value 250 of a 100-value run
+    bad = _patched_base_run(data, 7, [(10, 5), (240, 3)]) + second
+    for n in (100, 150):
+        with pytest.raises(ValueError, match="patch at value 250 past its run of 100"):
+            rlev2.decode(bad, n, signed=False)
+
+
+@pytest.mark.parametrize("n", [10**6, 10**11])
+def test_rlev2_count_beyond_the_data_raises_before_allocating(n):
+    """A count far past what the stream holds raises the truncation error
+    (the output is sized from the run headers, not from ``n``)."""
+    blob = rlev2.encode(RNG.integers(0, 1000, 100, dtype=np.int64), signed=False)
+    with pytest.raises(ValueError, match="truncated"):
+        rlev2.decode(blob, n, signed=False)
 
 
 def test_rlev2_null_dense_pattern():

@@ -80,6 +80,72 @@ def test_read_spark_java_written_orc(spark, tmp_path, comp):
     assert got.num_rows == 4000
 
 
+def _java_rlev2_table(n: int) -> pa.Table:
+    """Integer columns shaped to draw each RLEv2 sub-encoding from the
+    reference Java writer in the middle of a stream."""
+    rng = np.random.default_rng(47)
+    # repeats of 3-10 between random values: SHORT_REPEAT mid-stream
+    parts = []
+    while sum(p.size for p in parts) < n:
+        parts.append(rng.integers(-(10**6), 10**6, int(rng.integers(1, 6))))
+        parts.append(np.full(int(rng.integers(3, 11)), rng.integers(-(10**6), 10**6)))
+    repeats = np.concatenate(parts)[:n]
+    # 512-value chunks of small values with several outliers, two of them
+    # more than 255 values apart: PATCHED_BASE with gap filler entries
+    outliers = rng.integers(0, 100, n)
+    for start in range(0, n, 512):
+        for at in (3, 40, 300, 470):
+            if start + at < n:
+                outliers[start + at] = int(rng.integers(1 << 28, 1 << 36))
+    # descending ramps, fixed and jittered steps: negative DELTA runs
+    parts = []
+    while sum(p.size for p in parts) < n:
+        m = int(rng.integers(20, 700))
+        top = int(rng.integers(0, 10**9))
+        if rng.random() < 0.5:
+            parts.append(top - int(rng.integers(1, 50)) * np.arange(m))
+        else:
+            parts.append(top - np.cumsum(rng.integers(1, 1000, m)))
+    ramps = np.concatenate(parts)[:n]
+    full = rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64, endpoint=True)
+    return pa.table(
+        {
+            "repeats": pa.array(repeats, pa.int64()),
+            "outliers": pa.array(outliers, pa.int64()),
+            "ramps": pa.array(ramps, pa.int64()),
+            "full": pa.array(full, pa.int64()),
+        }
+    )
+
+
+def test_read_spark_java_written_rlev2_sub_encodings(spark, tmp_path):
+    """The reference Java writer's mid-stream SHORT_REPEAT runs (repeats of
+    3-10, which sparc's own writer never emits mid-stream), PATCHED_BASE
+    runs with gaps over 255, negative DELTA runs and full-range DIRECT
+    runs decode like pyarrow's reader, whole and one row group at a time."""
+    import pyarrow.parquet as pq
+
+    n = 25_000
+    t = _java_rlev2_table(n)
+    src = str(tmp_path / "ints.parquet")
+    pq.write_table(t, src)
+    out = str(tmp_path / "orc_ints")
+    (
+        spark.read.parquet(src)
+        .coalesce(1)
+        .write.mode("overwrite")
+        .option("compression", "zstd")
+        .orc(out)
+    )
+    path = glob.glob(out + "/part-*.orc")[0]
+    got = _assert_same_as_pyarrow(path)
+    assert got.select(t.column_names).equals(t)
+    stride = 10_000  # orc-core's default row index stride
+    for g in range((n + stride - 1) // stride):
+        rows = orcread.read_orc_row_groups(path, [g])
+        assert rows.select(t.column_names).equals(t.slice(g * stride, stride)), g
+
+
 def test_read_java_written_v011_rlev1(spark, tmp_path):
     """v0.11 ingest: the reference Java writer in 0.11 mode emits
     DIRECT/DICTIONARY (RLEv1) streams — our reader must dispatch on the

@@ -685,6 +685,32 @@ def test_rlev2_cuts_match_per_group_golden(monkeypatch, batch):
         assert h.hexdigest() == GOLDEN[f"lineitem/{col}/rowgroups"], col
 
 
+def _prefix_decode_mismatches(cases) -> list[str]:
+    bad = []
+    for name, v, signed, aligned in cases:
+        for part in v if isinstance(v, list) else [v]:
+            blob = rlev2.encode(part, signed, aligned)
+            for k in {1, 511, 512, 513, part.size - 1, part.size}:
+                if 0 <= k <= part.size and not np.array_equal(
+                    rlev2.decode(blob, k, signed), part[:k]
+                ):
+                    bad.append(f"{name}[:{k}]")
+    return bad
+
+
+def test_rlev2_prefix_decodes_of_golden_inputs():
+    """Every golden input decodes back from its stream, whole and cut
+    short: around the 512-value scope and one value short of the end."""
+    bad = _prefix_decode_mismatches(_cases())
+    assert not bad, f"{len(bad)} prefix decodes differ: {bad[:10]}"
+
+
+@pytest.mark.skipif(not os.path.exists(LINEITEM), reason="sf0.1 testdata absent")
+def test_rlev2_prefix_decodes_of_lineitem_inputs():
+    bad = _prefix_decode_mismatches(_lineitem_cases())
+    assert not bad, f"prefix decodes differ: {bad[:10]}"
+
+
 if __name__ == "__main__":
     cases = list(_cases())
     if os.path.exists(LINEITEM):
