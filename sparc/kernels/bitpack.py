@@ -5,24 +5,24 @@ Semantics mirror the reference's ``SerializationUtils.writeInts/readInts``
 written MSB-first into a contiguous big-endian bit stream, padded with zero
 bits to a byte boundary.  Implementation is numpy, not an unrolled-loop port:
 
-- widths 8/16/32/64 are a cast to or from a big-endian unit of that size,
-  and 24/40/48/56 are byte slices of the big-endian 8-byte image;
-- ``pack`` at other widths scales each value's bits to the top of the
-  narrowest big-endian unit that holds them and re-packs only those bit
-  columns;
-- ``unpack`` at other widths up to 57 bits uses strided word loads.
+- widths 8/16/32/64 are a cast to or from a big-endian unit of that size;
+- ``pack`` takes 24/40/48/56 as byte slices of the big-endian 8-byte image,
+  and at other widths scales each value's bits to the top of the narrowest
+  big-endian unit that holds them and re-packs only those bit columns;
+- ``unpack`` at any other width up to 57 bits uses strided word loads.
   Eight values of ``w`` bits fill exactly ``w`` bytes, so value ``i`` of
   every 8-value group starts at the same byte and bit offset, ``i*w // 8``
   and ``i*w % 8``, of its group.  One strided view of the group-aligned
   bytes reads, for every value, the 8-byte big-endian word at its byte
-  offset (``bit % 8 + w <= 64``, so the word holds the whole value).  A
+  offset (``i*w % 8 + w <= 64``, so the word holds the whole value).  A
   multiply by ``2**(i*w % 8)`` per lane drops the bits before the value and
-  one scalar right shift by ``64 - w`` drops those after it.  The loads run
+  one scalar right shift by ``64 - w`` drops those after it (at whole-byte
+  widths every offset is 0 and the view is one-dimensional).  The loads run
   over a zero-padded copy of the input, so the last group never reads past
   the caller's buffer.  The cost is a few numpy calls per ``unpack``, with
   no per-value bit matrix.  Below ``WORD_UNPACK_MIN`` values (and above 57
-  bits) the ``(n, 64)`` bit matrix has the lower fixed cost and is used
-  instead.
+  bits) an ``(n, 8)`` byte matrix (whole-byte widths) or an ``(n, 64)`` bit
+  matrix has the lower fixed cost and is used instead.
 """
 
 from __future__ import annotations
@@ -73,23 +73,29 @@ def unpack(data: bytes | memoryview, n: int, width: int) -> np.ndarray:
     if n == 0 or width == 0:
         return np.zeros(n, dtype=U64)
     nbytes = (n * width + 7) // 8
-    raw = np.frombuffer(data, dtype=np.uint8, count=nbytes)
+    if len(data) < nbytes:
+        raise ValueError(f"bitpack: {len(data)} bytes hold fewer than {n} values")
     if width in (8, 16, 32, 64):
-        return raw.view(f">u{width // 8}").astype(U64)
-    if width % 8 == 0:
+        return np.frombuffer(data, dtype=f">u{width // 8}", count=n).astype(U64)
+    if n < WORD_UNPACK_MIN and width % 8 == 0:
         nb = width // 8
         be = np.zeros((n, 8), dtype=np.uint8)
-        be[:, 8 - nb :] = raw.reshape(n, nb)
+        be[:, 8 - nb :] = np.frombuffer(data, dtype=np.uint8, count=nbytes).reshape(n, nb)
         return be.view(">u8").reshape(n).astype(U64)
     if n < WORD_UNPACK_MIN or width > 57:
+        raw = np.frombuffer(data, dtype=np.uint8, count=nbytes)
         bits = np.unpackbits(raw)[: n * width].reshape(n, width)
         full = np.zeros((n, 64), dtype=np.uint8)
         full[:, 64 - width :] = bits
         return np.packbits(full, axis=1).view(">u8").reshape(n).astype(U64)
     groups = (n + 7) // 8
-    # whole groups plus the 8 bytes the last lane's word may span
-    buf = np.zeros(groups * width + 8, dtype=np.uint8)
-    buf[:nbytes] = raw
+    # the packed bytes padded to whole groups plus the 8 bytes the last
+    # value's word may span
+    buf = bytes(data[:nbytes]) + bytes(groups * width + 8 - nbytes)
+    if width % 8 == 0:  # value i's word starts at byte i*width/8
+        out = np.ndarray(n, ">u8", buf, strides=(width // 8,)).astype(U64)
+        out >>= U64(64 - width)
+        return out
     lanes = (7 * width) // 8 + 1  # byte offsets a lane can start at
     words = np.ndarray((groups, lanes), ">u8", buf, strides=(width, 1))
     out = np.empty((groups, 8), dtype=U64)

@@ -559,11 +559,12 @@ def _pack_pieces(pieces: list) -> list:
 # decode
 # ---------------------------------------------------------------------------
 
+
 _WIDTH = tuple(decode_bit_width(code) for code in range(32))
 _CLOSEST = tuple(CLOSEST_FIXED_BITS.tolist())
 _ZERO_BYTES = bytes(64)
 _MASK64 = (1 << 64) - 1
-_NO_START = np.zeros(65, dtype=np.int64)  # one pool: every width starts at 0
+_NO_START = (0,) * 65  # one width: its values start at 0
 
 
 def decode(data: bytes | memoryview, n: int, signed: bool) -> np.ndarray:
@@ -586,33 +587,35 @@ def decode(data: bytes | memoryview, n: int, signed: bool) -> np.ndarray:
         return np.empty(0, dtype=I64)
     # each width's values, one unpack per width, laid end to end;
     # start[w] is where width w's values begin
-    values = [bitpack.unpack(b"".join(p), size, w) for w, (p, size, _) in pools.items()]
-    if len(values) > 1:
-        start = np.zeros(65, dtype=np.int64)
-        start[list(pools)] = np.cumsum([0] + [v.size for v in values[:-1]])
-        pool = np.concatenate(values)
+    if len(pools) == 1:
+        ((w, (pieces, size, _)),) = pools.items()
+        pool, start = bitpack.unpack(b"".join(pieces), size, w), _NO_START
     else:
-        start = _NO_START
-        pool = values[0] if values else None
-    parts = []  # (runs, values in run order)
+        start, values, total = [0] * 65, [], 0
+        for w, (pieces, size, _) in pools.items():
+            start[w] = total
+            total += size
+            values.append(bitpack.unpack(b"".join(pieces), size, w))
+        pool = np.concatenate(values) if values else None
+    parts = []  # (offsets, taken, values) per sub-encoding
     if direct:
-        z = _payloads(pool, start, direct)
-        parts.append((direct, zigzag_decode(z) if signed else z.view(I64)))
+        runs = _runs(direct, 4)
+        z = _payloads(pool, start, runs)
+        parts.append((runs[0], runs[1], zigzag_decode(z) if signed else z.view(I64)))
     if patched:
-        parts.append((patched, _patched(pool, start, patched, patches)))
+        parts.append(_patched(pool, start, _runs(patched, 5), patches))
     if repeat:
-        parts.append((repeat, _repeated(repeat)))
+        parts.append(_repeated(_runs(repeat, 4)))
     if delta:
-        parts.append((delta, _delta(pool, start, delta)))
+        parts.append(_delta(pool, start, _runs(delta, 6)))
     if len(parts) == 1:
-        return parts[0][1]
+        return parts[0][2]
     out = np.empty(n, dtype=I64)
-    for runs, vals in parts:
-        if len(runs) == 1:
-            out[runs[0][0] : runs[0][0] + runs[0][1]] = vals
+    for at, take, vals in parts:
+        if np.ndim(at):
+            out[_ranges(at, take)] = vals
         else:
-            offsets, takes = list(zip(*runs))[:2]
-            out[_ranges(offsets, takes)] = vals
+            out[at : at + take] = vals
     return out
 
 
@@ -622,15 +625,16 @@ def _scan(data: bytes, n: int, signed: bool) -> tuple:
     This is the only Python loop over runs; it reads the headers that
     ``RunLengthIntegerReaderV2.java:87-316`` reads.
 
-    Returns ``pools`` (width -> [queued payloads, values, bytes]) and,
-    per kind, one row per run that starts with the run's offset in the
-    output and the number of values taken from it:
+    Returns ``pools`` (width -> [queued payloads, values, bytes]) and, per
+    kind, a flat list of one row per run that starts with the run's offset
+    in the output and the number of values taken from it:
 
     - ``repeat``: SHORT_REPEAT and fixed DELTA, ``(.., first value, step)``
     - ``direct``: ``(.., width, slot)``
     - ``patched``: PATCHED_BASE, ``(.., width, slot, base)``
-    - ``patches``: PATCHED_BASE runs with a nonzero patch entry, ``(row in
-      patched, run length, patch width, entry width, entry slot, entries)``
+    - ``patches``: ``(index, value)`` of every patch inside the values
+      taken, as an index into the PATCHED_BASE values and the patch bits
+      already shifted above the run's data width
     - ``delta``: variable DELTA, ``(.., width, slot, first value, first
       delta)``
 
@@ -659,31 +663,35 @@ def _scan(data: bytes, n: int, signed: bool) -> tuple:
         pool[2] = slot * width // 8 + end - start
         return slot, end
 
+    # the loop is the cost floor of a stream of short runs: locals only
+    add_repeat, add_direct, add_patched = repeat.extend, direct.extend, patched.extend
+    from_bytes = int.from_bytes
     size = len(data)
-    pos = filled = 0
+    pos = filled = patched_taken = 0
     try:
         while filled < n:
             header = data[pos]
             mode = header >> 6
             if mode == _SHORT_REPEAT:
                 nbytes = ((header >> 3) & 0x7) + 1
-                take = min((header & 0x7) + MIN_REPEAT, n - filled)
-                u = int.from_bytes(data[pos + 1 : pos + 1 + nbytes], "big")
+                take = (header & 0x7) + MIN_REPEAT
+                if take > n - filled:
+                    take = n - filled
+                u = from_bytes(data[pos + 1 : pos + 1 + nbytes], "big")
                 pos += 1 + nbytes
-                value = ((u >> 1) ^ -(u & 1)) if signed else to_signed64(u)
-                rows, row = repeat, (filled, take, value, 0)
+                add_repeat((filled, take, (u >> 1) ^ -(u & 1) if signed else to_signed64(u), 0))
             else:
                 count = (((header & 1) << 8) | data[pos + 1]) + 1
-                take = min(count, n - filled)
+                take = count if count <= n - filled else n - filled
                 code = (header >> 1) & 0x1F
                 width = _WIDTH[code]
                 if mode == _DIRECT:
                     slot, pos = queue(pos + 2, count, width)
-                    rows, row = direct, (filled, take, width, slot)
+                    add_direct((filled, take, width, slot))
                 elif mode == _PATCHED_BASE:
                     b3, b4 = data[pos + 2], data[pos + 3]
                     base_bytes = (b3 >> 5) + 1
-                    field = int.from_bytes(data[pos + 4 : pos + 4 + base_bytes], "big")
+                    field = from_bytes(data[pos + 4 : pos + 4 + base_bytes], "big")
                     sign = 1 << (8 * base_bytes - 1)
                     base = -(field ^ sign) if field & sign else field
                     slot, pos = queue(pos + 4 + base_bytes, count, width)
@@ -692,8 +700,11 @@ def _scan(data: bytes, n: int, signed: bool) -> tuple:
                     entries = b4 & 0x1F
                     entry_width = _CLOSEST[min(gap_width + patch_width, 64)]
                     end = pos + (entries * entry_width + 7) // 8
-                    # all-zero entries patch nothing (a pure frame-of-reference
-                    # run carries one), so only the others are queued
+                    if end > size:
+                        break
+                    # the (gap, patch) entries are read here too: at most 31
+                    # a run, and all-zero ones (a pure frame-of-reference
+                    # run carries one) patch nothing
                     if data[pos:end].count(0) < end - pos:
                         if width + patch_width > 64 or gap_width + patch_width > 64:
                             raise ValueError(
@@ -701,13 +712,14 @@ def _scan(data: bytes, n: int, signed: bool) -> tuple:
                                 f"width {width}, patch width {patch_width} and gap "
                                 f"width {gap_width} overflow a 64-bit value"
                             )
-                        entry_slot, _ = queue(pos, entries, entry_width)
-                        patches.append(
-                            (len(patched), count, patch_width, entry_width,
-                             entry_slot, entries)
+                        _read_patches(
+                            from_bytes(data[pos:end], "big"), entries, entry_width,
+                            patch_width, width, count, take, filled, patched_taken,
+                            patches,
                         )
+                    patched_taken += take
                     pos = end
-                    rows, row = patched, (filled, take, width, slot, base)
+                    add_patched((filled, take, width, slot, base))
                 else:  # _DELTA; width code 0 is a fixed delta
                     if signed:
                         base, pos = read_vslong(data, pos + 2)
@@ -717,12 +729,11 @@ def _scan(data: bytes, n: int, signed: bool) -> tuple:
                     delta0, pos = read_vslong(data, pos)
                     if code and count > 2:
                         slot, pos = queue(pos, count - 2, width, lead=True)
-                        rows, row = delta, (filled, take, width, slot, base, delta0)
+                        delta += (filled, take, width, slot, base, delta0)
                     else:
-                        rows, row = repeat, (filled, take, base, delta0)
-            if pos > size:
+                        add_repeat((filled, take, base, delta0))
+            if pos > size:  # the run's bytes end past the data
                 break
-            rows.append(row)
             filled += take
     except IndexError:  # a header read past the end
         pass
@@ -731,95 +742,101 @@ def _scan(data: bytes, n: int, signed: bool) -> tuple:
     return pools, repeat, direct, patched, patches, delta
 
 
+def _read_patches(
+    bits: int, entries: int, entry_width: int, patch_width: int, width: int,
+    count: int, take: int, filled: int, offset: int, patches: list,
+) -> None:
+    """Append ``(offset + position, patch << width)`` for every nonzero
+    patch among a PATCHED_BASE run's packed ``entries`` (``bits``, MSB
+    first, padded to a byte) that lies in the run's first ``take`` values.
+    Each entry's gap counts from the previous entry (the first from the
+    run's start); a patch past the run raises ``ValueError``."""
+    bits >>= -(entries * entry_width) % 8
+    entry_mask, mask = (1 << entry_width) - 1, (1 << patch_width) - 1
+    at = 0
+    for shift in range((entries - 1) * entry_width, -1, -entry_width):
+        entry = (bits >> shift) & entry_mask
+        at += entry >> patch_width
+        if entry & mask:
+            if at >= count:
+                raise ValueError(
+                    f"RLEv2 PATCHED_BASE patch at value {at} past its run of "
+                    f"{count} (the run at value {filled})"
+                )
+            if at >= take:  # past a partial read's last value
+                continue
+            if patches and patches[-1][0] == offset + at:  # a zero gap: OR both
+                patches[-1] = (offset + at, patches[-1][1] | (entry & mask) << width)
+            else:
+                patches.append((offset + at, (entry & mask) << width))
+
+
 def _truncated(filled: int, n: int) -> ValueError:
     return ValueError(f"RLEv2 stream truncated: data ends after {filled} of {n} values")
 
 
+def _runs(rows: list, k: int):
+    """A kind's columns from its flat rows of ``k`` fields: the list of
+    fields itself for one run, else one int64 array per field."""
+    if len(rows) == k:
+        return rows
+    return np.array(rows, dtype=np.int64).reshape(-1, k).T
+
+
 def _ranges(starts, lens) -> np.ndarray:
     """Indices of the ranges ``[starts[k], starts[k] + lens[k])``, concatenated."""
-    lens = np.asarray(lens)
     ends = np.cumsum(lens)
-    return np.arange(ends[-1]) + np.repeat(np.asarray(starts) - (ends - lens), lens)
+    return np.arange(ends[-1]) + np.repeat(starts - (ends - lens), lens)
 
 
-def _payloads(pool: np.ndarray, start: np.ndarray, runs: list, lead: int = 0) -> np.ndarray:
+def _payloads(pool: np.ndarray, start, runs, lead: int = 0) -> np.ndarray:
     """The values taken from each run's payload, in run order, starting
     ``lead`` places before its slot: a view of ``pool`` when they lie back
     to back in it (one run; or runs queued one after another in one width's
     pool, each but the last a whole number of 8-value groups), else a
     gathered copy."""
-    if len(runs) == 1:
-        _, take, width, slot = runs[0][:4]
-        s = int(start[width]) + slot - lead
+    take, width, slot = runs[1], runs[2], runs[3]
+    if isinstance(runs, list):
+        s = start[width] + slot - lead
         return pool[s : s + take]
-    _, takes, widths, slots = list(zip(*runs))[:4]
-    lens = np.array(takes)
-    ends = np.cumsum(lens)
-    shift = np.array(slots) + start[list(widths)] - (ends - lens + lead)
+    ends = np.cumsum(take)
+    shift = slot + np.array(start)[width] - (ends - take + lead)
     if (shift == shift[0]).all():
         return pool[shift[0] : shift[0] + ends[-1]]
-    return pool[np.arange(ends[-1]) + np.repeat(shift, lens)]
+    return pool[np.arange(ends[-1]) + np.repeat(shift, take)]
 
 
-def _repeated(runs: list) -> np.ndarray:
+def _repeated(runs) -> tuple:
     """SHORT_REPEAT and fixed-DELTA runs: ``first + j * step`` for the j-th
     value of a run."""
-    if len(runs) == 1:
-        _, take, first, step = runs[0]
+    at, take, first, step = runs
+    if isinstance(runs, list):
         if step:
-            return np.arange(take, dtype=I64) * step + first
-        return np.full(take, first, dtype=I64)
-    _, takes, firsts, steps = zip(*runs)
-    vals = np.repeat(np.array(firsts, dtype=I64), takes)
-    if any(steps):
-        lens = np.asarray(takes)
-        j = np.arange(vals.size) - np.repeat(np.cumsum(lens) - lens, lens)
-        j *= np.repeat(np.array(steps, dtype=I64), lens)
+            return at, take, np.arange(take, dtype=I64) * step + first
+        return at, take, np.full(take, first, dtype=I64)
+    vals = np.repeat(first, take)
+    if step.any():
+        j = np.arange(vals.size) - np.repeat(np.cumsum(take) - take, take)
+        j *= np.repeat(step, take)
         vals += j
-    return vals
+    return at, take, vals
 
 
-def _patched(pool: np.ndarray, start: np.ndarray, runs: list, patches: list) -> np.ndarray:
+def _patched(pool: np.ndarray, start, runs, patches: list) -> tuple:
     """PATCHED_BASE runs: the data values with each run's patches ORed in
     above its data width, plus the run's base."""
+    at, take, _, _, base = runs
     br = _payloads(pool, start, runs)
     if patches:
         br = br.copy()  # the patches must not land in the pool
-        which, count, patch_w, entry_w, entry_slot, entries = zip(*patches)
-        ne = np.asarray(entries)
-        ent = pool[_ranges(np.array(entry_slot) + start[list(entry_w)], ne)]
-        pw = np.repeat(np.array(patch_w, dtype=U64), ne)
-        gap = ent >> pw
-        patch = ent & ((U64(1) << pw) - U64(1))
-        # an entry's value index in its run: the run's gaps summed up to it
-        first = np.cumsum(ne) - ne
-        at = np.cumsum(gap.view(I64))
-        at -= np.repeat(at[first] - gap[first].view(I64), ne)
-        live = patch != 0
-        beyond = live & (at >= np.repeat(np.asarray(count), ne))
-        if beyond.any():
-            e = int(np.flatnonzero(beyond)[0])
-            k = int(np.searchsorted(first, e, "right")) - 1
-            raise ValueError(
-                f"RLEv2 PATCHED_BASE patch at value {int(at[e])} past its run of "
-                f"{count[k]} (the run at value {runs[which[k]][0]})"
-            )
-        # a partial read keeps only the patches inside the values taken
-        _, takes, widths = list(zip(*runs))[:3]
-        takes = np.asarray(takes)
-        which = np.asarray(which)
-        keep = live & (at < np.repeat(takes[which], ne))
-        run = np.repeat(which, ne)[keep]
-        shift = np.array(widths, dtype=U64)[run]
-        at = at[keep] + (np.cumsum(takes) - takes)[run]
-        np.bitwise_or.at(br, at, patch[keep] << shift)
-    if len(runs) == 1:
-        return (br + U64(runs[0][4] & _MASK64)).view(I64)
-    _, takes, _, _, bases = zip(*runs)
-    return (br + np.repeat(np.array(bases, dtype=I64).view(U64), takes)).view(I64)
+        index, value = zip(*patches)  # each index once, see _read_patches
+        br[np.array(index)] |= np.array(value, dtype=U64)
+    if isinstance(runs, list):
+        return at, take, (br + U64(base & _MASK64)).view(I64)
+    return at, take, (br + np.repeat(base.view(U64), take)).view(I64)
 
 
-def _delta(pool: np.ndarray, start: np.ndarray, runs: list) -> np.ndarray:
+def _delta(pool: np.ndarray, start, runs) -> tuple:
     """Variable-DELTA runs: one cumulative sum over every run's steps that
     restarts at each run's first value.
 
@@ -827,26 +844,22 @@ def _delta(pool: np.ndarray, start: np.ndarray, runs: list) -> np.ndarray:
     starts two places before each slot (every DELTA slot is at least 8,
     see :func:`_scan`); those two places get the first value and the first
     delta, whose sign is every delta's sign."""
+    at, take, _, _, first, delta0 = runs
     steps = _payloads(pool, start, runs, lead=2).view(I64)
-    if len(runs) == 1:
-        first, delta0 = runs[0][4:]
+    if isinstance(runs, list):
         steps = -steps if delta0 < 0 else steps.copy()
         steps[0] = first
-        if steps.size > 1:
+        if take > 1:
             steps[1] = delta0
-        return np.cumsum(steps, out=steps)
-    _, takes, _, _, firsts, deltas = zip(*runs)
-    lens = np.asarray(takes)
-    at = np.cumsum(lens) - lens
-    d0 = np.array(deltas, dtype=I64)
-    if (d0 < 0).any():
-        steps = steps * np.repeat(np.where(d0 < 0, -1, 1), lens)
+        return at, take, np.cumsum(steps, out=steps)
+    run_start = np.cumsum(take) - take
+    if (delta0 < 0).any():
+        steps = steps * np.repeat(np.where(delta0 < 0, -1, 1), take)
     else:
         steps = steps.copy()  # may be a view of the pool
-    base = np.array(firsts, dtype=I64)
-    steps[at] = base
-    two = lens > 1
-    steps[at[two] + 1] = d0[two]
+    steps[run_start] = first
+    two = take > 1
+    steps[run_start[two] + 1] = delta0[two]
     np.cumsum(steps, out=steps)
-    steps -= np.repeat(steps[at] - base, lens)
-    return steps
+    steps -= np.repeat(steps[run_start] - first, take)
+    return at, take, steps

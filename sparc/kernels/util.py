@@ -35,10 +35,9 @@ def zigzag_encode(v: np.ndarray) -> np.ndarray:
 
 
 def zigzag_decode(z: np.ndarray) -> np.ndarray:
-    """uint64 zigzag -> int64: ``(z >> 1) ^ -(z & 1)``.  A shift by a scalar
-    costs what a multiply does (numpy 1.26); only shifts by an array of
-    counts are slow."""
-    z = np.ascontiguousarray(z, dtype=U64)
+    """uint64 array zigzag -> int64: ``(z >> 1) ^ -(z & 1)``.  A shift by a
+    scalar costs what a multiply does (numpy 1.26); only shifts by an array
+    of counts are slow."""
     sign = z & _ONE
     np.negative(sign, out=sign)
     out = z >> _ONE

@@ -299,6 +299,11 @@ def test_rlev2_patch_past_its_run_raises():
     assert np.array_equal(rlev2.decode(good, 150, signed=False), expect)
     # a partial read drops the patches beyond the values taken
     assert np.array_equal(rlev2.decode(good, 30, signed=False), expect[:30])
+    # a zero gap puts a second patch on the same value: both are ORed in
+    twice = _patched_base_run(data, 7, [(10, 5), (0, 3)])
+    expect = data + 7
+    expect[10] += (5 | 3) << 4
+    assert np.array_equal(rlev2.decode(twice, 100, signed=False), expect)
     # bump the last gap: that patch now sits at value 250 of a 100-value run
     bad = _patched_base_run(data, 7, [(10, 5), (240, 3)]) + second
     for n in (100, 150):
