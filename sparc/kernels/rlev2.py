@@ -564,7 +564,7 @@ _WIDTH = tuple(decode_bit_width(code) for code in range(32))
 _CLOSEST = tuple(CLOSEST_FIXED_BITS.tolist())
 _ZERO_BYTES = bytes(64)
 _MASK64 = (1 << 64) - 1
-_NO_START = (0,) * 65  # one width: its values start at 0
+_NO_START = np.zeros(65, dtype=np.int64)  # one width: its values start at 0
 
 
 def decode(data: bytes | memoryview, n: int, signed: bool) -> np.ndarray:
@@ -591,7 +591,7 @@ def decode(data: bytes | memoryview, n: int, signed: bool) -> np.ndarray:
         ((w, (pieces, size, _)),) = pools.items()
         pool, start = bitpack.unpack(b"".join(pieces), size, w), _NO_START
     else:
-        start, values, total = [0] * 65, [], 0
+        start, values, total = np.zeros(65, dtype=np.int64), [], 0
         for w, (pieces, size, _) in pools.items():
             start[w] = total
             total += size
@@ -783,10 +783,14 @@ def _runs(rows: list, k: int):
     return np.array(rows, dtype=np.int64).reshape(-1, k).T
 
 
-def _ranges(starts, lens) -> np.ndarray:
-    """Indices of the ranges ``[starts[k], starts[k] + lens[k])``, concatenated."""
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> slice | np.ndarray:
+    """Index of the ranges ``[starts[k], starts[k] + lens[k])``, concatenated:
+    a slice when they lie back to back, else an index array."""
     ends = np.cumsum(lens)
-    return np.arange(ends[-1]) + np.repeat(starts - (ends - lens), lens)
+    shift = starts - (ends - lens)
+    if (shift == shift[0]).all():
+        return slice(shift[0], shift[0] + ends[-1])
+    return np.arange(ends[-1]) + np.repeat(shift, lens)
 
 
 def _payloads(pool: np.ndarray, start, runs, lead: int = 0) -> np.ndarray:
@@ -797,13 +801,9 @@ def _payloads(pool: np.ndarray, start, runs, lead: int = 0) -> np.ndarray:
     gathered copy."""
     take, width, slot = runs[1], runs[2], runs[3]
     if isinstance(runs, list):
-        s = start[width] + slot - lead
+        s = int(start[width]) + slot - lead
         return pool[s : s + take]
-    ends = np.cumsum(take)
-    shift = slot + np.array(start)[width] - (ends - take + lead)
-    if (shift == shift[0]).all():
-        return pool[shift[0] : shift[0] + ends[-1]]
-    return pool[np.arange(ends[-1]) + np.repeat(shift, take)]
+    return pool[_ranges(slot + start[width] - lead, take)]
 
 
 def _repeated(runs) -> tuple:
