@@ -22,15 +22,16 @@ and a slice of that packed output, so numpy calls scale with segments, not
 chunks or values.
 
 Decode cost model, the mirror image: one Python pass reads the run headers
-(a few microseconds per run, the only per-run Python) and queues each
-payload under its bit width.  Each width's payloads are unpacked with one
-``bitpack.unpack`` call, and each sub-encoding present is assembled with
-vector ops over all of its runs: zigzag for DIRECT; for PATCHED_BASE, the
-patches ORed in at their summed gaps and the bases added; ``first + j*step``
-for SHORT_REPEAT and fixed DELTA; one cumulative sum that restarts at every
-run for variable DELTA.  So numpy calls scale with the widths and
-sub-encodings a stream holds, not with its runs or values, and a
-sub-encoding the stream lacks costs nothing.
+(about a microsecond per run, the only per-run Python) and queues each
+payload under its bit width; it also reads the PATCHED_BASE patch entries
+(at most 31 a run; a pure frame-of-reference run's zero entry is skipped).
+Each width's payloads are unpacked with one ``bitpack.unpack`` call, and
+each sub-encoding present is assembled with vector ops over all of its
+runs: zigzag for DIRECT; for PATCHED_BASE, one OR of every patch and the
+bases added; ``first + j*step`` for SHORT_REPEAT and fixed DELTA; one
+cumulative sum that restarts at every run for variable DELTA.  So numpy
+calls scale with the widths and sub-encodings a stream holds, not with its
+runs or values, and a sub-encoding the stream lacks costs nothing.
 
 All values are treated as two's-complement int64 (like the reference's
 ``long``); ``signed`` controls zigzag in SHORT_REPEAT/DIRECT and the base
@@ -52,7 +53,6 @@ from .util import (
     I64,
     U64,
     bits_required,
-    closest_fixed_bits,
     decode_bit_width,
     read_vslong,
     read_vulong,
