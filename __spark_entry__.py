@@ -671,7 +671,7 @@ def _prune_decode_documents(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     out = tempfile.mkdtemp(prefix="sparc_pdx_") + "/streams"
     encode_job.run_encode(
-        docs, out, key="doc_id", strategy="hash", n_stripes=4,
+        docs, out, key="doc_id", n_stripes=4,
         resume=False,
     )
     pred = ("and", ("between", "doc_id", 100, 199), ("not", ("is_null", "lang")))
@@ -705,7 +705,7 @@ def _neardata_agg_documents(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     out = tempfile.mkdtemp(prefix="sparc_nd_") + "/streams"
     encode_job.run_encode(
-        docs, out, key="doc_id", strategy="hash", n_stripes=4,
+        docs, out, key="doc_id", n_stripes=4,
         resume=False,
     )
 
@@ -759,7 +759,7 @@ def _stripe_prune_documents(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     out = tempfile.mkdtemp(prefix="sparc_prune_") + "/streams"
     encode_job.run_encode(
-        docs, out, key="doc_id", strategy="hash", n_stripes=4,
+        docs, out, key="doc_id", n_stripes=4,
         resume=False, bloom_columns=["lang"],
     )
     total = len(encode_job.completed_stripes(spark, out))
@@ -848,7 +848,7 @@ def _rowgroup_prune_events(spark, sf_dir):
     # stride 104 (multiple of 8, PRESENT byte alignment) so even the
     # sf0.001 fixture yields several row groups per stripe
     encode_job.run_encode(
-        ev, out, key="event_id", strategy="hash", n_stripes=2,
+        ev, out, key="event_id", n_stripes=2,
         sort_within=["event_id"], resume=False, row_index_stride=104,
     )
     total = ev.count()
@@ -1160,7 +1160,7 @@ def _schema_evolution_documents(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     out = tempfile.mkdtemp(prefix="sparc_evo_") + "/streams"
     encode_job.run_encode(
-        docs, out, key="doc_id", strategy="hash", n_stripes=2, resume=False
+        docs, out, key="doc_id", n_stripes=2, resume=False
     )
     return decode_job.run_decode(
         spark, out,
@@ -1191,11 +1191,11 @@ def _compact_roundtrip(spark, sf_dir):
     a, b, out = f"{base}/a", f"{base}/b", f"{base}/all"
     encode_job.run_encode(
         docs.filter(F.col("doc_id") % 2 == 0), a,
-        key="doc_id", strategy="hash", n_stripes=2, resume=False,
+        key="doc_id", n_stripes=2, resume=False,
     )
     encode_job.run_encode(
         docs.filter(F.col("doc_id") % 2 == 1), b,
-        key="doc_id", strategy="hash", n_stripes=2, resume=False,
+        key="doc_id", n_stripes=2, resume=False,
     )
     info = compact_job.compact(spark, [a, b], out)
     decoded = decode_job.run_decode(spark, out)

@@ -368,8 +368,6 @@ _WINDOW_FIELDS = [
     "pyscan_vs_reference_wall_xl",
     "pyscan_vs_reference_cpu_xl",
     "pyscan_vs_reference_user_cpu_xl",
-    "input_vs_reference_wall_xl",
-    "input_vs_reference_user_cpu_xl",
     "decode_vs_reference_wall_xl",
     "decode_vs_reference_wall_xxl",
     "decode_vs_reference_wall_sf",
@@ -408,8 +406,6 @@ _FIELD_LEGS = {
     "pyscan_vs_reference_wall_xl": ("pyscan", "ref"),
     "pyscan_vs_reference_cpu_xl": ("pyscan", "ref"),
     "pyscan_vs_reference_user_cpu_xl": ("pyscan", "ref"),
-    "input_vs_reference_wall_xl": ("input", "ref"),
-    "input_vs_reference_user_cpu_xl": ("input", "ref"),
     "encode_gbps_pyscan_xl": ("pyscan",),
     "ref_gbps_xl": ("ref",),
     "decode_vs_reference_wall_xl": ("decode_nd", "ref_read"),
@@ -443,7 +439,6 @@ _LEG_SYS_CEIL = {
 # excludes a ratio whichever side the degraded leg favors.
 _LEG_RATE_FIELD = {
     "pyscan": "encode_gbps_pyscan_xl",
-    "input": "encode_gbps_input_xl",
     "ref": "ref_gbps_xl",
     "decode_nd": "decode_neardata_gbps_xl",
     "decode_mat": "decode_gbps_xl",
@@ -688,36 +683,19 @@ def main() -> None:
     n_ab = int(os.environ.get("SPARC_BENCH_AB_ROUNDS", "3"))
 
     def run_ours(tag: str) -> str:
-        # hash strategy (content-addressed stripes, one full shuffle) —
-        # same stripe-file output as the input leg, so the hash-vs-input
-        # delta isolates the shuffle cost
+        # hash path (content-addressed stripes, one full shuffle) — same
+        # stripe-file output as the pyscan leg, so the hash-vs-pyscan
+        # delta is the JVM scan, the shuffle and the Arrow hop
         out_dir = os.path.join(CACHE, f"streams_{CPUS}_{n_rows}_{tag}")
         shutil.rmtree(out_dir, ignore_errors=True)
         encode_job.run_encode(
             df,
             out_dir,
-            strategy="hash",
             n_stripes=n_stripes,
             fingerprint=f"bench-{n_rows}",
             resume=False,
         )
         return out_dir
-
-    def run_input(tag: str) -> str:
-        # shuffle-free "input" strategy (stripe = input split), direct
-        # stripe-file writes + footer-only manifest: the
-        # 100 TB fast path — no shuffle materialization, no double-
-        # handling of encoded bytes through Arrow + parquet; also the
-        # robust shape in this host's bad memory windows (bounded
-        # per-worker footprint)
-        inp_dir = os.path.join(CACHE, f"streams_in_{CPUS}_{n_rows}_{tag}")
-        shutil.rmtree(inp_dir, ignore_errors=True)
-        encode_job.run_encode(
-            df, inp_dir, strategy="input",
-            target_rows_per_stripe=max(n_rows // n_stripes, 1),
-            fingerprint=f"bench-in-{n_rows}", resume=False,
-        )
-        return inp_dir
 
     def run_pyscan(tag: str) -> str:
         # direct-scan (workers pyarrow-read distributed row-group units;
@@ -748,17 +726,14 @@ def main() -> None:
         u1, s1 = proc_tree_cpu_split()
         return wall, (u1 - u0) + (s1 - s0), u1 - u0, path
 
-    # headline strategy is "input" (shuffle-free, the 100 TB shape), so
-    # its cold run goes first — true process-cold, nothing warmed by a
-    # prior system
-    cold_inp, _, _, _ = timed(run_input, "warmup")
+    # the headline path is pyscan, so its cold run goes first — true
+    # process-cold, nothing warmed by a prior system
     cold_pys, _, _, _ = timed(run_pyscan, "warmup")
     cold_ours, _, _, _ = timed(run_ours, "warmup")
     cold_ref, _, _, _ = timed(run_ref, "warmup")
     ours_walls, ours_cpus, ref_walls, ref_cpus = [], [], [], []
-    inp_walls, inp_cpus = [], []
     pys_walls, pys_cpus = [], []
-    inp_users, pys_users, ours_users, ref_users = [], [], [], []
+    pys_users, ours_users, ref_users = [], [], []
     max_ab = int(os.environ.get("SPARC_BENCH_AB_MAX", str(n_ab + 3)))
     budget_s = float(os.environ.get("SPARC_BENCH_AB_BUDGET_S", "600"))
     ab_t0 = time.perf_counter()
@@ -770,12 +745,8 @@ def main() -> None:
         # over a usable sample
         i < max_ab
         and time.perf_counter() - ab_t0 < budget_s
-        and max(inp_walls + ours_walls) / max(min(inp_walls + ours_walls), 1e-9) > 2.0
+        and max(pys_walls + ours_walls) / max(min(pys_walls + ours_walls), 1e-9) > 2.0
     ):
-        w, c, u, inp_dir = timed(run_input, f"ab{i}")
-        inp_walls.append(w)
-        inp_cpus.append(c)
-        inp_users.append(u)
         w, c, u, pys_dir = timed(run_pyscan, f"ab{i}")
         pys_walls.append(w)
         pys_cpus.append(c)
@@ -814,19 +785,6 @@ def main() -> None:
     )
     extras["encode_vs_reference_wall"] = round(enc_wall / ref_wall, 4)
     extras["encode_vs_reference_cpu"] = round(enc_cpu / max(ref_cpu, 1e-9), 4)
-    inp_wall, inp_cpu = _median(inp_walls), _median(inp_cpus)
-    timings["encode_pages_input_cold"] = round(cold_inp, 3)
-    timings["encode_pages_input"] = round(inp_wall, 3)
-    extras["input_walls"] = [round(x, 3) for x in inp_walls]
-    extras["encode_gbps_input_cold"] = round(raw / cold_inp / 1e9, 4)
-    extras["encode_gbps_input"] = round(raw / inp_wall / 1e9, 4)
-    extras["input_core_s_per_gib"] = round(inp_cpu / gib, 2)
-    extras["input_user_core_s_per_gib"] = round(_median(inp_users) / gib, 2)
-    extras["input_vs_reference_user_cpu"] = round(
-        _median(inp_users) / max(_median(ref_users), 1e-9), 4
-    )
-    extras["input_vs_reference_wall"] = round(inp_wall / ref_wall, 4)
-    extras["input_vs_reference_cpu"] = round(inp_cpu / max(ref_cpu, 1e-9), 4)
     pys_wall, pys_cpu = _median(pys_walls), _median(pys_cpus)
     timings["encode_pages_pyscan_cold"] = round(cold_pys, 3)
     timings["encode_pages_pyscan"] = round(pys_wall, 3)
@@ -844,7 +802,6 @@ def main() -> None:
     extras["ours_bytes_per_row"] = round(ours_bytes / n_rows, 2)
     extras["ref_bytes_per_row"] = round(ref_bytes / n_rows, 2)
     extras["size_vs_reference"] = round(ours_bytes / ref_bytes, 4)
-    extras["input_bytes_per_row"] = round(dir_bytes(inp_dir) / n_rows, 2)
     extras["pyscan_bytes_per_row"] = round(dir_bytes(pys_dir) / n_rows, 2)
 
     # ---- decode the pages table back (cold + warm) ------------------------
@@ -859,13 +816,6 @@ def main() -> None:
     timings["decode_pages_cold"] = round(dec_walls[0], 3)
     timings["decode_pages"] = round(dec_wall, 3)
     extras["decode_gbps"] = round(raw / dec_wall / 1e9, 4)
-    # decode: byte-range reads from stripe files via the manifest
-    t0 = time.perf_counter()
-    n_dec = decode_job.run_decode(spark, inp_dir).count()
-    files_wall = time.perf_counter() - t0
-    assert n_dec == n_rows, f"files decode row count {n_dec} != {n_rows}"
-    timings["decode_pages_files"] = round(files_wall, 3)
-    extras["decode_gbps_files"] = round(raw / files_wall / 1e9, 4)
     # reference decode: spark.read.orc with forced full-column
     # materialization (a bare count() is metadata-only for ORC and would
     # not decode a single stream)
@@ -893,14 +843,14 @@ def main() -> None:
     #   via run_decode_map; both fully decode every column, neither moves
     #   the corpus.  This is also the 100 TB consumption shape.
     extras["decode_materialize_vs_reference_wall"] = round(
-        files_wall / ref_read_walls[-1], 4
+        dec_wall / ref_read_walls[-1], 4
     )
     nd_walls = []
     for _ in range(2):  # cold + warm
         t0 = time.perf_counter()
         got = (
             decode_job.run_decode_map(
-                spark, inp_dir, _octets_map, "octets long, rows long",
+                spark, pys_dir, _octets_map, "octets long, rows long",
                 columns=["url", "html", "text", "lang"],
             )
             .agg(F.sum("octets"), F.sum("rows").alias("r"))
@@ -927,7 +877,7 @@ def main() -> None:
     # Python-lane job fixed costs.  This is the number comparable to the
     # reference reader's 32 JVM threads (which pay no such per-job tax).
     try:
-        pool_walls, pool_syss = _pool_decode_walls(inp_dir, CPUS, rounds=3)
+        pool_walls, pool_syss = _pool_decode_walls(pys_dir, CPUS, rounds=3)
         k = min(range(len(pool_walls)), key=lambda i: pool_walls[i])
         extras["decode_pool_gbps"] = round(raw / pool_walls[k] / 1e9, 4)
         extras["decode_pool_walls"] = [round(x, 3) for x in pool_walls]
@@ -1054,25 +1004,12 @@ def main() -> None:
         # scheduling, codegen, worker handshakes, GC) against a single
         # GiB; at 3x the input the fixed share amortizes and the CPU
         # ratio approaches the per-byte engine cost.  Interleaved like
-        # the headline; input strategy (the 100 TB shape) vs reference.
+        # the headline; pyscan vs reference.
         xl_gib = xl_raw / (1 << 30)
-        xle_walls, xle_cpus, xlr_walls, xlr_cpus = [], [], [], []
+        xlr_walls, xlr_cpus = [], []
         xlp_walls, xlp_cpus = [], []
-        xle_users, xlp_users, xlr_users = [], [], []
+        xlp_users, xlr_users = [], []
         for j in range(3):  # first pair doubles as warmup
-            inp_dir_xl = os.path.join(CACHE, f"streams_in_xl_{xl_rows}")
-            shutil.rmtree(inp_dir_xl, ignore_errors=True)
-            u0, s0 = proc_tree_cpu_split()
-            t0 = time.perf_counter()
-            encode_job.run_encode(
-                xl_df, inp_dir_xl, strategy="input",
-                target_rows_per_stripe=max(xl_rows // (n_stripes * 3), 1),
-                fingerprint=f"bench-xl-{xl_rows}", resume=False,
-            )
-            xle_walls.append(time.perf_counter() - t0)
-            u1, s1 = proc_tree_cpu_split()
-            xle_cpus.append((u1 - u0) + (s1 - s0))
-            xle_users.append(u1 - u0)
             pys_dir_xl = os.path.join(CACHE, f"streams_py_xl_{xl_rows}")
             shutil.rmtree(pys_dir_xl, ignore_errors=True)
             u0, s0 = proc_tree_cpu_split()
@@ -1095,26 +1032,14 @@ def main() -> None:
             u1, s1 = proc_tree_cpu_split()
             xlr_cpus.append((u1 - u0) + (s1 - s0))
             xlr_users.append(u1 - u0)
-        xle_w, xlr_w = _median(xle_walls[1:]), _median(xlr_walls[1:])
-        xle_c, xlr_c = _median(xle_cpus[1:]), _median(xlr_cpus[1:])
+        xlr_w, xlr_c = _median(xlr_walls[1:]), _median(xlr_cpus[1:])
         xlp_w, xlp_c = _median(xlp_walls[1:]), _median(xlp_cpus[1:])
-        timings["encode_pages_input_xl"] = round(xle_w, 3)
         timings["encode_pages_pyscan_xl"] = round(xlp_w, 3)
         timings["reference_orc_write_xl"] = round(xlr_w, 3)
-        extras["encode_gbps_input_xl"] = round(xl_raw / xle_w / 1e9, 4)
         extras["encode_gbps_pyscan_xl"] = round(xl_raw / xlp_w / 1e9, 4)
         extras["ref_gbps_xl"] = round(xl_raw / xlr_w / 1e9, 4)
-        extras["input_core_s_per_gib_xl"] = round(xle_c / xl_gib, 2)
         extras["pyscan_core_s_per_gib_xl"] = round(xlp_c / xl_gib, 2)
         extras["ref_core_s_per_gib_xl"] = round(xlr_c / xl_gib, 2)
-        extras["input_vs_reference_wall_xl"] = round(xle_w / xlr_w, 4)
-        extras["input_vs_reference_cpu_xl"] = round(xle_c / max(xlr_c, 1e-9), 4)
-        extras["input_vs_reference_user_cpu_xl"] = round(
-            _median(xle_users[1:]) / max(_median(xlr_users[1:]), 1e-9), 4
-        )
-        extras["input_user_core_s_per_gib_xl"] = round(
-            _median(xle_users[1:]) / xl_gib, 2
-        )
         extras["ref_user_core_s_per_gib_xl"] = round(
             _median(xlr_users[1:]) / xl_gib, 2
         )
@@ -1126,10 +1051,10 @@ def main() -> None:
         extras["pyscan_user_core_s_per_gib_xl"] = round(
             _median(xlp_users[1:]) / xl_gib, 2
         )
-        extras["input_bytes_per_row_xl"] = round(dir_bytes(inp_dir_xl) / xl_rows, 2)
+        extras["pyscan_bytes_per_row_xl"] = round(dir_bytes(pys_dir_xl) / xl_rows, 2)
         extras["ref_bytes_per_row_xl"] = round(dir_bytes(ref_dir_xl) / xl_rows, 2)
         extras["size_vs_reference_xl"] = round(
-            dir_bytes(inp_dir_xl) / dir_bytes(ref_dir_xl), 4
+            dir_bytes(pys_dir_xl) / dir_bytes(ref_dir_xl), 4
         )
 
         # ---- XXL decode A/B (9x the rows, decode only) ------------------
@@ -1228,47 +1153,17 @@ def main() -> None:
     extras["host_canary_s"] = (
         [canary_start] + mid_canaries + [host_canary_seconds()]
     )
-    extras["input_wall_best"] = round(min(inp_walls), 3)
     extras["pyscan_wall_best"] = round(min(pys_walls), 3)
     extras["encode_wall_best"] = round(min(ours_walls), 3)
     extras["ref_wall_best"] = round(min(ref_walls), 3)
-    extras["encode_gbps_input_best"] = round(raw / min(inp_walls) / 1e9, 4)
     extras["encode_gbps_pyscan_best"] = round(raw / min(pys_walls) / 1e9, 4)
 
-    # headline strategy's reference ratios: prefer the XL A/B when it ran
+    # headline = pyscan (workers read row-group units directly, the JVM
+    # only schedules).  Its reference ratios prefer the XL A/B when it ran
     # (same rationale as decode_vs_reference_wall — at ~1 GiB both sides'
     # walls carry one job's fixed cost over a single GiB; the XL run
     # amortizes it on both sides identically).  The sf-scale ratios stay
     # recorded under *_sf.
-    # headline strategy choice: by XL throughput when the XL A/B ran
-    # (the scale-representative axis — at sf-scale both strategies'
-    # walls are mostly fixed cost, and a transient event in one XL leg
-    # can invert the sf-scale ranking, as window-3's record shows).  A
-    # leg with a negative user-CPU delta (its workers died mid-sample —
-    # CPU accounting invalid) is never chosen.
-    _inp_score = extras.get("encode_gbps_input_xl", extras["encode_gbps_input"])
-    _pys_score = extras.get("encode_gbps_pyscan_xl", extras["encode_gbps_pyscan"])
-    if extras.get("input_vs_reference_user_cpu_xl", 0) < 0:
-        _inp_score = -1.0
-    if extras.get("pyscan_vs_reference_user_cpu_xl", 0) < 0:
-        _pys_score = -1.0
-    _hl_input = _inp_score >= _pys_score
-    _hl_wall_sf = (
-        extras["input_vs_reference_wall"] if _hl_input
-        else extras["pyscan_vs_reference_wall"]
-    )
-    _hl_cpu_sf = (
-        extras["input_vs_reference_cpu"] if _hl_input
-        else extras["pyscan_vs_reference_cpu"]
-    )
-    _hl_wall = extras.get(
-        "input_vs_reference_wall_xl" if _hl_input else "pyscan_vs_reference_wall_xl",
-        _hl_wall_sf,
-    )
-    _hl_cpu = extras.get(
-        "input_vs_reference_cpu_xl" if _hl_input else "pyscan_vs_reference_cpu_xl",
-        _hl_cpu_sf,
-    )
     result = (
         {
                 "metric": "pages_encode_gbps",
@@ -1282,27 +1177,17 @@ def main() -> None:
                 # consumers should key on those.
                 "ratio_protocol": 2,
                 "engine_generation": ENGINE_GENERATION,
-                # headline = the better of the two shuffle-free strategies
-                # ("input": JVM scan feeds workers via Arrow; "pyscan":
-                # workers read row-group units directly, JVM schedules
-                # only) — both are configurations a 100 TB run would use
-                # (the hash-shuffle strategy stays reported alongside);
-                # chosen by XL throughput, see _hl_input above
-                "value": (
-                    extras["encode_gbps_input"] if _hl_input
-                    else extras["encode_gbps_pyscan"]
-                ),
+                "value": extras["encode_gbps_pyscan"],
                 "unit": "GB/s",
-                "headline_strategy": "input" if _hl_input else "pyscan",
-                # the headline strategy's own wall/CPU ratio vs the
-                # reference writer, top-level so artifact readers don't
-                # have to re-derive which *_vs_reference_* applies —
-                # fixed-cost-amortized (XL) when the XL A/B ran, with the
-                # sf-scale ratios kept under *_sf
-                "headline_vs_reference_wall": _hl_wall,
-                "headline_vs_reference_cpu": _hl_cpu,
-                "headline_vs_reference_wall_sf": _hl_wall_sf,
-                "headline_vs_reference_cpu_sf": _hl_cpu_sf,
+                "headline_strategy": "pyscan",
+                "headline_vs_reference_wall": extras.get(
+                    "pyscan_vs_reference_wall_xl", extras["pyscan_vs_reference_wall"]
+                ),
+                "headline_vs_reference_cpu": extras.get(
+                    "pyscan_vs_reference_cpu_xl", extras["pyscan_vs_reference_cpu"]
+                ),
+                "headline_vs_reference_wall_sf": extras["pyscan_vs_reference_wall"],
+                "headline_vs_reference_cpu_sf": extras["pyscan_vs_reference_cpu"],
                 "queries": timings,
                 "sf": sf,
                 **extras,

@@ -276,18 +276,18 @@ def measure(cpus: int, n_stripes: int, n_rows: int, staged_path: str,
         )
 
     job_walls, stage_walls, floor_walls = [], [], []
-    inp_walls, pys_walls, hash_floor_walls = [], [], []
+    pys_walls, hash_floor_walls = [], []
     stage_users, stage_syss = [], []
     stage_dir = os.path.join(CACHE, f"scale_stage_{cpus}")
     fn = encode_job._encode_partition_factory(stage_dir, "zstd", None, "scale")
     for r in range(RUNS + 1):  # first run warms workers, untimed
-        # full job, hash strategy (one full shuffle — local-mode shuffle
+        # full job, hash path (one full shuffle — local-mode shuffle
         # anti-scales beyond ~8 threads, reported for honesty)
         out_dir = os.path.join(CACHE, f"scale_job_{cpus}_{r}")
         shutil.rmtree(out_dir, ignore_errors=True)
         t0 = time.perf_counter()
         encode_job.run_encode(
-            df, out_dir, strategy="hash", n_stripes=n_stripes,
+            df, out_dir, n_stripes=n_stripes,
             fingerprint="scale", resume=False,
         )
         w_job = time.perf_counter() - t0
@@ -302,21 +302,9 @@ def measure(cpus: int, n_stripes: int, n_rows: int, staged_path: str,
             n_stripes, F.col(part_mod.STRIPE_COL)
         ).mapInArrow(floor_fn, schema="n long").select(F.sum("n")).collect()
         w_hash_floor = time.perf_counter() - t0
-        # full job, input strategy (the headline: shuffle-free,
-        # stripe = input split) — the shape a cluster run
+        # pyscan (direct-scan) path, the headline: workers pyarrow-read
+        # scan units, the JVM only schedules — the shape a cluster run
         # uses, and the one the north rule's efficiency target is about
-        inp_dir = os.path.join(CACHE, f"scale_inp_{cpus}_{r}")
-        shutil.rmtree(inp_dir, ignore_errors=True)
-        t0 = time.perf_counter()
-        encode_job.run_encode(
-            df, inp_dir, strategy="input",
-            target_rows_per_stripe=max(n_rows // n_stripes, 1),
-            fingerprint="scale-in", resume=False,
-        )
-        w_inp = time.perf_counter() - t0
-        shutil.rmtree(inp_dir, ignore_errors=True)
-        # pyscan (direct-scan) strategy: workers pyarrow-read scan units,
-        # the JVM only schedules — the other headline candidate
         pys_dir = os.path.join(CACHE, f"scale_pys_{cpus}_{r}")
         shutil.rmtree(pys_dir, ignore_errors=True)
         t0 = time.perf_counter()
@@ -346,7 +334,6 @@ def measure(cpus: int, n_stripes: int, n_rows: int, staged_path: str,
         w_floor = time.perf_counter() - t0
         if r > 0:
             job_walls.append(w_job)
-            inp_walls.append(w_inp)
             pys_walls.append(w_pys)
             stage_walls.append(w_stage)
             floor_walls.append(w_floor)
@@ -359,7 +346,7 @@ def measure(cpus: int, n_stripes: int, n_rows: int, staged_path: str,
     # (a storm-hit rep's inflated user time paired with another rep's
     # clean wall would mix provenances)
     k = min(range(len(stage_walls)), key=lambda i: stage_walls[i])
-    return (min(job_walls), min(inp_walls), min(pys_walls),
+    return (min(job_walls), min(pys_walls),
             min(stage_walls), min(floor_walls), min(hash_floor_walls),
             stage_users[k], stage_syss[k])
 
@@ -386,10 +373,10 @@ def main() -> None:
         n_stripes = max(n4 * 4, 32)
         staged_path = os.path.join(CACHE, f"staged_{n_rows}_{n_stripes}.parquet")
         raw_bytes: list = []
-        (j_n, ji_n, jp_n, s_n, f_n, hf_n,
+        (j_n, jp_n, s_n, f_n, hf_n,
          su_n, ss_n) = measure(n, n_stripes, n_rows, staged_path, raw_bytes)
         canary.append(bench_mod.host_canary_seconds())
-        (j_4n, ji_4n, jp_4n, s_4n, f_4n, hf_4n,
+        (j_4n, jp_4n, s_4n, f_4n, hf_4n,
          su_4n, ss_4n) = measure(n4, n_stripes, n_rows, staged_path, raw_bytes)
         canary.append(bench_mod.host_canary_seconds())
         raw = raw_bytes[0]
@@ -424,16 +411,8 @@ def main() -> None:
                 round((j_n - hf_n) / (j_4n - hf_4n) / speedup, 4)
                 if j_n > hf_n and j_4n > hf_4n else None
             ),
-            # headline (input strategy, shuffle-free) as a
-            # full job — the configuration the efficiency target is about
-            "job_input_wall_n": round(ji_n, 2),
-            "job_input_wall_4n": round(ji_4n, 2),
-            "job_input_gbps_n": round(raw / ji_n / 1e9, 4),
-            "job_input_gbps_4n": round(raw / ji_4n / 1e9, 4),
-            "job_input_efficiency": round((ji_n / ji_4n) / speedup, 4),
-            "job_input_efficiency_vs_ceiling": round(
-                (ji_n / ji_4n) / speedup / max(ceiling, 1e-9), 4
-            ),
+            # headline (pyscan) as a full job — the configuration the
+            # efficiency target is about
             "job_pyscan_wall_n": round(jp_n, 2),
             "job_pyscan_wall_4n": round(jp_4n, 2),
             "job_pyscan_gbps_n": round(raw / jp_n / 1e9, 4),
@@ -511,11 +490,11 @@ def summarize() -> None:
     import glob
 
     fields = [
-        "job_input_efficiency", "job_pyscan_efficiency", "stage_efficiency",
+        "job_pyscan_efficiency", "stage_efficiency",
         "hardware_ceiling_efficiency", "hardware_ceiling_spread",
         "hardware_ceiling_user_efficiency", "hardware_ceiling_user_spread",
         "stage_efficiency_vs_ceiling", "stage_efficiency_vs_user_ceiling",
-        "stage_user_efficiency", "job_input_efficiency_vs_ceiling",
+        "stage_user_efficiency", "job_pyscan_efficiency_vs_ceiling",
         "hash_shuffle_efficiency", "hash_encode_net_efficiency",
     ]
     # subtraction-based net efficiencies from records that predate the
@@ -529,7 +508,7 @@ def summarize() -> None:
     # read [0.97, 0.38, 0.34] around a 13.3 s storm canary)
     _vs_ceiling = {"stage_efficiency_vs_ceiling",
                    "stage_efficiency_vs_user_ceiling",
-                   "job_input_efficiency_vs_ceiling"}
+                   "job_pyscan_efficiency_vs_ceiling"}
 
     def _san(field: str, v):
         if field in _net and isinstance(v, (int, float)) and not (0 < v < 10):

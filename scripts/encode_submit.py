@@ -3,12 +3,18 @@
 Usage:
     spark-submit --py-files sparc.zip scripts/encode_submit.py \
         --input <parquet-or-table> --output <streams-dir> \
-        [--strategy hash|lang_salted] [--stripes N] [--codec zstd] \
+        [--strategy hash|pyscan] [--stripes N] [--codec zstd] \
         [--bloom col1,col2] [--sort col1,col2] [--no-resume]
+
+``--strategy`` picks the input shape: ``hash`` reads ``--input`` as a
+DataFrame (a parquet path or a table name) and hashes ``--key`` into
+``--stripes`` stripes; ``pyscan`` reads ``--input`` as parquet files
+whose row groups workers scan directly, ``--rows-per-stripe`` each.
 
 The job is resumable: re-running with the same output dir anti-joins
 planned stripes against committed FOOTER checkpoints and encodes only
-the remainder (per-partition lineage lives in the footers).
+the remainder (per-partition lineage lives in the footers).  A dir
+written from another input fingerprint or stripe plan is refused.
 """
 
 from __future__ import annotations
@@ -21,7 +27,7 @@ def main() -> None:
     ap.add_argument("--input", required=True, help="parquet path or table name")
     ap.add_argument("--output", required=True, help="streams table output dir")
     ap.add_argument("--strategy", default="hash",
-                    choices=["hash", "lang_salted", "input", "pyscan"])
+                    choices=["hash", "pyscan"])
     ap.add_argument("--stripes", type=int, default=None)
     ap.add_argument("--codec", default="zstd")
     ap.add_argument("--key", default="url")
@@ -65,7 +71,6 @@ def main() -> None:
         df,
         args.output,
         key=args.key,
-        strategy=args.strategy,
         n_stripes=args.stripes,
         codec=args.codec,
         sort_within=[c for c in args.sort.split(",") if c] or None,

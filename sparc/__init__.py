@@ -7,8 +7,9 @@ writer/reader stack — see SURVEY.md) re-expressed Spark-first:
   bitfield, bit-packing, dictionary, FSST, block compression).
 - ``sparc.engine``   — stripe encode/decode over Arrow batches, column
   statistics, per-column codec auto-selection.
-- ``sparc.job``      — the distributed Spark job: stripe partitioning with
-  skew salting, ``mapInArrow`` encode/decode, checkpoint/resume.
+- ``sparc.job``      — the distributed Spark jobs: hash-partitioned
+  DataFrame encode or worker-side parquet scan encode, ``mapInArrow``
+  decode, checkpoint/resume.
 - ``sparc.ops``      — large-scale training-data pipeline operators
   (dedup, similarity search, text analysis, multimodal plumbing).
 - ``sparc.fixtures`` — deterministic synthetic web-page table generator.

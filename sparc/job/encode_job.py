@@ -3,7 +3,7 @@
 Lifecycle (SURVEY.md §3.4):
 
     parquet/Iceberg scan (column-pruned by Catalyst)
-      → stripe assignment (partition.py — explicit, deterministic, salted)
+      → stripe assignment (partition.py — xxhash64(key) % n, deterministic)
       → repartition(n, stripe_col)                 [the only shuffle]
       → mapInArrow(encode): per stripe — optional locality sort, stats,
         codec auto-selection, kernel encode → ``<out>/stripes/<sid>.sparc``
@@ -11,12 +11,18 @@ Lifecycle (SURVEY.md §3.4):
       → append the FOOTER rows to the footer manifest (parquet part files
         in ``<out>``; one atomic task commit per partition)
 
+The path/manifest twin (:func:`run_encode_paths` / :func:`run_encode_units`,
+"pyscan") skips the scan and the shuffle: workers read parquet row-group
+units with pyarrow and cut stripes incrementally.
+
 Resume: a stripe is complete iff its FOOTER row exists.  Re-running the
 job anti-joins planned stripes against completed footers and encodes only
 the remainder — per-partition lineage lives in the footer (input
-fingerprint, row count, per-stream sizes + crc32 checksums).  A stripe
-file without a committed FOOTER row is invisible garbage, and a retried
-task atomically overwrites it with identical bytes.
+fingerprint, stripe plan, row count, per-stream sizes + crc32
+checksums).  A dir whose footers carry another fingerprint or stripe
+plan is refused: its stripe ids name other rows.  A stripe file without
+a committed FOOTER row is invisible garbage, and a retried task
+atomically overwrites it with identical bytes.
 
 Manifest schema (one row per stripe):
     stripe_id:long, column:string, kind:string, data:binary
@@ -43,8 +49,7 @@ from . import partition as part_mod
 
 STREAMS_SCHEMA = "stripe_id long, column string, kind string, data binary"
 
-# "input" strategy: stripe_id = partition_id * SPACE + local chunk index
-# (pyscan: unit index * SPACE + local chunk index)
+# pyscan stripe ids: unit index * SPACE + local chunk index
 INPUT_SPLIT_SPACE = 1 << 16
 
 _PA_OUT = pa.schema(
@@ -68,6 +73,7 @@ def write_stripe(
     fsst: bool | None = None,
     row_index_stride: int | None = ROW_INDEX_STRIDE,
     fingerprint: str = "",
+    stripe_plan: str = "",
 ) -> pa.RecordBatch:
     """Encode ``table`` as stripe ``sid`` into ``<out_dir>/stripes/<sid>.sparc``
     and return its one-row FOOTER manifest batch.
@@ -86,6 +92,7 @@ def write_stripe(
     footer["crc32"] = {f"{c}/{k}": zlib.crc32(v) for (c, k), v in streams.items()}
     footer["stripe_id"] = sid
     footer["input_fingerprint"] = fingerprint
+    footer["stripe_plan"] = stripe_plan
     footer["sorted_by"] = sort_within or []
     rel = f"stripes/{sid}.sparc"
     path = os.path.join(out_dir, rel)
@@ -122,9 +129,9 @@ def _cut_stripes(
 
     Incremental: a stripe is cut as soon as its rows have arrived, so the
     worker's resident set stays bounded at <= 2 stripe targets, not one
-    whole input partition (large per-worker footprints are
-    first-touch-fault poison on fault-slow hosts, and at real scale an
-    input split can exceed executor memory anyway).  Mid-stream cuts only
+    whole scan unit (large per-worker footprints are first-touch-fault
+    poison on fault-slow hosts, and at real scale a unit can exceed
+    executor memory anyway).  Mid-stream cuts only
     at >= 2*per buffered rows: a group of ~per rows becomes ONE full
     stripe instead of a full stripe plus a runt (runts compress worse and
     add per-stripe overhead); the final stripe of a long group lands in
@@ -164,34 +171,18 @@ def _encode_partition_factory(
     fingerprint: str,
     bloom_columns: list[str] | None = None,
     fsst: bool | None = None,
-    input_split_mode: bool = False,
-    rows_per_stripe: int = 0,
     row_index_stride: int | None = ROW_INDEX_STRIDE,
+    stripe_plan: str = "",
 ) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
-    """Build the mapInArrow function over a DataFrame's rows (no per-row
-    Python anywhere inside): each stripe goes through :func:`write_stripe`
-    into ``out_dir``.
-
-    ``input_split_mode``: stripes are derived from the input partition id
-    instead of a stripe column — the shuffle-free path (see run_encode).
-    """
+    """Build the mapInArrow function over a DataFrame's rows tagged with
+    the stripe column (no per-row Python anywhere inside): each stripe
+    goes through :func:`write_stripe` into ``out_dir``."""
     write = functools.partial(
         write_stripe, out_dir=out_dir, codec=codec, sort_within=sort_within,
         bloom_columns=bloom_columns, fsst=fsst,
         row_index_stride=row_index_stride, fingerprint=fingerprint,
+        stripe_plan=stripe_plan,
     )
-
-    def encode_input_partition(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        from .. import runtime
-
-        runtime.init_worker()
-        pid = TaskContext.get().partitionId()
-        for table, sid in _cut_stripes(batches, rows_per_stripe or (1 << 62), pid):
-            yield write(table, sid)
 
     def encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from .. import runtime
@@ -214,7 +205,7 @@ def _encode_partition_factory(
             sub = table.filter(pa.compute.equal(stripe_ids, sid))
             yield write(sub.drop_columns([part_mod.STRIPE_COL]), sid)
 
-    return encode_input_partition if input_split_mode else encode_partition
+    return encode_partition
 
 
 def append_footers(footers: DataFrame, out_dir: str) -> None:
@@ -223,9 +214,18 @@ def append_footers(footers: DataFrame, out_dir: str) -> None:
     footers.write.mode("append").option("compression", "uncompressed").parquet(out_dir)
 
 
-def completed_stripes_df(
-    spark: SparkSession, out_dir: str, fingerprint: str | None = None
-) -> DataFrame | None:
+def _footers(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The committed FOOTER rows of ``out_dir``, or None when the output
+    doesn't exist yet (resolved without running a job)."""
+    try:
+        df = spark.read.schema(STREAMS_SCHEMA).parquet(out_dir)
+        df.schema  # force resolution so a missing dir fails here
+    except Exception:
+        return None
+    return df.filter(F.col("kind") == "FOOTER")
+
+
+def completed_stripes_df(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """Stripe ids whose FOOTER row is committed, as a DataFrame (column
     name = the stripe column), or None when the output doesn't exist yet.
 
@@ -233,59 +233,43 @@ def completed_stripes_df(
     of collecting ids to the driver — at 10^7 stripes a collected
     ``isin`` literal is a multi-GB plan and a driver bottleneck, while
     the anti-join is just another (AQE-broadcastable) join."""
-    try:
-        df = spark.read.schema(STREAMS_SCHEMA).parquet(out_dir)
-        df.schema  # force resolution so a missing dir fails here
-    except Exception:
+    footers = _footers(spark, out_dir)
+    if footers is None:
         return None
-    footers = df.filter(F.col("kind") == "FOOTER")
-    if fingerprint is not None:
-        footers = footers.filter(
-            F.get_json_object(F.col("data").cast("string"), "$.input_fingerprint")
-            == fingerprint
-        )
     return footers.select(
         F.col("stripe_id").alias(part_mod.STRIPE_COL)
     ).distinct()
 
 
-def completed_stripes(
-    spark: SparkSession, out_dir: str, fingerprint: str | None = None
-) -> list[int]:
+def completed_stripes(spark: SparkSession, out_dir: str) -> list[int]:
     """Stripe ids whose FOOTER row is committed (= resumable checkpoint).
-
-    With ``fingerprint``, only stripes encoded from the same input
-    fingerprint count as done — a changed input snapshot/reader conf must
-    not silently reuse stripe ids for different content ("input" strategy
-    ids are positional, so this check is what makes its resume safe).
 
     Driver-side list wrapper over :func:`completed_stripes_df` — for
     TESTS AND DIAGNOSTICS ONLY: no resume path collects ids to the driver
     anymore (at 10^7 stripes a frozenset of Python ints is ~1 GiB of
     driver heap)."""
-    df = completed_stripes_df(spark, out_dir, fingerprint=fingerprint)
+    df = completed_stripes_df(spark, out_dir)
     if df is None:
         return []
     return [r[0] for r in df.collect()]
 
 
 def completed_groups_df(
-    spark: SparkSession, out_dir: str, fingerprint: str | None = None,
-    group_col: str = "__sparc_done_group",
+    spark: SparkSession, out_dir: str, group_col: str = "__sparc_done_group",
 ) -> DataFrame | None:
     """Distinct completed GROUPS (``stripe_id DIV INPUT_SPLIT_SPACE`` =
-    the input partition id / scan-unit index) — the plan-side resume key
-    for the positional-id strategies.
+    the scan-unit index) — the plan-side resume key for pyscan's
+    positional ids.
 
-    Why group granularity is exact, not approximate: one input partition
-    (or one batch of scan units) is processed by exactly one task, and
-    that task's manifest rows — every stripe FOOTER it produced
-    — commit atomically through the parquet task-commit protocol.  So a
-    group with ANY committed footer has ALL its footers committed, and a
-    broadcast anti-join on the group id skips exactly the work that is
-    done.  The done set never touches the driver: it flows from the
-    footer scan into a broadcast exchange built executor-side."""
-    df = completed_stripes_df(spark, out_dir, fingerprint=fingerprint)
+    Why group granularity is exact, not approximate: one scan unit is
+    processed by exactly one task, and that task's manifest rows — every
+    stripe FOOTER it produced — commit atomically through the parquet
+    task-commit protocol.  So a group with ANY committed footer has ALL
+    its footers committed, and a broadcast anti-join on the group id
+    skips exactly the work that is done.  The done set never touches the
+    driver: it flows from the footer scan into a broadcast exchange built
+    executor-side."""
+    df = completed_stripes_df(spark, out_dir)
     if df is None:
         return None
     return df.select(
@@ -293,14 +277,52 @@ def completed_groups_df(
     ).distinct()
 
 
+def _resume_count(
+    spark: SparkSession, out_dir: str, fingerprint: str, stripe_plan: str
+) -> int:
+    """Count the committed stripes a resumed run may skip, refusing a dir
+    it cannot extend.
+
+    Stripe ids are positions in a plan (hash bucket, or unit and chunk),
+    so a footer committed under another input fingerprint or another
+    stripe plan names other rows under the same id: skipping it drops
+    rows or decodes them twice, and re-encoding it overwrites a stripe
+    file that a committed footer still points at.  Such a dir raises
+    ``ValueError`` naming it and both values.  Footers that carry no plan
+    (written before plans were recorded) are refused the same way.
+
+    The check rides in the one aggregate that counts the done set, so it
+    adds no Spark job, and none runs when ``out_dir`` does not exist."""
+    footers = _footers(spark, out_dir)
+    if footers is None:
+        return 0
+    data = F.col("data").cast("string")
+    got_fp = F.coalesce(F.get_json_object(data, "$.input_fingerprint"), F.lit(""))
+    got_plan = F.coalesce(F.get_json_object(data, "$.stripe_plan"), F.lit(""))
+    row = footers.agg(
+        F.count_distinct("stripe_id").alias("n"),
+        F.max(F.when(got_fp != fingerprint, got_fp)).alias("fp"),
+        F.max(F.when(got_plan != stripe_plan, got_plan)).alias("plan"),
+    ).first()
+    for what, got, want in (
+        ("input fingerprint", row["fp"], fingerprint),
+        ("stripe plan", row["plan"], stripe_plan),
+    ):
+        if got is not None:
+            raise ValueError(
+                f"cannot resume into {out_dir}: its committed footers carry "
+                f"{what} {got or '(none)'!r}, this run has {want!r}; "
+                "resume needs both to match, so encode into a fresh dir"
+            )
+    return row["n"]
+
+
 def run_encode(
     df: DataFrame,
     out_dir: str,
     *,
     key: str = "url",
-    strategy: str = "hash",
     n_stripes: int | None = None,
-    lang_col: str = "lang",
     target_rows_per_stripe: int = 100_000,
     codec: str = "zstd",
     sort_within: list[str] | None = None,
@@ -311,84 +333,42 @@ def run_encode(
     fsst: bool | None = None,
     row_index_stride: int | None = ROW_INDEX_STRIDE,
 ) -> dict:
-    """Run (or resume) the encode job.  Returns a summary dict.
+    """Run (or resume) the encode of a DataFrame.  Returns a summary dict.
 
-    Strategies:
-    - ``hash``: stripe = xxhash64(key) % n — content-addressed, needs one
-      full shuffle (the default; what the north rule describes).
-    - ``lang_salted``: lang-clustered with salting for skew (one shuffle).
-    - ``input``: stripe = (input partition, local chunk) — shuffle-free;
-      deterministic and resumable for a fixed input snapshot + reader
-      conf.  The fast path when stripe/content affinity is not required:
-      at cluster scale it removes the full-table shuffle entirely.
+    stripe = xxhash64(key) % n_stripes: content-addressed, one full
+    shuffle.  ``n_stripes`` defaults to ``ceil(rows /
+    target_rows_per_stripe)`` (one count job).  Parquet inputs that need
+    no content addressing encode faster through :func:`run_encode_paths`,
+    which keeps the JVM and the JVM→Python Arrow hop out of the data path.
 
     Workers write each stripe to its own file under ``out_dir`` and only
-    footers enter the manifest (see :func:`write_stripe`).
+    footers enter the manifest (see :func:`write_stripe`).  With
+    ``resume``, stripes whose footers are committed are skipped; a dir
+    written with another ``fingerprint``, ``key`` or ``n_stripes`` raises
+    ``ValueError``.
     """
     spark = df.sparkSession
-
-    if strategy == "input":
-        src = df
-        skipped = 0
-        if resume:
-            done_df = completed_stripes_df(spark, out_dir, fingerprint=fingerprint)
-            if done_df is not None:
-                skipped = done_df.count()
-                if skipped:
-                    # Plan-side resume with NO driver-side id set: tag each
-                    # row with its scan partition id (a narrow projection —
-                    # evaluated in the same stage the encoder runs in, so
-                    # it equals TaskContext.partitionId() there) and
-                    # broadcast-anti-join against the completed groups.
-                    # Partition-task commit atomicity makes group
-                    # granularity exact (see completed_groups_df).
-                    groups = completed_groups_df(
-                        spark, out_dir, fingerprint=fingerprint
-                    )
-                    src = (
-                        df.withColumn("__sparc_pid", F.spark_partition_id())
-                        .join(
-                            F.broadcast(groups),
-                            F.col("__sparc_pid") == F.col("__sparc_done_group"),
-                            "left_anti",
-                        )
-                        .drop("__sparc_pid")
-                    )
-        fn = _encode_partition_factory(
-            out_dir, codec, sort_within, fingerprint, bloom_columns, fsst,
-            input_split_mode=True,
-            rows_per_stripe=target_rows_per_stripe,
-            row_index_stride=row_index_stride,
-        )
-        append_footers(src.mapInArrow(fn, schema=STREAMS_SCHEMA), out_dir)
-        return {"n_stripes": None, "skipped": skipped, "out_dir": out_dir}
-
-    if strategy == "lang_salted":
-        staged, total = part_mod.with_lang_salted_stripes(
-            df, key=key, lang_col=lang_col, target_rows_per_stripe=target_rows_per_stripe
-        )
-        n_stripes = total
-    else:
-        if n_stripes is None:
-            total_rows = df.count()
-            n_stripes = part_mod.pick_stripe_count(total_rows, 0,
-                                                   target_rows=target_rows_per_stripe)
-        staged = part_mod.with_hash_stripes(df, key, n_stripes)
+    if n_stripes is None:
+        total_rows = df.count()
+        n_stripes = part_mod.pick_stripe_count(total_rows, 0,
+                                               target_rows=target_rows_per_stripe)
+    staged = part_mod.with_hash_stripes(df, key, n_stripes)
+    stripe_plan = f"hash key={key} n_stripes={n_stripes}"
 
     skipped = 0
     if resume:
-        done_df = completed_stripes_df(spark, out_dir)
-        if done_df is not None:
-            skipped = done_df.count()
-            if skipped:
-                # plan-side anti-join (matching the read path's semi-join
-                # hygiene): no isin literal that scales with stripe count
-                staged = staged.join(done_df, part_mod.STRIPE_COL, "left_anti")
+        skipped = _resume_count(spark, out_dir, fingerprint, stripe_plan)
+        if skipped:
+            # plan-side anti-join (matching the read path's semi-join
+            # hygiene): no isin literal that scales with stripe count
+            staged = staged.join(
+                completed_stripes_df(spark, out_dir), part_mod.STRIPE_COL, "left_anti"
+            )
 
     parts = n_partitions or n_stripes
     fn = _encode_partition_factory(
         out_dir, codec, sort_within, fingerprint, bloom_columns, fsst,
-        row_index_stride=row_index_stride,
+        row_index_stride=row_index_stride, stripe_plan=stripe_plan,
     )
     append_footers(
         staged.repartition(parts, F.col(part_mod.STRIPE_COL))
@@ -435,44 +415,13 @@ def _plan_units(
     (round-3 item: minutes of driver I/O at 10^6 files).  Unit ids are
     identical in both modes (fidx * UNIT_SPACE + unit-within-file), so
     resume works across planner modes."""
-    return _plan_units_counted(spark, files, per, distributed)[0]
-
-
-def _plan_units_rows(files: list[str], per: int) -> list[tuple]:
-    """Driver-side unit rows [(idx, path, rg_lo, rg_hi), ...] — parquet
-    footer metadata only (no data pages)."""
-    import pyarrow.parquet as pq
-
-    rows = []
-    for fidx, path in enumerate(files):
-        md = pq.ParquetFile(path).metadata
-        rows.extend(
-            (idx, path, lo, hi)
-            for idx, lo, hi in _pack_units(
-                fidx, md.num_row_groups,
-                lambda g, _md=md: _md.row_group(g).num_rows, per,
-            )
-        )
-    return rows
-
-
-def _plan_units_counted(
-    spark: SparkSession, files: list[str], per: int,
-    distributed: bool | None = None,
-) -> tuple[DataFrame, int | None]:
-    """:func:`_plan_units` plus the unit count when the plan was built
-    driver-side (None in distributed mode).  The count lets
-    run_encode_units size its task fan-out WITHOUT a count() job — one
-    whole Spark job of pure fixed cost per encode run, ~0.4 s at bench
-    scale (18%% of a clean-window XL encode wall)."""
     if len(files) >= 1 << 26:
         raise ValueError(f"{len(files)} files exceeds the 2^26 unit id space")
     if distributed is None:
         distributed = len(files) > 64
     schema = "idx long, path string, rg_lo int, rg_hi int"
     if not distributed:
-        rows = _plan_units_rows(files, per)
-        return spark.createDataFrame(rows, schema), len(rows)
+        return spark.createDataFrame(_plan_units_rows(files, per), schema)
 
     files_df = spark.createDataFrame(list(enumerate(files)), "fidx long, path string")
     n_parts = max(1, min(len(files), spark.sparkContext.defaultParallelism * 2))
@@ -504,7 +453,25 @@ def _plan_units_counted(
                 names=["idx", "path", "rg_lo", "rg_hi"],
             )
 
-    return files_df.repartition(n_parts, "fidx").mapInArrow(plan, schema), None
+    return files_df.repartition(n_parts, "fidx").mapInArrow(plan, schema)
+
+
+def _plan_units_rows(files: list[str], per: int) -> list[tuple]:
+    """Driver-side unit rows [(idx, path, rg_lo, rg_hi), ...] — parquet
+    footer metadata only (no data pages)."""
+    import pyarrow.parquet as pq
+
+    rows = []
+    for fidx, path in enumerate(files):
+        md = pq.ParquetFile(path).metadata
+        rows.extend(
+            (idx, path, lo, hi)
+            for idx, lo, hi in _pack_units(
+                fidx, md.num_row_groups,
+                lambda g, _md=md: _md.row_group(g).num_rows, per,
+            )
+        )
+    return rows
 
 
 def plan_units_from_manifest(
@@ -585,8 +552,8 @@ def _encode_units_factory(
 ) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
     """Build the mapInArrow function over scan-unit rows [idx, path,
     rg_lo, rg_hi]: each worker streams its units' row groups with pyarrow
-    and cuts stripes with the same 2*per rule as the input strategy (a
-    unit packed to ~per rows encodes as ONE full stripe, no runt).
+    and cuts stripes with :func:`_cut_stripes`'s 2*per rule (a unit
+    packed to ~per rows encodes as ONE full stripe, no runt).
     ``stripe_kw`` goes to :func:`write_stripe`."""
 
     def encode_units(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -649,8 +616,9 @@ def run_encode_paths(
     Iceberg table the manifest carries these counts, so unit planning
     needs no file reads at all.  Stripe ids are (unit index, local
     chunk) — deterministic for a fixed input snapshot + stripe target, so
-    resume via FOOTER checkpoints + the input fingerprint works exactly
-    as in the ``input`` strategy.
+    resume skips the units whose footers are committed; a dir written
+    with another ``fingerprint`` or ``target_rows_per_stripe`` raises
+    ``ValueError``.
     """
     import os
 
@@ -666,7 +634,7 @@ def run_encode_paths(
         raise ValueError(f"no parquet files under {input_dir}")
     per = max(target_rows_per_stripe, 1)
     if len(files) > 64:
-        units_df, n_units = _plan_units_counted(spark, files, per)
+        units_df, n_units = _plan_units(spark, files, per), None
         balanced = False
     else:
         # driver-side plan: interleave the unit rows round-robin across
@@ -725,33 +693,31 @@ def run_encode_units(
     incremental stripe cuts, stripe-file writes, group-level plan-side resume —
     is shared with run_encode_paths."""
     per = max(target_rows_per_stripe, 1)
+    stripe_plan = f"pyscan target_rows_per_stripe={per}"
     skipped = 0
     if resume:
-        done_df = completed_stripes_df(spark, out_dir, fingerprint=fingerprint)
-        if done_df is not None:
-            skipped = done_df.count()
-            if skipped:
-                # unit-level plan-side resume: a unit's stripes commit
-                # atomically with its task, so any committed footer of a
-                # unit means the whole unit is done (completed_groups_df);
-                # the done ids never reach the driver.
-                groups = completed_groups_df(
-                    spark, out_dir, fingerprint=fingerprint
-                )
-                units_df = units_df.join(
-                    F.broadcast(groups),
-                    units_df["idx"] == groups["__sparc_done_group"],
-                    "left_anti",
-                )
-                # the anti-join changed the todo count, and the units left
-                # sit in the LocalRelation slices of the tasks that died:
-                # only the round-robin exchange spreads them over the cores
-                n_units = None
-                balanced = False
+        skipped = _resume_count(spark, out_dir, fingerprint, stripe_plan)
+        if skipped:
+            # unit-level plan-side resume: a unit's stripes commit
+            # atomically with its task, so any committed footer of a
+            # unit means the whole unit is done (completed_groups_df);
+            # the done ids never reach the driver.
+            groups = completed_groups_df(spark, out_dir)
+            units_df = units_df.join(
+                F.broadcast(groups),
+                units_df["idx"] == groups["__sparc_done_group"],
+                "left_anti",
+            )
+            # the anti-join changed the todo count, and the units left
+            # sit in the LocalRelation slices of the tasks that died:
+            # only the round-robin exchange spreads them over the cores
+            n_units = None
+            balanced = False
     encode_units = _encode_units_factory(
         out_dir, per, columns, codec=codec, sort_within=sort_within,
         bloom_columns=bloom_columns, fsst=fsst,
         row_index_stride=row_index_stride, fingerprint=fingerprint,
+        stripe_plan=stripe_plan,
     )
 
     # task fan-out sizing needs the todo-unit count; a caller-supplied

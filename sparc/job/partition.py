@@ -1,16 +1,9 @@
-"""Stripe assignment: explicit partitioning with skew salting (SURVEY.md §3.4).
+"""Stripe assignment for the DataFrame encode path (SURVEY.md §3.4).
 
-Two deterministic strategies:
-
-- ``hash``: stripe_id = xxhash64(url) % n_stripes — uniform, no locality.
-- ``lang_salted``: stripes cluster by ``lang`` (dictionary/RLE locality —
-  sorted-by-lang stripes compress far better) with hot languages split
-  into ceil(count/target_rows) salt buckets by url-hash.  This is the
-  explicit skew handling the north rule names: a Zipf lang distribution
-  (en ~40%) would otherwise make one stripe 40% of the table.
-
-Both are pure functions of (input rows, parameters) so resume and
-two-cluster-size runs produce identical stripe assignments.
+stripe_id = xxhash64(key) % n_stripes: uniform and content-addressed — a
+row's stripe depends only on its key and the stripe count, so resume and
+runs at two cluster sizes produce identical stripe assignments.  The
+stripe count comes from :func:`pick_stripe_count`.
 """
 
 from __future__ import annotations
@@ -22,81 +15,10 @@ from pyspark.sql import DataFrame, functions as F
 STRIPE_COL = "_sparc_stripe"
 
 
-def estimate_raw_bytes(df: DataFrame, columns: list[str] | None = None) -> int:
-    """One column-pruned pass summing byte sizes of string/binary columns
-    plus 8B per numeric — the sizing input for stripe-count selection."""
-    exprs = []
-    for f in df.schema.fields:
-        if columns and f.name not in columns:
-            continue
-        t = f.dataType.simpleString()
-        if t in ("string", "binary"):
-            exprs.append(F.coalesce(F.length(F.col(f.name)), F.lit(0)).cast("long"))
-        else:
-            exprs.append(F.lit(8).cast("long"))
-    total = df.select(sum(exprs[1:], exprs[0]).alias("sz")).agg(F.sum("sz")).collect()[0][0]
-    return int(total or 0)
-
-
 def with_hash_stripes(df: DataFrame, key: str, n_stripes: int) -> DataFrame:
     return df.withColumn(
         STRIPE_COL, F.pmod(F.xxhash64(F.col(key)), F.lit(n_stripes)).cast("long")
     )
-
-
-def with_lang_salted_stripes(
-    df: DataFrame,
-    key: str = "url",
-    lang_col: str = "lang",
-    target_rows_per_stripe: int = 100_000,
-    weight_cols: list[str] | None = None,
-    target_bytes_per_stripe: int = 128 << 20,
-) -> tuple[DataFrame, int]:
-    """Cluster stripes by language, salting hot languages by url-hash.
-
-    Returns (df with stripe column, total stripe count).  The lang→count
-    aggregation is a tiny column-pruned scan (~30 groups); the mapping is
-    broadcast-joined, never shuffled.
-
-    ``weight_cols`` adds byte-weighted salting: hot languages are split
-    by max(rows/target_rows, bytes/target_bytes), so a language with few
-    but oversized documents (the html-size skew the north rule names)
-    still splits into bounded stripes.
-    """
-    aggs = [F.count(F.lit(1)).alias("_cnt")]
-    if weight_cols:
-        w = None
-        for c in weight_cols:
-            e = F.coalesce(F.octet_length(F.col(c)), F.lit(0)).cast("long")
-            w = e if w is None else (w + e)
-        aggs.append(F.sum(w).alias("_bytes"))
-    grouped = df.groupBy(lang_col).agg(*aggs).collect()
-    counts = sorted(
-        (r[lang_col], r["_cnt"], (r["_bytes"] if weight_cols else 0)) for r in grouped
-    )
-    base = 0
-    rows = []
-    for lang, cnt, nbytes in counts:
-        n_salts = max(
-            1,
-            math.ceil(cnt / target_rows_per_stripe),
-            math.ceil(nbytes / target_bytes_per_stripe) if weight_cols else 1,
-        )
-        rows.append((lang, base, n_salts))
-        base += n_salts
-    spark = df.sparkSession
-    salts = spark.createDataFrame(rows, f"{lang_col} string, _base long, _nsalts int")
-    out = (
-        df.join(F.broadcast(salts), lang_col)
-        .withColumn(
-            STRIPE_COL,
-            (F.col("_base") + F.pmod(F.xxhash64(F.col(key)), F.col("_nsalts"))).cast(
-                "long"
-            ),
-        )
-        .drop("_base", "_nsalts")
-    )
-    return out, base
 
 
 def pick_stripe_count(total_rows: int, total_bytes: int,

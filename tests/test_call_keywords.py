@@ -1,6 +1,6 @@
 """Static keyword check for the engine's job entry points in callers no
-tier-1 test runs end to end (the bench harnesses, the driver entry, the
-scripts): every keyword passed to ``encode_job.run_encode*`` or
+tier-1 test runs end to end (the bench harnesses, the perfbench
+workloads, the driver entry, the scripts): every keyword passed to ``encode_job.run_encode*`` or
 ``decode_job.run_decode*`` must exist in the callee's signature, so a
 removed or renamed parameter fails here instead of in a long bench run."""
 
@@ -20,7 +20,10 @@ FORWARDS = {"run_decode_map": decode_job.run_decode}
 
 
 def _callers() -> list[str]:
-    names = ["bench.py", "scaling_bench.py", "__spark_entry__.py"]
+    names = [
+        "bench.py", "scaling_bench.py", "__spark_entry__.py",
+        os.path.join("perfbench", "workloads.py"),
+    ]
     return [os.path.join(REPO, n) for n in names] + sorted(
         glob.glob(os.path.join(REPO, "scripts", "*.py"))
     )

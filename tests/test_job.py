@@ -1,5 +1,5 @@
 """End-to-end Spark job tests: encode → streams table → decode, resume,
-salting, projection.  (The distributed analog of TestVectorOrcFile.)"""
+projection.  (The distributed analog of TestVectorOrcFile.)"""
 
 from __future__ import annotations
 
@@ -43,7 +43,7 @@ def test_encode_decode_roundtrip(spark, pages_path, tmp_path):
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
     res = encode_job.run_encode(
-        df, out, strategy="hash", n_stripes=6,
+        df, out, n_stripes=6,
         sort_within=["lang", "warc_ts"], fingerprint="pages@42",
     )
     assert res["n_stripes"] == 6 and res["skipped"] == 0
@@ -53,9 +53,9 @@ def test_encode_decode_roundtrip(spark, pages_path, tmp_path):
 def test_resume_skips_completed(spark, pages_path, tmp_path):
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
-    encode_job.run_encode(df, out, strategy="hash", n_stripes=4)
+    encode_job.run_encode(df, out, n_stripes=4)
     n_rows_1 = spark.read.parquet(out).count()
-    res2 = encode_job.run_encode(df, out, strategy="hash", n_stripes=4)
+    res2 = encode_job.run_encode(df, out, n_stripes=4)
     assert res2["skipped"] == 4
     assert spark.read.parquet(out).count() == n_rows_1  # nothing re-encoded
 
@@ -70,7 +70,7 @@ def test_resume_plan_has_no_isin_literal(spark, pages_path, tmp_path):
 
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
-    encode_job.run_encode(df, out, strategy="hash", n_stripes=4)
+    encode_job.run_encode(df, out, n_stripes=4)
     done_df = encode_job.completed_stripes_df(spark, out)
     staged = part_mod.with_hash_stripes(df, "url", 4).join(
         done_df, part_mod.STRIPE_COL, "left_anti"
@@ -83,36 +83,137 @@ def test_resume_plan_has_no_isin_literal(spark, pages_path, tmp_path):
 def test_resume_after_partial_failure(spark, pages_path, tmp_path):
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
-    encode_job.run_encode(df, out, strategy="hash", n_stripes=6, n_partitions=6)
+    encode_job.run_encode(df, out, n_stripes=6, n_partitions=6)
     # simulate a lost task: remove the largest committed part file (an
     # empty-partition file would delete nothing)
     part_files = sorted(glob.glob(os.path.join(out, "part-*")), key=os.path.getsize)
     os.remove(part_files[-1])
     done_before = set(encode_job.completed_stripes(spark, out))
     assert len(done_before) < 6
-    res = encode_job.run_encode(df, out, strategy="hash", n_stripes=6, n_partitions=6)
+    res = encode_job.run_encode(df, out, n_stripes=6, n_partitions=6)
     assert res["skipped"] == len(done_before)
     assert len(encode_job.completed_stripes(spark, out)) == 6
     _compare_roundtrip(spark, df, out)
 
 
-def test_lang_salted_strategy(spark, pages_path, tmp_path):
+@pytest.fixture(scope="module")
+def other_pages_path(tmp_path_factory):
+    p = tmp_path_factory.mktemp("data_b") / "pages.parquet"
+    pages.write_parquet(str(p), N_ROWS, seed=7)
+    return str(p)
+
+
+def _urls(spark, streams_dir):
+    return {r[0] for r in decode_job.run_decode(spark, streams_dir, columns=["url"]).collect()}
+
+
+def test_resume_refuses_another_fingerprint(spark, pages_path, other_pages_path, tmp_path):
+    """Hash stripe ids are buckets, not rows: resuming a dir encoded from
+    input A with input B would skip every bucket and decode A's rows."""
+    out = str(tmp_path / "streams")
+    encode_job.run_encode(spark.read.parquet(pages_path), out, n_stripes=4, fingerprint="A")
+    before = _urls(spark, out)
+    with pytest.raises(ValueError, match=f"{out}.*fingerprint 'A'.*'B'"):
+        encode_job.run_encode(
+            spark.read.parquet(other_pages_path), out, n_stripes=4, fingerprint="B"
+        )
+    assert _urls(spark, out) == before  # nothing appended
+
+
+def test_resume_refuses_another_stripe_count(spark, pages_path, tmp_path):
+    """Bucket i of 4 and bucket i of 6 hold different rows: extending a
+    4-stripe dir to 6 stripes would duplicate some rows and drop others."""
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
-    res = encode_job.run_encode(
-        df, out, strategy="lang_salted", target_rows_per_stripe=1000,
-        sort_within=["warc_ts"],
+    encode_job.run_encode(df, out, n_stripes=4)
+    with pytest.raises(
+        ValueError, match=f"{out}.*'hash key=url n_stripes=4'.*'hash key=url n_stripes=6'"
+    ):
+        encode_job.run_encode(df, out, n_stripes=6)
+    with pytest.raises(ValueError, match="'hash key=lang n_stripes=4'"):
+        encode_job.run_encode(df, out, key="lang", n_stripes=4)
+    assert decode_job.run_decode(spark, out).count() == N_ROWS
+
+
+def test_pyscan_resume_refuses_another_fingerprint_or_target(
+    spark, pages_path, other_pages_path, tmp_path
+):
+    """Pyscan ids are (unit, chunk) positions: another input would
+    overwrite stripe files that committed footers still point at, and
+    another stripe target re-cuts the units."""
+    out = str(tmp_path / "streams")
+    encode_job.run_encode_paths(
+        spark, pages_path, out, target_rows_per_stripe=1500, fingerprint="A"
     )
-    # en is ~40% of rows -> must be split into multiple salt buckets
-    n_langs = df.select("lang").distinct().count()
-    assert res["n_stripes"] > n_langs
-    _compare_roundtrip(spark, df, out)
+    files = {
+        p: os.path.getmtime(p) for p in glob.glob(os.path.join(out, "stripes", "*"))
+    }
+    with pytest.raises(ValueError, match=f"{out}.*fingerprint 'A'.*'B'"):
+        encode_job.run_encode_paths(
+            spark, other_pages_path, out, target_rows_per_stripe=1500, fingerprint="B"
+        )
+    with pytest.raises(
+        ValueError,
+        match=f"{out}.*'pyscan target_rows_per_stripe=1500'.*"
+        "'pyscan target_rows_per_stripe=1000'",
+    ):
+        encode_job.run_encode_paths(
+            spark, pages_path, out, target_rows_per_stripe=1000, fingerprint="A"
+        )
+    assert {
+        p: os.path.getmtime(p) for p in glob.glob(os.path.join(out, "stripes", "*"))
+    } == files  # no stripe file rewritten
+    assert decode_job.run_decode(spark, out).count() == N_ROWS
+
+
+def test_resume_refuses_footers_without_a_plan(spark, pages_path, tmp_path):
+    """Footers written before stripe plans were recorded cannot prove
+    their plan, so resume refuses them rather than guess."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    df = spark.read.parquet(pages_path)
+    out = str(tmp_path / "streams")
+    encode_job.run_encode(df, out, n_stripes=4)
+    for part in glob.glob(os.path.join(out, "part-*.parquet")):
+        t = pq.read_table(part)
+        data = []
+        for blob in t["data"].to_pylist():
+            footer = json.loads(blob)
+            del footer["stripe_plan"]
+            data.append(json.dumps(footer).encode())
+        pq.write_table(t.set_column(3, "data", pa.array(data, t["data"].type)), part)
+        os.remove(os.path.join(out, f".{os.path.basename(part)}.crc"))  # stale now
+    with pytest.raises(ValueError, match=f"{out}.*stripe plan '\\(none\\)'"):
+        encode_job.run_encode(df, out, n_stripes=4)
+    assert decode_job.run_decode(spark, out).count() == N_ROWS
+
+
+def test_resume_check_adds_no_spark_job(spark, pages_path, tmp_path):
+    """The fingerprint and plan check rides in the aggregate that counts
+    the done set: it runs no more Spark jobs than counting the distinct
+    committed stripe ids alone, and none when the dir does not exist."""
+    st = spark.sparkContext.statusTracker()
+
+    def jobs(fn):
+        before = set(st.getJobIdsForGroup(None) or [])
+        fn()
+        return len(set(st.getJobIdsForGroup(None) or []) - before)
+
+    out = str(tmp_path / "streams")
+    assert jobs(lambda: encode_job._resume_count(spark, out, "", "p")) == 0
+    encode_job.run_encode(spark.read.parquet(pages_path), out, n_stripes=4)
+    plan = "hash key=url n_stripes=4"
+    count_only = jobs(lambda: encode_job.completed_stripes_df(spark, out).count())
+    assert jobs(lambda: encode_job._resume_count(spark, out, "", plan)) <= count_only
 
 
 def test_decode_projection(spark, pages_path, tmp_path):
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
-    encode_job.run_encode(df, out, strategy="hash", n_stripes=4)
+    encode_job.run_encode(df, out, n_stripes=4)
     dec = decode_job.run_decode(spark, out, columns=["url", "lang"])
     assert dec.columns == ["url", "lang"]
     assert dec.count() == N_ROWS
@@ -121,7 +222,7 @@ def test_decode_projection(spark, pages_path, tmp_path):
 def test_metrics_lineage(spark, pages_path, tmp_path):
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
-    encode_job.run_encode(df, out, strategy="hash", n_stripes=4, fingerprint="fp-1")
+    encode_job.run_encode(df, out, n_stripes=4, fingerprint="fp-1")
     m = encode_job.read_metrics(spark, out).toPandas()
     assert len(m) == 4
     assert (m["input_fingerprint"] == "fp-1").all()
@@ -133,29 +234,6 @@ def test_stripe_count_estimator():
     assert partition.pick_stripe_count(100, 100) == 1
 
 
-def test_input_split_strategy(spark, pages_path, tmp_path):
-    """Shuffle-free 'input' strategy: stripe = input split; round-trip +
-    resume skip, like the hash strategy but without co-location."""
-    df = spark.read.parquet(pages_path)
-    out = str(tmp_path / "input_streams")
-    encode_job.run_encode(
-        df, out, strategy="input", target_rows_per_stripe=1500, resume=False
-    )
-    _compare_roundtrip(spark, df, out)
-    done = set(encode_job.completed_stripes(spark, out))
-    assert done
-    r2 = encode_job.run_encode(
-        df, out, strategy="input", target_rows_per_stripe=1500, resume=True
-    )
-    assert r2["skipped"] == len(done)
-    assert set(encode_job.completed_stripes(spark, out)) == done
-
-
-# ---------------------------------------------------------------------------
-# files sink (stripe files + footer manifest)
-# ---------------------------------------------------------------------------
-
-
 def test_files_sink_roundtrip(spark, pages_path, tmp_path):
     """files sink: workers write stripe files directly; only footers flow
     through Arrow into the manifest — decode must read spans back
@@ -163,7 +241,7 @@ def test_files_sink_roundtrip(spark, pages_path, tmp_path):
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
     res = encode_job.run_encode(
-        df, out, strategy="hash", n_stripes=4,
+        df, out, n_stripes=4,
         bloom_columns=["url"],
     )
     assert res["n_stripes"] == 4
@@ -177,25 +255,6 @@ def test_files_sink_roundtrip(spark, pages_path, tmp_path):
     _compare_roundtrip(spark, df, out, verify_crc=True)
 
 
-def test_files_sink_input_strategy_and_resume(spark, pages_path, tmp_path):
-    df = spark.read.parquet(pages_path)
-    out = str(tmp_path / "streams")
-    encode_job.run_encode(
-        df, out, strategy="input", target_rows_per_stripe=1500,
-        fingerprint="pages@42",
-    )
-    n_files_1 = len(glob.glob(os.path.join(out, "stripes", "*.sparc")))
-    assert n_files_1 >= 4
-    # resume: nothing re-encoded, no new files
-    res2 = encode_job.run_encode(
-        df, out, strategy="input", target_rows_per_stripe=1500,
-        fingerprint="pages@42",
-    )
-    assert res2["skipped"] == n_files_1
-    assert len(glob.glob(os.path.join(out, "stripes", "*.sparc"))) == n_files_1
-    _compare_roundtrip(spark, df, out)
-
-
 def test_files_sink_orphan_stripe_file_resume(spark, pages_path, tmp_path):
     """Crash window between the stripe-file rename and the footer commit:
     the orphaned stripe file is invisible garbage (no FOOTER row), and a
@@ -203,7 +262,7 @@ def test_files_sink_orphan_stripe_file_resume(spark, pages_path, tmp_path):
     orphan with identical bytes."""
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
-    encode_job.run_encode(df, out, strategy="hash", n_stripes=6,
+    encode_job.run_encode(df, out, n_stripes=6,
                           n_partitions=6)
     # simulate the dead task: drop a committed footer part file while its
     # stripe files stay on disk (rename happened, manifest commit did not)
@@ -217,7 +276,7 @@ def test_files_sink_orphan_stripe_file_resume(spark, pages_path, tmp_path):
         if int(os.path.basename(p).split(".")[0]) not in done_before
     }
     assert orphans  # the crash really left invisible stripe files behind
-    res = encode_job.run_encode(df, out, strategy="hash", n_stripes=6,
+    res = encode_job.run_encode(df, out, n_stripes=6,
                                 n_partitions=6)
     assert res["skipped"] == len(done_before)
     assert set(encode_job.completed_stripes(spark, out)) == set(range(6))
@@ -232,7 +291,7 @@ def test_files_sink_projection_and_prune(spark, pages_path, tmp_path):
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
     encode_job.run_encode(
-        df, out, strategy="hash", n_stripes=4,
+        df, out, n_stripes=4,
         bloom_columns=["url"],
     )
     dec = decode_job.run_decode(spark, out, columns=["url", "lang"])
@@ -258,8 +317,8 @@ def test_files_sink_compact_zero_copy(spark, pages_path, tmp_path):
 
     df = spark.read.parquet(pages_path)
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    encode_job.run_encode(df.limit(3000), a, strategy="hash", n_stripes=2)
-    encode_job.run_encode(df.limit(3000), b, strategy="hash", n_stripes=2)
+    encode_job.run_encode(df.limit(3000), a, n_stripes=2)
+    encode_job.run_encode(df.limit(3000), b, n_stripes=2)
     out = str(tmp_path / "merged")
     res = compact_job.compact(spark, [a, b], out)
     assert res["n_stripes"] == 4
@@ -277,17 +336,14 @@ def test_encode_from_catalog_table(spark, pages_path, tmp_path):
     spark.read.parquet(pages_path).createOrReplaceTempView("pages_v")
     df = spark.read.table("pages_v")
     out = str(tmp_path / "streams")
-    encode_job.run_encode(
-        df, out, strategy="input",
-        target_rows_per_stripe=2000, resume=False,
-    )
+    encode_job.run_encode(df, out, target_rows_per_stripe=2000, resume=False)
     assert decode_job.run_decode(spark, out).count() == N_ROWS
 
 
 def test_pyscan_encode_roundtrip_and_resume(spark, pages_path, tmp_path):
     """Direct-scan encode (workers pyarrow-read distributed file paths,
-    JVM never touches the data): round-trip + resume parity with the
-    input strategy."""
+    JVM never touches the data): round-trip, and a resume skips every
+    committed stripe."""
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
     res = encode_job.run_encode_paths(
@@ -362,7 +418,7 @@ def test_pyscan_encode_is_single_stage(spark, pages_path, tmp_path):
 def test_resume_never_collects_done_ids_at_1e6_stripes(spark, pages_path, tmp_path, monkeypatch):
     """Round-3 item #4: resume must be plan-side on EVERY path.  A
     synthetic manifest with 10^6 committed footers (spread over 10^6
-    distinct groups) resumes the input strategy with (a) zero calls to
+    distinct groups) resumes a pyscan encode with (a) zero calls to
     the driver-side id collector and (b) flat driver-Python memory — a
     collected frozenset of 10^6 ids would be ~64 MB+ and a 1 GiB-class
     driver burden at 10^7."""
@@ -376,7 +432,10 @@ def test_resume_never_collects_done_ids_at_1e6_stripes(spark, pages_path, tmp_pa
     out = str(tmp_path / "streams")
     os.makedirs(out)
     n = 1_000_000
-    blob = json.dumps({"input_fingerprint": "big"}).encode()
+    blob = json.dumps({
+        "input_fingerprint": "big",
+        "stripe_plan": "pyscan target_rows_per_stripe=1500",
+    }).encode()
     t = pa.table({
         "stripe_id": pa.array(
             np.arange(n, dtype=np.int64) * encode_job.INPUT_SPLIT_SPACE
@@ -391,17 +450,16 @@ def test_resume_never_collects_done_ids_at_1e6_stripes(spark, pages_path, tmp_pa
         raise AssertionError("resume path collected done ids to the driver")
 
     monkeypatch.setattr(encode_job, "completed_stripes", boom)
-    df = spark.read.parquet(pages_path)
     tracemalloc.start()
-    res = encode_job.run_encode(
-        df, out, strategy="input", target_rows_per_stripe=1500,
+    res = encode_job.run_encode_paths(
+        spark, pages_path, out, target_rows_per_stripe=1500,
         fingerprint="big", resume=True,
     )
     _, peak = tracemalloc.get_traced_memory()
     tracemalloc.stop()
     assert res["skipped"] == n
-    # every input partition's group is in the done set -> nothing encoded
-    assert not glob.glob(os.path.join(out, "part-*[!c]")) or True
+    # every unit's group is in the done set -> nothing encoded
+    assert res["n_units"] == 0
     assert peak < 50 * 1024 * 1024, f"driver allocated {peak/1e6:.0f} MB during resume"
 
 
@@ -674,58 +732,25 @@ def test_manifest_planning_without_fidx_is_deterministic(spark):
     assert paths_by_fidx == sorted(paths_by_fidx)
 
 
-def test_input_strategy_partial_failure_group_resume(spark, pages_path, tmp_path):
-    """Group-level plan-side resume is EXACT on the input strategy: kill
-    one partition's committed manifest part-file (its stripe files stay
-    on disk — the crash window), resume, and only that partition's
-    stripes are re-encoded; the output round-trips bit-identically."""
-    df = spark.read.parquet(pages_path)
-    out = str(tmp_path / "streams")
-    encode_job.run_encode(
-        df, out, strategy="input", target_rows_per_stripe=1500,
-        fingerprint="pages@42",
-    )
-    all_stripes = set(encode_job.completed_stripes(spark, out))
-    sizes = {
-        os.path.basename(p): os.path.getsize(p)
-        for p in glob.glob(os.path.join(out, "stripes", "*.sparc"))
-    }
-    # drop one committed footer part (not the largest: any will do)
-    part_files = sorted(glob.glob(os.path.join(out, "part-*")))
-    os.remove(part_files[0])
-    done_before = set(encode_job.completed_stripes(spark, out))
-    lost = all_stripes - done_before
-    assert lost, "removing a part file must lose at least one footer"
-    res = encode_job.run_encode(
-        df, out, strategy="input", target_rows_per_stripe=1500,
-        fingerprint="pages@42",
-    )
-    assert res["skipped"] == len(done_before)
-    assert set(encode_job.completed_stripes(spark, out)) == all_stripes
-    # re-encoded stripes overwrote their orphans with identical bytes
-    for name, size in sizes.items():
-        assert os.path.getsize(os.path.join(out, "stripes", name)) == size
-    _compare_roundtrip(spark, df, out)
-
-
 def test_decode_map_compute_near_data(spark, pages_path, tmp_path):
     """run_decode_map: a vectorized transform runs on each decoded stripe
     inside the scan task; only its result crosses the Python->JVM
     boundary.  Checked against the same aggregate computed JVM-side over
-    the fully-materialized decode, on two strategies (input and hash)."""
+    the fully-materialized decode, on both encode paths (pyscan and
+    hash)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
     df = spark.read.parquet(pages_path)
-    out_input = str(tmp_path / "streams_input")
-    encode_job.run_encode(
-        df, out_input, strategy="input", target_rows_per_stripe=1500,
+    out_pyscan = str(tmp_path / "streams_pyscan")
+    encode_job.run_encode_paths(
+        spark, pages_path, out_pyscan, target_rows_per_stripe=1500,
         fingerprint="pages@42",
     )
     out_hash = str(tmp_path / "streams_hash")
     encode_job.run_encode(
-        df, out_hash, strategy="hash", n_stripes=4, fingerprint="pages@42",
+        df, out_hash, n_stripes=4, fingerprint="pages@42",
     )
 
     def octets(t: pa.Table) -> pa.Table:
@@ -749,7 +774,7 @@ def test_decode_map_compute_near_data(spark, pages_path, tmp_path):
             )
         )
     ).collect()[0][0]
-    for out in (out_input, out_hash):
+    for out in (out_pyscan, out_hash):
         got = (
             decode_job.run_decode_map(
                 spark, out, octets, "octets long, rows long"
@@ -770,7 +795,7 @@ def test_decode_map_composes_with_pruning(spark, pages_path, tmp_path):
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
     encode_job.run_encode(
-        df, out, strategy="hash", n_stripes=4,
+        df, out, n_stripes=4,
         sort_within=["lang", "warc_ts"], fingerprint="pages@42",
     )
     pred = ("eq", "lang", "en")
@@ -798,7 +823,7 @@ def test_decode_map_rejects_dataframe_side_options(spark, pages_path, tmp_path):
 
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
-    encode_job.run_encode(df, out, strategy="hash", n_stripes=2)
+    encode_job.run_encode(df, out, n_stripes=2)
     with pytest.raises(ValueError, match="map_fn"):
         decode_job.run_decode(
             spark, out, map_fn=lambda t: t, map_schema="rows long",
@@ -818,7 +843,7 @@ def test_decode_shards_below_manifest_granularity(spark, pages_path, tmp_path):
     out = str(tmp_path / "streams")
     # few encode tasks -> few manifests, several stripes per manifest
     encode_job.run_encode(
-        df, out, strategy="hash", n_stripes=8, n_partitions=2,
+        df, out, n_stripes=8, n_partitions=2,
     )
     manifests = glob.glob(os.path.join(out, "part-*"))
     assert 0 < len(manifests) <= 2
@@ -837,12 +862,12 @@ def test_schema_follows_a_rewritten_dir(spark, tmp_path):
 
     out = str(tmp_path / "streams")
     ab = spark.createDataFrame([(1, 2)], "a long, b long")
-    encode_job.run_encode(ab, out, strategy="input", resume=False)
+    encode_job.run_encode(ab, out, key="a", resume=False)
     assert decode_job.infer_schema_ddl(spark, out) == "`a` long, `b` long"
     assert [tuple(r) for r in decode_job.run_decode(spark, out).collect()] == [(1, 2)]
     shutil.rmtree(out)
     x = spark.createDataFrame([(3,)], "x long")
-    encode_job.run_encode(x, out, strategy="input", resume=False)
+    encode_job.run_encode(x, out, key="x", resume=False)
     assert decode_job.infer_schema_ddl(spark, out) == "`x` long"
     assert [tuple(r) for r in decode_job.run_decode(spark, out).collect()] == [(3,)]
 

@@ -18,7 +18,7 @@ def streams_dir(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("plan") / "streams")
     df = spark.read.parquet(str(src))
     encode_job.run_encode(
-        df, out, strategy="hash", n_stripes=4, resume=False,
+        df, out, n_stripes=4, resume=False,
         bloom_columns=["url", "lang"],
     )
     return out
@@ -155,7 +155,7 @@ def test_files_sink_decode_plan_is_single_stage(spark, streams_dir, tmp_path_fac
     out = str(tmp_path_factory.mktemp("plan3") / "streams")
     df = spark.read.parquet(str(src))
     encode_job.run_encode(
-        df, out, strategy="hash", n_stripes=4, resume=False
+        df, out, n_stripes=4, resume=False
     )
     decoded = decode_job.run_decode(spark, out)
     plan = _plan(decoded)
@@ -185,7 +185,7 @@ def test_pruned_decode_matches_source_filter(spark, tmp_path_factory):
     pages.write_parquet(str(src), 3000, seed=14)
     df = spark.read.parquet(str(src))
     out = str(tmp_path_factory.mktemp("plan4") / "streams")
-    encode_job.run_encode(df, out, strategy="hash", n_stripes=4, resume=False)
+    encode_job.run_encode(df, out, n_stripes=4, resume=False)
     pred = ("and", (">=", "url", "https://m"), ("not", ("is_null", "lang")))
     got = decode_job.run_decode(spark, out, stripe_filter=pred, row_filter=True)
     expect = df.filter((F.col("url") >= "https://m") & F.col("lang").isNotNull())

@@ -27,7 +27,7 @@ def streams_dir(spark, pages_path, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("streams") / "s")
     df = spark.read.parquet(pages_path)
     encode_job.run_encode(
-        df, out, strategy="hash", n_stripes=6, resume=False,
+        df, out, n_stripes=6, resume=False,
         bloom_columns=["url"], fingerprint="prune-test",
     )
     return out
@@ -225,7 +225,7 @@ def test_masked_encode_roundtrip(spark, pages_path, tmp_path):
     df = spark.read.parquet(pages_path)
     masked = mask.apply_masks(df, {"url": "sha256", "lang": "redact"})
     out = str(tmp_path / "masked_streams")
-    encode_job.run_encode(masked, out, strategy="hash", n_stripes=4,
+    encode_job.run_encode(masked, out, n_stripes=4,
                           key="url", resume=False)
     decoded = decode_job.run_decode(spark, out)
     assert decoded.count() == N_ROWS
@@ -243,8 +243,8 @@ def test_compact_merges_without_reencode(spark, pages_path, tmp_path):
     half1 = df.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == 0)
     half2 = df.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == 1)
     d1, d2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    encode_job.run_encode(half1, d1, strategy="hash", n_stripes=3, resume=False)
-    encode_job.run_encode(half2, d2, strategy="hash", n_stripes=3, resume=False)
+    encode_job.run_encode(half1, d1, n_stripes=3, resume=False)
+    encode_job.run_encode(half2, d2, n_stripes=3, resume=False)
     out = str(tmp_path / "merged")
     res = compact_job.compact(spark, [d1, d2], out, n_output_files=2)
     assert res["n_stripes"] == 6
@@ -257,7 +257,7 @@ def test_compact_merges_without_reencode(spark, pages_path, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# schema evolution (reader-schema casts) + size-weighted salting
+# schema evolution (reader-schema casts)
 # ---------------------------------------------------------------------------
 
 
@@ -269,20 +269,3 @@ def test_decode_with_reader_schema_casts(spark, streams_dir):
     assert dict(decoded.dtypes)["warc_ts"] == "string"
     assert decoded.filter(F.col("warc_ts").startswith("2024")).count() > 0
 
-
-def test_size_weighted_salting(spark, pages_path):
-    from sparc.job import partition as pm
-
-    df = spark.read.parquet(pages_path)
-    staged_rows, n_rows_only = pm.with_lang_salted_stripes(
-        df, target_rows_per_stripe=10**9
-    )
-    staged_bytes, n_weighted = pm.with_lang_salted_stripes(
-        df, target_rows_per_stripe=10**9,
-        weight_cols=["html", "text"], target_bytes_per_stripe=1 << 20,
-    )
-    # byte weighting must split hot (big) languages further
-    assert n_weighted > n_rows_only
-    # stripe ids stay dense 0..n-1
-    ids = {r[0] for r in staged_bytes.select(pm.STRIPE_COL).distinct().collect()}
-    assert ids <= set(range(n_weighted))

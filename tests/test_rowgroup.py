@@ -165,7 +165,7 @@ def test_end_to_end_point_lookup_decodes_few_rows(spark, tmp_path):
     out = str(tmp_path / "streams")
     df = spark.read.parquet(src)
     encode_job.run_encode(
-        df, out, strategy="hash", n_stripes=2, sort_within=["url"],
+        df, out, n_stripes=2, sort_within=["url"],
         resume=False, row_index_stride=1000,
     )
     total = df.count()
@@ -187,7 +187,7 @@ def test_rowgroup_prune_never_loses_rows_on_range(spark, tmp_path):
     out = str(tmp_path / "streams")
     df = spark.read.parquet(src)
     encode_job.run_encode(
-        df, out, strategy="hash", n_stripes=2, sort_within=["warc_ts"],
+        df, out, n_stripes=2, sort_within=["warc_ts"],
         resume=False, row_index_stride=1000,
     )
     secs = F.expr("timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', warc_ts)")

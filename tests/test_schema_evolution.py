@@ -14,7 +14,7 @@ def streams_dir(spark, tmp_path_factory):
     pages.write_parquet(str(src), 2000, seed=31)
     out = str(tmp_path_factory.mktemp("evo") / "streams")
     df = spark.read.parquet(str(src))
-    encode_job.run_encode(df, out, strategy="hash", n_stripes=3, resume=False)
+    encode_job.run_encode(df, out, n_stripes=3, resume=False)
     return out
 
 

@@ -24,7 +24,7 @@ def _build_zip(path: str) -> str:
     return zpath
 
 
-@pytest.mark.parametrize("strategy", ["input", "pyscan"])
+@pytest.mark.parametrize("strategy", ["hash", "pyscan"])
 def test_spark_submit_py_files_end_to_end(spark, tmp_path, strategy):
     from sparc.fixtures import pages
     from sparc.job import decode_job

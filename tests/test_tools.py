@@ -65,7 +65,7 @@ def streams_dir_files(spark, tmp_path_factory):
     pages.write_parquet(str(src), 2000, seed=5)
     out = str(tmp_path_factory.mktemp("tools2") / "streams")
     encode_job.run_encode(
-        spark.read.parquet(str(src)), out, strategy="hash", n_stripes=4,
+        spark.read.parquet(str(src)), out, n_stripes=4,
         resume=False,
     )
     return out
