@@ -47,6 +47,8 @@ only — field numbers from the public orc_proto.proto)."""
 
 from __future__ import annotations
 
+from bisect import bisect_left
+
 import numpy as np
 import pyarrow as pa
 
@@ -252,10 +254,6 @@ def _tree_type_pbs(node: dict, out: list[bytes]) -> None:
         _tree_type_pbs(c, out)
 
 
-def _combined(arr) -> pa.Array:
-    return arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-
-
 def _min_stats(n_values: int, has_null: bool) -> bytes:
     out = _f_varint(1, n_values)
     out += _varint((10 << 3)) + (b"\x01" if has_null else b"\x00")
@@ -442,14 +440,20 @@ def _rg_binary_stats(total_bytes: int, n_values: int, has_null: bool) -> bytes:
     return out
 
 
-def _window_stats(arr: pa.Array):
+def _window_stats(arr: pa.Array, bounds: list[tuple[int, int]]):
     """-> ``stats(lo, hi, row_group=False)``: one ColumnStatistics over
     ``arr[lo:hi]`` of a parent-masked column node — typed for leaves,
     value count and hasNull for nested nodes — for a row-index entry, a
     stripe (the Metadata section's StripeStatistics) or the file footer.
     Per-value work is done once over the whole array; a window is a
     slice.  ``row_group`` gives the row-index form, which carries no
-    boolean or binary statistics."""
+    boolean or binary statistics.
+
+    String min/max is the one statistic a slice cannot give: it is taken
+    once per row group (``bounds``, back to back), and a window that row
+    groups tile takes the least minimum and the greatest maximum of its
+    groups.  Both are order statistics, so the merge is exact (double
+    sums are not merged: that would reorder their additions)."""
     t = arr.type
     if arr.null_count:
         valid = arr.is_valid().to_numpy(zero_copy_only=False)
@@ -471,8 +475,30 @@ def _window_stats(arr: pa.Array):
             ([0], np.cumsum(nn.to_numpy(zero_copy_only=False), dtype=np.int64))
         )
 
+    def window(lo: int, hi: int) -> tuple[int, int]:
+        return (lo, hi) if vcum is None else (int(vcum[lo]), int(vcum[hi]))
+
+    def min_max(a: int, z: int) -> tuple:
+        if z == a:
+            return None, None
+        mm = pa.compute.min_max(b.slice(a, z - a))
+        return mm["min"].as_py(), mm["max"].as_py()
+
+    if is_str:
+        group_starts = [lo for lo, _ in bounds]
+        group_min_max = [min_max(*window(lo, hi)) for lo, hi in bounds]
+
+    def string_min_max(lo: int, hi: int) -> tuple:
+        g, end = bisect_left(group_starts, lo), bisect_left(group_starts, hi)
+        if g == end or group_starts[g] != lo or bounds[end - 1][1] != hi:
+            return min_max(*window(lo, hi))  # not a run of row groups
+        found = [mm for mm in group_min_max[g:end] if mm[0] is not None]
+        if not found:
+            return None, None
+        return min(mn for mn, _ in found), max(mx for _, mx in found)
+
     def stats(lo: int, hi: int, row_group: bool = False) -> bytes:
-        a, z = (lo, hi) if vcum is None else (int(vcum[lo]), int(vcum[hi]))
+        a, z = window(lo, hi)
         has_null = z - a < hi - lo
         if _is_nested(t) or row_group and (
             pa.types.is_boolean(t) or (stripe_mod._is_binary_like(t) and not is_str)
@@ -487,10 +513,7 @@ def _window_stats(arr: pa.Array):
         if pa.types.is_floating(t):
             return _rg_double_stats(vals[a:z], has_null)
         if is_str:
-            mn = mx = None
-            if z > a:
-                mm = pa.compute.min_max(b.slice(a, z - a))
-                mn, mx = mm["min"].as_py(), mm["max"].as_py()
+            mn, mx = string_min_max(lo, hi)
             return _rg_string_stats(mn, mx, int(lcum[z] - lcum[a]), z - a, has_null)
         if stripe_mod._is_binary_like(t):
             return _rg_binary_stats(int(lcum[z] - lcum[a]), z - a, has_null)
@@ -712,8 +735,8 @@ def _walk(
     over a window of the same masked array the streams encode, so the
     two cannot drift apart."""
     t = node["t"]
-    arr = _combined(arr)
-    stats = _window_stats(arr)
+    arr = stripe_mod.as_array(arr)
+    stats = _window_stats(arr, bounds)
     node_stats = (
         [stats(lo, hi, True) for lo, hi in bounds] if indexed else None,
         [stats(bounds[a][0], bounds[b - 1][1]) for a, b in stripes],
@@ -737,7 +760,7 @@ def _walk(
         out.append((node["id"], streams, direct, *node_stats))
         present_bounds = [(voffs[g], voffs[g + 1]) for g in range(n_groups)]
         for i, (_, child_node) in enumerate(node["children"]):
-            child = _combined(arr.field(i))
+            child = stripe_mod.as_array(arr.field(i))
             if valid_arr is not None:
                 child = child.filter(valid_arr)
             _walk(child_node, child, present_bounds, stripes, v11, indexed, out)
@@ -748,7 +771,11 @@ def _walk(
         # PRESENT stream here.
         from ..kernels import byterle
 
-        codes = arr.type_codes.to_numpy(zero_copy_only=False)
+        # the type codes and offsets read at the array's own offset
+        # (``UnionArray.type_codes`` and ``.offsets`` start at the buffer's)
+        codes = np.frombuffer(
+            arr.buffers()[1], dtype=np.int8, count=len(arr), offset=arr.offset
+        )
         lut = np.zeros(128, np.uint8)
         for i, tc in enumerate(t.type_codes):
             lut[tc] = i
@@ -765,14 +792,20 @@ def _walk(
         )
         out.append((node["id"], streams, direct, *node_stats))
         dense = t.mode == "dense"
-        offs_u = arr.offsets.to_numpy(zero_copy_only=False) if dense else None
+        offs_u = (
+            np.frombuffer(
+                arr.buffers()[2], dtype=np.int32, count=len(arr), offset=4 * arr.offset
+            )
+            if dense
+            else None
+        )
         for i, (_, child_node) in enumerate(node["children"]):
             mask = tags == i
             cum_i = np.concatenate(([0], np.cumsum(mask.astype(np.int64))))
             child_bounds = [(int(cum_i[lo]), int(cum_i[hi])) for lo, hi in bounds]
             rows = np.flatnonzero(mask)
             take = offs_u[rows] if dense else rows
-            child = _combined(arr.field(i)).take(pa.array(take, pa.int64()))
+            child = stripe_mod.as_array(arr.field(i)).take(pa.array(take, pa.int64()))
             _walk(child_node, child, child_bounds, stripes, v11, indexed, out)
         return
     # list / map: LENGTH of present slots per group; child windows are
@@ -901,7 +934,7 @@ def write_orc(
     walked: list[tuple] = []
     bloom_filters: dict[int, list] = {}
     for i in range(n_cols):
-        col = _combined(table.column(i))
+        col = stripe_mod.as_array(table.column(i))
         node = root_node["children"][i][1]
         _walk(node, col, bounds, stripes, v11, bool(row_index_stride), walked)
         if bloom_columns and root_node["children"][i][0] in bloom_columns:

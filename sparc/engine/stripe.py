@@ -81,23 +81,40 @@ _TS_UNITS = {"s": 1, "ms": 1_000, "us": 1_000_000, "ns": 1_000_000_000}
 
 
 def format_nanos(nanos: np.ndarray) -> np.ndarray:
-    """Trailing-zero packing: value<<3 | (zeros-1), zeros in 2..7."""
-    nanos = nanos.astype(np.int64)
+    """Trailing-zero packing: value<<3 | (zeros-1), zeros in 2..7.  Zero
+    stays 0, so the digit loop runs only over the nonzero values."""
+    nanos = np.asarray(nanos, dtype=np.int64)
     out = nanos << 3
-    remaining = (nanos != 0) & (nanos % 100 == 0)
+    at = np.flatnonzero(nanos)
+    if at.size == 0:
+        return out
+    nz = nanos[at]
+    packed = nz << 3
+    remaining = nz % 100 == 0
     for z in range(7, 1, -1):
-        m = remaining & (nanos % (10**z) == 0)
-        out[m] = ((nanos[m] // (10**z)) << 3) | (z - 1)
+        m = remaining & (nz % (10**z) == 0)
+        packed[m] = ((nz[m] // (10**z)) << 3) | (z - 1)
         remaining &= ~m
+    out[at] = packed
     return out
 
 
 def parse_nanos(v: np.ndarray) -> np.ndarray:
-    v = v.astype(np.int64)
+    v = np.asarray(v, dtype=np.int64)
     zeros = v & 7
+    if not zeros.any():
+        return v >> 3
     base = v >> 3
     scale = np.where(zeros > 0, 10 ** (zeros + 1), 1).astype(np.int64)
     return base * scale
+
+
+def as_array(arr: pa.Array | pa.ChunkedArray) -> pa.Array:
+    """``arr`` as one Array: a ChunkedArray's only chunk as it is, without
+    the copy ``combine_chunks`` makes, else its chunks combined."""
+    if not isinstance(arr, pa.ChunkedArray):
+        return arr
+    return arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
 
 
 # ---------------------------------------------------------------------------
@@ -214,8 +231,7 @@ def encode_column(
     row-group index); ``stride=None`` emits the legacy single-segment
     layout (used for nested children, whose value space does not align
     with parent row groups)."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
+    arr = as_array(arr)
     t = arr.type
     if pa.types.is_decimal(t) and not pa.types.is_decimal128(t):
         # decimal32/64 arrays (pyarrow >= 16) use 4/8-byte storage; the
@@ -752,9 +768,7 @@ def encode_stripe(
     if row_index_stride:
         footer["row_index_stride"] = row_index_stride
     for i, name in enumerate(batch.schema.names):
-        col = batch.column(i)
-        if isinstance(col, pa.ChunkedArray):
-            col = col.combine_chunks()
+        col = as_array(batch.column(i))
         col_streams, col_meta = encode_column(
             col, name, codec, fsst, stride=row_index_stride
         )

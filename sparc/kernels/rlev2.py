@@ -13,13 +13,20 @@ the whole array with vectorized delta-run detection, then choose the cheapest
 sub-encoding per 512-value chunk by *computed size* (which can only tie or
 beat the reference's heuristic).
 
-Cost model: the vector work is per segment.  One batched plan computes every
-derived array once per segment (zigzag, bit widths, per-chunk min/max,
-base-reduced values, per-chunk width histograms) and decides all chunks with
-vector ops; payloads are bit-packed with one ``bitpack.pack`` call per
-distinct width.  Python-level work per chunk is limited to its header bytes
-and a slice of that packed output, so numpy calls scale with segments, not
-chunks or values.
+Encode cost model: one pass takes the deltas and finds the fixed-delta
+runs worth extracting (a scan of the run-change flags as 64-bit words
+rules out most arrays at once).  One batched plan then covers every chunk
+of the remaining segments with a few full-length passes: per-chunk min
+and max of the values and of the deltas, the zigzag values only where a
+chunk's choice needs them, and the base-reduced values where a chunk may
+take PATCHED_BASE.  Every 100p width follows from those extremes.  The
+90p gap test and the 95p PATCHED_BASE width are counts of the values
+above one width per chunk, and only a chunk with outliers under its 100p
+width builds a width histogram.  Payloads are bit-packed with one
+``bitpack.pack`` call per distinct width, straight from the source array
+when that width's chunks lie back to back in it.  Python-level work per
+chunk is limited to its header bytes and a slice of the packed output,
+so numpy calls scale with segments, not chunks or values.
 
 Decode cost model, the mirror image: one Python pass reads the run headers
 (about a microsecond per run, the only per-run Python) and queues each
@@ -132,56 +139,16 @@ def _encode_groups(
     n = v.size
 
     # --- vectorized segmentation ------------------------------------------
-    # deltas in wrap-safe uint64; a delta run of length L covers L+1 values
-    u = v.view(U64)
-    d = u[1:] - u[:-1] if n > 1 else np.empty(0, dtype=U64)
-    # overflow-safe check: delta fits in int64 when computed exactly
-    # (reference guards with isSafeSubtract); runs with unsafe deltas are
-    # excluded from DELTA encoding
-    d_i = d.view(I64)
-    safe = ((v[1:] >= v[:-1]) & (d_i >= 0)) | ((v[1:] < v[:-1]) & (d_i < 0))
-
-    # maximal runs of equal delta; the delta across a cut (index c-1) is a
-    # run of its own, too short to extract, so no run spans two groups
-    if d.size:
-        differs = d[1:] != d[:-1]  # differs[i]: a run starts at d[i + 1]
-        if len(bounds) > 2:
-            at_cuts = np.array(bounds[1:-1], dtype=np.int64)
-            at_cuts = np.concatenate((at_cuts - 2, at_cuts - 1))
-            differs[at_cuts[(at_cuts >= 0) & (at_cuts < differs.size)]] = True
-        change = np.flatnonzero(differs) + 1
-        rstarts = np.concatenate(([0], change))  # index into d
-        rends = np.concatenate((change, [d.size]))
-        rlens = rends - rstarts  # in deltas; values covered = rlens + 1
-        good = (rlens + 1 >= MIN_EXTRACT_RUN) & safe[rstarts]
-    else:
-        rstarts = rends = rlens = np.empty(0, dtype=np.int64)
-        good = np.empty(0, dtype=bool)
-
-    # the stream as ops in value order: variable segments (split at cuts)
-    # and extracted fixed-delta runs
-    ops: list[tuple[int, int, int | None]] = []  # (lo, hi, run delta)
-
-    def variable(lo: int, hi: int) -> None:
-        while lo < hi:
-            end = min(hi, bounds[bisect_right(bounds, lo)])
-            ops.append((lo, end, None))
-            lo = end
-
-    pos = 0
-    for gi in np.flatnonzero(good).tolist():
-        s = int(rstarts[gi])  # first value index of the run
-        e = int(rends[gi])  # last value index is e (d indices s..e-1)
-        start = max(pos, s)
-        if e - start + 1 < MIN_EXTRACT_RUN:
-            continue
-        variable(pos, start)
-        ops.append((start, e + 1, int(d_i[s])))
-        pos = e + 1
-    variable(pos, n)
-
+    # d[i] = v[i+1] - v[i], wrapping like the reference's long; the last
+    # entry, after the last value, is 0.  A delta run of length L covers
+    # L+1 values.
+    d = np.empty(n, dtype=I64)
+    if n:
+        np.subtract(v[1:], v[:-1], out=d[:-1])
+        d[-1] = 0
+    ops = _extracted_runs(v, d, bounds)
     spans = [(lo, hi) for lo, hi, delta in ops if delta is None]
-    var_blobs = iter(_encode_variable(v, spans, signed, aligned))
+    var_blobs = iter(_encode_variable(v, d, spans, signed, aligned))
     out = bytearray()
     ends = [0]  # group k's stream is out[ends[k]:ends[k + 1]]
     for lo, hi, delta in ops:
@@ -195,6 +162,64 @@ def _encode_groups(
     if len(ends) == 2:
         return [bytes(out)]
     return [bytes(out[a:b]) for a, b in zip(ends, ends[1:])]
+
+
+def _extracted_runs(
+    v: np.ndarray, d: np.ndarray, bounds: list[int]
+) -> list[tuple[int, int, int | None]]:
+    """The stream as ops ``(lo, hi, run delta)`` in value order: variable
+    segments ``v[lo:hi]`` (delta None, split at the cuts in ``bounds``)
+    and the fixed-delta runs of at least ``MIN_EXTRACT_RUN`` values taken
+    out of them."""
+    ops: list[tuple[int, int, int | None]] = []
+
+    def variable(lo: int, hi: int) -> None:
+        while lo < hi:
+            end = min(hi, bounds[bisect_right(bounds, lo)])
+            ops.append((lo, end, None))
+            lo = end
+
+    n = v.size
+    # differs[i]: a delta run starts at d[i + 1].  The delta across a cut
+    # (index c-1) is a run of its own, too short to extract, so no run
+    # spans two groups.
+    differs = d[1 : n - 1] != d[: n - 2] if n > 2 else np.ones(0, dtype=bool)
+    if len(bounds) > 2:
+        at_cuts = np.array(bounds[1:-1], dtype=np.int64)
+        at_cuts = np.concatenate((at_cuts - 2, at_cuts - 1))
+        differs[at_cuts[(at_cuts >= 0) & (at_cuts < differs.size)]] = True
+    # An extractable run has MIN_EXTRACT_RUN - 1 equal deltas, so
+    # MIN_EXTRACT_RUN - 2 = 14 flags in a row are False.  Any 11 in a row
+    # hold 8 that fill a 64-bit word of the flags read from offset 0 or
+    # from offset 4, so without an all-zero word in either there is
+    # nothing to extract.
+    if differs.size < MIN_EXTRACT_RUN - 2 or (
+        differs[: differs.size // 8 * 8].view(np.uint64).all()
+        and differs[4 : (differs.size - 4) // 8 * 8 + 4].view(np.uint64).all()
+    ):
+        variable(0, n)
+        return ops
+    # run k of equal deltas is d[edges[k]:edges[k + 1]]
+    change = np.flatnonzero(differs)
+    edges = np.empty(change.size + 2, dtype=np.int64)
+    edges[0], edges[-1] = 0, n - 1
+    np.add(change, 1, out=edges[1:-1])
+    long = np.flatnonzero(edges[1:] - edges[:-1] >= MIN_EXTRACT_RUN - 1)
+    rstarts = edges[long]
+    # the reference extracts only runs whose delta is exact in int64
+    # (isSafeSubtract): the wrapped delta's sign matches the comparison
+    safe = (v[rstarts + 1] >= v[rstarts]) == (d[rstarts] >= 0)
+    pos = 0
+    for s, e in zip(rstarts[safe].tolist(), edges[long[safe] + 1].tolist()):
+        # deltas d[s:e], so values s..e
+        start = max(pos, s)
+        if e - start + 1 < MIN_EXTRACT_RUN:
+            continue
+        variable(pos, start)
+        ops.append((start, e + 1, int(d[s])))
+        pos = e + 1
+    variable(pos, n)
+    return ops
 
 
 def _encode_fixed_delta_run(
@@ -271,28 +296,45 @@ def _chunk_percentile_widths(bits: np.ndarray, cn: np.ndarray) -> np.ndarray:
     return CLOSEST_FIXED_BITS[(below < keep[:, :, None]).sum(axis=2)]
 
 
+def _narrower_widths(fit: np.ndarray) -> np.ndarray:
+    """``[w]``: the widest width of table ``fit`` below ``w`` (0 if none)."""
+    widths = sorted(set(fit.tolist()))
+    return np.array([max([x for x in widths if x < w], default=0) for w in range(65)])
+
+
+_NARROWER = {
+    False: _narrower_widths(CLOSEST_FIXED_BITS),
+    True: _narrower_widths(CLOSEST_ALIGNED_BITS),
+}
+
+
 def _encode_variable(
-    v: np.ndarray, spans: list[tuple[int, int]], signed: bool, aligned: bool
+    v: np.ndarray, d: np.ndarray, spans: list[tuple[int, int]], signed: bool,
+    aligned: bool,
 ) -> list[bytes]:
     """Encode segments with no long fixed-delta runs, one stream per
     ``(lo, hi)`` span of ``v``: chunk each span at 512 and pick DIRECT /
-    PATCHED_BASE / (monotonic) DELTA per chunk by computed size.
+    PATCHED_BASE / (monotonic) DELTA per chunk by computed size.  ``d``
+    holds the deltas ``v[i+1] - v[i]``.
 
     One batched plan covers every chunk of every span, short tails
-    included: each derived array (zigzag, bit widths, per-chunk min/max,
-    base-reduced values, width histograms) is computed once per call and
-    every candidate size is a vector op over chunks.  Payloads are
-    bit-packed with one ``bitpack.pack`` call per width
+    included.  The full-length passes are few: per-chunk min and max of
+    the values and of the deltas, and the base-reduced values when a chunk
+    may take PATCHED_BASE; every width at 100p follows from those extremes
+    and every candidate size is a vector op over chunks.  The 90p and 95p
+    tests count the values above one width per chunk, and a histogram is
+    built only for the chunks with outliers under their 100p width.
+    Payloads are bit-packed with one ``bitpack.pack`` call per width
     (:func:`_pack_pieces`); the Python loop per chunk only writes header
     bytes and a slice of that output.
     """
     if not spans:
         return []
-    if len(spans) == 1:
-        seg = v[spans[0][0] : spans[0][1]]
+    if all(a[1] == b[0] for a, b in zip(spans, spans[1:])):
+        seg, dseg = v[spans[0][0] : spans[-1][1]], d[spans[0][0] : spans[-1][1]]
     else:
         seg = np.concatenate([v[lo:hi] for lo, hi in spans])
-    n = seg.size
+        dseg = np.concatenate([d[lo:hi] for lo, hi in spans])
     fit = CLOSEST_ALIGNED_BITS if aligned else CLOSEST_FIXED_BITS
     # chunk k starts at starts[k] of the concatenation and holds cn[k]
     # values; every span is chunked from its own start.  Laid out in
@@ -313,48 +355,48 @@ def _encode_variable(
     cn = np.array(cns)
     last = starts + (cn - 1)
     u = seg.view(U64)
-    zz = zigzag_encode(seg) if signed else u
-    # d[i] = v[i+1] - v[i], wrapping like the reference's long; chunk k
-    # owns d[start_k .. last_k - 1], d[last_k] leads into the next chunk
-    # (zero after a span's last value)
-    d = np.empty(n, dtype=I64)
-    np.subtract(seg[1:], seg[:-1], out=d[:-1])
-    for k in tails:
-        d[starts_l[k] + cns[k] - 1] = 0
-    d0 = d[starts]
-    absd = np.abs(d).view(U64)
     vmin = np.minimum.reduceat(seg, starts)
     vmax = np.maximum.reduceat(seg, starts)
-    br = u - np.repeat(vmin.view(U64), cn)  # base-reduced, for PATCHED_BASE
-
-    # a DELTA payload holds |d| from the chunk's second delta to its
-    # second-to-last, so the widest of those sets its width
-    absd[starts] = 0  # the first delta is a varint in the header
-    absd[last] = 0
-    # every bit length in one call: values, base-reduced values, then per
-    # chunk the varint payloads of the first value and the first delta,
-    # the widest payload delta, the frame-of-reference span and the base
-    # magnitude
+    # chunk k owns the deltas dseg[start_k .. last_k - 1]; dseg[last_k]
+    # leads out of it and is never read.  A DELTA chunk stores its first
+    # delta d0 in the header and |delta| from its second delta to its
+    # second-to-last in the payload; reduceat over (start + 1, last) pairs
+    # gives the extremes of those (chunks under 3 values have none)
+    d0 = dseg[starts]
+    inner = cn > 2
+    pairs = np.empty(2 * nch, dtype=np.int64)
+    pairs[0::2] = np.minimum(starts + 1, last)
+    pairs[1::2] = last
+    pmin = np.minimum.reduceat(dseg, pairs)[0::2]
+    pmax = np.maximum.reduceat(dseg, pairs)[0::2]
+    # Every per-chunk bit length in one call.  Zigzag grows with |v| on
+    # either side of 0, so the widest value is the zigzag of the minimum
+    # or the maximum (for unsigned values, as uint64, the maximum unless a
+    # value is at or above 2^63); then the varint payloads of the first
+    # value and the first delta, the widest payload delta (from its
+    # extremes), the base magnitude and the frame-of-reference span.
+    firsts = seg[starts]
+    if signed:
+        zz = zigzag_encode(np.concatenate((vmax, vmin, firsts, d0)))
+    else:
+        umax = vmax if (vmin >= 0).all() else np.maximum.reduceat(u, starts).view(I64)
+        zz = np.concatenate((umax, umax, firsts, zigzag_encode(d0).view(I64))).view(U64)
     bits = bits_required(
         np.concatenate(
             (
                 zz,
-                br,
-                zz[starts],
-                zigzag_encode(d0),
-                np.maximum.reduceat(absd, starts),
+                np.abs(np.concatenate((pmin, pmax, vmin))).view(U64),
                 vmax.view(U64) - vmin.view(U64),
-                np.abs(vmin).view(U64),
             )
         )
-    )
-    need = bits[n : 2 * n]
-    varint_bits = bits[2 * n : 2 * n + 2 * nch]
-    dmax_bits, span_bits, base_bits = bits[2 * n + 2 * nch :].reshape(3, nch)
+    ).reshape(8, nch)
+    zmax_bits = np.maximum(bits[0], bits[1])
+    dmax_bits = np.maximum(bits[4], bits[5])
+    dmax_bits[~inner] = 0
+    base_bits, span_bits = bits[6], bits[7]
 
-    widths = _chunk_percentile_widths(bits[: 2 * n], np.concatenate((cn, cn)))
-    bits100, bits90 = widths[0, :nch], widths[1, :nch]
-    br100, br95 = widths[0, nch:], widths[2, nch:]
+    # the 100p widths of the values and of the base-reduced values
+    bits100, br100 = CLOSEST_FIXED_BITS[zmax_bits], CLOSEST_FIXED_BITS[span_bits]
     direct_w = fit[bits100]
     sizes = np.empty((3, nch), dtype=np.int64)
     sizes[_PLAN_DIRECT] = (cn * direct_w + 7) // 8 + 2
@@ -362,21 +404,15 @@ def _encode_variable(
     # DELTA needs a monotonic chunk.  Wire format stores |delta| after the
     # first delta and the decoder takes the common sign from the first
     # delta, so require a nonzero, sign-consistent first delta.  Min and
-    # max of the owned deltas (d[last] replaced by d0, also owned) tell
-    # constant, monotonic and fixed-delta chunks apart.
-    owned = d.copy()
-    owned[last] = d0
-    dmin = np.minimum.reduceat(owned, starts)
-    dmax = np.maximum.reduceat(owned, starts)
-    fixed = dmin == dmax
+    # max of the owned deltas tell constant, monotonic and fixed-delta
+    # chunks apart.
+    dmin, dmax = np.minimum(d0, pmin), np.maximum(d0, pmax)
+    fixed = (dmin == dmax) | ~inner
     flat = d0 == 0
-    const = fixed & flat
-    mono = ((dmin >= 0) | (dmax <= 0)) & ~flat
-    for k in tails:  # only a span's tail chunk can be that short
-        if cns[k] < MIN_REPEAT:
-            const[k] = mono[k] = False
+    const = fixed & flat & inner  # only a span's tail chunk can be that short
+    mono = ((dmin >= 0) | (dmax <= 0)) & ~flat & inner
     delta_w = np.maximum(fit[dmax_bits], 2)  # width 1: code 0 means fixed delta
-    head = np.maximum((varint_bits + 6) // 7, 1).reshape(2, nch)
+    head = np.maximum((bits[2:4] + 6) // 7, 1)
     size_delta = head.sum(axis=0) + 2 + ~fixed * (((cn - 2) * delta_w + 7) // 8)
     size_delta[~mono] = _NOT_APPLICABLE
     sizes[_PLAN_DELTA] = size_delta
@@ -389,17 +425,59 @@ def _encode_variable(
     # (e.g. time-ordered warc_ts with jitter).  Mirrors preparePatchedBlob
     # (RunLengthIntegerWriterV2.java:571-668); the base must be below
     # 2^56 in magnitude.
-    try_patched = ((bits100 - bits90 > 1) | (fit[span_bits] < direct_w)) & (
-        base_bits <= 56
-    )
+    try_patched = (fit[span_bits] < direct_w) & (base_bits <= 56)
     sizes[_PLAN_PATCHED] = _NOT_APPLICABLE
-    data_w = direct_w  # placeholder width for chunks never patched
+    data_w = fit[br100]
+    ppos = pc = np.empty(0, dtype=np.int64)
+    # Percentile widths come from counts of values above a width: a
+    # percentile width is at most T exactly when at most the allowance
+    # int(n*(1-p)) of values need more than T bits (T a fixed width).
+    allowance = (_DISCARD_FRACTION[:, None] * cn).astype(np.int64)
+
+    def values_of(k: np.ndarray) -> slice | np.ndarray:
+        """Index of the values of chunks ``k``, in chunk order."""
+        if k.size == nch:
+            return slice(0, seg.size)
+        return _ranges(starts[k], cn[k])
+
+    def above(k: np.ndarray, vals: np.ndarray, width: np.ndarray) -> np.ndarray:
+        """Per chunk of ``k``, how many of its values ``vals`` need more
+        than ``width`` bits."""
+        over = vals >= np.repeat(_POW2[width], cn[k])
+        off = starts if k.size == nch else np.cumsum(cn[k]) - cn[k]
+        return np.add.reduceat(over, off, dtype=np.int64)
+
+    # the reference's gap test: the 90p width more than one bit under the
+    # 100p width w, i.e. at most T = the widest fixed width up to w - 2
+    # (from 3 bits at 100p, the 90p width being at least 1)
+    gap90 = np.flatnonzero(~try_patched & (base_bits <= 56) & (bits100 > 2))
+    if gap90.size:
+        z = seg[values_of(gap90)]
+        z = zigzag_encode(z) if signed else z.view(U64)
+        t = _NARROWER[False][bits100[gap90] - 1]
+        try_patched[gap90] = above(gap90, z, t) <= allowance[1, gap90]
     if try_patched.any():
-        data_w = fit[br95]
-        ppos = np.flatnonzero(need > np.repeat(data_w, cn))
-        pc = np.searchsorted(starts, ppos, "right") - 1
-        npatch = np.bincount(pc, minlength=nch)
-        pure = npatch == 0
+        br = u - np.repeat(vmin.view(U64), cn)  # base-reduced
+        # Data goes at the 95p width of the base-reduced values, the values
+        # above it patched.  That width is under the 100p width w exactly
+        # when it is at most the next narrower width under w; a chunk with
+        # more values above that is pure frame-of-reference at w, and only
+        # the others need a histogram for the exact width.
+        narrower = _NARROWER[aligned][data_w]
+        patchy = np.flatnonzero(try_patched & (narrower > 0))
+        if patchy.size:
+            n_above = above(patchy, br[values_of(patchy)], narrower[patchy])
+            patchy = patchy[n_above <= allowance[2, patchy]]
+        if patchy.size:
+            at = values_of(patchy)
+            need = bits_required(br[at])
+            data_w[patchy] = fit[_chunk_percentile_widths(need, cn[patchy])[2]]
+            ppos = np.flatnonzero(need > np.repeat(data_w[patchy], cn[patchy]))
+            ppos = ppos + at.start if isinstance(at, slice) else at[ppos]
+            pc = np.searchsorted(starts, ppos, "right") - 1
+        # a chunk whose 95p width is below w has a value above it (the
+        # widest); every other chunk is pure, at w
+        pure = np.bincount(pc, minlength=nch) == 0
         patch_w = CLOSEST_FIXED_BITS[np.maximum(br100 - data_w, 0)]
         # A chunk without outliers is pure frame-of-reference: every value
         # at the full width.  The spec (and the reference decoder) require
@@ -413,7 +491,6 @@ def _encode_variable(
         # leaves at most int(0.05*n) values above it, and the only width
         # over 56 is 64, which fails this test.
         try_patched &= pure | (data_w + patch_w <= 64)
-        data_w[pure] = fit[br100[pure]]
         # patch entries (gap, bits above data_w); the first gap counts from
         # the chunk start, a gap over 255 is split with (255, 0) fillers.
         # At most 25 patches and 2 fillers fit a 512-value chunk, so the
@@ -450,14 +527,25 @@ def _encode_variable(
     plans = plan.tolist()
 
     # --- payloads: one bit-pack per width --------------------------------
+    # DIRECT packs the zigzag values, PATCHED_BASE the base-reduced ones
+    # (pack keeps the low data_w bits), DELTA |delta| from the chunk's
+    # second delta: the deltas themselves when rising, negated when falling
+    zz = seg_d = neg_d = None
+    if _PLAN_DIRECT in plans:
+        zz = zigzag_encode(seg) if signed else u
+    if _PLAN_DELTA in plans:
+        seg_d = dseg.view(U64)
+        if (d0[plan == _PLAN_DELTA] < 0).any():
+            neg_d = np.negative(dseg).view(U64)
+    d0l = d0.tolist()
     pieces = []  # (source, start, count, width)
-    for k, p in enumerate(plans):
+    for k, (p, s, c) in enumerate(zip(plans, starts_l, cns)):
         if p == _PLAN_DIRECT:
-            pieces.append((zz, starts_l[k], cns[k], width[k]))
-        elif p == _PLAN_DELTA:  # |delta| from the chunk's second delta
-            pieces.append((absd, starts_l[k] + 1, cns[k] - 2, width[k]))
-        elif p == _PLAN_PATCHED:  # pack keeps the low data_w bits
-            pieces.append((br, starts_l[k], cns[k], width[k]))
+            pieces.append((zz, s, c, width[k]))
+        elif p == _PLAN_DELTA:
+            pieces.append((seg_d if d0l[k] > 0 else neg_d, s + 1, c - 2, width[k]))
+        elif p == _PLAN_PATCHED:
+            pieces.append((br, s, c, width[k]))
     ndata = len(pieces)
     with_entries: list[int] = []
     if _PLAN_PATCHED in plans and (sel := plan[pc] == _PLAN_PATCHED).any():
@@ -470,7 +558,7 @@ def _encode_variable(
         epv = np.zeros(egap.size, dtype=U64)
         epv[own] = br[ppos[sel]] // _POW2[data_w[e_pc]]
         ent = egap * _POW2[np.repeat(patch_w[e_pc], reps)] + epv
-        kp = np.unique(e_pc)
+        kp = pc[groups][plan[pc[groups]] == _PLAN_PATCHED]
         ne = n_entries[kp]
         with_entries = kp.tolist()
         pieces += zip(
@@ -490,9 +578,7 @@ def _encode_variable(
         base_bytes = ((base_bits + 8) // 8).tolist()
         patch_wl, gap_wl, n_entl = patch_w.tolist(), gap_w.tolist(), n_entries.tolist()
         vmins = vmin.tolist()
-    for k, (p, c, v0, dv) in enumerate(
-        zip(plans, cns, seg[starts].tolist(), d0.tolist())
-    ):
+    for k, (p, c, v0, dv) in enumerate(zip(plans, cns, firsts.tolist(), d0l)):
         if p <= _PLAN_PATCHED:
             h = _PLAN_SUB[p] << 6 | _CODE[width[k]] << 1 | (c - 1) >> 8
             out += bytes((h, (c - 1) & 0xFF))
@@ -542,13 +628,22 @@ def _pack_pieces(pieces: list) -> list:
         groups.setdefault(piece[3], []).append(i)
     out: list = [None] * len(pieces)
     for w, idx in groups.items():
-        offs = [0]
+        src, s, _, _ = pieces[idx[0]]
+        # back to back in one source, each but the last a whole number of
+        # 8-value groups: then that stretch of the source is the layout
+        offs, end, in_place = [0], s, True
         for i in idx:
-            offs.append(offs[-1] + (pieces[i][2] + 7) // 8 * 8)
-        buf = np.zeros(offs[-1], dtype=U64)
-        for i, o in zip(idx, offs):
-            src, s, c, _ = pieces[i]
-            buf[o : o + c] = src[s : s + c]
+            p_src, p_s, c, _ = pieces[i]
+            in_place = in_place and p_src is src and p_s == end == s + offs[-1]
+            end = p_s + c
+            offs.append(offs[-1] + (c + 7) // 8 * 8)
+        if in_place:
+            buf = src[s:end]
+        else:
+            buf = np.zeros(offs[-1], dtype=U64)
+            for i, o in zip(idx, offs):
+                src, s, c, _ = pieces[i]
+                buf[o : o + c] = src[s : s + c]
         blob = memoryview(bitpack.pack(buf, w))
         for i, o in zip(idx, offs):
             out[i] = blob[o * w // 8 : o * w // 8 + (pieces[i][2] * w + 7) // 8]

@@ -25,13 +25,14 @@ _ONE = U64(1)
 def zigzag_encode(v: np.ndarray) -> np.ndarray:
     """int64 -> uint64 zigzag fold: 0,-1,1,-2,... -> 0,1,2,3,...
 
-    Uses ``u + u`` and a comparison mask, whose arithmetic identities are
-    exact.
+    ``(v << 1) ^ (v >> 63)``: the left shift on the uint64 view, the
+    arithmetic right shift on the int64 values (all ones for a negative
+    value), both by a scalar.
     """
     v = np.ascontiguousarray(v, dtype=I64)
-    u = v.view(U64)
-    sign = U64(0) - (v < 0).astype(U64)  # 0 or 0xFFFF...F
-    return (u + u) ^ sign
+    out = v.view(U64) << _ONE
+    out ^= (v >> 63).view(U64)
+    return out
 
 
 def zigzag_decode(z: np.ndarray) -> np.ndarray:

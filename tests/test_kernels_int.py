@@ -136,6 +136,30 @@ def test_bitpack_unpack_sizes_at_every_width(width):
         assert np.array_equal(bitpack.unpack(view, n, width), vals), n
 
 
+def _pack_bit_matrix(vals: np.ndarray, width: int) -> bytes:
+    """The low ``width`` bits of every value, MSB first, through a bit
+    matrix: the packing ``bitpack.pack`` must equal at every size."""
+    bits = np.unpackbits(vals.astype(">u8").view(np.uint8).reshape(-1, 8), axis=1)
+    return np.packbits(bits[:, 64 - width :]).tobytes()
+
+
+@pytest.mark.parametrize("width", range(1, 65))
+def test_bitpack_pack_sizes_at_every_width(width):
+    """``pack`` equals the bit-matrix packing on both sides of
+    ``WORD_PACK_MIN`` and around the 8-value group, with bits set above
+    ``width`` (PATCHED_BASE packs base-reduced values whose patched bits
+    lie there), and ``unpack`` reads it back."""
+    rng = np.random.default_rng(1000 + width)
+    low = U64(2**width - 1) if width < 64 else U64(2**64 - 1)
+    for n in (1, 7, 8, 9, 511, 512, 513, 40_000, 75_000):
+        vals = rng.integers(0, 2**63, n, dtype=np.uint64) * U64(2) + rng.integers(
+            0, 2, n, dtype=np.uint64
+        )
+        packed = bitpack.pack(vals, width)
+        assert packed == _pack_bit_matrix(vals, width), n
+        assert np.array_equal(bitpack.unpack(packed, n, width), vals & low), n
+
+
 # ---------------------------------------------------------------------------
 # byterle / bitfield
 # ---------------------------------------------------------------------------
@@ -228,6 +252,34 @@ def test_rlev2_patterns(name, vals, signed, aligned):
         # must still round-trip the two's-complement view
         pass
     _rt(vals, signed=signed, aligned=aligned)
+
+
+@pytest.mark.parametrize("aligned", [False, True])
+@pytest.mark.parametrize("signed", [False, True])
+def test_rlev2_cuts_equal_separate_encodes(signed, aligned):
+    """One batched ``encode`` over cut groups gives each group the bytes of
+    encoding it alone, and they decode back.  The groups share a plan:
+    short falling DELTA groups whose payloads of one width lie a few values
+    apart in the batch (they must not be packed as one stretch), outlier
+    chunks that need the 95p width, chunks under the 90p gap test and
+    unsigned values at or above 2^63."""
+    rng = np.random.default_rng(7 + 2 * signed + aligned)
+    falling = [-2, -2, -4, -5, -7, -7, -8, -8, -9, -10, -10, -11, -13, -13, -14, -16]
+    outliers = rng.integers(0, 2**9, 3_000)
+    outliers[rng.random(3_000) < 0.03] = 2**40
+    shapes = [
+        (falling, [3, 11]),
+        (outliers, [512, 700, 1_800, 2_048]),
+        (rng.integers(0, 30, 2_500), [1_024, 2_000]),
+        (np.where(rng.random(1_500) < 0.5, -1, 2**62) - rng.integers(0, 9, 1_500), [600]),
+    ]
+    for v, cuts in shapes:
+        v = np.asarray(v, dtype=I64)
+        blobs = rlev2.encode(v, signed, aligned, cuts=cuts)
+        groups = np.split(v, cuts)
+        assert blobs == [rlev2.encode(g, signed, aligned) for g in groups]
+        for blob, g in zip(blobs, groups):
+            assert np.array_equal(rlev2.decode(blob, g.size, signed), g)
 
 
 @pytest.mark.parametrize("width", [1, 2, 4, 7, 24, 33, 56, 63])

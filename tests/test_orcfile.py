@@ -1340,3 +1340,26 @@ def test_null_free_stripe_java_reader_skips(spark, tmp_path):
         assert [r.asDict(recursive=True) for r in full] == want
     finally:
         spark.conf.unset("spark.sql.orc.filterPushdown")
+
+
+@pytest.mark.parametrize("stride", [0, 400])
+def test_sliced_single_chunk_table_reads_back(tmp_path, stride):
+    """``write_orc`` takes a single-chunk column as it is, offset and all:
+    a table sliced at an offset (every kind, a dense union among them, and
+    a sparse union) reads back value for value."""
+    import conftest
+
+    from sparc.engine import orcread
+
+    n = 1_500
+    tags = pa.array((np.arange(n) % 3 == 0).astype(np.int8))
+    sparse = pa.UnionArray.from_sparse(
+        tags, [pa.array(np.arange(n)), pa.array([f"s{i}" for i in range(n)])], ["i", "s"]
+    )
+    table = conftest.mixed_orc_table(n=n).append_column("sp", sparse).slice(333, 900)
+    assert all(c.num_chunks == 1 and c.chunk(0).offset == 333 for c in table.columns)
+    path = str(tmp_path / "sliced.orc")
+    orcfile.write_orc(table, path, row_index_stride=stride, rows_per_stripe=500)
+    back = orcread.read_orc(path)
+    for name in table.column_names:
+        assert back.column(name).to_pylist() == table.column(name).to_pylist(), name

@@ -5,7 +5,8 @@ it batches those encodes must keep every file byte-identical (stream bytes,
 row-index positions, statistics and the tail all follow from them).  Each
 case writes a file and compares its sha256 against the digest recorded
 before the writer was batched (the two-stripe cases: before the unindexed
-and row-indexed writer walks became one).
+and row-indexed writer walks became one; the string-statistics cases:
+before stripe and file string min/max were merged from the row groups).
 
 Cases: the first 75,000 rows of the sf0.1 ``lineitem`` table (ZSTD, stride
 10,000: the ``orc-lineitem`` benchmark shape), and the seeded mixed table of
@@ -14,7 +15,10 @@ nested columns) under NONE and ZSTD, with and without a row index; and an
 unindexed two-stripe table (``_two_stripe_table``) whose string columns,
 flat and inside a list, are dictionary-encoded in stripe 0 and direct in
 stripe 1 and whose nullable columns have nulls only in stripe 0, under
-NONE and ZSTD and once as a 0.11 file.  To regenerate after an *intended*
+NONE and ZSTD and once as a 0.11 file; and an indexed two-stripe string
+table (``_string_stats_table``) whose stripe and file string statistics
+cover an all-null row group, empty strings, non-ASCII and over-limit
+values, under NONE and ZSTD.  To regenerate after an *intended*
 format change::
 
     PYTHONPATH=.:tests python tests/test_orcfile_golden.py
@@ -91,6 +95,47 @@ def _two_stripe_cases():
         }
 
 
+def _string_stats_table(n: int = 3_000):
+    """Strings whose row-group, stripe and file statistics must agree, in
+    two stripes of 2,000 and 1,000 rows (row groups of 400): nulls
+    throughout, rows 400-799 all null (a row group with no values),
+    non-ASCII values that sort above every ASCII one, values past the
+    1,024-byte statistics limit, the least (empty) string only in row
+    groups 3 and 6 and the greatest (emoji) ones only in row groups 2 and
+    5, so each stripe's extremes lie in different row groups."""
+    import pyarrow as pa
+
+    words = ["zeta", "Ärger", "日本語", "alpha", "naïve", "Zulu"]
+    vals = []
+    for i in range(n):
+        group = i // 400
+        if i % 7 == 3 or group == 1:
+            vals.append(None)
+        elif i % 997 == 5:
+            vals.append(("é" if i < 2_000 else "~") * 600)  # 1,200 / 600 bytes
+        elif i % 11 == 0 and group in (3, 6):
+            vals.append("")
+        elif i % 13 == 0 and group in (2, 5):
+            vals.append(f"😀{i}")
+        else:
+            vals.append(f"{words[i % len(words)]}{i % 61}")
+    return pa.table(
+        {
+            "s": pa.array(vals, pa.string()),
+            "ls": pa.array(vals[::-1], pa.large_string()),
+        }
+    )
+
+
+def _string_stats_cases():
+    t = _string_stats_table()
+    for comp in ("NONE", "ZSTD"):
+        yield f"string_stats/{comp}/400", t, {
+            "compression": comp, "row_index_stride": 400,
+            "rows_per_stripe": 2_000,
+        }
+
+
 def _digest(table, kwargs: dict) -> str:
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "golden.orc")
@@ -108,6 +153,8 @@ GOLDEN = {
     "two_stripe/0.12/ZSTD": "27aa2348b2f970214673658a8cb13f2464aa9730c7c7d1d212286cf4c47e225e",
     "two_stripe/0.11/NONE": "9d179fbe8bf8d328be6d7d87cb954fe15b4da5a88494bca14f5446ccf2512db1",
     "lineitem/75000/ZSTD/10000": "e387a1da80fb09f691070d8cd49d3502dba27db4bcf57dca9986b135cdc1be38",
+    "string_stats/NONE/400": "502e40cca36ded84db9fd5368483a6710605f7e5fae475a2d4a700b65f4d1f6e",
+    "string_stats/ZSTD/400": "a06116c2bda83bebb4036c7c59c68d1595de0773fb3ca8b0213ddd6c7a65bce4",
 }
 
 
@@ -123,6 +170,12 @@ def test_write_orc_two_stripe_bytes_match_golden(case):
     assert _digest(table, kwargs) == GOLDEN[case]
 
 
+@pytest.mark.parametrize("case", [c[0] for c in _string_stats_cases()])
+def test_write_orc_string_stats_bytes_match_golden(case):
+    (table, kwargs), = [(t, kw) for name, t, kw in _string_stats_cases() if name == case]
+    assert _digest(table, kwargs) == GOLDEN[case]
+
+
 @pytest.mark.skipif(not os.path.exists(LINEITEM), reason="sf0.1 testdata absent")
 def test_write_orc_lineitem_bytes_match_golden():
     name, table, kwargs = _lineitem_case()
@@ -130,7 +183,7 @@ def test_write_orc_lineitem_bytes_match_golden():
 
 
 if __name__ == "__main__":
-    cases = list(_mixed_cases()) + list(_two_stripe_cases())
+    cases = list(_mixed_cases()) + list(_two_stripe_cases()) + list(_string_stats_cases())
     if os.path.exists(LINEITEM):
         cases.append(_lineitem_case())
     print("GOLDEN = {")

@@ -77,6 +77,57 @@ def test_format_nanos_contract():
     assert packed[3] == (1 << 3) | 2  # 1000 = 1 * 10^3 -> zeros=3 -> low3=2
 
 
+def _format_nanos_scalar(x: int) -> int:
+    """One value the way the packing has always been written: the most
+    trailing zeros from 7 down to 2 that divide it, as code zeros - 1."""
+    if x == 0 or x % 100:
+        return x << 3
+    z = next(z for z in range(7, 1, -1) if x % 10**z == 0)
+    return (x // 10**z) << 3 | (z - 1)
+
+
+def _parse_nanos_scalar(v: int) -> int:
+    zeros = v & 7
+    return (v >> 3) * (10 ** (zeros + 1) if zeros else 1)
+
+
+@pytest.mark.parametrize("unit", ["ns", "us", "ms"])
+def test_format_and_parse_nanos_match_scalar_packing(unit):
+    """Zeros, values with 0 to 8 trailing zeros (all a nanosecond field
+    can hold) and the nanos of ``unit`` timestamps pack and unpack exactly
+    as value-by-value packing does, all-zero input included (it skips the
+    digit loop)."""
+    scale = {"ns": 1, "us": 1_000, "ms": 1_000_000}[unit]
+    rng = np.random.default_rng(scale)
+    trailing = [d * 10**z for d in rng.integers(1, 10, 100).tolist() for z in range(9)]
+    ticks = rng.integers(0, 10**9 // scale, 2_000) * scale
+    for nanos in (
+        np.zeros(1_000, np.int64),
+        np.array([0] * 5 + trailing + [999_999_999, 1, 10, 100_000_000], np.int64),
+        ticks,
+        np.where(rng.random(2_000) < 0.9, 0, ticks),
+    ):
+        packed = stripe.format_nanos(nanos)
+        assert packed.tolist() == [_format_nanos_scalar(x) for x in nanos.tolist()]
+        back = stripe.parse_nanos(packed)
+        assert back.tolist() == [_parse_nanos_scalar(x) for x in packed.tolist()]
+        assert np.array_equal(back, nanos)
+
+
+def test_sliced_single_chunk_table_roundtrip():
+    """A table sliced at an offset hands the encoder its one chunk as is
+    (no combined copy), so every column kind, nested ones included, is
+    encoded from an array with a nonzero offset."""
+    import conftest
+
+    table = conftest.mixed_orc_table(n=1_500).slice(333, 900)
+    assert all(c.num_chunks == 1 and c.chunk(0).offset == 333 for c in table.columns)
+    streams, footer = stripe.encode_stripe(table)
+    out = stripe.decode_stripe(streams, footer)
+    for name in table.column_names:
+        assert out.column(name).to_pylist() == table.column(name).to_pylist(), name
+
+
 def test_float_roundtrip_bitexact():
     vals = RNG.random(5000)
     vals[0] = np.nan
