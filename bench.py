@@ -137,6 +137,8 @@ def gen_pages_parquet(spark, n_rows: int, path: str, chunk: int = 20_000) -> Non
     global row index + seed, so parallelism doesn't change the data)."""
     import pyarrow as pa
 
+    from sparc.job.partition import local_frame
+
     if os.path.exists(path):
         try:
             got = spark.read.parquet(path).count()
@@ -161,7 +163,7 @@ def gen_pages_parquet(spark, n_rows: int, path: str, chunk: int = 20_000) -> Non
     # each file several row groups — the shape of real web-table files
     # (hundreds of MB, many row groups), which is what lets the direct-
     # scan path split below file granularity at this bench's tiny SF.
-    df = spark.createDataFrame([(o,) for o in offsets], "off long").repartition(
+    df = local_frame(spark, [(o,) for o in offsets], "off long").repartition(
         max(len(offsets), 1)
     )
     out = df.mapInArrow(

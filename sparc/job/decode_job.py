@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine import sarg as sarg_mod
 from ..engine import stripe as stripe_mod
+from . import partition as part_mod
 from .encode_job import STREAMS_SCHEMA
 
 
@@ -258,7 +259,7 @@ def run_decode(
     # files), so the decode is a single stage over the manifest-file list
     # — no JVM parquet scan, no repartition shuffle, no stage barrier.
     # Round-robin interleave of the sorted path list balances tasks
-    # (manifest files ~ uniform stripes/task); the LocalRelation slices
+    # (manifest files ~ uniform stripes/task); the LocalTableScan slices
     # it contiguously.
     paths = _manifest_paths(streams_dir)
     # no max(cores, 8) floor here: LocalTableScanExec caps parallelism at
@@ -286,19 +287,19 @@ def run_decode(
         predicate=pred if rowgroup_prune else None,
         stripe_predicate=pred, map_fn=map_fn,
     )
-    # JVM-only unit distribution via a LocalRelation.  A parallelize()
-    # route would make the unit list a *Python* RDD, so every decode would
-    # run a hidden extra Python stage (one deserializer task per partition
-    # through a second worker pool) before the scan — measured ~0.2 core-s
-    # and ~10 ms of wall PER TASK of pure orchestration, about half the
-    # whole job's fixed cost at bench scale.  A LocalRelation scan
-    # parallelizes to defaultParallelism with near-even contiguous slices
-    # and NO exchange, keeping the decode a single stage; the interleaved
-    # ordering gives round-robin unit placement under contiguous slicing
-    # (manifest diversity per task, shards of one manifest spread across
-    # tasks).
-    rr = [u for j in range(n_parts) for u in units[j::n_parts]]
-    paths_df = spark.createDataFrame(rr, "path string, shard int, n_shards int")
+    # JVM-only unit distribution via an Arrow LocalTableScan
+    # (partition.local_frame).  createDataFrame on the Python list would
+    # plan as Scan ExistingRDD over a Python RDD, so every decode task
+    # would first run a hidden Python stage in a second worker pool.  The
+    # LocalTableScan runs min(units, defaultParallelism) tasks with
+    # near-even contiguous slices and NO exchange, keeping the decode a
+    # single stage; the interleaved ordering gives round-robin unit
+    # placement under contiguous slicing (manifest diversity per task,
+    # shards of one manifest spread across tasks).
+    paths_df = part_mod.local_frame(
+        spark, part_mod.round_robin(units, n_parts),
+        "path string, shard int, n_shards int",
+    )
     if n_partitions and n_partitions != spark.sparkContext.defaultParallelism:
         # explicit caller override: worth one (tiny, metadata-only)
         # round-robin exchange to honor the requested task count

@@ -421,9 +421,11 @@ def _plan_units(
         distributed = len(files) > 64
     schema = "idx long, path string, rg_lo int, rg_hi int"
     if not distributed:
-        return spark.createDataFrame(_plan_units_rows(files, per), schema)
+        return part_mod.local_frame(spark, _plan_units_rows(files, per), schema)
 
-    files_df = spark.createDataFrame(list(enumerate(files)), "fidx long, path string")
+    files_df = part_mod.local_frame(
+        spark, list(enumerate(files)), "fidx long, path string"
+    )
     n_parts = max(1, min(len(files), spark.sparkContext.defaultParallelism * 2))
 
     def plan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -638,16 +640,17 @@ def run_encode_paths(
         balanced = False
     else:
         # driver-side plan: interleave the unit rows round-robin across
-        # the LocalRelation's contiguous slices (the paths decode
+        # the Arrow LocalTableScan's contiguous slices (the paths decode
         # trick) so the encode is a SINGLE STAGE — no count() job, no
-        # repartition exchange; units of one file spread across tasks
+        # repartition exchange, no Python stage ahead of the encode;
+        # units of one file spread across min(units, cores) tasks
         rows = _plan_units_rows(files, per)
         n_parts = max(
             1, min(spark.sparkContext.defaultParallelism, len(rows))
         )
-        rr = [u for j in range(n_parts) for u in rows[j::n_parts]]
-        units_df = spark.createDataFrame(
-            rr, "idx long, path string, rg_lo int, rg_hi int"
+        units_df = part_mod.local_frame(
+            spark, part_mod.round_robin(rows, n_parts),
+            "idx long, path string, rg_lo int, rg_hi int",
         )
         n_units = len(rows)
         balanced = True
@@ -709,7 +712,7 @@ def run_encode_units(
                 "left_anti",
             )
             # the anti-join changed the todo count, and the units left
-            # sit in the LocalRelation slices of the tasks that died:
+            # sit in the LocalTableScan slices of the tasks that died:
             # only the round-robin exchange spreads them over the cores
             n_units = None
             balanced = False
@@ -728,7 +731,7 @@ def run_encode_units(
     n_units_todo = units_df.count() if n_units is None else n_units
     if balanced and not n_partitions:
         # caller guarantees the unit rows are interleaved so that the
-        # LocalRelation's contiguous slices balance (run_encode_paths
+        # LocalTableScan's contiguous slices balance (run_encode_paths
         # does this for driver-side plans, same trick as the
         # decode): single stage, NO exchange, no extra job — each task
         # carries ~n_units/cores uniform units, which balances BETTER

@@ -19,6 +19,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..job.partition import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -257,8 +259,8 @@ def ivf_topk(
         F.col(vec_col).cast("array<double>").alias("cv"),
     ).withColumn("cluster", _nearest_centroid_col(F.col("cv"), centroids))
     spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(
-        [(i, c_) for i, c_ in enumerate(centroids)], "cluster int, cvec array<double>"
+    cent_df = local_frame(
+        spark, list(enumerate(centroids)), "cluster int, cvec array<double>"
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),

@@ -96,13 +96,16 @@ def init_worker() -> None:
         if spark_home and not hasattr(zipimport.zipimporter, "_sparc_inval"):
             orig = zipimport.zipimporter.invalidate_caches
 
-            _home = os.path.abspath(spark_home).rstrip(os.sep) + os.sep
+            # real paths on both sides: SPARK_HOME is often a stable
+            # symlink to a versioned install directory, while the worker
+            # PYTHONPATH names the spark-core jar by its real path
+            _home = os.path.realpath(spark_home).rstrip(os.sep) + os.sep
 
             def _inval(self, _orig=orig, _home=_home):
                 archive = getattr(self, "archive", "")
                 # prefix check on a separator boundary: /opt/spark-extra
                 # must NOT match a /opt/spark home
-                if (os.path.abspath(archive) + os.sep).startswith(_home):
+                if (os.path.realpath(archive) + os.sep).startswith(_home):
                     return
                 _orig(self)
 

@@ -391,27 +391,38 @@ def test_pyscan_row_group_units(spark, tmp_path):
     assert decode_job.run_decode(spark, out).count() == N_ROWS
 
 
-def test_pyscan_encode_is_single_stage(spark, pages_path, tmp_path):
+def test_pyscan_encode_is_single_stage(spark, tmp_path):
     """A driver-planned pyscan encode must run as ONE Spark job with ONE
     stage: no count() job over the unit plan, no repartition exchange —
     the per-run fixed cost that multiplies at 1000-executor scale
     (round-5: removing both cut the 3 GiB XL wall ~40%% same-window).
-    Balance comes from round-robin-interleaved unit rows in the
-    LocalRelation's contiguous slices (the files-sink decode trick)."""
+    Balance comes from round-robin-interleaved unit rows in the Arrow
+    LocalTableScan's contiguous slices (the files-sink decode trick), so
+    6 units fan out over min(6, cores) tasks and none of them is empty."""
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "pages.parquet")
+    pq.write_table(pages.generate(N_ROWS, seed=42), src, row_group_size=1000)
     st = spark.sparkContext.statusTracker()
     out = str(tmp_path / "streams")
     before = set(st.getJobIdsForGroup(None) or [])
-    encode_job.run_encode_paths(
-        spark, pages_path, out,
-        target_rows_per_stripe=1500, fingerprint="pages@42", resume=False,
+    res = encode_job.run_encode_paths(
+        spark, src, out,
+        target_rows_per_stripe=1000, fingerprint="pages@42", resume=False,
     )
+    assert res["n_units"] == 6  # one unit per 1000-row row group
     new_jobs = sorted(set(st.getJobIdsForGroup(None) or []) - before)
     assert len(new_jobs) == 1, f"expected 1 job, ran {len(new_jobs)}"
     info = st.getJobInfo(new_jobs[0])
     stages = [s for s in (st.getStageInfo(i) for i in info.stageIds) if s]
     assert len(stages) == 1, f"expected 1 stage, got {len(stages)}"
     # and the single stage actually fanned out across cores
-    assert stages[0].numTasks > 1
+    n_tasks = stages[0].numTasks
+    assert n_tasks > 1
+    assert n_tasks == min(6, spark.sparkContext.defaultParallelism)
+    # no empty task: each task commits its footers as one part file, and
+    # an empty task writes none
+    assert len(glob.glob(os.path.join(out, "part-*"))) == n_tasks
     assert decode_job.run_decode(spark, out).count() == N_ROWS
 
 
@@ -505,7 +516,7 @@ def test_pyscan_resume_after_partial_failure_rebalances(
     spark, tmp_path, monkeypatch
 ):
     """A resumed pyscan plan must leave the balanced (exchange-free) path:
-    the units still to do sit in the LocalRelation slices of the tasks
+    the units still to do sit in the LocalTableScan slices of the tasks
     that died, so without the round-robin exchange they would run on a
     few cores.  The resumed run still completes every stripe."""
     import pyarrow.parquet as pq
@@ -547,6 +558,82 @@ def test_pyscan_explicit_n_partitions_uses_exchange(
         n_partitions=spark.sparkContext.defaultParallelism,
     )
     assert len(plans) == 1 and "REPARTITION_BY_NUM" in plans[0]
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_unit_frames_are_local_table_scans(spark, pages_path, tmp_path, monkeypatch):
+    """Every unit list the engine distributes is a JVM-only Arrow
+    LocalTableScan.  A ``Scan ExistingRDD`` over a Python list would run
+    a hidden Python stage (a second worker pool re-serializing the rows)
+    ahead of every task of the job."""
+    plans = _spy_encode_plans(spark, monkeypatch)
+    out = str(tmp_path / "streams")
+    encode_job.run_encode_paths(
+        spark, pages_path, out,
+        target_rows_per_stripe=1500, fingerprint="pages@42", resume=False,
+    )
+    decode_job.run_decode(spark, out)
+    assert len(plans) == 2  # the encode's units, the decode's units
+    for distributed in (False, True):
+        plans.append(_executed_plan(encode_job._plan_units(
+            spark, [pages_path], 1500, distributed=distributed,
+        )))
+    for plan in plans:
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+@pytest.mark.parametrize("n_units", [1, 3, 8, 40])
+def test_units_reach_tasks_round_robin(spark, tmp_path, monkeypatch, n_units):
+    """A driver-planned encode runs min(units, cores) tasks, and each
+    task receives its contiguous slice of the round-robin interleave:
+    task j holds units j, j + tasks, ... of the plan."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import TaskContext
+
+    src = str(tmp_path / "pages.parquet")
+    pq.write_table(pages.generate(10 * n_units, seed=7), src, row_group_size=10)
+    DataFrame = type(spark.range(1))
+    captured = []
+
+    class Captured(Exception):
+        pass
+
+    def capture(self, *a, **k):
+        captured.append(self)
+        raise Captured
+
+    monkeypatch.setattr(DataFrame, "mapInArrow", capture)
+    with pytest.raises(Captured):
+        encode_job.run_encode_paths(
+            spark, src, str(tmp_path / "streams"),
+            target_rows_per_stripe=10, resume=False,
+        )
+    monkeypatch.undo()
+
+    def tag(batches):
+        task = TaskContext.get().partitionId()
+        for b in batches:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([task] * b.num_rows, pa.int32()), b.column("idx")],
+                names=["task", "idx"],
+            )
+
+    got: dict[int, list[int]] = {}
+    for r in captured[0].mapInArrow(tag, "task int, idx long").collect():
+        got.setdefault(r.task, []).append(r.idx)
+    ids = [idx for idx, *_ in encode_job._plan_units_rows([src], 10)]
+    assert len(ids) == n_units
+    n_tasks = min(n_units, spark.sparkContext.defaultParallelism)
+    rr = partition.round_robin(ids, n_tasks)
+    assert got == {
+        j: rr[j * n_units // n_tasks:(j + 1) * n_units // n_tasks]
+        for j in range(n_tasks)
+    }
+    assert got == {j: ids[j::n_tasks] for j in range(n_tasks)}
 
 
 def test_distributed_unit_planning_many_files(spark, tmp_path, monkeypatch):

@@ -7,6 +7,7 @@ the runtime-added --py-files location — keep full invalidation
 semantics, or addPyFile after the first task would silently stop
 working."""
 
+import contextlib
 import gc
 import importlib
 import os
@@ -24,12 +25,10 @@ def _make_zip(path: str, member: str, body: str = "x = 1\n") -> None:
         z.writestr(member, body)
 
 
-@pytest.fixture
-def patched_runtime(tmp_path, monkeypatch):
-    """Run init_worker against a fake SPARK_HOME, restoring global state."""
-    fake_home = tmp_path / "spark_home"
-    fake_home.mkdir()
-    monkeypatch.setenv("SPARK_HOME", str(fake_home))
+@contextlib.contextmanager
+def _patched_home(home, monkeypatch):
+    """Run init_worker with SPARK_HOME=home, restoring global state."""
+    monkeypatch.setenv("SPARK_HOME", str(home))
     orig_inval = zipimport.zipimporter.invalidate_caches
     had_flag = hasattr(zipimport.zipimporter, "_sparc_inval")
     orig_tuned = runtime._worker_tuned
@@ -39,12 +38,33 @@ def patched_runtime(tmp_path, monkeypatch):
         zipimport.zipimporter.invalidate_caches = orig_inval
     try:
         runtime.init_worker()
-        yield fake_home
+        yield
     finally:
         zipimport.zipimporter.invalidate_caches = orig_inval
         if hasattr(zipimport.zipimporter, "_sparc_inval"):
             del zipimport.zipimporter._sparc_inval
         runtime._worker_tuned = orig_tuned
+
+
+@pytest.fixture
+def patched_runtime(tmp_path, monkeypatch):
+    """Run init_worker against a fake SPARK_HOME."""
+    fake_home = tmp_path / "spark_home"
+    fake_home.mkdir()
+    with _patched_home(fake_home, monkeypatch):
+        yield fake_home
+
+
+@pytest.fixture
+def symlinked_runtime(tmp_path, monkeypatch):
+    """Run init_worker against a SPARK_HOME that is a symlink to a
+    versioned install directory; yields (home, real install dir)."""
+    real = tmp_path / "spark-4.1.2-bin"
+    real.mkdir()
+    home = tmp_path / "spark"
+    home.symlink_to(real, target_is_directory=True)
+    with _patched_home(home, monkeypatch):
+        yield home, real
 
 
 def test_sparkhome_zip_invalidation_skipped(patched_runtime, tmp_path):
@@ -93,3 +113,31 @@ def test_prefix_match_respects_path_boundary(patched_runtime, tmp_path):
     _make_zip(sib_zip, "mod_f.py")
     imp.invalidate_caches()
     assert imp.find_spec("mod_f") is not None
+
+
+def _invalidation_kept(zip_path: str, first: str, second: str) -> bool:
+    """Whether a zipimporter on zip_path sees a member appended after its
+    first lookup once invalidate_caches() has run."""
+    _make_zip(zip_path, first)
+    imp = zipimport.zipimporter(zip_path)
+    assert imp.find_spec(first[:-3]) is not None
+    _make_zip(zip_path, second)
+    imp.invalidate_caches()
+    return imp.find_spec(second[:-3]) is not None
+
+
+def test_symlinked_sparkhome_zip_by_real_path_skipped(symlinked_runtime):
+    # the worker PYTHONPATH names the Spark jar by its real path, not
+    # through the SPARK_HOME symlink
+    home, real = symlinked_runtime
+    assert not _invalidation_kept(str(real / "core.jar"), "mod_g.py", "mod_h.py")
+    assert not _invalidation_kept(str(home / "lib.zip"), "mod_i.py", "mod_j.py")
+
+
+def test_symlinked_sparkhome_prefix_respects_path_boundary(symlinked_runtime):
+    # siblings of the link and of its target are not inside the home
+    home, real = symlinked_runtime
+    for i, sibling in enumerate((str(home) + "-extra", str(real) + "-extra")):
+        os.makedirs(sibling)
+        sib_zip = os.path.join(sibling, "lib.zip")
+        assert _invalidation_kept(sib_zip, f"mod_s{i}a.py", f"mod_s{i}b.py")
