@@ -560,10 +560,6 @@ def test_pyscan_explicit_n_partitions_uses_exchange(
     assert len(plans) == 1 and "REPARTITION_BY_NUM" in plans[0]
 
 
-def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_unit_frames_are_local_table_scans(spark, pages_path, tmp_path, monkeypatch):
     """Every unit list the engine distributes is a JVM-only Arrow
     LocalTableScan.  A ``Scan ExistingRDD`` over a Python list would run
@@ -578,9 +574,10 @@ def test_unit_frames_are_local_table_scans(spark, pages_path, tmp_path, monkeypa
     decode_job.run_decode(spark, out)
     assert len(plans) == 2  # the encode's units, the decode's units
     for distributed in (False, True):
-        plans.append(_executed_plan(encode_job._plan_units(
-            spark, [pages_path], 1500, distributed=distributed,
-        )))
+        units = encode_job._plan_units(
+            spark, [pages_path], 1500, distributed=distributed
+        )
+        plans.append(units._jdf.queryExecution().executedPlan().toString())
     for plan in plans:
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
