@@ -19,20 +19,21 @@ LANGS = np.array(
 N_HOSTS = 1000
 TS_BASE_US = 1_704_067_200_000_000  # 2024-01-01 UTC in microseconds
 
-_WORDS = None
+_WORDS: dict[int, np.ndarray] = {}
 
 
 def _vocab(seed: int = 42) -> np.ndarray:
-    global _WORDS
-    if _WORDS is None:
+    """The seed's 5,000-word vocabulary (memoized per seed, so a table
+    does not depend on which seeds the process generated before)."""
+    if seed not in _WORDS:
         rng = np.random.default_rng(seed ^ 0x5CA1AB1E)
         letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
         words = []
         for i in range(5000):
             ln = 2 + int(rng.integers(0, 9))
             words.append("".join(rng.choice(letters, ln)))
-        _WORDS = np.array(words)
-    return _WORDS
+        _WORDS[seed] = np.array(words)
+    return _WORDS[seed]
 
 
 def _zipf_probs(n: int, alpha: float = 1.1) -> np.ndarray:
