@@ -55,14 +55,6 @@ FSST_POST_GATE = 0.90  # auto mode: required post-codec sample win
 # bool bitfield segments stay byte-aligned at every group boundary
 ROW_INDEX_STRIDE = 10_000
 
-
-def _fsst_enabled() -> bool:
-    """SPARC_FSST=0 disables the FSST candidate entirely (never probed);
-    default auto mode probes a sample and uses FSST only on a measured
-    post-codec win (see _encode_binary_like)."""
-    import os
-
-    return os.environ.get("SPARC_FSST", "1") != "0"
 FSST_MAX_AVG_LEN = 4096  # strings only; big blobs go straight to zstd
 FSST_SAMPLE = 1 << 17  # auto-gate probe sample (one codec window either way)
 # auto mode probes only streams big enough for a win to matter — the probe
@@ -183,6 +175,11 @@ class _ColumnEncoder:
     def val_slice(self, g: int) -> slice:
         return slice(int(self.voffs[g]), int(self.voffs[g + 1]))
 
+    def rle_segments(self, kind: str, vals: np.ndarray, signed: bool) -> None:
+        """``kind``'s per-group RLEv2 segments from one call cut at the
+        group boundaries; each segment is its group encoded alone."""
+        self.seg_streams[kind] = rlev2.encode(vals, signed, cuts=self.voffs[1:-1])
+
     def set_rg_stats(self, g: int, st: stats_mod.ColumnStats) -> None:
         self.row_index[g]["n_rows"] = self.rg_rows[g]
         self.row_index[g]["stats"] = st.to_dict()
@@ -228,9 +225,9 @@ def encode_column(
     """Encode one column -> ({stream_kind: bytes}, column footer dict).
 
     ``stride`` > 0 produces per-row-group stream segments + stats (the
-    row-group index); ``stride=None`` emits the legacy single-segment
-    layout (used for nested children, whose value space does not align
-    with parent row groups)."""
+    row-group index); ``stride=None`` writes each stream as one segment
+    with no row index (unindexed stripes, and nested children, whose
+    value space does not align with parent row groups)."""
     arr = as_array(arr)
     t = arr.type
     if pa.types.is_decimal(t) and not pa.types.is_decimal128(t):
@@ -243,11 +240,9 @@ def encode_column(
 
     if pa.types.is_integer(t) or pa.types.is_date(t):
         vals = _arrow_nonnull_int64(arr)
-        enc.seg_streams["DATA"] = []
+        enc.rle_segments("DATA", vals, signed=True)
         for g in range(len(enc.bounds)):
-            v = vals[enc.val_slice(g)]
-            enc.seg_streams["DATA"].append(rlev2.encode(v, signed=True))
-            enc.set_rg_stats(g, stats_mod.int_stats(v, enc.rg_nulls[g]))
+            enc.set_rg_stats(g, stats_mod.int_stats(vals[enc.val_slice(g)], enc.rg_nulls[g]))
         meta["encoding"] = "rlev2"
         meta["stats"] = stats_mod.int_stats(vals, arr.null_count).to_dict()
     elif pa.types.is_decimal(t) and t.precision > 18:
@@ -258,17 +253,12 @@ def encode_column(
         from ..kernels import bigdec
 
         lo, hi = _decimal_unscaled_words(arr)
-        scale = np.int64(t.scale)
         enc.seg_streams["DATA"] = []
-        enc.seg_streams["SECONDARY"] = []
         for g in range(len(enc.bounds)):
             sl = enc.val_slice(g)
-            glo, ghi = lo[sl], hi[sl]
-            enc.seg_streams["DATA"].append(bigdec.encode(glo, ghi))
-            enc.seg_streams["SECONDARY"].append(
-                rlev2.encode(np.full(glo.size, scale), signed=False)
-            )
-            enc.set_rg_stats(g, stats_mod.decimal128_stats(glo, ghi, enc.rg_nulls[g]))
+            enc.seg_streams["DATA"].append(bigdec.encode(lo[sl], hi[sl]))
+            enc.set_rg_stats(g, stats_mod.decimal128_stats(lo[sl], hi[sl], enc.rg_nulls[g]))
+        enc.rle_segments("SECONDARY", np.full(lo.size, t.scale, np.int64), signed=False)
         meta["encoding"] = "decimal_big"
         meta["precision"] = t.precision
         meta["scale"] = t.scale
@@ -279,10 +269,9 @@ def encode_column(
         # precision/scale in the footer.  precision <= 18 only (the
         # unscaled value must fit int64).
         vals = _decimal_unscaled_int64(arr)
-        enc.seg_streams["DATA"] = []
+        enc.rle_segments("DATA", vals, signed=True)
         for g in range(len(enc.bounds)):
             v = vals[enc.val_slice(g)]
-            enc.seg_streams["DATA"].append(rlev2.encode(v, signed=True))
             enc.set_rg_stats(g, stats_mod.int_stats(v, enc.rg_nulls[g], kind="decimal"))
         meta["encoding"] = "decimal64"
         meta["precision"] = t.precision
@@ -295,15 +284,11 @@ def encode_column(
         seconds = np.floor_divide(vals, unit_scale) - TS_BASE_SECONDS
         frac = np.mod(vals, unit_scale)  # >= 0 (floor semantics)
         nanos = format_nanos(frac * (1_000_000_000 // unit_scale))
-        enc.seg_streams["DATA"] = []
-        enc.seg_streams["SECONDARY"] = []
+        enc.rle_segments("DATA", seconds, signed=True)
+        enc.rle_segments("SECONDARY", nanos, signed=False)
         for g in range(len(enc.bounds)):
-            sl = enc.val_slice(g)
-            enc.seg_streams["DATA"].append(rlev2.encode(seconds[sl], signed=True))
-            enc.seg_streams["SECONDARY"].append(rlev2.encode(nanos[sl], signed=False))
-            enc.set_rg_stats(
-                g, stats_mod.int_stats(vals[sl], enc.rg_nulls[g], kind="timestamp")
-            )
+            v = vals[enc.val_slice(g)]
+            enc.set_rg_stats(g, stats_mod.int_stats(v, enc.rg_nulls[g], kind="timestamp"))
         meta["encoding"] = "timestamp_split"
         meta["ts_unit"] = t.unit
         meta["ts_tz"] = t.tz
@@ -417,27 +402,17 @@ def _encode_binary_like(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
         use_dict = False
 
     if use_dict and n_nonnull:
-        # orc.dictionary.implementation analog: 'rbtree' (default) yields
-        # the sorted DICTIONARY_V2 contract; 'hash' keeps first-occurrence
-        # order and skips the sort pass (decode never assumes order)
-        import os
-
-        impl = os.environ.get("SPARC_DICT_IMPL", "rbtree")
-        if impl == "hash":
-            codes, uniques = dictionary.encode_unsorted(bin_arr)
-        else:
-            codes, uniques = dictionary.encode_sorted(bin_arr)
-        meta["dict_impl"] = impl
+        # the sorted DICTIONARY_V2 contract (orc.dictionary.implementation
+        # 'rbtree'); decode never assumes the order
+        codes, uniques = dictionary.encode_sorted(bin_arr)
+        meta["dict_impl"] = "rbtree"
         enc.whole_streams["DICTIONARY_DATA"] = b"".join(uniques)
         enc.whole_streams["LENGTH"] = rlev2.encode(
             np.fromiter((len(u) for u in uniques), dtype=np.int64, count=len(uniques)),
             signed=False,
         )
-        enc.seg_streams["DATA"] = []
+        enc.rle_segments("DATA", codes, signed=False)
         for g in range(len(enc.bounds)):
-            enc.seg_streams["DATA"].append(
-                rlev2.encode(codes[enc.val_slice(g)], signed=False)
-            )
             rg_string_stats(g)
         meta["encoding"] = "dict"
         meta["dict_size"] = len(uniques)
@@ -454,7 +429,6 @@ def _encode_binary_like(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
     data_buf = _concat_binary(bin_arr)
     byte_offs = np.concatenate(([0], np.cumsum(lengths))).astype(np.int64)
     avg_len = float(lengths.mean()) if lengths.size else 0.0
-    fsst_on = _fsst_enabled() if fsst_opt is None else fsst_opt
     probe_min = 4096 if fsst_opt is True else FSST_PROBE_MIN
     table = None
     # Amortize the auto-gate probe: a REJECTED decision for a column is
@@ -468,7 +442,7 @@ def _encode_binary_like(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
         fsst_opt is None and _FSST_REJECTS.get((enc.name, enc.codec), 0) > 0
     )
     if (
-        fsst_on and not probe_cached_reject
+        fsst_opt is not False and not probe_cached_reject
         and len(data_buf) >= probe_min and is_str and avg_len <= FSST_MAX_AVG_LEN
     ):
         # Auto mode decides on the measured POST-codec sample win: with
@@ -497,11 +471,10 @@ def _encode_binary_like(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
                     _FSST_REJECTS.get((enc.name, enc.codec), 0) + 1
                 )
 
-    enc.seg_streams["LENGTH"] = []
+    enc.rle_segments("LENGTH", lengths, signed=False)
     enc.seg_streams["DATA"] = []
     for g in range(len(enc.bounds)):
         sl = enc.val_slice(g)
-        enc.seg_streams["LENGTH"].append(rlev2.encode(lengths[sl], signed=False))
         # zero-copy memoryview slice straight into the block codec (FSST
         # needs bytes; the raw path never copies the column)
         chunk = data_buf[int(byte_offs[sl.start]) : int(byte_offs[sl.stop])]
@@ -540,11 +513,9 @@ def _encode_list_like(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
     else:
         lst = nn
     counts = lst.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
-    enc.seg_streams["LENGTH"] = []
+    enc.rle_segments("LENGTH", counts, signed=False)
     for g in range(len(enc.bounds)):
-        sl = enc.val_slice(g)
-        c = counts[sl]
-        enc.seg_streams["LENGTH"].append(rlev2.encode(c, signed=False))
+        c = counts[enc.val_slice(g)]
         enc.set_rg_stats(g, stats_mod.int_stats(c, enc.rg_nulls[g]))
         enc.row_index[g]["child_count"] = int(c.sum())
     child_streams, child_meta = encode_column(
@@ -713,11 +684,7 @@ def _decode_union(streams: dict[str, bytes], meta: dict) -> pa.Array:
     fields = []
     type_codes = []
     for i, child_meta in enumerate(meta["children"]):
-        prefix = f"CHILD{i}_"
-        child_streams = {
-            k[len(prefix):]: v for k, v in streams.items() if k.startswith(prefix)
-        }
-        child = decode_column(child_streams, child_meta)
+        child = decode_column(_child_streams(streams, f"CHILD{i}_"), child_meta)
         children.append(child.combine_chunks() if isinstance(child, pa.ChunkedArray) else child)
         fields.append(pa.field(child_meta["field_name"], child.type))
         type_codes.append(child_meta["type_code"])
@@ -801,173 +768,106 @@ def encode_stripe(
 def decode_column(
     streams: dict[str, bytes], meta: dict, row_groups: list[int] | None = None
 ) -> pa.Array:
-    """Decode one column; ``row_groups`` selects row-group indices to
-    materialize (None = all).  Selected groups only are decompressed and
-    decoded when the column was written with segments; columns without
-    segments (nested children, legacy stripes) decode whole and are
-    row-sliced."""
-    codec = meta["codec"]
-    segments = meta.get("segments")
-    if (
-        segments is None
-        or meta["encoding"] in ("struct", "union")
-        or (
-            row_groups is None
-            # bool DATA is the one non-concatenable segment kind: it
-            # packs n_vals bits (the non-null count) per segment, which
-            # is byte-padded mid-stream when nulls make n_vals % 8 != 0
-            and not (meta["encoding"] == "bool" and meta["n_nulls"])
-        )
-    ):
-        # struct columns have no data streams of their own: children are
-        # whole-stripe subtrees, so decode whole and row-slice (segment
-        # concatenation stays byte-aligned because the stride is a
-        # multiple of 8 — block chunks concatenate transparently).
-        # row_groups=None (full scan, the hot path) also decodes whole:
-        # every stream kind is self-delimiting under concatenation
-        # (RLE runs, varints, byte-aligned bitfields, block chunks), so
-        # one decompress + one array build replaces the per-group loop
-        # and its final concat copy.
-        arr = _decode_whole(streams, meta)
-        if row_groups is not None:
-            arr = _slice_row_groups(arr, meta, row_groups)
-        return arr
+    """Decode one column; ``row_groups`` lists the row groups to
+    materialize, strictly ascending (None = all).
 
-    ri = meta["row_index"]
-    rgs = list(row_groups) if row_groups is not None else list(range(len(ri)))
-    bounds = {
-        kind: np.concatenate(([0], np.cumsum(lens))).astype(np.int64)
-        for kind, lens in segments.items()
-    }
-
-    def seg_raw(kind: str, g: int) -> bytes:
-        b = bounds[kind]
-        return block.decompress(streams[kind][int(b[g]) : int(b[g + 1])], codec)
-
-    shared = {
-        k: block.decompress(v, codec)
-        for k, v in streams.items()
-        if k not in segments
-        and not k.startswith("CHILD")
-        and k != "BLOOM_FILTER_UTF8"
-    }
-
-    t = _parse_type(meta)
+    A segmented column decodes a selection the way it decodes the whole
+    stripe, which is the selection of every group: each segmented stream
+    gives the compressed bytes of the selected groups (all groups: the
+    stream as stored, sliced and copied nowhere), one decompress call
+    reads them back to back, and one switch over the encoding decodes
+    them (``planPartialDataReading`` + the TreeReaders' ``nextVector``).
+    Struct and union columns, whose children span the stripe, and
+    unsegmented columns (nested children, unindexed stripes) decode
+    whole and are row-sliced."""
+    ri = meta.get("row_index")
+    if row_groups is not None and ri is not None:
+        _check_row_groups(meta["name"], row_groups, len(ri))
     enc = meta["encoding"]
-
-    # whole-stripe shared state per encoding
-    dict_arrays = None
-    if enc == "dict":
-        nd = meta["dict_size"]
-        dlens = rlev2.decode(shared["LENGTH"], nd, signed=False)
-        dict_values = _dict_values_array(dlens, shared["DICTIONARY_DATA"], t)
-    fsst_table = None
-    if enc == "direct_fsst":
-        fsst_table, _ = fsst.SymbolTable.deserialize(shared["FSST_TABLE"])
-    child = None
-    if enc in ("list", "map"):
-        child_streams = {
-            k[len("CHILD0_"):]: v for k, v in streams.items() if k.startswith("CHILD0_")
-        }
-        child = decode_column(child_streams, meta["child"])
-        # child start offset of each group = cumsum of per-group counts
-        child_offs = np.concatenate(
-            ([0], np.cumsum([e["child_count"] for e in ri]))
-        ).astype(np.int64)
-
-    pieces: list[pa.Array] = []
-    for g in rgs:
-        n_rows = ri[g]["n_rows"]
-        n_nulls = ri[g]["stats"]["n_nulls"]
-        n_vals = n_rows - n_nulls
-        valid = None
-        if n_nulls:
-            valid = bitfield.decode(seg_raw("PRESENT", g), n_rows)
-        elif "PRESENT" in segments:
-            pass  # group has no nulls; PRESENT segment is all-ones, skip
-        if enc == "rlev2":
-            vals = rlev2.decode(seg_raw("DATA", g), n_vals, signed=True)
-            pieces.append(_scatter_numeric(vals, valid, n_rows, t))
-        elif enc == "decimal64":
-            vals = rlev2.decode(seg_raw("DATA", g), n_vals, signed=True)
-            pieces.append(_build_decimal(vals, valid, n_rows, t))
-        elif enc == "decimal_big":
-            from ..kernels import bigdec
-
-            lo, hi = bigdec.decode(seg_raw("DATA", g), n_vals)
-            pieces.append(_build_decimal_big(lo, hi, valid, n_rows, t))
-        elif enc == "timestamp_split":
-            seconds = rlev2.decode(seg_raw("DATA", g), n_vals, signed=True)
-            nanos = parse_nanos(rlev2.decode(seg_raw("SECONDARY", g), n_vals, signed=False))
-            unit_scale = _TS_UNITS[meta["ts_unit"]]
-            vals = (seconds + TS_BASE_SECONDS) * unit_scale + nanos // (
-                1_000_000_000 // unit_scale
-            )
-            pieces.append(_scatter_numeric(vals, valid, n_rows, t))
-        elif enc == "float_raw":
-            np_t = np.float32 if t == pa.float32() else np.float64
-            vals = np.frombuffer(seg_raw("DATA", g), dtype=np_t)
-            pieces.append(_scatter_numeric(vals, valid, n_rows, t))
-        elif enc == "bool":
-            vals = bitfield.decode(seg_raw("DATA", g), n_vals)
-            pieces.append(_scatter_numeric(vals, valid, n_rows, t))
-        elif enc == "dict":
-            codes = rlev2.decode(seg_raw("DATA", g), n_vals, signed=False)
-            pieces.append(_dict_take(dict_values, codes, valid, n_rows))
-        elif enc in ("direct", "direct_fsst"):
-            row_lens = rlev2.decode(seg_raw("LENGTH", g), n_vals, signed=False)
-            body = seg_raw("DATA", g)
-            if fsst_table is not None:
-                body = fsst.decompress(body, fsst_table)
-            pieces.append(
-                _build_binary(np.frombuffer(body, np.uint8), row_lens, valid, n_rows, t)
-            )
-        elif enc in ("list", "map"):
-            counts = rlev2.decode(seg_raw("LENGTH", g), n_vals, signed=False)
-            sub_child = child.slice(int(child_offs[g]), int(counts.sum()))
-            pieces.append(_build_list(counts, sub_child, valid, n_rows, t))
+    if enc in ("struct", "union") or "segments" not in meta:
+        if enc == "struct":
+            arr = _decode_struct(streams, meta)
+        elif enc == "union":
+            arr = _decode_union(streams, meta)
         else:
-            raise NotImplementedError(enc)
-    if len(pieces) == 1:
-        return pieces[0]
-    return pa.concat_arrays([p.combine_chunks() if isinstance(p, pa.ChunkedArray) else p for p in pieces])
+            arr = _decode_groups(streams, meta, None)
+        return arr if row_groups is None else _slice_row_groups(arr, meta, row_groups)
+    return _decode_groups(streams, meta, range(len(ri)) if row_groups is None else row_groups)
+
+
+def _check_row_groups(name: str, row_groups, n_groups: int) -> None:
+    prev = -1
+    for g in row_groups:
+        if not prev < g < n_groups:
+            raise ValueError(
+                f"column {name!r}: row group {g} is out of order or outside "
+                f"[0, {n_groups}); row_groups must be strictly ascending"
+            )
+        prev = g
+
+
+def _runs(groups) -> list[tuple[int, int]]:
+    """Ascending group indices as ``[lo, hi)`` runs of consecutive groups."""
+    runs: list[tuple[int, int]] = []
+    for g in groups:
+        if runs and runs[-1][1] == g:
+            runs[-1] = (runs[-1][0], g + 1)
+        else:
+            runs.append((g, g + 1))
+    return runs
+
+
+def _take_runs(arr: pa.Array, offs: np.ndarray, runs: list[tuple[int, int]]) -> pa.Array:
+    """Rows ``offs[lo]:offs[hi]`` of ``arr`` for each run, concatenated."""
+    pieces = [arr.slice(int(offs[lo]), int(offs[hi] - offs[lo])) for lo, hi in runs]
+    return pieces[0] if len(pieces) == 1 else pa.concat_arrays(pieces or [arr.slice(0, 0)])
 
 
 def _slice_row_groups(arr: pa.Array, meta: dict, row_groups: list[int]) -> pa.Array:
     ri = meta.get("row_index")
     if ri is None:
         return arr  # no index info: cannot prune, return whole
-    offs = np.concatenate(([0], np.cumsum([e["n_rows"] for e in ri]))).astype(np.int64)
-    pieces = [arr.slice(int(offs[g]), int(offs[g + 1] - offs[g])) for g in row_groups]
-    if len(pieces) == 1:
-        return pieces[0]
-    return pa.concat_arrays(pieces)
+    offs = np.cumsum([0] + [e["n_rows"] for e in ri])
+    return _take_runs(arr, offs, _runs(row_groups))
 
 
-def _decode_whole(streams: dict[str, bytes], meta: dict) -> pa.Array:
-    """Single-segment (legacy / nested-child) decode path."""
+def _child_streams(streams: dict[str, bytes], prefix: str) -> dict[str, bytes]:
+    return {k[len(prefix):]: v for k, v in streams.items() if k.startswith(prefix)}
+
+
+def _decode_groups(streams: dict[str, bytes], meta: dict, groups) -> pa.Array:
+    """The rows of row groups ``groups`` (ascending; None = the whole of an
+    unsegmented column): one decompress per stream, one decode switch."""
     codec = meta["codec"]
-    n_rows = meta["n_rows"]
-    n_nulls = meta["n_nulls"]
     enc = meta["encoding"]
-    if enc == "struct":
-        return _decode_struct(streams, meta)
-    if enc == "union":
-        return _decode_union(streams, meta)
     t = _parse_type(meta)
-
-    raw = {
-        k: block.decompress(v, codec)
-        for k, v in streams.items()
-        # child streams decompress recursively; bloom streams are index
-        # metadata, not data — never needed to reconstruct values
-        if not k.startswith("CHILD") and k != "BLOOM_FILTER_UTF8"
-    }
-
-    valid = None
-    if n_nulls:
-        valid = bitfield.decode(raw["PRESENT"], n_rows)
+    if groups is None:
+        rows, nulls, runs = [meta["n_rows"]], [meta["n_nulls"]], None
+    else:
+        ri = meta["row_index"]
+        rows = [ri[g]["n_rows"] for g in groups]
+        nulls = [ri[g]["stats"]["n_nulls"] for g in groups]
+        runs = None if len(groups) == len(ri) else _runs(groups)
+    n_rows, n_nulls = sum(rows), sum(nulls)
     n_vals = n_rows - n_nulls
+    segments = meta.get("segments", {})
+    raw = {}
+    for kind, data in streams.items():
+        # child streams decode recursively; bloom streams are index
+        # metadata, never needed to rebuild values
+        if kind.startswith("CHILD") or kind == "BLOOM_FILTER_UTF8":
+            continue
+        if kind == "PRESENT" and not n_nulls:
+            continue
+        if runs is not None and kind in segments:
+            # the selected groups' segments, back to back: block chunks,
+            # RLE runs, varints and byte-aligned bitfields all concatenate
+            offs = np.cumsum([0] + segments[kind])
+            view = memoryview(data)
+            parts = [view[int(offs[lo]) : int(offs[hi])] for lo, hi in runs]
+            data = parts[0] if len(parts) == 1 else b"".join(parts)
+        raw[kind] = block.decompress(data, codec)
+    valid = bitfield.decode(raw["PRESENT"], n_rows) if n_nulls else None
 
     if enc == "rlev2":
         vals = rlev2.decode(raw["DATA"], n_vals, signed=True)
@@ -993,32 +893,37 @@ def _decode_whole(streams: dict[str, bytes], meta: dict) -> pa.Array:
         vals = np.frombuffer(raw["DATA"], dtype=np_t)
         return _scatter_numeric(vals, valid, n_rows, t)
     if enc == "bool":
-        vals = bitfield.decode(raw["DATA"], n_vals)
+        # each group's segment packs its values to whole bytes: with
+        # nulls, a group's pad bits sit mid-stream, so mask them out
+        group_vals = np.subtract(rows, nulls)
+        padded = (group_vals + 7) // 8 * 8
+        bits = bitfield.decode(raw["DATA"], int(padded.sum()))
+        at = np.arange(bits.size) - np.repeat(np.cumsum(padded) - padded, padded)
+        vals = bits[at < np.repeat(group_vals, padded)]
         return _scatter_numeric(vals, valid, n_rows, t)
     if enc == "dict":
-        nd = meta["dict_size"]
-        dlens = rlev2.decode(raw["LENGTH"], nd, signed=False)
+        dlens = rlev2.decode(raw["LENGTH"], meta["dict_size"], signed=False)
         codes = rlev2.decode(raw["DATA"], n_vals, signed=False)
         values = _dict_values_array(dlens, raw["DICTIONARY_DATA"], t)
         return _dict_take(values, codes, valid, n_rows)
     if enc in ("direct", "direct_fsst"):
         row_lens = rlev2.decode(raw["LENGTH"], n_vals, signed=False)
+        data = raw["DATA"]
         if enc == "direct_fsst":
             if "FSST_TABLE" in raw:
                 table, _ = fsst.SymbolTable.deserialize(raw["FSST_TABLE"])
-                data = np.frombuffer(fsst.decompress(raw["DATA"], table), np.uint8)
             else:  # legacy layout: table prefixed to DATA
-                table, pos = fsst.SymbolTable.deserialize(raw["DATA"])
-                data = np.frombuffer(fsst.decompress(raw["DATA"][pos:], table), np.uint8)
-        else:
-            data = np.frombuffer(raw["DATA"], np.uint8)
-        return _build_binary(data, row_lens, valid, n_rows, t)
+                table, pos = fsst.SymbolTable.deserialize(data)
+                data = data[pos:]
+            data = fsst.decompress(data, table)
+        return _build_binary(np.frombuffer(data, np.uint8), row_lens, valid, n_rows, t)
     if enc in ("list", "map"):
         counts = rlev2.decode(raw["LENGTH"], n_vals, signed=False)
-        child_streams = {
-            k[len("CHILD0_"):]: v for k, v in streams.items() if k.startswith("CHILD0_")
-        }
-        child = decode_column(child_streams, meta["child"])
+        child = decode_column(_child_streams(streams, "CHILD0_"), meta["child"])
+        if runs is not None:
+            # the selected groups' child rows, from per-group child counts
+            offs = np.cumsum([0] + [e["child_count"] for e in meta["row_index"]])
+            child = _take_runs(child, offs, runs)
         return _build_list(counts, child, valid, n_rows, t)
     raise NotImplementedError(enc)
 
@@ -1033,11 +938,7 @@ def _decode_struct(streams: dict[str, bytes], meta: dict) -> pa.Array:
     children = []
     names = []
     for i, child_meta in enumerate(meta["children"]):
-        prefix = f"CHILD{i}_"
-        child_streams = {
-            k[len(prefix):]: v for k, v in streams.items() if k.startswith(prefix)
-        }
-        children.append(decode_column(child_streams, child_meta))
+        children.append(decode_column(_child_streams(streams, f"CHILD{i}_"), child_meta))
         names.append(child_meta["field_name"])
     mask = pa.array(~valid) if valid is not None else None
     children = [
