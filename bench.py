@@ -665,7 +665,7 @@ def main() -> None:
     raw = raw_bytes_of(spark, pages_path)
     extras["pages_raw_bytes"] = raw
 
-    from sparc.job import decode_job, encode_job
+    from sparc.job import decode_job, encode_job, manifest
 
     # ---- headline: encode A/B, interleaved --------------------------------
     # Protocol (round-2 fix for the round-1 measurement dispute): one
@@ -1082,7 +1082,7 @@ def main() -> None:
                     "compression", "zstd"
                 ).orc(xxl_ref)
             xxl_ours = os.path.join(CACHE, f"streams_py_dec_{xxl_rows}")
-            if not os.path.exists(os.path.join(xxl_ours, "_SUCCESS")):
+            if not manifest.paths(xxl_ours):
                 shutil.rmtree(xxl_ours, ignore_errors=True)
                 encode_job.run_encode_paths(
                     spark, xxl_pages, xxl_ours,

@@ -315,8 +315,8 @@ def measure(cpus: int, n_stripes: int, n_rows: int, staged_path: str,
         )
         w_pys = time.perf_counter() - t0
         shutil.rmtree(pys_dir, ignore_errors=True)
-        # encode stage only: pre-staged input, no shuffle; stripe files go
-        # to a scratch dir and the footers are summed, not committed
+        # encode stage only: pre-staged input, no shuffle; stripe files
+        # and each task's manifest file go to a scratch dir
         pre = spark.read.parquet(staged_path)
         cpu0 = _tree_cpu()
         t0 = time.perf_counter()

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine import sarg as sarg_mod
 from ..engine import stripe as stripe_mod
+from . import manifest
 from . import partition as part_mod
 from .encode_job import STREAMS_SCHEMA
 
@@ -158,11 +159,7 @@ def _manifest_paths(streams_dir: str) -> list[str]:
     instead of a directory listing."""
     if not os.path.isdir(streams_dir):
         raise ValueError(f"streams dir {streams_dir!r} is not a directory")
-    return sorted(
-        os.path.join(streams_dir, f)
-        for f in os.listdir(streams_dir)
-        if f.endswith(".parquet")
-    )
+    return manifest.paths(streams_dir)
 
 
 def run_decode(

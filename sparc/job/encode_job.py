@@ -7,9 +7,10 @@ Lifecycle (SURVEY.md §3.4):
       → repartition(n, stripe_col)                 [the only shuffle]
       → mapInArrow(encode): per stripe — optional locality sort, stats,
         codec auto-selection, kernel encode → ``<out>/stripes/<sid>.sparc``
-        (temp file + atomic rename) + one FOOTER row
-      → append the FOOTER rows to the footer manifest (parquet part files
-        in ``<out>``; one atomic task commit per partition)
+        (temp file + atomic rename) + one FOOTER row; then the task's
+        FOOTER rows → ``<out>/part-<key>-sparc.parquet`` (temp file +
+        atomic rename, :mod:`.manifest`)
+      → ``noop`` sink: Spark only schedules the tasks
 
 The path/manifest twin (:func:`run_encode_paths` / :func:`run_encode_units`,
 "pyscan") skips the scan and the shuffle: workers read parquet row-group
@@ -20,15 +21,22 @@ job anti-joins planned stripes against completed footers and encodes only
 the remainder — per-partition lineage lives in the footer (input
 fingerprint, stripe plan, row count, per-stream sizes + crc32
 checksums).  A dir whose footers carry another fingerprint or stripe
-plan is refused: its stripe ids name other rows.  A stripe file without
-a committed FOOTER row is invisible garbage, and a retried task
-atomically overwrites it with identical bytes.
+plan is refused: its stripe ids name other rows.  A task renames its
+stripe files before its manifest file, so a task killed in between
+leaves stripe files no FOOTER row names and at most a hidden temp
+manifest file, both invisible garbage; a retried task atomically
+overwrites the stripe files with identical bytes.
 
-Manifest schema (one row per stripe):
+Manifest (one parquet file per task that wrote a stripe, one row per
+stripe):
     stripe_id:long, column:string, kind:string, data:binary
 with column='', kind='FOOTER', data=UTF-8 JSON footer.  The footer names
 the stripe file and each stream's (column, kind, offset, length) span in
-it, so readers byte-range-fetch only the streams they need.
+it, so readers byte-range-fetch only the streams they need.  A file's
+footers land together or not at all because ``os.replace`` is atomic;
+its name is the task's smallest stripe id, fixed by the plan, so a
+retried or speculative attempt writes the same name over the same
+stripes.
 """
 
 from __future__ import annotations
@@ -45,22 +53,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine import stripe as stripe_mod
 from ..engine.stripe import ROW_INDEX_STRIDE
+from . import manifest
 from . import partition as part_mod
 
 STREAMS_SCHEMA = "stripe_id long, column string, kind string, data binary"
 
 # pyscan stripe ids: unit index * SPACE + local chunk index
 INPUT_SPLIT_SPACE = 1 << 16
-
-_PA_OUT = pa.schema(
-    [
-        ("stripe_id", pa.int64()),
-        ("column", pa.string()),
-        ("kind", pa.string()),
-        ("data", pa.large_binary()),
-    ]
-)
-
 
 def write_stripe(
     table: pa.Table,
@@ -80,7 +79,7 @@ def write_stripe(
 
     The stream bytes go straight from the worker to the stripe file; only
     the footer — with the file path and per-stream (offset, length) spans —
-    flows back through Arrow into the manifest.  ``out_dir`` must be a
+    goes into the task's manifest file.  ``out_dir`` must be a
     filesystem every executor can reach (an object-store mount / fsspec
     path at cluster scale)."""
     if sort_within:
@@ -117,7 +116,7 @@ def write_stripe(
             pa.array(["FOOTER"], pa.string()),
             pa.array([json.dumps(footer).encode()], pa.large_binary()),
         ],
-        schema=_PA_OUT,
+        schema=manifest.PA_SCHEMA,
     )
 
 
@@ -176,7 +175,8 @@ def _encode_partition_factory(
 ) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
     """Build the mapInArrow function over a DataFrame's rows tagged with
     the stripe column (no per-row Python anywhere inside): each stripe
-    goes through :func:`write_stripe` into ``out_dir``."""
+    goes through :func:`write_stripe` into ``out_dir``, and the task
+    commits its footers as one manifest file (:mod:`.manifest`)."""
     write = functools.partial(
         write_stripe, out_dir=out_dir, codec=codec, sort_within=sort_within,
         bloom_columns=bloom_columns, fsst=fsst,
@@ -205,23 +205,15 @@ def _encode_partition_factory(
             sub = table.filter(pa.compute.equal(stripe_ids, sid))
             yield write(sub.drop_columns([part_mod.STRIPE_COL]), sid)
 
-    return encode_partition
-
-
-def append_footers(footers: DataFrame, out_dir: str) -> None:
-    """Commit FOOTER rows to the manifest: one parquet part file per task,
-    so a task's footers land together or not at all."""
-    footers.write.mode("append").option("compression", "uncompressed").parquet(out_dir)
+    return manifest.committing(encode_partition, out_dir)
 
 
 def _footers(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The committed FOOTER rows of ``out_dir``, or None when the output
-    doesn't exist yet (resolved without running a job)."""
-    try:
-        df = spark.read.schema(STREAMS_SCHEMA).parquet(out_dir)
-        df.schema  # force resolution so a missing dir fails here
-    except Exception:
+    """The committed FOOTER rows of ``out_dir``, or None when it holds no
+    manifest file (a listing decides that; no Spark call runs)."""
+    if not manifest.paths(out_dir):
         return None
+    df = spark.read.schema(STREAMS_SCHEMA).parquet(out_dir)
     return df.filter(F.col("kind") == "FOOTER")
 
 
@@ -263,12 +255,12 @@ def completed_groups_df(
 
     Why group granularity is exact, not approximate: one scan unit is
     processed by exactly one task, and that task's manifest rows — every
-    stripe FOOTER it produced — commit atomically through the parquet
-    task-commit protocol.  So a group with ANY committed footer has ALL
-    its footers committed, and a broadcast anti-join on the group id
-    skips exactly the work that is done.  The done set never touches the
-    driver: it flows from the footer scan into a broadcast exchange built
-    executor-side."""
+    stripe FOOTER it produced — commit together in one manifest file,
+    made visible by one atomic ``os.replace``.  So a group with ANY
+    committed footer has ALL its footers committed, and a broadcast
+    anti-join on the group id skips exactly the work that is done.  The
+    done set never touches the driver: it flows from the footer scan into
+    a broadcast exchange built executor-side."""
     df = completed_stripes_df(spark, out_dir)
     if df is None:
         return None
@@ -292,7 +284,8 @@ def _resume_count(
     (written before plans were recorded) are refused the same way.
 
     The check rides in the one aggregate that counts the done set, so it
-    adds no Spark job, and none runs when ``out_dir`` does not exist."""
+    adds no Spark job, and none runs when ``out_dir`` holds no manifest
+    file."""
     footers = _footers(spark, out_dir)
     if footers is None:
         return 0
@@ -370,7 +363,7 @@ def run_encode(
         out_dir, codec, sort_within, fingerprint, bloom_columns, fsst,
         row_index_stride=row_index_stride, stripe_plan=stripe_plan,
     )
-    append_footers(
+    manifest.run(
         staged.repartition(parts, F.col(part_mod.STRIPE_COL))
         .mapInArrow(fn, schema=STREAMS_SCHEMA),
         out_dir,
@@ -555,7 +548,8 @@ def _encode_units_factory(
     """Build the mapInArrow function over scan-unit rows [idx, path,
     rg_lo, rg_hi]: each worker streams its units' row groups with pyarrow
     and cuts stripes with :func:`_cut_stripes`'s 2*per rule (a unit
-    packed to ~per rows encodes as ONE full stripe, no runt).
+    packed to ~per rows encodes as ONE full stripe, no runt), and the task
+    commits its footers as one manifest file (:mod:`.manifest`).
     ``stripe_kw`` goes to :func:`write_stripe`."""
 
     def encode_units(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -580,7 +574,7 @@ def _encode_units_factory(
                 for table, sid in _cut_stripes(rbs, per, uidx):
                     yield write_stripe(table, sid, out_dir, **stripe_kw)
 
-    return encode_units
+    return manifest.committing(encode_units, out_dir)
 
 
 def run_encode_paths(
@@ -754,7 +748,7 @@ def run_encode_units(
         # while stragglers carry 2-3 units (the same balls-in-bins fix
         # as the paths decode)
         paths_df = units_df.repartition(parts)
-    append_footers(paths_df.mapInArrow(encode_units, schema=STREAMS_SCHEMA), out_dir)
+    manifest.run(paths_df.mapInArrow(encode_units, schema=STREAMS_SCHEMA), out_dir)
     return {
         "n_units": n_units_todo,
         "skipped": skipped,

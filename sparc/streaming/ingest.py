@@ -12,8 +12,8 @@ kernels, metrics) with batch-scoped stripe ids, so:
 - effectively-once per micro-batch: Spark's streaming checkpoint tracks
   which input files were consumed (no input replayed across committed
   batches), and within a batch a stripe becomes visible only when its
-  FOOTER row commits (one manifest task commit after the stripe file's
-  atomic rename).  foreachBatch
+  FOOTER row commits (the task's manifest file is renamed into place
+  after its stripe files' renames).  foreachBatch
   itself is at-least-once on failure, so ``encode_batch`` anti-joins the
   batch's planned stripes against already-committed FOOTERs for the same
   batch id before encoding — a retried batch re-encodes only the stripes
@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..job import encode_job
+from ..job import encode_job, manifest
 
 STRIPE_SPACE = 1 << 20  # max stripes per micro-batch
 
@@ -76,7 +76,7 @@ def make_encode_batch(
         fn = encode_job._encode_partition_factory(
             out_dir, codec, None, f"stream-batch-{batch_id}", bloom_columns
         )
-        encode_job.append_footers(
+        manifest.run(
             staged.repartition(n_stripes, F.col(part_mod.STRIPE_COL)).mapInArrow(
                 fn, schema=encode_job.STREAMS_SCHEMA
             ),

@@ -153,12 +153,9 @@ def _dir_footers(streams_dir: str):
     manifest-first (no Spark)."""
     import pyarrow.parquet as pq
 
-    files = sorted(
-        os.path.join(streams_dir, f)
-        for f in os.listdir(streams_dir)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
-    for p in files:
+    from .job import manifest
+
+    for p in manifest.paths(streams_dir):
         t = pq.read_table(p, columns=["kind", "data"])
         for kind, blob in zip(t["kind"].to_pylist(), t["data"].to_pylist()):
             if kind == "FOOTER":

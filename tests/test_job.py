@@ -185,7 +185,6 @@ def test_resume_refuses_footers_without_a_plan(spark, pages_path, tmp_path):
             del footer["stripe_plan"]
             data.append(json.dumps(footer).encode())
         pq.write_table(t.set_column(3, "data", pa.array(data, t["data"].type)), part)
-        os.remove(os.path.join(out, f".{os.path.basename(part)}.crc"))  # stale now
     with pytest.raises(ValueError, match=f"{out}.*stripe plan '\\(none\\)'"):
         encode_job.run_encode(df, out, n_stripes=4)
     assert decode_job.run_decode(spark, out).count() == N_ROWS
