@@ -53,7 +53,7 @@ import numpy as np
 import pyarrow as pa
 
 from ..kernels import bitfield, dictionary, rlev1, rlev2
-from . import stripe as stripe_mod
+from . import bloom as bloom_mod, stripe as stripe_mod
 
 # --- ORC compressed-stream framing ------------------------------------------
 #
@@ -410,14 +410,12 @@ def _rg_decimal_stats(arr: pa.Array, has_null: bool) -> bytes:
     maximum=2 in HiveDecimal plain form, trailing zeros stripped — the
     same canonical form the bloom addString path uses).  ``arr`` is
     non-null."""
-    from . import orcread as _orcread
-
     out = _f_varint(1, len(arr))
     if len(arr):
         mm = pa.compute.min_max(arr)
         body = _f_bytes(
-            1, _orcread._orc_decimal_str(mm["min"].as_py()).encode()
-        ) + _f_bytes(2, _orcread._orc_decimal_str(mm["max"].as_py()).encode())
+            1, bloom_mod._orc_decimal_str(mm["min"].as_py()).encode()
+        ) + _f_bytes(2, bloom_mod._orc_decimal_str(mm["max"].as_py()).encode())
         out += _f_bytes(6, body)
     out += _varint(10 << 3) + (b"\x01" if has_null else b"\x00")
     return out
@@ -863,7 +861,7 @@ def write_orc(
     row_index_stride: int = 0,
     type_overrides: dict[str, tuple[str, int]] | None = None,
     bloom_columns: list[str] | None = None,
-    bloom_fpp: float = 0.05,  # BloomFilter.DEFAULT_FPP
+    bloom_fpp: float = bloom_mod.DEFAULT_FPP,
     user_metadata: dict[str, bytes] | None = None,
 ) -> None:
     """Write ``table`` (flat schema) as an ORC file at ``path``.
@@ -940,18 +938,9 @@ def write_orc(
         if bloom_columns and root_node["children"][i][0] in bloom_columns:
             if _is_nested(node["t"]):
                 raise NotImplementedError("orcfile: bloom on nested column")
-            filters = []
-            for lo, hi in bounds:
-                sub = col.slice(lo, hi - lo)
-                nn_sub = sub.drop_null() if sub.null_count else sub
-                hashes = _orc_bloom_hashes(nn_sub)
-                if hashes is None:
-                    raise NotImplementedError(
-                        f"orcfile: bloom on type {node['t']}"
-                    )
-                filters.append(
-                    _orc_bloom_build(hashes, row_index_stride, bloom_fpp)
-                )
+            filters = bloom_mod.build(col, bounds, row_index_stride, bloom_fpp)
+            if filters is None:
+                raise NotImplementedError(f"orcfile: bloom on type {node['t']}")
             bloom_filters[node["id"]] = filters
 
     out = bytearray(b"ORC")
@@ -1025,7 +1014,7 @@ def write_orc(
             index += ri
             if cid in bloom_filters:
                 bs = _orc_compress(
-                    _bloom_index_pb(bloom_filters[cid][g_lo:g_hi]), compression
+                    bloom_mod.pack_multi(bloom_filters[cid][g_lo:g_hi]), compression
                 )
                 index_meta.append((8, cid, len(bs)))  # BLOOM_FILTER_UTF8
                 index += bs
@@ -1119,101 +1108,3 @@ def write_orc(
 
     with open(path, "wb") as f:
         f.write(bytes(out))
-
-
-# --- BLOOM_FILTER_UTF8 emission ----------------------------------------------
-#
-# Byte-exact reimplementation of org.apache.orc.util.BloomFilter's BUILD
-# side (constructor sizing and addHash recovered from the orc-core 2.2.2
-# bytecode; hash functions shared with sparc.engine.orcread's validated
-# probe side).  Emitted per row group in a BloomFilterIndex protobuf, the
-# layout BloomFilterIO.serialize writes — so the reference reader can
-# bloom-prune inside our files, and tests can compare our bitset words
-# against a live Java BloomFilter fed the same values, word for word.
-
-import math as _math
-
-_ORC_BLOOM_DEFAULT_FPP = 0.05  # BloomFilter.DEFAULT_FPP
-
-
-def _orc_bloom_params(n: int, fpp: float) -> tuple[int, int]:
-    n = max(n, 1)
-    bits = int(-n * _math.log(fpp) / (_math.log(2.0) ** 2))  # d2i truncates
-    num_bits = bits + (64 - bits % 64)  # always rounds up, +64 when aligned
-    # Java Math.round = floor(x + 0.5), not banker's rounding
-    k = max(1, int(_math.floor(num_bits / n * _math.log(2.0) + 0.5)))
-    return num_bits, k
-
-
-def _orc_bloom_build(hashes: list[int], n_expected: int, fpp: float) -> tuple[np.ndarray, int]:
-    """-> (bitset words as uint64, numHashFunctions); BloomFilter.addHash
-    over pre-computed Murmur3/Thomas-Wang 64-bit hashes."""
-    num_bits, k = _orc_bloom_params(n_expected, fpp)
-    words = np.zeros(num_bits >> 6, np.uint64)
-    m32 = 0xFFFFFFFF
-    for h64 in hashes:
-        h64 &= (1 << 64) - 1
-        h1 = h64 & m32
-        if h1 >= 1 << 31:
-            h1 -= 1 << 32
-        h2 = (h64 >> 32) & m32
-        if h2 >= 1 << 31:
-            h2 -= 1 << 32
-        for i in range(1, k + 1):
-            combined = (h1 + i * h2) & m32
-            if combined >= 1 << 31:
-                combined -= 1 << 32
-            if combined < 0:
-                combined = ~combined
-            pos = combined % num_bits
-            words[pos >> 6] |= np.uint64(1 << (pos & 63))
-    return words, k
-
-
-def _orc_bloom_hashes(arr: pa.Array) -> list[int] | None:
-    """Per-value 64-bit bloom hashes for a non-null array, matching the
-    writer's add* dispatch: strings/binary -> Murmur3.hash64(bytes),
-    ints/dates -> the Thomas-Wang long mix, doubles ->
-    addLong(doubleToLongBits) (BloomFilter.addDouble — bitsets validated
-    word-identical to a live Java BloomFilterUtf8), timestamps ->
-    addLong(UTC epoch millis), decimals -> addString(HiveDecimal
-    plain form, trailing zeros stripped).  None = unsupported type."""
-    from . import orcread as _orcread
-
-    t = arr.type
-    if stripe_mod._is_binary_like(t):
-        return [
-            _orcread.murmur3_hash64(v.as_py() if not isinstance(v, bytes) else v)
-            for v in arr.cast(pa.large_binary())
-        ]
-    if pa.types.is_integer(t) or pa.types.is_date32(t):
-        vals = stripe_mod._arrow_nonnull_int64(arr)
-        return [_orcread._orc_long_hash(int(v)) for v in vals]
-    if pa.types.is_floating(t):
-        vals = np.asarray(arr.cast(pa.float64()), np.float64)
-        bits = vals.view(np.int64).copy()
-        # Double.doubleToLongBits canonicalizes every NaN payload
-        bits[np.isnan(vals)] = 0x7FF8000000000000
-        return [_orcread._orc_long_hash(int(b)) for b in bits]
-    if pa.types.is_timestamp(t):
-        us = np.asarray(arr.cast(pa.timestamp("us")).view(pa.int64()), np.int64)
-        millis = np.floor_divide(us, 1000)
-        return [_orcread._orc_long_hash(int(m)) for m in millis]
-    if pa.types.is_decimal(t):
-        return [
-            _orcread.murmur3_hash64(
-                _orcread._orc_decimal_str(v.as_py()).encode("utf-8")
-            )
-            for v in arr
-        ]
-    return None
-
-
-def _bloom_index_pb(group_filters: list[tuple[np.ndarray, int]]) -> bytes:
-    out = bytearray()
-    for words, k in group_filters:
-        body = _f_varint(1, k) + _f_bytes(
-            3, words.astype("<u8").tobytes()
-        )
-        out += _f_bytes(1, bytes(body))
-    return bytes(out)

@@ -43,7 +43,7 @@ import numpy as np
 import pyarrow as pa
 
 from ..kernels import bitfield, byterle, rlev1, rlev2
-from . import stripe as stripe_mod
+from . import bloom as bloom_mod, stripe as stripe_mod
 
 # --- minimal protobuf parser ------------------------------------------------
 
@@ -980,7 +980,7 @@ def read_orc_filtered(
         _sf, streams = _stripe_directory(data, st, kind)
         # per-column row-index entry stats for the predicate's columns
         entry_stats: dict[str, list[dict]] = {}
-        entry_blooms: dict[str, list] = {}
+        entry_blooms: dict[str, tuple] = {}
         for skind, col, blob in streams:
             if skind == "ROW_INDEX" and col in pred_cols.values():
                 ri = _parse_pb(_inflate(blob, kind))
@@ -994,9 +994,14 @@ def read_orc_filtered(
                 entry_stats[name] = stats
             elif skind == "BLOOM_FILTER_UTF8" and col in pred_cols.values():
                 # the reference writer's own per-row-group bloom filters
-                # refute =/IN probes the min/max stats cannot
-                name = names[subtypes.index(col)]
-                entry_blooms[name] = _parse_bloom_index(_inflate(blob, kind))
+                # refute =/IN probes the min/max stats cannot; literals
+                # hash as the ORC type's tree writer hashed its values (a
+                # long column read back as timestamp_ntz added longs)
+                filters = bloom_mod.unpack_multi(_inflate(blob, kind), n_gr)
+                if filters is not None:
+                    tk = _TYPE_KINDS[types[col].get(1, [0])[0]]
+                    bt = _INT_WIDTH.get(tk) or _arrow_type_of(types, col)
+                    entry_blooms[names[subtypes.index(col)]] = (filters, bt)
         for g in range(n_gr):
             col_stats = {
                 name: st[g]
@@ -1005,12 +1010,10 @@ def read_orc_filtered(
             }
             probes = {
                 name: (
-                    lambda v, _w=bfs[g][0], _k=bfs[g][1]: _bloom_probe_value(
-                        _w, _k, v
-                    )
+                    lambda v, _f=filters, _t=bt, _g=g:
+                    bloom_mod.might_contain_rg_list(_f, _t, v, _g)
                 )
-                for name, bfs in entry_blooms.items()
-                if g < len(bfs)
+                for name, (filters, bt) in entry_blooms.items()
             }
             if sarg_mod.keep(predicate, col_stats, probes or None):
                 keep_groups.append(g_base + g)
@@ -1023,170 +1026,3 @@ def read_orc_filtered(
     else:
         table = _read_row_groups(data, kind, footer, [], columns)
     return table, n_total, len(keep_groups)
-
-
-# --- reference bloom filters (consumer side) ---------------------------------
-#
-# Byte-exact reimplementation of the probe side of
-# ``org.apache.orc.util.BloomFilter`` + ``Murmur3.hash64`` (constants and
-# control flow recovered from the orc-core 2.2.2 bytecode; validated
-# value-identically against the live Java class in tests): strings probe
-# with Murmur3 hash64 over utf-8 bytes, longs with the Thomas-Wang mix,
-# doubles via their raw IEEE-754 bits; k probe positions at the
-# int32-wrapping ``hash1 + i*hash2`` with ``~`` on negatives.
-
-_M64 = (1 << 64) - 1
-_MURMUR_C1 = (-8663945395140668459) & _M64
-_MURMUR_C2 = 5545529020109919103
-_MURMUR_SEED = 104729
-
-
-def _rotl64(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def murmur3_hash64(data: bytes, seed: int = _MURMUR_SEED) -> int:
-    """org.apache.orc.util.Murmur3.hash64 (signed Java long result)."""
-    h = seed & _M64
-    nblocks = len(data) >> 3
-    for i in range(nblocks):
-        k = int.from_bytes(data[i * 8 : (i + 1) * 8], "little")
-        k = (k * _MURMUR_C1) & _M64
-        k = _rotl64(k, 31)
-        k = (k * _MURMUR_C2) & _M64
-        h ^= k
-        h = (_rotl64(h, 27) * 5 + 1390208809) & _M64
-    tail = data[nblocks * 8 :]
-    if tail:
-        k1 = 0
-        for i, b in enumerate(tail):
-            k1 ^= b << (8 * i)
-        k1 = (k1 * _MURMUR_C1) & _M64
-        k1 = _rotl64(k1, 31)
-        k1 = (k1 * _MURMUR_C2) & _M64
-        h ^= k1
-    h ^= len(data)
-    h ^= h >> 33
-    h = (h * 0xFF51AFD7ED558CCD) & _M64
-    h ^= h >> 33
-    h = (h * 0xC4CEB9FE1A85EC53) & _M64
-    h ^= h >> 33
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def _orc_long_hash(key: int) -> int:
-    """BloomFilter.getLongHash: Thomas-Wang 64-bit mix with Java's
-    ARITHMETIC right shifts (lshr on signed longs)."""
-
-    def sar(v: int, r: int) -> int:  # arithmetic shift right on int64
-        v &= _M64
-        if v >= 1 << 63:
-            v -= 1 << 64
-        return (v >> r) & _M64
-
-    key &= _M64
-    key = ((key ^ _M64) + (key << 21)) & _M64
-    key ^= sar(key, 24)
-    key = (key + (key << 3) + (key << 8)) & _M64
-    key ^= sar(key, 14)
-    key = (key + (key << 2) + (key << 4)) & _M64
-    key ^= sar(key, 28)
-    key = (key + (key << 31)) & _M64
-    return key - (1 << 64) if key >= (1 << 63) else key
-
-
-def _bloom_test_hash(words: "np.ndarray", num_funcs: int, h64: int) -> bool:
-    """BloomFilter.testHash: int32-wrapping combined probes, ~ on
-    negatives, modulo numBits; True = maybe present."""
-    num_bits = int(words.size) * 64
-    if not num_bits:
-        return True
-    h64 &= _M64
-    hash1 = h64 & 0xFFFFFFFF
-    if hash1 >= 1 << 31:
-        hash1 -= 1 << 32
-    hash2 = (h64 >> 32) & 0xFFFFFFFF
-    if hash2 >= 1 << 31:
-        hash2 -= 1 << 32
-    for i in range(1, num_funcs + 1):
-        combined = (hash1 + i * hash2) & 0xFFFFFFFF
-        if combined >= 1 << 31:
-            combined -= 1 << 32
-        if combined < 0:
-            combined = ~combined
-        pos = combined % num_bits
-        if not (int(words[pos >> 6]) >> (pos & 63)) & 1:
-            return False
-    return True
-
-
-def _orc_decimal_str(value) -> str:
-    """HiveDecimal.toString form: plain notation, trailing fractional
-    zeros stripped, zero is "0" regardless of scale or sign — the string
-    DecimalTreeWriter feeds bloomFilterUtf8.addString (validated against
-    a live Java writer's bloom streams: hit rate 1.0 vs 0.0085 for the
-    raw-scale string)."""
-    if not value:
-        return "0"
-    s = format(value.normalize(), "f")
-    return s
-
-
-def _orc_timestamp_millis(value) -> int:
-    """TimestampTreeWriter bloom key: UTC epoch milliseconds (floor),
-    java.sql.Timestamp.getTime() semantics (validated against a live
-    Java writer's bloom streams)."""
-    import datetime as _dt
-
-    if value.tzinfo is None:
-        value = value.replace(tzinfo=_dt.timezone.utc)
-    epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-    delta = value - epoch
-    us = (delta.days * 86_400_000_000
-          + delta.seconds * 1_000_000 + delta.microseconds)
-    return us // 1000
-
-
-def _bloom_probe_value(words, num_funcs, value) -> bool:
-    import datetime as _dt
-    import decimal as _decimal
-    import struct as _struct
-
-    if isinstance(value, str):
-        h = murmur3_hash64(value.encode("utf-8"))
-    elif isinstance(value, bytes):
-        h = murmur3_hash64(value)
-    elif isinstance(value, bool):
-        return True  # ORC has no bool blooms
-    elif isinstance(value, int):
-        h = _orc_long_hash(value)
-    elif isinstance(value, float):
-        h = _orc_long_hash(
-            int.from_bytes(_struct.pack("<d", value), "little", signed=False)
-        )
-    elif isinstance(value, _decimal.Decimal):
-        h = murmur3_hash64(_orc_decimal_str(value).encode("utf-8"))
-    elif isinstance(value, _dt.datetime):
-        h = _orc_long_hash(_orc_timestamp_millis(value))
-    else:
-        return True  # unknown domain: cannot refute
-    return _bloom_test_hash(words, num_funcs, h)
-
-
-def _parse_bloom_index(blob: bytes) -> list[tuple["np.ndarray", int]]:
-    """BloomFilterIndex -> [(bitset words le-uint64, numHashFunctions)]
-    per row group; utf8bitset (field 3) or legacy repeated fixed64
-    bitset (field 2)."""
-    out = []
-    idx = _parse_pb(blob)
-    for e in idx.get(1, []):
-        bf = _parse_pb(e)
-        k = bf.get(1, [0])[0]
-        if 3 in bf:
-            words = np.frombuffer(bytes(bf[3][0]), "<u8")
-        elif 2 in bf:
-            words = np.array(bf[2], np.uint64)
-        else:
-            words = np.zeros(0, np.uint64)
-        out.append((words, k))
-    return out

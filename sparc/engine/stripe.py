@@ -721,9 +721,10 @@ def encode_stripe(
 ) -> tuple[dict[tuple[str, str], bytes], dict]:
     """Encode all columns -> ({(column, kind): bytes}, stripe footer).
 
-    ``bloom_columns`` adds a per-row-group BLOOM_FILTER_UTF8 stream for
-    the named columns (point-lookup stripe + row-group pruning,
-    SURVEY.md §2.6)."""
+    ``bloom_columns`` adds a BLOOM_FILTER_UTF8 stream for the named
+    columns (point-lookup stripe + row-group pruning, SURVEY.md §2.6):
+    ORC's BloomFilterIndex, one filter per row group (``bloom.py``), for
+    every type the reference keeps one for (not bool or nested)."""
     import time
 
     from .. import runtime
@@ -739,15 +740,16 @@ def encode_stripe(
         col_streams, col_meta = encode_column(
             col, name, codec, fsst, stride=row_index_stride
         )
+        filters = None
         if bloom_columns and name in bloom_columns:
             from . import bloom as bloom_mod
 
-            blobs = []
-            for lo, hi in _row_bounds(len(col), row_index_stride):
-                sub = col.slice(lo, hi - lo)
-                sub = sub.drop_null() if sub.null_count else sub
-                blobs.append(bloom_mod.build(sub.to_pandas()))
-            blob = bloom_mod.pack_multi(blobs)
+            filters = bloom_mod.build(
+                col, _row_bounds(len(col), row_index_stride),
+                row_index_stride or len(col),
+            )
+        if filters is not None:
+            blob = bloom_mod.pack_multi(filters)
             col_streams["BLOOM_FILTER_UTF8"] = blob
             col_meta["streams"]["BLOOM_FILTER_UTF8"] = {
                 "encoded": len(blob),
@@ -1113,32 +1115,34 @@ def pick_row_groups(
     selected group indices, or None when every group survives (decode
     whole).  The engine's ``RecordReaderImpl.pickRowGroups`` analog.
 
-    With ``streams``, per-row-group bloom filters (BLOOM_FILTER_UTF8,
-    packed per group) additionally refute =/IN leaves the min/max stats
-    cannot — ``checkInBloomFilter`` (RecordReaderImpl.java:932-978)."""
+    With ``streams``, per-row-group bloom filters (BLOOM_FILTER_UTF8)
+    additionally refute =/IN leaves the min/max stats cannot —
+    ``checkInBloomFilter`` (RecordReaderImpl.java:932-978).  A bloom
+    stream without one filter per row group is ignored."""
     from . import bloom as bloom_mod, sarg as sarg_mod
 
-    per_col = [
-        (c["name"], c.get("row_index"))
-        for c in footer["columns"]
-    ]
-    indexed = [(n, ri) for n, ri in per_col if ri]
+    metas = {c["name"]: c for c in footer["columns"]}
+    indexed = [(n, c["row_index"]) for n, c in metas.items() if c.get("row_index")]
     if not indexed:
         return None
-    blooms: dict[str, list[bytes]] = {}
-    if streams:
-        for (cname, kind), blob in streams.items():
-            if kind == "BLOOM_FILTER_UTF8":
-                blooms[cname] = bloom_mod.unpack_multi(bytes(blob))
     n_rgs = len(indexed[0][1])
+    blooms: dict[str, tuple] = {}
+    for (cname, kind), blob in (streams or {}).items():
+        if kind == "BLOOM_FILTER_UTF8":
+            filters = bloom_mod.unpack_multi(blob, n_rgs)
+            if filters is not None:
+                blooms[cname] = (filters, _parse_type(metas[cname]))
     selected = []
     for g in range(n_rgs):
         col_stats = {
             name: ri[g]["stats"] for name, ri in indexed if g < len(ri)
         }
         probes = {
-            name: (lambda v, _b=blobs, _g=g: bloom_mod.might_contain_rg_list(_b, v, _g))
-            for name, blobs in blooms.items()
+            name: (
+                lambda v, _f=filters, _t=t, _g=g:
+                bloom_mod.might_contain_rg_list(_f, _t, v, _g)
+            )
+            for name, (filters, t) in blooms.items()
         }
         if sarg_mod.keep(predicate, col_stats, probes or None):
             selected.append(g)

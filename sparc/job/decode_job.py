@@ -429,10 +429,10 @@ def prune_stripes_bloom_df(
     """Stripe ids that *might* contain ``value`` in ``column``, probed
     against the per-stripe bloom streams IN EXECUTORS (bloom blobs never
     reach the driver): a byte-range read of just the bloom span per
-    footer.  Stripes without a bloom stream are kept."""
+    footer.  Stripes without a readable bloom stream are kept."""
 
     def probe(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from ..engine import bloom as bloom_mod
+        from ..engine import bloom as bloom_mod, stripe as stripe_mod
 
         for pdf in pdfs:
             miss = []
@@ -452,7 +452,11 @@ def prune_stripes_bloom_df(
                 with open(_stripe_path(footer, streams_dir), "rb") as f:
                     f.seek(span[0])
                     blob_bytes = f.read(span[1])
-                miss.append(not bloom_mod.might_contain_any(blob_bytes, value))
+                (meta,) = [c for c in footer["columns"] if c["name"] == column]
+                miss.append(not bloom_mod.might_contain_any(
+                    blob_bytes, stripe_mod._parse_type(meta), value,
+                    len(meta.get("row_index") or [None]),
+                ))
             yield pdf.loc[miss, ["stripe_id"]]
 
     footers = footers_df(spark, streams_dir)

@@ -790,7 +790,7 @@ def test_bloom_bitsets_word_identical_to_java(spark, tmp_path):
     for word — then the whole loop closes: our writer's blooms prune our
     consumer's reads of our file, and the Java reader still reads the
     file exactly."""
-    from sparc.engine import orcfile as of, orcread
+    from sparc.engine import bloom
 
     jvm = spark.sparkContext._jvm
     n = 2000
@@ -800,18 +800,14 @@ def test_bloom_bitsets_word_identical_to_java(spark, tmp_path):
         jbf = jvm.org.apache.orc.util.BloomFilterUtf8(n, fpp)
         for v in vals:
             jbf.addBytes(bytearray(v.encode()), 0, len(v))
-        ours, k = of._orc_bloom_build(
-            [orcread.murmur3_hash64(v.encode()) for v in vals], n, fpp
-        )
+        [(ours, k)] = bloom.build(pa.array(vals), [(0, n)], n, fpp)
         assert k == jbf.getNumHashFunctions()
         theirs = np.array(list(jbf.getBitSet()), np.int64).astype(np.uint64)
         assert np.array_equal(ours, theirs), f"string bitset fpp={fpp}"
         jbf2 = jvm.org.apache.orc.util.BloomFilterUtf8(n, fpp)
         for v in ints:
             jbf2.addLong(v)
-        ours2, k2 = of._orc_bloom_build(
-            [orcread._orc_long_hash(v) for v in ints], n, fpp
-        )
+        [(ours2, k2)] = bloom.build(pa.array(ints, pa.int64()), [(0, n)], n, fpp)
         assert k2 == jbf2.getNumHashFunctions()
         theirs2 = np.array(list(jbf2.getBitSet()), np.int64).astype(np.uint64)
         assert np.array_equal(ours2, theirs2), f"long bitset fpp={fpp}"
@@ -906,8 +902,7 @@ def test_bloom_double_bitsets_word_identical_to_java(spark, tmp_path):
     doubleToLongBits -> Thomas-Wang path must equal a live Java
     BloomFilterUtf8 fed the same doubles, word for word (incl. the
     canonical-NaN and -0.0 bit patterns)."""
-    import struct as _struct
-    from sparc.engine import orcfile as of, orcread
+    from sparc.engine import bloom
 
     jvm = spark.sparkContext._jvm
     vals = [i * 0.5 - 37.25 for i in range(800)] + [
@@ -917,8 +912,9 @@ def test_bloom_double_bitsets_word_identical_to_java(spark, tmp_path):
         jbf = jvm.org.apache.orc.util.BloomFilterUtf8(len(vals), fpp)
         for v in vals:
             jbf.addDouble(float(v))
-        hashes = of._orc_bloom_hashes(pa.array(vals, pa.float64()))
-        ours, k = of._orc_bloom_build(hashes, len(vals), fpp)
+        [(ours, k)] = bloom.build(
+            pa.array(vals, pa.float64()), [(0, len(vals))], len(vals), fpp
+        )
         assert k == jbf.getNumHashFunctions()
         theirs = np.array(list(jbf.getBitSet()), np.int64).astype(np.uint64)
         assert np.array_equal(ours, theirs), f"double bitset fpp={fpp}"

@@ -20,7 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import bench
-from sparc.engine import orcread
+from sparc.engine import bloom, orcread
 
 
 def _write_java_orc(spark, tmp_path, compression: str, n: int = 60_000) -> str:
@@ -179,8 +179,9 @@ def test_murmur3_and_long_hash_match_java(spark):
     rng = random.Random(7)
     cases = [b"", b"a", b"hello world", bytes(8), bytes(range(256))]
     cases += [rng.randbytes(rng.randrange(0, 64)) for _ in range(40)]
-    for b in cases:
-        assert orcread.murmur3_hash64(b) == M.hash64(bytearray(b)), b
+    theirs = [M.hash64(bytearray(b)) for b in cases]
+    assert [bloom.murmur3_hash64(b) for b in cases] == theirs
+    assert bloom.hash64(pa.array(cases, pa.binary())).tolist() == theirs
     bf = jvm.org.apache.orc.util.BloomFilter(1000, 0.01)
     longs = [0, 1, -1, 2**62, -(2**62), 12345] + [
         rng.randrange(-(2**63), 2**63) for _ in range(40)
@@ -190,9 +191,9 @@ def test_murmur3_and_long_hash_match_java(spark):
     words = np.array(list(bf.getBitSet()), dtype=np.int64).astype(np.uint64)
     k = bf.getNumHashFunctions()
     for v in longs:  # everything added must test positive through OUR probe
-        assert orcread._bloom_test_hash(words, k, orcread._orc_long_hash(v)), v
+        assert bloom._test_hash(words, k, bloom._orc_long_hash(v)), v
     absent = [rng.randrange(-(2**63), 2**63) for _ in range(200)]
-    ours = [orcread._bloom_test_hash(words, k, orcread._orc_long_hash(v)) for v in absent]
+    ours = [bloom._test_hash(words, k, bloom._orc_long_hash(v)) for v in absent]
     theirs = [bool(bf.testLong(v)) for v in absent]
     assert ours == theirs  # bit-identical decisions, incl. false positives
 

@@ -3,7 +3,7 @@ stripe compaction — the SURVEY.md §2.1/§2.6/§2.7/§2.9 surfaces."""
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -133,61 +133,71 @@ def test_three_level_filter_from_one_predicate(spark, pages_path, streams_dir):
 # ---------------------------------------------------------------------------
 
 
+def _bloom(values, typ=None):
+    """One ORC bloom filter over ``values``, sized for them, at the
+    default fpp (0.01) -> (filters, column type) for the probes."""
+    arr = pa.array(values, typ)
+    return bloom.build(arr, [(0, len(arr))], len(arr)), arr.type
+
+
+def _maybe(f, value) -> bool:
+    filters, t = f
+    return bloom.might_contain_rg_list(filters, t, value, 0)
+
+
 def test_bloom_roundtrip_no_false_negatives():
-    vals = pd.Series([f"key-{i}" for i in range(5000)])
-    blob = bloom.build(vals)
-    assert all(bloom.might_contain(blob, v) for v in vals[:200])
-    fp = sum(bloom.might_contain(blob, f"absent-{i}") for i in range(1000))
-    assert fp < 50  # ~1% FPP target, generous bound
+    vals = [f"key-{i}" for i in range(5000)]
+    f = _bloom(vals)
+    assert all(_maybe(f, v) for v in vals)
+    fp = sum(_maybe(f, f"absent-{i}") for i in range(5000))
+    assert fp / 5000 <= 0.02  # measured FPP at the 0.01 target
 
 
 def test_bloom_probe_dtype_mismatch_no_false_negative():
-    """Probing a float64-built filter with a Python int must still hit:
-    the header records the build dtype and the probe is cast to it."""
-    vals = pd.Series([float(i) for i in range(1000)])
-    blob = bloom.build(vals)
-    assert bloom.might_contain(blob, 5)       # int probe vs float64 build
-    assert bloom.might_contain(blob, 5.0)
-    ints = pd.Series(list(range(1000)))
-    blob2 = bloom.build(ints)
-    assert bloom.might_contain(blob2, 7.0)    # float probe vs int64 build
-    # un-castable probe degrades to "cannot skip", never a false negative
-    assert bloom.might_contain(blob2, "not-a-number")
+    """The probe maps the literal into the column's type: an int probes a
+    double column as a double, a float an int column as a long."""
+    f = _bloom([float(i) for i in range(1000)])
+    assert _maybe(f, 5)       # int probe vs float64 build
+    assert _maybe(f, 5.0)
+    f2 = _bloom(list(range(1000)))
+    assert _maybe(f2, 7.0)    # float probe vs int64 build
+    assert _maybe(f2, 7)
+    # a literal the column's type cannot hold degrades to "cannot skip"
+    assert _maybe(f2, "not-a-number")
+    assert _maybe(f2, 7.5)
+    absent = sum(_maybe(f2, float(v)) for v in range(1000, 3000))
+    assert absent / 2000 <= 0.02
 
 
 def test_bloom_str_bytes_cross_probe_no_false_negative():
-    """ADVICE r2: str and bytes share pandas dtype 'object' but hash
-    differently — both directions must hit after normalization."""
-    svals = pd.Series([f"key-{i}" for i in range(500)])
-    sblob = bloom.build(svals)
-    assert bloom.might_contain(sblob, b"key-7")   # bytes probe vs str build
-    assert bloom.might_contain(sblob, "key-7")
-    bvals = pd.Series([f"key-{i}".encode() for i in range(500)])
-    bblob = bloom.build(bvals)
-    assert bloom.might_contain(bblob, "key-7")    # str probe vs bytes build
-    assert bloom.might_contain(bblob, b"key-7")
-    # mixed str/bytes build normalizes too
-    mix = pd.Series(["alpha", b"beta", "gamma"])
-    mblob = bloom.build(mix)
-    assert bloom.might_contain(mblob, b"alpha")
-    assert bloom.might_contain(mblob, "beta")
+    """str and bytes literals probe string and binary columns alike:
+    both hash the UTF-8 bytes."""
+    sf = _bloom([f"key-{i}" for i in range(500)])
+    assert _maybe(sf, b"key-7")   # bytes probe vs string build
+    assert _maybe(sf, "key-7")
+    bf = _bloom([f"key-{i}".encode() for i in range(500)])
+    assert _maybe(bf, "key-7")    # str probe vs binary build
+    assert _maybe(bf, b"key-7")
+    uf = _bloom(["ключ", "キー"])
+    assert _maybe(uf, "ключ".encode()) and _maybe(uf, "キー")
     # non-stringlike probe vs string filter: cannot skip, never false-neg
-    assert bloom.might_contain(sblob, 42)
-    # absent keys still refute through the normalized path
-    fp = sum(bloom.might_contain(sblob, f"absent-{i}") for i in range(500))
+    assert _maybe(sf, 42)
+    # absent keys still refute through either literal type
+    fp = sum(_maybe(sf, f"absent-{i}") + _maybe(sf, f"absent-{i}".encode()) for i in range(500))
     assert fp < 30
 
 
 def test_bloom_probe_emits_no_runtime_warnings():
     import warnings
 
-    vals = pd.Series([f"k{i}" for i in range(100)])
-    blob = bloom.build(vals)
+    vals = [f"k{i}" for i in range(100)]
     with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        bloom.build(vals)
+        warnings.simplefilter("error")
+        f = _bloom(vals)
+        _bloom([2**63 - 1, -(2**63), 0, None], pa.int64())
+        _bloom([float("nan"), -0.0, 1e308], pa.float64())
         for i in range(50):
-            bloom.might_contain(blob, f"k{i}")
+            _maybe(f, f"k{i}")
 
 
 def test_bloom_prunes_stripes(spark, pages_path, streams_dir):
@@ -199,6 +209,36 @@ def test_bloom_prunes_stripes(spark, pages_path, streams_dir):
         spark, streams_dir, "url", "https://definitely-not-present.example/x"
     )
     assert len(absent) < 6  # bloom prunes at least one stripe for absent keys
+
+
+def test_bloom_prune_keeps_stripes_with_pre_orc_bloom_streams(spark, streams_dir, tmp_path):
+    """Stripes written with the earlier pandas filter (``SBM1`` framing)
+    hold no readable ORC bloom: every stripe is kept, nothing raises.
+    The patched-in filter has all bits clear, so misreading it as a
+    filter would refute every key."""
+    import json
+    import shutil
+    import struct
+
+    d = str(tmp_path / "legacy")
+    shutil.copytree(streams_dir, d)
+    for row in decode_job.footers_df(spark, d).collect():
+        footer = json.loads(row["footer"])
+        ((off, ln),) = [
+            (o, n) for c, k, o, n in footer["stream_spans"]
+            if c == "url" and k == "BLOOM_FILTER_UTF8"
+        ]
+        n_bits = (ln - 24) * 8
+        one = struct.pack("<IBB", n_bits, 7, 8) + b"object/b" + bytes(n_bits // 8)
+        blob = b"SBM1" + struct.pack("<HI", 1, len(one)) + one
+        assert len(blob) == ln
+        with open(decode_job._stripe_path(footer, d), "r+b") as f:
+            f.seek(off)
+            f.write(blob)
+    keep = decode_job.prune_stripes_bloom(
+        spark, d, "url", "https://definitely-not-present.example/x"
+    )
+    assert len(keep) == 6
 
 
 # ---------------------------------------------------------------------------
