@@ -453,9 +453,10 @@ def prune_stripes_bloom_df(
                     f.seek(span[0])
                     blob_bytes = f.read(span[1])
                 (meta,) = [c for c in footer["columns"] if c["name"] == column]
+                # one filter per row group; an unindexed stripe holds one
+                n_groups = len(meta.get("row_index") or ()) or 1
                 miss.append(not bloom_mod.might_contain_any(
-                    blob_bytes, stripe_mod._parse_type(meta), value,
-                    len(meta.get("row_index") or [None]),
+                    blob_bytes, stripe_mod._parse_type(meta), value, n_groups
                 ))
             yield pdf.loc[miss, ["stripe_id"]]
 

@@ -170,7 +170,7 @@ def _literals(kind: str, v) -> list:
         return [k, v, float(k), Decimal(k)]
     if kind == "timestamp":
         return [k, v]
-    out = [k, float(k), Decimal(k)] if kind != "float32" else [k, Decimal(k)]
+    out = [k, float(k), Decimal(k)]
     if float(k).is_integer():
         out.append(int(k))
     return out
