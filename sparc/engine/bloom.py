@@ -15,7 +15,8 @@ writers size theirs.  Values hash as the writer's ``add*`` dispatch does:
 - timestamps: the long mix of UTC epoch milliseconds (floor);
 - decimals: Murmur3 of the HiveDecimal plain string.
 
-Building hashes whole Arrow columns with numpy; the scalar
+Building hashes whole Arrow columns with numpy (a decimal column still
+formats each value's HiveDecimal string in Python first); the scalar
 :func:`murmur3_hash64` and :func:`_orc_long_hash` hash probe literals
 and are the reference the vectorized kernels are tested against.  Blooms
 only prune, so a stream that does not parse as one entry per row group
@@ -262,74 +263,36 @@ def build(
     return [(_bitset(h[before[lo] : before[hi]], num_bits, k), k) for lo, hi in bounds]
 
 
-def _varint(v: int) -> bytes:
-    out = bytearray()
-    while v > 0x7F:
-        out.append(v & 0x7F | 0x80)
-        v >>= 7
-    out.append(v)
-    return bytes(out)
-
-
 def pack_multi(filters: list[tuple[np.ndarray, int]]) -> bytes:
     """Per-row-group filters -> BloomFilterIndex protobuf."""
-    out = bytearray()
-    for words, k in filters:
-        bits = words.astype("<u8").tobytes()
-        body = b"\x08" + _varint(k) + b"\x1a" + _varint(len(bits)) + bits
-        out += b"\x0a" + _varint(len(body)) + body
-    return bytes(out)
+    from .orcfile import _f_bytes, _f_varint
 
-
-def _fields(mv: memoryview):
-    """(key, value) of each varint or length-delimited protobuf field."""
-    pos = 0
-    while pos < len(mv):
-        key, pos = _read_varint(mv, pos)
-        if key & 7 == 0:
-            v, pos = _read_varint(mv, pos)
-        elif key & 7 == 2:
-            ln, pos = _read_varint(mv, pos)
-            v, pos = mv[pos : pos + ln], pos + ln
-            if pos > len(mv):
-                raise ValueError("truncated field")
-        else:
-            raise ValueError(f"wire type {key & 7}")
-        yield key, v
-
-
-def _read_varint(mv: memoryview, pos: int) -> tuple[int, int]:
-    out = shift = 0
-    while True:
-        b = mv[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-        shift += 7
+    return b"".join(
+        _f_bytes(1, _f_varint(1, k) + _f_bytes(3, words.astype("<u8").tobytes()))
+        for words, k in filters
+    )
 
 
 def unpack_multi(blob, n_groups: int) -> list[tuple[np.ndarray, int]] | None:
     """BloomFilterIndex -> [(words, numHashFunctions)] per row group, or
     None unless ``blob`` holds exactly ``n_groups`` entries, each with
     k >= 1 and a whole-word utf8bitset."""
+    from .orcread import _parse_pb
+
     out = []
     try:
-        for key, entry in _fields(memoryview(blob)):
-            if key != 0x0A:
+        index = _parse_pb(blob)
+        if set(index) - {1}:
+            return None
+        for entry in index.get(1, []):
+            bf = _parse_pb(entry)  # TypeError: not a length-delimited entry
+            k, bits = bf.get(1, [0])[-1], bf.get(3, [b""])[-1]
+            if set(bf) - {1, 3} or not isinstance(k, int) or k < 1:
                 return None
-            k, words = 0, None
-            for ekey, v in _fields(entry):
-                if ekey == 0x08:
-                    k = v
-                elif ekey == 0x1A and len(v) % 8 == 0:
-                    words = np.frombuffer(v, "<u8")
-                else:
-                    return None
-            if k < 1 or words is None or not len(words):
+            if not isinstance(bits, memoryview) or not len(bits) or len(bits) % 8:
                 return None
-            out.append((words, k))
-    except (IndexError, ValueError):
+            out.append((np.frombuffer(bits, "<u8"), k))
+    except (IndexError, TypeError, ValueError):
         return None
     return out if len(out) == n_groups else None
 

@@ -62,6 +62,8 @@ def _parse_pb(data: bytes | memoryview) -> dict[int, list]:
             v, pos = _varint(mv, pos)
         elif wire == 2:
             ln, pos = _varint(mv, pos)
+            if pos + ln > n:
+                raise ValueError("truncated length-delimited field")
             v = mv[pos : pos + ln]
             pos += ln
         elif wire == 1:

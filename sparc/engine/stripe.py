@@ -724,7 +724,8 @@ def encode_stripe(
     ``bloom_columns`` adds a BLOOM_FILTER_UTF8 stream for the named
     columns (point-lookup stripe + row-group pruning, SURVEY.md §2.6):
     ORC's BloomFilterIndex, one filter per row group (``bloom.py``), for
-    every type the reference keeps one for (not bool or nested)."""
+    every type the reference keeps one for; a bool or nested column
+    raises NotImplementedError, as in ``orcfile.write_orc``."""
     import time
 
     from .. import runtime
@@ -748,6 +749,8 @@ def encode_stripe(
                 col, _row_bounds(len(col), row_index_stride),
                 row_index_stride or len(col),
             )
+            if filters is None:
+                raise NotImplementedError(f"stripe: bloom on type {col.type}")
         if filters is not None:
             blob = bloom_mod.pack_multi(filters)
             col_streams["BLOOM_FILTER_UTF8"] = blob

@@ -128,6 +128,29 @@ def test_wrong_group_count_is_absent():
     assert not bloom.might_contain_any(blob, pa.string(), "absent", 3)
 
 
+def test_length_past_the_end_prunes_nothing():
+    """A field whose length runs past the buffer is a parse error, not a
+    short slice: cut by one word, the last entry would otherwise read as
+    a valid filter with one word fewer."""
+    arr = pa.array([f"k{i}" for i in range(30)])
+    blob = bloom.pack_multi(bloom.build(arr, [(0, 10), (10, 20), (20, 30)], 10))
+    assert bloom.unpack_multi(blob[:-8], 3) is None
+    assert bloom.might_contain_any(blob[:-8], pa.string(), "absent", 3)
+    with pytest.raises(ValueError, match="truncated"):
+        orcread._parse_pb(b"\x0a\x05\x08\x07")
+
+
+@pytest.mark.parametrize("col", [pa.array([True, False] * 8), pa.array([[1]] * 16)])
+def test_engine_bloom_on_unsupported_type_raises(tmp_path, col):
+    """Bool and nested columns get no bloom filter, as in ``write_orc``:
+    asking for one is an error, not a silently missing stream."""
+    t = pa.table({"c": col})
+    with pytest.raises(NotImplementedError, match="bloom"):
+        stripe.encode_stripe(t, row_index_stride=8, bloom_columns=["c"])
+    with pytest.raises(NotImplementedError, match="bloom"):
+        orcfile.write_orc(t, str(tmp_path / "c.orc"), row_index_stride=8, bloom_columns=["c"])
+
+
 # --- probe soundness: column type x literal type -----------------------------
 
 # kind -> (arrow type, strategy of stored python values)
