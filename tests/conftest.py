@@ -104,3 +104,55 @@ def mixed_orc_table(n: int = 5_500, seed: int = 11):
             "u": union,
         }
     )
+
+
+def stats_edge_table(n: int = 5_500, seed: int = 12):
+    """Seeded table of the statistics corners, in row groups of 1,000:
+    floats with NaN and ±inf in some groups only; int, bool and string
+    columns whose rows 1,000-1,999 are all null; full-range int64 values,
+    both extremes included; ``ns`` timestamps with sub-millisecond parts
+    (pre-1970 too) and ``ms`` timestamps; and strings past the 1,024-byte
+    statistics limit whose cut falls inside a multibyte character, just
+    after a complete one, and after an ASCII byte, as the least and
+    greatest value of their groups, in a direct and a dictionary column."""
+    import numpy as np
+    import pyarrow as pa
+
+    rng = np.random.default_rng(seed)
+    group = np.arange(n) // 1_000
+
+    def nulls(p: float) -> np.ndarray:
+        return rng.random(n) < p
+
+    f64 = rng.normal(0, 1e3, n)
+    f64[[1_100, 2_200, 2_201]] = [np.nan, np.inf, -np.inf]
+    f32 = rng.normal(0, 10, n).astype(np.float32)
+    f32[[300, 2_900]] = [-np.inf, np.nan]
+    i64 = rng.integers(np.iinfo(np.int64).min, np.iinfo(np.int64).max, n, endpoint=True)
+    i64[[5, 2_500]] = [np.iinfo(np.int64).min, np.iinfo(np.int64).max]
+    ns = rng.integers(-(10**18), 2 * 10**18, n)
+    ms = rng.integers(-(10**12), 2 * 10**12, n)
+    long_vals = {
+        10: "0" * 1_023 + "é" * 8,  # cut inside é, the group-0 minimum
+        20: "~" * 2 + "é" * 600,  # cut just after a whole é, a maximum
+        2_050: "0" * 1_021 + "€" * 6,  # cut inside €
+        2_060: "~" * 1_030,  # cut after an ASCII byte
+    }
+    gap = (group == 1) | nulls(0.05)
+    direct = [None if z else long_vals.get(i, f"w{i}-ü{i % 13}") for i, z in enumerate(gap)]
+    dict_ = [None if z else long_vals.get(i, f"w{i % 97}") for i, z in enumerate(gap)]
+    return pa.table(
+        {
+            "f64": pa.array(f64, pa.float64(), mask=nulls(0.05)),
+            "f32": pa.array(f32, pa.float32()),
+            "i_gap": pa.array(
+                rng.integers(-500, 500, n), pa.int64(), mask=(group == 1) | nulls(0.1)
+            ),
+            "b_gap": pa.array(rng.random(n) < 0.5, pa.bool_(), mask=group == 1),
+            "i64": pa.array(i64, pa.int64(), mask=nulls(0.03)),
+            "ts_ns": pa.array(ns, pa.timestamp("ns"), mask=nulls(0.04)),
+            "ts_ms": pa.array(ms, pa.timestamp("ms", tz="UTC")),
+            "s_direct": pa.array(direct, pa.string()),
+            "s_dict": pa.array(dict_, pa.large_string()),
+        }
+    )

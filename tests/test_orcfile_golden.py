@@ -18,7 +18,11 @@ stripe 1 and whose nullable columns have nulls only in stripe 0, under
 NONE and ZSTD and once as a 0.11 file; and an indexed two-stripe string
 table (``_string_stats_table``) whose stripe and file string statistics
 cover an all-null row group, empty strings, non-ASCII and over-limit
-values, under NONE and ZSTD.  To regenerate after an *intended*
+values, under NONE and ZSTD; and the statistics corners of
+``conftest.stats_edge_table`` (NaN and ±inf doubles, an all-null row group,
+full-range int64, ``ns``/``ms`` timestamps, over-limit strings), in three
+stripes with and without a row index, recorded before the writer's
+statistics moved into ``stats.py``.  To regenerate after an *intended*
 format change::
 
     PYTHONPATH=.:tests python tests/test_orcfile_golden.py
@@ -33,7 +37,7 @@ import tempfile
 import pytest
 
 import bench
-from conftest import mixed_orc_table
+from conftest import mixed_orc_table, stats_edge_table
 from sparc.engine import orcfile
 
 LINEITEM = os.path.join(
@@ -136,6 +140,14 @@ def _string_stats_cases():
         }
 
 
+def _stats_edge_cases():
+    t = stats_edge_table()
+    for stride in (0, 1_000):
+        yield f"stats_edges/NONE/{stride}", t, {
+            "row_index_stride": stride, "rows_per_stripe": 2_000,
+        }
+
+
 def _digest(table, kwargs: dict) -> str:
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "golden.orc")
@@ -155,6 +167,8 @@ GOLDEN = {
     "lineitem/75000/ZSTD/10000": "e387a1da80fb09f691070d8cd49d3502dba27db4bcf57dca9986b135cdc1be38",
     "string_stats/NONE/400": "502e40cca36ded84db9fd5368483a6710605f7e5fae475a2d4a700b65f4d1f6e",
     "string_stats/ZSTD/400": "a06116c2bda83bebb4036c7c59c68d1595de0773fb3ca8b0213ddd6c7a65bce4",
+    "stats_edges/NONE/0": "6bf140920ed46576c956f59f41e6bb555fc7e17d36866a3fa1d0afc1e68fe485",
+    "stats_edges/NONE/1000": "042edaf50f3b58a4ca6956dca78b7600d800f983840d952ce2863419deb108ba",
 }
 
 
@@ -176,6 +190,12 @@ def test_write_orc_string_stats_bytes_match_golden(case):
     assert _digest(table, kwargs) == GOLDEN[case]
 
 
+@pytest.mark.parametrize("case", [c[0] for c in _stats_edge_cases()])
+def test_write_orc_stats_edge_bytes_match_golden(case):
+    (table, kwargs), = [(t, kw) for name, t, kw in _stats_edge_cases() if name == case]
+    assert _digest(table, kwargs) == GOLDEN[case]
+
+
 @pytest.mark.skipif(not os.path.exists(LINEITEM), reason="sf0.1 testdata absent")
 def test_write_orc_lineitem_bytes_match_golden():
     name, table, kwargs = _lineitem_case()
@@ -183,7 +203,10 @@ def test_write_orc_lineitem_bytes_match_golden():
 
 
 if __name__ == "__main__":
-    cases = list(_mixed_cases()) + list(_two_stripe_cases()) + list(_string_stats_cases())
+    cases = (
+        list(_mixed_cases()) + list(_two_stripe_cases()) + list(_string_stats_cases())
+        + list(_stats_edge_cases())
+    )
     if os.path.exists(LINEITEM):
         cases.append(_lineitem_case())
     print("GOLDEN = {")
