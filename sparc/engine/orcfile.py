@@ -47,13 +47,11 @@ only — field numbers from the public orc_proto.proto)."""
 
 from __future__ import annotations
 
-from bisect import bisect_left
-
 import numpy as np
 import pyarrow as pa
 
 from ..kernels import bitfield, dictionary, rlev1, rlev2
-from . import bloom as bloom_mod, stripe as stripe_mod
+from . import bloom as bloom_mod, stats as stats_mod, stripe as stripe_mod
 
 # --- ORC compressed-stream framing ------------------------------------------
 #
@@ -254,12 +252,6 @@ def _tree_type_pbs(node: dict, out: list[bytes]) -> None:
         _tree_type_pbs(c, out)
 
 
-def _min_stats(n_values: int, has_null: bool) -> bytes:
-    out = _f_varint(1, n_values)
-    out += _varint((10 << 3)) + (b"\x01" if has_null else b"\x00")
-    return out
-
-
 # --- row index (rowIndexStride > 0) ----------------------------------------
 #
 # Every stream restarts its coder AND its compression chunk at each
@@ -274,254 +266,6 @@ def _min_stats(n_values: int, has_null: bool) -> bytes:
 #   bitfield stream: [offset, usedInByteRLE, bitsConsumed]
 
 _EXTRAS_RAW, _EXTRAS_RLE, _EXTRAS_BITS = 0, 1, 2
-
-
-def _zz(v: int) -> int:
-    return (v << 1) ^ (v >> 63) if v < 0 else v << 1
-
-
-def _rg_int_stats(vals: np.ndarray, has_null: bool) -> bytes:
-    """ColumnStatistics proto with IntegerStatistics (sint64 min/max/sum)
-    — what lets the reference's SearchArgument prune row groups."""
-    out = _f_varint(1, int(vals.size))
-    if vals.size:
-        body = _f_varint(1, _zz(int(vals.min()))) + _f_varint(2, _zz(int(vals.max())))
-        out += _f_bytes(2, body)
-    out += _varint(10 << 3) + (b"\x01" if has_null else b"\x00")
-    return out
-
-
-_STRING_STAT_TRUNCATE = 1024  # UTF-8 bytes, ColumnStatisticsImpl truncation limit
-
-
-def _utf8_prefix(b: bytes, limit: int) -> bytes:
-    """Longest prefix of ``b`` of at most ``limit`` bytes that ends on a
-    UTF-8 codepoint boundary (back off over continuation bytes)."""
-    cut = limit
-    while cut > 0 and (b[cut] & 0xC0) == 0x80:
-        cut -= 1
-    return b[:cut]
-
-
-def _increment_bound(s: str) -> str | None:
-    """Smallest-effort string strictly greater than every string with
-    prefix ``s``: bump the last codepoint, skipping the surrogate gap
-    (U+D800–U+DFFF can't be UTF-8-encoded), carrying past U+10FFFF by
-    dropping the char and bumping the previous one.  ``None`` when every
-    char is U+10FFFF (no bound exists — legal to omit)."""
-    chars = list(s)
-    for i in range(len(chars) - 1, -1, -1):
-        cp = ord(chars[i])
-        if cp < 0x10FFFF:
-            nxt = cp + 1
-            if 0xD800 <= nxt <= 0xDFFF:
-                nxt = 0xE000
-            return "".join(chars[:i]) + chr(nxt)
-    return None
-
-
-def _rg_string_stats(
-    mn: bytes | None, mx: bytes | None, total_len: int, n_values: int,
-    has_null: bool,
-) -> bytes:
-    """ColumnStatistics with StringStatistics (minimum=1, maximum=2,
-    sum=3; lowerBound=4/upperBound=5 for over-limit bounds, matching
-    ColumnStatisticsImpl's truncation contract — 1024 UTF-8 *bytes*,
-    backing off to a codepoint boundary: lowerBound is a prefix
-    <= the true minimum; upperBound must compare > the true maximum, so
-    the last kept codepoint is incremented skipping the surrogate gap;
-    when no increment exists the bound is omitted — legal, and merely
-    unprunable)."""
-    out = _f_varint(1, n_values)
-    if n_values and mn is not None and mx is not None:
-        body = b""
-        if len(mn) <= _STRING_STAT_TRUNCATE:
-            body += _f_bytes(1, mn)
-        else:
-            body += _f_bytes(4, _utf8_prefix(mn, _STRING_STAT_TRUNCATE))
-        if len(mx) <= _STRING_STAT_TRUNCATE:
-            body += _f_bytes(2, mx)
-        else:
-            kept = _utf8_prefix(mx, _STRING_STAT_TRUNCATE).decode("utf-8")
-            ub = _increment_bound(kept)
-            if ub is not None:
-                body += _f_bytes(5, ub.encode("utf-8"))
-        body += _f_varint(3, _zz(total_len))
-        out += _f_bytes(4, body)
-    out += _varint(10 << 3) + (b"\x01" if has_null else b"\x00")
-    return out
-
-
-def _rg_double_stats(vals: np.ndarray, has_null: bool) -> bytes:
-    """ColumnStatistics with DoubleStatistics (fixed64 min=1/max=2/sum=3)."""
-    import struct as _struct
-
-    out = _f_varint(1, int(vals.size))
-    if vals.size:
-        fin = vals[np.isfinite(vals)]
-        if fin.size == vals.size:  # NaN/inf bounds are not prunable
-            body = (
-                _varint((1 << 3) | 1) + _struct.pack("<d", float(vals.min()))
-                + _varint((2 << 3) | 1) + _struct.pack("<d", float(vals.max()))
-                + _varint((3 << 3) | 1) + _struct.pack("<d", float(vals.sum()))
-            )
-            out += _f_bytes(3, body)
-    out += _varint(10 << 3) + (b"\x01" if has_null else b"\x00")
-    return out
-
-
-def _rg_date_stats(days: np.ndarray, has_null: bool) -> bytes:
-    """ColumnStatistics with DateStatistics (sint32 min=1/max=2, days
-    since epoch) — the field ColumnStatisticsImpl$DateStatisticsImpl
-    deserializes for DATE columns (IntegerStatistics on a DATE column is
-    ignored by the reference reader, i.e. unprunable)."""
-    out = _f_varint(1, int(days.size))
-    if days.size:
-        body = _f_varint(1, _zz(int(days.min()))) + _f_varint(2, _zz(int(days.max())))
-        out += _f_bytes(7, body)
-    out += _varint(10 << 3) + (b"\x01" if has_null else b"\x00")
-    return out
-
-
-def _rg_timestamp_stats(vals: np.ndarray, unit_scale: int, has_null: bool) -> bytes:
-    """ColumnStatistics with TimestampStatistics (sint64 epoch millis:
-    minimum=1/maximum=2 plus the ORC-611 minimumUtc=3/maximumUtc=4 pair —
-    identical here because writerTimezone is always UTC).  The maximum is
-    rounded UP to the next millisecond so sub-millisecond true values
-    never fall outside the recorded bound (the reference writer carries
-    the remainder in maximumNanos; omitting that field obliges a ceil)."""
-    out = _f_varint(1, int(vals.size))
-    if vals.size:
-        lo, hi = int(vals.min()), int(vals.max())
-        per_ms = unit_scale // 1000  # unit ticks per millisecond (>=1)
-        ms_lo = lo // per_ms if per_ms > 1 else lo * (1000 // unit_scale)
-        ms_hi = -((-hi) // per_ms) if per_ms > 1 else hi * (1000 // unit_scale)
-        body = (
-            _f_varint(1, _zz(ms_lo)) + _f_varint(2, _zz(ms_hi))
-            + _f_varint(3, _zz(ms_lo)) + _f_varint(4, _zz(ms_hi))
-        )
-        out += _f_bytes(9, body)
-    out += _varint(10 << 3) + (b"\x01" if has_null else b"\x00")
-    return out
-
-
-def _rg_decimal_stats(arr: pa.Array, has_null: bool) -> bytes:
-    """ColumnStatistics with DecimalStatistics (string minimum=1/
-    maximum=2 in HiveDecimal plain form, trailing zeros stripped — the
-    same canonical form the bloom addString path uses).  ``arr`` is
-    non-null."""
-    out = _f_varint(1, len(arr))
-    if len(arr):
-        mm = pa.compute.min_max(arr)
-        body = _f_bytes(
-            1, bloom_mod._orc_decimal_str(mm["min"].as_py()).encode()
-        ) + _f_bytes(2, bloom_mod._orc_decimal_str(mm["max"].as_py()).encode())
-        out += _f_bytes(6, body)
-    out += _varint(10 << 3) + (b"\x01" if has_null else b"\x00")
-    return out
-
-
-def _rg_bool_stats(n_true: int, n_values: int, has_null: bool) -> bytes:
-    """ColumnStatistics with BucketStatistics (packed uint64 count of
-    true values)."""
-    out = _f_varint(1, n_values)
-    out += _f_bytes(5, _f_packed(1, [n_true]))
-    out += _varint(10 << 3) + (b"\x01" if has_null else b"\x00")
-    return out
-
-
-def _rg_binary_stats(total_bytes: int, n_values: int, has_null: bool) -> bytes:
-    """ColumnStatistics with BinaryStatistics (sint64 sum of lengths)."""
-    out = _f_varint(1, n_values)
-    out += _f_bytes(8, _f_varint(1, _zz(total_bytes)))
-    out += _varint(10 << 3) + (b"\x01" if has_null else b"\x00")
-    return out
-
-
-def _window_stats(arr: pa.Array, bounds: list[tuple[int, int]]):
-    """-> ``stats(lo, hi, row_group=False)``: one ColumnStatistics over
-    ``arr[lo:hi]`` of a parent-masked column node — typed for leaves,
-    value count and hasNull for nested nodes — for a row-index entry, a
-    stripe (the Metadata section's StripeStatistics) or the file footer.
-    Per-value work is done once over the whole array; a window is a
-    slice.  ``row_group`` gives the row-index form, which carries no
-    boolean or binary statistics.
-
-    String min/max is the one statistic a slice cannot give: it is taken
-    once per row group (``bounds``, back to back), and a window that row
-    groups tile takes the least minimum and the greatest maximum of its
-    groups.  Both are order statistics, so the merge is exact (double
-    sums are not merged: that would reorder their additions)."""
-    t = arr.type
-    if arr.null_count:
-        valid = arr.is_valid().to_numpy(zero_copy_only=False)
-        vcum = np.concatenate(([0], np.cumsum(valid, dtype=np.int64)))
-        nn = arr.drop_null()
-    else:
-        vcum, nn = None, arr
-    is_str = pa.types.is_string(t) or pa.types.is_large_string(t)
-    if pa.types.is_integer(t) or pa.types.is_date32(t) or pa.types.is_timestamp(t):
-        vals = stripe_mod._arrow_nonnull_int64(arr)
-    elif pa.types.is_floating(t):
-        vals = nn.to_numpy(zero_copy_only=False).astype(np.float64)
-    elif stripe_mod._is_binary_like(t):
-        b = nn.cast(pa.large_binary())
-        lens = pa.compute.binary_length(b).to_numpy(zero_copy_only=False)
-        lcum = np.concatenate(([0], np.cumsum(lens, dtype=np.int64)))
-    elif pa.types.is_boolean(t):
-        tcum = np.concatenate(
-            ([0], np.cumsum(nn.to_numpy(zero_copy_only=False), dtype=np.int64))
-        )
-
-    def window(lo: int, hi: int) -> tuple[int, int]:
-        return (lo, hi) if vcum is None else (int(vcum[lo]), int(vcum[hi]))
-
-    def min_max(a: int, z: int) -> tuple:
-        if z == a:
-            return None, None
-        mm = pa.compute.min_max(b.slice(a, z - a))
-        return mm["min"].as_py(), mm["max"].as_py()
-
-    if is_str:
-        group_starts = [lo for lo, _ in bounds]
-        group_min_max = [min_max(*window(lo, hi)) for lo, hi in bounds]
-
-    def string_min_max(lo: int, hi: int) -> tuple:
-        g, end = bisect_left(group_starts, lo), bisect_left(group_starts, hi)
-        if g == end or group_starts[g] != lo or bounds[end - 1][1] != hi:
-            return min_max(*window(lo, hi))  # not a run of row groups
-        found = [mm for mm in group_min_max[g:end] if mm[0] is not None]
-        if not found:
-            return None, None
-        return min(mn for mn, _ in found), max(mx for _, mx in found)
-
-    def stats(lo: int, hi: int, row_group: bool = False) -> bytes:
-        a, z = window(lo, hi)
-        has_null = z - a < hi - lo
-        if _is_nested(t) or row_group and (
-            pa.types.is_boolean(t) or (stripe_mod._is_binary_like(t) and not is_str)
-        ):
-            return _min_stats(z - a, has_null)
-        if pa.types.is_date32(t):
-            return _rg_date_stats(vals[a:z], has_null)
-        if pa.types.is_integer(t):
-            return _rg_int_stats(vals[a:z], has_null)
-        if pa.types.is_timestamp(t):
-            return _rg_timestamp_stats(vals[a:z], stripe_mod._TS_UNITS[t.unit], has_null)
-        if pa.types.is_floating(t):
-            return _rg_double_stats(vals[a:z], has_null)
-        if is_str:
-            mn, mx = string_min_max(lo, hi)
-            return _rg_string_stats(mn, mx, int(lcum[z] - lcum[a]), z - a, has_null)
-        if stripe_mod._is_binary_like(t):
-            return _rg_binary_stats(int(lcum[z] - lcum[a]), z - a, has_null)
-        if pa.types.is_boolean(t):
-            return _rg_bool_stats(int(tcum[z] - tcum[a]), z - a, has_null)
-        if pa.types.is_decimal(t):
-            return _rg_decimal_stats(nn.slice(a, z - a), has_null)
-        raise NotImplementedError(f"orcfile: unsupported type {t}")
-
-    return stats
 
 
 def _rle_groups(vals: np.ndarray, voffs: list[int], signed: bool, v11: bool) -> list:
@@ -734,11 +478,13 @@ def _walk(
     two cannot drift apart."""
     t = node["t"]
     arr = stripe_mod.as_array(arr)
-    stats = _window_stats(arr, bounds)
+    windows = stats_mod.of_array(arr, bounds)
     node_stats = (
-        [stats(lo, hi, True) for lo, hi in bounds] if indexed else None,
-        [stats(bounds[a][0], bounds[b - 1][1]) for a, b in stripes],
-        stats(0, len(arr)),
+        [windows.run(g, g + 1).to_pb(t, True) for g in range(len(bounds))]
+        if indexed
+        else None,
+        [windows.run(a, b).to_pb(t, False) for a, b in stripes],
+        windows.run(0, len(bounds)).to_pb(t, False),
     )
     if not _is_nested(t):
         streams, encs = _encode_leaf(arr, bounds, stripes, v11, indexed)
@@ -841,6 +587,11 @@ def _walk(
     ]
     for child, (_, child_node) in zip(children, node["children"]):
         _walk(child_node, child, elem_bounds, stripes, v11, indexed, out)
+
+
+def _root_stats(n_rows: int) -> bytes:
+    """The root struct's ColumnStatistics: its row count, no nulls."""
+    return stats_mod.ColumnStats("struct", n_rows).to_pb(pa.struct([]), False)
 
 
 def _row_index_pb(entries: list[tuple[list[int], bytes]]) -> bytes:
@@ -956,7 +707,7 @@ def write_orc(
         if row_index_stride:
             # root struct (column 0) index: position-less entries with counts
             root_ri = _row_index_pb(
-                [([], _min_stats(hi - b_lo, False)) for b_lo, hi in bounds[g_lo:g_hi]]
+                [([], _root_stats(hi - b_lo)) for b_lo, hi in bounds[g_lo:g_hi]]
             )
             wrapped = _orc_compress(root_ri, compression)
             index_meta.append((_STREAM_ROW_INDEX, 0, len(wrapped)))
@@ -1045,7 +796,7 @@ def write_orc(
     meta_pb = b"".join(
         _f_bytes(
             1,
-            _f_bytes(1, _min_stats(info[4], False))
+            _f_bytes(1, _root_stats(info[4]))
             + b"".join(_f_bytes(1, st[s_i]) for *_, st, _file_st in walked),
         )
         for s_i, info in enumerate(stripe_infos)
@@ -1078,7 +829,7 @@ def write_orc(
     footer += _f_varint(6, total_rows)
     # file-level per-id stats: typed min/max over the whole table — lets
     # the reader skip the entire file from the footer
-    footer += _f_bytes(7, _min_stats(total_rows, False))
+    footer += _f_bytes(7, _root_stats(total_rows))
     for *_, file_st in walked:
         footer += _f_bytes(7, file_st)
     footer += _f_varint(8, row_index_stride)

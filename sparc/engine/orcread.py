@@ -43,7 +43,7 @@ import numpy as np
 import pyarrow as pa
 
 from ..kernels import bitfield, byterle, rlev1, rlev2
-from . import bloom as bloom_mod, stripe as stripe_mod
+from . import bloom as bloom_mod, stats as stats_mod, stripe as stripe_mod
 
 # --- minimal protobuf parser ------------------------------------------------
 
@@ -842,51 +842,6 @@ def _read_row_groups(
     return pa.table(dict(zip(out_names, out_cols)))
 
 
-def _stats_from_pb(spb: dict) -> dict:
-    """ColumnStatistics protobuf -> the engine's sarg stats dict
-    ({min, max, n_values, n_nulls, *_trunc}).  Only the domains sarg can
-    compare are mapped (integer / double / string); anything else yields
-    a bounds-free dict, which sarg treats as CANNOT_SKIP — pruning stays
-    sound by construction."""
-    import struct as _struct
-
-    def szz(v: int) -> int:
-        return (v >> 1) ^ -(v & 1)
-
-    out: dict = {"n_values": spb.get(1, [None])[0]}
-    # hasNull (field 10) is optional and absent in files written before it
-    # existed (e.g. some v0.11 writers): leave n_nulls UNKNOWN rather than
-    # defaulting to 0 — sarg must answer IS NULL conservatively, not NO.
-    if 10 in spb:
-        out["n_nulls"] = 1 if spb[10][0] else 0
-    if 2 in spb:  # IntegerStatistics (sint64 min/max)
-        ist = _parse_pb(spb[2][0])
-        if 1 in ist:
-            out["min"] = szz(ist[1][0])
-        if 2 in ist:
-            out["max"] = szz(ist[2][0])
-    elif 3 in spb:  # DoubleStatistics (fixed64 doubles)
-        dst = _parse_pb(spb[3][0])
-        if 1 in dst:
-            out["min"] = _struct.unpack("<d", int(dst[1][0]).to_bytes(8, "little"))[0]
-        if 2 in dst:
-            out["max"] = _struct.unpack("<d", int(dst[2][0]).to_bytes(8, "little"))[0]
-    elif 4 in spb:  # StringStatistics; lowerBound/upperBound (4/5) mark
-        # truncated bounds — map to the engine's lossy-bound flags
-        sst = _parse_pb(spb[4][0])
-        if 1 in sst:
-            out["min"] = bytes(sst[1][0]).decode("utf-8", "replace")
-        elif 4 in sst:
-            out["min"] = bytes(sst[4][0]).decode("utf-8", "replace")
-            out["min_trunc"] = True
-        if 2 in sst:
-            out["max"] = bytes(sst[2][0]).decode("utf-8", "replace")
-        elif 5 in sst:
-            out["max"] = bytes(sst[5][0]).decode("utf-8", "replace")
-            out["max_trunc"] = True
-    return out
-
-
 def read_orc_statistics(
     path: str,
 ) -> tuple[list[dict], list[list[dict]], dict[str, bytes]]:
@@ -900,7 +855,7 @@ def read_orc_statistics(
     with open(path, "rb") as f:
         data = f.read()
     ps, kind, footer = _tail(data, path)
-    file_stats = [_stats_from_pb(_parse_pb(s)) for s in footer.get(7, [])]
+    file_stats = [stats_mod.from_pb(_parse_pb(s)) for s in footer.get(7, [])]
     user_meta: dict[str, bytes] = {}
     for item in footer.get(5, []):
         it = _parse_pb(item)
@@ -912,7 +867,7 @@ def read_orc_statistics(
         meta = _parse_pb(_inflate(data[meta_end - meta_len : meta_end], kind))
         for ss in meta.get(1, []):
             stripe_stats.append(
-                [_stats_from_pb(_parse_pb(c)) for c in _parse_pb(ss).get(1, [])]
+                [stats_mod.from_pb(_parse_pb(c)) for c in _parse_pb(ss).get(1, [])]
             )
     return file_stats, stripe_stats, user_meta
 
@@ -951,7 +906,7 @@ def read_orc_filtered(
         for ss in meta.get(1, []):
             cols_pb = _parse_pb(ss).get(1, [])
             stripe_level_stats.append(
-                [_stats_from_pb(_parse_pb(c)) for c in cols_pb]
+                [stats_mod.from_pb(_parse_pb(c)) for c in cols_pb]
             )
     types = [_parse_pb(t) for t in footer[4]]
     root = types[0]
@@ -991,7 +946,7 @@ def read_orc_filtered(
                 for e in ri.get(1, []):
                     epb = _parse_pb(e)
                     stats.append(
-                        _stats_from_pb(_parse_pb(epb[2][0])) if 2 in epb else {}
+                        stats_mod.from_pb(_parse_pb(epb[2][0])) if 2 in epb else {}
                     )
                 entry_stats[name] = stats
             elif skind == "BLOOM_FILTER_UTF8" and col in pred_cols.values():

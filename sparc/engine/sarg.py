@@ -31,7 +31,9 @@ ADVICE.md called for — pruning may only ever be a no-op, never wrong.
 
 from __future__ import annotations
 
-from .stats import STRING_STAT_TRUNCATE
+from decimal import Decimal
+
+from . import stats as stats_mod
 
 YES = frozenset("Y")
 NO = frozenset("N")
@@ -84,6 +86,16 @@ def _normalize(probe, lo, hi, stats: dict):
         # strict: an invalid-UTF-8 probe has no sound ordering vs string
         # stats; UnicodeDecodeError -> CANNOT_SKIP via the caller
         probe = probe.decode("utf-8")
+    if isinstance(lo, Decimal):
+        # decimal bounds compare exactly with int and finite Decimal
+        # literals.  A float literal cannot skip: Spark's residual filter
+        # compares a decimal column with a double in double, which an
+        # exact comparison could contradict.
+        if isinstance(probe, bool) or not isinstance(probe, (int, Decimal)):
+            raise TypeError(f"probe {type(probe)} vs decimal stats")
+        if isinstance(probe, Decimal) and not probe.is_finite():
+            raise TypeError(f"probe {probe} vs decimal stats")
+        return probe, lo, hi
     if isinstance(lo, bool) or isinstance(probe, bool):
         return bool(probe), bool(lo), bool(hi)
     if isinstance(lo, (int, float)) and isinstance(hi, (int, float)):
@@ -99,14 +111,7 @@ def _normalize(probe, lo, hi, stats: dict):
         # are not the true extremes: a lossy max is a prefix of an unknown
         # larger value -> +inf; a lossy min may have had U+FFFD injected
         # above the true bytes -> unbounded below ("" sorts <= any str).
-        # Legacy footers predate the flags: infer from stored length /
-        # replacement chars, conservatively.
-        hi_lossy = stats.get("max_trunc")
-        if hi_lossy is None:
-            hi_lossy = len(hi) >= STRING_STAT_TRUNCATE or "�" in hi
-        lo_lossy = stats.get("min_trunc")
-        if lo_lossy is None:
-            lo_lossy = len(lo) >= STRING_STAT_TRUNCATE or "�" in lo
+        lo_lossy, hi_lossy = stats_mod.lossy_bounds(stats)
         if hi_lossy:
             hi = None
         if lo_lossy:

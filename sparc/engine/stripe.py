@@ -180,9 +180,12 @@ class _ColumnEncoder:
         group boundaries; each segment is its group encoded alone."""
         self.seg_streams[kind] = rlev2.encode(vals, signed, cuts=self.voffs[1:-1])
 
-    def set_rg_stats(self, g: int, st: stats_mod.ColumnStats) -> None:
-        self.row_index[g]["n_rows"] = self.rg_rows[g]
-        self.row_index[g]["stats"] = st.to_dict()
+    def set_stats(self, windows: stats_mod.Windows) -> None:
+        """Each row group's statistics, then the column's."""
+        for g, entry in enumerate(self.row_index):
+            entry["n_rows"] = self.rg_rows[g]
+            entry["stats"] = windows.run(g, g + 1).to_dict()
+        self.meta["stats"] = windows.run(0, len(self.row_index)).to_dict()
 
     def finish(self) -> tuple[dict[str, bytes], dict]:
         streams: dict[str, bytes] = {}
@@ -241,10 +244,8 @@ def encode_column(
     if pa.types.is_integer(t) or pa.types.is_date(t):
         vals = _arrow_nonnull_int64(arr)
         enc.rle_segments("DATA", vals, signed=True)
-        for g in range(len(enc.bounds)):
-            enc.set_rg_stats(g, stats_mod.int_stats(vals[enc.val_slice(g)], enc.rg_nulls[g]))
         meta["encoding"] = "rlev2"
-        meta["stats"] = stats_mod.int_stats(vals, arr.null_count).to_dict()
+        enc.set_stats(stats_mod.int_stats(vals, enc.voffs, enc.rg_nulls))
     elif pa.types.is_decimal(t) and t.precision > 18:
         # unbounded-decimal path (DecimalTreeWriter semantics via
         # SerializationUtils.writeBigInteger, SerializationUtils.java:
@@ -257,12 +258,11 @@ def encode_column(
         for g in range(len(enc.bounds)):
             sl = enc.val_slice(g)
             enc.seg_streams["DATA"].append(bigdec.encode(lo[sl], hi[sl]))
-            enc.set_rg_stats(g, stats_mod.decimal128_stats(lo[sl], hi[sl], enc.rg_nulls[g]))
         enc.rle_segments("SECONDARY", np.full(lo.size, t.scale, np.int64), signed=False)
         meta["encoding"] = "decimal_big"
         meta["precision"] = t.precision
         meta["scale"] = t.scale
-        meta["stats"] = stats_mod.decimal128_stats(lo, hi, arr.null_count).to_dict()
+        enc.set_stats(stats_mod.decimal128_stats(lo, hi, enc.voffs, enc.rg_nulls))
     elif pa.types.is_decimal(t):
         # decimal64 path (Decimal64TreeWriter.writeBatch semantics,
         # Decimal64TreeWriter.java:59-112): unscaled value as signed RLEv2,
@@ -270,13 +270,10 @@ def encode_column(
         # unscaled value must fit int64).
         vals = _decimal_unscaled_int64(arr)
         enc.rle_segments("DATA", vals, signed=True)
-        for g in range(len(enc.bounds)):
-            v = vals[enc.val_slice(g)]
-            enc.set_rg_stats(g, stats_mod.int_stats(v, enc.rg_nulls[g], kind="decimal"))
         meta["encoding"] = "decimal64"
         meta["precision"] = t.precision
         meta["scale"] = t.scale
-        meta["stats"] = stats_mod.int_stats(vals, arr.null_count, kind="decimal").to_dict()
+        enc.set_stats(stats_mod.int_stats(vals, enc.voffs, enc.rg_nulls, kind="decimal"))
     elif pa.types.is_timestamp(t):
         unit_scale = _TS_UNITS[t.unit]
         vals = _arrow_nonnull_int64(arr)
@@ -286,37 +283,30 @@ def encode_column(
         nanos = format_nanos(frac * (1_000_000_000 // unit_scale))
         enc.rle_segments("DATA", seconds, signed=True)
         enc.rle_segments("SECONDARY", nanos, signed=False)
-        for g in range(len(enc.bounds)):
-            v = vals[enc.val_slice(g)]
-            enc.set_rg_stats(g, stats_mod.int_stats(v, enc.rg_nulls[g], kind="timestamp"))
         meta["encoding"] = "timestamp_split"
         meta["ts_unit"] = t.unit
         meta["ts_tz"] = t.tz
-        meta["stats"] = stats_mod.int_stats(vals, arr.null_count, kind="timestamp").to_dict()
+        enc.set_stats(stats_mod.int_stats(vals, enc.voffs, enc.rg_nulls, kind="timestamp"))
     elif pa.types.is_floating(t):
         np_t = np.float32 if pa.types.is_float32(t) else np.float64
         nn = arr.drop_null() if arr.null_count else arr
         vals = nn.to_numpy(zero_copy_only=False).astype(np_t)
         le = np.dtype(np_t).newbyteorder("<")
-        enc.seg_streams["DATA"] = []
-        for g in range(len(enc.bounds)):
-            v = vals[enc.val_slice(g)]
-            enc.seg_streams["DATA"].append(v.astype(le).tobytes())
-            enc.set_rg_stats(
-                g, stats_mod.float_stats(v.astype(np.float64), enc.rg_nulls[g])
-            )
+        enc.seg_streams["DATA"] = [
+            vals[enc.val_slice(g)].astype(le).tobytes() for g in range(len(enc.bounds))
+        ]
         meta["encoding"] = "float_raw"
-        meta["stats"] = stats_mod.float_stats(vals.astype(np.float64), arr.null_count).to_dict()
+        enc.set_stats(
+            stats_mod.float_stats(vals.astype(np.float64), enc.voffs, enc.rg_nulls)
+        )
     elif pa.types.is_boolean(t):
         nn = arr.drop_null() if arr.null_count else arr
         vals = nn.to_numpy(zero_copy_only=False)
-        enc.seg_streams["DATA"] = []
-        for g in range(len(enc.bounds)):
-            v = vals[enc.val_slice(g)]
-            enc.seg_streams["DATA"].append(bitfield.encode(v))
-            enc.set_rg_stats(g, stats_mod.bool_stats(v, enc.rg_nulls[g]))
+        enc.seg_streams["DATA"] = [
+            bitfield.encode(vals[enc.val_slice(g)]) for g in range(len(enc.bounds))
+        ]
         meta["encoding"] = "bool"
-        meta["stats"] = stats_mod.bool_stats(vals, arr.null_count).to_dict()
+        enc.set_stats(stats_mod.bool_stats(vals, enc.voffs, enc.rg_nulls))
     elif _is_binary_like(t):
         _encode_binary_like(enc, fsst)
     elif pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_map(t):
@@ -345,7 +335,7 @@ def _is_binary_like(t: pa.DataType) -> bool:
 
 
 def _encode_binary_like(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
-    """String/binary: dict-vs-direct(-vs-FSST) auto-selection by stripe stats.
+    """String/binary: dict-vs-direct(-vs-FSST) auto-selection.
 
     Mirrors checkDictionaryEncoding's early 10k-row check + the 0.8
     threshold; extends the 2-way choice with an FSST candidate measured on
@@ -358,37 +348,9 @@ def _encode_binary_like(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
     bin_arr = nn.cast(pa.large_binary())
     lengths = pa.compute.binary_length(bin_arr).to_numpy(zero_copy_only=False).astype(np.int64)
     n_nonnull = len(bin_arr)
-    kind = "string" if is_str else "binary"
-
-    # per-group bounds double as the column bounds (min-of-mins /
-    # max-of-maxes) so the column never pays a second full min_max scan
-    # — on web text that scan was ~19% of the whole stripe encode CPU
-    group_bounds: list[tuple] = []
-
-    def rg_string_stats(g: int) -> None:
-        sl = enc.val_slice(g)
-        mn = mx = None
-        # binary columns carry no min/max (BinaryStatisticsImpl tracks
-        # only the byte sum) — blob bounds are useless for pruning and
-        # would bloat every footer's row index
-        if is_str:
-            sub = bin_arr.slice(sl.start, sl.stop - sl.start)
-            if len(sub):
-                mm = pa.compute.min_max(sub)
-                mn, mx = mm["min"].as_py(), mm["max"].as_py()
-                group_bounds.append((mn, mx))
-        enc.set_rg_stats(
-            g,
-            stats_mod.string_stats(lengths[sl], enc.rg_nulls[g], mn, mx, kind=kind),
-        )
-
-    def column_min_max() -> tuple:
-        if not group_bounds:
-            return None, None
-        return (
-            min(b[0] for b in group_bounds),
-            max(b[1] for b in group_bounds),
-        )
+    windows = stats_mod.string_stats(
+        bin_arr, enc.voffs, enc.rg_nulls, "string" if is_str else "binary"
+    )
 
     # early dictionary check on the first 10k non-null rows — strings
     # only: the reference's BinaryTreeWriter (org/apache/orc/impl/writer/
@@ -412,14 +374,10 @@ def _encode_binary_like(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
             signed=False,
         )
         enc.rle_segments("DATA", codes, signed=False)
-        for g in range(len(enc.bounds)):
-            rg_string_stats(g)
         meta["encoding"] = "dict"
         meta["dict_size"] = len(uniques)
-        mn, mx = (min(uniques), max(uniques)) if uniques else (None, None)
-        meta["stats"] = stats_mod.string_stats(
-            lengths, meta["n_nulls"], mn, mx, n_distinct=len(uniques), kind=kind
-        ).to_dict()
+        enc.set_stats(windows)
+        meta["stats"]["n_distinct"] = len(uniques)
         return
 
     # direct: concatenated bytes + LENGTH; try FSST on a sample.
@@ -481,16 +439,12 @@ def _encode_binary_like(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
         enc.seg_streams["DATA"].append(
             fsst.compress(bytes(chunk), table) if table is not None else chunk
         )
-        rg_string_stats(g)
     if table is not None:
         enc.whole_streams["FSST_TABLE"] = table.serialize()
         meta["encoding"] = "direct_fsst"
     else:
         meta["encoding"] = "direct"
-    mn, mx = column_min_max()
-    meta["stats"] = stats_mod.string_stats(
-        lengths, meta["n_nulls"], mn, mx, kind=kind
-    ).to_dict()
+    enc.set_stats(windows)
 
 
 def _encode_list_like(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
@@ -514,10 +468,6 @@ def _encode_list_like(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
         lst = nn
     counts = lst.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
     enc.rle_segments("LENGTH", counts, signed=False)
-    for g in range(len(enc.bounds)):
-        c = counts[enc.val_slice(g)]
-        enc.set_rg_stats(g, stats_mod.int_stats(c, enc.rg_nulls[g]))
-        enc.row_index[g]["child_count"] = int(c.sum())
     child_streams, child_meta = encode_column(
         lst.flatten(), f"{enc.name}.item", enc.codec, fsst_opt, stride=None
     )
@@ -525,7 +475,10 @@ def _encode_list_like(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
         enc.child_streams[f"CHILD0_{k}"] = v
     meta["encoding"] = "map" if is_map else "list"
     meta["child"] = child_meta
-    meta["stats"] = stats_mod.int_stats(counts, arr.null_count).to_dict()
+    enc.set_stats(stats_mod.int_stats(counts, enc.voffs, enc.rg_nulls))
+    elems = np.concatenate(([0], np.cumsum(counts)))[enc.voffs]
+    for entry, n in zip(enc.row_index, np.diff(elems).tolist()):
+        entry["child_count"] = n
 
 
 def _encode_struct(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
@@ -546,20 +499,9 @@ def _encode_struct(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
         for k, v in child_streams.items():
             enc.child_streams[f"CHILD{i}_{k}"] = v
         children_meta.append(child_meta)
-    for g in range(len(enc.bounds)):
-        enc.set_rg_stats(
-            g,
-            stats_mod.ColumnStats(
-                kind="struct",
-                n_values=enc.rg_vals[g],
-                n_nulls=enc.rg_nulls[g],
-            ),
-        )
     meta["encoding"] = "struct"
     meta["children"] = children_meta
-    meta["stats"] = stats_mod.ColumnStats(
-        kind="struct", n_values=len(arr) - arr.null_count, n_nulls=arr.null_count
-    ).to_dict()
+    enc.set_stats(stats_mod.Windows("struct", enc.voffs, enc.rg_nulls, None))
 
 
 def _decimal_unscaled_int64(arr: pa.Array) -> np.ndarray:
@@ -661,17 +603,9 @@ def _encode_union(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
         for k, v in child_streams.items():
             enc.child_streams[f"CHILD{i}_{k}"] = v
         children_meta.append(child_meta)
-    for g in range(len(enc.bounds)):
-        enc.set_rg_stats(
-            g,
-            stats_mod.ColumnStats(kind="union", n_values=enc.rg_vals[g],
-                                  n_nulls=enc.rg_nulls[g]),
-        )
     meta["encoding"] = "union"
     meta["children"] = children_meta
-    meta["stats"] = stats_mod.ColumnStats(
-        kind="union", n_values=len(arr), n_nulls=0
-    ).to_dict()
+    enc.set_stats(stats_mod.Windows("union", enc.voffs, enc.rg_nulls, None))
 
 
 def _decode_union(streams: dict[str, bytes], meta: dict) -> pa.Array:
@@ -1109,6 +1043,31 @@ def _build_binary(
     return pa.Array.from_buffers(t, n_rows, buffers, null_count=null_count)
 
 
+def footer_stats(footer: dict, group: int | None) -> dict[str, dict]:
+    """The sarg stats map ``{column: stats dict}`` of a stripe footer: the
+    columns' stripe statistics (``group`` None) or row group ``group``'s.
+    The footer keeps decimal bounds unscaled; here they become ``Decimal``
+    values at the column's scale, so int and Decimal literals compare
+    with them exactly."""
+    out = {}
+    for c in footer["columns"]:
+        if group is None:
+            st = c.get("stats")
+        else:
+            ri = c.get("row_index")
+            st = ri[group]["stats"] if ri and group < len(ri) else None
+        if st is None:
+            continue
+        if st.get("kind") == "decimal" and st.get("min") is not None:
+            st = dict(
+                st,
+                min=stats_mod._scaled(st["min"], c["scale"]),
+                max=stats_mod._scaled(st["max"], c["scale"]),
+            )
+        out[c["name"]] = st
+    return out
+
+
 def pick_row_groups(
     footer: dict,
     predicate: tuple,
@@ -1137,9 +1096,7 @@ def pick_row_groups(
                 blooms[cname] = (filters, _parse_type(metas[cname]))
     selected = []
     for g in range(n_rgs):
-        col_stats = {
-            name: ri[g]["stats"] for name, ri in indexed if g < len(ri)
-        }
+        col_stats = footer_stats(footer, g)
         probes = {
             name: (
                 lambda v, _f=filters, _t=t, _g=g:

@@ -65,11 +65,7 @@ def _decode_paths_factory(
             # stripe-level stats pruning IN the scan task: same tri-state
             # evaluation as prune_stripes_df, refuted stripes never open
             # their stripe file
-            col_stats = {
-                c["name"]: c.get("stats")
-                for c in footer["columns"]
-                if c.get("stats") is not None
-            }
+            col_stats = stripe_mod.footer_stats(footer, None)
             if not sarg_mod.keep(stripe_predicate, col_stats):
                 return
         # mmap the stripe file and slice the needed spans — projection and
@@ -412,11 +408,7 @@ def prune_stripes_df(
             # work, mirroring the reference's per-stripe footer evaluation
             for blob in pdf["footer"]:
                 footer = json.loads(blob)
-                col_stats = {
-                    c["name"]: c.get("stats")
-                    for c in footer["columns"]
-                    if c.get("stats") is not None
-                }
+                col_stats = stripe_mod.footer_stats(footer, None)
                 keeps.append(sarg_mod.keep(predicate, col_stats))
             yield pdf.loc[keeps, ["stripe_id"]]
 

@@ -122,7 +122,8 @@ def test_decimal_rowgroup_segments_and_pruning():
     assert stripe.decode_stripe(streams, footer, row_groups=[2]).equals(
         t.slice(2000, 1000)
     )
-    # per-group stats prune on the unscaled-int domain (group 0 holds
-    # unscaled -3000..-2001, group 1 starts at -2000)
-    sel = stripe.pick_row_groups(footer, ("between", "d", -2999, -2001))
+    # per-group stats prune in the value domain (group 0 holds
+    # -30.00..-20.01, group 1 starts at -20.00), for Decimal and int literals
+    sel = stripe.pick_row_groups(footer, ("between", "d", Decimal("-29.99"), Decimal("-20.01")))
     assert sel == [0]
+    assert stripe.pick_row_groups(footer, ("between", "d", -30, -21)) == [0]

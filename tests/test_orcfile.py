@@ -10,7 +10,7 @@ import pyarrow as pa
 import pyarrow.orc
 import pytest
 
-from sparc.engine import orcfile
+from sparc.engine import orcfile, stats
 
 
 def _cross_read(table: pa.Table, path, rows_per_stripe=100_000):
@@ -858,9 +858,9 @@ def test_string_stats_truncate_on_utf8_bytes(tmp_path):
     codepoint boundary."""
     mn = "é" * 600              # 1200 bytes, 600 chars
     mx = "中" * 600              # 1800 bytes, 600 chars
-    blob = orcfile._rg_string_stats(
-        mn.encode(), mx.encode(), 3000, 4, False
-    )
+    blob = stats.ColumnStats(
+        "string", 4, 0, mn.encode(), mx.encode(), 3000
+    ).to_pb(pa.string(), False)
     from sparc.engine.orcread import _parse_pb
     sst = _parse_pb(_parse_pb(blob)[4][0])
     assert 1 not in sst and 4 in sst            # lowerBound, not minimum
@@ -873,13 +873,13 @@ def test_string_stats_truncate_on_utf8_bytes(tmp_path):
 
 
 def test_increment_bound_edge_cases():
-    assert orcfile._increment_bound("ab") == "ac"
+    assert stats._increment_bound("ab") == "ac"
     # U+D7FF bumps past the surrogate gap
-    assert orcfile._increment_bound("a퟿") == "a\ue000"
+    assert stats._increment_bound("a퟿") == "a\ue000"
     # U+10FFFF carries into the previous char
-    assert orcfile._increment_bound("a\U0010ffff") == "b"
+    assert stats._increment_bound("a\U0010ffff") == "b"
     # all-max string has no bound
-    assert orcfile._increment_bound("\U0010ffff\U0010ffff") is None
+    assert stats._increment_bound("\U0010ffff\U0010ffff") is None
 
 
 def test_bloom_columns_typo_raises(tmp_path):

@@ -103,12 +103,13 @@ def test_multibyte_truncated_bounds_never_refute():
     falsely pruned.  The stats layer now carries explicit lossy flags and
     char-boundary truncation; a lossy bound must never refute a probe that
     could match the untruncated value."""
+    import pyarrow as pa
+
     from sparc.engine import stats as stats_mod
 
     s = stats_mod.string_stats(
-        __import__("numpy").array([3, 4]), 0,
-        minimum=("é" * 800).encode(), maximum=("é" * 800).encode(),
-    ).to_dict()
+        pa.array([("é" * 800).encode()] * 2, pa.large_binary()), [0, 2], [0]
+    ).run(0, 1).to_dict()
     # true max 'é'*800 is 1600 bytes -> stored prefix is ~512 chars; a
     # probe of 'é'*700 (greater than the stored prefix) MUST stay keepable
     assert s["max_trunc"] and s["min_trunc"]
@@ -121,9 +122,8 @@ def test_multibyte_truncated_bounds_never_refute():
     assert not s["max"].endswith("�")
     # untruncated multibyte bounds remain exact and still prune
     e = stats_mod.string_stats(
-        __import__("numpy").array([3]), 0,
-        minimum="émm".encode(), maximum="émx".encode(),
-    ).to_dict()
+        pa.array(["émx".encode(), "émm".encode()], pa.large_binary()), [0, 2], [0]
+    ).run(0, 1).to_dict()
     assert not e["max_trunc"]
     assert not sarg.keep(("=", "c", "é~~~"), {"c": e})
 
@@ -135,9 +135,8 @@ def test_invalid_utf8_probe_and_stats_cannot_skip():
     # binary stats that replace-decoded to U+FFFD are lossy both ways
     from sparc.engine import stats as stats_mod
 
-    b = stats_mod.string_stats(
-        __import__("numpy").array([2]), 0,
-        minimum=b"\xff\x01", maximum=b"\xff\x02", kind="binary",
+    b = stats_mod.ColumnStats(
+        "binary", 1, 0, minimum=b"\xff\x01", maximum=b"\xff\x02", total=2
     ).to_dict()
     assert b["min_trunc"] and b["max_trunc"]
     assert sarg.keep(("=", "c", "anything"), {"c": b})
@@ -231,16 +230,17 @@ def test_absent_has_null_is_conservative():
 
 
 def test_stats_from_pb_absent_hasnull_left_unknown():
-    from sparc.engine.orcread import _parse_pb, _stats_from_pb
-    from sparc.engine.orcfile import _f_varint, _f_bytes, _varint
+    from sparc.engine.orcfile import _f_bytes, _f_varint, _varint
+    from sparc.engine.orcread import _parse_pb
+    from sparc.engine.stats import from_pb
 
     def zz(v):
         return (v << 1) ^ (v >> 63) if v < 0 else v << 1
 
     body = _f_varint(1, zz(3)) + _f_varint(2, zz(7))
     blob = _f_varint(1, 10) + _f_bytes(2, body)   # no field 10
-    st = _stats_from_pb(_parse_pb(blob))
+    st = from_pb(_parse_pb(blob))
     assert "n_nulls" not in st
     assert st["min"] == 3 and st["max"] == 7
     blob10 = blob + _varint(10 << 3) + b"\x00"
-    assert _stats_from_pb(_parse_pb(blob10))["n_nulls"] == 0
+    assert from_pb(_parse_pb(blob10))["n_nulls"] == 0
