@@ -7,10 +7,10 @@ runs once per column over its non-null values and returns ``Windows``,
 which answers any run of the column's row groups: one group (the row
 index), a stripe, or the file.
 
-- int, date, timestamp and decimal min/max are taken per row group and
-  merged over runs; their sums come from prefix sums of the two 32-bit
-  halves of each word, exact below 2^31 values;
-- string min/max is taken once per row group and merged over runs;
+- min/max (int, date, timestamp, decimal, string), int sums, string
+  byte sums and true counts are taken once per row group, and a run
+  merges its groups' exactly.  A group's int sum adds the int64 sums of
+  its words' 32-bit halves (exact below 2^31 values) as a Python int;
 - double min/max/sum come from the window's own slice (a merged sum
   would reorder the additions).
 
@@ -79,10 +79,12 @@ class ColumnStats:
         statistics; count-only kinds (nested columns, the root) carry none.
 
         - int: IntegerStatistics (2), min/max only; date32: DateStatistics
-          (7) in days;
-        - timestamp: TimestampStatistics (9) in epoch millis, min floored
-          and max ceiled, with the ORC-611 UTC pair equal to them
-          (writerTimezone is UTC);
+          (7) in days, the field the reference reads for DATE columns (it
+          ignores IntegerStatistics there);
+        - timestamp: TimestampStatistics (9) in epoch millis, with the
+          ORC-611 UTC pair equal to them (writerTimezone is UTC).  The max
+          is ceiled so sub-millisecond values stay inside it: the
+          reference keeps the remainder in maximumNanos, which is left out;
         - decimal: DecimalStatistics (6) in HiveDecimal plain form;
         - double: DoubleStatistics (3), left out when a value is not
           finite, whose bounds would not prune;
@@ -272,9 +274,9 @@ def from_pb(spb: dict) -> dict:
 class Windows:
     """One column's statistics over its row groups, which lie back to back
     in its non-null values (group g holds ``voffs[g]:voffs[g + 1]`` and
-    ``nulls[g]`` nulls), and over any run of them.  ``fill(stats, g0, g1,
-    a, z)`` sets the typed fields of a window that holds values; kinds
-    that keep counts only (nested columns) have none."""
+    ``nulls[g]`` nulls), and over any run of them.  ``fill(stats, g0,
+    g1)`` sets the typed fields of a run that holds values; kinds that
+    keep counts only (nested columns) have none."""
 
     def __init__(self, kind: str, voffs, nulls, fill: Callable | None):
         self.kind = kind
@@ -287,51 +289,50 @@ class Windows:
         a, z = int(self.voffs[g0]), int(self.voffs[g1])
         s = ColumnStats(self.kind, z - a, int(self.ncum[g1] - self.ncum[g0]))
         if z > a and self.fill is not None:
-            self.fill(s, g0, g1, a, z)
+            self.fill(s, g0, g1)
         return s
 
 
-def _group_bounds(values: np.ndarray, voffs: np.ndarray) -> list:
-    """(min, max) of each row group's values as Python scalars, None for
-    an empty group."""
+def _per_group(ufunc: np.ufunc, values: np.ndarray, voffs: np.ndarray) -> list:
+    """``ufunc`` reduced over each row group's values, as Python scalars;
+    None for an empty group."""
     starts = voffs[:-1]
     full = np.flatnonzero(voffs[1:] > starts)
     out: list = [None] * len(starts)
-    if full.size:
-        at = starts[full]
-        mins = np.minimum.reduceat(values, at).tolist()
-        maxs = np.maximum.reduceat(values, at).tolist()
-        for g, mn, mx in zip(full.tolist(), mins, maxs):
-            out[g] = (mn, mx)
+    for g, v in zip(full.tolist(), ufunc.reduceat(values, starts[full]).tolist()):
+        out[g] = v
     return out
 
 
-def _merge(bounds: list, g0: int, g1: int) -> tuple:
+def _merge(mins: list, maxs: list, g0: int, g1: int) -> tuple:
     """Least minimum and greatest maximum of the non-empty groups of a
     run: both are order statistics, so the merge is exact."""
-    found = [b for b in bounds[g0:g1] if b is not None]
-    return min(b[0] for b in found), max(b[1] for b in found)
+    return (
+        min(v for v in mins[g0:g1] if v is not None),
+        max(v for v in maxs[g0:g1] if v is not None),
+    )
 
 
-def _exact_sums(values: np.ndarray) -> Callable[[int, int], int]:
-    """-> total(a, z): the exact sum of ``values[a:z]`` (64-bit ints) as
-    a Python int, from int64 prefix sums of the words' high and low 32-bit
-    halves; each stays exact below 2^31 values."""
-    high = np.concatenate(([0], np.cumsum((values >> 32).astype(np.int64, copy=False))))
-    low = np.concatenate(([0], np.cumsum((values & 0xFFFFFFFF).astype(np.int64, copy=False))))
-    return lambda a, z: (int(high[z] - high[a]) << 32) + int(low[z] - low[a])
+def _group_sums(values: np.ndarray, voffs: np.ndarray) -> list[int]:
+    """Exact sum of each row group's 64-bit ints as a Python int: the
+    sums of the words' high and low 32-bit halves, each exact below 2^31
+    values a group.  A run's sum adds its groups' (exact, in any order)."""
+    high = _per_group(np.add, values >> 32, voffs)
+    low = _per_group(np.add, values & 0xFFFFFFFF, voffs)
+    return [0 if h is None else (h << 32) + lo for h, lo in zip(high, low)]
 
 
 def int_stats(values: np.ndarray, voffs, nulls, kind: str = "int") -> Windows:
     """int64 values: ints, dates (days), timestamps (native unit ticks),
     unscaled decimal64s and list lengths, per ``kind``."""
     voffs = np.asarray(voffs, np.int64)
-    bounds = _group_bounds(values, voffs)
-    total = _exact_sums(values)
+    mins = _per_group(np.minimum, values, voffs)
+    maxs = _per_group(np.maximum, values, voffs)
+    sums = _group_sums(values, voffs)
 
-    def fill(s, g0, g1, a, z):
-        s.minimum, s.maximum = _merge(bounds, g0, g1)
-        s.total = total(a, z)
+    def fill(s, g0, g1):
+        s.minimum, s.maximum = _merge(mins, maxs, g0, g1)
+        s.total = sum(sums[g0:g1])
 
     return Windows(kind, voffs, nulls, fill)
 
@@ -341,30 +342,32 @@ def decimal128_stats(lo: np.ndarray, hi: np.ndarray, voffs, nulls) -> Windows:
     min/max/sum are exact Python ints (DecimalStatisticsImpl keeps exact
     HiveDecimal bounds the same way)."""
     voffs = np.asarray(voffs, np.int64)
-    bounds: list = []
+    mins: list = []
+    maxs: list = []
     for a, z in zip(voffs[:-1].tolist(), voffs[1:].tolist()):
         if z == a:
-            bounds.append(None)
+            mins.append(None)
+            maxs.append(None)
             continue
         order = np.lexsort((lo[a:z], hi[a:z]))  # signed high word primary
         i, j = a + int(order[0]), a + int(order[-1])
-        bounds.append(
-            ((int(hi[i]) << 64) + int(lo[i]), (int(hi[j]) << 64) + int(lo[j]))
-        )
-    lo_total, hi_total = _exact_sums(lo), _exact_sums(hi)
+        mins.append((int(hi[i]) << 64) + int(lo[i]))
+        maxs.append((int(hi[j]) << 64) + int(lo[j]))
+    sums = [(h << 64) + w for h, w in zip(_group_sums(hi, voffs), _group_sums(lo, voffs))]
 
-    def fill(s, g0, g1, a, z):
-        s.minimum, s.maximum = _merge(bounds, g0, g1)
-        s.total = (hi_total(a, z) << 64) + lo_total(a, z)
+    def fill(s, g0, g1):
+        s.minimum, s.maximum = _merge(mins, maxs, g0, g1)
+        s.total = sum(sums[g0:g1])
 
     return Windows("decimal", voffs, nulls, fill)
 
 
 def float_stats(values: np.ndarray, voffs, nulls) -> Windows:
     """float64 values; NaN propagates into min and max."""
+    voffs = np.asarray(voffs, np.int64)
 
-    def fill(s, g0, g1, a, z):
-        v = values[a:z]
+    def fill(s, g0, g1):
+        v = values[voffs[g0] : voffs[g1]]
         s.minimum, s.maximum, s.total = float(v.min()), float(v.max()), float(v.sum())
 
     return Windows("float", voffs, nulls, fill)
@@ -376,32 +379,31 @@ def string_stats(values: pa.Array, voffs, nulls, kind: str = "string") -> Window
     bounds are useless for pruning and would bloat every row index."""
     voffs = np.asarray(voffs, np.int64)
     lens = pa.compute.binary_length(values).to_numpy(zero_copy_only=False)
-    lcum = np.concatenate(([0], np.cumsum(lens, dtype=np.int64)))
-    bounds: list | None = None
+    sums = _group_sums(lens.astype(np.int64), voffs)
+    mins: list = []
+    maxs: list = []
     if kind == "string":
-        bounds = []
         for a, z in zip(voffs[:-1].tolist(), voffs[1:].tolist()):
-            if z == a:
-                bounds.append(None)
-                continue
-            mm = pa.compute.min_max(values.slice(a, z - a))
-            bounds.append((mm["min"].as_py(), mm["max"].as_py()))
+            mm = pa.compute.min_max(values.slice(a, z - a))  # nulls when empty
+            mins.append(mm["min"].as_py())
+            maxs.append(mm["max"].as_py())
 
-    def fill(s, g0, g1, a, z):
-        if bounds is not None:
-            s.minimum, s.maximum = _merge(bounds, g0, g1)
-        s.total = int(lcum[z] - lcum[a])
+    def fill(s, g0, g1):
+        if kind == "string":
+            s.minimum, s.maximum = _merge(mins, maxs, g0, g1)
+        s.total = sum(sums[g0:g1])
 
     return Windows(kind, voffs, nulls, fill)
 
 
 def bool_stats(values: np.ndarray, voffs, nulls) -> Windows:
     """bool values; the sum is the true count, like BooleanStatisticsImpl."""
-    trues = np.concatenate(([0], np.cumsum(values, dtype=np.int64)))
+    voffs = np.asarray(voffs, np.int64)
+    trues = _group_sums(values.astype(np.int64), voffs)
 
-    def fill(s, g0, g1, a, z):
-        n_true = int(trues[z] - trues[a])
-        s.minimum, s.maximum, s.total = n_true == z - a, n_true > 0, n_true
+    def fill(s, g0, g1):
+        n_true = sum(trues[g0:g1])
+        s.minimum, s.maximum, s.total = n_true == s.n_values, n_true > 0, n_true
 
     return Windows("bool", voffs, nulls, fill)
 

@@ -44,7 +44,7 @@ def _value(kind: str):
     if kind in ("int", "timestamp"):
         return st.integers(-(2**63), 2**63 - 1)
     if kind == "date":
-        return st.integers(-(10**6), 10**6).map(lambda d: _EPOCH + dt.timedelta(days=d))
+        return st.integers(-700_000, 10**6).map(lambda d: _EPOCH + dt.timedelta(days=d))
     if kind == "decimal64":
         return st.integers(-(10**12) + 1, 10**12 - 1).map(lambda u: Decimal(f"{u}E-3"))
     if kind == "decimal_big":
