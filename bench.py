@@ -175,45 +175,28 @@ def gen_pages_parquet(spark, n_rows: int, path: str, chunk: int = 20_000) -> Non
 
 
 def _pool_decode_unit(args):
-    """One decode scan unit (manifest, shard), the exact work a Spark
-    decode task does — manifest read, footer parse, byte-range stream
-    slices, decode_stripe, octet aggregate — minus Spark.  Used by the
-    engine-ceiling probe."""
-    path, shard, n_shards, streams_dir = args
+    """One decode unit of the read planner (a kept stripe's footer blob and
+    row groups), the exact work a Spark decode task does — footer parse,
+    byte-range stream slices, decode_stripe, octet aggregate — minus
+    Spark.  Used by the engine-ceiling probe."""
+    blob, row_groups, streams_dir = args
     import json as _json
-    import mmap as mmap_mod
 
     import pyarrow as _pa
     import pyarrow.compute as _pc
-    import pyarrow.parquet as _pq
 
     from sparc import runtime
-    from sparc.engine import stripe as stripe_mod
+    from sparc.job import decode_job
 
     runtime.init_worker()
-    t = _pq.read_table(path)
-    total = rows = 0
-    for i in range(shard, t.num_rows, n_shards):
-        footer = _json.loads(t["data"][i].as_py().decode())
-        spath = footer["stripe_file"]
-        if not os.path.isabs(spath):
-            spath = os.path.join(streams_dir, spath)
-        with open(spath, "rb") as f:
-            mm = mmap_mod.mmap(f.fileno(), 0, access=mmap_mod.ACCESS_READ)
-        mv = memoryview(mm)
-        streams = {
-            (cname, kind): mv[off : off + ln]
-            for cname, kind, off, ln in footer["stream_spans"]
-            if kind != "BLOOM_FILTER_UTF8"
-        }
-        out = stripe_mod.decode_stripe(streams, footer)
-        for name in ("url", "html", "text", "lang"):
-            col = out[name]
-            if _pa.types.is_string(col.type) or _pa.types.is_large_string(col.type):
-                col = _pc.cast(col, _pa.large_binary())
-            total += _pc.sum(_pc.binary_length(col)).as_py() or 0
-        rows += out.num_rows
-    return total, rows
+    out = decode_job._decode_unit(streams_dir, _json.loads(blob), row_groups, None, False)
+    total = 0
+    for name in ("url", "html", "text", "lang"):
+        col = out[name]
+        if _pa.types.is_string(col.type) or _pa.types.is_large_string(col.type):
+            col = _pc.cast(col, _pa.large_binary())
+        total += _pc.sum(_pc.binary_length(col)).as_py() or 0
+    return total, out.num_rows
 
 
 def _pool_reps(run_once, rounds: int, max_rounds: int = 8):
@@ -297,9 +280,8 @@ def _pool_decode_walls(
 
     from sparc.job import decode_job
 
-    paths = decode_job._manifest_paths(streams_dir)
-    n_shards = max(1, -(-nproc // max(len(paths), 1)))
-    units = [(p, s, n_shards, streams_dir) for p in paths for s in range(n_shards)]
+    plan = decode_job.plan_read(streams_dir)
+    units = [(blob, groups, streams_dir) for blob, groups in plan.units]
     with mp.Pool(nproc) as pool:
         pool.map(_pool_decode_unit, units)  # warm (imports, page cache)
         walls, syss, _ = _pool_reps(

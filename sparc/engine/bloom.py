@@ -42,6 +42,7 @@ _MURMUR_C1 = (-8663945395140668459) & _M64
 _MURMUR_C2 = 5545529020109919103
 _MURMUR_SEED = 104729
 _TS_PER_MILLI = {"s": None, "ms": 1, "us": 1_000, "ns": 1_000_000}
+_WIDE = _decimal.Context(prec=80)
 
 # --- scalar hashes (probe literals; the vectorized kernels' reference) -------
 
@@ -95,10 +96,11 @@ def _orc_decimal_str(value) -> str:
     zeros stripped, zero is "0" regardless of scale or sign — the string
     DecimalTreeWriter feeds bloomFilterUtf8.addString (validated against
     a live Java writer's bloom streams: hit rate 1.0 vs 0.0085 for the
-    raw-scale string)."""
+    raw-scale string).  Normalized under a context wider than decimal128's
+    38 digits: the default 28-digit one rounds longer values."""
     if not value:
         return "0"
-    return format(value.normalize(), "f")
+    return format(value.normalize(_WIDE), "f")
 
 
 def _orc_timestamp_millis(value: _dt.datetime) -> int:

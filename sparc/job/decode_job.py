@@ -1,12 +1,17 @@
-"""The distributed decode job: stripe files + footer manifest → DataFrame.
+"""The decode job: stripe files + footer manifest → DataFrame.
 
-Inverse of encode_job.  A SINGLE Spark stage over the manifest-file list:
-each task pyarrow-reads its manifest files (one FOOTER row per stripe),
-prunes stripes/row groups against the predicate, byte-range-fetches the
-surviving stream spans from the stripe files, and decodes inside
-``mapInArrow``.  No JVM parquet scan, no shuffle, no stage barrier.
-Selected-column decode ("projection pushdown" over our own format) only
-fetches the needed streams: span selection at the mmap.
+Every read is planned in the driver by :func:`plan_read`: it pyarrow-reads
+the manifest's footers, prunes stripes on their statistics and row groups
+on theirs and on the predicate columns' bloom filters (byte-range reads of
+those streams only).  The plan is one unit per kept stripe: its footer
+blob and its kept row groups.
+
+A read whose kept units decode to little data (:data:`DRIVER_DECODE_BYTES`)
+and that has no ``map_fn`` decodes them in the driver and returns them as
+an Arrow ``LocalTableScan``: no Python job runs.  Every other read is ONE
+``mapInArrow`` stage over the kept units: each task byte-range-slices the
+projected columns' streams out of its stripe files and decodes them.  No
+task reads a manifest, and a refuted stripe never becomes a task.
 """
 
 from __future__ import annotations
@@ -15,6 +20,7 @@ import json
 import os
 import zlib
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -24,6 +30,16 @@ from ..engine import stripe as stripe_mod
 from . import manifest
 from . import partition as part_mod
 from .encode_job import STREAMS_SCHEMA
+
+# The driver decodes a read whose kept units hold at most this many
+# pre-codec (``encoded``) stream bytes.  Measured on the pages table (a
+# 4-vCPU VM, one 4-lane session, 8 stripes of 4,096 rows, ts-range reads of
+# 1 to 14 row groups then ``count()``, medians of 7 per path, interleaved):
+# the task path stays at 212-245 ms of wall whatever it keeps, the driver
+# path grows from 151 ms at 3.6 MB to 207 ms at 14.5 MB and 226 ms at 21.6 MB.
+# Wall crosses near 18 MB and user CPU near 28 MB; the budget sits below.
+DRIVER_DECODE_BYTES = 16 << 20
+_BLOOM = "BLOOM_FILTER_UTF8"
 
 
 def _stripe_path(footer: dict, streams_dir: str) -> str:
@@ -39,120 +55,143 @@ def _stripe_path(footer: dict, streams_dir: str) -> str:
     return os.path.join(streams_dir, rel)  # an absolute rel wins (compact)
 
 
-def _decode_paths_factory(
-    columns: list[str] | None,
-    verify_crc: bool,
+class ReadPlan(NamedTuple):
+    """``units``: one ``(footer blob, kept row groups or None for all)``
+    per kept stripe.  ``counters``: stripes and row groups seen, refuted
+    by stats and by bloom, kept pre-codec bytes, and the path a read
+    without ``map_fn`` takes (``"driver"`` or ``"task"``)."""
+
+    units: list[tuple[bytes, list[int] | None]]
+    counters: dict
+
+
+def _pick_groups(
+    footer: dict, predicate: tuple, pred_cols: set, streams_dir: str, n: int, c: dict
+) -> list[int] | None:
+    """The row groups the statistics keep, then the predicate columns'
+    blooms keep (read by byte range only when the statistics keep some)."""
+    groups = stripe_mod.pick_row_groups(footer, predicate)
+    kept = n if groups is None else len(groups)
+    c["rowgroups_refuted_by_stats"] += n - kept
+    spans = [s for s in footer["stream_spans"] if s[1] == _BLOOM and s[0] in pred_cols]
+    if not (kept and spans):
+        return groups
+    blooms = {}
+    with open(_stripe_path(footer, streams_dir), "rb") as f:
+        for cname, kind, off, ln in spans:
+            f.seek(off)
+            blooms[(cname, kind)] = f.read(ln)
+    groups = stripe_mod.pick_row_groups(footer, predicate, streams=blooms)
+    c["rowgroups_refuted_by_bloom"] += kept - (n if groups is None else len(groups))
+    return groups
+
+
+def plan_read(
     streams_dir: str,
     predicate: tuple | None = None,
-    stripe_predicate: tuple | None = None,
-    map_fn=None,
-):
-    """mapInArrow function over a DataFrame of manifest-file units
-    (path, shard, n_shards): each task pyarrow-reads its manifest files —
-    footer rows only, the stream bytes stay in stripe files — and decodes
-    the stripes they commit.  One Spark stage, no JVM parquet scan, no
-    shuffle: a two-stage scan+repartition shape alone measured ~0.6 s per
-    decode with a noop UDF, more than the reference reader's entire warm
-    read of 3 GiB."""
-    need_cols = set(columns) if columns else None
-    # bloom streams only for predicate columns (row-group pruning probes
-    # them, including predicate columns outside the projection)
+    columns: list[str] | None = None,
+    rowgroup_prune: bool = True,
+) -> ReadPlan:
+    """Plan a read in the calling process, as the reference runs
+    ``pickRowGroups`` in its reader (SURVEY.md §2.7): every footer of the
+    manifest, stripes pruned on their statistics, then (unless
+    ``rowgroup_prune=False``) row groups on theirs and on the blooms of
+    ``predicate``'s columns.  ``columns`` (None: all) sizes the kept
+    bytes, which choose the path."""
+    import pyarrow.parquet as pq
+
+    c = dict.fromkeys((
+        "stripes", "stripes_refuted_by_stats", "rowgroups", "rowgroups_refuted_by_stats",
+        "rowgroups_refuted_by_bloom", "rowgroups_kept", "kept_bytes",
+    ), 0)
     pred_cols = sarg_mod.columns_of(predicate) if predicate is not None else set()
-
-    def decode_footer(footer: dict) -> Iterator[pa.RecordBatch]:
-        sid = footer["stripe_id"]
-        if stripe_predicate is not None:
-            # stripe-level stats pruning IN the scan task: same tri-state
-            # evaluation as prune_stripes_df, refuted stripes never open
-            # their stripe file
-            col_stats = stripe_mod.footer_stats(footer, None)
-            if not sarg_mod.keep(stripe_predicate, col_stats):
-                return
-        # mmap the stripe file and slice the needed spans — projection and
-        # predicate decide which byte ranges are ever touched (the IO
-        # planner's selective stream fetch, as true byte-range reads)
-        import mmap
-
-        with open(_stripe_path(footer, streams_dir), "rb") as f:
-            mm = mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
-        mv = memoryview(mm)
-        streams: dict[tuple[str, str], memoryview] = {}
-        for cname, kind, off, ln in footer["stream_spans"]:
-            if kind == "BLOOM_FILTER_UTF8":
-                if cname not in pred_cols:
-                    continue
-            elif need_cols is not None and cname not in need_cols:
+    units = []
+    for path in _manifest_paths(streams_dir):
+        t = pq.read_table(path, columns=["kind", "data"], use_threads=False)
+        for kind, blob in zip(t["kind"].to_pylist(), t["data"].to_pylist()):
+            if kind != "FOOTER":
                 continue
-            streams[(cname, kind)] = mv[off : off + ln]
-        if verify_crc:
-            for (c, k), v in streams.items():
-                expect = footer.get("crc32", {}).get(f"{c}/{k}")
-                if expect is not None and zlib.crc32(v) != expect:
-                    raise ValueError(f"stripe {sid}: crc mismatch on {c}/{k}")
-        # row-group pruning over the FULL footer (the predicate may
-        # reference columns outside the projection) — the engine's
-        # pickRowGroups analog; only surviving groups are decompressed
-        row_groups = (
-            stripe_mod.pick_row_groups(footer, predicate, streams=streams)
-            if predicate is not None
-            else None
-        )
-        if row_groups == []:
-            return  # every group refuted: stripe contributes nothing
-        if columns:
-            footer = dict(footer)
-            footer["columns"] = [c for c in footer["columns"] if c["name"] in columns]
-        out = stripe_mod.decode_stripe(streams, footer, row_groups=row_groups)
-        if map_fn is not None:
-            # compute-near-data: the caller's vectorized transform runs
-            # HERE, on the decoded Arrow table, before anything crosses
-            # the Python->JVM boundary — only its (usually tiny) result
-            # ships back.  At 100 TB this is the shape that matters: the
-            # decoded corpus never moves.
-            out = map_fn(out)
-            if isinstance(out, pa.RecordBatch):
-                out = pa.Table.from_batches([out])
-        # one output batch per stripe: the decode already holds the whole
-        # stripe resident (the writer's memory budget bounds stripe
-        # size), and fewer/larger IPC frames measurably cut the
-        # Python->JVM return-transfer wall (~20% at 3 GiB)
-        yield from out.to_batches()
+            footer = json.loads(blob)
+            ri = next((m["row_index"] for m in footer["columns"] if m.get("row_index")), None)
+            n = len(ri) if ri else 1
+            c["stripes"] += 1
+            c["rowgroups"] += n
+            groups = None
+            if predicate is not None:
+                if not sarg_mod.keep(predicate, stripe_mod.footer_stats(footer, None)):
+                    c["stripes_refuted_by_stats"] += 1
+                    continue
+                if rowgroup_prune:
+                    groups = _pick_groups(footer, predicate, pred_cols, streams_dir, n, c)
+                    if groups == []:
+                        continue
+            k = n if groups is None else len(groups)
+            c["rowgroups_kept"] += k
+            c["kept_bytes"] += k * sum(
+                info["encoded"]
+                for m in footer["columns"] if not columns or m["name"] in columns
+                for kind, info in m.get("streams", {}).items() if kind != _BLOOM
+            ) // n
+            units.append((blob, groups))
+    c["path"] = "driver" if c["kept_bytes"] <= DRIVER_DECODE_BYTES else "task"
+    return ReadPlan(units, c)
 
-    def decode_paths(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
 
+def _decode_unit(
+    streams_dir: str, footer: dict, row_groups, columns: list[str] | None, verify_crc: bool
+) -> pa.Table:
+    """Decode one kept stripe: mmap its file, slice the projected columns'
+    stream spans (projection decides which byte ranges are ever touched),
+    check their CRCs, decode the kept row groups."""
+    import mmap
+
+    with open(_stripe_path(footer, streams_dir), "rb") as f:
+        mm = mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
+    mv = memoryview(mm)
+    streams = {
+        (cname, kind): mv[off : off + ln]
+        for cname, kind, off, ln in footer["stream_spans"]
+        if kind != _BLOOM and (not columns or cname in columns)
+    }
+    if verify_crc:
+        for (cname, kind), v in streams.items():
+            expect = footer.get("crc32", {}).get(f"{cname}/{kind}")
+            if expect is not None and zlib.crc32(v) != expect:
+                raise ValueError(f"stripe {footer['stripe_id']}: crc mismatch on {cname}/{kind}")
+    if columns:
+        footer = dict(footer, columns=[m for m in footer["columns"] if m["name"] in columns])
+    return stripe_mod.decode_stripe(streams, footer, row_groups=row_groups)
+
+
+def _decode_units_factory(
+    streams_dir: str, columns: list[str] | None, verify_crc: bool, map_fn=None
+):
+    """mapInArrow function over a DataFrame of the planner's units
+    (``footer binary, row_groups array<int>``)."""
+
+    def decode_units(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from .. import runtime
 
         runtime.init_worker()
         for b in batches:
-            for path, shard, n_shards in zip(
-                b.column("path").to_pylist(),
-                b.column("shard").to_pylist(),
-                b.column("n_shards").to_pylist(),
-            ):
-                tbl = pq.read_table(path, columns=["kind", "data"], use_threads=False)
-                footers = [
-                    blob
-                    for kind, blob in zip(tbl["kind"].to_pylist(), tbl["data"].to_pylist())
-                    if kind == "FOOTER"
-                ]
-                # sub-manifest shard: this task decodes every n_shards-th
-                # footer (stripe).  Re-reading a small footer-only manifest
-                # n_shards times costs ~ms; leaving cores idle because
-                # manifests < cores costs a full extra stripe-decode of
-                # wall (measured 20 manifests / 32 stripes / 32 cores:
-                # worst task carried 2 stripes).
-                for blob in footers[shard::n_shards]:
-                    yield from decode_footer(json.loads(blob))
+            units = zip(b.column("footer").to_pylist(), b.column("row_groups").to_pylist())
+            for blob, groups in units:
+                out = _decode_unit(streams_dir, json.loads(blob), groups, columns, verify_crc)
+                if map_fn is not None:
+                    # compute-near-data: only the transform's (usually
+                    # tiny) result crosses the Python->JVM boundary
+                    out = map_fn(out)
+                    if isinstance(out, pa.RecordBatch):
+                        out = pa.Table.from_batches([out])
+                # one output batch per stripe: fewer, larger IPC frames cut
+                # the Python->JVM return wall (~20% at 3 GiB)
+                yield from out.to_batches()
 
-    return decode_paths
+    return decode_units
 
 
 def _manifest_paths(streams_dir: str) -> list[str]:
-    """Manifest part-file paths of a streams dir (sorted for determinism).
-    Planner-scale metadata: one file per completed encode task, NOT one
-    per stripe — at Iceberg scale this list comes from the table manifest
-    instead of a directory listing."""
+    """Manifest part-file paths of a streams dir (sorted for determinism)."""
     if not os.path.isdir(streams_dir):
         raise ValueError(f"streams dir {streams_dir!r} is not a directory")
     return manifest.paths(streams_dir)
@@ -178,6 +217,13 @@ def run_decode(
 ) -> DataFrame:
     """Decode a streams dir back to a DataFrame of the original schema.
 
+    The read is planned in the driver (:func:`plan_read`).  A read without
+    ``map_fn`` whose kept units hold at most :data:`DRIVER_DECODE_BYTES`
+    decodes them in the driver and returns an Arrow ``LocalTableScan``;
+    every other read is one ``mapInArrow`` stage of at most
+    ``n_partitions`` (default: ``defaultParallelism``) tasks over the kept
+    units.  Both return the same rows.
+
     ``map_fn`` (with ``map_schema``, a DDL string describing its output)
     runs a vectorized compute-near-data transform ``pa.Table -> pa.Table``
     on each decoded stripe INSIDE the scan task, so only its result ever
@@ -186,13 +232,12 @@ def run_decode(
     ``stripe_filter`` prunes whole stripes before their stripe file is
     opened — the engine-side analog of the reference's stripe-level
     SearchArgument pruning (SURVEY.md §2.7;
-    ``RecordReaderImpl.evaluatePredicateProto``).  It accepts either the
-    legacy ``(column, lo, hi)`` range tuple or a full composite predicate
-    tree (see ``sparc.engine.sarg``):
+    ``RecordReaderImpl.evaluatePredicateProto``) — and, unless
+    ``rowgroup_prune=False``, row groups on their statistics and blooms.
+    It accepts either the legacy ``(column, lo, hi)`` range tuple or a
+    full composite predicate tree (see ``sparc.engine.sarg``):
     ``("and", ("between", "ts", a, b), ("not", ("is_null", "url")))``.
-    Evaluation runs inside the scan task (tri-state stats check on each
-    footer) — no driver-side collect anywhere on the read path.  Pruning
-    alone returns a superset of matching rows; ``row_filter=True``
+    Pruning alone returns a superset of matching rows; ``row_filter=True``
     additionally compiles the SAME tree to a Catalyst row filter on the
     decoded output (the reference's three filter levels from one
     SearchArgument — requires every predicate column in the decoded
@@ -248,57 +293,33 @@ def run_decode(
         columns = [fn for _, fn in evolution if fn is not None]
     if schema_ddl is None:
         schema_ddl = _schema_ddl_from_footer(sample, columns)
-    # ONE self-contained footer row per stripe (blobs live in stripe
-    # files), so the decode is a single stage over the manifest-file list
-    # — no JVM parquet scan, no repartition shuffle, no stage barrier.
-    # Round-robin interleave of the sorted path list balances tasks
-    # (manifest files ~ uniform stripes/task); the LocalTableScan slices
-    # it contiguously.
-    paths = _manifest_paths(streams_dir)
-    # no max(cores, 8) floor here: LocalTableScanExec caps parallelism at
-    # defaultParallelism, so a higher floor can only be honored by adding
-    # an exchange — and the single-stage shape is worth more than extra
-    # sub-core tasks on a <8-core host (each exchange measured ~0.6 s of
-    # pure orchestration).  Callers that want more tasks pass
-    # n_partitions explicitly and pay the one metadata-only exchange
-    # below.
-    target = n_partitions or spark.sparkContext.defaultParallelism
-    # one scan unit per (manifest, shard): when manifests are few, shard
-    # BELOW manifest granularity — each shard decodes every n_shards-th
-    # footer (stripe) of its manifest, so task count tracks cores instead
-    # of the encoder's task count.  Aim for >=2 units per task slot: with
-    # units ~= tasks, the +-1-unit remainder makes some tasks carry 2x the
-    # work (45 units on 32 cores: 13 straggler tasks, measured ~15% of the
-    # decode wall at 3 GiB); at >=2x the same remainder costs <=1/2 a
-    # unit.  When manifests already exceed 2x target, n_shards=1 and unit
-    # count scales with the data — the 100 TB shape.
-    n_shards = max(1, -(-(2 * target) // max(len(paths), 1)))
-    units = [(p, s, n_shards) for p in paths for s in range(n_shards)]
-    n_parts = max(1, min(target, len(units)))
-    fn = _decode_paths_factory(
-        columns, verify_crc, streams_dir,
-        predicate=pred if rowgroup_prune else None,
-        stripe_predicate=pred, map_fn=map_fn,
-    )
-    # JVM-only unit distribution via an Arrow LocalTableScan
-    # (partition.local_frame).  createDataFrame on the Python list would
-    # plan as Scan ExistingRDD over a Python RDD, so every decode task
-    # would first run a hidden Python stage in a second worker pool.  The
-    # LocalTableScan runs min(units, defaultParallelism) tasks with
-    # near-even contiguous slices and NO exchange, keeping the decode a
-    # single stage; the interleaved ordering gives round-robin unit
-    # placement under contiguous slicing (manifest diversity per task,
-    # shards of one manifest spread across tasks).
-    paths_df = part_mod.local_frame(
-        spark, part_mod.round_robin(units, n_parts),
-        "path string, shard int, n_shards int",
-    )
-    if n_partitions and n_partitions != spark.sparkContext.defaultParallelism:
-        # explicit caller override: worth one (tiny, metadata-only)
-        # round-robin exchange to honor the requested task count
-        # (LocalTableScanExec alone caps at defaultParallelism)
-        paths_df = paths_df.repartition(n_parts)
-    out = paths_df.mapInArrow(fn, schema=schema_ddl)
+    plan = plan_read(streams_dir, pred, columns, rowgroup_prune)
+    if map_fn is None and plan.counters["path"] == "driver":
+        tables = [
+            _decode_unit(streams_dir, json.loads(blob), groups, columns, verify_crc)
+            for blob, groups in plan.units
+        ]
+        # one partition: an aggregate over it needs no exchange
+        out = part_mod.local_frame(
+            spark, pa.concat_tables(tables, promote_options="permissive") if tables else [],
+            schema_ddl,
+        ).coalesce(1)
+    else:
+        # one unit per kept stripe, handed out by a JVM-only Arrow
+        # LocalTableScan (partition.local_frame): min(units, n_parts)
+        # tasks with contiguous slices and no exchange
+        target = n_partitions or spark.sparkContext.defaultParallelism
+        n_parts = max(1, min(target, len(plan.units)))
+        units_df = part_mod.local_frame(
+            spark, plan.units, "footer binary, row_groups array<int>"
+        )
+        if n_partitions and n_partitions != spark.sparkContext.defaultParallelism:
+            # explicit caller override: one (tiny) round-robin exchange
+            # honours the requested task count (LocalTableScanExec alone
+            # caps at defaultParallelism)
+            units_df = units_df.repartition(n_parts)
+        fn = _decode_units_factory(streams_dir, columns, verify_crc, map_fn)
+        out = units_df.mapInArrow(fn, schema=part_mod.struct_of(schema_ddl))
     if cast_to:
         out = out.select(
             *[
@@ -381,9 +402,9 @@ def footers_df(spark: SparkSession, streams_dir: str) -> DataFrame:
     """The per-stripe metadata table: (stripe_id, footer JSON string).
 
     This is the engine's stripe directory (what ``ReaderImpl`` reads from
-    the file tail) as a first-class DataFrame — every planning operation
-    (stats pruning, bloom probing, schema inference, resume) joins
-    against it instead of collecting footers to the driver.  The static
+    the file tail) as a first-class DataFrame, for queries over the
+    metadata itself (:func:`stripe_stats_df`); reads are planned from
+    the same rows by :func:`plan_read`, without Spark.  The static
     manifest schema means no inference job: plan construction stays lazy."""
     return (
         spark.read.schema(STREAMS_SCHEMA).parquet(streams_dir)
@@ -392,69 +413,30 @@ def footers_df(spark: SparkSession, streams_dir: str) -> DataFrame:
     )
 
 
+def _stripe_ids_df(spark: SparkSession, plan: ReadPlan) -> DataFrame:
+    ids = [(json.loads(blob)["stripe_id"],) for blob, _ in plan.units]
+    return part_mod.local_frame(spark, ids, "stripe_id long")
+
+
 def prune_stripes_df(
     spark: SparkSession, streams_dir: str, predicate: tuple
 ) -> DataFrame:
     """Stripe ids that may contain rows matching ``predicate`` (a
-    ``sparc.engine.sarg`` tree), as a DataFrame — evaluated in executors
-    over the footer rows (tri-state: stripes whose stats cannot refute
-    the predicate are kept)."""
-    footers = footers_df(spark, streams_dir)
-
-    def eval_part(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in pdfs:
-            keeps = []
-            # one JSON parse + tree walk per stripe: planner-scale metadata
-            # work, mirroring the reference's per-stripe footer evaluation
-            for blob in pdf["footer"]:
-                footer = json.loads(blob)
-                col_stats = stripe_mod.footer_stats(footer, None)
-                keeps.append(sarg_mod.keep(predicate, col_stats))
-            yield pdf.loc[keeps, ["stripe_id"]]
-
-    return footers.mapInPandas(eval_part, "stripe_id long")
+    ``sparc.engine.sarg`` tree), as a DataFrame: the stripes
+    :func:`plan_read` keeps on stripe statistics alone (tri-state:
+    stripes whose stats cannot refute the predicate are kept)."""
+    return _stripe_ids_df(spark, plan_read(streams_dir, predicate, rowgroup_prune=False))
 
 
 def prune_stripes_bloom_df(
     spark: SparkSession, streams_dir: str, column: str, value
 ) -> DataFrame:
-    """Stripe ids that *might* contain ``value`` in ``column``, probed
-    against the per-stripe bloom streams IN EXECUTORS (bloom blobs never
-    reach the driver): a byte-range read of just the bloom span per
-    footer.  Stripes without a readable bloom stream are kept."""
-
-    def probe(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from ..engine import bloom as bloom_mod, stripe as stripe_mod
-
-        for pdf in pdfs:
-            miss = []
-            for blob in pdf["footer"]:
-                footer = json.loads(blob)
-                span = next(
-                    (
-                        (off, ln)
-                        for c, k, off, ln in footer["stream_spans"]
-                        if c == column and k == "BLOOM_FILTER_UTF8"
-                    ),
-                    None,
-                )
-                if span is None:
-                    miss.append(False)  # no bloom: cannot skip
-                    continue
-                with open(_stripe_path(footer, streams_dir), "rb") as f:
-                    f.seek(span[0])
-                    blob_bytes = f.read(span[1])
-                (meta,) = [c for c in footer["columns"] if c["name"] == column]
-                # one filter per row group; an unindexed stripe holds one
-                n_groups = len(meta.get("row_index") or ()) or 1
-                miss.append(not bloom_mod.might_contain_any(
-                    blob_bytes, stripe_mod._parse_type(meta), value, n_groups
-                ))
-            yield pdf.loc[miss, ["stripe_id"]]
-
-    footers = footers_df(spark, streams_dir)
-    misses = footers.mapInPandas(probe, "stripe_id long")
-    return footers.select("stripe_id").join(F.broadcast(misses), "stripe_id", "left_anti")
+    """Stripe ids that *might* contain ``value`` in ``column``: the stripes
+    :func:`plan_read` keeps for ``column = value`` on statistics and the
+    per-row-group bloom filters (a byte-range read of just the bloom
+    span).  A stripe without a readable bloom stream is refuted by its
+    statistics only."""
+    return _stripe_ids_df(spark, plan_read(streams_dir, ("=", column, value)))
 
 
 def stripe_stats_df(spark: SparkSession, streams_dir: str) -> DataFrame:

@@ -9,6 +9,7 @@ stripe count comes from :func:`pick_stripe_count`.
 
 from __future__ import annotations
 
+import functools
 import math
 from collections.abc import Sequence
 
@@ -35,9 +36,18 @@ def pick_stripe_count(total_rows: int, total_bytes: int,
     return max(1, by_bytes, by_rows)
 
 
-def local_frame(spark: SparkSession, rows: Sequence[tuple], ddl: str) -> DataFrame:
+@functools.lru_cache(maxsize=64)
+def struct_of(ddl: str) -> StructType:
+    """``ddl`` parsed once per process: each parse is a JVM round trip."""
+    return StructType.fromDDL(ddl)
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[tuple] | pa.Table, ddl: str
+) -> DataFrame:
     """A driver-side DataFrame of ``rows`` (tuples in ``ddl`` column
-    order), planned as a JVM-only ``LocalTableScan``.
+    order, or an Arrow table with ``ddl``'s columns in order), planned as
+    a JVM-only ``LocalTableScan``.
 
     ``spark.createDataFrame(list, ddl)`` plans as ``Scan ExistingRDD``
     over a Python RDD instead: every task of every job that reads it
@@ -45,14 +55,18 @@ def local_frame(spark: SparkSession, rows: Sequence[tuple], ddl: str) -> DataFra
     the rows, and it runs ``defaultParallelism`` tasks even for fewer
     rows, the extra ones empty.  An Arrow table becomes a LocalRelation:
     no Python stage, and ``min(len(rows), defaultParallelism)`` tasks
-    that each take a contiguous slice of the rows."""
-    struct = StructType.fromDDL(ddl)
+    that each take a contiguous slice of the rows.
+
+    A table's timestamps are taken as UTC instants, as ``mapInArrow``
+    takes them: ``createDataFrame`` alone would read a zone-less one as
+    wall-clock time in the session time zone."""
+    struct = struct_of(ddl)
     schema = to_arrow_schema(struct)
-    table = pa.Table.from_arrays(
-        [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(schema)],
-        schema=schema,
-    )
-    return spark.createDataFrame(table, struct)
+    if isinstance(rows, pa.Table):
+        cols = [c.cast(f.type) for c, f in zip(rows.columns, schema)]
+    else:
+        cols = [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(schema)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=schema), struct)
 
 
 def round_robin(rows: Sequence[tuple], n_parts: int) -> list[tuple]:

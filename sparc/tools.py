@@ -11,6 +11,11 @@ that surface:
     python -m sparc.tools data  <file.orc | streams-dir> [-n N]
     python -m sparc.tools scan  <file.orc | streams-dir>
     python -m sparc.tools sizes <file.orc | streams-dir>
+    python -m sparc.tools plan  <streams-dir> ['<predicate JSON>']
+
+``plan`` has no orc-tools twin: it prints the driver read planner's
+counters (``decode_job.plan_read``) for a sarg predicate written as JSON,
+e.g. ``'["and", ["=", "url", "https://x"], [">", "id", 7]]'``.
 
 ORC files are parsed with the engine's own tail/stream kernels
 (sparc.engine.orcread); engine stream dirs (stripe files + footer
@@ -297,6 +302,22 @@ def sizes(path: str) -> dict:
     }
 
 
+def _sarg_tree(node):
+    """A JSON predicate (nested lists) as the sarg tuple tree."""
+    if node and node[0] in ("and", "or", "not"):
+        return (node[0], *[_sarg_tree(c) for c in node[1:]])
+    return tuple(node)
+
+
+def plan(streams_dir: str, predicate: str | None = None) -> dict:
+    """The read planner's counters for ``streams_dir`` under a JSON sarg
+    predicate (None: a full read)."""
+    from .job import decode_job
+
+    pred = _sarg_tree(json.loads(predicate)) if predicate else None
+    return decode_job.plan_read(streams_dir, pred).counters
+
+
 def _json_default(o):
     if isinstance(o, (bytes, memoryview)):
         b = bytes(o)
@@ -319,10 +340,16 @@ def main(argv: list[str] | None = None) -> int:
     pd = sub.add_parser("data")
     pd.add_argument("path")
     pd.add_argument("-n", "--limit", type=int, default=None)
+    pp = sub.add_parser("plan")
+    pp.add_argument("path")
+    pp.add_argument("predicate", nargs="?")
     args = ap.parse_args(argv)
     if args.cmd == "data":
         for row in data(args.path, args.limit):
             print(json.dumps(row, default=_json_default))
+        return 0
+    if args.cmd == "plan":
+        print(json.dumps(plan(args.path, args.predicate), indent=2))
         return 0
     out = {"meta": meta, "scan": scan, "sizes": sizes}[args.cmd](args.path)
     print(json.dumps(out, indent=2, default=_json_default))

@@ -916,12 +916,11 @@ def test_decode_map_rejects_dataframe_side_options(spark, pages_path, tmp_path):
         decode_job.run_decode(spark, out, map_fn=lambda t: t)
 
 
-def test_decode_shards_below_manifest_granularity(spark, pages_path, tmp_path):
-    """Paths-mode decode with target parallelism far above the manifest
-    count: each (manifest, shard) unit decodes a disjoint footer subset,
-    and the union is exactly-once — no dropped or duplicated stripes.
-    Covers the n_shards > 1 branch of _decode_paths_factory with multiple
-    stripes per manifest and pre-footer data rows riding along."""
+def test_decode_units_exactly_once_above_stripe_count(spark, pages_path, tmp_path, monkeypatch):
+    """Task-path decode with a task count far above the stripe count: the
+    planner's units are one per kept stripe, each decoded exactly once —
+    no dropped or duplicated stripes, however the units are split over
+    tasks (several stripes per manifest, data rows beside the footers)."""
     df = spark.read.parquet(pages_path)
     out = str(tmp_path / "streams")
     # few encode tasks -> few manifests, several stripes per manifest
@@ -930,12 +929,12 @@ def test_decode_shards_below_manifest_granularity(spark, pages_path, tmp_path):
     )
     manifests = glob.glob(os.path.join(out, "part-*"))
     assert 0 < len(manifests) <= 2
-    # forced 16-way target: n_shards = ceil(16 / len(manifests)) >= 8
-    decoded = decode_job.run_decode(spark, out, n_partitions=16)
-    assert decoded.rdd.getNumPartitions() > len(manifests)
-    _compare_roundtrip(spark, df, out, n_partitions=16)
-    # shard edge: more shards than stripes in a manifest (empty shards)
+    monkeypatch.setattr(decode_job, "DRIVER_DECODE_BYTES", 0)
+    assert len(decode_job.plan_read(out).units) == 8
+    decoded = decode_job.run_decode(spark, out, n_partitions=64)
+    assert decoded.rdd.getNumPartitions() == 8  # one task per unit
     _compare_roundtrip(spark, df, out, n_partitions=64)
+    _compare_roundtrip(spark, df, out, n_partitions=3)
 
 
 def test_schema_follows_a_rewritten_dir(spark, tmp_path):

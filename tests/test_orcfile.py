@@ -1135,6 +1135,54 @@ def test_java_row_group_skip_on_date_and_timestamp(spark, tmp_path):
     assert got_t == 1000, got_t
 
 
+def test_java_pushdown_keeps_decimals_past_28_digits(spark, tmp_path):
+    """A decimal with more than 28 significant digits keeps every digit in
+    the row-group and stripe statistics: Spark's ORC reader, which skips
+    on them with pushdown on, still finds the row (it found none while
+    the statistics were rounded to 28 digits)."""
+    from decimal import Decimal
+
+    big = Decimal("12345678901234567890123456781234.5")
+    t = pa.table({
+        "d": pa.array([Decimal(i) for i in range(20_000)] + [big], pa.decimal128(38, 1)),
+    })
+    path = str(tmp_path / "wide_dec.orc")
+    orcfile.write_orc(t, path, compression="ZSTD", row_index_stride=10_000)
+    cond = "d > CAST('12345678901234567890123456781000' AS DECIMAL(38,1))"
+    spark.conf.set("spark.sql.orc.filterPushdown", "true")
+    try:
+        assert spark.read.orc(path).filter(cond).count() == 1
+    finally:
+        spark.conf.unset("spark.sql.orc.filterPushdown")
+    assert spark.read.orc(path).filter(cond).count() == 1
+
+
+def test_bloom_wide_decimal_bitset_word_identical_to_java(spark):
+    """Decimal bloom keys of up to 38 digits equal the string the Java
+    DecimalTreeWriter adds (``HiveDecimalWritable.toString``): the bitset
+    is word-identical to a live Java BloomFilterUtf8 fed those strings."""
+    from decimal import Decimal
+
+    from sparc.engine import bloom
+
+    jvm = spark.sparkContext._jvm
+    vals = [
+        Decimal("12345678901234567890123456781234.5"),
+        Decimal("9999999999999999999999999999999999999.9"),
+        Decimal("-1234567890123456789012345678901234567.8"),
+        Decimal("100000000000000000000000000000.0"),
+        Decimal("0.0"), Decimal("2.5"),
+    ]
+    jbf = jvm.org.apache.orc.util.BloomFilterUtf8(len(vals), 0.01)
+    for v in vals:
+        w = jvm.org.apache.hadoop.hive.serde2.io.HiveDecimalWritable(str(v))
+        jbf.addString(w.toString())
+    [(ours, k)] = bloom.build(pa.array(vals, pa.decimal128(38, 1)), [(0, len(vals))], len(vals), 0.01)
+    assert k == jbf.getNumHashFunctions()
+    theirs = np.array(list(jbf.getBitSet()), np.int64).astype(np.uint64)
+    assert np.array_equal(ours, theirs)
+
+
 def test_timestamp_instant_emit_both_readers(spark, tmp_path):
     """tz-aware Arrow timestamps emit the TIMESTAMP_INSTANT category
     (kind 18, "timestamp with local time zone" — absolute instants, no

@@ -22,7 +22,10 @@ values, under NONE and ZSTD; and the statistics corners of
 ``conftest.stats_edge_table`` (NaN and ±inf doubles, an all-null row group,
 full-range int64, ``ns``/``ms`` timestamps, over-limit strings), in three
 stripes with and without a row index, recorded before the writer's
-statistics moved into ``stats.py``.  To regenerate after an *intended*
+statistics moved into ``stats.py``; and decimals of 29 to 38 significant
+digits (``_wide_decimal_table``) with a bloom filter, whose statistics
+and bloom keys must keep every digit, recorded after the fix that stopped
+them being rounded to 28.  To regenerate after an *intended*
 format change::
 
     PYTHONPATH=.:tests python tests/test_orcfile_golden.py
@@ -148,6 +151,28 @@ def _stats_edge_cases():
         }
 
 
+def _wide_decimal_table(n: int = 20_000):
+    """``decimal128(38, 1)``: 0 … n-1 and, in the last row group, values
+    past 28 significant digits up to the full 38."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+
+    wide = [
+        Decimal("12345678901234567890123456781234.5"),
+        Decimal("9999999999999999999999999999999999999.9"),
+        Decimal("-1234567890123456789012345678901234567.8"),
+        Decimal("100000000000000000000000000000.1"),
+    ]
+    return pa.table({"d": pa.array([Decimal(i) for i in range(n)] + wide, pa.decimal128(38, 1))})
+
+
+def _wide_decimal_cases():
+    yield "wide_decimal/ZSTD/10000", _wide_decimal_table(), {
+        "compression": "ZSTD", "row_index_stride": 10_000, "bloom_columns": ["d"],
+    }
+
+
 def _digest(table, kwargs: dict) -> str:
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "golden.orc")
@@ -169,6 +194,7 @@ GOLDEN = {
     "string_stats/ZSTD/400": "a06116c2bda83bebb4036c7c59c68d1595de0773fb3ca8b0213ddd6c7a65bce4",
     "stats_edges/NONE/0": "6bf140920ed46576c956f59f41e6bb555fc7e17d36866a3fa1d0afc1e68fe485",
     "stats_edges/NONE/1000": "042edaf50f3b58a4ca6956dca78b7600d800f983840d952ce2863419deb108ba",
+    "wide_decimal/ZSTD/10000": "ac5f5794c4c4ac3c71e7976e306e3348727f7b5257752e3a1e21bdb1c7eabefd",
 }
 
 
@@ -196,6 +222,12 @@ def test_write_orc_stats_edge_bytes_match_golden(case):
     assert _digest(table, kwargs) == GOLDEN[case]
 
 
+@pytest.mark.parametrize("case", [c[0] for c in _wide_decimal_cases()])
+def test_write_orc_wide_decimal_bytes_match_golden(case):
+    (table, kwargs), = [(t, kw) for name, t, kw in _wide_decimal_cases() if name == case]
+    assert _digest(table, kwargs) == GOLDEN[case]
+
+
 @pytest.mark.skipif(not os.path.exists(LINEITEM), reason="sf0.1 testdata absent")
 def test_write_orc_lineitem_bytes_match_golden():
     name, table, kwargs = _lineitem_case()
@@ -205,7 +237,7 @@ def test_write_orc_lineitem_bytes_match_golden():
 if __name__ == "__main__":
     cases = (
         list(_mixed_cases()) + list(_two_stripe_cases()) + list(_string_stats_cases())
-        + list(_stats_edge_cases())
+        + list(_stats_edge_cases()) + list(_wide_decimal_cases())
     )
     if os.path.exists(LINEITEM):
         cases.append(_lineitem_case())

@@ -29,51 +29,57 @@ def _plan(df) -> str:
 
 
 def _run_scan_task(streams_dir, columns, predicate=None):
-    """Run the decode scan task's function in-process over every manifest
-    of ``streams_dir``; return its output batches."""
+    """Plan the read in-process, then run the decode task's function over
+    every kept unit; return its output batches."""
     import pyarrow as pa
 
-    fn = decode_job._decode_paths_factory(
-        columns, False, streams_dir, predicate=predicate
-    )
-    paths = decode_job._manifest_paths(streams_dir)
-    units = pa.RecordBatch.from_pydict(
-        {"path": paths, "shard": [0] * len(paths), "n_shards": [1] * len(paths)}
-    )
+    plan = decode_job.plan_read(streams_dir, predicate, columns)
+    fn = decode_job._decode_units_factory(streams_dir, columns, False)
+    units = pa.RecordBatch.from_pydict({
+        "footer": [blob for blob, _ in plan.units],
+        "row_groups": [groups for _, groups in plan.units],
+    })
     return list(fn(iter([units])))
 
 
+def _spans(footer, keep) -> set:
+    return {(c, k) for c, k, _, _ in footer["stream_spans"] if keep(c, k)}
+
+
 def test_decode_projection_filter_pushed_to_scan(spark, streams_dir, monkeypatch):
-    """A projected, predicated decode pushes the projection and the
-    predicate into the scan task: each stripe file is sliced for only the
-    projected columns' stream spans plus the predicate columns' bloom
-    spans — no other column's data and no other bloom is touched."""
+    """A projected, predicated decode pushes the predicate into the
+    planner and the projection into the scan task: the planner reads
+    only the predicate column's bloom spans, and each task slices its
+    stripe file for only the projected column's stream spans — no other
+    column's data and no bloom is touched."""
     from sparc import runtime
     from sparc.engine import stripe as stripe_mod
 
     url = decode_job.run_decode(spark, streams_dir, columns=["url"]).first()["url"]
-    fetched = []
-    real_pick = stripe_mod.pick_row_groups
+    probed, decoded = [], []
+    real_pick, real_decode = stripe_mod.pick_row_groups, stripe_mod.decode_stripe
 
-    def spy(footer, predicate, streams=None):
-        want = {
-            (c, k)
-            for c, k, _, _ in footer["stream_spans"]
-            if (c == "lang" and k != "BLOOM_FILTER_UTF8")
-            or (c == "url" and k == "BLOOM_FILTER_UTF8")
-        }
-        fetched.append((set(streams), want))
+    def pick(footer, predicate, streams=None):
+        if streams is not None:
+            want = _spans(footer, lambda c, k: c == "url" and k == "BLOOM_FILTER_UTF8")
+            probed.append((set(streams), want))
         return real_pick(footer, predicate, streams=streams)
 
-    monkeypatch.setattr(stripe_mod, "pick_row_groups", spy)
+    def decode(streams, footer, row_groups=None):
+        want = _spans(footer, lambda c, k: c == "lang" and k != "BLOOM_FILTER_UTF8")
+        decoded.append((set(streams), want))
+        return real_decode(streams, footer, row_groups=row_groups)
+
+    monkeypatch.setattr(stripe_mod, "pick_row_groups", pick)
+    monkeypatch.setattr(stripe_mod, "decode_stripe", decode)
     monkeypatch.setattr(runtime, "init_worker", lambda: None)
     out = _run_scan_task(streams_dir, ["lang"], predicate=("=", "url", url))
     assert sum(b.num_rows for b in out) >= 1
     assert all(b.schema.names == ["lang"] for b in out)
-    assert len(fetched) == 4  # every stripe, none refuted before the fetch
-    for got, want in fetched:
-        assert ("url", "BLOOM_FILTER_UTF8") in want
-        assert got == want
+    assert len(probed) == 4  # every stripe, none refuted before the bloom read
+    assert 1 <= len(decoded) < 4  # the bloom refuted some stripes
+    for got, want in probed + decoded:
+        assert want and got == want
 
 
 def test_decode_reads_only_needed_stream_columns(spark, streams_dir, monkeypatch):
@@ -110,9 +116,9 @@ def test_decode_reads_only_needed_stream_columns(spark, streams_dir, monkeypatch
 
 
 def test_pruned_decode_is_fully_lazy_no_driver_collect(spark, streams_dir):
-    """Building a pruned decode plan must not run any Spark job: stripe
-    pruning runs inside the scan task at execution time, never via a
-    driver-side collect of footers/blooms."""
+    """Building a pruned decode plan must not run any Spark job: the
+    planner reads footers and blooms with pyarrow in the driver, never
+    through a Spark collect."""
     schema = decode_job.infer_schema_ddl(spark, streams_dir)
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None) or [])
@@ -126,11 +132,13 @@ def test_pruned_decode_is_fully_lazy_no_driver_collect(spark, streams_dir):
     assert after == before, "plan construction launched a job (driver collect?)"
 
 
-def test_bloom_prune_plan_is_join_shaped(spark, streams_dir):
-    """Bloom pruning is a DataFrame anti-join probed in executors."""
+def test_bloom_prune_plan_runs_no_python(spark, streams_dir):
+    """Bloom pruning runs in the driver's planner: the kept stripe ids
+    come back as a JVM-only LocalTableScan, with no Python stage."""
     df = decode_job.prune_stripes_bloom_df(spark, streams_dir, "url", "x")
     plan = _plan(df)
-    assert "LeftAnti" in plan
+    assert "LocalTableScan" in plan
+    assert "Python" not in plan and "ExistingRDD" not in plan
 
 
 def test_filter_pushdown_on_source_scan(spark, streams_dir, tmp_path_factory):
@@ -145,11 +153,10 @@ def test_filter_pushdown_on_source_scan(spark, streams_dir, tmp_path_factory):
     assert "ReadSchema" in plan and "html" not in plan.split("ReadSchema")[1][:200]
 
 def test_files_sink_decode_plan_is_single_stage(spark, streams_dir, tmp_path_factory):
-    """Files-sink decode is ONE Spark stage over the manifest-file list:
-    no Exchange (shuffle), no parquet FileScan — footers are pyarrow-read
-    inside the scan task and stream bytes come from stripe-file byte
-    ranges.  Pruned decode keeps the same shape (stripe-level stats
-    evaluation moves into the task) and plan construction stays lazy."""
+    """Files-sink decode is ONE Spark stage: no Exchange (shuffle), no
+    parquet FileScan — footers are pyarrow-read by the driver's planner
+    and stream bytes come from stripe-file byte ranges.  Pruned decode
+    keeps the same shape and plan construction runs no Spark job."""
     src = tmp_path_factory.mktemp("plan3") / "pages.parquet"
     pages.write_parquet(str(src), 3000, seed=13)
     out = str(tmp_path_factory.mktemp("plan3") / "streams")
@@ -178,7 +185,7 @@ def test_files_sink_decode_plan_is_single_stage(spark, streams_dir, tmp_path_fac
 
 
 def test_pruned_decode_matches_source_filter(spark, tmp_path_factory):
-    """In-task stripe pruning plus the compiled row filter returns exactly
+    """Planner stripe pruning plus the compiled row filter returns exactly
     the rows a Spark filter over the source parquet returns for the same
     predicate."""
     src = tmp_path_factory.mktemp("plan4") / "pages.parquet"

@@ -215,7 +215,8 @@ def test_bloom_prune_keeps_stripes_with_pre_orc_bloom_streams(spark, streams_dir
     """Stripes written with the earlier pandas filter (``SBM1`` framing)
     hold no readable ORC bloom: every stripe is kept, nothing raises.
     The patched-in filter has all bits clear, so misreading it as a
-    filter would refute every key."""
+    filter would refute every key.  The probe is absent but inside every
+    stripe's url range, so only a bloom could refute it."""
     import json
     import shutil
     import struct
@@ -235,9 +236,9 @@ def test_bloom_prune_keeps_stripes_with_pre_orc_bloom_streams(spark, streams_dir
         with open(decode_job._stripe_path(footer, d), "r+b") as f:
             f.seek(off)
             f.write(blob)
-    keep = decode_job.prune_stripes_bloom(
-        spark, d, "url", "https://definitely-not-present.example/x"
-    )
+    probe = "https://www.host0100.example.com/definitely-not-present/x"
+    assert len(decode_job.prune_stripes_bloom(spark, streams_dir, "url", probe)) < 6
+    keep = decode_job.prune_stripes_bloom(spark, d, "url", probe)
     assert len(keep) == 6
 
 

@@ -88,6 +88,21 @@ def test_meta_data_scan_sizes_dir(streams_dir_files):
     assert "DATA" in z["by_stream_kind"]
 
 
+def test_plan_dir(streams_dir_files):
+    """``plan`` prints the read planner's counters for a JSON predicate."""
+    full = tools.plan(streams_dir_files)
+    assert full["stripes"] == 4 and full["rowgroups_kept"] == full["rowgroups"]
+    assert full["kept_bytes"] > 0 and full["path"] == "driver"
+    out = subprocess.run(
+        [sys.executable, "-m", "sparc.tools", "plan", streams_dir_files,
+         '["and", ["=", "lang", "zz-none"], ["not", ["is_null", "url"]]]'],
+        capture_output=True, text=True, cwd=REPO, check=True,
+    )
+    c = json.loads(out.stdout)
+    assert c["stripes"] == c["stripes_refuted_by_stats"] == 4
+    assert c["rowgroups_kept"] == c["kept_bytes"] == 0
+
+
 def test_cli_subprocess(orc_path):
     out = subprocess.run(
         [sys.executable, "-m", "sparc.tools", "meta", orc_path],
