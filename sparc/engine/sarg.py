@@ -257,47 +257,60 @@ def keep(
     return is_needed(evaluate(pred, column_stats, probes))
 
 
-def to_spark_column(pred: tuple):
-    """Compile a predicate tree to a Catalyst Column — the row-level
-    filter layer (``FilterFactory.createSArgFilter``
-    FilterFactory.java:111-159): the SAME tree drives stripe pruning,
-    row-group pruning, and the residual row filter.  Comparisons use
-    Spark semantics on the decoded column types, so literals must be
-    comparable to the column (e.g. a timestamp column compares against a
-    timestamp/py-datetime literal, while the stats domain uses raw
-    integers — pass the appropriate form at each level)."""
-    from pyspark.sql import functions as F
+_SQL_CMP = {"=": "=", "<": "<", "<=": "<=", ">": ">", ">=": ">="}
 
+
+def _sql_literal(v) -> str:
+    """``v`` as a Spark SQL literal of the type ``F.lit(v)`` gives it."""
+    import datetime as dt
+    import math
+
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+    if isinstance(v, Decimal):
+        return f"{v}BD"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, (bytes, bytearray)):
+        return f"X'{bytes(v).hex()}'"
+    if isinstance(v, dt.datetime):
+        # a naive datetime is local time, as pyspark converts it
+        return f"TIMESTAMP'{v.astimezone().isoformat()}'"
+    if isinstance(v, dt.date):
+        return f"DATE'{v.isoformat()}'"
+    raise TypeError(f"no SQL literal for {type(v).__name__} {v!r}")
+
+
+def to_sql(pred: tuple) -> str:
+    """Compile a predicate tree to a Spark SQL boolean expression (one
+    ``F.expr``, a single JVM round trip) — the row-level filter layer
+    (``FilterFactory.createSArgFilter`` FilterFactory.java:111-159): the
+    SAME tree drives stripe pruning, row-group pruning, and the residual
+    row filter.  Comparisons use Spark semantics on the decoded column
+    types, so literals must be comparable to the column (e.g. a timestamp
+    column compares against a py-datetime literal, while the stats
+    domain uses raw integers — pass the appropriate form at each
+    level)."""
     op = pred[0]
-    if op == "and":
-        out = to_spark_column(pred[1])
-        for child in pred[2:]:
-            out = out & to_spark_column(child)
-        return out
-    if op == "or":
-        out = to_spark_column(pred[1])
-        for child in pred[2:]:
-            out = out | to_spark_column(child)
-        return out
+    if op in ("and", "or"):
+        return f" {op.upper()} ".join(f"({to_sql(c)})" for c in pred[1:])
     if op == "not":
-        return ~to_spark_column(pred[1])
-    col = F.col(pred[1])
+        return f"NOT ({to_sql(pred[1])})"
+    col = "`" + pred[1].replace("`", "``") + "`"
     if op == "is_null":
-        return col.isNull()
-    if op == "=":
-        return col == F.lit(pred[2])
-    if op == "<":
-        return col < F.lit(pred[2])
-    if op == "<=":
-        return col <= F.lit(pred[2])
-    if op == ">":
-        return col > F.lit(pred[2])
-    if op == ">=":
-        return col >= F.lit(pred[2])
+        return f"{col} IS NULL"
+    if op in _SQL_CMP:
+        return f"{col} {_SQL_CMP[op]} {_sql_literal(pred[2])}"
     if op == "in":
-        return col.isin(list(pred[2]))
+        return f"{col} IN ({', '.join(_sql_literal(v) for v in pred[2])})"
     if op == "between":
-        return col.between(F.lit(pred[2]), F.lit(pred[3]))
+        return f"{col} BETWEEN {_sql_literal(pred[2])} AND {_sql_literal(pred[3])}"
     raise ValueError(f"unknown predicate op {op!r}")
 
 

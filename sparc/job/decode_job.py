@@ -58,8 +58,9 @@ def _stripe_path(footer: dict, streams_dir: str) -> str:
 class ReadPlan(NamedTuple):
     """``units``: one ``(footer blob, kept row groups or None for all)``
     per kept stripe.  ``counters``: stripes and row groups seen, refuted
-    by stats and by bloom, kept pre-codec bytes, and the path a read
-    without ``map_fn`` takes (``"driver"`` or ``"task"``)."""
+    by stats and by bloom, kept pre-codec bytes, the path a read without
+    ``map_fn`` takes (``"driver"`` or ``"task"``) and the planner's own
+    seconds (it makes no JVM round trip)."""
 
     units: list[tuple[bytes, list[int] | None]]
     counters: dict
@@ -98,8 +99,11 @@ def plan_read(
     ``rowgroup_prune=False``) row groups on theirs and on the blooms of
     ``predicate``'s columns.  ``columns`` (None: all) sizes the kept
     bytes, which choose the path."""
+    import time
+
     import pyarrow.parquet as pq
 
+    t0 = time.perf_counter()
     c = dict.fromkeys((
         "stripes", "stripes_refuted_by_stats", "rowgroups", "rowgroups_refuted_by_stats",
         "rowgroups_refuted_by_bloom", "rowgroups_kept", "kept_bytes",
@@ -134,6 +138,7 @@ def plan_read(
             ) // n
             units.append((blob, groups))
     c["path"] = "driver" if c["kept_bytes"] <= DRIVER_DECODE_BYTES else "task"
+    c["plan_s"] = round(time.perf_counter() - t0, 6)
     return ReadPlan(units, c)
 
 
@@ -330,7 +335,7 @@ def run_decode(
             ]
         )
     if row_filter and pred is not None:
-        out = out.filter(sarg_mod.to_spark_column(pred))
+        out = out.filter(F.expr(sarg_mod.to_sql(pred)))
     if evolution is not None:
         out = out.select(
             *[

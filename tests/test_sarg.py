@@ -244,3 +244,83 @@ def test_stats_from_pb_absent_hasnull_left_unknown():
     assert st["min"] == 3 and st["max"] == 7
     blob10 = blob + _varint(10 << 3) + b"\x00"
     assert from_pb(_parse_pb(blob10))["n_nulls"] == 0
+
+
+def test_to_sql_filters_like_python(spark):
+    """The row filter ``to_sql`` compiles keeps exactly the rows a Python
+    evaluation of the same tree keeps, for a literal of every type it
+    renders: quotes and backslashes in strings, negative and wide
+    decimals, NaN and infinite doubles, bytes, dates, naive timestamps
+    (local time, as pyspark reads them), booleans, NULL, and column names
+    with a dot or a backtick."""
+    import datetime as dt
+    import math
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    from sparc.engine.sarg import to_sql
+
+    rows = [
+        ("it's", 1, 0.5, Decimal("-1.50"), b"\x00\xff", dt.date(2020, 1, 2),
+         dt.datetime(2020, 1, 2, 3, 4, 5, 6), True),
+        ("a\\b", -(2**40), float("nan"), Decimal("12345678901234567890.12"), b"",
+         dt.date(1969, 12, 31), dt.datetime(1960, 5, 6), False),
+        ("x", 7, float("inf"), None, None, None, None, None),
+        (None, None, 1e300, Decimal("0.00"), b"a", dt.date(2020, 1, 2),
+         dt.datetime(2020, 1, 2, 3, 4, 5, 6), None),
+    ]
+    names = ["s.t", "i", "d", "dec", "b", "dt", "ts", "we`ird"]
+    df = spark.createDataFrame(
+        rows, "`s.t` string, i long, d double, dec decimal(38,2), b binary, "
+        "dt date, ts timestamp, `we``ird` boolean",
+    )
+
+    def eq(x, v):
+        if x is None or v is None:
+            return None
+        if isinstance(x, float) and math.isnan(x):
+            return isinstance(v, float) and math.isnan(v)  # Spark: NaN = NaN
+        return x == v
+
+    def ev(p, r):
+        op = p[0]
+        if op == "and":
+            vals = [ev(c, r) for c in p[1:]]
+            return False if False in vals else (None if None in vals else True)
+        if op == "or":
+            vals = [ev(c, r) for c in p[1:]]
+            return True if True in vals else (None if None in vals else False)
+        if op == "not":
+            v = ev(p[1], r)
+            return None if v is None else not v
+        x = r[names.index(p[1])]
+        if op == "is_null":
+            return x is None
+        if op == "=":
+            return eq(x, p[2])
+        if op == "in":
+            hits = [eq(x, v) for v in p[2]]
+            return True if True in hits else (None if None in hits else False)
+        if x is None:
+            return None
+        if op == ">=":
+            return x >= p[2] or (isinstance(x, float) and math.isnan(x))
+        if op == "between":
+            return p[2] <= x <= p[3]
+        raise AssertionError(op)
+
+    preds = [
+        ("=", "s.t", "it's"), ("=", "s.t", "a\\b"), ("in", "s.t", ["x", "y", None]),
+        ("=", "i", -(2**40)), ("between", "i", 0, 10), ("not", ("=", "i", 7)),
+        ("=", "d", float("nan")), ("=", "d", float("inf")), (">=", "d", 1e300),
+        ("=", "dec", Decimal("-1.5")), ("=", "dec", Decimal("12345678901234567890.12")),
+        ("=", "b", b"\x00\xff"), ("=", "b", b""),
+        ("=", "dt", dt.date(1969, 12, 31)), ("=", "ts", dt.datetime(2020, 1, 2, 3, 4, 5, 6)),
+        ("=", "ts", dt.datetime(1960, 5, 6)), ("=", "we`ird", True), ("is_null", "we`ird"),
+        ("or", ("=", "we`ird", False), ("and", ("is_null", "dec"), ("not", ("is_null", "s.t")))),
+    ]
+    for p in preds:
+        got = sorted(r["i"] or 0 for r in df.filter(F.expr(to_sql(p))).collect())
+        want = sorted(r[1] or 0 for r in rows if ev(p, r) is True)
+        assert got == want, (p, to_sql(p))
