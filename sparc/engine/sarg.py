@@ -257,9 +257,6 @@ def keep(
     return is_needed(evaluate(pred, column_stats, probes))
 
 
-_SQL_CMP = {"=": "=", "<": "<", "<=": "<=", ">": ">", ">=": ">="}
-
-
 def _sql_literal(v) -> str:
     """``v`` as a Spark SQL literal of the type ``F.lit(v)`` gives it."""
     import datetime as dt
@@ -305,8 +302,8 @@ def to_sql(pred: tuple) -> str:
     col = "`" + pred[1].replace("`", "``") + "`"
     if op == "is_null":
         return f"{col} IS NULL"
-    if op in _SQL_CMP:
-        return f"{col} {_SQL_CMP[op]} {_sql_literal(pred[2])}"
+    if op in ("=", "<", "<=", ">", ">="):
+        return f"{col} {op} {_sql_literal(pred[2])}"
     if op == "in":
         return f"{col} IN ({', '.join(_sql_literal(v) for v in pred[2])})"
     if op == "between":
