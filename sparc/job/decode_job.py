@@ -168,6 +168,16 @@ def _decode_unit(
     return stripe_mod.decode_stripe(streams, footer, row_groups=row_groups)
 
 
+def _micros(t: pa.Table) -> pa.Table:
+    """``t`` with its timestamp columns in microseconds, the one unit
+    Spark takes from Arrow (nanoseconds are truncated)."""
+    for i, f in enumerate(t.schema):
+        if pa.types.is_timestamp(f.type) and f.type.unit != "us":
+            us = t.column(i).cast(pa.timestamp("us", f.type.tz), safe=False)
+            t = t.set_column(i, f.name, us)
+    return t
+
+
 def _decode_units_factory(
     streams_dir: str, columns: list[str] | None, verify_crc: bool, map_fn=None
 ):
@@ -182,7 +192,9 @@ def _decode_units_factory(
             units = zip(b.column("footer").to_pylist(), b.column("row_groups").to_pylist())
             for blob, groups in units:
                 out = _decode_unit(streams_dir, json.loads(blob), groups, columns, verify_crc)
-                if map_fn is not None:
+                if map_fn is None:
+                    out = _micros(out)
+                else:
                     # compute-near-data: only the transform's (usually
                     # tiny) result crosses the Python->JVM boundary
                     out = map_fn(out)
@@ -301,7 +313,7 @@ def run_decode(
     plan = plan_read(streams_dir, pred, columns, rowgroup_prune)
     if map_fn is None and plan.counters["path"] == "driver":
         tables = [
-            _decode_unit(streams_dir, json.loads(blob), groups, columns, verify_crc)
+            _micros(_decode_unit(streams_dir, json.loads(blob), groups, columns, verify_crc))
             for blob, groups in plan.units
         ]
         # one partition: an aggregate over it needs no exchange

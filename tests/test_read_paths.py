@@ -148,6 +148,32 @@ def test_timestamps_agree_under_a_non_utc_session_zone(spark, streams_dir, monke
     assert got["driver"][0][2] == "2024-03-01 04:00:00"  # PST is UTC-8
 
 
+def test_non_microsecond_timestamps_on_both_paths(spark, tmp_path, monkeypatch):
+    """Spark holds timestamps in microseconds: nanosecond columns, zoned
+    or not, come back truncated to them and millisecond ones widened, on
+    both paths."""
+    ns = [1_700_000_000_123_456_789 + i * 1_001 for i in range(1_000)]
+    src = str(tmp_path / "src.parquet")
+    pq.write_table(pa.table({
+        "id": pa.array(range(1_000), pa.int64()),
+        "ns": pa.array(ns, pa.timestamp("ns")),
+        "ns_utc": pa.array(ns, pa.timestamp("ns", "UTC")),
+        "ms": pa.array([v // 1_000_000 for v in ns], pa.timestamp("ms")),
+    }), src)
+    d = str(tmp_path / "streams")
+    encode_job.run_encode_paths(spark, src, d, target_rows_per_stripe=500)
+    got = {}
+    for path, budget in (("driver", 1 << 60), ("task", 0)):
+        monkeypatch.setattr(decode_job, "DRIVER_DECODE_BYTES", budget)
+        df = decode_job.run_decode(spark, d).select(
+            "id", *[F.unix_micros(c) for c in ("ns", "ns_utc", "ms")]
+        )
+        got[path] = sorted(tuple(r) for r in df.collect())
+    assert got["driver"] == got["task"]
+    assert got["task"] == [(i, v // 1_000, v // 1_000, v // 1_000_000 * 1_000)
+                           for i, v in enumerate(ns)]
+
+
 def test_bit_flip_raises_on_both_paths(spark, streams_dir, tmp_path, monkeypatch):
     """verify_crc checks the streams each path decodes: a flipped byte in
     a decoded stream raises on the driver path and in the task."""
