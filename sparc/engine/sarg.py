@@ -1,4 +1,4 @@
-"""SearchArgument-style composite predicates over stripe/rowgroup stats.
+"""SearchArgument-style composite predicates over stripe, row-group and row stats.
 
 The engine-side analog of the reference's three-level predicate pruning
 driver (SURVEY.md §2.7): an expression tree of AND / OR / NOT over leaf
@@ -27,11 +27,24 @@ evaluation):
 Any type mismatch, missing statistic, or un-normalizable probe degrades
 to CANNOT_SKIP ({'Y','N','U'}), the tri-state "cannot skip" semantics
 ADVICE.md called for — pruning may only ever be a no-op, never wrong.
+
+One tree drives all three of the reference's levels: stripes and row
+groups through :func:`keep` on their statistics (and blooms), rows
+through :func:`row_mask` on a decoded table, which drops a row exactly
+when :func:`evaluate` refutes that row's own statistics.  The decoded
+rows then meet the same tree once more as a Catalyst filter
+(:func:`to_sql`), which stays the authority on row semantics.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 from decimal import Decimal
+from fractions import Fraction
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from . import stats as stats_mod
 
@@ -77,6 +90,34 @@ def or_(a: frozenset, b: frozenset) -> frozenset:
     return frozenset(_or3(x, y) for x in a for y in b)
 
 
+# stats ticks per second of the timestamp units a datetime literal maps
+# to.  Nanoseconds are left out: Spark truncates them to microseconds, so a
+# nanosecond comparison could refute a row Spark's filter keeps.
+_TICKS = {"s": 1, "ms": 1_000, "us": 1_000_000}
+_EPOCH = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+
+
+def _temporal(probe: dt.date, unit: str | None):
+    """A ``datetime`` / ``date`` literal in the stats domain of a column
+    whose ``unit`` (``footer_stats``) is a timestamp unit / ``"day"``:
+    epoch ticks, a ``Fraction`` when the literal falls between ticks.  A
+    naive datetime is local time, as ``_sql_literal`` (and pyspark) read
+    it.  TypeError for any other pairing."""
+    if isinstance(probe, dt.datetime):
+        if unit not in _TICKS:
+            raise TypeError(f"datetime literal vs {unit} stats")
+        try:
+            d = probe.astimezone(dt.timezone.utc) - _EPOCH
+        except (OverflowError, ValueError) as e:
+            raise TypeError(f"datetime literal {probe} out of range") from e
+        us = (d.days * 86_400 + d.seconds) * 1_000_000 + d.microseconds
+        q = Fraction(us * _TICKS[unit], 1_000_000)
+        return q.numerator if q.denominator == 1 else q
+    if unit != "day":
+        raise TypeError(f"date literal vs {unit} stats")
+    return (probe - dt.date(1970, 1, 1)).days
+
+
 def _normalize(probe, lo, hi, stats: dict):
     """Coerce (probe, min, max) into one comparable domain, or raise
     TypeError when no safe comparison exists.  Returned min may be ""
@@ -86,6 +127,8 @@ def _normalize(probe, lo, hi, stats: dict):
         # strict: an invalid-UTF-8 probe has no sound ordering vs string
         # stats; UnicodeDecodeError -> CANNOT_SKIP via the caller
         probe = probe.decode("utf-8")
+    if isinstance(probe, dt.date):
+        probe = _temporal(probe, stats.get("unit"))
     if isinstance(lo, Decimal):
         # decimal bounds compare exactly with int and finite Decimal
         # literals.  A float literal cannot skip: Spark's residual filter
@@ -101,7 +144,7 @@ def _normalize(probe, lo, hi, stats: dict):
     if isinstance(lo, (int, float)) and isinstance(hi, (int, float)):
         if isinstance(probe, str):
             probe = float(probe)  # ValueError -> caught by caller
-        if not isinstance(probe, (int, float)):
+        if not isinstance(probe, (int, float, Fraction)):
             raise TypeError(f"probe {type(probe)} vs numeric stats")
         return probe, lo, hi
     if isinstance(lo, str) and isinstance(hi, str):
@@ -257,9 +300,227 @@ def keep(
     return is_needed(evaluate(pred, column_stats, probes))
 
 
+# -- row level ----------------------------------------------------------------
+#
+# A TruthValue per row is three boolean masks (Y, N, U possible), combined
+# with the same Kleene tables as the sets above.  A leaf sees one column's
+# non-null values as a *domain*: the values as ``footer_stats`` would store
+# them for a one-row region (``_values``) and the representative bound
+# ``_normalize`` needs to coerce the literal into that domain once.
+
+
+def _full(tv: frozenset, n: int) -> tuple:
+    return tuple(np.full(n, x in tv) for x in "YNU")
+
+
+def _and_rows(a: tuple, b: tuple) -> tuple:
+    (ya, na, ua), (yb, nb, ub) = a, b
+    return ya & yb, na | nb, (ua & (yb | ub)) | (ub & (ya | ua))
+
+
+def _or_rows(a: tuple, b: tuple) -> tuple:
+    (ya, na, ua), (yb, nb, ub) = a, b
+    return ya | yb, na & nb, (ua & (ub | nb)) | (ub & (ua | na))
+
+
+_I64_MIN, _I64_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def _cmp_int(v: np.ndarray, q) -> tuple:
+    """(v < q, v == q, v > q) of int64 (or object int) values against an
+    int, float or Fraction, exactly as Python compares them."""
+    n = len(v)
+    if isinstance(q, float) and not np.isfinite(q):  # NaN: both False
+        return np.full(n, q > 0), np.zeros(n, bool), np.full(n, q < 0)
+    q = Fraction(q)
+    fl = q.numerator // q.denominator
+    ce = -(-q.numerator // q.denominator)
+    no = np.zeros(n, bool)
+    if v.dtype == object:  # Python ints: no range to clamp to
+        return v < ce, v == fl if fl == ce else no, v > fl
+    # v < q  <=>  v < ceil(q);  v > q  <=>  v > floor(q);  clamped to int64
+    lt = np.full(n, True) if ce > _I64_MAX else v < max(ce, _I64_MIN)
+    gt = np.full(n, True) if fl < _I64_MIN else v > min(fl, _I64_MAX)
+    eq = v == fl if fl == ce and _I64_MIN <= fl <= _I64_MAX else no
+    return lt, eq, gt
+
+
+def _cmp_float(v: np.ndarray, p) -> tuple:
+    """(v < p, v == p, v > p) of float64 values against an int or float,
+    exactly as Python compares them (NaN is unordered)."""
+    if isinstance(p, int):
+        try:
+            f = float(p)
+        except OverflowError:
+            f = float("inf") if p > 0 else float("-inf")
+        if f > p:  # no float lies strictly between p and f
+            return v < f, np.zeros(len(v), bool), v >= f
+        if f < p:
+            return v <= f, np.zeros(len(v), bool), v > f
+        p = f
+    return v < p, v == p, v > p
+
+
+def _values(arr: pa.Array):
+    """``(values, representative bound, stats for _normalize)`` of a
+    non-null column in the stats domain ``footer_stats`` gives it, or
+    None when it has none (binary and nested columns)."""
+    from . import stripe
+
+    t = arr.type
+    if pa.types.is_integer(t) or pa.types.is_date32(t):
+        unit = {"unit": "day"} if pa.types.is_date32(t) else {}
+        return stripe._arrow_nonnull_int64(arr), 0, unit
+    if pa.types.is_timestamp(t):
+        return stripe._arrow_nonnull_int64(arr), 0, {"unit": t.unit}
+    if pa.types.is_decimal128(t):
+        if t.precision <= 18:
+            v = stripe._decimal_unscaled_int64(arr)
+        else:
+            lo, hi = stripe._decimal_unscaled_words(arr)
+            v = (hi.astype(object) << 64) + lo.astype(object)
+        return v, Decimal(0), {}
+    if pa.types.is_floating(t):
+        return arr.to_numpy(zero_copy_only=False).astype(np.float64), 0.0, {}
+    if pa.types.is_boolean(t):
+        return arr.to_numpy(zero_copy_only=False), False, {}
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return arr, "", {"min_trunc": False, "max_trunc": False}
+    return None
+
+
+def _truthy(v) -> np.ndarray:
+    """``bool(min)`` of each value's one-row stats: the domain a bool
+    literal (or a bool column) moves a comparison to."""
+    if isinstance(v, pa.Array):
+        return pc.binary_length(v).to_numpy(zero_copy_only=False) > 0
+    return v if v.dtype == bool else v != 0
+
+
+def _cmp(v, t: pa.DataType, p) -> tuple:
+    """``((lo <, ==, >), (hi <, ==, >))`` of each value's one-row stats
+    bounds against the normalized literal ``p``.  They differ only for a
+    string whose stored bound is lossy (``stats._truncate``): its min is
+    unbounded below ("") and its max unknown (every test false)."""
+    if isinstance(p, bool):
+        b = _truthy(v)
+        c = (b < p, b == p, b > p)
+        return c, c
+    if isinstance(v, pa.Array):
+        c = tuple(
+            f(v, p).to_numpy(zero_copy_only=False)
+            for f in (pc.less, pc.equal, pc.greater)
+        )
+        lossy = pc.or_(
+            pc.greater(pc.binary_length(v), stats_mod.STRING_STAT_TRUNCATE),
+            pc.match_substring(v, "\ufffd"),
+        ).to_numpy(zero_copy_only=False)
+        if not lossy.any():
+            return c, c
+        lo = tuple(np.where(lossy, x, y) for x, y in zip((p != "", p == "", False), c))
+        return lo, tuple(y & ~lossy for y in c)
+    if pa.types.is_decimal(t):  # unscaled values: scale the literal
+        p = Fraction(p) * 10**t.scale
+    c = _cmp_float(v, p) if v.dtype == np.float64 else _cmp_int(v, p)
+    return c, c
+
+
+def _leaf_outcome(pred: tuple, v, t: pa.DataType, rep, st: dict) -> tuple:
+    """(definitely YES, definitely NO) per non-null value: ``_eval_leaf``
+    over a one-row region whose min = max = the value."""
+    op = pred[0]
+    n = len(v)
+    if op == "in":
+        probes = [_normalize(x, rep, rep, st)[0] for x in pred[2]]
+        if len({isinstance(p, bool) for p in probes}) > 1:
+            raise TypeError("bool and non-bool literals in one IN list")
+        no, hit = np.full(n, True), np.zeros(n, bool)
+        for p in probes:
+            (_, lo_eq, lo_gt), (hi_lt, hi_eq, _) = _cmp(v, t, p)
+            no &= lo_gt | hi_lt
+            hit |= lo_eq & hi_eq
+        return hit & ~no, no
+    if op == "between":
+        p_lo = _normalize(pred[2], rep, rep, st)[0]
+        p_hi = _normalize(pred[3], rep, rep, st)[0]
+        if isinstance(p_lo, bool) != isinstance(p_hi, bool):
+            raise TypeError("bool and non-bool BETWEEN bounds")
+        (_, a_eq, a_gt), (a_lt, _, _) = _cmp(v, t, p_lo)
+        (_, _, b_gt), (b_lt, b_eq, _) = _cmp(v, t, p_hi)
+        no = a_lt | b_gt
+        return ~no & (a_gt | a_eq) & (b_lt | b_eq), no
+    p = _normalize(pred[2], rep, rep, st)[0]
+    (_, lo_eq, lo_gt), (hi_lt, hi_eq, _) = _cmp(v, t, p)
+    if op == "=":
+        no = lo_gt | hi_lt
+        return lo_eq & hi_eq & ~no, no
+    yes, no = {
+        "<": (hi_lt, lo_gt | lo_eq),
+        "<=": (hi_lt | hi_eq, lo_gt),
+        ">": (lo_gt, hi_lt | hi_eq),
+        ">=": (lo_gt | lo_eq, hi_lt),
+    }[op]
+    return yes, no & ~yes
+
+
+def _leaf_rows(pred: tuple, table: pa.Table) -> tuple:
+    from .stripe import as_array
+
+    n = table.num_rows
+    if pred[1] not in table.column_names:
+        return _full(CANNOT_SKIP, n)
+    arr = as_array(table.column(pred[1]))
+    null = np.zeros(n, bool)
+    if arr.null_count:
+        null = arr.is_null().to_numpy(zero_copy_only=False)
+    if pred[0] == "is_null":
+        return null, ~null, np.zeros(n, bool)
+    if pred[0] not in ("=", "<", "<=", ">", ">=", "in", "between"):
+        raise ValueError(f"unknown predicate op {pred[0]!r}")
+    nn = arr.drop_null() if arr.null_count else arr
+    try:
+        dom = _values(nn)
+        if dom is None:
+            raise TypeError(f"no stats domain for {arr.type}")
+        yes, no = _leaf_outcome(pred, dom[0], nn.type, dom[1], dom[2])
+        cannot = False
+    except (TypeError, ValueError):
+        yes = no = np.zeros(len(nn), bool)
+        cannot = True  # CANNOT_SKIP
+    # a comparison over a null value is null (IS_NULL), whatever the domain
+    y, no_, u = np.zeros(n, bool), np.zeros(n, bool), null.copy()
+    y[~null], no_[~null], u[~null] = ~no, ~yes, cannot
+    return y, no_, u
+
+
+def _rows(pred: tuple, table: pa.Table) -> tuple:
+    op = pred[0]
+    if op in ("and", "or"):
+        acc, combine = (
+            (_full(YES, table.num_rows), _and_rows) if op == "and"
+            else (_full(NO, table.num_rows), _or_rows)
+        )
+        for child in pred[1:]:
+            acc = combine(acc, _rows(child, table))
+        return acc
+    if op == "not":
+        y, n, u = _rows(pred[1], table)
+        return n, y, u
+    return _leaf_rows(pred, table)
+
+
+def row_mask(pred: tuple, table: pa.Table) -> np.ndarray:
+    """Keep-mask of a decoded table's rows: the row-level pruning layer.
+    A row is dropped exactly when :func:`evaluate` refutes the statistics
+    of a region holding that row alone (min = max = its value, its null
+    count), so the three levels prune by one rule.  Columns the table
+    lacks, binary and nested columns, and literals that do not normalize
+    against a column keep their non-null rows."""
+    return _rows(pred, table)[0]
+
+
 def _sql_literal(v) -> str:
     """``v`` as a Spark SQL literal of the type ``F.lit(v)`` gives it."""
-    import datetime as dt
     import math
 
     if v is None:
@@ -290,10 +551,10 @@ def to_sql(pred: tuple) -> str:
     (``FilterFactory.createSArgFilter`` FilterFactory.java:111-159): the
     SAME tree drives stripe pruning, row-group pruning, and the residual
     row filter.  Comparisons use Spark semantics on the decoded column
-    types, so literals must be comparable to the column (e.g. a timestamp
-    column compares against a py-datetime literal, while the stats
-    domain uses raw integers — pass the appropriate form at each
-    level)."""
+    types, so literals must be comparable to the column: e.g. a timestamp
+    column compares against a py-datetime literal, which the pruning
+    levels map into their raw-tick statistics (``_temporal``; a
+    nanosecond column is not pruned on one)."""
     op = pred[0]
     if op in ("and", "or"):
         return f" {op.upper()} ".join(f"({to_sql(c)})" for c in pred[1:])

@@ -1048,7 +1048,9 @@ def footer_stats(footer: dict, group: int | None) -> dict[str, dict]:
     columns' stripe statistics (``group`` None) or row group ``group``'s.
     The footer keeps decimal bounds unscaled; here they become ``Decimal``
     values at the column's scale, so int and Decimal literals compare
-    with them exactly."""
+    with them exactly.  Timestamp and date32 stats gain the ``unit`` of
+    their ticks (``"us"``, ..., ``"day"``), which maps ``datetime`` and
+    ``date`` literals into them."""
     out = {}
     for c in footer["columns"]:
         if group is None:
@@ -1064,6 +1066,9 @@ def footer_stats(footer: dict, group: int | None) -> dict[str, dict]:
                 min=stats_mod._scaled(st["min"], c["scale"]),
                 max=stats_mod._scaled(st["max"], c["scale"]),
             )
+        unit = c.get("ts_unit") or ("day" if c.get("arrow_type") == "date32[day]" else None)
+        if unit is not None:
+            st = dict(st, unit=unit)
         out[c["name"]] = st
     return out
 

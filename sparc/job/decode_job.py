@@ -1,10 +1,12 @@
 """The decode job: stripe files + footer manifest → DataFrame.
 
-Every read is planned in the driver by :func:`plan_read`: it pyarrow-reads
-the manifest's footers, prunes stripes on their statistics and row groups
-on theirs and on the predicate columns' bloom filters (byte-range reads of
-those streams only).  The plan is one unit per kept stripe: its footer
-blob and its kept row groups.
+Every read is planned in the driver by :func:`plan_read`: it reads the
+manifest's footers (parsed once per part file, :func:`_footers`), prunes
+stripes on their statistics and row groups on theirs and on the predicate
+columns' bloom filters (byte-range reads of those streams only).  The plan
+is one unit per kept stripe: its footer blob and its kept row groups.
+Decoding a unit prunes its rows last (``sarg.row_mask``), so the rows a
+read hands to Spark are the ones the predicate cannot refute row by row.
 
 A read whose kept units decode to little data (:data:`DRIVER_DECODE_BYTES`)
 and that has no ``map_fn`` decodes them in the driver and returns them as
@@ -18,7 +20,9 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import zlib
+from collections import OrderedDict
 from collections.abc import Iterator
 from typing import NamedTuple
 
@@ -40,6 +44,40 @@ from .encode_job import STREAMS_SCHEMA
 # Wall crosses near 18 MB and user CPU near 28 MB; the budget sits below.
 DRIVER_DECODE_BYTES = 16 << 20
 _BLOOM = "BLOOM_FILTER_UTF8"
+
+# Parsed manifest parts, least recently used first: (path, inode, size,
+# mtime, ctime) -> the part's FOOTER rows as (blob, parsed footer).  A
+# rewritten or replaced part has another key, so a read never sees stale
+# footers; nothing mutates a cached footer.
+_PARTS: OrderedDict = OrderedDict()
+_PARTS_MAX = 128
+_PARTS_LOCK = threading.Lock()
+
+
+def _footers(path: str) -> list[tuple[bytes, dict]]:
+    """The FOOTER rows of one manifest part, read and parsed on the first
+    call for this version of the file and cached after."""
+    import pyarrow.parquet as pq
+
+    with open(path, "rb") as f:
+        st = os.fstat(f.fileno())
+        key = (path, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+        with _PARTS_LOCK:
+            rows = _PARTS.get(key)
+            if rows is not None:
+                _PARTS.move_to_end(key)
+                return rows
+        t = pq.read_table(f, columns=["kind", "data"], use_threads=False)
+    rows = [
+        (blob, json.loads(blob))
+        for kind, blob in zip(t["kind"].to_pylist(), t["data"].to_pylist())
+        if kind == "FOOTER"
+    ]
+    with _PARTS_LOCK:
+        _PARTS[key] = rows
+        if len(_PARTS) > _PARTS_MAX:
+            _PARTS.popitem(last=False)
+    return rows
 
 
 def _stripe_path(footer: dict, streams_dir: str) -> str:
@@ -101,8 +139,6 @@ def plan_read(
     bytes, which choose the path."""
     import time
 
-    import pyarrow.parquet as pq
-
     t0 = time.perf_counter()
     c = dict.fromkeys((
         "stripes", "stripes_refuted_by_stats", "rowgroups", "rowgroups_refuted_by_stats",
@@ -111,11 +147,7 @@ def plan_read(
     pred_cols = sarg_mod.columns_of(predicate) if predicate is not None else set()
     units = []
     for path in _manifest_paths(streams_dir):
-        t = pq.read_table(path, columns=["kind", "data"], use_threads=False)
-        for kind, blob in zip(t["kind"].to_pylist(), t["data"].to_pylist()):
-            if kind != "FOOTER":
-                continue
-            footer = json.loads(blob)
+        for blob, footer in _footers(path):
             ri = next((m["row_index"] for m in footer["columns"] if m.get("row_index")), None)
             n = len(ri) if ri else 1
             c["stripes"] += 1
@@ -143,11 +175,13 @@ def plan_read(
 
 
 def _decode_unit(
-    streams_dir: str, footer: dict, row_groups, columns: list[str] | None, verify_crc: bool
+    streams_dir: str, footer: dict, row_groups, columns: list[str] | None, verify_crc: bool,
+    predicate: tuple | None = None,
 ) -> pa.Table:
     """Decode one kept stripe: mmap its file, slice the projected columns'
     stream spans (projection decides which byte ranges are ever touched),
-    check their CRCs, decode the kept row groups."""
+    check their CRCs, decode the kept row groups and keep the rows
+    ``predicate`` (None: all) cannot refute (``sarg.row_mask``)."""
     import mmap
 
     with open(_stripe_path(footer, streams_dir), "rb") as f:
@@ -165,7 +199,12 @@ def _decode_unit(
                 raise ValueError(f"stripe {footer['stripe_id']}: crc mismatch on {cname}/{kind}")
     if columns:
         footer = dict(footer, columns=[m for m in footer["columns"] if m["name"] in columns])
-    return stripe_mod.decode_stripe(streams, footer, row_groups=row_groups)
+    out = stripe_mod.decode_stripe(streams, footer, row_groups=row_groups)
+    if predicate is not None:
+        keep = sarg_mod.row_mask(predicate, out)
+        if not keep.all():
+            out = out.filter(pa.array(keep))
+    return out
 
 
 def _micros(t: pa.Table) -> pa.Table:
@@ -179,10 +218,12 @@ def _micros(t: pa.Table) -> pa.Table:
 
 
 def _decode_units_factory(
-    streams_dir: str, columns: list[str] | None, verify_crc: bool, map_fn=None
+    streams_dir: str, columns: list[str] | None, verify_crc: bool, map_fn=None,
+    predicate: tuple | None = None,
 ):
     """mapInArrow function over a DataFrame of the planner's units
-    (``footer binary, row_groups array<int>``)."""
+    (``footer binary, row_groups array<int>``); a unit none of whose rows
+    survive ``predicate``'s row mask yields nothing."""
 
     def decode_units(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from .. import runtime
@@ -191,7 +232,11 @@ def _decode_units_factory(
         for b in batches:
             units = zip(b.column("footer").to_pylist(), b.column("row_groups").to_pylist())
             for blob, groups in units:
-                out = _decode_unit(streams_dir, json.loads(blob), groups, columns, verify_crc)
+                out = _decode_unit(
+                    streams_dir, json.loads(blob), groups, columns, verify_crc, predicate
+                )
+                if not out.num_rows:
+                    continue
                 if map_fn is None:
                     out = _micros(out)
                 else:
@@ -239,7 +284,7 @@ def run_decode(
     decodes them in the driver and returns an Arrow ``LocalTableScan``;
     every other read is one ``mapInArrow`` stage of at most
     ``n_partitions`` (default: ``defaultParallelism``) tasks over the kept
-    units.  Both return the same rows.
+    units.  Both return the same rows, pruned by the same row mask.
 
     ``map_fn`` (with ``map_schema``, a DDL string describing its output)
     runs a vectorized compute-near-data transform ``pa.Table -> pa.Table``
@@ -254,11 +299,15 @@ def run_decode(
     It accepts either the legacy ``(column, lo, hi)`` range tuple or a
     full composite predicate tree (see ``sparc.engine.sarg``):
     ``("and", ("between", "ts", a, b), ("not", ("is_null", "url")))``.
-    Pruning alone returns a superset of matching rows; ``row_filter=True``
-    additionally compiles the SAME tree to a Catalyst row filter on the
-    decoded output (the reference's three filter levels from one
-    SearchArgument — requires every predicate column in the decoded
-    schema and literals comparable to the decoded types).
+    When every predicate column is decoded (and ``rowgroup_prune`` is on),
+    pruning is row-granular: each decoded unit keeps only the rows whose
+    own statistics the tree cannot refute (``sarg.row_mask``), before
+    they reach ``map_fn`` or Spark.  Otherwise it keeps whole row groups.
+    Either way pruning returns a superset of the matching rows;
+    ``row_filter=True`` additionally compiles the SAME tree to a Catalyst
+    row filter on the decoded output (the reference's three filter levels
+    from one SearchArgument — requires every predicate column in the
+    decoded schema and literals comparable to the decoded types).
 
     ``cast_to={column: spark_type_ddl}`` is the per-column conversion
     surface (SURVEY.md §2.8): reader-schema conversions are Catalyst
@@ -311,9 +360,16 @@ def run_decode(
     if schema_ddl is None:
         schema_ddl = _schema_ddl_from_footer(sample, columns)
     plan = plan_read(streams_dir, pred, columns, rowgroup_prune)
+    row_pred = None
+    if pred is not None and rowgroup_prune and (
+        not columns or sarg_mod.columns_of(pred) <= set(columns)
+    ):
+        row_pred = pred
     if map_fn is None and plan.counters["path"] == "driver":
         tables = [
-            _micros(_decode_unit(streams_dir, json.loads(blob), groups, columns, verify_crc))
+            _micros(_decode_unit(
+                streams_dir, json.loads(blob), groups, columns, verify_crc, row_pred
+            ))
             for blob, groups in plan.units
         ]
         # one partition: an aggregate over it needs no exchange
@@ -335,7 +391,7 @@ def run_decode(
             # honours the requested task count (LocalTableScanExec alone
             # caps at defaultParallelism)
             units_df = units_df.repartition(n_parts)
-        fn = _decode_units_factory(streams_dir, columns, verify_crc, map_fn)
+        fn = _decode_units_factory(streams_dir, columns, verify_crc, map_fn, row_pred)
         out = units_df.mapInArrow(fn, schema=part_mod.struct_of(schema_ddl))
     if cast_to:
         out = out.select(
@@ -534,17 +590,13 @@ def _ddl_type(col_meta: dict) -> str:
 
 
 def _sample_footer(streams_dir: str) -> dict:
-    """One parsed FOOTER row, pyarrow-read from the first manifest part
-    that has one (planner-scale metadata: schema inference reads only
-    this).  Uncached: a dir rewritten with another schema is seen at once,
-    and the read costs well under a millisecond."""
-    import pyarrow.parquet as pq
-
+    """The first FOOTER row of the first manifest part that has one
+    (planner-scale metadata: schema inference reads only this), through
+    the part cache: a dir rewritten with another schema is seen at once."""
     for p in _manifest_paths(streams_dir):
-        t = pq.read_table(p, columns=["kind", "data"], use_threads=False)
-        kinds = t["kind"].to_pylist()
-        if "FOOTER" in kinds:
-            footer = json.loads(t["data"][kinds.index("FOOTER")].as_py())
+        rows = _footers(p)
+        if rows:
+            footer = rows[0][1]
             _stripe_path(footer, streams_dir)  # refuse inline-blob manifests
             return footer
     raise ValueError(f"no FOOTER rows in {streams_dir}")

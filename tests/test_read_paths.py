@@ -3,25 +3,29 @@
 ``plan_read`` prunes in the driver; a read whose kept units hold at most
 ``DRIVER_DECODE_BYTES`` decodes in the driver and returns a
 ``LocalTableScan``, every other read runs one ``mapInArrow`` job over the
-units.  Every option runs through both paths here (the budget patched to
-cover everything, then to 0) and must return the same rows."""
+units.  Both paths prune the decoded rows with the same row mask.  Every
+option runs through both paths here (the budget patched to cover
+everything, then to 0) and must return the same rows."""
 
 from __future__ import annotations
 
 import datetime as dt
 import json
 import os
+import re
 import shutil
 import time
 from decimal import Decimal
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from sparc.engine import stripe
 from sparc.job import decode_job, encode_job, manifest
+from sparc.job import partition as part_mod
 
 N = 3_072
 T0 = dt.datetime(2024, 3, 1, 12, 0, 0)
@@ -79,6 +83,8 @@ def _both(spark, d, monkeypatch, **kw) -> list[str]:
 
 
 URL = "https://h05.example/p5"
+T_LO = dt.datetime(2024, 3, 1, 12, 5, tzinfo=dt.timezone.utc)
+T_HI = T_LO + dt.timedelta(seconds=40)
 OPTIONS = {
     "plain": {},
     "columns": {"columns": ["meta", "url"]},
@@ -87,12 +93,45 @@ OPTIONS = {
     "range_tuple": {"stripe_filter": ("id", 100, 900)},
     "no_rowgroup_prune": {"stripe_filter": ("<", "id", 300), "rowgroup_prune": False},
     "row_filter": {"stripe_filter": ("=", "url", URL), "row_filter": True},
+    "datetime_literal": {"stripe_filter": ("between", "ts", T_LO, T_HI), "row_filter": True},
     "cast_to": {"cast_to": {"id": "string", "dec": "double"}},
     "reader_schema": {"reader_schema": "ID long, Url string, missing int"},
     "positional": {"reader_schema": "a long, b string", "positional": True},
     "n_partitions": {"n_partitions": 7},
     "verify_crc": {"verify_crc": True, "stripe_filter": (">", "id", 2_000)},
 }
+
+
+def _oracle_ids(pred: tuple) -> list[int]:
+    """ids of the source rows ``pred`` matches, by pyarrow (the predicates
+    here use int, url and UTC-datetime literals on the naive ts column)."""
+    t = _table()
+    ts = t["ts"].cast(pa.int64())
+
+    def us(v):
+        return (v - dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)) // dt.timedelta(
+            microseconds=1)
+
+    def ev(p):
+        op, col = p[0], p[1]
+        if op in ("and", "or"):
+            f = pc.and_kleene if op == "and" else pc.or_kleene
+            out = ev(p[1])
+            for c in p[2:]:
+                out = f(out, ev(c))
+            return out
+        if op == "not":
+            return pc.invert(ev(p[1]))
+        if op == "is_null":
+            return pc.is_null(t[col])
+        arr, lits = (ts, [us(v) for v in p[2:]]) if col == "ts" else (t[col], list(p[2:]))
+        if op == "between":
+            return pc.and_kleene(pc.greater_equal(arr, lits[0]), pc.less_equal(arr, lits[1]))
+        fn = {"=": pc.equal, "<": pc.less, "<=": pc.less_equal,
+              ">": pc.greater, ">=": pc.greater_equal}[op]
+        return fn(arr, lits[0])
+
+    return t.filter(ev(pred))["id"].to_pylist()
 
 
 @pytest.mark.parametrize("name", sorted(OPTIONS))
@@ -103,10 +142,53 @@ def test_paths_return_the_same_rows(spark, streams_dir, monkeypatch, name):
         assert len(rows) == 1 and URL in rows[0]
     if name == "plain":
         assert len(rows) == N
+    pred = OPTIONS[name].get("stripe_filter")
+    if pred is not None and OPTIONS[name].get("rowgroup_prune", True):
+        # row-granular pruning: exactly the matching rows, filter or not
+        ids = sorted(int(re.search(r"\bid=(\d+)", r).group(1)) for r in rows)
+        assert ids == _oracle_ids(decode_job._as_predicate(pred)), pred
+
+
+def test_driver_path_hands_spark_only_the_matching_rows(spark, streams_dir, monkeypatch):
+    """A url lookup on the driver path gives ``createDataFrame`` the one
+    matching row, not its kept row group."""
+    seen = []
+    real = part_mod.local_frame
+
+    def capture(spark_, rows, ddl):
+        seen.append(rows)
+        return real(spark_, rows, ddl)
+
+    monkeypatch.setattr(part_mod, "local_frame", capture)
+    monkeypatch.setattr(decode_job, "DRIVER_DECODE_BYTES", 1 << 60)
+    df = decode_job.run_decode(spark, streams_dir, stripe_filter=("=", "url", URL))
+    (table,) = seen
+    assert table["url"].to_pylist() == [URL]
+    assert df.count() == 1
+    pred = ("between", "ts", T_LO, T_HI)
+    seen.clear()
+    decode_job.run_decode(spark, streams_dir, stripe_filter=pred)
+    assert seen[0]["id"].to_pylist() == _oracle_ids(pred)
+
+
+@pytest.mark.parametrize("budget", [1 << 60, 0])
+def test_row_pruning_needs_rowgroup_prune_and_the_predicate_columns(
+    spark, streams_dir, monkeypatch, budget
+):
+    """``rowgroup_prune=False``, or a projection without a predicate
+    column, returns the kept stripes' / row groups' every row."""
+    monkeypatch.setattr(decode_job, "DRIVER_DECODE_BYTES", budget)
+    pred = ("<", "id", 10)
+    assert decode_job.run_decode(spark, streams_dir, stripe_filter=pred).count() == 10
+    whole = decode_job.run_decode(spark, streams_dir, stripe_filter=pred, rowgroup_prune=False)
+    assert whole.count() == 1_024  # the one kept stripe
+    group = decode_job.run_decode(spark, streams_dir, columns=["url"], stripe_filter=pred)
+    assert group.count() == 256  # the one kept row group
 
 
 def test_map_fn_runs_on_the_task_path(spark, streams_dir):
-    """A map_fn read runs the job whatever the kept size."""
+    """A map_fn read runs the job whatever the kept size, on the rows the
+    row mask keeps."""
     def count(t):
         return pa.table({"n": pa.array([t.num_rows], pa.int64())})
 
@@ -114,7 +196,7 @@ def test_map_fn_runs_on_the_task_path(spark, streams_dir):
         spark, streams_dir, count, "n long", stripe_filter=("<", "id", 10)
     )
     assert "MapInArrow" in _plan(df)
-    assert df.agg(F.sum("n")).first()[0] == 256  # the one kept row group
+    assert df.agg(F.sum("n")).first()[0] == 10  # the matching rows of the kept group
 
 
 def test_empty_result_on_both_paths(spark, streams_dir, monkeypatch):
@@ -207,6 +289,81 @@ def test_refuted_stripe_file_is_never_opened(spark, streams_dir, tmp_path, monke
         os.remove(os.path.join(d, rel))
     rows = _both(spark, d, monkeypatch, stripe_filter=pred, row_filter=True)
     assert len(rows) == 500
+
+
+def test_parsed_parts_are_cached_until_a_part_changes(streams_dir, tmp_path, monkeypatch):
+    """Planning reads each manifest part once; a replaced or deleted part
+    is seen by the next read."""
+    d = str(tmp_path / "cached")
+    shutil.copytree(streams_dir, d)
+    parts = manifest.paths(d)
+    real = pq.read_table
+    footers = {p: real(p).num_rows for p in parts}
+    reads = []
+    monkeypatch.setattr(pq, "read_table", lambda *a, **k: reads.append(a) or real(*a, **k))
+    assert decode_job.plan_read(d).counters["stripes"] == 3
+    assert len(reads) == len(parts)
+    reads.clear()
+    assert decode_job.plan_read(d, ("=", "url", URL)).counters["stripes"] == 3
+    assert decode_job.infer_schema_ddl(None, d)
+    assert reads == []
+    # replace the last part by one that lists only its first footer
+    tmp = os.path.join(d, ".replacement")
+    pq.write_table(real(parts[-1]).slice(0, 1), tmp, compression="none", store_schema=False)
+    os.replace(tmp, parts[-1])
+    footers[parts[-1]] = 1
+    assert decode_job.plan_read(d).counters["stripes"] == sum(footers.values())
+    assert len(reads) == 1  # the replacement; the other parts come cached
+    reads.clear()
+    os.remove(parts[0])
+    del footers[parts[0]]
+    assert decode_job.plan_read(d).counters["stripes"] == sum(footers.values())
+    assert reads == []
+
+
+def test_part_cache_under_concurrent_readers(streams_dir, tmp_path, monkeypatch):
+    """Eight threads read nine parts through a cache of two entries:
+    every read returns its own part's footers and the cache keeps its
+    bound."""
+    import sys
+    import threading
+    from collections import OrderedDict
+
+    parts = []
+    for i in range(3):
+        shutil.copytree(streams_dir, str(tmp_path / f"c{i}"))
+        parts += manifest.paths(str(tmp_path / f"c{i}"))
+    want = {}
+    for p in parts:
+        t = pq.read_table(p)
+        want[p] = t.filter(pc.equal(t["kind"], "FOOTER"))["stripe_id"].to_pylist()
+    monkeypatch.setattr(decode_job, "_PARTS", OrderedDict())
+    monkeypatch.setattr(decode_job, "_PARTS_MAX", 2)
+    errors = []
+
+    def reader(k: int) -> None:
+        try:
+            for i in range(150):
+                p = parts[(k + i // 2) % len(parts)]  # twice each: a hit unless evicted
+                got = [f["stripe_id"] for _, f in decode_job._footers(p)]
+                if got != want[p]:
+                    errors.append((p, got))
+        except Exception as e:  # reported below, with the thread's part
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=reader, args=(k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(decode_job._PARTS) <= 2
 
 
 def test_plan_counters(streams_dir, monkeypatch):

@@ -199,8 +199,10 @@ def test_rowgroup_prune_never_loses_rows_on_range(spark, tmp_path):
             "percentile(timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', warc_ts), 0.6)"
         ).alias("hi"),
     ).collect()[0]
-    lo = int(bounds["lo"]) * 10**6  # seconds -> micros for the stats domain
-    hi = int(bounds["hi"]) * 10**6
+    # the whole seconds lo..hi in the microsecond stats domain: pruning is
+    # row-granular, so the tree must cover every row the row filter keeps
+    lo = int(bounds["lo"]) * 10**6
+    hi = int(bounds["hi"]) * 10**6 + 999_999
     pred = ("between", "warc_ts", lo, hi)
     decoded = decode_job.run_decode(spark, out, stripe_filter=pred)
     dec_secs = F.expr(
