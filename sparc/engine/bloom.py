@@ -33,7 +33,7 @@ import struct
 import numpy as np
 import pyarrow as pa
 
-from .stripe import _is_binary_like
+from .stripe import _is_binary_like, non_null
 
 DEFAULT_FPP = 0.01  # OrcConf.BLOOM_FILTER_FPP (orc.bloom.filter.fpp)
 
@@ -137,9 +137,7 @@ def hash64(arr: pa.Array) -> np.ndarray:
     """Murmur3.hash64 of every non-null value of a string or binary
     array, as int64.  Values are taken longest first, so each 8-byte
     block round runs over a prefix of the still-active values."""
-    if arr.null_count:
-        arr = arr.drop_null()
-    arr = arr.cast(pa.large_binary())
+    arr = non_null(arr).cast(pa.large_binary())
     n = len(arr)
     _, off_buf, data_buf = arr.buffers()
     offs = np.frombuffer(off_buf, np.int64, n + 1, arr.offset * 8)

@@ -346,7 +346,7 @@ def _encode_leaf(
     else:
         cum = np.concatenate(([0], np.cumsum(valid.astype(np.int64))))
         voffs = cum[row_offs].tolist()
-    nn = arr.drop_null() if arr.null_count else arr
+    nn = stripe_mod.non_null(arr)
 
     def vs(g: int) -> slice:
         return slice(voffs[g], voffs[g + 1])

@@ -464,7 +464,7 @@ def _leaf_outcome(pred: tuple, v, t: pa.DataType, rep, st: dict) -> tuple:
 
 
 def _leaf_rows(pred: tuple, table: pa.Table) -> tuple:
-    from .stripe import as_array
+    from .stripe import as_array, non_null
 
     n = table.num_rows
     if pred[1] not in table.column_names:
@@ -477,7 +477,7 @@ def _leaf_rows(pred: tuple, table: pa.Table) -> tuple:
         return null, ~null, np.zeros(n, bool)
     if pred[0] not in ("=", "<", "<=", ">", ">=", "in", "between"):
         raise ValueError(f"unknown predicate op {pred[0]!r}")
-    nn = arr.drop_null() if arr.null_count else arr
+    nn = non_null(arr)
     try:
         dom = _values(nn)
         if dom is None:

@@ -413,7 +413,7 @@ def of_array(arr: pa.Array, bounds: list[tuple[int, int]]) -> Windows:
     groups are ``bounds``, back to back from row 0.  Nested nodes keep
     counts only."""
     from .orcfile import _decimal_words
-    from .stripe import _arrow_nonnull_int64, _is_binary_like
+    from .stripe import _arrow_nonnull_int64, _is_binary_like, non_null
 
     t = arr.type
     rows = np.array([lo for lo, _ in bounds] + [bounds[-1][1]], np.int64)
@@ -422,7 +422,6 @@ def of_array(arr: pa.Array, bounds: list[tuple[int, int]]) -> Windows:
         valid = arr.is_valid().to_numpy(zero_copy_only=False)
         voffs = np.concatenate(([0], np.cumsum(valid, dtype=np.int64)))[rows]
     nulls = np.diff(rows) - np.diff(voffs)
-    nn = arr.drop_null() if arr.null_count else arr
     if pa.types.is_nested(t):
         return Windows("struct", voffs, nulls, None)
     if pa.types.is_integer(t) or pa.types.is_date32(t):
@@ -430,15 +429,16 @@ def of_array(arr: pa.Array, bounds: list[tuple[int, int]]) -> Windows:
     if pa.types.is_timestamp(t):
         return int_stats(_arrow_nonnull_int64(arr), voffs, nulls, "timestamp")
     if pa.types.is_floating(t):
-        vals = nn.to_numpy(zero_copy_only=False).astype(np.float64)
+        vals = non_null(arr).to_numpy(zero_copy_only=False).astype(np.float64)
         return float_stats(vals, voffs, nulls)
     if _is_binary_like(t):
         is_str = pa.types.is_string(t) or pa.types.is_large_string(t)
         return string_stats(
-            nn.cast(pa.large_binary()), voffs, nulls, "string" if is_str else "binary"
+            non_null(arr).cast(pa.large_binary()), voffs, nulls,
+            "string" if is_str else "binary",
         )
     if pa.types.is_boolean(t):
-        return bool_stats(nn.to_numpy(zero_copy_only=False), voffs, nulls)
+        return bool_stats(non_null(arr).to_numpy(zero_copy_only=False), voffs, nulls)
     if pa.types.is_decimal(t):
         return decimal128_stats(*_decimal_words(arr), voffs, nulls)
     raise NotImplementedError(f"orcfile: unsupported type {t}")

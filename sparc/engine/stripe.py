@@ -109,6 +109,27 @@ def as_array(arr: pa.Array | pa.ChunkedArray) -> pa.Array:
     return arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
 
 
+def non_null(arr: pa.Array) -> pa.Array:
+    """``arr`` without its null slots.  A string or binary array whose
+    null slots hold no bytes shares ``arr``'s data buffer under rebuilt
+    offsets; ``drop_null`` would copy the whole payload.  Any other array,
+    or one whose null slots hold bytes, is copied."""
+    if not arr.null_count:
+        return arr
+    if not _is_binary_like(arr.type):
+        return arr.drop_null()
+    _, off_buf, data = arr.buffers()
+    off_t = np.int64 if arr.type in (pa.large_string(), pa.large_binary()) else np.int32
+    offs = np.frombuffer(off_buf, off_t, len(arr) + 1, arr.offset * off_t().itemsize)
+    valid = arr.is_valid().to_numpy(zero_copy_only=False)
+    starts = offs[:-1]
+    if (offs[1:][~valid] != starts[~valid]).any():
+        return arr.drop_null()
+    # every null slot is empty, so the kept values stay back to back
+    kept = np.append(starts[valid], offs[-1]).astype(off_t)
+    return pa.Array.from_buffers(arr.type, len(kept) - 1, [None, pa.py_buffer(kept), data])
+
+
 # ---------------------------------------------------------------------------
 # encode
 # ---------------------------------------------------------------------------
@@ -344,8 +365,7 @@ def _encode_binary_like(enc: _ColumnEncoder, fsst_opt: bool | None) -> None:
     arr, meta = enc.arr, enc.meta
     t = arr.type
     is_str = pa.types.is_string(t) or pa.types.is_large_string(t)
-    nn = arr.drop_null() if arr.null_count else arr
-    bin_arr = nn.cast(pa.large_binary())
+    bin_arr = non_null(arr).cast(pa.large_binary())
     lengths = pa.compute.binary_length(bin_arr).to_numpy(zero_copy_only=False).astype(np.int64)
     n_nonnull = len(bin_arr)
     windows = stats_mod.string_stats(

@@ -171,6 +171,24 @@ def test_binary_with_nulls():
     _roundtrip(pa.table({"b": pa.array(vals, pa.binary())}))
 
 
+@pytest.mark.parametrize("t", [pa.string(), pa.large_binary()])
+def test_non_null_shares_the_data_buffer_of_empty_null_slots(t):
+    arr = pa.array(["ab", None, "", "cde", None, "f"] * 3, t).slice(2, 14)
+    nn = stripe.non_null(arr)
+    assert nn.buffers()[2].address == arr.buffers()[2].address
+    assert nn.to_pylist() == [v for v in arr.to_pylist() if v is not None]
+
+
+def test_non_null_copies_when_a_null_slot_holds_bytes():
+    # offsets 0,1,3,4 with slot 1 null: the null slot spans "bc"
+    offs = np.array([0, 1, 3, 4], np.int32)
+    valid = pa.py_buffer(np.packbits([1, 0, 1], bitorder="little"))
+    arr = pa.Array.from_buffers(
+        pa.string(), 3, [valid, pa.py_buffer(offs), pa.py_buffer(b"abcd")], null_count=1
+    )
+    assert stripe.non_null(arr).to_pylist() == ["a", "d"]
+
+
 def test_binary_never_dictionary():
     # BinaryTreeWriter is always DIRECT in the reference — even a
     # low-cardinality binary column must not build a dictionary (and the
