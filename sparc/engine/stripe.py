@@ -1080,7 +1080,10 @@ def footer_stats(footer: dict, group: int | None) -> dict[str, dict]:
             st = ri[group]["stats"] if ri and group < len(ri) else None
         if st is None:
             continue
-        if st.get("kind") == "decimal" and st.get("min") is not None:
+        if c.get("encoding") in ("list", "map"):
+            # their int stats bound the LENGTH stream, not the values
+            st = {"n_nulls": st["n_nulls"]}
+        elif st.get("kind") == "decimal" and st.get("min") is not None:
             st = dict(
                 st,
                 min=stats_mod._scaled(st["min"], c["scale"]),

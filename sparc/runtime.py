@@ -29,6 +29,7 @@ _MADV_POPULATE_WRITE = 23
 _PAGE = 4096
 
 _initialized_bytes = 0
+_tuned = False  # mallopt and jemalloc decay set in this process
 
 
 def _libc() -> ctypes.CDLL | None:
@@ -130,23 +131,27 @@ def init(warm_bytes: int | None = None) -> int:
     SPARC_WARM_HEAP_BYTES).  Returns the number of bytes warmed.
     Idempotent: repeated calls only grow the warm size.
     """
-    global _initialized_bytes
+    global _initialized_bytes, _tuned
     if warm_bytes is None:
         warm_bytes = int(os.environ.get("SPARC_WARM_HEAP_BYTES", 0))
+    if _tuned and warm_bytes <= _initialized_bytes:
+        return _initialized_bytes
     libc = _libc()
     if libc is None:
         return 0
-    if _initialized_bytes == 0:
+    if not _tuned:
+        _tuned = True
         libc.mallopt(_M_MMAP_THRESHOLD, 1 << 30)
         libc.mallopt(_M_TRIM_THRESHOLD, 1 << 30)
-        # Route Arrow buffers through the tuned glibc pool too: pyarrow's
-        # default jemalloc pool purges freed pages back to the OS on its
-        # own decay schedule, which re-faults them on every batch — the
-        # same first-touch cost the mallopt thresholds avoid for numpy.
+        # The thresholds cover glibc's heap, which numpy allocates from.
+        # Arrow buffers come from pyarrow's default pool (jemalloc), whose
+        # arenas return freed pages to the OS on a decay timer; a decay
+        # of -1 stops that purge, though the arenas still take fresh
+        # pages for each new large buffer.
         try:
             import pyarrow as _pa
 
-            _pa.jemalloc_set_decay_ms(-1)  # never purge jemalloc arenas
+            _pa.jemalloc_set_decay_ms(-1)
         except Exception:
             pass
     if warm_bytes <= _initialized_bytes:

@@ -80,6 +80,24 @@ def test_pick_row_groups_prunes_with_stats():
     assert stripe.pick_row_groups(footer, (">=", "v", -1)) is None
 
 
+def test_list_and_map_columns_prune_on_nulls_only():
+    """A list or map column's statistics bound its lengths, not its
+    values: comparisons keep every group, ``is_null`` still prunes."""
+    lens = [0, 1, 2, 3]  # group g's lists all hold g elements
+    lists = [list(range(g)) for g in lens for _ in range(16)]
+    maps = [[(str(k), k) for k in range(g)] for g in lens for _ in range(16)]
+    lists[0] = maps[0] = None  # group 0 alone holds nulls
+    t = pa.table({
+        "tags": pa.array(lists, pa.list_(pa.int64())),
+        "kv": pa.array(maps, pa.map_(pa.string(), pa.int64())),
+    })
+    _, footer = stripe.encode_stripe(t, row_index_stride=16)
+    for col in ("tags", "kv"):
+        assert stripe.pick_row_groups(footer, ("=", col, 2)) is None
+        assert sarg.keep(("=", col, 99), stripe.footer_stats(footer, None))
+        assert stripe.pick_row_groups(footer, ("is_null", col)) == [0]
+
+
 def test_rowgroup_bloom_refutes_within_range():
     """Per-row-group blooms refute equality probes that min/max cannot:
     even values only, probed with an in-range odd value."""

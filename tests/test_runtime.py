@@ -141,3 +141,19 @@ def test_symlinked_sparkhome_prefix_respects_path_boundary(symlinked_runtime):
         os.makedirs(sibling)
         sib_zip = os.path.join(sibling, "lib.zip")
         assert _invalidation_kept(sib_zip, f"mod_s{i}a.py", f"mod_s{i}b.py")
+
+
+def test_init_tunes_malloc_once(monkeypatch):
+    calls = []
+
+    class FakeLibc:
+        def mallopt(self, param, value):
+            calls.append(param)
+
+    monkeypatch.setattr(runtime, "_libc", FakeLibc)
+    monkeypatch.setattr(runtime, "_tuned", False)
+    monkeypatch.setattr(runtime, "_initialized_bytes", 0)
+    runtime.init(0)
+    assert len(calls) == 2
+    runtime.init(0)
+    assert len(calls) == 2
