@@ -11,8 +11,10 @@ the strongest available oracle that the kernel wire formats match the
 ORC spec bit-for-bit — far stronger than self round-trips.
 
 Scope (deliberately minimal — an oracle, not the product sink):
-- compression NONE / ZLIB / SNAPPY / ZSTD (the reference's
-  3-byte-header chunk framing, store-original-if-bigger)
+- compression NONE / ZLIB / SNAPPY / ZSTD: every stream, stripe footer,
+  metadata and footer in ``block``'s chunk framing (the reference's
+  3-byte headers, store-original-if-bigger) at the reference's 256 KiB
+  ``compressionBlockSize``
 - file versions 0.12 (RLEv2) and legacy 0.11 (RLEv1)
 - leaf types: int32/int64, double/float, string (dict or direct),
   binary, bool, date32, timestamp[us] (writerTimezone UTC; both file
@@ -50,66 +52,8 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
-from ..kernels import bitfield, dictionary, rlev1, rlev2
+from ..kernels import bitfield, block, dictionary, rlev1, rlev2
 from . import bloom as bloom_mod, stats as stats_mod, stripe as stripe_mod
-
-# --- ORC compressed-stream framing ------------------------------------------
-#
-# With a compression kind set, EVERY stream plus the stripe footers and
-# the file footer/metadata are chunked with the reference's 3-byte header
-# (``OutStream.writeHeader`` OutStream.java:186-189: little-endian
-# ``compressedLength << 1 | isOriginal``), store-original-if-bigger per
-# chunk.  ORC ZLIB is raw DEFLATE (no zlib wrapper).
-
-_ORC_CHUNK = 256 * 1024  # orc.compress.size default
-
-
-def _deflate(data: bytes) -> bytes:
-    import zlib
-
-    c = zlib.compressobj(6, zlib.DEFLATED, -15)  # raw deflate
-    return c.compress(data) + c.flush()
-
-
-def _compress_one(chunk: bytes, kind: str) -> bytes:
-    if kind == "ZLIB":
-        return _deflate(chunk)
-    # pyarrow one-shot codecs match the reference's raw in-chunk formats:
-    # snappy embeds the uncompressed length as a leading varint, zstd's
-    # single-shot frame header records the content size
-    return bytes(pa.Codec(kind.lower()).compress(chunk))
-
-
-def _compress_chunked(
-    data: bytes, kind: str
-) -> tuple[bytes, np.ndarray, np.ndarray]:
-    """``data`` in the chunk framing of ``kind``, with the (uncompressed,
-    compressed) start offsets of every chunk — needed to translate an
-    uncompressed stream offset into the (block start, offset in block)
-    pair a compressed InStream.seek consumes."""
-    if kind == "NONE" or not data:
-        return data, np.array([0], np.int64), np.array([0], np.int64)
-    out = bytearray()
-    u_starts, c_starts = [], []
-    for pos in range(0, len(data), _ORC_CHUNK):
-        u_starts.append(pos)
-        c_starts.append(len(out))
-        chunk = bytes(data[pos : pos + _ORC_CHUNK])
-        comp = _compress_one(chunk, kind)
-        if len(comp) < len(chunk):
-            head = len(comp) << 1
-            body = comp
-        else:
-            head = (len(chunk) << 1) | 1
-            body = chunk
-        out += bytes([head & 0xFF, (head >> 8) & 0xFF, (head >> 16) & 0xFF])
-        out += body
-    return bytes(out), np.array(u_starts, np.int64), np.array(c_starts, np.int64)
-
-
-def _orc_compress(data: bytes, kind: str) -> bytes:
-    return _compress_chunked(data, kind)[0]
-
 
 # --- protobuf primitives ----------------------------------------------------
 
@@ -149,7 +93,6 @@ _KIND = {
 _STREAM_PRESENT, _STREAM_DATA, _STREAM_LENGTH, _STREAM_DICT = 0, 1, 2, 3
 _STREAM_SECONDARY, _STREAM_ROW_INDEX = 5, 6
 _ENC_DIRECT, _ENC_DICT, _ENC_DIRECT_V2, _ENC_DICT_V2 = 0, 1, 2, 3
-_COMPRESSION = {"NONE": 0, "ZLIB": 1, "SNAPPY": 2, "LZ4": 4, "ZSTD": 5}
 
 DICT_THRESHOLD = 0.8  # orc.dictionary.key.threshold
 
@@ -629,6 +572,12 @@ def write_orc(
     v11 = version == "0.11"
     if compression not in ("NONE", "ZLIB", "SNAPPY", "ZSTD"):
         raise NotImplementedError(f"orcfile: compression {compression}")
+    codec = compression.lower()
+    level = 1 if codec == "zstd" else None  # pyarrow's default zstd level
+
+    def wrap(data) -> bytes:
+        return block.compress(data, codec, level, block.ORC_CHUNK_SIZE)
+
     if row_index_stride and row_index_stride % 8:
         raise ValueError("row_index_stride must be a multiple of 8")
     if rows_per_stripe < 1:
@@ -709,7 +658,7 @@ def write_orc(
             root_ri = _row_index_pb(
                 [([], _root_stats(hi - b_lo)) for b_lo, hi in bounds[g_lo:g_hi]]
             )
-            wrapped = _orc_compress(root_ri, compression)
+            wrapped = wrap(root_ri)
             index_meta.append((_STREAM_ROW_INDEX, 0, len(wrapped)))
             index += wrapped
         for cid, streams, _, group_stats, _, _ in walked:
@@ -720,21 +669,17 @@ def write_orc(
             # - one bitfield per stripe + marks (PRESENT / BOOLEAN
             #   DATA): one continuous stream, positions carry the real
             #   (chunk offset, used-in-run, bits) coder state.
-            built = []  # (kind, extras, bytes, offsets-or-chunkmaps, marks)
+            built = []  # (kind, extras, bytes, offsets-or-chunk-starts, marks)
             for kind, extras, blobs, marks in streams:
                 if marks is None and blobs[g_lo] is not None:
-                    pieces = [
-                        _orc_compress(b, compression) for b in blobs[g_lo:g_hi]
-                    ]
+                    pieces = [wrap(b) for b in blobs[g_lo:g_hi]]
                     offs = np.concatenate(([0], np.cumsum([len(p) for p in pieces])))
                     built.append((kind, extras, b"".join(pieces), offs[:-1], None))
                 elif marks is not None and blobs[s_i] is not None:
-                    wrapped, u_starts, c_starts = _compress_chunked(
-                        blobs[s_i], compression
+                    wrapped, c_starts = block.frame(
+                        blobs[s_i], codec, level, block.ORC_CHUNK_SIZE
                     )
-                    built.append(
-                        (kind, extras, wrapped, (u_starts, c_starts), marks[s_i])
-                    )
+                    built.append((kind, extras, wrapped, c_starts, marks[s_i]))
             for kind, _, payload, _, _ in built:
                 data_meta.append((kind, cid, len(payload)))
                 data += payload
@@ -754,19 +699,17 @@ def write_orc(
                     if compression == "NONE":
                         positions.extend([off, used, bits])
                         continue
-                    u_starts, c_starts = offs
-                    ci = int(np.searchsorted(u_starts, off, "right")) - 1
+                    # the chunk holding raw offset ``off``, and off in it
+                    ci = min(off // block.ORC_CHUNK_SIZE, len(offs) - 1)
                     positions.extend(
-                        [int(c_starts[ci]), off - int(u_starts[ci]), used, bits]
+                        [offs[ci], off - ci * block.ORC_CHUNK_SIZE, used, bits]
                     )
                 entries.append((positions, group_stats[g_lo + g]))
-            ri = _orc_compress(_row_index_pb(entries), compression)
+            ri = wrap(_row_index_pb(entries))
             index_meta.append((_STREAM_ROW_INDEX, cid, len(ri)))
             index += ri
             if cid in bloom_filters:
-                bs = _orc_compress(
-                    bloom_mod.pack_multi(bloom_filters[cid][g_lo:g_hi]), compression
-                )
+                bs = wrap(bloom_mod.pack_multi(bloom_filters[cid][g_lo:g_hi]))
                 index_meta.append((8, cid, len(bs)))  # BLOOM_FILTER_UTF8
                 index += bs
         out += index
@@ -780,7 +723,7 @@ def write_orc(
         for _cid, _streams, encs, *_ in walked:
             sf += _f_bytes(2, encs[s_i])
         sf += _f_bytes(3, b"UTC")
-        sf_wrapped = _orc_compress(bytes(sf), compression)
+        sf_wrapped = wrap(bytes(sf))
         out += sf_wrapped
         stripe_infos.append(
             (stripe_offset, len(index), len(data), len(sf_wrapped), n_rows)
@@ -801,7 +744,7 @@ def write_orc(
         )
         for s_i, info in enumerate(stripe_infos)
     )
-    metadata_wrapped = _orc_compress(meta_pb, compression)
+    metadata_wrapped = wrap(meta_pb)
     out += metadata_wrapped
 
     # Footer
@@ -833,15 +776,15 @@ def write_orc(
     for *_, file_st in walked:
         footer += _f_bytes(7, file_st)
     footer += _f_varint(8, row_index_stride)
-    footer_wrapped = _orc_compress(bytes(footer), compression)
+    footer_wrapped = wrap(bytes(footer))
     out += footer_wrapped
 
     # PostScript
     ps = bytearray()
     ps += _f_varint(1, len(footer_wrapped))
-    ps += _f_varint(2, _COMPRESSION[compression])
+    ps += _f_varint(2, block.CODECS[codec])
     if compression != "NONE":
-        ps += _f_varint(3, _ORC_CHUNK)  # compressionBlockSize
+        ps += _f_varint(3, block.ORC_CHUNK_SIZE)  # compressionBlockSize
     ps += _f_packed(4, [0, 11] if v11 else [0, 12])  # file version
     ps += _f_varint(5, len(metadata_wrapped))  # metadataLength
     # writerVersion 9 = ORC_14, orc-core 2.2's CURRENT_WRITER: the reader

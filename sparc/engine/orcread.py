@@ -5,7 +5,8 @@ decoders reconstruct it.  Together with ``orcfile`` (our writer → their
 readers) this closes the loop on wire-format conformance.
 
 Scope (an oracle, not the product read path): compression NONE / ZLIB /
-SNAPPY / ZSTD, schemas of int8..int64, date32, double/float,
+SNAPPY / ZSTD, whose chunks ``block`` inflates (the same framing engine
+stripes use), schemas of int8..int64, date32, double/float,
 bool, nested list / map / struct / union to any depth (recursive
 type-tree walk), string (DIRECT / DICTIONARY v1 *and* DIRECT_V2 / DICTIONARY_V2 —
 the ColumnEncoding kind selects RLEv1 vs RLEv2 per stream, mirroring
@@ -37,12 +38,10 @@ Tail layout per ``ReaderImpl.extractPostScript/extractFileTail``
 
 from __future__ import annotations
 
-import zlib as _zlib
-
 import numpy as np
 import pyarrow as pa
 
-from ..kernels import bitfield, byterle, rlev1, rlev2
+from ..kernels import bitfield, block, byterle, rlev1, rlev2
 from . import bloom as bloom_mod, stats as stats_mod, stripe as stripe_mod
 
 # --- minimal protobuf parser ------------------------------------------------
@@ -100,67 +99,9 @@ def _packed_varints(raw) -> list[int]:
     return out
 
 
-# --- compressed-stream inflation --------------------------------------------
-
-_KINDS = {0: "NONE", 1: "ZLIB", 2: "SNAPPY", 3: "LZO", 4: "LZ4", 5: "ZSTD"}
-
-
-def _inflate(data: bytes | memoryview, kind: str) -> bytes:
-    if kind == "NONE":
-        return bytes(data)
-    mv = memoryview(data)
-    out = bytearray()
-    pos = 0
-    while pos < len(mv):
-        chunk, pos = _inflate_chunk(mv, pos, kind)
-        out += chunk
-    return bytes(out)
-
-
-def _inflate_chunk(mv: memoryview, pos: int, kind: str) -> tuple:
-    """The uncompressed bytes of the chunk whose 3-byte header is at
-    ``pos``, and the next chunk's start."""
-    head = int.from_bytes(mv[pos : pos + 3], "little")
-    clen, original = head >> 1, head & 1
-    chunk = mv[pos + 3 : pos + 3 + clen]
-    end = pos + 3 + clen
-    if original:
-        return chunk, end
-    if kind == "ZLIB":
-        return _zlib.decompress(bytes(chunk), -15), end  # raw deflate
-    if kind == "SNAPPY":
-        # raw snappy embeds the uncompressed length as a leading varint
-        size, _ = _varint(chunk, 0)
-        return pa.Codec("snappy").decompress(bytes(chunk), size), end
-    if kind == "ZSTD":
-        return pa.Codec("zstd").decompress(
-            bytes(chunk), _zstd_content_size(chunk)
-        ), end
-    raise NotImplementedError(f"orcread: codec {kind}")
-
-
-def _zstd_content_size(chunk) -> int:
-    """Frame-header content size (the reference's one-shot ZSTD_compress
-    always records it)."""
-    mv = memoryview(chunk)
-    assert int.from_bytes(mv[0:4], "little") == 0xFD2FB528, "not a zstd frame"
-    fhd = mv[4]
-    fcs_flag = fhd >> 6
-    single_segment = (fhd >> 5) & 1
-    did_size = (0, 1, 2, 4)[fhd & 3]
-    pos = 5 + (0 if single_segment else 1) + did_size
-    if fcs_flag == 0:
-        if not single_segment:
-            raise ValueError("zstd frame without content size")
-        return mv[pos]
-    if fcs_flag == 1:
-        return int.from_bytes(mv[pos : pos + 2], "little") + 256
-    if fcs_flag == 2:
-        return int.from_bytes(mv[pos : pos + 4], "little")
-    return int.from_bytes(mv[pos : pos + 8], "little")
-
-
 # --- ORC enums ---------------------------------------------------------------
+
+_KINDS = {v: k for k, v in block.CODECS.items()}  # CompressionKind -> codec
 
 _TYPE_KINDS = {
     0: "boolean", 1: "byte", 2: "short", 3: "int", 4: "long", 5: "float",
@@ -192,11 +133,15 @@ def _tail(data: bytes, path: str) -> tuple[dict, str, dict]:
         if [bytes(m) for m in ps.get(8000, [])] != [b"ORC"]:
             raise ValueError("no ORC magic in field 8000")
         footer_len = ps[1][0]
-        kind = _KINDS[ps.get(2, [0])[0]]
+        kind = _KINDS.get(ps.get(2, [0])[0])
+        if kind is None:
+            raise NotImplementedError(f"orcread: compression kind {ps[2][0]}")
         section = "footer"
         if 1 + ps_len + footer_len > len(data):
             raise ValueError(f"{footer_len} bytes run past the file start")
-        footer = _parse_pb(_inflate(data[-1 - ps_len - footer_len : -1 - ps_len], kind))
+        footer = _parse_pb(
+            block.decompress(data[-1 - ps_len - footer_len : -1 - ps_len], kind)
+        )
         if 4 not in footer:
             raise ValueError("no types")
     except NotImplementedError:
@@ -229,7 +174,7 @@ def _stripe_directory(
     file order): stream payloads are laid out sequentially from the
     stripe start."""
     foot = st["offset"] + st["index_len"] + st["data_len"]
-    sf = _parse_pb(_inflate(data[foot : foot + st["footer_len"]], kind))
+    sf = _parse_pb(block.decompress(data[foot : foot + st["footer_len"]], kind))
     mv = memoryview(data)
     pos = st["offset"]
     streams = []
@@ -272,7 +217,7 @@ def read_orc(path: str) -> pa.Table:
         per_col: dict[int, dict[str, bytes]] = {}
         for skind, col, stored in streams:
             if skind not in _INDEX_KINDS:
-                per_col.setdefault(col, {})[skind] = _inflate(stored, kind)
+                per_col.setdefault(col, {})[skind] = block.decompress(stored, kind)
         src = _StripeStreams(
             types, [_parse_pb(x) for x in sf.get(2, [])], _writer_tz(sf), per_col
         )
@@ -656,10 +601,10 @@ class _Stream:
         self._chunks: dict[int, tuple] = {}
 
     def _chunk(self, c: int) -> tuple:
-        if self.kind == "NONE":
+        if self.kind == "none":
             return self.stored, len(self.stored)
         if c not in self._chunks:
-            self._chunks[c] = _inflate_chunk(self.stored, c, self.kind)
+            self._chunks[c] = block.inflate_chunk(self.stored, c, self.kind)
         return self._chunks[c]
 
     def read(self, start: tuple[int, int], end=None, extra: int = 0) -> memoryview:
@@ -729,7 +674,7 @@ class _GroupStreams(_StripeStreams):
                 if _stripe_level(skind, enc_kind):
                     continue
                 coder = _stream_coder(tk, skind, enc_kind)
-                width = (1 if self.kind == "NONE" else 2) + (
+                width = (1 if self.kind == "none" else 2) + (
                     2 if coder == "bits" else 0 if coder == "raw" else 1
                 )
                 p = pos[at : at + width]
@@ -738,7 +683,7 @@ class _GroupStreams(_StripeStreams):
                     raise ValueError(
                         f"orcread: row-index entry {g} of column {tid} is short"
                     )
-                if self.kind == "NONE":
+                if self.kind == "none":
                     p = [0, *p]  # the offset is into the stream's one chunk
                 used = p[2] if len(p) > 2 else 0
                 bits = p[3] if len(p) > 3 else 0
@@ -806,7 +751,7 @@ def _read_row_groups(
         row_index: dict[int, list[list[int]]] = {}
         for skind, col, blob in streams:
             if skind == "ROW_INDEX":
-                ri = _parse_pb(_inflate(blob, kind))
+                ri = _parse_pb(block.decompress(blob, kind))
                 entries = []
                 for e in ri.get(1, []):
                     epb = _parse_pb(e)
@@ -864,7 +809,7 @@ def read_orc_statistics(
     meta_len = ps.get(5, [0])[0]
     if meta_len:
         meta_end = len(data) - 1 - data[-1] - ps[1][0]
-        meta = _parse_pb(_inflate(data[meta_end - meta_len : meta_end], kind))
+        meta = _parse_pb(block.decompress(data[meta_end - meta_len : meta_end], kind))
         for ss in meta.get(1, []):
             stripe_stats.append(
                 [stats_mod.from_pb(_parse_pb(c)) for c in _parse_pb(ss).get(1, [])]
@@ -902,7 +847,7 @@ def read_orc_filtered(
     stripe_level_stats: list[list[dict]] = []
     if meta_len:
         meta_end = len(data) - 1 - data[-1] - ps[1][0]
-        meta = _parse_pb(_inflate(data[meta_end - meta_len : meta_end], kind))
+        meta = _parse_pb(block.decompress(data[meta_end - meta_len : meta_end], kind))
         for ss in meta.get(1, []):
             cols_pb = _parse_pb(ss).get(1, [])
             stripe_level_stats.append(
@@ -940,7 +885,7 @@ def read_orc_filtered(
         entry_blooms: dict[str, tuple] = {}
         for skind, col, blob in streams:
             if skind == "ROW_INDEX" and col in pred_cols.values():
-                ri = _parse_pb(_inflate(blob, kind))
+                ri = _parse_pb(block.decompress(blob, kind))
                 name = names[subtypes.index(col)]
                 stats = []
                 for e in ri.get(1, []):
@@ -954,7 +899,7 @@ def read_orc_filtered(
                 # refute =/IN probes the min/max stats cannot; literals
                 # hash as the ORC type's tree writer hashed its values (a
                 # long column read back as timestamp_ntz added longs)
-                filters = bloom_mod.unpack_multi(_inflate(blob, kind), n_gr)
+                filters = bloom_mod.unpack_multi(block.decompress(blob, kind), n_gr)
                 if filters is not None:
                     tk = _TYPE_KINDS[types[col].get(1, [0])[0]]
                     bt = _INT_WIDTH.get(tk) or _arrow_type_of(types, col)

@@ -30,9 +30,11 @@ a reader can evaluate a predicate against the per-group stats
 decompress + decode ONLY the selected groups (``seekToRow`` analog —
 segment boundaries play the role of stream seek positions).
 
-Every stream then passes the block-codec layer (§2.5).  The per-stripe
-footer is a JSON-able dict: encodings chosen, per-stream sizes, column
-statistics — the engine's self-describing metadata + metrics checkpoint.
+Every stream then passes the block-codec layer (§2.5), ORC's chunk
+framing in 4 MiB chunks.  The per-stripe footer is a JSON-able dict:
+format generation (:data:`FORMAT`), encodings chosen, per-stream sizes,
+column statistics — the engine's self-describing metadata + metrics
+checkpoint.
 """
 
 from __future__ import annotations
@@ -41,7 +43,12 @@ import numpy as np
 import pyarrow as pa
 
 from ..kernels import bitfield, block, dictionary, fsst, rlev2
+from ..kernels.block import SparcFormatError
 from . import stats as stats_mod
+
+# stripe format generation, in every footer: 2 = streams in ORC's 3-byte
+# chunk framing (generation 1, unrecorded, had an 8-byte header)
+FORMAT = 2
 
 # seconds between unix epoch and 2015-01-01 00:00:00 UTC — the reference's
 # BASE_TIMESTAMP_STRING epoch (TimestampTreeWriter)
@@ -687,7 +694,7 @@ def encode_stripe(
     runtime.init()
     t_start = time.perf_counter()
     streams: dict[tuple[str, str], bytes] = {}
-    footer = {"n_rows": batch.num_rows, "columns": []}
+    footer = {"format": FORMAT, "n_rows": batch.num_rows, "columns": []}
     if row_index_stride:
         footer["row_index_stride"] = row_index_stride
     for i, name in enumerate(batch.schema.names):
@@ -869,11 +876,7 @@ def _decode_groups(streams: dict[str, bytes], meta: dict, groups) -> pa.Array:
         row_lens = rlev2.decode(raw["LENGTH"], n_vals, signed=False)
         data = raw["DATA"]
         if enc == "direct_fsst":
-            if "FSST_TABLE" in raw:
-                table, _ = fsst.SymbolTable.deserialize(raw["FSST_TABLE"])
-            else:  # legacy layout: table prefixed to DATA
-                table, pos = fsst.SymbolTable.deserialize(data)
-                data = data[pos:]
+            table, _ = fsst.SymbolTable.deserialize(raw["FSST_TABLE"])
             data = fsst.decompress(data, table)
         return _build_binary(np.frombuffer(data, np.uint8), row_lens, valid, n_rows, t)
     if enc in ("list", "map"):
@@ -1139,6 +1142,19 @@ def pick_row_groups(
     return selected
 
 
+def check_format(footer: dict, source: str | None = None) -> None:
+    """Raise :class:`SparcFormatError` unless ``footer`` is of this
+    engine's :data:`FORMAT`; ``source`` (a manifest path) prefixes the
+    message."""
+    got = footer.get("format")
+    if got != FORMAT:
+        raise SparcFormatError(
+            f"{source + ': ' if source else ''}stripe {footer.get('stripe_id')}: "
+            f"footer field 'format' is {got!r}, this engine reads only format "
+            f"{FORMAT}; re-encode the stripe"
+        )
+
+
 def decode_stripe(
     streams: dict[tuple[str, str], bytes],
     footer: dict,
@@ -1146,6 +1162,7 @@ def decode_stripe(
 ) -> pa.Table:
     from .. import runtime
 
+    check_format(footer)
     runtime.init()
     cols = []
     names = []

@@ -56,7 +56,9 @@ _PARTS_LOCK = threading.Lock()
 
 def _footers(path: str) -> list[tuple[bytes, dict]]:
     """The FOOTER rows of one manifest part, read and parsed on the first
-    call for this version of the file and cached after."""
+    call for this version of the file and cached after.  A footer of
+    another format generation raises ``SparcFormatError``
+    (:func:`stripe.check_format`), so no read plans over it."""
     import pyarrow.parquet as pq
 
     with open(path, "rb") as f:
@@ -73,6 +75,8 @@ def _footers(path: str) -> list[tuple[bytes, dict]]:
         for kind, blob in zip(t["kind"].to_pylist(), t["data"].to_pylist())
         if kind == "FOOTER"
     ]
+    for _, footer in rows:
+        stripe_mod.check_format(footer, path)
     with _PARTS_LOCK:
         _PARTS[key] = rows
         if len(_PARTS) > _PARTS_MAX:
@@ -81,16 +85,8 @@ def _footers(path: str) -> list[tuple[bytes, dict]]:
 
 
 def _stripe_path(footer: dict, streams_dir: str) -> str:
-    """Path of a footer's stripe file.  Footers without one come from the
-    removed inline-blob manifest layout (stream bytes in manifest rows),
-    which no reader handles any more."""
-    rel = footer.get("stripe_file")
-    if rel is None:
-        raise ValueError(
-            f"{streams_dir}: stripe {footer.get('stripe_id')} has no stripe_file "
-            "(inline-blob manifest layout, no longer readable); re-encode it"
-        )
-    return os.path.join(streams_dir, rel)  # an absolute rel wins (compact)
+    """Path of a footer's stripe file."""
+    return os.path.join(streams_dir, footer["stripe_file"])  # an absolute one wins (compact)
 
 
 class ReadPlan(NamedTuple):
@@ -596,9 +592,7 @@ def _sample_footer(streams_dir: str) -> dict:
     for p in _manifest_paths(streams_dir):
         rows = _footers(p)
         if rows:
-            footer = rows[0][1]
-            _stripe_path(footer, streams_dir)  # refuse inline-blob manifests
-            return footer
+            return rows[0][1]
     raise ValueError(f"no FOOTER rows in {streams_dir}")
 
 

@@ -1,123 +1,153 @@
-"""Block compression layer: chunked general-purpose codec over encoded streams.
+"""Block compression: ORC's chunk framing, the one framing of every
+compressed stream the engine writes or reads.
 
-Mirrors the reference's OutStream/InStream chunking contract
-(``org/apache/orc/impl/OutStream.java:376-413`` — chunked compress,
-store-uncompressed-if-bigger per chunk; inverse
-``InStream$CompressedStream.readHeader`` ``InStream.java:493-523``), with
-two documented deviations:
+Engine stripe streams, and the ORC files ``orcfile`` writes and
+``orcread`` reads, are framed as the reference frames them
+(``org/apache/orc/impl/OutStream.java:186-189, 376-413``; inverse
+``InStream$CompressedStream.readHeader`` ``InStream.java:493-523``): the
+stream is cut into chunks of at most ``chunk`` raw bytes, and each chunk
+is a 3-byte little-endian header ``compressedLength << 1 | isOriginal``
+followed by its body, the codec's output or, when that is no smaller, the
+raw chunk.  The header records no raw length; each codec gives its own
+(zstd's frame header records the content size, snappy's output leads
+with it as a varint, raw deflate inflates without one).
 
-- Header: the reference's 3-byte header encodes only
-  ``compressedLength<<1 | isOriginal`` because its decompressors accept
-  unknown output sizes; pyarrow's codec API requires the exact
-  decompressed size, so our 8-byte header adds the raw length (two
-  little-endian uint32: ``clen<<1|orig``, ``rawlen``).
-- Chunk size: the reference chunks at 256 KiB (``orc.compress.size``)
-  because the chunk IS its intra-stripe seek granularity.  Our seek
-  granularity is the row-group segment (stripe.py), which restarts
-  compression anyway, so chunks only bound the codec window — 4 MiB
-  chunks let zstd see ~16x more context at the same level and CPU cost,
-  measured -12% total size on web text/html vs 256 KiB with identical
-  encode wall time.  The header is self-describing, so any chunk size
-  decodes.
+Chunk size: ORC files use the reference's 256 KiB (``orc.compress.size``).
+Engine stripes use 4 MiB, which ORC allows as the PostScript's
+``compressionBlockSize``: the engine seeks by row-group segment, which
+restarts compression anyway, so chunks only bound the codec window.  A
+4 MiB window lets zstd see ~16x more context at the same level and CPU
+cost, measured -12% total size on web text/html vs 256 KiB with
+identical encode wall time.
 
-Codecs are pyarrow's C++ implementations (zstd default, matching the
-reference's ``orc.compress=ZSTD`` 2.2.2 default).
+Codecs are ORC's kinds (``CODECS``: name -> ``CompressionKind``) over
+pyarrow's C++ codecs and zlib's raw deflate (ORC ZLIB has no zlib
+wrapper); zstd is the default, as ``orc.compress=ZSTD`` is in the
+reference 2.2.2.
 """
 
 from __future__ import annotations
 
-import struct
+import functools
+import zlib
 
-import numpy as np
 import pyarrow as pa
 
-CHUNK_SIZE = 1 << 22  # 4 MiB codec window (see docstring)
-_HEADER = struct.Struct("<II")
+CHUNK_SIZE = 1 << 22  # engine stripes' codec window (see docstring)
+ORC_CHUNK_SIZE = 256 * 1024  # orc.compress.size default
 
-# name -> (pyarrow codec name, default level)
-CODECS = {
-    "zstd": ("zstd", 3),
-    "zlib": ("gzip", 6),
-    "lz4": ("lz4_raw", None),
-    "snappy": ("snappy", None),
-    "brotli": ("brotli", None),
-}
-
-_codec_cache: dict[tuple[str, int | None], pa.Codec] = {}
+# codec name -> ORC CompressionKind
+CODECS = {"none": 0, "zlib": 1, "snappy": 2, "zstd": 5}
+_LEVEL = {"zstd": 3, "zlib": 6}  # level when the caller gives none
+_ZSTD_MAGIC = 0xFD2FB528
 
 
-def _codec(name: str, level: int | None) -> pa.Codec:
-    key = (name, level)
-    if key not in _codec_cache:
-        pa_name, default_level = CODECS[name]
-        lvl = level if level is not None else default_level
-        _codec_cache[key] = (
-            pa.Codec(pa_name, compression_level=lvl) if lvl is not None else pa.Codec(pa_name)
-        )
-    return _codec_cache[key]
+class SparcFormatError(ValueError):
+    """Stored bytes that do not follow the format: a damaged chunk, or a
+    stripe footer of another format generation."""
 
 
-def compress(data: bytes, codec: str = "zstd", level: int | None = None) -> bytes:
-    """Chunked compress with store-if-bigger per chunk; 'none' passes through."""
-    if codec == "none":
-        return data
-    c = _codec(codec, level)
-    out = bytearray()
-    for pos in range(0, len(data), CHUNK_SIZE):
-        chunk = data[pos : pos + CHUNK_SIZE]
-        comp = bytes(c.compress(chunk))
-        if len(comp) < len(chunk):
-            out += _HEADER.pack((len(comp) << 1) | 0, len(chunk))
-            out += comp
-        else:  # store original (isOriginal flag), like the reference
-            out += _HEADER.pack((len(chunk) << 1) | 1, len(chunk))
-            out += chunk
-    return bytes(out)
+@functools.lru_cache(maxsize=None)
+def _pa_codec(name: str, level: int | None = None) -> pa.Codec:
+    return pa.Codec(name, compression_level=level)
 
 
-def decompress(data, codec: str = "zstd", level: int | None = None):
-    """Decompress a chunked stream.  Returns a zero-copy view whenever
-    possible — a pyarrow Buffer (single compressed chunk), a memoryview
-    of the input (single stored chunk), or a numpy uint8 array assembled
-    with exactly one copy per chunk (multi-chunk).  All returns support
-    the buffer protocol; consumers use np.frombuffer / bytes() as needed.
-    The old implementation copied every payload 3x (Buffer->bytes,
-    += into bytearray, bytes(bytearray)) — at decode this was the single
-    largest CPU item after the codec itself."""
-    if codec == "none":
-        return data
-    n = len(data)
-    if n == 0:
-        return b""
-    c = _codec(codec, level)
-    # fast path: exactly one chunk (every stream < CHUNK_SIZE raw)
-    word, rawlen = _HEADER.unpack_from(data, 0)
-    clen = word >> 1
-    if _HEADER.size + clen == n:
-        body = data[_HEADER.size : _HEADER.size + clen]
-        if word & 1:  # stored original: a view of the input
-            return body if isinstance(body, memoryview) else memoryview(body)
-        return c.decompress(body, rawlen)  # pa.Buffer, zero extra copies
-    # multi-chunk: pre-scan headers for the total, one copy per chunk
-    total = 0
-    pos = 0
-    while pos < n:
-        word, rawlen = _HEADER.unpack_from(data, pos)
-        total += rawlen
-        pos += _HEADER.size + (word >> 1)
-    out = np.empty(total, np.uint8)
-    pos = 0
-    o = 0
-    while pos < n:
-        word, rawlen = _HEADER.unpack_from(data, pos)
-        pos += _HEADER.size
-        clen = word >> 1
-        if word & 1:
-            out[o : o + rawlen] = np.frombuffer(data[pos : pos + clen], np.uint8)
+def frame(
+    data, codec: str, level: int | None = None, chunk: int = CHUNK_SIZE
+) -> tuple[bytes, list[int]]:
+    """``data`` in the chunk framing of ``codec``, with each chunk's start
+    in the framed bytes (``[0]`` when there is no chunk) — the block
+    starts an ORC row-index position names.  ``none`` and empty data
+    pass through unframed, as ORC stores them."""
+    if codec not in CODECS:
+        raise ValueError(f"unknown codec {codec!r}; one of {sorted(CODECS)}")
+    if codec == "none" or not len(data):
+        return data, [0]
+    lvl = _LEVEL.get(codec) if level is None else level
+    view = memoryview(data)
+    parts, starts, at = [], [], 0
+    for pos in range(0, len(view), chunk):
+        raw = view[pos : pos + chunk]
+        if codec == "zlib":
+            c = zlib.compressobj(lvl, zlib.DEFLATED, -15)
+            comp = c.compress(raw) + c.flush()
         else:
-            out[o : o + rawlen] = np.frombuffer(
-                c.decompress(data[pos : pos + clen], rawlen), np.uint8
-            )
-        pos += clen
-        o += rawlen
-    return out
+            comp = _pa_codec(codec, lvl).compress(raw)
+        body, original = (comp, 0) if len(comp) < len(raw) else (raw, 1)
+        parts += ((len(body) << 1 | original).to_bytes(3, "little"), body)
+        starts.append(at)
+        at += 3 + len(body)
+    return b"".join(parts), starts
+
+
+def compress(data, codec: str = "zstd", level: int | None = None, chunk: int = CHUNK_SIZE):
+    """``data`` in the chunk framing of ``codec`` (see :func:`frame`)."""
+    return frame(data, codec, level, chunk)[0]
+
+
+def _zstd_content_size(body: memoryview) -> int:
+    """The content size a zstd frame header records (pyarrow's and the
+    reference's one-shot compress always write it)."""
+    if len(body) < 5 or int.from_bytes(body[:4], "little") != _ZSTD_MAGIC:
+        raise SparcFormatError("zstd chunk does not start with a zstd frame magic")
+    fhd = body[4]
+    single_segment = (fhd >> 5) & 1
+    pos = 5 + (0 if single_segment else 1) + (0, 1, 2, 4)[fhd & 3]
+    width = (single_segment, 2, 4, 8)[fhd >> 6]
+    if not width or len(body) < pos + width:
+        raise SparcFormatError("zstd frame header records no content size")
+    size = int.from_bytes(body[pos : pos + width], "little")
+    return size + 256 if width == 2 else size
+
+
+def _snappy_size(body: memoryview) -> int:
+    """The raw length snappy's output leads with, as a varint."""
+    size = 0
+    for i, b in enumerate(body[:5]):
+        size |= (b & 0x7F) << (7 * i)
+        if b < 0x80:
+            return size
+    raise SparcFormatError("snappy chunk does not start with a length varint")
+
+
+def inflate_chunk(data: memoryview, pos: int, codec: str) -> tuple:
+    """The raw bytes of the chunk whose header is at ``pos`` of ``data``
+    (a view of the input when the chunk is stored original), and the next
+    chunk's start."""
+    head = int.from_bytes(data[pos : pos + 3], "little")
+    end = pos + 3 + (head >> 1)
+    if end > len(data):
+        raise SparcFormatError(f"chunk at {pos} runs past the {len(data)}-byte stream")
+    body = data[pos + 3 : end]
+    if head & 1:
+        return body, end
+    try:
+        if codec == "zlib":
+            return zlib.decompress(body, -15), end
+        if codec == "zstd":
+            return _pa_codec("zstd").decompress(body, _zstd_content_size(body)), end
+        if codec == "snappy":
+            return _pa_codec("snappy").decompress(body, _snappy_size(body)), end
+    except (zlib.error, pa.ArrowException) as e:
+        raise SparcFormatError(f"damaged {codec} chunk at {pos}: {e}") from e
+    raise ValueError(f"unknown codec {codec!r}; one of {sorted(CODECS)}")
+
+
+def decompress(data, codec: str = "zstd"):
+    """The raw bytes of a framed stream.  One chunk comes back without a
+    copy: the codec's pyarrow Buffer, or a memoryview of the input for a
+    stored chunk; several are joined into one ``bytes`` with one copy
+    each.  Every return supports the buffer protocol."""
+    if codec == "none":
+        return data
+    if not len(data):
+        return b""
+    view = memoryview(data)
+    out, pos = inflate_chunk(view, 0, codec)
+    if pos == len(view):
+        return out
+    parts = [out]
+    while pos < len(view):
+        part, pos = inflate_chunk(view, pos, codec)
+        parts.append(part)
+    return b"".join(parts)

@@ -84,6 +84,7 @@ def _orc_tail(path: str) -> dict:
     a plain dict — the FileDump `meta` payload.  Tail-only: no stripe
     bytes are read."""
     from .engine import orcread as R
+    from .kernels import block
 
     size = os.path.getsize(path)
     # Two-phase tail read (mirrors ReaderImpl.extractFileTail): read a small
@@ -105,7 +106,7 @@ def _orc_tail(path: str) -> dict:
             data = f.read()
     kind = R._KINDS[ps.get(2, [0])[0]]
     footer = R._parse_pb(
-        R._inflate(data[-1 - ps_len - footer_len : -1 - ps_len], kind)
+        block.decompress(data[-1 - ps_len - footer_len : -1 - ps_len], kind)
     )
     types = [R._parse_pb(t) for t in footer[4]]
     stripes = []
@@ -132,7 +133,7 @@ def _orc_tail(path: str) -> dict:
         "writer_version": _WRITER_VERSIONS.get(
             ps.get(6, [0])[0], str(ps.get(6, [0])[0])
         ),
-        "compression": kind,
+        "compression": kind.upper(),
         "compression_block": ps.get(3, [0])[0],
         "rows": footer.get(6, [0])[0] if 6 in footer else sum(
             s["rows"] for s in stripes

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from sparc.fixtures import pages
 from sparc.job import decode_job, encode_job, partition
+from sparc.kernels.block import SparcFormatError
 
 N_ROWS = 6000
 
@@ -956,8 +957,10 @@ def test_schema_follows_a_rewritten_dir(spark, tmp_path):
 
 def test_inline_blob_manifest_refused(spark, tmp_path):
     """A manifest whose footers name no stripe file (stream bytes inline in
-    manifest rows, a layout no reader handles) is refused with a
-    ValueError naming the dir and the stripe, not a worker KeyError."""
+    manifest rows, a layout no reader handles) predates the footer's
+    ``format`` field, so the format gate refuses it with a
+    ``SparcFormatError`` naming the dir and the stripe, not a worker
+    KeyError."""
     import json
 
     import pyarrow as pa
@@ -975,7 +978,7 @@ def test_inline_blob_manifest_refused(spark, tmp_path):
         }),
         os.path.join(out, "part-00000.parquet"),
     )
-    with pytest.raises(ValueError, match=f"{out}.*stripe 7 has no stripe_file"):
+    with pytest.raises(SparcFormatError, match=f"{out}.*stripe 7: footer field 'format'"):
         decode_job.run_decode(spark, out)
     with pytest.raises(ValueError, match="stripe 7"):
         decode_job.infer_schema_ddl(spark, out)

@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from hypothesis import given, seed, settings, strategies as st
 
 from sparc.kernels import block, dictionary, fsst
+from sparc.kernels.block import SparcFormatError
 
 RNG = np.random.default_rng(7)
 
@@ -19,7 +21,7 @@ RNG = np.random.default_rng(7)
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("codec", ["zstd", "zlib", "lz4", "snappy", "none"])
+@pytest.mark.parametrize("codec", ["zstd", "zlib", "snappy", "none"])
 def test_block_roundtrip(codec):
     data = b"the quick brown fox " * 5000  # ~100 KiB, compressible
     enc = block.compress(data, codec)
@@ -38,10 +40,86 @@ def test_block_store_if_bigger():
     data = RNG.integers(0, 256, 100_000, dtype=np.uint8).tobytes()  # incompressible
     enc = block.compress(data, "zstd")
     assert block.decompress(enc, "zstd") == data
-    assert len(enc) <= len(data) + 8  # stored + one header
+    assert len(enc) <= len(data) + 3  # stored + one header
 
 def test_block_empty():
     assert block.decompress(block.compress(b"", "zstd"), "zstd") == b""
+
+
+def test_block_codecs_are_orc_kinds():
+    assert block.CODECS == {"none": 0, "zlib": 1, "snappy": 2, "zstd": 5}
+    with pytest.raises(ValueError, match="unknown codec 'lz4'"):
+        block.compress(b"abc", "lz4")
+
+
+def _piece(kind: str, n: int, rng: np.random.Generator) -> bytes:
+    if kind == "random":  # incompressible: its chunks are stored original
+        return rng.integers(0, 256, n, dtype=np.uint8).tobytes()
+    if kind == "text":
+        return (b"the quick brown fox %d " * (n // 20 + 1))[:n]
+    return bytes(n)
+
+
+@st.composite
+def _framing_cases(draw):
+    """(payload, codec, chunk size): sizes at the chunk boundaries in one
+    kind of bytes, or several chunks mixing compressible and random ones
+    (random pieces at most one ORC chunk long, to bound codec time)."""
+    codec = draw(st.sampled_from(sorted(block.CODECS)))
+    chunk = draw(st.sampled_from((block.CHUNK_SIZE, block.ORC_CHUNK_SIZE)))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32)))
+    size = draw(st.sampled_from((0, 1, chunk - 1, chunk, chunk + 1, None)))
+    if size is not None:
+        kind = draw(st.sampled_from(("random", "text", "zeros")))
+        return _piece(kind, size, rng), codec, chunk
+    pieces = draw(st.lists(
+        st.tuples(st.sampled_from(("random", "text", "zeros")), st.floats(0.0, 1.0)),
+        min_size=2, max_size=5,
+    ))
+    data = b"".join(
+        _piece(k, int(f * block.ORC_CHUNK_SIZE) + 1, rng) if k == "random"
+        else _piece(k, int(f * chunk) + 1, rng)
+        for k, f in pieces
+    )
+    return data + bytes(max(0, chunk + 1 - len(data))), codec, chunk  # > 1 chunk
+
+
+@seed(20261020)
+@settings(max_examples=200, deadline=None)
+@given(_framing_cases())
+def test_block_framing_roundtrip(case):
+    """Whole and chunk by chunk: every chunk but the last inflates to the
+    chunk size, the chunk starts are the ones ``frame`` reports, and
+    ``none`` passes bytes through unframed."""
+    data, codec, chunk = case
+    framed, starts = block.frame(data, codec, chunk=chunk)
+    assert bytes(block.decompress(framed, codec)) == data
+    if codec == "none" or not data:
+        assert framed == data and starts == [0]
+        return
+    view, pos, seen, parts = memoryview(framed), 0, [], []
+    while pos < len(view):
+        seen.append(pos)
+        part, pos = block.inflate_chunk(view, pos, codec)
+        parts.append(bytes(part))
+    assert seen == starts
+    assert [len(p) for p in parts[:-1]] == [chunk] * (len(parts) - 1)
+    assert 0 < len(parts[-1]) <= chunk
+    assert b"".join(parts) == data
+
+
+def test_block_damaged_input_raises_format_error():
+    framed = block.compress(b"abc" * 1000, "zstd")
+    bad_magic = bytearray(framed)
+    bad_magic[3] ^= 0xFF  # first byte of the zstd frame magic
+    with pytest.raises(SparcFormatError, match="zstd frame magic"):
+        block.decompress(bytes(bad_magic), "zstd")
+    for codec in ("zstd", "zlib", "snappy"):
+        framed = block.compress(b"abc" * 1000, codec)
+        with pytest.raises(SparcFormatError, match="past the"):
+            block.decompress(framed[:-1], codec)  # header length runs past the end
+        with pytest.raises(SparcFormatError, match="past the"):
+            block.decompress(framed[:2], codec)  # a header cut short
 
 
 # ---------------------------------------------------------------------------
@@ -221,7 +299,7 @@ def test_block_true_multi_chunk_mixed():
         + b"\x00" * (sz // 2)                                   # compressed
         + bytes(RNG.integers(0, 256, 500, dtype=np.uint8))      # tail chunk
     )
-    for codec in ("zstd", "zlib", "lz4", "snappy"):
+    for codec in ("zstd", "zlib", "snappy"):
         enc = block.compress(data, codec)
         out = block.decompress(enc, codec)
         assert bytes(out) == data, codec

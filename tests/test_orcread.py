@@ -12,6 +12,7 @@ import pyarrow.orc
 import pytest
 
 from sparc.engine import orcread
+from sparc.kernels import block
 
 
 def _assert_same_as_pyarrow(path: str):
@@ -177,14 +178,14 @@ def test_read_java_written_v011_rlev1(spark, tmp_path):
     ps = orcread._parse_pb(data[-1 - data[-1] : -1])
     kind = orcread._KINDS[ps.get(2, [0])[0]]
     footer = orcread._parse_pb(
-        orcread._inflate(
+        block.decompress(
             data[-1 - data[-1] - ps[1][0] : -1 - data[-1]], kind
         )
     )
     sp = orcread._parse_pb(footer[3][0])
     base, ilen, dlen = sp[1][0], sp.get(2, [0])[0], sp[3][0]
     sf = orcread._parse_pb(
-        orcread._inflate(data[base + ilen + dlen : base + ilen + dlen + sp[4][0]], kind)
+        block.decompress(data[base + ilen + dlen : base + ilen + dlen + sp[4][0]], kind)
     )
     enc_kinds = {orcread._parse_pb(x).get(1, [0])[0] for x in sf.get(2, [])}
     assert enc_kinds <= {0, 1}, f"expected v1 encodings only, got {enc_kinds}"
@@ -243,12 +244,12 @@ def test_non_utc_writer_timezone_instants(spark, tmp_path):
     ps = orcread._parse_pb(data[-1 - data[-1] : -1])
     kind = orcread._KINDS[ps.get(2, [0])[0]]
     footer = orcread._parse_pb(
-        orcread._inflate(data[-1 - data[-1] - ps[1][0] : -1 - data[-1]], kind)
+        block.decompress(data[-1 - data[-1] - ps[1][0] : -1 - data[-1]], kind)
     )
     sp = orcread._parse_pb(footer[3][0])
     base, ilen, dlen = sp[1][0], sp.get(2, [0])[0], sp[3][0]
     sf = orcread._parse_pb(
-        orcread._inflate(data[base + ilen + dlen : base + ilen + dlen + sp[4][0]], kind)
+        block.decompress(data[base + ilen + dlen : base + ilen + dlen + sp[4][0]], kind)
     )
     assert bytes(sf[3][0]).decode() == "America/Chicago"
     got = orcread.read_orc(path)["ts"].combine_chunks().cast(pa.timestamp("us"))

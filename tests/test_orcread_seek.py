@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 import bench
 from sparc.engine import bloom, orcread
+from sparc.kernels import block
 
 
 def _write_java_orc(spark, tmp_path, compression: str, n: int = 60_000) -> str:
@@ -274,8 +275,8 @@ def test_stripe_level_prune_from_metadata_never_touches_refuted_stripes(
     ps_len = data[-1]
     ps = orcread._parse_pb(data[-1 - ps_len:-1])
     footer = orcread._parse_pb(
-        orcread._inflate(
-            data[-1 - ps_len - ps[1][0]:-1 - ps_len], "ZLIB"
+        block.decompress(
+            data[-1 - ps_len - ps[1][0]:-1 - ps_len], "zlib"
         )
     )
     stripes = [orcread._parse_pb(s) for s in footer[3]]
@@ -475,13 +476,13 @@ def test_one_group_read_inflates_a_fraction(tmp_path, monkeypatch):
         _sf, streams = orcread._stripe_directory(data, st, kind)
         stream_bytes += sum(len(b) for _k, _c, b in streams)
     inflated = []
-    real = orcread._inflate_chunk
+    real = block.inflate_chunk
 
     def counting(mv, pos, kind):
         inflated.append(3 + (int.from_bytes(mv[pos : pos + 3], "little") >> 1))
         return real(mv, pos, kind)
 
-    monkeypatch.setattr(orcread, "_inflate_chunk", counting)
+    monkeypatch.setattr(block, "inflate_chunk", counting)
     got = orcread.read_orc_row_groups(path, [3])
     assert got.num_rows == 10_000
     assert sum(inflated) <= 0.25 * stream_bytes, (sum(inflated), stream_bytes)

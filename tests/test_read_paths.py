@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from sparc.engine import stripe
 from sparc.job import decode_job, encode_job, manifest
 from sparc.job import partition as part_mod
+from sparc.kernels.block import SparcFormatError
 
 N = 3_072
 T0 = dt.datetime(2024, 3, 1, 12, 0, 0)
@@ -274,6 +275,26 @@ def test_bit_flip_raises_on_both_paths(spark, streams_dir, tmp_path, monkeypatch
             decode_job.run_decode(spark, d, columns=["id"], verify_crc=True).collect()
     # a read that does not decode the flipped stream does not check it
     assert _both(spark, d, monkeypatch, columns=["url"], verify_crc=True)
+
+
+def test_older_format_generation_is_refused_on_both_paths(
+    spark, streams_dir, tmp_path, monkeypatch
+):
+    """Footers written before the ``format`` field (streams in the 8-byte
+    chunk framing) are refused by name before either path decodes."""
+    d = str(tmp_path / "old_format")
+    shutil.copytree(streams_dir, d)
+    for p in manifest.paths(d):
+        t = pq.read_table(p)
+        blobs = [
+            json.dumps({k: v for k, v in json.loads(b).items() if k != "format"}).encode()
+            for b in t["data"].to_pylist()
+        ]
+        pq.write_table(t.set_column(3, "data", pa.array(blobs, pa.large_binary())), p)
+    for budget in (1 << 60, 0):
+        monkeypatch.setattr(decode_job, "DRIVER_DECODE_BYTES", budget)
+        with pytest.raises(SparcFormatError, match=r"stripe \d+: footer field 'format' is None"):
+            decode_job.run_decode(spark, d).collect()
 
 
 def test_refuted_stripe_file_is_never_opened(spark, streams_dir, tmp_path, monkeypatch):

@@ -189,6 +189,19 @@ def test_non_null_copies_when_a_null_slot_holds_bytes():
     assert stripe.non_null(arr).to_pylist() == ["a", "d"]
 
 
+@pytest.mark.parametrize("fmt", [None, 1, "2"])
+def test_decode_refuses_other_format_generations(fmt):
+    streams, footer = stripe.encode_stripe(pa.table({"x": pa.array([1, 2, 3])}))
+    assert footer["format"] == stripe.FORMAT == 2
+    footer = dict(footer, stripe_id=4)
+    if fmt is None:
+        del footer["format"]
+    else:
+        footer["format"] = fmt
+    with pytest.raises(stripe.SparcFormatError, match=f"stripe 4: footer field 'format' is {fmt!r}"):
+        stripe.decode_stripe(streams, footer)
+
+
 def test_binary_never_dictionary():
     # BinaryTreeWriter is always DIRECT in the reference — even a
     # low-cardinality binary column must not build a dictionary (and the

@@ -25,8 +25,19 @@ One deliberate format change re-recorded the four ``pages`` digests: the
 url ``BLOOM_FILTER_UTF8`` stream became ORC's ``BloomFilterIndex`` (it
 was a pandas-hash filter in ``SBM1`` framing).  Compared stream by
 stream, that stream and its two footer size entries were the only bytes
-that moved; the other 20 digests held.  Nothing else may re-record
-them.  To print them (e.g. to compare two builds)::
+that moved; the other 20 digests held.
+
+A second re-recorded all 28: streams moved from the engine's 8-byte chunk
+header (compressed length and flag, raw length) to ORC's 3-byte one, and
+footers gained ``"format": 2``.  Compared with the previous encoder case
+by case, every stream's chunk bodies and stored-original flags were
+byte-identical with the headers stripped (481 chunks in 352 streams, 216
+stored original), each compressed stream shrank by exactly 5 bytes per
+chunk, ``none``-codec and bloom streams were identical, and the footers
+differed only in ``format`` and the compressed sizes (``compressed``,
+``segments``, and the ``encoded`` size of a CHILD stream, which records
+its pre-compressed length).  Nothing else may re-record them.  To print
+them (e.g. to compare two builds)::
 
     PYTHONPATH=. python tests/test_stripe_golden.py
 """
@@ -251,34 +262,34 @@ def _case(case: str):
 
 
 GOLDEN = {
-    "numeric/1000/zstd": "0ddc5a11e5e39492017877020e37bce4ffe3a9bcb29f7f6be33d245d5008fcc7",
-    "numeric/1000/none": "4502c85ffa57b65d51a430176860e88bd3a584d3bdda1495fe89291621d3bbf6",
-    "numeric/None/zstd": "ef0c1112fe6066a8612b7239971740631c3c62eb8372ef5fe694d46eaaad2414",
-    "numeric/None/none": "4d7994084d2821f81921451650b854ab9cb5b53ed380a824b047f5b32255c71d",
-    "bool/1000/zstd": "671e3618bfc0508fbd63ee04f7702eb75294e11362fcb7324b97d47270d7ff55",
-    "bool/1000/none": "72d6eeb6b21132928f0b762fab7a2307e1e044fe62f641a33bade19a96d71241",
-    "bool/None/zstd": "31be9f206efef3b6451316855388805e6c5ea6bfe54aee70a3a705b5354ee693",
-    "bool/None/none": "bb423a1da116d2c5c14ed66eadc5d8117475526c39693c77df7033195904eb66",
-    "strings/1000/zstd": "8bee33aa0496626be5583861fc34ba46a5f4d0af164ad06d31db55f0e1e3479f",
-    "strings/1000/none": "77ef93d03c05ee004191d459f941883ab8d91e8f80bda935c0a168a43c3b8412",
-    "strings/None/zstd": "7668e3566830ef942061543c28e1fc5c1d1de256d19001aa81cd45369985cdc8",
-    "strings/None/none": "670c2c0de8c57d397ecb8e62ff05ab7d19259f0151cf2cb742c40888f210f996",
-    "fsst/1000/zstd": "ddfce9d762d8bc281f84691dd3a31e727aeb065f7d0f2f1fc79727a0587735dc",
-    "fsst/1000/none": "96ec4915ca4314540270f24e6ab72e8c80042c908eb53c216e37bbf498aa5f3f",
-    "fsst/None/zstd": "804f0ebc66e0fed057e843bead9bc31a78eaa60ae7bf734c1d1ecc4cd5e711bc",
-    "fsst/None/none": "1c2f7cc55e8ac996de75c915a3391ae55e632aa3b6e0cfd39d6545257ec3636d",
-    "nested/1000/zstd": "e378ec5e01e87a248f91303e266ce5a4cb7b52ffa6b00fbb2e26661488cc21a9",
-    "nested/1000/none": "bc55ccf34e39d01572d82075536a70da2a04e7dd5dbf94bc1b9bd84a389ef1f3",
-    "nested/None/zstd": "ec907fdd46aea15289246eda836d74540a34c8485914e7f60ea4278906035c5c",
-    "nested/None/none": "f1fb1bdcb49dbd2ef0321246d70ff924affb3de9e144e4efafba9beb5a871c38",
-    "pages/1000/zstd": "755d8b3e6fe2e76f37ad269826e249275735b169f7f1e24b32d16a12c6ed58e4",
-    "pages/1000/none": "93771aba532f198f7ca13ccbf880513ff7db1c1cd7794601869b29408c2de628",
-    "pages/None/zstd": "ab92f3d786d8cd546297b904f501f95e9204f197447bf9f2ee5211073d8741e0",
-    "pages/None/none": "1de95a160c7af67095500aff9ad06650463bb6827c58228323e7d70779f1938e",
-    "stats_edges/1000/zstd": "06e2ec822e805376a2bf37a53f7a5f21d376fdc9b7b5a21dd5c0f186e402743d",
-    "stats_edges/1000/none": "d4a751d4214645032c0f8abe3f60bb04af5357b277cf602849c1cd46ea41e72a",
-    "stats_edges/None/zstd": "6f1e669ea0c7a4784c28e2a4a8b1c3cacfe51ce2831121c44039feffcaf991dd",
-    "stats_edges/None/none": "751cbd9178b9a5fb3f1def09fed39be4bd4d29a4f5373f4c6858c7b07cb1b5dd",
+    "numeric/1000/zstd": "3fda013dc1d4358042c93618ccfee37202ee104053a455dcf4fd3f0eba01fea8",
+    "numeric/1000/none": "050bd5665925583ec74d704086f4aa44c0e67b3d768a21cc9c86a59cfb92cbd9",
+    "numeric/None/zstd": "ca28549c4dc4ba42d715e7f02fd46bbc7922a6b29f1a1d81718f0097490696b1",
+    "numeric/None/none": "7065e4547caceec40ff9f634b10f4d50e19c08072e928bf7f847f9ac536d8bcb",
+    "bool/1000/zstd": "9a9b55bfcb195f5740f2eb4b53a896996954b6201cdc6e4b9a725b91c86caf3c",
+    "bool/1000/none": "823d98d7ccb71e39fb81b1c2b56e85a4edb29d60b646421d77a24569d0406dd3",
+    "bool/None/zstd": "5c23a83901d0ad2f5046ab77cbb34147475b62bb336cebf8be84ca69de6e9f49",
+    "bool/None/none": "bcbf027563cd7ba42932dcc32eb7d178bad68a9b49a58b0afa38af095d9f8504",
+    "strings/1000/zstd": "200f75b0183c5f40fac2efd36207294e2bde6b6587f68c5ce92e94f433bcf049",
+    "strings/1000/none": "beba54622ea7499121bd530cd5f8ddb43bf9c1caf39ca7367b0b4218ad8f1b92",
+    "strings/None/zstd": "f984fe22826a046e7f1993d95c12d0ad49d374641199f5d5901a173c5dbb08d1",
+    "strings/None/none": "d29fa6448aa49fd0f4b0b2d9e36b6ba47e3fbdc82cd1a48442d2910662d0aec0",
+    "fsst/1000/zstd": "2477ba7252aa9aa1022e64c938b82c679d02381be805dd434e42a94b773b91dc",
+    "fsst/1000/none": "67d02b29d84a4a2fbac4ec0d3444e20d4ef025a4912382e6ee52a14cd4a2ff69",
+    "fsst/None/zstd": "fa34e1ead6d5ac39931715e93dd2f511558a9f88df334d4181601bbb5533e471",
+    "fsst/None/none": "65381953b3fa69c7833bb721976e7fd89a80c68e0045f33b4fef196e74ec9b6b",
+    "nested/1000/zstd": "a40281211dbb2e969bba820f2b8bed2c5c951e11f833c6e4c1abf9f42f777c8e",
+    "nested/1000/none": "036bf09211decec4da30bdbb548d881b98a1c43a76a882b5da576091cd5f0bfe",
+    "nested/None/zstd": "be160e02caf82579f92d0c23a4107885cdec391cf3ef6608ad5da1fea4e05911",
+    "nested/None/none": "506a32dcda5559645db670439310275db767739a90929a8e0f0defe4d8bb37bc",
+    "pages/1000/zstd": "90a0352843463bb62e35f1734c59aa4d32c146a1543df881ecacbbfeb3e4443b",
+    "pages/1000/none": "f3c21b2df85237915fa03459751545a31976d4db261917381357851ec3126e9a",
+    "pages/None/zstd": "afee46d9f7c9ccffcc0df228cedf29fca9fa68b5f8262fb96c6f94b75f64adae",
+    "pages/None/none": "53f8faf2401bb7500ab20cc2c5378b69af2dbbf6306082fd647cb37c83a93eb7",
+    "stats_edges/1000/zstd": "754e1d185c6046a7f99f81259970efc3230493d68de518eb5145751baaf7c6a3",
+    "stats_edges/1000/none": "a85db98632c9e1ba1d1bdeb31daeb07375155a67acdc52f9d503a34d39873d3c",
+    "stats_edges/None/zstd": "e05974a0d50f41ce1bd4b7764ba2b27f6e2af0ec154bd653cd61480010ec37f2",
+    "stats_edges/None/none": "239f541642d9a06c9d53da551b8207a0ce99ce23fc3c0967ee6e680ecab3918c",
 }
 
 
