@@ -33,6 +33,8 @@ import zlib
 
 import pyarrow as pa
 
+from .util import read_vulong
+
 CHUNK_SIZE = 1 << 22  # engine stripes' codec window (see docstring)
 ORC_CHUNK_SIZE = 256 * 1024  # orc.compress.size default
 
@@ -100,16 +102,6 @@ def _zstd_content_size(body: memoryview) -> int:
     return size + 256 if width == 2 else size
 
 
-def _snappy_size(body: memoryview) -> int:
-    """The raw length snappy's output leads with, as a varint."""
-    size = 0
-    for i, b in enumerate(body[:5]):
-        size |= (b & 0x7F) << (7 * i)
-        if b < 0x80:
-            return size
-    raise SparcFormatError("snappy chunk does not start with a length varint")
-
-
 def inflate_chunk(data: memoryview, pos: int, codec: str) -> tuple:
     """The raw bytes of the chunk whose header is at ``pos`` of ``data``
     (a view of the input when the chunk is stored original), and the next
@@ -126,9 +118,9 @@ def inflate_chunk(data: memoryview, pos: int, codec: str) -> tuple:
             return zlib.decompress(body, -15), end
         if codec == "zstd":
             return _pa_codec("zstd").decompress(body, _zstd_content_size(body)), end
-        if codec == "snappy":
-            return _pa_codec("snappy").decompress(body, _snappy_size(body)), end
-    except (zlib.error, pa.ArrowException) as e:
+        if codec == "snappy":  # snappy's output leads with its raw length
+            return _pa_codec("snappy").decompress(body, read_vulong(body, 0)[0]), end
+    except (IndexError, zlib.error, pa.ArrowException) as e:
         raise SparcFormatError(f"damaged {codec} chunk at {pos}: {e}") from e
     raise ValueError(f"unknown codec {codec!r}; one of {sorted(CODECS)}")
 

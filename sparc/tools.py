@@ -84,7 +84,6 @@ def _orc_tail(path: str) -> dict:
     a plain dict — the FileDump `meta` payload.  Tail-only: no stripe
     bytes are read."""
     from .engine import orcread as R
-    from .kernels import block
 
     size = os.path.getsize(path)
     # Two-phase tail read (mirrors ReaderImpl.extractFileTail): read a small
@@ -104,10 +103,7 @@ def _orc_tail(path: str) -> dict:
         if tail_len > len(data):
             f.seek(max(0, size - tail_len))
             data = f.read()
-    kind = R._KINDS[ps.get(2, [0])[0]]
-    footer = R._parse_pb(
-        block.decompress(data[-1 - ps_len - footer_len : -1 - ps_len], kind)
-    )
+    ps, kind, footer = R._tail(data, path)
     types = [R._parse_pb(t) for t in footer[4]]
     stripes = []
     for s in footer.get(3, []):
